@@ -1,7 +1,9 @@
 package graft.core
 
-import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Query-scoped registry for persisted/checkpointed data that must not
   * outlive its query in a long-lived session (the bench/verify harness
@@ -10,11 +12,24 @@ import org.apache.spark.sql.Dataset
   * 49 queries × multiple passes).
   *
   * Producers ([[graft.ext.DedupOps]] sketch relations,
-  * [[GraftStage.cached]] fan-out stages, `dupClusters` fixpoint
-  * checkpoints) register here; the harness calls [[release]] AFTER each
-  * query's terminal action. Releasing before the terminal action is a
-  * caller bug for checkpointed frames (a localCheckpoint truncates
-  * lineage — its blocks are the only copy).
+  * [[GraftStage.cached]] fan-out stages, every checkpoint below)
+  * register here; the harness calls [[release]] AFTER each query's
+  * terminal action. Releasing before the terminal action is a caller
+  * bug for checkpointed frames (a localCheckpoint truncates lineage —
+  * its blocks are the only copy).
+  *
+  * Checkpoint contract — the one way an operator cuts lineage or
+  * carries iterative state:
+  *  - [[checkpoint]] runs an eager `localCheckpoint` and registers the
+  *    checkpoint to the calling thread the moment it exists, so a
+  *    query that fails later (mid-loop included) leaves nothing behind
+  *    after [[release]].
+  *  - [[drop]] frees one checkpoint or [[track]]ed frame now, without
+  *    blocking, and forgets it — for data the query no longer reads.
+  *  - [[iterate]] checkpoints every round and drops the round it
+  *    supersedes as soon as the successor exists. The seed belongs to
+  *    the caller and is never dropped by `iterate` (a caller may replay
+  *    over it afterwards); it stays registered like any checkpoint.
   */
 object QueryCaches {
   // Strong references on purpose: release() must unpersist
@@ -36,22 +51,72 @@ object QueryCaches {
   // entries whose owner thread has died (their query can no longer be
   // in flight — this keeps the sequential-harness leak guarantee even
   // when a test registered from a short-lived thread).
-  private val frames = scala.collection.mutable.ArrayBuffer.empty[(Thread, Dataset[_])]
-  private val rddIds = scala.collection.mutable.ArrayBuffer.empty[(Thread, SparkContext, Int)]
+  private final case class Entry(owner: Thread, ds: Dataset[_], ckpt: Option[RDD[_]]) {
+    // a checkpoint's blocks belong to its own RDD — the Dataset API
+    // offers no unpersist handle for them
+    def live: Boolean = ckpt.fold(ds.storageLevel)(_.getStorageLevel) != StorageLevel.NONE
+    def free(): Unit = ckpt match {
+      case Some(rdd) => rdd.unpersist(blocking = false)
+      case None => ds.unpersist(blocking = false)
+    }
+  }
+  private val entries = scala.collection.mutable.ArrayBuffer.empty[Entry]
 
   /** Persist `ds` (default storage level) and register it for release. */
   def track[T](ds: Dataset[T]): Dataset[T] =
     synchronized {
-      frames.filterInPlace(_._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      frames += Thread.currentThread() -> ds.persist()
+      entries.filterInPlace(_.live)
+      entries += Entry(Thread.currentThread(), ds.persist(), None)
       ds
     }
 
-  /** Register an already-persisted RDD by id (localCheckpoint blocks —
-    * the Dataset API offers no unpersist handle for them; the id comes
-    * from a before/after diff of `sc.getPersistentRDDs`). */
-  private[graft] def trackRddId(sc: SparkContext, id: Int): Unit =
-    synchronized { rddIds += ((Thread.currentThread(), sc, id)) }
+  /** Eager `localCheckpoint` of `ds`, registered to the calling thread
+    * for [[release]]. The checkpoint's OWN rdd is read from the result's
+    * `LogicalRDD` plan — a before/after diff of `sc.getPersistentRDDs`
+    * would also capture caches whose lazy RDDs first materialize during
+    * the same job (e.g. a tracked edge relation), and dropping those
+    * would force every later round to recompute the whole upstream.
+    * When the checkpoint's own job fails there is no result to read the
+    * rdd from; the RDD Spark persisted for it is left to the
+    * ContextCleaner. */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
+    val out = ds.localCheckpoint()
+    val rdd = out.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
+    synchronized { entries += Entry(Thread.currentThread(), out, rdd) }
+    out
+  }
+
+  /** Unpersist one [[checkpoint]] or [[track]]ed frame now (non-blocking)
+    * and remove its registry entry, whichever thread registered it. A
+    * frame this registry does not hold is left alone. */
+  def drop(ds: Dataset[_]): Unit = synchronized {
+    entries.filterInPlace { e => if (e.ds eq ds) { e.free(); false } else true }
+  }
+
+  /** Up to `maxRounds` rounds of `state = checkpoint(step(state))` from
+    * `seed`, each superseded round [[drop]]ped right after its successor
+    * materializes. `done` sees every new round (never the seed) and ends
+    * the loop when it holds; it is the only place a caller's per-round
+    * driver sync may run — `iterate` itself adds no Spark job beyond
+    * the checkpoints (they are eager, so no count() is needed before
+    * the drop; r17 measured that count as a duplicate job per round).
+    * Returns the last round, or `seed` when none ran. */
+  def iterate[T](seed: Dataset[T], maxRounds: Int)(step: Dataset[T] => Dataset[T])(
+      done: Dataset[T] => Boolean): Dataset[T] = {
+    @annotation.tailrec
+    def loop(state: Dataset[T], round: Int): Dataset[T] =
+      if (round >= maxRounds) state
+      else {
+        val next = checkpoint(step(state))
+        if (state ne seed) drop(state)
+        if (done(next)) next else loop(next, round + 1)
+      }
+    loop(seed, 0)
+  }
+
+  /** Registry entries owned by the calling thread (test hook). */
+  private[graft] def owned: Int =
+    synchronized(entries.count(_.owner eq Thread.currentThread()))
 
   /** Unpersist everything the CALLING thread tracked, plus orphans from
     * dead threads (idempotent; non-blocking). Another live thread's
@@ -70,13 +135,6 @@ object QueryCaches {
   def releaseAll(): Unit = releaseWhere(_ => true)
 
   private def releaseWhere(sweep: Thread => Boolean): Unit = synchronized {
-    frames.filterInPlace { case (owner, ds) =>
-      if (sweep(owner)) { ds.unpersist(blocking = false); false } else true
-    }
-    rddIds.filterInPlace { case (owner, sc, id) =>
-      if (sweep(owner)) {
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)); false
-      } else true
-    }
+    entries.filterInPlace { e => if (sweep(e.owner)) { e.free(); false } else true }
   }
 }

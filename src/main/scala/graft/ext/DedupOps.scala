@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.QueryCaches
 import graft.functions.HashExprs
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -257,42 +258,20 @@ object DedupOps {
     * near-cliques that still converge at initialization, so the common
     * case pays nothing extra but the self-join. `maxIter` is a safety
     * ceiling only — the label-sum fixpoint exits the loop the first
-    * round nothing changes. localCheckpoint truncates the growing
-    * lineage each round (at warehouse scale: stage labels to a work
-    * table per round). The per-round driver sync is one aggregate —
-    * the loop is driver-coordinated but all data stays distributed. */
+    * round nothing changes. Rounds run on [[QueryCaches.iterate]],
+    * which states the checkpoint/release contract. The per-round
+    * driver sync is one aggregate — the loop is driver-coordinated but
+    * all data stays distributed. */
   def dupClusters(pairs: org.apache.spark.sql.DataFrame, maxIter: Int = 64): org.apache.spark.sql.DataFrame = {
     // Symmetrize in ONE pass over `pairs` (explode of a 2-struct array)
     // — a self-union would execute the whole upstream candidate
     // pipeline twice before the persist materializes.
-    val edges = pairs
+    val edges = QueryCaches.track(pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist()
-    val sc = pairs.sparkSession.sparkContext
-    // Each round's localCheckpoint caches blocks that are the ONLY copy
-    // of that round's labels (lineage is truncated). Superseded rounds
-    // are unpersisted as soon as the next round materializes; the FINAL
-    // round's blocks back the returned DataFrame, so they are registered
-    // with QueryCaches and freed by the harness after the query's
-    // terminal action. The checkpoint's OWN rdd id is read from the
-    // resulting LogicalRDD plan — a persistent-map diff around the call
-    // would also capture the edges/withFps caches whose lazy RDDs first
-    // register while the seed checkpoint materializes, and dropping
-    // those after round 1 would force every later round to recompute
-    // the whole candidate pipeline.
-    def checkpoint(df: org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, Option[Int]) = {
-      val out = df.localCheckpoint()
-      val id = out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      (out, id)
-    }
-    def drop(id: Option[Int]): Unit =
-      id.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-    var (labels, ckptId) = checkpoint(edges.groupBy(col("src").as("id"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))
+    val seed = QueryCaches.checkpoint(edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("nbr"))
       .select(col("id"), least(col("id"), col("nbr")).as("label")))
     // Convergence via the label-sum fixpoint: labels only ever decrease
@@ -306,24 +285,13 @@ object DedupOps {
     // yield an empty result, not an NPE at the fixpoint seed.
     def labelSum(df: org.apache.spark.sql.DataFrame): Long =
       df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
-    // GRAFT_CC_DEBUG=1: per-round wall-clock to stderr — the knob that
-    // tells a profiling pass whether a slow clustering query is paying
-    // for MANY rounds (long chains) or EXPENSIVE rounds (fat edges).
-    val dbg = sys.env.get("GRAFT_CC_DEBUG").contains("1")
-    def tlog(msg: => String): Unit = if (dbg) System.err.println(s"[cc] $msg")
     // AQE stays ON through the loop — measured (round 14, events_dbscan
     // sf0.1): disabling it for the label-sized rounds RAISED per-round
     // cost 0.5 s → 1.0 s. The intuition "AQE's replan barrier is pure
     // latency on tiny data" is backwards here: its partition coalescing
     // is what keeps each round's three shuffles from scheduling 32
     // near-empty tasks apiece.
-    val t0 = System.nanoTime()
-    var prevSum = labelSum(labels)
-    tlog(f"seed ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val tr = System.nanoTime()
+    def round(labels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
       val viaNbr = edges
         .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("label", "nbr_label"), "dst")
         .groupBy(col("src").as("id")).agg(min(col("nbr_label")).as("min_nbr"))
@@ -352,57 +320,43 @@ object DedupOps {
         .join(labels.select(col("id").as("p_id"), col("label").as("ptr_label")),
           col("label") === col("p_id"))
         .select(col("id"), col("ptr_label"))
-      val nextPlan = labels.join(viaNbr, "id").join(viaPtr, "id")
+      labels.join(viaNbr, "id").join(viaPtr, "id")
         .select(col("id"),
           least(col("label"), col("min_nbr"), col("ptr_label")).as("label"))
-      if (iter == 0) {
-        // Round 0 aggregates the UNMATERIALIZED plan first: when the
-        // sum already equals the seed's, the seed checkpoint IS the
-        // fixpoint and the loop runs ONE checkpoint total — the common
-        // case (LSH dup components are near-cliques that converge at
-        // initialization) pays no second checkpoint. The double plan
-        // evaluation (sum, then checkpoint) is confined to this round.
-        val s = labelSum(nextPlan)
-        val tSum = (System.nanoTime() - tr) / 1e9
-        if (s == prevSum) done = true
-        else {
-          val (next, newId) = checkpoint(nextPlan)
-          drop(ckptId)
-          labels = next
-          ckptId = newId
-          prevSum = s
-        }
-        tlog(f"round 0${if (done) " (fixpoint)" else ""}: sum $tSum%.2fs, " +
-          f"total ${(System.nanoTime() - tr) / 1e9}%.2fs")
-      } else {
-        // Past round 0 we are in the multi-round regime (long chains):
-        // checkpoint FIRST, then aggregate the cheap cached scan — one
-        // plan evaluation per round instead of two (sum-then-checkpoint
-        // re-derived the whole join twice; round-14 measurement: ~40%
-        // off events_dbscan's fixpoint). The confirmation round pays
-        // one extra checkpoint write, negligible next to a plan eval.
-        // A SECOND edge propagation per round was measured here
-        // (round 14, events_dbscan sf0.1): rounds 8 → 6 but the
-        // un-checkpointed intermediate labels evaluate twice per round
-        // and total fixpoint time went 5.5 s → 7.2 s — rejected, like
-        // the two-hop pointer jump before it. One edge hop + one
-        // pointer jump per checkpointed round is the measured optimum.
-        val (next, newId) = checkpoint(nextPlan)
-        drop(ckptId)
-        labels = next
-        ckptId = newId
-        val ts = System.nanoTime()
-        val s = labelSum(next)
-        done = s == prevSum
-        prevSum = s
-        tlog(f"round $iter${if (done) " (fixpoint)" else ""}: " +
-          f"sum ${(System.nanoTime() - ts) / 1e9}%.2fs, " +
-          f"total ${(System.nanoTime() - tr) / 1e9}%.2fs")
-      }
-      iter += 1
     }
-    edges.unpersist()
-    ckptId.foreach(graft.core.QueryCaches.trackRddId(sc, _))
+    // Round 0 aggregates the UNMATERIALIZED plan first: when the sum
+    // already equals the seed's, the seed checkpoint IS the fixpoint and
+    // the loop runs ONE checkpoint total — the common case (LSH dup
+    // components are near-cliques that converge at initialization)
+    // pays no second checkpoint. The double plan evaluation (sum, then
+    // checkpoint) is confined to this round.
+    var prevSum = labelSum(seed)
+    val round0 = round(seed)
+    val s0 = if (maxIter < 1) prevSum else labelSum(round0)
+    val labels = if (s0 == prevSum) seed else {
+      prevSum = s0
+      val first = QueryCaches.checkpoint(round0)
+      QueryCaches.drop(seed)
+      // Past round 0 we are in the multi-round regime (long chains):
+      // checkpoint FIRST, then aggregate the cheap cached scan — one
+      // plan evaluation per round instead of two (sum-then-checkpoint
+      // re-derived the whole join twice; round-14 measurement: ~40%
+      // off events_dbscan's fixpoint). The confirmation round pays
+      // one extra checkpoint write, negligible next to a plan eval.
+      // A SECOND edge propagation per round was measured here
+      // (round 14, events_dbscan sf0.1): rounds 8 → 6 but the
+      // un-checkpointed intermediate labels evaluate twice per round
+      // and total fixpoint time went 5.5 s → 7.2 s — rejected, like
+      // the two-hop pointer jump before it. One edge hop + one
+      // pointer jump per checkpointed round is the measured optimum.
+      QueryCaches.iterate(first, maxIter - 1)(round) { next =>
+        val s = labelSum(next)
+        val same = s == prevSum
+        prevSum = s
+        same
+      }
+    }
+    QueryCaches.drop(edges)
     labels.select(col("id"), col("label").as("cluster_rep"))
   }
 

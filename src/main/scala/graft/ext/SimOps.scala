@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.QueryCaches
 import graft.functions.HashExprs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -454,7 +455,7 @@ object SimOps {
   def kcenterGreedy(corpus: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val e = graft.core.QueryCaches.track(
+    val e = QueryCaches.track(
       corpus.select(col("vec_id"), col("embedding")))
     val seed = e.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
@@ -488,9 +489,9 @@ object SimOps {
     * small state relation — each round is one (cur→neighbors) edge
     * equi-join, one vec_id join against the persisted corpus for
     * candidate vectors, and one per-query max_by argmax; the state is
-    * |queries| rows (localCheckpoint-truncated per round like
-    * [[bfsHops]]), so `maxSteps` rounds cost maxSteps bounded passes
-    * regardless of corpus size — the whole point of graph ANN: query
+    * |queries| rows (checkpointed per round by [[QueryCaches.iterate]]),
+    * so `maxSteps` rounds cost maxSteps bounded passes regardless of
+    * corpus size — the whole point of graph ANN: query
     * cost scales with walk length × degree, not corpus size. Entry =
     * the smallest vec_id ≠ the query's own (deterministic; production
     * uses a hierarchy or medoid). Strict-improvement stopping; ties on
@@ -501,34 +502,22 @@ object SimOps {
     * surface exactly like sim_recall_report. */
   def graphSearchGreedy(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int,
       maxSteps: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    val sc = spark.sparkContext
-    val e = graft.core.QueryCaches.track(
+    val e = QueryCaches.track(
       corpus.select(col("vec_id"), col("embedding")))
     val knn = knnGraph(e, k, bits).select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.core.QueryCaches.track(
+    val edges = QueryCaches.track(
       knn.unionAll(knn.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     val low2 = e.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
       .collect().map(_.getLong(0))
     require(low2.length == 2, "graph search needs at least two vectors")
-    def checkpoint(df: DataFrame): (DataFrame, Option[Int]) = {
-      val out = df.localCheckpoint()
-      val id = out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      id.foreach(graft.core.QueryCaches.trackRddId(sc, _))
-      (out, id)
-    }
-    def drop(id: Option[Int]): Unit =
-      id.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
     val entry = queries.select(col("q_id"), col("q_vec"),
       when(col("q_id") === low2(0), low2(1)).otherwise(low2(0)).as("cur"))
-    var (state, sId) = checkpoint(
+    val seed = QueryCaches.checkpoint(
       entry.join(e.select(col("vec_id").as("cur"), col("embedding").as("cvec")), "cur")
         .select(col("q_id"), col("q_vec"), col("cur"),
           cosine(col("cvec"), col("q_vec")).as("cur_cos"),
           lit(0L).as("steps"), lit(false).as("done")))
-    for (_ <- 1 to maxSteps) {
+    val walked = QueryCaches.iterate(seed, maxSteps) { state =>
       val live = state.filter(!col("done"))
       val cand = live.join(edges, live("cur") === edges("src"))
         .filter(col("dst") =!= col("q_id"))
@@ -538,23 +527,17 @@ object SimOps {
       val best = cand.groupBy(col("q_id"))
         .agg(max_by(struct(col("dst"), col("c")),
           struct(col("c"), (-col("dst")).as("nd"))).as("b"))
-      val (next, nId) = checkpoint(
-        state.join(best, Seq("q_id"), "left")
-          .select(col("q_id"), col("q_vec"),
-            when(!col("done") && col("b.c") > col("cur_cos"), col("b.dst"))
-              .otherwise(col("cur")).as("cur"),
-            when(!col("done") && col("b.c") > col("cur_cos"), col("b.c"))
-              .otherwise(col("cur_cos")).as("cur_cos"),
-            when(!col("done") && col("b.c") > col("cur_cos"), col("steps") + 1)
-              .otherwise(col("steps")).as("steps"),
-            (col("done") || col("b.c").isNull || col("b.c") <= col("cur_cos")).as("done")))
-      // no count() needed: localCheckpoint is EAGER — `next` is already
-      // materialized, so dropping the previous round's blocks is safe
-      // (r17: the extra count was a duplicate job per round)
-      drop(sId)
-      state = next; sId = nId
-    }
-    state.select(col("q_id"), col("cur").as("found_id"),
+      state.join(best, Seq("q_id"), "left")
+        .select(col("q_id"), col("q_vec"),
+          when(!col("done") && col("b.c") > col("cur_cos"), col("b.dst"))
+            .otherwise(col("cur")).as("cur"),
+          when(!col("done") && col("b.c") > col("cur_cos"), col("b.c"))
+            .otherwise(col("cur_cos")).as("cur_cos"),
+          when(!col("done") && col("b.c") > col("cur_cos"), col("steps") + 1)
+            .otherwise(col("steps")).as("steps"),
+          (col("done") || col("b.c").isNull || col("b.c") <= col("cur_cos")).as("done"))
+    }(_ => false)
+    walked.select(col("q_id"), col("cur").as("found_id"),
       col("cur_cos").as("found_cos"), col("steps").as("n_steps"))
   }
 
@@ -581,37 +564,25 @@ object SimOps {
     * rows ⋈ edges equi-join, anti-join against the full state (≤
     * width·deg candidate rows per query), one corpus vec lookup, one
     * per-query rank over ≤ width·(deg+1) rows — all relations are
-    * query-count-sized, localCheckpoint-truncated like the greedy
-    * walk. */
+    * query-count-sized, checkpointed per round by
+    * [[QueryCaches.iterate]] like the greedy walk. */
   def beamSearch(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int,
       width: Int, rounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val spark = corpus.sparkSession
-    val sc = spark.sparkContext
-    val e = graft.core.QueryCaches.track(
+    val e = QueryCaches.track(
       corpus.select(col("vec_id"), col("embedding")))
     val knn = knnGraph(e, k, bits).select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-    val edges = graft.core.QueryCaches.track(
+    val edges = QueryCaches.track(
       knn.unionAll(knn.select(col("dst").as("src"), col("src").as("dst"))).distinct())
-    val q = graft.core.QueryCaches.track(queries.select(col("q_id"), col("q_vec")))
+    val q = QueryCaches.track(queries.select(col("q_id"), col("q_vec")))
     val low2 = e.select(col("vec_id")).orderBy(col("vec_id")).limit(2)
       .collect().map(_.getLong(0))
     require(low2.length == 2, "beam search needs at least two vectors")
-    def checkpoint(df: DataFrame): (DataFrame, Option[Int]) = {
-      val out = df.localCheckpoint()
-      val id = out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      id.foreach(graft.core.QueryCaches.trackRddId(sc, _))
-      (out, id)
-    }
-    def drop(id: Option[Int]): Unit =
-      id.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
     val entry = q.select(col("q_id"),
       when(col("q_id") === low2(0), low2(1)).otherwise(low2(0)).as("id"))
     // state: every visited vertex with its score; `inb` marks the
     // current beam (the entry vertex starts as the whole beam).
-    var (state, sId) = checkpoint(
+    val seed = QueryCaches.checkpoint(
       entry.join(e.select(col("vec_id").as("id"), col("embedding").as("ivec")), "id")
         .join(q, "q_id")
         .select(col("q_id"), col("id"), cosine(col("ivec"), col("q_vec")).as("cos"),
@@ -624,7 +595,7 @@ object SimOps {
     // ranked out of the beam once and the beam only ever improves).
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("elig").desc, col("cos").desc, col("id"))
-    for (_ <- 1 to rounds) {
+    val beam = QueryCaches.iterate(seed, rounds) { state =>
       val cand = state.filter(col("inb"))
         .join(edges, state("id") === edges("src"))
         .select(col("q_id"), col("dst").as("id")).distinct()
@@ -635,16 +606,13 @@ object SimOps {
         .join(q, "q_id")
         .select(col("q_id"), col("id"), cosine(col("ivec"), col("q_vec")).as("cos"),
           lit(true).as("elig"))
-      val (next, nId) = checkpoint(
-        state.select(col("q_id"), col("id"), col("cos"), col("inb").as("elig"))
-          .unionAll(scored)
-          .withColumn("rk", row_number().over(w))
-          .select(col("q_id"), col("id"), col("cos"),
-            (col("elig") && col("rk") <= width).as("inb")))
-      drop(sId)
-      state = next; sId = nId
-    }
-    state.filter(col("inb")).select(col("q_id"), col("id"), col("cos"))
+      state.select(col("q_id"), col("id"), col("cos"), col("inb").as("elig"))
+        .unionAll(scored)
+        .withColumn("rk", row_number().over(w))
+        .select(col("q_id"), col("id"), col("cos"),
+          (col("elig") && col("rk") <= width).as("inb"))
+    }(_ => false)
+    beam.filter(col("inb")).select(col("q_id"), col("id"), col("cos"))
   }
 
   /** Multi-source BFS hop distances over an edge relation — frontier
@@ -659,56 +627,33 @@ object SimOps {
     * Per round: frontier ⋈ edges (vertex-keyed equi-join), distinct,
     * LEFT ANTI against visited (the BFS invariant — a vertex's first
     * discovery round IS its distance, so later rediscoveries are
-    * dropped before they exist), then union into visited. Rounds are
-    * localCheckpoint-truncated exactly like [[graft.ext.DedupOps
-    * .dupClusters]]: without it round r's plan re-executes rounds
-    * 1..r−1 (the 3^rounds re-execution pathology k-core measured), and
-    * superseded rounds' blocks are dropped as soon as the next round
-    * materializes. The per-round driver sync is one count() — the
-    * early-exit when the frontier drains, which also bounds lineage:
-    * at 100 TB this is exactly Pregel-style iteration staged to a work
-    * table per superstep. The anti-join keeps the frontier MINIMAL
-    * (only first-time vertices expand), so total work is O(edges
-    * within maxHops of the seeds), not O(paths) — the property that
-    * separates distributed BFS from the naive path-enumeration the
-    * oracle's recursive CTE performs (affordable there only because
-    * the oracle corpus is small). */
+    * dropped before they exist), then union into visited. The carried
+    * state is ONE (id, hops) relation whose frontier is the rows with
+    * hops = h−1, checkpointed per round by [[QueryCaches.iterate]]:
+    * without the checkpoint round r's plan re-executes rounds 1..r−1
+    * (the 3^rounds re-execution pathology k-core measured). The
+    * per-round driver sync is one count of the new frontier — the
+    * early-exit when it drains, which also bounds lineage: at 100 TB
+    * this is exactly Pregel-style iteration staged to a work table per
+    * superstep. The anti-join keeps the frontier MINIMAL (only
+    * first-time vertices expand), so total work is O(edges within
+    * maxHops of the seeds), not O(paths) — the property that separates
+    * distributed BFS from the naive path-enumeration the oracle's
+    * recursive CTE performs (affordable there only because the oracle
+    * corpus is small). */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val sc = edges.sparkSession.sparkContext
-    val e = graft.core.QueryCaches.track(
+    val e = QueryCaches.track(
       edges.select(col("src"), col("dst")))
-    def checkpoint(df: DataFrame): (DataFrame, Option[Int]) = {
-      val out = df.localCheckpoint()
-      val id = out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-      id.foreach(graft.core.QueryCaches.trackRddId(sc, _))
-      (out, id)
-    }
-    def drop(id: Option[Int]): Unit =
-      id.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-    var (visited, vId) = checkpoint(seeds.select(col("id"), lit(0L).as("hops")))
-    var frontier = visited.select(col("id"))
-    var fId: Option[Int] = None // round-0 frontier shares visited's blocks
-    var h = 1
-    var done = false
-    while (h <= maxHops && !done) {
-      val (next, nId) = checkpoint(
-        frontier.join(e, frontier("id") === e("src"))
-          .select(col("dst").as("id")).distinct()
-          .join(visited.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(h.toLong).as("hops")))
-      if (next.count() == 0) { drop(nId); done = true }
-      else {
-        val (nv, nvId) = checkpoint(visited.union(next))
-        drop(vId); drop(fId)
-        visited = nv; vId = nvId
-        frontier = next.select(col("id")); fId = nId
-        h += 1
-      }
-    }
-    drop(fId) // final union copied the last frontier's rows into visited
-    visited
+    var h = 0L // the round `step` builds; `done` counts the vertices it discovered
+    QueryCaches.iterate(
+      QueryCaches.checkpoint(seeds.select(col("id"), lit(0L).as("hops"))), maxHops) { visited =>
+      h += 1
+      val frontier = visited.filter(col("hops") === h - 1)
+      visited.unionAll(frontier.join(e, frontier("id") === e("src"))
+        .select(col("dst").as("id")).distinct()
+        .join(visited.select(col("id")), Seq("id"), "left_anti")
+        .select(col("id"), lit(h).as("hops")))
+    }(_.filter(col("hops") === h).count() == 0)
   }
 
   def gramMatrix(corpus: DataFrame, vecCol: String, dims: Int): DataFrame =

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.QueryCaches
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -125,11 +126,10 @@ object TextOps {
     * (count desc, pair asc — a 1-row TakeOrdered, the only driver
     * materialization per round beside the 1-row fertility fold), and
     * rewrite every word's representation with the non-overlapping
-    * left-to-right `replace`. Each round's vocab is localCheckpoint'ed
-    * and the superseded round's blocks are dropped (the
-    * [[DedupOps.dupClusters]] cache discipline), so lineage stays flat
-    * at any merge count. Stops early when no adjacent pair remains
-    * (every word fused to one symbol).
+    * left-to-right `replace`. Rounds run on [[QueryCaches.iterate]]
+    * (checkpointed per round), so lineage stays flat at any merge
+    * count. Stops early when no adjacent pair remains (every word
+    * fused to one symbol).
     *
     * Returns the MERGE TABLE — the trained tokenizer artifact:
     * (step, merged_pair, pcount, fertility_milli), where
@@ -168,15 +168,10 @@ object TextOps {
     * former 1000·Σ cnt·|symbols| div W spelling. */
   def bpeTrainFromWords(words: org.apache.spark.sql.DataFrame,
       merges: Int): org.apache.spark.sql.DataFrame = {
-    val reps0 = words
-      .select(col("cnt"), array_join(split(col("w"), ""), " ").as("rep"))
-      .localCheckpoint()
+    val reps0 = QueryCaches.checkpoint(words
+      .select(col("cnt"), array_join(split(col("w"), ""), " ").as("rep")))
     try bpeTrainFromReps(reps0, merges)
-    finally reps0.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        reps0.sparkSession.sparkContext.getPersistentRDDs.get(l.rdd.id)
-          .foreach(_.unpersist(blocking = false))
-    }
+    finally QueryCaches.drop(reps0)
   }
 
   /** [[bpeTrainFromWords]] over an ALREADY-CHECKPOINTED round-0 vocab
@@ -188,24 +183,15 @@ object TextOps {
     * training round — the canChangeCachedPlanOutputPartitioning trap
     * Bench.scala documents — and cost text_bpe_apply ~25%: 1.73 →
     * 2.16 s, tasks 49 → 575, interleaved Profile A/B at sf0.1).
-    * `reps0` must be a localCheckpoint; this function never unpersists
-    * it — the caller owns its lifecycle (training is fully eager, so
-    * the caller may drop it as soon as this returns). */
+    * `reps0` must be a [[QueryCaches.checkpoint]]; it is the
+    * [[QueryCaches.iterate]] seed, so the caller owns its lifecycle
+    * (training is fully eager, so the caller may drop it as soon as
+    * this returns). */
   def bpeTrainFromReps(reps0: org.apache.spark.sql.DataFrame,
       merges: Int): org.apache.spark.sql.DataFrame = {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     val spark = reps0.sparkSession
     import spark.implicits._
-    val sc = spark.sparkContext
-    def ckptId(df: org.apache.spark.sql.DataFrame): Option[Int] =
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }
-    def drop(id: Option[Int]): Unit =
-      id.foreach(i => sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false)))
-    var reps = reps0
-    // round 0 is caller-owned: never dropped here
-    var cur: Option[Int] = None
     // (modal pair, its count, Σ all pair counts) in ONE job. Empty pair
     // relation (every word fused to one symbol, or empty corpus) →
     // null top struct → None; Σ coalesces to 0 (fertility is then
@@ -228,28 +214,25 @@ object TextOps {
     }
     // W = Σ cnt — invariant across merges (merges fuse symbols inside
     // words, never words). One job, once.
-    val w0 = reps.agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
-    var (topPair, _) = pairStats(reps)
+    val w0 = reps0.agg(coalesce(sum(col("cnt")), lit(0L))).head().getLong(0)
+    var topPair = pairStats(reps0)._1
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    var step = 1L
-    while (step <= merges && topPair.isDefined) {
-      val (pair, pcount) = topPair.get
-      // lit()-bound arguments (not string-spliced SQL): corpus tokens
-      // may contain quotes/backslashes.
-      val next = reps.select(col("cnt"),
-          call_function("replace", col("rep"), lit(pair),
-            lit(pair.replace(" ", ""))).as("rep"))
-        .localCheckpoint()
-      val nid = ckptId(next)
-      drop(cur)
-      reps = next
-      cur = nid
-      val (nextTop, ptot) = pairStats(reps)
-      out += ((step, pair, pcount, (1000L * (ptot + w0)) / w0))
-      topPair = nextTop
-      step += 1
+    if (topPair.isDefined) {
+      val last = QueryCaches.iterate(reps0, merges) { reps =>
+        val pair = topPair.get._1
+        // lit()-bound arguments (not string-spliced SQL): corpus tokens
+        // may contain quotes/backslashes.
+        reps.select(col("cnt"),
+          call_function("replace", col("rep"), lit(pair), lit(pair.replace(" ", ""))).as("rep"))
+      } { reps =>
+        val (pair, pcount) = topPair.get
+        val (nextTop, ptot) = pairStats(reps)
+        out += ((out.size + 1L, pair, pcount, (1000L * (ptot + w0)) / w0))
+        topPair = nextTop
+        topPair.isEmpty
+      }
+      QueryCaches.drop(last) // the merge table is driver-side; the final vocab is scratch
     }
-    drop(cur) // the merge table is driver-side; the final vocab is scratch
     out.toSeq.toDF("step", "merged_pair", "pcount", "fertility_milli")
   }
 }

@@ -403,11 +403,8 @@ object MvCatalog {
       }.getOrElse(throw new IllegalStateException(s"MV '$name': missing $aliasName"))
     val measureCanon = measures.indices.map(i => canon(aggChild(s"mv_sum_$i")))
 
-    val mat = aggDf.localCheckpoint()
     // checkpoint blocks are query-scoped like every other persist
-    mat.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.foreach(graft.core.QueryCaches.trackRddId(base.sparkSession.sparkContext, _))
+    val mat = graft.core.QueryCaches.checkpoint(aggDf)
     val matPlan = mat.queryExecution.analyzed
     val byName = matPlan.output.map(a => a.name -> a).toMap
     val mvDef = MvDef(

@@ -1005,11 +1005,7 @@ object Relational {
       require(!agg.queryExecution.optimizedPlan.exists(
           _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
         "q_mv_rewrite: MvRewrite did not fire — plan still scans the base table")
-      val out = agg.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.foreach(graft.core.QueryCaches.trackRddId(spark.sparkContext, _))
-      out
+      graft.core.QueryCaches.checkpoint(agg)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.mv.rewrite", v)
@@ -1059,11 +1055,7 @@ object Relational {
       require(!agg.queryExecution.optimizedPlan.exists(
           _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
         "q_mv_rewrite_join: MvRewrite did not fire — plan still scans a base table")
-      val out = agg.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.foreach(graft.core.QueryCaches.trackRddId(spark.sparkContext, _))
-      out
+      graft.core.QueryCaches.checkpoint(agg)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.mv.rewrite", v)

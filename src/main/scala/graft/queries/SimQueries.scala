@@ -262,16 +262,12 @@ object SimQueries {
     try {
       val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
       val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
-      val out = corpus.as("a").join(corpus.as("b"),
+      // checkpointed NOW, while the rule is engaged
+      graft.core.QueryCaches.checkpoint(corpus.as("a").join(corpus.as("b"),
           SimOps.cosine(col("a.embedding"), col("b.embedding")) >= 0.999 &&
             col("a.vec_id") < col("b.vec_id"))
         .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          SimOps.cosine(col("a.embedding"), col("b.embedding")).as("cos"))
-        .localCheckpoint() // executes NOW, while the rule is engaged
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      }.foreach(graft.core.QueryCaches.trackRddId(spark.sparkContext, _))
-      out
+          SimOps.cosine(col("a.embedding"), col("b.embedding")).as("cos")))
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
@@ -1594,23 +1590,13 @@ object SimQueries {
     * horizon contract) keeps the result deterministic at every scale
     * factor and bounds latency — peel depth is a declared knob, not a
     * data-dependent loop. The carried per-round state is the VERTEX
-    * relation (id, deg, alive), localCheckpoint'ed each round (the
-    * [[graft.ext.DedupOps.dupClusters]] fixpoint pattern — the
-    * checkpoint truncates lineage; its blocks register with
-    * [[graft.core.QueryCaches]] for release after the query's terminal
-    * action); the EDGE relation is persisted once and never rewritten
-    * (see the in-body equivalence note). Output: surviving vertices
-    * with their degree in the round-5 subgraph. */
+    * relation (id, deg, alive), checkpointed each round by
+    * [[graft.core.QueryCaches.iterate]]; the EDGE relation is
+    * persisted once and never rewritten (see the in-body equivalence
+    * note). Output: surviving vertices with their degree in the
+    * round-5 subgraph. */
   def simKcore(spark: SparkSession, sfDir: String): DataFrame = {
     val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    def checkpoint(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint()
-      out.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          graft.core.QueryCaches.trackRddId(df.sparkSession.sparkContext, l.rdd.id)
-      }
-      out
-    }
     // r18 degree-delta peel (guide §2.4 — do the per-round work on the
     // DELTA, not the whole graph): the edge relation is materialized
     // ONCE and never rewritten; the carried state is the VERTEX
@@ -1633,22 +1619,21 @@ object SimQueries {
     val adj = graft.core.QueryCaches.track(
       m.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(m.select(col("v").as("src"), col("u").as("dst"))))
-    var state = checkpoint(
+    val seed = graft.core.QueryCaches.checkpoint(
       adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .select(col("src").as("id"), col("deg"), lit(true).as("alive")))
-    for (_ <- 1 to 5) {
+    val peeled = graft.core.QueryCaches.iterate(seed, 5) { state =>
       val removed = state.filter(col("alive") && col("deg") < 3)
         .select(col("id").as("rid"))
       val delta = adj.join(removed, col("dst") === col("rid"))
         .groupBy(col("src")).agg(count(lit(1)).as("dd"))
         .select(col("src").as("did"), col("dd"))
-      state = checkpoint(state
-        .join(delta, col("id") === col("did"), "left")
+      state.join(delta, col("id") === col("did"), "left")
         .select(col("id"),
           (col("deg") - coalesce(col("dd"), lit(0L))).as("deg"),
-          (col("alive") && col("deg") >= 3).as("alive")))
-    }
-    state.filter(col("alive") && col("deg") >= 1)
+          (col("alive") && col("deg") >= 3).as("alive"))
+    }(_ => false)
+    peeled.filter(col("alive") && col("deg") >= 1)
       .select(col("id").as("vec_id"), col("deg").as("core_deg"))
   }
 

@@ -1390,14 +1390,10 @@ object TextQueries {
     // the measured persisted-wordcount rejection. Registered with
     // QueryCaches: its blocks back the returned plan's lineage until
     // the query's terminal action.
-    val reps0 = docs.select(explode(tokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), array_join(split(col("w"), ""), " ").as("rep"))
-      .localCheckpoint()
-    reps0.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        graft.core.QueryCaches.trackRddId(spark.sparkContext, l.rdd.id)
-    }
+    val reps0 = graft.core.QueryCaches.checkpoint(
+      docs.select(explode(tokens(col("text"))).as("w"))
+        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+        .select(col("cnt"), array_join(split(col("w"), ""), " ").as("rep")))
     val merges = graft.ext.TextOps.bpeTrainFromReps(reps0, 6)
       .orderBy(col("step")).collect().map(_.getString(1)).toSeq
     var reps = reps0

@@ -107,7 +107,11 @@ class DedupOpsSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val baseline = sc.getPersistentRDDs.keySet
     for (q <- Seq("dedup_near", "dedup_near_capped", "dedup_clusters",
-        "dedup_simhash_pairs", "op_concat", "op_each_run")) {
+        "dedup_simhash_pairs", "op_concat", "op_each_run",
+        // every query that runs a QueryCaches.checkpoint/iterate site
+        "events_dbscan", "sim_graph_search", "sim_beam_search", "sim_bfs_hops",
+        "sim_kcore", "sim_pairs_rewrite", "text_bpe_train", "text_bpe_apply",
+        "text_bpe_heldout", "q_mv_rewrite", "q_mv_rewrite_join")) {
       SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
       DedupOps.releaseCaches()
