@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR.
@@ -18,63 +17,26 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r17 MEASURED REJECTION (guide §1.2 — configuration last):
-      // spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true
-      // (let AQE coalesce persisted-plan output) was trialed because the
-      // fixpoint states / sketch relations materialize 32 near-empty
-      // tasks per downstream stage. Task counts dropped 5–10×
-      // (events_dbscan 1219→133) and events_dbscan gained ~4 s — but
-      // AQE's coalescing is BYTE-based, so byte-small / compute-DENSE
-      // cached relations (embedding vectors, phash arrays) collapsed to
-      // 1 partition and serialized their downstream CPU work: same-box
-      // A/B (sf0.1, local[32]) sim_mmr 18.4 s/998 tasks → 69.3 s/40
-      // tasks, mm_tile_hash 4.3 → 25.2, mm_phash_clusters 6.6 → 43.4.
-      // Byte size is the wrong proxy for compute density; rejected
-      // session-wide at any scale. Per-op fixes target the overhead
-      // instead (fewer jobs/round in fixpoints, explicit scale-derived
-      // partition counts on tiny state relations).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_BENCH_ONLY=a,b: local-iteration subset (unset in the
+    val spark = Harness.session()
+    // SPARK_GRAFT_ONLY=a,b: local-iteration subset (unset in the
     // driver's run — the full inventory is the reported surface).
     // SPARK_GRAFT_BENCH_SCALE=N (see Tables.scaleProbe): parallelism
     // probe that replicates every input row N× in-plan. Its numbers are
     // NOT comparable to the contract bench, so a scaled run is treated
     // exactly like a subset run: results land in bench_result_subset
     // .json, never in the bench_result.json delta baseline.
-    val scaled = sys.env.get("SPARK_GRAFT_BENCH_SCALE").exists(_.trim.toInt >= 2)
+    val scaled = Harness.knobs.benchScale.exists(_ >= 2)
     if (scaled)
       System.err.println("[bench] SPARK_GRAFT_BENCH_SCALE set: parallelism-probe " +
         "mode, inputs replicated in-plan; writing bench_result_subset.json")
-    val only0 = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    // a scaled full run still must not clobber the baseline: force the
-    // subset path by naming every query explicitly
-    val only = if (scaled && only0.isEmpty) Some(SparkEntry.queries.keySet.toSet)
-      else only0
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    // Materialize EVERY column through the noop sink: a count() would
-    // let Catalyst prune the very projections being measured (e.g. a
-    // fingerprint query degenerates to counting rows).
+    val names = Harness.selected
+    // a scaled full run still must not clobber the baseline
+    val subset = scaled || Harness.knobs.only.nonEmpty
     // A failed query must be VISIBLE, not a suspiciously fast number:
     // failures are collected and emitted in the JSON's "errors" map
     // (extra key — the driver's parse reads "value"/"queries").
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def exec(name: String): Unit =
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      finally {
-        graft.ext.DedupOps.releaseCaches()
-        spark.conf.set("spark.graft.lsh.rewrite", "false")
-      }
+    def exec(name: String): Unit = Harness.run(spark, name, sfDir)(Harness.noop)
     def timed(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       var ok = true
@@ -114,7 +76,7 @@ object Bench {
     // the driver parses "value"/"queries" only.
     var prevTs = ""
     val prev: Map[String, Double] =
-      if (only.nonEmpty) Map.empty
+      if (subset) Map.empty
       else {
         val prevPath = Paths.get("bench_result.json")
         val prevText =
@@ -167,14 +129,14 @@ object Bench {
     // — top drifts by ratio over a 0.2s noise floor, plus the shared-
     // query mass ratio. A per-query regression is then a first-class
     // artifact each round instead of a cross-round archeology exercise.
-    // Skipped for SPARK_GRAFT_BENCH_ONLY subset runs (a 2-query local
+    // Skipped for SPARK_GRAFT_ONLY subset runs (a 2-query local
     // iteration must not clobber the round-over-round report), when the
     // previous map was measured at a DIFFERENT scale factor (an sf0.001
     // smoke vs the sf0.1 baseline would report nonsense ratios), and
     // when the previous map shares no queries (first run / renamed
     // suite).
     def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    if (only.isEmpty) {
+    if (!subset) {
       val cur = results.toMap
       val shared = (cur.keySet intersect prev.keySet).toSeq.sorted
       if (shared.nonEmpty) {
@@ -202,7 +164,7 @@ object Bench {
     // Subset runs land in a scratch file: bench_result.json is the
     // round-over-round delta BASELINE and must only ever hold a full
     // inventory map (a 2-query local iteration would otherwise wipe it).
-    val outName = if (only.isEmpty) "bench_result.json" else "bench_result_subset.json"
+    val outName = if (!subset) "bench_result.json" else "bench_result_subset.json"
     Files.writeString(Paths.get(outName), full + "\n")
     // The driver recovers the stdout JSON from the LAST ~2000 chars of
     // the (sbt-suffixed) output. Round 6's 92-query full-precision line

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-inspection main: prints the formatted physical plan of each
@@ -11,17 +10,11 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val spark = Harness.session()
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
       if (only.isEmpty || only(name)) {
         println(s"\n========== $name ==========")
-        try println(fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+        try println(Harness.run(spark, name, sfDir)(_.queryExecution.explainString(FormattedMode)))
         catch { case e: Throwable => println(s"[explain failed] $e") }
       }
     }

@@ -1,35 +1,20 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Measurement-only main (guide §1): run named queries through the
+/** Measurement-only main: run named queries through the
   * noop sink with a stage listener and print, per query, the wall time
   * plus every stage's task count / duration / shuffle+input volumes.
   * This is how single-task scan stages, exchange counts and straggler
   * stages are diagnosed without the (disabled) Spark UI. Not part of
   * the declared surface; changes nothing a query computes.
-  * Usage: graft.Profile <sfDir> <query> [query ...]   (env SPARK_GRAFT_CPUS)
+  * Usage: graft.Profile <sfDir> <query> [query ...]
+  * (env SPARK_GRAFT_CPUS, SPARK_GRAFT_REPS — see [[Harness.Knobs]])
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B knobs for config experiments (guide §1: measure first):
-    //   SPARK_GRAFT_SHUFFLE   — shuffle partition count (default: cpus)
-    //   SPARK_GRAFT_EXTRA     — semicolon list of k=v session confs
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    var b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sys.env.get("SPARK_GRAFT_EXTRA").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b = b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     case class St(name: String, tasks: Int, ms: Long, inMB: Double,
         shReadMB: Double, shWriteMB: Double, rows: Long)
     val stages = scala.collection.mutable.ArrayBuffer.empty[St]
@@ -51,15 +36,10 @@ object Profile {
     spark.sparkContext.addSparkListener(listener)
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      finally {
-        graft.ext.DedupOps.releaseCaches()
-        spark.conf.set("spark.graft.lsh.rewrite", "false")
-      }
+      Harness.run(spark, name, sfDir)(Harness.noop)
       (System.nanoTime() - t0) / 1e9
     }
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
+    val reps = Harness.knobs.reps
     for (name <- names) {
       spark.sparkContext.setJobDescription(name)
       runOnce(name) // warmup (codegen/JIT), discarded

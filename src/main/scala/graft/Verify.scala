@@ -1,40 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as nanos-since-epoch BIGINT (queries convert).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Harness.knobs.benchScale.foreach { n =>
+      throw new IllegalArgumentException(s"SPARK_GRAFT_BENCH_SCALE=$n replicates " +
+        "input rows, so the dump would not be the declared results; unset it")
+    }
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump (local iteration aid);
     // the driver never sets it, so the gate always runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Harness.selected.foreach { name =>
+      try Harness.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally {
-        graft.ext.DedupOps.releaseCaches()
-        // per-query session hygiene: a query that opts into the LSH
-        // rewrite must not leak it into whatever query runs next
-        spark.conf.set("spark.graft.lsh.rewrite", "false")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

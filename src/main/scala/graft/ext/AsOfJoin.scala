@@ -112,12 +112,10 @@ object AsOfJoin {
     * Left-outer ≤ semantics identical to [[asOfJoin]]; key and ts must
     * be LONG columns, and right-side non-key columns should be
     * pre-renamed to avoid clashes (output = left columns ++ right
-    * columns, right side nullable). Injects [[graft.plans
-    * .AsOfJoinStrategy]] into the session's extraStrategies on first
-    * use — safe to leave installed: the strategy matches ONLY the
-    * library's own plan node, so no other query's planning changes
-    * (unlike the opt-in rewrite RULES, which alter foreign joins and
-    * therefore restore their confs). */
+    * columns, right side nullable). Installs [[graft.plans
+    * .AsOfJoinStrategy]] with [[graft.sql.GraftExtensions.setup]] —
+    * safe to leave installed: the strategy matches ONLY the library's
+    * own plan node, so no other query's planning changes. */
   /** `rightTieBreaker` (optional column name on `right`) totalizes
     * the match when several right rows share one (key, ts): it joins
     * the right child's required sort order, and backward/nearest then
@@ -132,9 +130,7 @@ object AsOfJoin {
       tolerance: Option[Long] = None,
       rightTieBreaker: Option[String] = None): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
+    graft.sql.GraftExtensions.setup(spark)
     val lp = left.queryExecution.analyzed
     val rp0 = right.queryExecution.analyzed
     // Self-join lineage guard: if the two analyzed children share any

@@ -70,9 +70,9 @@ case class AsOfJoinPlan(left: LogicalPlan, right: LogicalPlan,
       l: LogicalPlan, r: LogicalPlan): AsOfJoinPlan = copy(left = l, right = r)
 }
 
-/** Planner strategy: inject via `spark.experimental.extraStrategies`
-  * (done lazily by [[graft.ext.AsOfJoin.asOfNative]]) or
-  * spark.sql.extensions → graft.sql.GraftExtensions. */
+/** Planner strategy for [[AsOfJoinPlan]]. Installed by
+  * graft.sql.GraftExtensions (see its install contract);
+  * [[graft.ext.AsOfJoin.asOfNative]] calls its `setup`. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt, dir, tol, tie) =>

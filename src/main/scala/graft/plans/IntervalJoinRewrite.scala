@@ -35,6 +35,8 @@ import org.apache.spark.sql.types.LongType
   * graft.queries.EventQueries.eventsIntervalJoin, automated — the
   * query documents the shape, the rule makes any user's naive
   * BETWEEN join inherit it.
+  *
+  * Installed by graft.sql.GraftExtensions (see its install contract).
   */
 case class IntervalJoinRewrite() extends Rule[LogicalPlan] with PredicateHelper {
 

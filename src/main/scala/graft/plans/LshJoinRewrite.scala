@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Opt-in optimizer rule (SURVEY §7.3: "Rule[LogicalPlan] to rewrite
-  * similarity predicates into LSH joins"): an inner/cross join whose
-  * condition demands `graft_cosine(a, b) >= θ` is a quadratic
-  * all-pairs comparison; with the rewrite enabled, the rule conjoins
+/** Opt-in LSH similarity-join rewrite (SURVEY §7.3: "Rule[LogicalPlan]
+  * to rewrite similarity predicates into LSH joins"): an inner/cross
+  * join whose condition demands `graft_cosine(a, b) >= θ` is a
+  * quadratic all-pairs comparison; [[LshJoinRewrite.rewrite]] conjoins
   * `graft_srp_bucket(a, bits) = graft_srp_bucket(b, bits)` — Catalyst
   * then extracts the equality as a hash-join key, so candidates meet
   * only inside SRP-LSH buckets (shuffle-by-bucket) and the exact
@@ -19,15 +19,27 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * APPROXIMATE BY DESIGN, hence opt-in: near-threshold pairs that land
   * in different buckets are lost (collision probability for angle φ is
   * (1−φ/π)^bits — at θ ≥ 0.99, 8-bit recall ≈ 0.95; raise recall by
-  * lowering `spark.graft.lsh.bits` or unioning rotated bucketings).
+  * lowering the bits or unioning rotated bucketings).
+  *
+  * Two ways in:
+  *  - a DataFrame caller rewrites its own plan —
+  *    `LshJoinRewrite.rewrite(df.queryExecution.analyzed, bits)` —
+  *    and touches no session state (graft.queries.SimQueries
+  *    .simPairsRewrite);
+  *  - SQL users enable this rule for the session:
   *
   *   spark.conf.set("spark.graft.lsh.rewrite", "true")
   *   spark.conf.set("spark.graft.lsh.bits", "8")      // optional
   *
-  * Injected by graft.sql.GraftExtensions (or add to
-  * `extraOptimizations` on an existing session).
+  * Installed by graft.sql.GraftExtensions (see its install contract).
   */
 case class LshJoinRewrite() extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (!conf.getConfString("spark.graft.lsh.rewrite", "false").toBoolean) plan
+    else LshJoinRewrite.rewrite(plan, conf.getConfString("spark.graft.lsh.bits", "8").toInt)
+}
+
+object LshJoinRewrite {
 
   private def hasSrp(e: Expression): Boolean =
     e.exists(_.isInstanceOf[SrpBucketExpr])
@@ -44,9 +56,9 @@ case class LshJoinRewrite() extends Rule[LogicalPlan] {
     case LessThan(Literal(_, _), c: CosineExpr) => c
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.lsh.rewrite", "false").toBoolean) return plan
-    val bits = conf.getConfString("spark.graft.lsh.bits", "8").toInt
+  /** `plan` with `bits`-bit SRP bucket equality conjoined onto every
+    * inner/cross join that demands a cosine threshold across its sides. */
+  def rewrite(plan: LogicalPlan, bits: Int): LogicalPlan =
     plan.transform {
       case j @ Join(l, r, jt, Some(cond), _)
           if (jt == Inner || jt == Cross) && !hasSrp(cond) =>
@@ -63,5 +75,4 @@ case class LshJoinRewrite() extends Rule[LogicalPlan] {
           case None => j
         }
     }
-  }
 }

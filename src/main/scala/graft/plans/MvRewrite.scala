@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions.{count, lit, max, min, sum}
 import org.apache.spark.sql.types.LongType
 
-/** Materialized-view rewrite: opt-in optimizer rule that answers an
+/** Materialized-view rewrite: optimizer rule that answers an
   * aggregate over a BASE table from a registered roll-up summary of
   * that table instead of re-scanning it.
   *
@@ -61,20 +61,20 @@ import org.apache.spark.sql.types.LongType
   * the base table directly, so the hash proves the MV answer equals
   * the ground truth.
   *
-  *   spark.conf.set("spark.graft.mv.rewrite", "true")
-  *   MvCatalog.register("orders_by_status_year", ordersDf,
+  * Opting in is registering a view; unregistering it opts out:
+  *
+  *   val view = MvCatalog.register("orders_by_status_year", ordersDf,
   *     keys = Seq(col("o_orderstatus"), year(col("o_orderdate"))),
   *     measures = Seq(col("o_totalprice")))
+  *   try ... finally MvCatalog.unregister(view)
   *
-  * Injected by graft.sql.GraftExtensions (or appended to
-  * `spark.experimental.extraOptimizations`), inert unless the conf is
-  * set AND a view is registered.
+  * Installed by graft.sql.GraftExtensions (see its install contract),
+  * inert while no view is registered.
   */
 case class MvRewrite() extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.mv.rewrite", "false").toBoolean ||
-        MvCatalog.isEmpty) return plan
+    if (MvCatalog.isEmpty) return plan
     plan.transform {
       case agg: Aggregate => tryRewrite(agg).getOrElse(agg)
     }
@@ -241,8 +241,8 @@ private object MvPredicates
   * eagerly via `localCheckpoint` (lineage truncated — the rewritten
   * plan provably contains no base-table scan), and record the
   * canonicalized key/measure/join-condition expressions for structural
-  * matching. Register BEFORE enabling the conf: the build itself must
-  * aggregate the base. */
+  * matching. A view becomes visible only after its build materialized,
+  * so it never answers its own build. */
 object MvCatalog {
 
   /** Identity of a view's base: catalog anchoring by parquet root
@@ -257,7 +257,8 @@ object MvCatalog {
   case class MvDef(
       name: String,
       src: MvSrc,
-      plan: LogicalPlan,
+      /** the materialized summary; `plan` is its analyzed form */
+      summary: DataFrame,
       keys: Map[Expression, Attribute],
       cnt: Attribute,
       sums: Map[Expression, Attribute],
@@ -265,13 +266,26 @@ object MvCatalog {
       maxs: Map[Expression, Attribute],
       /** canons of join-equality operands: isnotnull filters on these
         * are implied by the view's inner join and safely dropped. */
-      nullGuarded: Set[Expression])
+      nullGuarded: Set[Expression]) {
+    def plan: LogicalPlan = summary.queryExecution.analyzed
+  }
 
-  private val views = mutable.ArrayBuffer.empty[MvDef]
+  /** Registered views with the thread that registered each. */
+  private val views = mutable.ArrayBuffer.empty[(Thread, MvDef)]
 
   def isEmpty: Boolean = synchronized(views.isEmpty)
-  def clear(): Unit = synchronized(views.clear())
-  def find(src: MvSrc): Option[MvDef] = synchronized(views.find(_.src == src))
+
+  /** The view over `src`, preferring one the calling thread registered:
+    * a view's summary is released with its registering query's caches,
+    * so a query that brought its own view reads only that one. */
+  def find(src: MvSrc): Option[MvDef] = synchronized {
+    val matching = views.filter(_._2.src == src)
+    matching.find(_._1 eq Thread.currentThread()).orElse(matching.headOption).map(_._2)
+  }
+
+  /** Remove one view returned by [[register]] / [[registerJoin]]; other
+    * views, whoever registered them, stay. */
+  def unregister(mv: MvDef): Unit = synchronized(views.filterInPlace(_._2 ne mv))
 
   def rootPaths(rel: LogicalRelation): Set[String] = rel.relation match {
     case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).toSet
@@ -341,9 +355,9 @@ object MvCatalog {
   }
 
   /** Build + register an aggregate MV over a RAW table read. Returns
-    * the materialized summary (for inspection / reuse). */
+    * the stored view (its `summary` is the materialized relation). */
   def register(name: String, base: DataFrame, keys: Seq[Column],
-               measures: Seq[Column]): DataFrame =
+               measures: Seq[Column]): MvDef =
     buildAndStore(name, base, keys, measures, expectJoin = false)
 
   /** Build + register an aggregate MV over `left INNER JOIN right ON
@@ -352,11 +366,11 @@ object MvCatalog {
     * orientation) and aggregate over view keys/measures are answered
     * from the summary without scanning either table. */
   def registerJoin(name: String, left: DataFrame, right: DataFrame, cond: Column,
-                   keys: Seq[Column], measures: Seq[Column]): DataFrame =
+                   keys: Seq[Column], measures: Seq[Column]): MvDef =
     buildAndStore(name, left.join(right, cond), keys, measures, expectJoin = true)
 
   private def buildAndStore(name: String, base: DataFrame, keys: Seq[Column],
-                            measures: Seq[Column], expectJoin: Boolean): DataFrame = {
+                            measures: Seq[Column], expectJoin: Boolean): MvDef = {
     val keyCols = keys.zipWithIndex.map { case (c, i) => c.as(s"mv_k$i") }
     val aggCols = count(lit(1)).as("mv_cnt") +:
       measures.zipWithIndex.flatMap { case (c, i) =>
@@ -403,21 +417,21 @@ object MvCatalog {
       }.getOrElse(throw new IllegalStateException(s"MV '$name': missing $aliasName"))
     val measureCanon = measures.indices.map(i => canon(aggChild(s"mv_sum_$i")))
 
-    // checkpoint blocks are query-scoped like every other persist
+    // checkpoint blocks are query-scoped like every other persist; the
+    // view is stored only after they exist
     val mat = graft.core.QueryCaches.checkpoint(aggDf)
-    val matPlan = mat.queryExecution.analyzed
-    val byName = matPlan.output.map(a => a.name -> a).toMap
+    val byName = mat.queryExecution.analyzed.output.map(a => a.name -> a).toMap
     val mvDef = MvDef(
       name = name,
       src = src,
-      plan = matPlan,
+      summary = mat,
       keys = keyCanon.zipWithIndex.map { case (k, i) => k -> byName(s"mv_k$i") }.toMap,
       cnt = byName("mv_cnt"),
       sums = measureCanon.zipWithIndex.map { case (m, i) => m -> byName(s"mv_sum_$i") }.toMap,
       mins = measureCanon.zipWithIndex.map { case (m, i) => m -> byName(s"mv_min_$i") }.toMap,
       maxs = measureCanon.zipWithIndex.map { case (m, i) => m -> byName(s"mv_max_$i") }.toMap,
       nullGuarded = nullGuarded)
-    synchronized { views += mvDef }
-    mat
+    synchronized { views += (Thread.currentThread() -> mvDef) }
+    mvDef
   }
 }

@@ -328,7 +328,7 @@ object MultimodalQueries {
     * This is [[mmFrames]]'s sampling math exposed to SQL, emitting ALL
     * n frames. */
   def mmFramesSql(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
+    graft.sql.GraftExtensions.setup(spark)
     bin(spark, sfDir).createOrReplaceTempView("graft_media_fsql")
     spark.sql(
       """SELECT doc_id, CAST(f.frame_idx AS BIGINT) AS frame_idx,

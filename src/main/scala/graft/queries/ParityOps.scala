@@ -74,7 +74,7 @@ object ParityOps {
     * Generate node expands in-partition on the scan side: zero shuffle,
     * the shape that streams at 100 TB. */
   def opFlatMapSql(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.sql.GraftFunctions.register(spark)
+    graft.sql.GraftExtensions.setup(spark)
     Tables.load(spark, sfDir, "documents").select("doc_id", "text")
       .createOrReplaceTempView("graft_docs_fmsql")
     spark.sql(

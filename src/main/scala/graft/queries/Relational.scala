@@ -962,8 +962,8 @@ object Relational {
   /** Query-side materialized-view REWRITE — the consumer complement of
     * [[qIncrementalMv]]'s maintenance rows. Registers a tiny roll-up of
     * orders (status × priority → count/sum/min/max) with
-    * [[graft.plans.MvCatalog]], enables the opt-in
-    * [[graft.plans.MvRewrite]] optimizer rule, then runs a DIFFERENT
+    * [[graft.plans.MvCatalog]] — which opts this query into the
+    * [[graft.plans.MvRewrite]] optimizer rule — then runs a DIFFERENT
     * aggregate (key-subset grouping + a key filter) spelled against the
     * RAW orders table. The rule must answer it from the ~15-row MV: the
     * body `require`s that the optimized plan contains no base-table
@@ -978,20 +978,15 @@ object Relational {
     * to DuckDB's serial sum — [[Tables.dsum]] contract) and the MV
     * measure is registered under the SAME cast so the canonicalized
     * measure expressions match; min/max are registered on the raw
-    * double (order-independent already). Conf + catalog are
-    * query-scoped: eager `localCheckpoint` under the rule, restore in
-    * `finally` (round-7 session-hygiene idiom). */
+    * double (order-independent already). The view is query-scoped: the
+    * result is checkpointed while it is registered, and only this
+    * query's view is unregistered in `finally`. */
   def qMvRewrite(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MvRewrite()
-    val prev = spark.conf.getOption("spark.graft.mv.rewrite")
+    graft.sql.GraftExtensions.setup(spark)
     val orders = load(spark, sfDir, "orders")
-    graft.plans.MvCatalog.clear()
-    graft.plans.MvCatalog.register("orders_by_status_priority", orders,
+    val view = graft.plans.MvCatalog.register("orders_by_status_priority", orders,
       keys = Seq(col("o_orderstatus"), col("o_orderpriority")),
       measures = Seq(col("o_totalprice").cast(DecimalType(38, 6)), col("o_totalprice")))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
     try {
       val agg = orders
         .filter(col("o_orderpriority") =!= "1-URGENT")
@@ -1006,13 +1001,7 @@ object Relational {
           _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
         "q_mv_rewrite: MvRewrite did not fire — plan still scans the base table")
       graft.core.QueryCaches.checkpoint(agg)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.mv.rewrite", v)
-        case None => spark.conf.unset("spark.graft.mv.rewrite")
-      }
-      graft.plans.MvCatalog.clear()
-    }
+    } finally graft.plans.MvCatalog.unregister(view)
   }
 
   /** Star-schema JOIN-view rewrite — [[qMvRewrite]] extended from one
@@ -1029,20 +1018,16 @@ object Relational {
     * join and dropped during matching. At 100 TB this is the highest-
     * leverage rewrite a star schema has: fact-scan + shuffle-join →
     * broadcast-sized lookup, with [[qIncrementalJoinMv]] as the
-    * maintenance half that keeps the summary fresh. */
+    * maintenance half that keeps the summary fresh. View scoping as in
+    * [[qMvRewrite]]. */
   def qMvRewriteJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MvRewrite()
-    val prev = spark.conf.getOption("spark.graft.mv.rewrite")
+    graft.sql.GraftExtensions.setup(spark)
     val orders = load(spark, sfDir, "orders")
     val customer = load(spark, sfDir, "customer")
-    graft.plans.MvCatalog.clear()
-    graft.plans.MvCatalog.registerJoin("orders_cust_by_nation_status",
+    val view = graft.plans.MvCatalog.registerJoin("orders_cust_by_nation_status",
       orders, customer, col("o_custkey") === col("c_custkey"),
       keys = Seq(col("c_nationkey"), col("o_orderstatus")),
       measures = Seq(col("o_totalprice").cast(DecimalType(38, 6)), col("o_totalprice")))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
     try {
       val agg = orders.join(customer, col("o_custkey") === col("c_custkey"))
         .filter(col("o_orderstatus") =!= "P")
@@ -1056,13 +1041,7 @@ object Relational {
           _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation]),
         "q_mv_rewrite_join: MvRewrite did not fire — plan still scans a base table")
       graft.core.QueryCaches.checkpoint(agg)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.mv.rewrite", v)
-        case None => spark.conf.unset("spark.graft.mv.rewrite")
-      }
-      graft.plans.MvCatalog.clear()
-    }
+    } finally graft.plans.MvCatalog.unregister(view)
   }
 
   /** MV candidate ADVISOR — the design-time third of the MV story

@@ -229,7 +229,6 @@ object SimQueries {
   /** The Catalyst rewrite under the oracle gate: the join is DECLARED
     * in its naive quadratic form — `graft_cosine(a, b) >= 0.999` as the
     * ONLY similarity predicate — and [[graft.plans.LshJoinRewrite]]
-    * (injected at runtime, enabled via `spark.graft.lsh.rewrite`)
     * conjoins `graft_srp_bucket(a, 16) = graft_srp_bucket(b, 16)`,
     * which Catalyst extracts as the hash-join key: candidates meet only
     * inside SRP buckets, O(collisions) instead of O(N²) nested-loop
@@ -239,39 +238,18 @@ object SimQueries {
     * cos ≥ 0.999 on this corpus); PlanSpec separately proves the
     * nested-loop → equi-join plan change.
     *
-    * Session hygiene (round-7 advice): the rewrite confs are SCOPED to
-    * this query — prior values are saved, the join executes EAGERLY
-    * under the rule via `localCheckpoint` (the result is the pair set,
-    * bounded; its blocks register with [[graft.core.QueryCaches]] and
-    * the harness frees them after the terminal action), and the confs
-    * are restored in a finally. A shared session that plans an
-    * unrelated cosine join afterwards sees the UN-rewritten plan
-    * unless it opts in itself — the rule stays injected (idiomatic
-    * deployment: `spark.sql.extensions=graft.sql.GraftExtensions`,
-    * always present, conf-gated) but inert. */
+    * The query rewrites its own analyzed plan, so the session's conf
+    * and every other plan in it stay as they were. */
   def simPairsRewrite(spark: SparkSession, sfDir: String): DataFrame = {
-    // CLI mains build plain sessions: inject the rule at runtime (once;
-    // repeat runs must not stack duplicate instances).
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[graft.plans.LshJoinRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshJoinRewrite()
-    val prev = Seq("spark.graft.lsh.rewrite", "spark.graft.lsh.bits")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.graft.lsh.rewrite", "true")
-    spark.conf.set("spark.graft.lsh.bits", "16")
-    try {
-      val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-      val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
-      // checkpointed NOW, while the rule is engaged
-      graft.core.QueryCaches.checkpoint(corpus.as("a").join(corpus.as("b"),
-          SimOps.cosine(col("a.embedding"), col("b.embedding")) >= 0.999 &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-          SimOps.cosine(col("a.embedding"), col("b.embedding")).as("cos")))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
+    val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
+    val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val naive = corpus.as("a").join(corpus.as("b"),
+        SimOps.cosine(col("a.embedding"), col("b.embedding")) >= 0.999 &&
+          col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+        SimOps.cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+    org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
+      graft.plans.LshJoinRewrite.rewrite(naive.queryExecution.analyzed, bits = 16))
   }
 
   /** Symmetric int8 quantization — the standard ANN compression step
@@ -3331,7 +3309,7 @@ object SimQueries {
          |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin,
     // The rewrite rule's contract: the Spark side declares ONLY the
     // cosine predicate; the oracle spells the srp-bucket conjunction the
-    // rule adds (16-bit buckets per spark.graft.lsh.bits).
+    // rule adds (16-bit buckets).
     "sim_pairs_rewrite" ->
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),

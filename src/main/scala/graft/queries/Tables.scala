@@ -26,10 +26,10 @@ object Tables {
     * ids change join/group cardinalities, so results are NOT the
     * declared query results — never set it for an oracle or reported
     * bench run ([[graft.Bench]] refuses to write bench_result.json
-    * under it). Unset (the driver's contract), this is byte-identical
-    * to a plain parquet read. */
+    * under it, [[graft.Verify]] refuses to start). Unset, this is
+    * byte-identical to a plain parquet read. */
   def scaleProbe(df: DataFrame): DataFrame =
-    sys.env.get("SPARK_GRAFT_BENCH_SCALE").map(_.trim.toInt).filter(_ >= 2) match {
+    graft.Harness.knobs.benchScale.filter(_ >= 2) match {
       case Some(n) =>
         df.withColumn("_graft_scale_rep", explode(sequence(lit(1), lit(n))))
           .drop("_graft_scale_rep")

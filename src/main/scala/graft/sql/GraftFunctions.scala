@@ -6,17 +6,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** SQL-visible registration of every graft native function (SURVEY
   * §7.1 `sql/` layer): users on the pure-SQL path (`spark.sql`, JDBC,
   * notebooks) get the same single-pass kernels as the DataFrame DSL —
   * `SELECT graft_minhash_sig(fps, 64) FROM ...`.
   *
-  * Two entry points:
-  *   - [[GraftExtensions]] for `spark.sql.extensions=graft.sql.GraftExtensions`
-  *     (cluster-wide, injected at session build — the idiomatic path);
-  *   - [[GraftFunctions.register]] for an already-built session (used
-  *     by the CLI mains and tests).
+  * Installed with the rest of the extension — see [[GraftExtensions]]
+  * for the install contract.
   *
   * Sketch-size arguments (hash count, bands, bits…) must be integer
   * literals — they parameterize plan-time expression construction, not
@@ -142,11 +141,11 @@ object GraftFunctions {
       "graft_explode_bigrams(text) - UDTF: one row per adjacent token pair (pos, w1, w2)",
       es => graft.functions.ExplodeBigramsExpr(es.head)))
 
-  private def info(name: String, usage: String) =
+  private[sql] def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf")
 
   /** Register (or refresh) every graft function on a live session. */
-  def register(spark: SparkSession): Unit = {
+  private[sql] def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, usage, b) =>
       reg.registerFunction(FunctionIdentifier(name), info(name, usage), b)
@@ -154,18 +153,47 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions=graft.sql.GraftExtensions` injection point:
-  * the SQL function surface plus the opt-in LSH similarity-join
-  * rewrite ([[graft.plans.LshJoinRewrite]]). */
+/** The graft extension: every SQL function of [[GraftFunctions]], the
+  * optimizer rules [[graft.plans.LshJoinRewrite]],
+  * [[graft.plans.IntervalJoinRewrite]] and [[graft.plans.MvRewrite]],
+  * and the planner strategy [[graft.plans.AsOfJoinStrategy]].
+  *
+  * Install contract — the one way anything graft provides reaches a
+  * session:
+  *  - built in: `spark.sql.extensions=graft.sql.GraftExtensions` when
+  *    the session is built ([[graft.Harness.session]] does this);
+  *  - [[GraftExtensions.setup]] for a session built without it. Library
+  *    code that needs any of these calls `setup` on its session; it is
+  *    idempotent.
+  *
+  * Installed rules are inert until a caller opts in: the LSH and
+  * interval rewrites on their confs, the MV rewrite on a registered
+  * view; the strategy matches only graft's own plan node.
+  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, usage, b) =>
-      ext.injectFunction((FunctionIdentifier(name),
-        new ExpressionInfo("graft", null, name, usage, "", "", "", "", "4.0.0", "", "scala_udf"), b))
+      ext.injectFunction((FunctionIdentifier(name), GraftFunctions.info(name, usage), b))
     }
-    ext.injectOptimizerRule(_ => graft.plans.LshJoinRewrite())
-    ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite())
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite())
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+  }
+}
+
+object GraftExtensions {
+  private def rules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.LshJoinRewrite(),
+    graft.plans.IntervalJoinRewrite(), graft.plans.MvRewrite())
+
+  /** Install the extension on a session built without it. Idempotent: a
+    * session built with the extension, or already set up, is left as it
+    * is, and no rule is ever added twice. */
+  def setup(spark: SparkSession): Unit = synchronized {
+    val strategy = graft.plans.AsOfJoinStrategy
+    if (!spark.sessionState.planner.strategies.contains(strategy)) {
+      GraftFunctions.register(spark)
+      val present = spark.experimental.extraOptimizations.map(_.getClass).toSet
+      spark.experimental.extraOptimizations ++= rules.filterNot(r => present(r.getClass))
+      spark.experimental.extraStrategies :+= strategy
+    }
   }
 }

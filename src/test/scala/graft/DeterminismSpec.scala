@@ -162,15 +162,8 @@ class DeterminismSpec extends AnyFunSuite {
   private def run(name: String, parts: Int): Seq[String] = {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
-      val rows = SparkEntry.queries(name)(spark, sf).collect()
-        .map(_.toString).sorted.toSeq
-      rows
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", before)
-      graft.ext.DedupOps.releaseCaches()
-      spark.conf.set("spark.graft.lsh.rewrite", "false")
-    }
+    try Harness.run(spark, name, sf)(_.collect().map(_.toString).sorted.toSeq)
+    finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
   test("pillar queries produce identical row multisets at 5 vs 16 shuffle partitions") {

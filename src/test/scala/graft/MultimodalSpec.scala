@@ -65,7 +65,6 @@ class MultimodalSpec extends AnyFunSuite {
       assert(th(i.toLong) == expect, s"media $i")
     }
     // the native column expression computes the same resample from SQL
-    graft.sql.GraftFunctions.register(spark)
     val px = MultimodalOps.decodeToPixels(corpus(10))
     px.createOrReplaceTempView("resize_px")
     val viaSql = spark.sql(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.plans.{MvCatalog, MvRewrite}
+import graft.plans.MvCatalog
 
 /** Contract tests for the materialized-view rewrite
   * ([[graft.plans.MvRewrite]]): EXACT-or-absent. Every "fires" case
@@ -25,24 +25,26 @@ class MvRewriteSpec extends AnyFunSuite {
   private def scansBase(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.exists(_.isInstanceOf[LogicalRelation])
 
-  /** Run `q` twice — rewrite on (after registering the standard view)
-    * and rewrite off — and return (onPlanScansBase, equal). */
-  private def withMv[A](body: => A): A = {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite()
-    MvCatalog.clear()
-    MvCatalog.register("t_orders_mv", orders,
-      keys = Seq(col("o_orderstatus"), col("o_orderpriority")),
-      measures = Seq(col("o_totalprice").cast(DecimalType(38, 6)), col("o_totalprice")))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
+  // the view the running test registered, and how to register it again
+  private var view: MvCatalog.MvDef = _
+  private var registerView: () => MvCatalog.MvDef = _
+
+  /** Run `body` with the view `register` builds registered — the
+    * session's installed rule is on exactly while a view is. */
+  private def withView[A](register: => MvCatalog.MvDef)(body: => A): A = {
+    registerView = () => register
+    view = registerView()
     try body
     finally {
-      spark.conf.unset("spark.graft.mv.rewrite")
-      MvCatalog.clear()
+      MvCatalog.unregister(view)
       graft.core.QueryCaches.release()
     }
   }
+
+  private def withMv[A](body: => A): A =
+    withView(MvCatalog.register("t_orders_mv", orders,
+      keys = Seq(col("o_orderstatus"), col("o_orderpriority")),
+      measures = Seq(col("o_totalprice").cast(DecimalType(38, 6)), col("o_totalprice"))))(body)
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -51,11 +53,12 @@ class MvRewriteSpec extends AnyFunSuite {
     val on = build
     assert(!scansBase(on), s"rewrite should fire:\n${on.queryExecution.optimizedPlan}")
     val onRows = sortedRows(on)
-    spark.conf.set("spark.graft.mv.rewrite", "false")
+    // control run: the same query planned with the view unregistered
+    MvCatalog.unregister(view)
     val off = build
     assert(scansBase(off), "control run must scan the base table")
     val offRows = sortedRows(off)
-    spark.conf.set("spark.graft.mv.rewrite", "true")
+    view = registerView()
     assert(onRows == offRows, s"MV answer diverged:\nMV : $onRows\nRAW: $offRows")
   }
 
@@ -129,17 +132,11 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("join view: fires on either orientation, absent on a different condition") {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[MvRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite()
     val customer = spark.read.parquet(s"$sf/customer.parquet")
-    MvCatalog.clear()
-    MvCatalog.registerJoin("t_orders_cust_mv", orders, customer,
+    withView(MvCatalog.registerJoin("t_orders_cust_mv", orders, customer,
       col("o_custkey") === col("c_custkey"),
       keys = Seq(col("c_nationkey"), col("o_orderstatus")),
-      measures = Seq(col("o_totalprice").cast(DecimalType(38, 6))))
-    spark.conf.set("spark.graft.mv.rewrite", "true")
-    try {
+      measures = Seq(col("o_totalprice").cast(DecimalType(38, 6))))) {
       def q(fact: DataFrame, dim: DataFrame) =
         fact.join(dim, col("o_custkey") === col("c_custkey"))
           .filter(col("o_orderstatus") === "F")
@@ -161,10 +158,27 @@ class MvRewriteSpec extends AnyFunSuite {
         .filter(col("c_acctbal") > 0)
         .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n"))
       assert(scansBase(nonKey))
-    } finally {
-      spark.conf.unset("spark.graft.mv.rewrite")
-      MvCatalog.clear()
-      graft.core.QueryCaches.release()
+    }
+  }
+
+  test("two threads' views over one table: each thread's queries find its own view") {
+    withMv {
+      val mine = view
+      @volatile var theirs: Option[MvCatalog.MvDef] = None
+      @volatile var foundThere: Option[MvCatalog.MvDef] = None
+      val other = new Thread(() => {
+        val v = MvCatalog.register("t_orders_mv_2", orders,
+          keys = Seq(col("o_orderstatus")), measures = Seq(col("o_totalprice")))
+        theirs = Some(v)
+        foundThere = MvCatalog.find(v.src)
+        MvCatalog.unregister(v)
+        graft.core.QueryCaches.release()
+      })
+      other.start()
+      other.join()
+      assert(theirs.isDefined && theirs.get.src == mine.src)
+      assert(foundThere.exists(_ eq theirs.get), "the registering thread must find its own view")
+      assert(MvCatalog.find(mine.src).exists(_ eq mine), "unregister must leave the other view")
     }
   }
 

@@ -318,7 +318,6 @@ class PlanSpec extends AnyFunSuite {
     val before = pairs.queryExecution.executedPlan.toString
     assert(before.contains("BroadcastNestedLoopJoin") || before.contains("CartesianProduct"), before)
 
-    spark.experimental.extraOptimizations = Seq(graft.plans.LshJoinRewrite())
     spark.conf.set("spark.graft.lsh.rewrite", "true")
     try {
       val after = pairs.queryExecution.executedPlan.toString
@@ -329,7 +328,6 @@ class PlanSpec extends AnyFunSuite {
       assert(got == (0L until n).map(i => (i, i + 1000000L)), s"got ${got.take(5)}...")
     } finally {
       spark.conf.set("spark.graft.lsh.rewrite", "false")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -348,7 +346,6 @@ class PlanSpec extends AnyFunSuite {
       .select(col("ida"), col("idb"))
     val before = pairs.queryExecution.executedPlan.toString
     assert(before.contains("BroadcastNestedLoopJoin") || before.contains("CartesianProduct"), before)
-    spark.experimental.extraOptimizations = Seq(graft.plans.LshJoinRewrite())
     spark.conf.set("spark.graft.lsh.rewrite", "true")
     try {
       val after = pairs.queryExecution.executedPlan.toString
@@ -356,7 +353,6 @@ class PlanSpec extends AnyFunSuite {
         s"flipped spelling must also rewrite to an equi-join:\n$after")
     } finally {
       spark.conf.set("spark.graft.lsh.rewrite", "false")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -376,7 +372,6 @@ class PlanSpec extends AnyFunSuite {
     assert(before.contains("BroadcastNestedLoopJoin") || before.contains("CartesianProduct"),
       s"the naive containment join must be a nested loop:\n$before")
     val expected = joined.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    spark.experimental.extraOptimizations = Seq(graft.plans.IntervalJoinRewrite())
     spark.conf.set("spark.graft.interval.rewrite", "true")
     spark.conf.set("spark.graft.interval.bucket", "3600000000")
     try {
@@ -390,7 +385,6 @@ class PlanSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.interval.rewrite")
       spark.conf.unset("spark.graft.interval.bucket")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -401,7 +395,6 @@ class PlanSpec extends AnyFunSuite {
     val iv = ev.groupBy(col("user_id").as("iv_user"))
       .agg(min(col("tus")).as("lo"), max(col("tus")).as("hi"))
     val pts = ev.select(col("user_id").as("pt_user"), col("tus"))
-    spark.experimental.extraOptimizations = Seq(graft.plans.IntervalJoinRewrite())
     spark.conf.set("spark.graft.interval.rewrite", "true")
     try {
       val keyed = pts.join(iv,
@@ -412,7 +405,6 @@ class PlanSpec extends AnyFunSuite {
         s"an equi-keyed range join needs no bucketing — rule must skip:\n$keyed")
     } finally {
       spark.conf.unset("spark.graft.interval.rewrite")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 
@@ -1931,7 +1923,6 @@ class PlanSpec extends AnyFunSuite {
     val iv = Seq((1L, 100L, 900L), (2L, 5000L, 4000L), (3L, 200L, 200L))
       .toDF("iv_id", "lo", "hi") // iv 2 is reversed — empty under BETWEEN
     val pts = Seq((10L, 150L), (11L, 4500L), (12L, 200L)).toDF("pt_id", "t")
-    spark.experimental.extraOptimizations = Seq(graft.plans.IntervalJoinRewrite())
     spark.conf.set("spark.graft.interval.rewrite", "true")
     spark.conf.set("spark.graft.interval.bucket", "100")
     try {
@@ -1945,7 +1936,6 @@ class PlanSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.interval.rewrite")
       spark.conf.unset("spark.graft.interval.bucket")
-      spark.experimental.extraOptimizations = Nil
     }
   }
 

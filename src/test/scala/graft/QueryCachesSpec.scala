@@ -113,20 +113,45 @@ class QueryCachesSpec extends AnyFunSuite {
     assert((persistedIds -- baseline).isEmpty)
   }
 
-  test("source audit: checkpoints are made only in QueryCaches, and the debug env knob is gone") {
+  /** `file:line: text` of every line under `roots` holding a string
+    * `banned` returns for its file. */
+  private def sourceHits(roots: String*)(banned: java.nio.file.Path => Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
+    val files = roots.flatMap { r =>
+      java.nio.file.Files.walk(java.nio.file.Paths.get(r)).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toList
+    }
     assert(files.nonEmpty)
-    val home = root.resolve("graft/core/QueryCaches.scala")
-    val hits = files.flatMap { f =>
-      val banned = Seq("GRAFT_CC_DEBUG") ++
-        (if (f == home) Nil else Seq("localCheckpoint(", "LogicalRDD"))
+    files.flatMap { f =>
+      val b = banned(f)
       java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if banned.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
+        case (line, i) if b.exists(line.contains) => s"$f:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("source audit: checkpoints are made only in QueryCaches, and the debug env knob is gone") {
+    val home = java.nio.file.Paths.get("src/main/scala/graft/core/QueryCaches.scala")
+    val hits = sourceHits("src/main/scala") { f =>
+      Seq("GRAFT_CC_DEBUG") ++ (if (f == home) Nil else Seq("localCheckpoint(", "LogicalRDD"))
+    }
     assert(hits.isEmpty, s"use QueryCaches.checkpoint/iterate instead:\n${hits.mkString("\n")}")
+  }
+
+  test("source audit: one session builder, one extension install, no session conf in queries, removed knobs gone") {
+    // spelled in pieces so this file does not match itself
+    val builder = "SparkSession" + ".builder"
+    val extra = "experimental" + ".extra"
+    val removed = Seq("spark.graft.mv" + ".rewrite", "SPARK_GRAFT_" + "SHUFFLE",
+      "SPARK_GRAFT_" + "EXTRA", "SPARK_GRAFT_BENCH" + "_ONLY")
+    def is(f: java.nio.file.Path, name: String) = f.getFileName.toString == name
+    val hits = sourceHits("src/main/scala", "src/test/scala") { f =>
+      removed ++
+        (if (is(f, "Harness.scala")) Nil else Seq(builder)) ++
+        (if (is(f, "GraftFunctions.scala")) Nil else Seq(extra)) ++
+        (if (f.toString.contains("graft/queries/")) Seq("conf.set(", "conf.unset(") else Nil)
+    }
+    assert(hits.isEmpty, "build sessions with Harness.session, install graft with " +
+      s"GraftExtensions.setup, and opt queries in on their own plan:\n${hits.mkString("\n")}")
   }
 }

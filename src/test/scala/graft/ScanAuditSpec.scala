@@ -17,7 +17,7 @@ class ScanAuditSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.explainString(FormattedMode)
+    Harness.run(spark, name, sf)(_.queryExecution.explainString(FormattedMode))
 
   private def scanDetails(p: String, key: String): Seq[String] =
     p.linesIterator.filter(_.trim.startsWith(key)).map(_.trim).toSeq
@@ -68,9 +68,6 @@ class ScanAuditSpec extends AnyFunSuite {
         assert(!s.contains("props") || propsAllowed(name),
           s"$name reads the events JSON blob column it never uses:\n$s")
       }
-      graft.core.QueryCaches.release()
-      graft.ext.DedupOps.releaseCaches()
-      spark.conf.set("spark.graft.lsh.rewrite", "false")
     }
   }
 }

@@ -14,7 +14,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("registered SQL functions compute the kernel results") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_fingerprint('spark native engine') AS fp,
         |  graft_minhash_sig(graft_shingle_fps(array('a','b','c','d'), 3), 8) AS mh,
@@ -48,7 +47,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_modal_ngram_count + graft_byte_hist_counts from SQL") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_modal_ngram_count(array('a','b','a','b','a','c'), 2) AS m2,
         |  graft_modal_ngram_count(array('x'), 2) AS short,
@@ -62,7 +60,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_byte_laplacian: second-difference energy, short-blob zero") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_byte_laplacian(encode('aca', 'UTF-8')) AS tent,
         |  graft_byte_laplacian(encode('abc', 'UTF-8')) AS ramp,
@@ -76,7 +73,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_byte_runs: run profile, constant blob, empty blob") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_byte_runs(encode('aabbbbbbbbc', 'UTF-8')) AS mix,
         |  graft_byte_runs(encode('zzzz', 'UTF-8')) AS const,
@@ -91,7 +87,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_log2_millis: equals the length(bin)-1 SQL spelling across binades; edges") {
-    GraftFunctions.register(spark)
     // exhaustive small range + binade edges + large values: the kernel
     // must equal the oracle-side integer spelling everywhere.
     val probes = (1L to 1030L) ++ Seq(1048575L, 1048576L, 1048577L,
@@ -114,7 +109,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_char_entropy_bound: hand-computed bounds, edges, codegen == kernel") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_char_entropy_bound('aaaa') AS uniform,
         |  graft_char_entropy_bound('abcd') AS spread,
@@ -137,7 +131,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_varint_cost: hand-computed byte costs, edges, clustering wins, codegen == kernel") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_varint_cost(array(CAST(0 AS BIGINT))) AS zero,
         |  graft_varint_cost(array(CAST(5 AS BIGINT), 6, 7, 8)) AS seq,
@@ -183,7 +176,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_cdc_chunks: shift resistance, edges, codegen == kernel") {
-    GraftFunctions.register(spark)
     // deterministic APERIODIC pseudo-text via a 64-bit LCG (a linear
     // i·c generator repeats a handful of windows and can miss the cut
     // residue entirely — measured: 208 distinct windows in 5000 chars,
@@ -233,7 +225,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("bloom pair from SQL: scalar-subquery build + probe filters like the exact semi-join") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(1L, 5L, 9L, 400L).toDF("k").createOrReplaceTempView("bloom_small")
     spark.range(0, 500).toDF("id").createOrReplaceTempView("bloom_big")
@@ -247,7 +238,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("SQL path equals DSL path on real data (dedup fingerprints)") {
-    GraftFunctions.register(spark)
     val sf = "/root/testdata/sf0.001"
     spark.read.parquet(s"$sf/documents.parquet").createOrReplaceTempView("docs_v")
     val viaSql = spark.sql(
@@ -279,8 +269,19 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(GraftFunctions.builders.map(_._1).distinct.size == 33)
   }
 
+  test("the shared session is built with the extension: functions resolve without any registration") {
+    val fp = spark.sql("SELECT graft_fingerprint('a') AS fp").head().getLong(0)
+    assert(fp == HashKernels.fingerprint(UTF8String.fromString("a")))
+  }
+
+  test("GraftExtensions.setup is idempotent: twice on the shared session leaves one AsOfJoinStrategy") {
+    def strategies = spark.sessionState.planner.strategies
+    graft.sql.GraftExtensions.setup(spark)
+    graft.sql.GraftExtensions.setup(spark)
+    assert(strategies.count(_ == graft.plans.AsOfJoinStrategy) == 1, strategies)
+  }
+
   test("graft_explode_bigrams: streams token pairs, drops empties, equals the composed spelling") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val docs = Seq((1L, "a b  c"), (2L, "solo"), (3L, ""), (4L, "x y"))
       .toDF("doc_id", "text")
@@ -310,7 +311,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_explode_shingles: a true Generator — 1→N from SQL with child positions") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, "a b c d"), (2L, "x y"), (3L, null.asInstanceOf[String]))
       .toDF("id", "t").createOrReplaceTempView("gen_docs")
@@ -331,7 +331,6 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_explode_frames: binary UDTF slices the blob in-partition") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, "abcdefgh"), (2L, "ab")).toDF("id", "t")
       .selectExpr("id", "encode(t, 'UTF-8') AS bin")

@@ -1912,7 +1912,7 @@ class StreamingSpec extends AnyFunSuite {
       keys = Seq(col("o_orderstatus")),
       measures = Seq(col("o_totalprice").cast(DecimalType(38, 6))))
     val batch =
-      try mv.select(col("mv_k0"),
+      try mv.summary.select(col("mv_k0"),
           col("mv_cnt"),
           (col("mv_sum_0") * 1000000).cast("long"),
           (col("mv_min_0") * 1000000).cast("long"),
@@ -1920,7 +1920,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect()
         .map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
         .toMap
-      finally graft.plans.MvCatalog.clear()
+      finally graft.plans.MvCatalog.unregister(mv)
     val rendered = orders.select(col("o_orderstatus"),
         (col("o_totalprice").cast(DecimalType(38, 6)) * 1000000).cast("long"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq

@@ -125,16 +125,10 @@ class WindowAuditSpec extends AnyFunSuite {
 
   test("no declared query hides an untrimmed single-partition global window") {
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val p = fn(spark, sf).queryExecution.explainString(FormattedMode)
-        val v = violations(name, p)
-        if (v.nonEmpty && !allowlist.contains(name)) bad ++= v
-      } finally {
-        graft.core.QueryCaches.release()
-        graft.ext.DedupOps.releaseCaches()
-        spark.conf.set("spark.graft.lsh.rewrite", "false")
-      }
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val p = Harness.run(spark, name, sf)(_.queryExecution.explainString(FormattedMode))
+      val v = violations(name, p)
+      if (v.nonEmpty && !allowlist.contains(name)) bad ++= v
     }
     assert(bad.isEmpty, "untrimmed global windows (fix or allowlist with " +
       s"a boundedness argument):\n${bad.mkString("\n")}")
@@ -155,16 +149,10 @@ class WindowAuditSpec extends AnyFunSuite {
     // or a refactor dropped the hint) and must be fixed or allowlisted
     // with a boundedness argument.
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val p = fn(spark, sf).queryExecution.explainString(FormattedMode)
-        if (p.contains("CartesianProduct") && !cartesianAllowlist.contains(name))
-          bad += name
-      } finally {
-        graft.core.QueryCaches.release()
-        graft.ext.DedupOps.releaseCaches()
-        spark.conf.set("spark.graft.lsh.rewrite", "false")
-      }
+    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+      val p = Harness.run(spark, name, sf)(_.queryExecution.explainString(FormattedMode))
+      if (p.contains("CartesianProduct") && !cartesianAllowlist.contains(name))
+        bad += name
     }
     assert(bad.isEmpty, s"CartesianProduct in: ${bad.mkString(", ")}")
   }
