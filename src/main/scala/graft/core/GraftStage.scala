@@ -432,12 +432,6 @@ object GraftStage {
     }
   }
 
-  /** Bounded in-flight async window over a partition iterator — the
-    * shared engine of batch [[GraftStage.mapAsync]] and streaming
-    * `GraftStream.mapAsync`. Keeps ≤ n Futures outstanding, drains in
-    * submission order, drops elements whose Future exceeds `t`
-    * (reference task-backend semantics: semaphore-bounded TaskPool +
-    * asyncio.wait_for, task/worker.py:225-255). */
   /** Elements dropped by [[GraftStage.mapAsync]] timeout expiry in THIS
     * JVM — drop-on-timeout must never be silent data loss (round-4
     * advice: the finite default timeout + silent drop could lose
@@ -448,6 +442,12 @@ object GraftStage {
   def asyncDroppedCount: Long = asyncDropped.sum()
   private lazy val asyncLog = org.slf4j.LoggerFactory.getLogger("graft.core.GraftStage")
 
+  /** Bounded in-flight async window over a partition iterator — the
+    * shared engine of batch [[GraftStage.mapAsync]] and streaming
+    * `GraftStream.mapAsync`. Keeps ≤ n Futures outstanding, drains in
+    * submission order, drops elements whose Future exceeds `t`
+    * (reference task-backend semantics: semaphore-bounded TaskPool +
+    * asyncio.wait_for, task/worker.py:225-255). */
   private[graft] def asyncWindowIterator[A, B, C](
       iter: Iterator[A], n: Int, t: Duration,
       submit: A => Future[B], mk: (A, B) => C): Iterator[C] = {

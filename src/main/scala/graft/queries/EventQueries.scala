@@ -23,7 +23,7 @@ import Tables._
   * Sessionization shuffles each user's events once (partitionBy user),
   * which is the minimum for gap-based sessions; at 100 TB the skew
   * risk is a bot user with millions of events — cap per-user events
-  * upstream or sessionize via flatMapGroupsWithState in streaming.
+  * upstream or sessionize with keyed state in streaming.
   * COUNT(DISTINCT) is exact here to match the oracle; the 100 TB
   * variant is approx_count_distinct (HLL sketch, no exact shuffle).
   */
@@ -48,7 +48,8 @@ object EventQueries {
   /** Gap-based sessionization (30-min inactivity): lag to flag session
     * starts, running sum to number sessions, then per-session rollup.
     * The batch oracle for streaming session windows
-    * (flatMapGroupsWithState). Deterministic ordering: (ts, event_id). */
+    * ([[graft.streaming.GraftStream.sessionCounts]]). Deterministic
+    * ordering: (ts, event_id). */
   def eventsSessions(spark: SparkSession, sfDir: String): DataFrame = {
     // µs basis: DuckDB's TIMESTAMP is µs internally, so its TIMESTAMP_NS
     // parquet read truncates sub-µs — match it with `ts div 1000`.

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.core.{GraftErrors, WorkerInfo}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, ForeachWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, EncoderImplicits, ForeachWriter,
+  KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -115,6 +116,12 @@ final class GraftStream[T](val ds: Dataset[T]) {
 
 object GraftStream {
 
+  /** Encoders for the operators' rows, keys and state, with no session
+    * in scope — the derivation `spark.implicits` uses (Spark's own
+    * `StatefulProcessor.implicits` is built the same way). */
+  private object encoders extends EncoderImplicits
+  import encoders._
+
   /** Unbounded rate source (the infinite-generator analog):
     * `rowsPerSecond` IS the maxsize knob — admission is bounded per
     * trigger, downstream pulls, nothing buffers unboundedly. Columns:
@@ -166,6 +173,132 @@ object GraftStream {
     df.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(keyCols.toSeq)
 
+  /** How a [[keyedFold]] key's state ends.
+    *  - [[Kept]]: no timeout; the state lives until the step drops it.
+    *  - [[Idle]]: processing-time TTL, re-armed on every data call
+    *    (`""` = no timeout). A key untouched for `ttl` expires.
+    *  - [[Wake]]: event-time. While `open(state)` (work waiting on the
+    *    watermark) the key wakes at watermark + 1, so it progresses with
+    *    no new rows; once nothing is open, an `idle` event-time TTL
+    *    (`""` = none) from the watermark arms its expiry instead. */
+  private sealed trait Expiry[S]
+  private final case class Kept[S]() extends Expiry[S]
+  private final case class Idle[S](ttl: String) extends Expiry[S]
+  private final case class Wake[S](open: S => Boolean, idle: String = "") extends Expiry[S]
+
+  /** The keyed-state fold under every stateful operator in this file —
+    * the one place that speaks Spark's GroupState protocol, as
+    * [[graft.core.QueryCaches.iterate]] is for batch loops.
+    *
+    * Per key and trigger, `step(key, stored, rows, wm)` gets the key's
+    * stored state (`None` for a new key) and this trigger's rows, and
+    * returns the next state (`None` drops the key) and the rows to emit,
+    * in emission order. `wm` is the event-time watermark (ms) under
+    * [[Wake]] or `watermark = true`, else 0: reading it needs a
+    * watermarked input. A key called because its [[Idle]] TTL or its
+    * [[Wake]] `idle` TTL fired goes to `expired` instead (default: drop
+    * it, emit nothing); a [[Wake]] key woken with open work goes to
+    * `step` with no rows. Timeouts are re-armed only after `step`; the
+    * state `expired` keeps is kept with no timeout. */
+  private def keyedFold[K, V, S: Encoder, O: Encoder](grouped: KeyValueGroupedDataset[K, V],
+      expiry: Expiry[S] = Kept[S](), watermark: Boolean = false,
+      expired: (K, S) => (Option[S], IterableOnce[O]) = (_: K, _: S) => (None, Nil))(
+      step: (K, Option[S], Iterator[V], Long) => (Option[S], IterableOnce[O])): Dataset[O] = {
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val timeout = expiry match {
+      case Idle(ttl) if ttl.nonEmpty => GroupStateTimeout.ProcessingTimeTimeout
+      case Wake(_, _) => GroupStateTimeout.EventTimeTimeout
+      case _ => GroupStateTimeout.NoTimeout
+    }
+    val readWm = watermark || timeout == GroupStateTimeout.EventTimeTimeout
+    grouped.flatMapGroupsWithState(OutputMode.Append, timeout) {
+      (key: K, rows: Iterator[V], state: GroupState[S]) =>
+        val prev = state.getOption
+        val wm = if (readWm) state.getCurrentWatermarkMs() else 0L
+        // an event-time timeout with work open is a wake-up, not an expiry
+        val expiring = state.hasTimedOut && (expiry match {
+          case Wake(open, _) => !open(prev.get)
+          case _ => true
+        })
+        val (next, out) = if (expiring) expired(key, prev.get) else step(key, prev, rows, wm)
+        next match {
+          case None => if (prev.isDefined) state.remove()
+          case Some(s) =>
+            state.update(s)
+            if (!expiring) expiry match {
+              case Idle(ttl) if ttl.nonEmpty => state.setTimeoutDuration(ttl)
+              case Wake(open, idle) =>
+                if (open(s)) state.setTimeoutTimestamp(wm + 1L)
+                else if (idle.nonEmpty) state.setTimeoutTimestamp(math.max(wm, 0L), idle)
+              case _ => ()
+            }
+        }
+        out.iterator
+    }
+  }
+
+  /** The PURE per-bucket transition behind every bucketed pairing
+    * operator here ([[nearDupCandidates]], [[nearDupVerified]],
+    * [[hammingCandidates]], [[gridCandidates]], [[jwLinkage]]; wired
+    * by [[bucketed]]), extracted so eviction/admission/pairing
+    * semantics are provable by direct unit test (StreamingSpec's
+    * bucketStep tests) instead of racing micro-batch scheduling.
+    *
+    * Inputs mirror the fold's two calls exactly: `prev` is the stored
+    * member prefix (`None` = bucket absent or already evicted),
+    * `timedOut` whether the bucket's TTL fired (rows never accompany a
+    * timeout call), `fresh` this micro-batch's arrivals for the bucket;
+    * two members are the same member when their `id`s are equal.
+    * `pair(a, b)` is the operator's verdict on two members: the row to
+    * emit, or None. Returns `(nextState, emitted)`; `nextState = None`
+    * means the bucket is evicted.
+    *
+    * Contract (each clause is a unit test):
+    *  - timeout ⇒ `(None, Nil)`: the bucket is forgotten, nothing emits;
+    *  - a fresh member with `prev = None` re-seeds the bucket and pairs
+    *    with nothing — the documented recall trade for late duplicates;
+    *  - every fresh member pairs against the FULL stored prefix (cross,
+    *    `pair(fresh, stored)`, linear, ≤ maxBucket per element) even
+    *    when over the cap;
+    *  - only members admitted under `maxBucket` pair among themselves
+    *    (intra, `pair(earlier, later)`) and are remembered;
+    *  - members already stored are no-ops. */
+  def bucketStep[M, O](prev: Option[Seq[M]], timedOut: Boolean, fresh: Seq[M],
+      maxBucket: Int)(pair: (M, M) => Option[O], id: M => Any = (m: M) => m)
+      : (Option[Seq[M]], Seq[O]) =
+    if (timedOut) (None, Seq.empty)
+    else {
+      val stored = prev.getOrElse(Seq.empty)
+      val storedIds = stored.map(id).toSet
+      val news = fresh.distinctBy(id).filterNot(m => storedIds(id(m)))
+      // maxBucket must bound the trigger-local work too: N copies
+      // of a template arriving in ONE micro-batch would otherwise
+      // emit ~N²/2 intra pairs before any post-hoc state cap. Only
+      // ADMITTED members (up to the bucket's remaining capacity)
+      // pair among themselves and enter state; every fresh member
+      // still pairs against the stored prefix (cross is linear,
+      // ≤ maxBucket per element — detection against the bucket's
+      // established members continues at any flood size, matching
+      // the pre-cap behavior where overflow members paired but
+      // were not remembered).
+      val admitted = news.take(math.max(0, maxBucket - stored.size))
+      val cross = for { n <- news; p <- stored; o <- pair(n, p) } yield o
+      val intra = admitted.combinations(2).flatMap { case Seq(a, b) => pair(a, b) }.toSeq
+      (Some(stored ++ admitted), cross ++ intra)
+    }
+
+  /** A bucketed pairing operator: [[bucketStep]] folded over each
+    * bucket of `grouped` (members `member(row)`) under the
+    * processing-time TTL `ttl`. */
+  private def bucketed[K, V, M, O: Encoder](grouped: KeyValueGroupedDataset[K, V],
+      maxBucket: Int, ttl: String)(member: V => M)(pair: (M, M) => Option[O], id: M => Any)(
+      implicit members: Encoder[Seq[M]]): Dataset[O] =
+    keyedFold(grouped, Idle(ttl), expired = (_: K, s: Seq[M]) =>
+        bucketStep(Some(s), timedOut = true, Nil, maxBucket)(pair, id)) {
+      (_, prev, rows, _) =>
+        bucketStep(prev, timedOut = false, rows.map(member).toSeq, maxBucket)(pair, id)
+    }
+
   /** Streaming near-duplicate candidates: incoming documents are
     * sketched (shingle fps → MinHash → banded LSH, the same native
     * kernels as batch [[graft.ext.DedupOps.nearDupPairs]]) and each
@@ -206,82 +339,17 @@ object GraftStream {
     * superset; verification needs the fps, which the caller retains) —
     * or use [[nearDupVerified]], which keeps the minhash signature in
     * state and emits estimator-verified pairs in-stream. */
-  /** The PURE per-bucket transition behind [[nearDupCandidates]] — one
-    * keyed-state callback, extracted so eviction/admission/pairing
-    * semantics are provable by direct unit test (StreamingSpec's
-    * bucketStep tests) instead of racing micro-batch scheduling.
-    *
-    * Inputs mirror the engine callback exactly: `prev` is the stored
-    * member prefix (`None` = bucket absent or already evicted),
-    * `timedOut` the engine's `hasTimedOut` flag (rows never accompany
-    * a timeout callback), `freshIds` this micro-batch's arrivals for
-    * the bucket. Returns `(nextState, emittedPairs)`; `nextState =
-    * None` means the bucket is evicted (caller must `state.remove()`).
-    *
-    * Contract (each clause is a unit test):
-    *  - timeout ⇒ `(None, Nil)`: the bucket is forgotten, nothing emits;
-    *  - a fresh id with `prev = None` re-seeds the bucket and pairs with
-    *    nothing — the documented recall trade for late duplicates;
-    *  - every fresh id pairs against the FULL stored prefix (cross,
-    *    linear, ≤ maxBucket per element) even when over the cap;
-    *  - only ids admitted under `maxBucket` pair among themselves
-    *    (intra) and are remembered;
-    *  - pairs are oriented (min, max); ids already stored are no-ops. */
-  def bucketStep(prev: Option[Seq[Long]], timedOut: Boolean,
-      freshIds: Seq[Long], maxBucket: Int): (Option[Seq[Long]], Seq[(Long, Long)]) =
-    if (timedOut) (None, Seq.empty)
-    else {
-      val stored = prev.getOrElse(Seq.empty)
-      val fresh = freshIds.distinct.filterNot(stored.contains)
-      // maxBucket must bound the trigger-local work too: M copies
-      // of a template arriving in ONE micro-batch would otherwise
-      // emit ~M²/2 intra pairs before any post-hoc state cap. Only
-      // ADMITTED members (up to the bucket's remaining capacity)
-      // pair among themselves and enter state; every fresh member
-      // still pairs against the stored prefix (cross is linear,
-      // ≤ maxBucket per element — detection against the bucket's
-      // established members continues at any flood size, matching
-      // the pre-cap behavior where overflow members paired but
-      // were not remembered).
-      val admitted = fresh.take(math.max(0, maxBucket - stored.size))
-      val cross = for { n <- fresh; p <- stored }
-        yield (math.min(n, p), math.max(n, p))
-      val intra = admitted.combinations(2).map { case Seq(a, b) =>
-        (math.min(a, b), math.max(a, b)) }.toSeq
-      (Some(stored ++ admitted), cross ++ intra)
-    }
-
   def nearDupCandidates(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, hashes: Int = 64, bands: Int = 16, maxBucket: Int = 64,
       stateTtl: String = "30 minutes"): Dataset[(Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.ext.{DedupOps, TextOps}
-    val spark = df.sparkSession
-    import spark.implicits._
     val sigs = df.select(col(idCol).cast("long").as("id"),
         posexplode(DedupOps.bandSigs(DedupOps.minhash(
           DedupOps.shingleFps(TextOps.tokens(col(textCol)), k), hashes), bands, hashes / bands))
           .as(Seq("band", "sig")))
       .as[(Long, Int, Long)]
-    val ttl = stateTtl
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    sigs.groupByKey(r => (r._2, r._3))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: (Int, Long), rows: Iterator[(Long, Int, Long)], state: GroupState[Seq[Long]]) =>
-          // All semantics live in the pure bucketStep (unit-tested
-          // directly); this callback only bridges the GroupState API.
-          val (next, out) = bucketStep(state.getOption, state.hasTimedOut,
-            rows.map(_._1).toSeq, maxBucket)
-          next match {
-            case None => state.remove() // cold bucket: evict
-            case Some(members) =>
-              state.update(members)
-              if (ttl.nonEmpty) state.setTimeoutDuration(ttl) // re-arm on every access
-          }
-          out.iterator
-      }
+    bucketed(sigs.groupByKey(r => (r._2, r._3)), maxBucket, stateTtl)(_._1)(
+      (a, b) => Some((math.min(a, b), math.max(a, b))), identity)
   }
 
   /** Streaming near-duplicate VERIFIED pairs: the same bucketed
@@ -306,49 +374,19 @@ object GraftStream {
   def nearDupVerified(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, hashes: Int = 64, bands: Int = 16, threshold: Double = 0.7,
       maxBucket: Int = 64, stateTtl: String = "30 minutes"): Dataset[(Long, Long, Double)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.ext.{DedupOps, TextOps}
-    val spark = df.sparkSession
-    import spark.implicits._
     val sigs = df
       .select(col(idCol).cast("long").as("id"),
         DedupOps.minhash(DedupOps.shingleFps(TextOps.tokens(col(textCol)), k), hashes).as("mh"))
       .select(col("id"), col("mh"),
         posexplode(DedupOps.bandSigs(col("mh"), bands, hashes / bands)).as(Seq("band", "sig")))
       .as[(Long, Seq[Long], Int, Long)]
-    val ttl = stateTtl
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    sigs.groupByKey(r => (r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: (Int, Long), rows: Iterator[(Long, Seq[Long], Int, Long)],
-            state: GroupState[Seq[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(Seq.empty)
-            val prevIds = prev.map(_._1).toSet
-            // Same flood bound as [[nearDupCandidates]] (see the comment
-            // there): intra pairing over ADMITTED members only — each
-            // emitted pair also pays an O(hashes) estimator scan here —
-            // while every fresh member still verifies against the stored
-            // prefix (linear, ≤ maxBucket per element).
-            val fresh = rows.map(r => (r._1, r._2)).toSeq
-              .distinctBy(_._1).filterNot(p => prevIds.contains(p._1))
-            val admitted = fresh.take(math.max(0, maxBucket - prev.size))
-            def est(a: Seq[Long], b: Seq[Long]): Double =
-              a.iterator.zip(b.iterator).count(t => t._1 == t._2).toDouble / hashes
-            val cross = for { (ni, ns) <- fresh; (pi, ps) <- prev }
-              yield (math.min(ni, pi), math.max(ni, pi), est(ns, ps))
-            val intra = admitted.combinations(2).map { case Seq((a, sa), (b, sb)) =>
-              (math.min(a, b), math.max(a, b), est(sa, sb)) }.toSeq
-            state.update(prev ++ admitted)
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl) // re-arm on every access
-            (cross ++ intra).iterator.filter(_._3 >= threshold)
-          }
-      }
+    // each compared pair pays an O(hashes) estimator scan
+    bucketed(sigs.groupByKey(r => (r._3, r._4)), maxBucket, stateTtl)(r => (r._1, r._2))(
+      { (a, b) =>
+        val est = a._2.iterator.zip(b._2.iterator).count(t => t._1 == t._2).toDouble / hashes
+        Option.when(est >= threshold)((math.min(a._1, b._1), math.max(a._1, b._1), est))
+      }, _._1)
   }
 
   /** Streaming twin of the GENERIC banded hamming pairing
@@ -375,9 +413,6 @@ object GraftStream {
       maxBucket: Int = 64, stateTtl: String = "30 minutes"): Dataset[(Long, Long, Long)] = {
     require(bands >= 1 && bits >= bands && bits <= 62,
       s"need 1 <= bands <= bits <= 62, got bits=$bits bands=$bands")
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val width = bits / bands
     val bandKeys = array((0 until bands).map { j =>
       val lo = j * width
@@ -388,38 +423,29 @@ object GraftStream {
       .select(col(idCol).cast("long").as("id"), col(hashCol).cast("long").as("sig"))
       .select(col("id"), col("sig"), posexplode(bandKeys).as(Seq("band", "key")))
       .as[(Long, Long, Int, Long)]
-    val ttl = stateTtl
-    val maxH = maxHamming
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    sigs.groupByKey(r => (r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: (Int, Long), rows: Iterator[(Long, Long, Int, Long)],
-            state: GroupState[Seq[(Long, Long)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(Seq.empty)
-            val prevIds = prev.map(_._1).toSet
-            // Flood bound as in [[nearDupCandidates]]: intra pairing
-            // over ADMITTED members only; fresh members still verify
-            // against the stored prefix (linear, ≤ maxBucket each).
-            val fresh = rows.map(r => (r._1, r._2)).toSeq
-              .distinctBy(_._1).filterNot(p => prevIds.contains(p._1))
-            val admitted = fresh.take(math.max(0, maxBucket - prev.size))
-            def ham(a: Long, b: Long): Long = java.lang.Long.bitCount(a ^ b).toLong
-            val cross = for { (ni, ns) <- fresh; (pi, ps) <- prev }
-              yield (math.min(ni, pi), math.max(ni, pi), ham(ns, ps))
-            val intra = admitted.combinations(2).map { case Seq((a, sa), (b, sb)) =>
-              (math.min(a, b), math.max(a, b), ham(sa, sb)) }.toSeq
-            state.update(prev ++ admitted)
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl) // re-arm on every access
-            (cross ++ intra).iterator.filter(_._3 <= maxH)
-          }
-      }
+    bucketed(sigs.groupByKey(r => (r._3, r._4)), maxBucket, stateTtl)(r => (r._1, r._2))(
+      { (a, b) =>
+        val ham = java.lang.Long.bitCount(a._2 ^ b._2).toLong
+        Option.when(ham <= maxHamming)((math.min(a._1, b._1), math.max(a._1, b._1), ham))
+      }, _._1)
   }
+
+  /** Streaming point-in-region containment — the unbounded twin of
+    * the batch geo_region_join: each arriving point joins the
+    * BROADCAST cell cover on its home cell and pays the exact integer
+    * winding test only for cover candidates
+    * ([[graft.queries.GeoQueries.regionMembership]] verbatim — one
+    * containment definition for both modes). STATELESS (projection +
+    * stream-static broadcast equi-joins), so stream == batch holds at
+    * every prefix regardless of chunking — the geofence/alerting shape:
+    * points flow, the region catalog sits broadcast, membership rows
+    * (region_id, vec_id, px, py) emit per micro-batch. */
+  def regionMembers(df: DataFrame, idCol: String, xCol: String,
+      yCol: String, cell: Long = 200L): DataFrame =
+    graft.queries.GeoQueries.regionMembership(
+      df.select(col(idCol).cast("long").as("vec_id"),
+        col(xCol).cast("long").as("px"), col(yCol).cast("long").as("py")),
+      cell)
 
   /** Streaming spatial radius join — the unbounded twin of
     * [[graft.queries.GeoQueries]] geo_radius_join: each arriving point
@@ -443,30 +469,10 @@ object GraftStream {
     * above is for pairs whose larger-id member is admitted. Emits
     * (id_a, id_b, d2) with d2 the integer squared Euclidean distance
     * ≤ radius². */
-  /** Streaming point-in-region containment — the unbounded twin of
-    * the batch geo_region_join: each arriving point joins the
-    * BROADCAST cell cover on its home cell and pays the exact integer
-    * winding test only for cover candidates
-    * ([[graft.queries.GeoQueries.regionMembership]] verbatim — one
-    * containment definition for both modes). STATELESS (projection +
-    * stream-static broadcast equi-joins), so stream == batch holds at
-    * every prefix regardless of chunking — the geofence/alerting shape:
-    * points flow, the region catalog sits broadcast, membership rows
-    * (region_id, vec_id, px, py) emit per micro-batch. */
-  def regionMembers(df: DataFrame, idCol: String, xCol: String,
-      yCol: String, cell: Long = 200L): DataFrame =
-    graft.queries.GeoQueries.regionMembership(
-      df.select(col(idCol).cast("long").as("vec_id"),
-        col(xCol).cast("long").as("px"), col(yCol).cast("long").as("py")),
-      cell)
-
   def gridCandidates(df: DataFrame, idCol: String, xCol: String, yCol: String,
       radius: Long, maxCell: Int = 64,
       stateTtl: String = "30 minutes"): Dataset[(Long, Long, Long)] = {
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val offs = Seq(-1L, 0L, 1L)
     val entries = df
       .select(col(idCol).cast("long").as("id"),
@@ -479,42 +485,18 @@ object GraftStream {
       .select(col("id"), col("px"), col("py"),
         col("g.gx").as("gx"), col("g.gy").as("gy"), col("g.home").as("home"))
       .as[(Long, Long, Long, Long, Long, Boolean)]
-    val ttl = stateTtl
     val r2 = radius * radius
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    entries.groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: (Long, Long), rows: Iterator[(Long, Long, Long, Long, Long, Boolean)],
-            state: GroupState[Seq[(Long, Long, Long, Boolean)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(Seq.empty)
-            val prevKeys = prev.map(e => (e._1, e._4)).toSet
-            val fresh = rows.map(r => (r._1, r._2, r._3, r._6)).toSeq
-              .distinctBy(e => (e._1, e._4))
-              .filterNot(e => prevKeys.contains((e._1, e._4)))
-            val admitted = fresh.take(math.max(0, maxCell - prev.size))
-            def pair(u: (Long, Long, Long, Boolean),
-                     v: (Long, Long, Long, Boolean)): Option[(Long, Long, Long)] = {
-              if (u._1 == v._1) None
-              else {
-                val (s, l) = if (u._1 < v._1) (u, v) else (v, u)
-                val d2 = (s._2 - l._2) * (s._2 - l._2) + (s._3 - l._3) * (s._3 - l._3)
-                if (l._4 && d2 <= r2) Some((s._1, l._1, d2)) else None
-              }
-            }
-            val cross = for { f <- fresh; p <- prev; e <- pair(f, p) } yield e
-            val intra = admitted.combinations(2)
-              .flatMap { case Seq(a, b) => pair(a, b) }.toSeq
-            state.update(prev ++ admitted)
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl)
-            (cross ++ intra).iterator
-          }
-      }
+    // an entry is (id, px, py, home), one per (id, home) in a cell
+    bucketed(entries.groupByKey(r => (r._4, r._5)), maxCell, stateTtl)(
+      r => (r._1, r._2, r._3, r._6))(
+      { (u, v) =>
+        if (u._1 == v._1) None
+        else {
+          val (s, l) = if (u._1 < v._1) (u, v) else (v, u)
+          val d2 = (s._2 - l._2) * (s._2 - l._2) + (s._3 - l._3) * (s._3 - l._3)
+          if (l._4 && d2 <= r2) Some((s._1, l._1, d2)) else None
+        }
+      }, e => (e._1, e._4))
   }
 
   /** Streaming blocked entity resolution — the unbounded twin of
@@ -533,51 +515,29 @@ object GraftStream {
   def jwLinkage(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.92, mentionLen: Int = 24,
       maxBlock: Int = 64, stateTtl: String = "30 minutes"): Dataset[(Long, Long, Double)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import org.apache.spark.unsafe.types.UTF8String
-    val spark = df.sparkSession
-    import spark.implicits._
     val mentions = df
       .select(col(idCol).cast("long").as("id"),
         substring(col(textCol), 1, mentionLen).as("mention"))
       .select(col("id"), col("mention"),
         split(col("mention"), " ").getItem(0).as("blk"))
       .as[(Long, String, String)]
-    val ttl = stateTtl
-    val thr = threshold
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    def jw(a: String, b: String): Double =
-      graft.functions.HashKernels.jaroWinkler(
-        UTF8String.fromString(a), UTF8String.fromString(b))
-    mentions.groupByKey(_._3)
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (_: String, rows: Iterator[(Long, String, String)],
-            state: GroupState[Seq[(Long, String)]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(Seq.empty)
-            val prevIds = prev.map(_._1).toSet
-            val fresh = rows.map(r => (r._1, r._2)).toSeq
-              .distinctBy(_._1).filterNot(p => prevIds.contains(p._1))
-            val admitted = fresh.take(math.max(0, maxBlock - prev.size))
-            val cross = for { (ni, nm) <- fresh; (pi, pm) <- prev }
-              yield if (ni < pi) (ni, pi, jw(nm, pm)) else (pi, ni, jw(pm, nm))
-            val intra = admitted.combinations(2).map { case Seq((a, ma), (b, mb)) =>
-              if (a < b) (a, b, jw(ma, mb)) else (b, a, jw(mb, ma)) }.toSeq
-            state.update(prev ++ admitted)
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl) // re-arm on every access
-            (cross ++ intra).iterator.filter(_._3 >= thr)
-          }
-      }
+    bucketed(mentions.groupByKey(_._3), maxBlock, stateTtl)(r => (r._1, r._2))(
+      { (a, b) =>
+        val (lo, hi) = if (a._1 < b._1) (a, b) else (b, a)
+        val jw = graft.functions.HashKernels.jaroWinkler(
+          UTF8String.fromString(lo._2), UTF8String.fromString(hi._2))
+        Option.when(jw >= threshold)((lo._1, hi._1, jw))
+      }, _._1)
   }
 
   /** Watermarked session windows (gap-based) — the streaming form of
     * EventQueries.eventsSessions. Spark's native session_window state
-    * machine; keyed state shuffles once per (key, session). */
+    * machine; keyed state shuffles once per (key, session). Boundary:
+    * an event at most `gap` after its key's previous event joins that
+    * session — exactly `gap` later still joins (each event spans
+    * [ts, ts + gap) and touching spans merge) — and any later event
+    * opens a new one (StreamingSpec pins this). */
   def sessionCounts(df: DataFrame, tsCol: String, keyCol: String,
       watermark: String, gap: String): DataFrame =
     df.withWatermark(tsCol, watermark)
@@ -607,9 +567,6 @@ object GraftStream {
     * by the watermark before reaching the operator. */
   def spikeDetect(df: DataFrame, tsCol: String, keyCol: String,
       watermark: String): Dataset[(String, java.sql.Timestamp, Long, Long, Boolean)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val DayMs = 86400000L
     // the WATERMARKED event-time column itself must reach the state
     // operator (EventTimeTimeout rejects a plan whose event-time
@@ -619,40 +576,37 @@ object GraftStream {
     val keyed = df.withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("string").as("k"), col(tsCol).as("et"))
       .as[(String, java.sql.Timestamp)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[(String, java.sql.Timestamp)],
-         state: GroupState[(Map[Long, Long], Seq[(Long, Long)], Long)]) =>
-          val (open0, tail0, closed0) =
-            state.getOption.getOrElse((Map.empty[Long, Long], Seq.empty[(Long, Long)], 0L))
-          // fold this trigger's events into their (possibly new) open days
-          val open = rows.foldLeft(open0) { case (m, (_, ts)) =>
-            val d = math.floorDiv(ts.getTime, DayMs) * DayMs
-            m.updated(d, m.getOrElse(d, 0L) + 1L)
+    // state: (open day → count, ≤7-day closed tail, closed-day count).
+    // The key wakes ONLY while it has open days awaiting closure: the
+    // next watermark advance must re-invoke it even with no new data.
+    // A key with nothing open stays dormant (new data re-invokes it
+    // anyway) — otherwise every key ever seen would time out on every
+    // watermark advance forever, scanning the whole state store per
+    // trigger at high key cardinality.
+    keyedFold(keyed.groupByKey(_._1),
+        Wake[(Map[Long, Long], Seq[(Long, Long)], Long)](_._1.nonEmpty)) {
+      (key, prev, rows, wm) =>
+        val (open0, tail0, closed0) =
+          prev.getOrElse((Map.empty[Long, Long], Seq.empty[(Long, Long)], 0L))
+        // fold this trigger's events into their (possibly new) open days
+        val open = rows.foldLeft(open0) { case (m, (_, ts)) =>
+          val d = math.floorDiv(ts.getTime, DayMs) * DayMs
+          m.updated(d, m.getOrElse(d, 0L) + 1L)
+        }
+        val (closable, stillOpen) = open.partition { case (d, _) => d + DayMs <= wm }
+        var tail = tail0
+        var nClosed = closed0
+        val out = Seq.newBuilder[(String, java.sql.Timestamp, Long, Long, Boolean)]
+        for ((d, n) <- closable.toSeq.sortBy(_._1)) {
+          if (nClosed >= 7) { // tail holds exactly the 7 preceding closed days
+            val trail = tail.map(_._2).sum
+            out += ((key, new java.sql.Timestamp(d), n, trail, n * 7 > trail * 2))
           }
-          val wm = state.getCurrentWatermarkMs()
-          val (closable, stillOpen) = open.partition { case (d, _) => d + DayMs <= wm }
-          var tail = tail0
-          var nClosed = closed0
-          val out = Seq.newBuilder[(String, java.sql.Timestamp, Long, Long, Boolean)]
-          for ((d, n) <- closable.toSeq.sortBy(_._1)) {
-            if (nClosed >= 7) { // tail holds exactly the 7 preceding closed days
-              val trail = tail.map(_._2).sum
-              out += ((key, new java.sql.Timestamp(d), n, trail, n * 7 > trail * 2))
-            }
-            tail = (tail :+ (d, n)).takeRight(7)
-            nClosed += 1
-          }
-          state.update((stillOpen, tail, nClosed))
-          // re-arm ONLY while this key has open days awaiting closure:
-          // the next watermark advance must re-invoke it even with no
-          // new data. A key with nothing open stays dormant (new data
-          // re-invokes it anyway) — otherwise every key ever seen would
-          // time out on every watermark advance forever, scanning the
-          // whole state store per trigger at high key cardinality.
-          if (stillOpen.nonEmpty) state.setTimeoutTimestamp(wm + 1L)
-          out.result().iterator
-      }
+          tail = (tail :+ (d, n)).takeRight(7)
+          nClosed += 1
+        }
+        (Some((stillOpen, tail, nClosed)), out.result())
+    }
   }
 
   /** Streaming incremental trend — the unbounded form of
@@ -670,37 +624,29 @@ object GraftStream {
     * eventsTrend sums over the same days (StreamingSpec parity). */
   def trendUpdates(df: DataFrame, tsCol: String, keyCol: String,
       watermark: String): Dataset[(String, java.sql.Timestamp, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val DayMs = 86400000L
     val keyed = df.withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("string").as("k"), col(tsCol).as("et"))
       .as[(String, java.sql.Timestamp)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[(String, java.sql.Timestamp)],
-         state: GroupState[(Map[Long, Long], (Long, Long, Long, Long, Long))]) =>
-          val (open0, sums0) =
-            state.getOption.getOrElse((Map.empty[Long, Long], (0L, 0L, 0L, 0L, 0L)))
-          val open = rows.foldLeft(open0) { case (m, (_, ts)) =>
-            val d = math.floorDiv(ts.getTime, DayMs) * DayMs
-            m.updated(d, m.getOrElse(d, 0L) + 1L)
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val (closable, stillOpen) = open.partition { case (d, _) => d + DayMs <= wm }
-          var (nD, sx, sy, sxy, sxx) = sums0
-          val out = Seq.newBuilder[(String, java.sql.Timestamp, Long, Long, Long, Long)]
-          for ((d, n) <- closable.toSeq.sortBy(_._1)) {
-            val x = d / DayMs
-            nD += 1; sx += x; sy += n; sxy += x * n; sxx += x * x
-            out += ((key, new java.sql.Timestamp(d), nD, sy,
-              nD * sxy - sx * sy, nD * sxx - sx * sx))
-          }
-          state.update((stillOpen, (nD, sx, sy, sxy, sxx)))
-          if (stillOpen.nonEmpty) state.setTimeoutTimestamp(wm + 1L)
-          out.result().iterator
-      }
+    keyedFold(keyed.groupByKey(_._1),
+        Wake[(Map[Long, Long], (Long, Long, Long, Long, Long))](_._1.nonEmpty)) {
+      (key, prev, rows, wm) =>
+        val (open0, sums0) = prev.getOrElse((Map.empty[Long, Long], (0L, 0L, 0L, 0L, 0L)))
+        val open = rows.foldLeft(open0) { case (m, (_, ts)) =>
+          val d = math.floorDiv(ts.getTime, DayMs) * DayMs
+          m.updated(d, m.getOrElse(d, 0L) + 1L)
+        }
+        val (closable, stillOpen) = open.partition { case (d, _) => d + DayMs <= wm }
+        var (nD, sx, sy, sxy, sxx) = sums0
+        val out = Seq.newBuilder[(String, java.sql.Timestamp, Long, Long, Long, Long)]
+        for ((d, n) <- closable.toSeq.sortBy(_._1)) {
+          val x = d / DayMs
+          nD += 1; sx += x; sy += n; sxy += x * n; sxx += x * x
+          out += ((key, new java.sql.Timestamp(d), nD, sy,
+            nD * sxy - sx * sy, nD * sxx - sx * sx))
+        }
+        (Some((stillOpen, (nD, sx, sy, sxy, sxx))), out.result())
+    }
   }
 
   /** Streaming weekly-cohort tracker — the unbounded feed of the
@@ -726,36 +672,30 @@ object GraftStream {
     * tradeoff; the batch query remains the exact reference. */
   def cohortUpdates(df: DataFrame, tsCol: String, userCol: String,
       watermark: String): Dataset[(Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val WeekMs = 7L * 86400000L
     val keyed = df.withWatermark(tsCol, watermark)
       .select(col(userCol).cast("string").as("u"), col(tsCol).as("et"))
       .as[(String, java.sql.Timestamp)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, java.sql.Timestamp)],
-         state: GroupState[(Long, Set[Long])]) =>
-          val wmWeek = math.floorDiv(state.getCurrentWatermarkMs(), WeekMs)
-          // EXPLICITLY drop rows whose week the watermark has passed:
-          // Spark filters late input to flatMapGroupsWithState only
-          // under EventTimeTimeout (verified in
-          // FlatMapGroupsWithStateExecBase — NoTimeout passes
-          // stragglers through), and the seen-week trim below assumes
-          // such a week can never reappear. Without this filter a
-          // straggler would re-emit an already-counted increment.
-          val weeks = rows.map(r => math.floorDiv(r._2.getTime, WeekMs))
-            .filter(_ >= wmWeek).toSeq
-          val (cohort0, seen0) = state.getOption.getOrElse((Long.MaxValue, Set.empty[Long]))
-          val cohort = math.min(cohort0, if (weeks.isEmpty) Long.MaxValue else weeks.min)
-          val fresh = weeks.distinct.filterNot(seen0)
-          // weeks below the watermark week are unreachable now that
-          // the input filter above enforces it — trim them from state
-          val seen = (seen0 ++ fresh).filter(_ >= wmWeek)
-          state.update((cohort, seen))
-          fresh.sorted.iterator.map(w => (cohort, w - cohort))
-      }
+    keyedFold(keyed.groupByKey(_._1), watermark = true) {
+      (_, prev: Option[(Long, Set[Long])], rows, wm) =>
+        val wmWeek = math.floorDiv(wm, WeekMs)
+        // EXPLICITLY drop rows whose week the watermark has passed:
+        // Spark filters late input to keyed state only under
+        // EventTimeTimeout (verified in
+        // FlatMapGroupsWithStateExecBase — NoTimeout passes
+        // stragglers through), and the seen-week trim below assumes
+        // such a week can never reappear. Without this filter a
+        // straggler would re-emit an already-counted increment.
+        val weeks = rows.map(r => math.floorDiv(r._2.getTime, WeekMs))
+          .filter(_ >= wmWeek).toSeq
+        val (cohort0, seen0) = prev.getOrElse((Long.MaxValue, Set.empty[Long]))
+        val cohort = math.min(cohort0, if (weeks.isEmpty) Long.MaxValue else weeks.min)
+        val fresh = weeks.distinct.filterNot(seen0)
+        // weeks below the watermark week are unreachable now that
+        // the input filter above enforces it — trim them from state
+        val seen = (seen0 ++ fresh).filter(_ >= wmWeek)
+        (Some((cohort, seen)), fresh.sorted.iterator.map(w => (cohort, w - cohort)))
+    }
   }
 
   /** Streaming SCD2 / change-interval tracker — the unbounded feed of
@@ -780,34 +720,27 @@ object GraftStream {
   def scdUpdates(df: DataFrame, tsCol: String, keyCol: String,
       stateCol: String, tieCol: String,
       watermark: String): Dataset[(String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.withWatermark(tsCol, watermark)
       .select(col(keyCol).cast("string").as("k"), col(tsCol).as("et"),
         col(stateCol).cast("long").as("s"), col(tieCol).cast("long").as("tb"))
       .as[(String, java.sql.Timestamp, Long, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[(String, java.sql.Timestamp, Long, Long)],
-         state: GroupState[(Boolean, Long, Seq[(Long, Long, Long)])]) =>
-          val (hasLast0, last0, buf0) =
-            state.getOption.getOrElse((false, 0L, Seq.empty[(Long, Long, Long)]))
-          val wm = state.getCurrentWatermarkMs()
-          // buffer new in-horizon rows; drop late stragglers explicitly
-          val buf = buf0 ++ rows.map(r => (r._2.getTime, r._4, r._3))
-            .filter(_._1 >= wm)
-          val (ripe, open) = buf.partition(_._1 < wm)
-          var (hasLast, last) = (hasLast0, last0)
-          val out = Seq.newBuilder[(String, Long, Long)]
-          for ((ts, _, s) <- ripe.sorted) {
-            if (!hasLast || s != last) out += ((key, ts, s))
-            hasLast = true; last = s
-          }
-          state.update((hasLast, last, open))
-          if (open.nonEmpty) state.setTimeoutTimestamp(wm + 1L)
-          out.result().iterator
-      }
+    // state: (hasLast, last closed state, open buffer of (ts, tie, s))
+    keyedFold(keyed.groupByKey(_._1),
+        Wake[(Boolean, Long, Seq[(Long, Long, Long)])](_._3.nonEmpty)) {
+      (key, prev, rows, wm) =>
+        val (hasLast0, last0, buf0) = prev.getOrElse((false, 0L, Seq.empty[(Long, Long, Long)]))
+        // buffer new in-horizon rows; drop late stragglers explicitly
+        val buf = buf0 ++ rows.map(r => (r._2.getTime, r._4, r._3))
+          .filter(_._1 >= wm)
+        val (ripe, open) = buf.partition(_._1 < wm)
+        var (hasLast, last) = (hasLast0, last0)
+        val out = Seq.newBuilder[(String, Long, Long)]
+        for ((ts, _, s) <- ripe.sorted) {
+          if (!hasLast || s != last) out += ((key, ts, s))
+          hasLast = true; last = s
+        }
+        (Some((hasLast, last, open)), out.result())
+    }
   }
 
   /** Streaming stay-point detection — the unbounded twin of
@@ -829,9 +762,6 @@ object GraftStream {
       tusCol: String, tieCol: String, dxCol: String, dyCol: String,
       xCol: String, yCol: String, watermark: String)
       : Dataset[(Long, Long, Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.withWatermark(etCol, watermark)
       .select(col(userCol).cast("long").as("u"), col(etCol).as("et"),
         col(tusCol).cast("long").as("t"), col(tieCol).cast("long").as("e"),
@@ -840,36 +770,31 @@ object GraftStream {
       .as[(Long, java.sql.Timestamp, Long, Long, Long, Long, Long, Long)]
     // state: (started, open run (runId, start, last, n, sx, sy),
     //         buffer of (tus, tie, dx, dy, x, y))
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long, Long, Long, Long)],
-         state: GroupState[(Boolean, (Long, Long, Long, Long, Long, Long),
-           Seq[(Long, Long, Long, Long, Long, Long)])]) =>
-          val (started0, run0, buf0) = state.getOption.getOrElse(
-            (false, (0L, 0L, 0L, 0L, 0L, 0L), Seq.empty))
-          val wm = state.getCurrentWatermarkMs()
-          val buf = buf0 ++ rows.map(r => (r._3, r._4, r._5, r._6, r._7, r._8))
-            .filter(_._1 / 1000L >= wm) // drop past-horizon stragglers
-          val (ripe, open) = buf.partition(_._1 / 1000L < wm)
-          var started = started0
-          var run = run0
-          val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long, Long)]
-          def close(): Unit = if (started && run._4 >= 3L)
-            out += ((key, run._1, run._4, run._2, run._3 - run._2,
-              1000L * run._5 / run._4, 1000L * run._6 / run._4))
-          for ((tus, _, dx, dy, x, y) <- ripe.sorted) {
-            val small = math.abs(dx) <= 3L && math.abs(dy) <= 3L
-            if (!started || !small) {
-              close()
-              run = (run._1 + 1L, tus, tus, 1L, x, y)
-            } else run = (run._1, run._2, tus, run._4 + 1L,
-              run._5 + x, run._6 + y)
-            started = true
-          }
-          state.update((started, run, open))
-          if (open.nonEmpty) state.setTimeoutTimestamp(wm + 1L)
-          out.result().iterator
-      }
+    keyedFold(keyed.groupByKey(_._1), Wake[(Boolean, (Long, Long, Long, Long, Long, Long),
+        Seq[(Long, Long, Long, Long, Long, Long)])](_._3.nonEmpty)) {
+      (key, prev, rows, wm) =>
+        val (started0, run0, buf0) = prev.getOrElse(
+          (false, (0L, 0L, 0L, 0L, 0L, 0L), Seq.empty))
+        val buf = buf0 ++ rows.map(r => (r._3, r._4, r._5, r._6, r._7, r._8))
+          .filter(_._1 / 1000L >= wm) // drop past-horizon stragglers
+        val (ripe, open) = buf.partition(_._1 / 1000L < wm)
+        var started = started0
+        var run = run0
+        val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long, Long)]
+        def close(): Unit = if (started && run._4 >= 3L)
+          out += ((key, run._1, run._4, run._2, run._3 - run._2,
+            1000L * run._5 / run._4, 1000L * run._6 / run._4))
+        for ((tus, _, dx, dy, x, y) <- ripe.sorted) {
+          val small = math.abs(dx) <= 3L && math.abs(dy) <= 3L
+          if (!started || !small) {
+            close()
+            run = (run._1 + 1L, tus, tus, 1L, x, y)
+          } else run = (run._1, run._2, tus, run._4 + 1L,
+            run._5 + x, run._6 + y)
+          started = true
+        }
+        (Some((started, run, open)), out.result())
+    }
   }
 
   /** Streaming anchor-visit extraction — the unbounded twin of
@@ -902,59 +827,41 @@ object GraftStream {
       tusCol: String, tieCol: String, aidCol: String, watermark: String,
       stateTtl: String = "")
       : Dataset[(Long, Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.withWatermark(etCol, watermark)
       .select(col(userCol).cast("long").as("u"), col(etCol).as("et"),
         col(tusCol).cast("long").as("t"), col(tieCol).cast("long").as("e"),
         col(aidCol).cast("long").as("aid"))
       .as[(Long, java.sql.Timestamp, Long, Long, Long)]
-    val ttl = stateTtl
     // state: (started, open run (runId, start, last, n, aid),
     //         buffer of (tus, tie, aid))
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: Long, rows: Iterator[(Long, java.sql.Timestamp, Long, Long, Long)],
-         state: GroupState[(Boolean, (Long, Long, Long, Long, Long),
-           Seq[(Long, Long, Long)])]) =>
-          val (started0, run0, buf0) = state.getOption.getOrElse(
-            (false, (0L, 0L, 0L, 0L, 0L), Seq.empty))
-          val wm = state.getCurrentWatermarkMs()
-          val fresh = rows.map(r => (r._3, r._4, r._5))
-            .filter(_._1 / 1000L >= wm).toSeq
-          if (ttl.nonEmpty && state.hasTimedOut && buf0.isEmpty && fresh.isEmpty) {
-            // TTL eviction (the only timeout that fires with a drained
-            // buffer): the user went quiet past the horizon — the open
-            // run is over, emit it iff on-network, drop the key.
-            val out =
-              if (started0 && run0._5 >= 0L)
-                Iterator.single((key, run0._1, run0._5, run0._4, run0._2,
-                  run0._3 - run0._2))
-              else Iterator.empty
-            state.remove()
-            out
-          } else {
-            val buf = buf0 ++ fresh
-            val (ripe, open) = buf.partition(_._1 / 1000L < wm)
-            var started = started0
-            var run = run0
-            val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long)]
-            def close(): Unit = if (started && run._5 >= 0L)
-              out += ((key, run._1, run._5, run._4, run._2, run._3 - run._2))
-            for ((tus, _, aid) <- ripe.sorted) {
-              if (!started || aid != run._5) {
-                close()
-                run = (run._1 + 1L, tus, tus, 1L, aid)
-              } else run = (run._1, run._2, tus, run._4 + 1L, aid)
-              started = true
-            }
-            state.update((started, run, open))
-            if (open.nonEmpty) state.setTimeoutTimestamp(wm + 1L)
-            else if (ttl.nonEmpty) state.setTimeoutTimestamp(math.max(wm, 0L), ttl)
-            out.result().iterator
-          }
-      }
+    def closed(key: Long, started: Boolean, run: (Long, Long, Long, Long, Long)) =
+      Option.when(started && run._5 >= 0L)((key, run._1, run._5, run._4, run._2, run._3 - run._2))
+    // TTL eviction (the only timeout that fires with a drained buffer):
+    // the user went quiet past the horizon — the open run is over, emit
+    // it iff on-network, drop the key.
+    keyedFold(keyed.groupByKey(_._1),
+        Wake[(Boolean, (Long, Long, Long, Long, Long), Seq[(Long, Long, Long)])](
+          _._3.nonEmpty, stateTtl),
+        expired = (key: Long,
+            s: (Boolean, (Long, Long, Long, Long, Long), Seq[(Long, Long, Long)])) =>
+          (None, closed(key, s._1, s._2))) {
+      (key, prev, rows, wm) =>
+        val (started0, run0, buf0) = prev.getOrElse(
+          (false, (0L, 0L, 0L, 0L, 0L), Seq.empty))
+        val buf = buf0 ++ rows.map(r => (r._3, r._4, r._5)).filter(_._1 / 1000L >= wm)
+        val (ripe, open) = buf.partition(_._1 / 1000L < wm)
+        var started = started0
+        var run = run0
+        val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Long)]
+        for ((tus, _, aid) <- ripe.sorted) {
+          if (!started || aid != run._5) {
+            out ++= closed(key, started, run)
+            run = (run._1 + 1L, tus, tus, 1L, aid)
+          } else run = (run._1, run._2, tus, run._4 + 1L, aid)
+          started = true
+        }
+        (Some((started, run, open)), out.result())
+    }
   }
 
   /** Streaming KMV distinct sketch — the unbounded feed of
@@ -973,24 +880,15 @@ object GraftStream {
     * bit-exactly. */
   def kmvUpdates(df: DataFrame, keyCol: String, hashCol: String,
       k: Int = 16): Dataset[(String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val estNum = (k - 1) * 1000000007L
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(hashCol).cast("long").as("h")).as[(String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[Seq[Long]]) =>
-          val cur = state.getOption.getOrElse(Seq.empty)
-          val merged = (cur ++ rows.map(_._2)).distinct.sorted.take(k)
-          state.update(merged)
-          if (merged.length == k && merged != cur) {
-            val hk = merged.last
-            Iterator.single((key, hk, estNum / hk))
-          } else Iterator.empty
-      }
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[Seq[Long]], rows, _) =>
+      val cur = prev.getOrElse(Seq.empty)
+      val merged = (cur ++ rows.map(_._2)).distinct.sorted.take(k)
+      (Some(merged),
+        Option.when(merged.length == k && merged != cur)((key, merged.last, estNum / merged.last)))
+    }
   }
 
   /** Streaming strict-order funnel — the real-time twin of
@@ -1008,39 +906,32 @@ object GraftStream {
     * needed and state is three longs per user, bounded forever. */
   def funnelUpdates(df: DataFrame, userCol: String, typeCol: String,
       tsCol: String, windowUs: Long = 86400000000L): Dataset[(Long, Int, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(typeCol).cast("string").as("e"), col(tsCol).cast("long").as("ts"))
       .as[(Long, String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, String, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (t1, t2, t3) = state.getOption.getOrElse((0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-          rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (_, e, ts) =>
-            // 0 is the unset-stage sentinel; a ts of exactly 0 would be
-            // indistinguishable from it — state the contract (epoch-µs
-            // event times are positive) instead of corrupting state
-            require(ts > 0L,
-              s"funnelUpdates: ts must be positive (0 is the unset sentinel) — got $ts")
-            e match {
-              case "view" if t1 == 0L =>
-                t1 = ts; out += ((user, 1, ts))
-              case "click" if t1 != 0L && t2 == 0L &&
-                  ts > t1 && ts <= t1 + windowUs =>
-                t2 = ts; out += ((user, 2, ts))
-              case "purchase" if t2 != 0L && t3 == 0L &&
-                  ts > t2 && ts <= t2 + windowUs =>
-                t3 = ts; out += ((user, 3, ts))
-              case _ => ()
-            }
-          }
-          state.update((t1, t2, t3))
-          out.iterator
+    keyedFold(keyed.groupByKey(_._1)) { (user, prev: Option[(Long, Long, Long)], rows, _) =>
+      var (t1, t2, t3) = prev.getOrElse((0L, 0L, 0L))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
+      rows.toSeq.sortBy(r => (r._3, r._2)).foreach { case (_, e, ts) =>
+        // 0 is the unset-stage sentinel; a ts of exactly 0 would be
+        // indistinguishable from it — state the contract (epoch-µs
+        // event times are positive) instead of corrupting state
+        require(ts > 0L,
+          s"funnelUpdates: ts must be positive (0 is the unset sentinel) — got $ts")
+        e match {
+          case "view" if t1 == 0L =>
+            t1 = ts; out += ((user, 1, ts))
+          case "click" if t1 != 0L && t2 == 0L &&
+              ts > t1 && ts <= t1 + windowUs =>
+            t2 = ts; out += ((user, 2, ts))
+          case "purchase" if t2 != 0L && t3 == 0L &&
+              ts > t2 && ts <= t2 + windowUs =>
+            t3 = ts; out += ((user, 3, ts))
+          case _ => ()
+        }
       }
+      (Some((t1, t2, t3)), out)
+    }
   }
 
   /** Streaming basket-association deltas — the unbounded twin of
@@ -1061,34 +952,27 @@ object GraftStream {
     * (the test keeps NoTimeout; the batch row is the repair path). */
   def liftUpdates(df: DataFrame, userCol: String, dayCol: String,
       typeCol: String): Dataset[(String, String, String)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(dayCol).cast("long").as("d"), col(typeCol).cast("string").as("e"))
       .as[(Long, Long, String)]
-    keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Long, Long), rows: Iterator[(Long, Long, String)],
-         state: GroupState[Seq[String]]) =>
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          state.getOption.foreach(_.foreach(seen.add))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
-          var opened = seen.nonEmpty
-          // sorted fold: deterministic emission order within a trigger
-          rows.toSeq.map(_._3).sorted.foreach { t =>
-            if (!seen.contains(t)) {
-              if (!opened) { out += (("basket", "", "")); opened = true }
-              out += (("type", t, ""))
-              seen.foreach { s =>
-                out += (("pair", if (s < t) s else t, if (s < t) t else s))
-              }
-              seen.add(t)
-            }
+    keyedFold(keyed.groupByKey(r => (r._1, r._2))) { (_, prev: Option[Seq[String]], rows, _) =>
+      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+      prev.foreach(_.foreach(seen.add))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String)]
+      var opened = seen.nonEmpty
+      // sorted fold: deterministic emission order within a trigger
+      rows.toSeq.map(_._3).sorted.foreach { t =>
+        if (!seen.contains(t)) {
+          if (!opened) { out += (("basket", "", "")); opened = true }
+          out += (("type", t, ""))
+          seen.foreach { s =>
+            out += (("pair", if (s < t) s else t, if (s < t) t else s))
           }
-          if (out.nonEmpty) state.update(seen.toSeq)
-          out.iterator
+          seen.add(t)
+        }
       }
+      (Some(seen.toSeq), out)
+    }
   }
 
   /** Streaming inactivity-gap feed — the unbounded producer for
@@ -1106,26 +990,20 @@ object GraftStream {
     * watermark/TTL is required. */
   def gapUpdates(df: DataFrame, keyCol: String, tsCol: String)
       : Dataset[(Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("ts")).as[(Long, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long)], state: GroupState[Long]) =>
-          var last = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-          rows.toSeq.map(_._2).sorted.foreach { ts =>
-            last match {
-              case Some(p) if ts >= p => out += ((key, p, ts - p)); last = Some(ts)
-              case Some(_) => () // regressed across triggers: drop, batch repairs
-              case None => last = Some(ts)
-            }
-          }
-          last.foreach(state.update)
-          out.iterator
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[Long], rows, _) =>
+      var last = prev
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      rows.toSeq.map(_._2).sorted.foreach { ts =>
+        last match {
+          case Some(p) if ts >= p => out += ((key, p, ts - p)); last = Some(ts)
+          case Some(_) => () // regressed across triggers: drop, batch repairs
+          case None => last = Some(ts)
+        }
       }
+      (last, out)
+    }
   }
 
   /** Streaming HyperLogLog fold — the unbounded twin of
@@ -1142,40 +1020,32 @@ object GraftStream {
     * stream length, the mergeable-sketch property as keyed state. */
   def hllUpdates(df: DataFrame, keyCol: String, hashCol: String)
       : Dataset[(String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val M = 64; val W = 24; val SCALE = 25
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(hashCol).cast("long").as("h")).as[(String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[Seq[Long]]) =>
-          val regs = state.getOption.getOrElse(Seq.fill(M)(0L)).toArray
-          var changed = false
-          rows.foreach { case (_, h) =>
-            // contract: h is a non-negative ≤30-bit fingerprint (the
-            // batch twin's is < 1e9+7 < 2^30). Enforce it — a negative
-            // h would index regs(-b) and a wider one breaks the rho
-            // frame; fail with the contract, not an AIOOBE mid-trigger.
-            require(h >= 0L && h < (1L << 30),
-              s"hllUpdates: hash column must be in [0, 2^30) — got $h " +
-                "(use a bounded fingerprint, e.g. the batch twin's (…)%1000000007)")
-            val b = (h % M).toInt
-            val v = h / M
-            val rho =
-              if (v == 0L) (W + 1).toLong
-              else (W + 1).toLong - (64 - java.lang.Long.numberOfLeadingZeros(v))
-            if (rho > regs(b)) { regs(b) = rho; changed = true }
-          }
-          if (changed) {
-            state.update(regs.toSeq)
-            val z = regs.map(r =>
-              if (r == 0L) 1L << SCALE else 1L << (SCALE - r.toInt)).sum
-            Iterator.single((key, z, 97444218012L / z))
-          } else Iterator.empty
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[Seq[Long]], rows, _) =>
+      val regs = prev.getOrElse(Seq.fill(M)(0L)).toArray
+      var changed = false
+      rows.foreach { case (_, h) =>
+        // contract: h is a non-negative ≤30-bit fingerprint (the
+        // batch twin's is < 1e9+7 < 2^30). Enforce it — a negative
+        // h would index regs(-b) and a wider one breaks the rho
+        // frame; fail with the contract, not an AIOOBE mid-trigger.
+        require(h >= 0L && h < (1L << 30),
+          s"hllUpdates: hash column must be in [0, 2^30) — got $h " +
+            "(use a bounded fingerprint, e.g. the batch twin's (…)%1000000007)")
+        val b = (h % M).toInt
+        val v = h / M
+        val rho =
+          if (v == 0L) (W + 1).toLong
+          else (W + 1).toLong - (64 - java.lang.Long.numberOfLeadingZeros(v))
+        if (rho > regs(b)) { regs(b) = rho; changed = true }
       }
+      (Some(regs.toSeq), Option.when(changed) {
+        val z = regs.map(r => if (r == 0L) 1L << SCALE else 1L << (SCALE - r.toInt)).sum
+        (key, z, 97444218012L / z)
+      })
+    }
   }
 
   /** Streaming as-of enrichment — the unbounded twin of
@@ -1197,30 +1067,24 @@ object GraftStream {
     * (Long, Long) per key), so no watermark/TTL is required. */
   def asofUpdates(df: DataFrame, keyCol: String, tsCol: String,
       sideCol: String, valCol: String): Dataset[(Long, Long, Long, Long, Boolean)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("long").as("k"),
       col(tsCol).cast("long").as("ts"), col(sideCol).cast("int").as("side"),
       col(valCol).cast("long").as("v")).as[(Long, Long, Int, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Int, Long)],
-         state: GroupState[(Long, Long)]) =>
-          var ref = state.getOption // (refTs, refVal), None before any reference
-          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Boolean)]
-          // (ts, side) order: references at a probe's exact ts sort first
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, side, v) =>
-            if (side == 0) {
-              if (ref.forall(_._1 <= ts)) ref = Some((ts, v))
-            } else ref match {
-              case Some((rts, rv)) if rts <= ts => out += ((key, ts, rts, rv, true))
-              case _ => out += ((key, ts, 0L, 0L, false))
-            }
-          }
-          ref.foreach(state.update)
-          out.iterator
+    // state: (refTs, refVal); none before any reference
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[(Long, Long)], rows, _) =>
+      var ref = prev
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Boolean)]
+      // (ts, side) order: references at a probe's exact ts sort first
+      rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, ts, side, v) =>
+        if (side == 0) {
+          if (ref.forall(_._1 <= ts)) ref = Some((ts, v))
+        } else ref match {
+          case Some((rts, rv)) if rts <= ts => out += ((key, ts, rts, rv, true))
+          case _ => out += ((key, ts, 0L, 0L, false))
+        }
       }
+      (ref, out)
+    }
   }
 
   /** Streaming CDC upsert fold — the unbounded feed of
@@ -1239,33 +1103,24 @@ object GraftStream {
     * stream length, no timeout to manage. */
   def cdcUpdates(df: DataFrame, keyCol: String, ordCol: String,
       tieCol: String, opCol: String, valCol: String): Dataset[(String, String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(ordCol).cast("long").as("o"), col(tieCol).cast("long").as("t"),
       col(opCol).cast("string").as("op"), col(valCol).cast("long").as("v"))
       .as[(String, Long, Long, String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Long, String, Long)],
-         state: GroupState[(Long, Long, String, Long, Long)]) =>
-          val cur = state.getOption
-          var best = cur.map(s => (s._1, s._2, s._3, s._4))
-          var n = cur.map(_._5).getOrElse(0L)
-          var touched = false
-          for (r <- rows) {
-            n += 1; touched = true
-            val cand = (r._2, r._3, r._4, r._5)
-            if (best.forall(b => cand._1 > b._1 ||
-                (cand._1 == b._1 && cand._2 > b._2)))
-              best = Some(cand)
-          }
-          val b = best.get // rows is non-empty on a data call
-          state.update((b._1, b._2, b._3, b._4, n))
-          if (touched) Iterator.single((key, b._3, b._4, n))
-          else Iterator.empty
-      }
+    keyedFold(keyed.groupByKey(_._1)) {
+      (key, prev: Option[(Long, Long, String, Long, Long)], rows, _) =>
+        var best = prev.map(s => (s._1, s._2, s._3, s._4))
+        var n = prev.map(_._5).getOrElse(0L)
+        for (r <- rows) {
+          n += 1
+          val cand = (r._2, r._3, r._4, r._5)
+          if (best.forall(b => cand._1 > b._1 ||
+              (cand._1 == b._1 && cand._2 > b._2)))
+            best = Some(cand)
+        }
+        val b = best.get // rows is non-empty on a data call
+        (Some((b._1, b._2, b._3, b._4, n)), Iterator.single((key, b._3, b._4, n)))
+    }
   }
 
   /** Streaming 2-D skyline maintenance — the unbounded twin of the
@@ -1284,35 +1139,27 @@ object GraftStream {
     * history. */
   def skylineUpdates(df: DataFrame, keyCol: String, xCol: String,
       yCol: String): Dataset[(String, Long, String)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
       .as[(String, Long, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[Seq[(Long, Long)]]) =>
-          var frontier = state.getOption.getOrElse(Seq.empty)
-          var changed = false
-          for ((_, x, y) <- rows) {
-            val dominated = frontier.exists { case (px, py) =>
-              px >= x && py <= y && (px > x || py < y) }
-            val dup = frontier.contains((x, y))
-            if (!dominated && !dup) {
-              frontier = frontier.filterNot { case (px, py) =>
-                x >= px && y <= py } :+ ((x, y))
-              changed = true
-            }
-          }
-          if (changed) {
-            val sorted = frontier.sortBy(p => (-p._1, p._2))
-            state.update(sorted)
-            Iterator.single((key, sorted.length.toLong,
-              sorted.map(p => s"${p._1}:${p._2}").mkString(";")))
-          } else Iterator.empty
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[Seq[(Long, Long)]], rows, _) =>
+      var frontier = prev.getOrElse(Seq.empty)
+      var changed = false
+      for ((_, x, y) <- rows) {
+        val dominated = frontier.exists { case (px, py) =>
+          px >= x && py <= y && (px > x || py < y) }
+        val dup = frontier.contains((x, y))
+        if (!dominated && !dup) {
+          frontier = frontier.filterNot { case (px, py) =>
+            x >= px && y <= py } :+ ((x, y))
+          changed = true
+        }
       }
+      // the stored frontier is kept sorted, so an unchanged one re-stores as is
+      val sorted = if (changed) frontier.sortBy(p => (-p._1, p._2)) else frontier
+      (Some(sorted), Option.when(changed)((key, sorted.length.toLong,
+        sorted.map(p => s"${p._1}:${p._2}").mkString(";"))))
+    }
   }
 
   /** Streaming drift-histogram fold — the unbounded twin of
@@ -1331,20 +1178,13 @@ object GraftStream {
     * costs the same after a year as after an hour. */
   def driftUpdates(df: DataFrame, bandCol: String,
       sideACol: String): Dataset[(Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(bandCol).cast("long").as("band"),
       col(sideACol).cast("boolean").as("isa")).as[(Long, Boolean)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (band: Long, rows: Iterator[(Long, Boolean)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (a, b, n) = state.getOption.getOrElse((0L, 0L, 0L))
-          rows.foreach { r => if (r._2) a += 1 else b += 1; n += 1 }
-          state.update((a, b, n))
-          Iterator.single((band, a, b, n))
-      }
+    keyedFold(keyed.groupByKey(_._1)) { (band, prev: Option[(Long, Long, Long)], rows, _) =>
+      var (a, b, n) = prev.getOrElse((0L, 0L, 0L))
+      rows.foreach { r => if (r._2) a += 1 else b += 1; n += 1 }
+      (Some((a, b, n)), Iterator.single((band, a, b, n)))
+    }
   }
 
   /** Streaming HEAVY HITTERS — Space-Saving (Metwally et al. 2005) in
@@ -1364,43 +1204,29 @@ object GraftStream {
     * increases so downstream keeps the latest emission per group. */
   def topkUpdates(df: DataFrame, keyCol: String, buckets: Int = 8,
       cap: Int = 16): Dataset[(Long, String, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
+    require(buckets >= 1 && cap >= 1,
+      s"topkUpdates: need buckets >= 1 and cap >= 1, got buckets=$buckets cap=$cap")
     val keyed = df.select(
       pmod(xxhash64(col(keyCol).cast("string")), lit(buckets.toLong)).as("b"),
       col(keyCol).cast("string").as("k")).as[(Long, String)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (bucket: Long, rows: Iterator[(Long, String)],
-         state: GroupState[(Map[String, (Long, Long)], Long)]) =>
-          var (tab, n) = state.getOption.getOrElse((Map.empty[String, (Long, Long)], 0L))
-          rows.foreach { case (_, k) =>
-            n += 1
-            tab.get(k) match {
-              case Some((c, e)) => tab = tab.updated(k, (c + 1, e))
-              case None if tab.size < cap => tab = tab.updated(k, (1L, 0L))
-              case None =>
-                // deterministic evictee: min count, ties by key
-                val (mk, (mc, _)) = tab.minBy { case (kk, (c, _)) => (c, kk) }
-                tab = (tab - mk).updated(k, (mc + 1, mc))
-            }
+    keyedFold(keyed.groupByKey(_._1)) {
+      (bucket, prev: Option[(Map[String, (Long, Long)], Long)], rows, _) =>
+        var (tab, n) = prev.getOrElse((Map.empty[String, (Long, Long)], 0L))
+        rows.foreach { case (_, k) =>
+          n += 1
+          tab.get(k) match {
+            case Some((c, e)) => tab = tab.updated(k, (c + 1, e))
+            case None if tab.size < cap => tab = tab.updated(k, (1L, 0L))
+            case None =>
+              // deterministic evictee: min count, ties by key
+              val (mk, (mc, _)) = tab.minBy { case (kk, (c, _)) => (c, kk) }
+              tab = (tab - mk).updated(k, (mc + 1, mc))
           }
-          state.update((tab, n))
-          tab.iterator.map { case (k, (c, e)) => (bucket, k, c, e, n) }
-      }
+        }
+        (Some((tab, n)), tab.iterator.map { case (k, (c, e)) => (bucket, k, c, e, n) })
+    }
   }
 
-  /** Generic keyed monotone-SUM fold — the primitive underneath
-    * [[driftUpdates]] (two-sided counts) and the streaming twin of any
-    * additive rollup: per key, state is one running Long sum plus an
-    * update counter. Addition is associative and commutative, so NO
-    * watermark is needed and the final emission per key equals the
-    * batch `groupBy(key).sum(val)` bit-exactly under any chunking —
-    * which is how the PAA series sketch of `events_series_sim` streams:
-    * key = "type|segment", value = 1 per event, final sums == the
-    * batch segment vector (StreamingSpec parity). State is 2 longs per
-    * key, bounded by the key domain. */
   /** Streaming trajectory-endpoint tracker — the unbounded twin of
     * [[graft.queries.GeoQueries.geoOdMatrix]]'s per-(user, day)
     * endpoint fold for an always-on OD (origin→destination) matrix.
@@ -1428,41 +1254,26 @@ object GraftStream {
       tusCol: String, tieCol: String, xCol: String, yCol: String,
       stateTtl: String = "")
       : Dataset[(Long, Long, Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(dayCol).cast("long").as("d"), col(tusCol).cast("long").as("t"),
       col(tieCol).cast("long").as("e"), col(xCol).cast("long").as("x"),
       col(yCol).cast("long").as("y")).as[(Long, Long, Long, Long, Long, Long)]
-    val ttl = stateTtl
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    keyed.groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: (Long, Long), rows: Iterator[(Long, Long, Long, Long, Long, Long)],
-         state: GroupState[((Long, Long, Long, Long), (Long, Long, Long, Long), Long)]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            def lt(a: (Long, Long, Long, Long), b: (Long, Long, Long, Long)): Boolean =
-              a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
-            var (mn, mx, n) = state.getOption.getOrElse(
-              ((Long.MaxValue, Long.MaxValue, 0L, 0L),
-                (Long.MinValue, Long.MinValue, 0L, 0L), 0L))
-            rows.foreach { r =>
-              val q = (r._3, r._4, r._5, r._6)
-              if (lt(q, mn)) mn = q
-              if (lt(mx, q)) mx = q
-              n += 1
-            }
-            state.update((mn, mx, n))
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl)
-            Iterator.single((key._1, key._2, mn._3, mn._4, mx._3, mx._4, n))
-          }
-      }
+    def lt(a: (Long, Long, Long, Long), b: (Long, Long, Long, Long)): Boolean =
+      a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+    keyedFold(keyed.groupByKey(r => (r._1, r._2)),
+        Idle[((Long, Long, Long, Long), (Long, Long, Long, Long), Long)](stateTtl)) {
+      (key, prev, rows, _) =>
+        var (mn, mx, n) = prev.getOrElse(
+          ((Long.MaxValue, Long.MaxValue, 0L, 0L),
+            (Long.MinValue, Long.MinValue, 0L, 0L), 0L))
+        rows.foreach { r =>
+          val q = (r._3, r._4, r._5, r._6)
+          if (lt(q, mn)) mn = q
+          if (lt(mx, q)) mx = q
+          n += 1
+        }
+        (Some((mn, mx, n)), Iterator.single((key._1, key._2, mn._3, mn._4, mx._3, mx._4, n)))
+    }
   }
 
   /** Streaming co-traveler discovery — the unbounded twin of
@@ -1497,73 +1308,60 @@ object GraftStream {
   def cotravelUpdates(df: DataFrame, userCol: String, hbCol: String,
       cxCol: String, cyCol: String, cap: Int = 8, stateTtl: String = "")
       : Dataset[(Long, Long, Long, Long, Long, Int)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(hbCol).cast("long").as("hb"), col(cxCol).cast("long").as("cx"),
       col(cyCol).cast("long").as("cy")).as[(Long, Long, Long, Long)]
-    val ttl = stateTtl
-    val timeoutConf =
-      if (ttl.isEmpty) GroupStateTimeout.NoTimeout
-      else GroupStateTimeout.ProcessingTimeTimeout
-    keyed.groupByKey(r => (r._2, r._3, r._4))
-      .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
-        (key: (Long, Long, Long), rows: Iterator[(Long, Long, Long, Long)],
-         state: GroupState[(Boolean, Seq[Long])]) =>
-          if (state.hasTimedOut) {
-            // evict the member set; KEEP the hot tombstone (1 bit) so a
-            // straggler can never re-admit pairs into a bucket that
-            // already retracted. No re-arm: the flag persists; the next
-            // arrival's normal branch re-arms the TTL as usual.
-            val wasHot = state.getOption.exists(_._1)
-            if (wasHot) state.update((true, Seq.empty[Long]))
-            else state.remove()
-            Iterator.empty
-          } else {
-            var (hot, members) = state.getOption.getOrElse((false, Seq.empty[Long]))
-            val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Int)]
-            rows.foreach { r =>
-              val u = r._1
-              if (!hot && !members.contains(u)) {
-                if (members.size + 1 > cap) {
-                  // the bucket turns HOT: retract every emitted pair and
-                  // tombstone — no pair for the tipping user, none later
-                  for (Seq(a, b) <- members.combinations(2))
-                    out += ((key._1, key._2, key._3,
-                      math.min(a, b), math.max(a, b), -1))
-                  hot = true
-                  members = Seq.empty
-                } else {
-                  members.foreach(p => out += ((key._1, key._2, key._3,
-                    math.min(u, p), math.max(u, p), 1)))
-                  members = members :+ u
-                }
-              }
+    // On expiry, evict the member set but KEEP the hot tombstone (1 bit)
+    // so a straggler can never re-admit pairs into a bucket that already
+    // retracted. The flag is kept with no timeout; the next arrival
+    // re-arms the TTL as usual.
+    keyedFold(keyed.groupByKey(r => (r._2, r._3, r._4)), Idle(stateTtl),
+        expired = (_: (Long, Long, Long), s: (Boolean, Seq[Long])) =>
+          (Option.when(s._1)((true, Seq.empty[Long])), Nil)) {
+      (key, prev, rows, _) =>
+        var (hot, members) = prev.getOrElse((false, Seq.empty[Long]))
+        val out = Seq.newBuilder[(Long, Long, Long, Long, Long, Int)]
+        rows.foreach { r =>
+          val u = r._1
+          if (!hot && !members.contains(u)) {
+            if (members.size + 1 > cap) {
+              // the bucket turns HOT: retract every emitted pair and
+              // tombstone — no pair for the tipping user, none later
+              for (Seq(a, b) <- members.combinations(2))
+                out += ((key._1, key._2, key._3,
+                  math.min(a, b), math.max(a, b), -1))
+              hot = true
+              members = Seq.empty
+            } else {
+              members.foreach(p => out += ((key._1, key._2, key._3,
+                math.min(u, p), math.max(u, p), 1)))
+              members = members :+ u
             }
-            state.update((hot, members))
-            if (ttl.nonEmpty) state.setTimeoutDuration(ttl)
-            out.result().iterator
           }
-      }
+        }
+        (Some((hot, members)), out.result())
+    }
   }
 
+  /** Generic keyed monotone-SUM fold — the primitive underneath
+    * [[driftUpdates]] (two-sided counts) and the streaming twin of any
+    * additive rollup: per key, state is one running Long sum plus an
+    * update counter. Addition is associative and commutative, so NO
+    * watermark is needed and the final emission per key equals the
+    * batch `groupBy(key).sum(val)` bit-exactly under any chunking —
+    * which is how the PAA series sketch of `events_series_sim` streams:
+    * key = "type|segment", value = 1 per event, final sums == the
+    * batch segment vector (StreamingSpec parity). State is 2 longs per
+    * key, bounded by the key domain. */
   def sumUpdates(df: DataFrame, keyCol: String,
       valCol: String): Dataset[(String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(valCol).cast("long").as("v")).as[(String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Long)]) =>
-          var (s, n) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { r => s += r._2; n += 1 }
-          state.update((s, n))
-          Iterator.single((key, s, n))
-      }
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[(Long, Long)], rows, _) =>
+      var (s, n) = prev.getOrElse((0L, 0L))
+      rows.foreach { r => s += r._2; n += 1 }
+      (Some((s, n)), Iterator.single((key, s, n)))
+    }
   }
 
   /** Streaming Welch experiment monitor — the unbounded twin of
@@ -1582,20 +1380,13 @@ object GraftStream {
     * accumulator. */
   def welchUpdates(df: DataFrame, userCol: String,
       valCol: String): Dataset[(Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select((col(userCol) % 2).cast("long").as("arm"),
       col(valCol).cast("long").as("m")).as[(Long, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (arm: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var (n, s1, s2) = state.getOption.getOrElse((0L, 0L, 0L))
-          rows.foreach { r => n += 1L; s1 += r._2; s2 += r._2 * r._2 }
-          state.update((n, s1, s2))
-          Iterator.single((arm, n, s1, s2))
-      }
+    keyedFold(keyed.groupByKey(_._1)) { (arm, prev: Option[(Long, Long, Long)], rows, _) =>
+      var (n, s1, s2) = prev.getOrElse((0L, 0L, 0L))
+      rows.foreach { r => n += 1L; s1 += r._2; s2 += r._2 * r._2 }
+      (Some((n, s1, s2)), Iterator.single((arm, n, s1, s2)))
+    }
   }
 
   /** Streaming behavioral-entropy monitor — the unbounded twin of
@@ -1612,25 +1403,18 @@ object GraftStream {
     * count map — bounded by the event-type domain, not the stream. */
   def markovEntropyUpdates(df: DataFrame, srcCol: String,
       dstCol: String): Dataset[(String, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(srcCol).cast("string").as("s"),
       col(dstCol).cast("string").as("d")).as[(String, String)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, String)],
-         state: GroupState[Map[String, Long]]) =>
-          var m = state.getOption.getOrElse(Map.empty[String, Long])
-          rows.foreach { r => m = m.updated(r._2, m.getOrElse(r._2, 0L) + 1L) }
-          state.update(m)
-          val t = m.values.sum
-          val h = m.values.map { c =>
-            c * (graft.functions.HashKernels.log2Millis(t) -
-              graft.functions.HashKernels.log2Millis(c))
-          }.sum
-          Iterator.single((src, t, m.size.toLong, h / t))
-      }
+    keyedFold(keyed.groupByKey(_._1)) { (src, prev: Option[Map[String, Long]], rows, _) =>
+      var m = prev.getOrElse(Map.empty[String, Long])
+      rows.foreach { r => m = m.updated(r._2, m.getOrElse(r._2, 0L) + 1L) }
+      val t = m.values.sum
+      val h = m.values.map { c =>
+        c * (graft.functions.HashKernels.log2Millis(t) -
+          graft.functions.HashKernels.log2Millis(c))
+      }.sum
+      (Some(m), Iterator.single((src, t, m.size.toLong, h / t)))
+    }
   }
 
   /** Streaming Poisson-bootstrap CI monitor — the unbounded twin of
@@ -1651,45 +1435,38 @@ object GraftStream {
     * upstream CDC compaction or [[cdcUpdates]] is the dedup stage). */
   def bootstrapUpdates(df: DataFrame, userCol: String,
       valCol: String): Dataset[(String, Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(valCol).cast("long").as("m")).as[(Long, Long)]
     // Poisson(1) CDF × 2^20, floored — identical literals to the batch row
     val cdf = Array(385749L, 771499L, 964373L, 1028665L, 1044738L)
-    keyed.groupByKey(_ => "all")
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(Long, Long)],
-         state: GroupState[(Long, Long, Seq[Long], Seq[Long])]) =>
-          val st = state.getOption.getOrElse(
-            (0L, 0L, Seq.fill(32)(0L), Seq.fill(32)(0L)))
-          var n = st._1; var sm = st._2
-          val num = st._3.toArray; val den = st._4.toArray
-          rows.foreach { case (u, m) =>
-            n += 1L; sm += m
-            var r = 0
-            while (r < 32) {
-              val t = (u * 2654435761L + r * 1013904223L + 12345L) % 1048576L
-              val h = ((t * t) / 1024L) % 1048576L
-              var w = 5L
-              var i = 0
-              while (i < 5) { if (h < cdf(i) && w == 5L) w = i.toLong; i += 1 }
-              num(r) += w * m; den(r) += w
-              r += 1
-            }
+    keyedFold(keyed.groupByKey(_ => "all")) {
+      (key, prev: Option[(Long, Long, Seq[Long], Seq[Long])], rows, _) =>
+        val st = prev.getOrElse((0L, 0L, Seq.fill(32)(0L), Seq.fill(32)(0L)))
+        var n = st._1; var sm = st._2
+        val num = st._3.toArray; val den = st._4.toArray
+        rows.foreach { case (u, m) =>
+          n += 1L; sm += m
+          var r = 0
+          while (r < 32) {
+            val t = (u * 2654435761L + r * 1013904223L + 12345L) % 1048576L
+            val h = ((t * t) / 1024L) % 1048576L
+            var w = 5L
+            var i = 0
+            while (i < 5) { if (h < cdf(i) && w == 5L) w = i.toLong; i += 1 }
+            num(r) += w * m; den(r) += w
+            r += 1
           }
-          state.update((n, sm, num.toSeq, den.toSeq))
-          // den = 0 → sentinel -1, the SAME convention as the batch row
-          // and its oracle (estimates are ≥ 0, so -1 is unambiguous and
-          // sorts first in every engine involved).
-          val ests = (0 until 32).map { r =>
-            if (den(r) == 0L) -1L else 1000L * num(r) / den(r)
-          }.sorted
-          val point = if (n == 0L) 0L else 1000L * sm / n
-          Iterator.single((key, n, point,
-            ests(1), (ests(15) + ests(16)) / 2L, ests(30)))
-      }
+        }
+        // den = 0 → sentinel -1, the SAME convention as the batch row
+        // and its oracle (estimates are ≥ 0, so -1 is unambiguous and
+        // sorts first in every engine involved).
+        val ests = (0 until 32).map { r =>
+          if (den(r) == 0L) -1L else 1000L * num(r) / den(r)
+        }.sorted
+        val point = if (n == 0L) 0L else 1000L * sm / n
+        (Some((n, sm, num.toSeq, den.toSeq)), Iterator.single((key, n, point,
+          ests(1), (ests(15) + ests(16)) / 2L, ests(30))))
+    }
   }
 
   /** Streaming AMS second-moment monitor — the unbounded twin of
@@ -1708,33 +1485,26 @@ object GraftStream {
     * swap applies past that). */
   def f2Updates(df: DataFrame, keyCol: String,
       valCol: String): Dataset[(String, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(valCol).cast("long").as("v")).as[(String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Seq[Long])]) =>
-          val st = state.getOption.getOrElse((0L, Seq.fill(24)(0L)))
-          var n = st._1
-          val z = st._2.toArray
-          rows.foreach { r =>
-            n += 1L
-            var j = 0
-            while (j < 24) {
-              val h = (r._2 * (104729L + 7919L * j) + (7L + 13L * j)) % 1000000007L
-              z(j) += 1L - 2L * ((h * h >>> 40) & 1L)
-              j += 1
-            }
-          }
-          state.update((n, z.toSeq))
-          val ests = (0 until 3).map { g =>
-            (8 * g until 8 * g + 8).map(j => z(j) * z(j)).sum / 8L
-          }
-          Iterator.single((key, n, ests.sorted.apply(1)))
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[(Long, Seq[Long])], rows, _) =>
+      val st = prev.getOrElse((0L, Seq.fill(24)(0L)))
+      var n = st._1
+      val z = st._2.toArray
+      rows.foreach { r =>
+        n += 1L
+        var j = 0
+        while (j < 24) {
+          val h = (r._2 * (104729L + 7919L * j) + (7L + 13L * j)) % 1000000007L
+          z(j) += 1L - 2L * ((h * h >>> 40) & 1L)
+          j += 1
+        }
       }
+      val ests = (0 until 3).map { g =>
+        (8 * g until 8 * g + 8).map(j => z(j) * z(j)).sum / 8L
+      }
+      (Some((n, z.toSeq)), Iterator.single((key, n, ests.sorted.apply(1))))
+    }
   }
 
   /** Streaming two-sided CUSUM drift chart — the unbounded twin of
@@ -1753,30 +1523,22 @@ object GraftStream {
     * filter downstream. */
   def cusumUpdates(df: DataFrame, keyCol: String, ordCol: String,
       devCol: String): Dataset[(String, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(ordCol).cast("long").as("o"), col(devCol).cast("long").as("dev"))
       .as[(String, Long, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (lastOrd, cum, mn, mx) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
-          rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, o, dev) =>
-            if (o > lastOrd) {
-              lastOrd = o; cum += dev
-              if (cum < mn) mn = cum
-              if (cum > mx) mx = cum
-              out += ((key, o, cum - math.min(0L, mn), math.max(0L, mx) - cum))
-            } // else: late/duplicate ord — drop, batch repairs
-          }
-          state.update((lastOrd, cum, mn, mx))
-          out.iterator
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[(Long, Long, Long, Long)], rows, _) =>
+      var (lastOrd, cum, mn, mx) = prev.getOrElse((Long.MinValue, 0L, 0L, 0L))
+      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
+      rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, o, dev) =>
+        if (o > lastOrd) {
+          lastOrd = o; cum += dev
+          if (cum < mn) mn = cum
+          if (cum > mx) mx = cum
+          out += ((key, o, cum - math.min(0L, mn), math.max(0L, mx) - cum))
+        } // else: late/duplicate ord — drop, batch repairs
       }
+      (Some((lastOrd, cum, mn, mx)), out)
+    }
   }
 
   /** Streaming point-in-time feature server — the unbounded twin of
@@ -1796,40 +1558,34 @@ object GraftStream {
       typeCol: String, valCol: String, labelType: String = "purchase",
       sampleMod: Long = 5L)
       : Dataset[(Long, Long, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val W = 7L * 86400L * 1000000L // trailing window, µs
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(userCol).cast("long").as("u"),
       col(tsCol).cast("long").as("tus"), col(typeCol).cast("string").as("t"),
       col(valCol).cast("long").as("cents")).as[(Long, Long, String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Long, String, Long)],
-         state: GroupState[(Long, Seq[(Long, String, Long)])]) =>
-          val st = state.getOption.getOrElse((Long.MinValue, Seq.empty[(Long, String, Long)]))
-          var lastTus = st._1
-          var window = st._2.toBuffer
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Long, Long, Long, Long, Long)]
-          rows.toSeq.sortBy(_._2).foreach { case (_, tus, t, cents) =>
-            if (tus >= lastTus) {
-              lastTus = tus
-              window = window.filter(_._1 >= tus - W)
-              if (t == labelType && user % sampleMod == 0) {
-                val feats = window.filter(e => e._1 >= tus - W && e._1 < tus)
-                out += ((user, tus,
-                  feats.count(_._2 == "view").toLong,
-                  feats.count(_._2 == "click").toLong,
-                  feats.count(_._2 == labelType).toLong,
-                  feats.filter(_._2 == labelType).map(_._3).sum))
-              }
-              window += ((tus, t, cents))
-            } // else: late arrival — drop, the batch PIT join repairs
-          }
-          state.update((lastTus, window.toSeq))
-          out.iterator
-      }
+    keyedFold(keyed.groupByKey(_._1)) {
+      (user, prev: Option[(Long, Seq[(Long, String, Long)])], rows, _) =>
+        val st = prev.getOrElse((Long.MinValue, Seq.empty[(Long, String, Long)]))
+        var lastTus = st._1
+        var window = st._2.toBuffer
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Long, Long, Long, Long, Long)]
+        rows.toSeq.sortBy(_._2).foreach { case (_, tus, t, cents) =>
+          if (tus >= lastTus) {
+            lastTus = tus
+            window = window.filter(_._1 >= tus - W)
+            if (t == labelType && user % sampleMod == 0) {
+              val feats = window.filter(e => e._1 >= tus - W && e._1 < tus)
+              out += ((user, tus,
+                feats.count(_._2 == "view").toLong,
+                feats.count(_._2 == "click").toLong,
+                feats.count(_._2 == labelType).toLong,
+                feats.filter(_._2 == labelType).map(_._3).sum))
+            }
+            window += ((tus, t, cents))
+          } // else: late arrival — drop, the batch PIT join repairs
+        }
+        (Some((lastTus, window.toSeq)), out)
+    }
   }
 
   /** Streaming Holt–Winters monitor — the unbounded twin of
@@ -1846,56 +1602,50 @@ object GraftStream {
     * equals the batch row term-for-term on the same prefix. */
   def holtWintersUpdates(df: DataFrame, keyCol: String, ordCol: String,
       valCol: String): Dataset[(String, Long, Double, Double, Double)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(ordCol).cast("long").as("o"), col(valCol).cast("double").as("x"))
       .as[(String, Long, Double)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Double)],
-         state: GroupState[(Long, Seq[Double], Double, Double, Seq[Double], Long)]) =>
-          // (lastOrd, initBuf, l, b, s, k); initBuf fills to 14 first,
-          // then s (7 slots) takes over and the buffer stays empty.
-          val st = state.getOption.getOrElse(
-            (Long.MinValue, Seq.empty[Double], 0.0, 0.0, Seq.empty[Double], 0L))
-          var lastOrd = st._1
-          val buf = st._2.toBuffer
-          var l = st._3
-          var b = st._4
-          var s = st._5.toArray
-          var k = st._6
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(String, Long, Double, Double, Double)]
-          rows.toSeq.sortBy(_._2).foreach { case (_, o, x) =>
-            if (o > lastOrd) {
-              lastOrd = o
-              if (s.isEmpty) {
-                buf += x
-                if (buf.length == 14) {
-                  // two-week init: sequential left-fold sums — the
-                  // batch aggregate(slice(...)) order exactly
-                  val m1 = buf.take(7).sum / 7.0
-                  val m2 = buf.slice(7, 14).sum / 7.0
-                  l = m2; b = (m2 - m1) / 7.0
-                  s = Array.tabulate(7)(i => buf(i) - m1)
-                  buf.clear()
-                  out += ((key, o, l, b, l + b + s(0)))
-                }
-              } else {
-                val slot = (k % 7L).toInt
-                val lNew = 0.5 * (x - s(slot)) + 0.5 * (l + b)
-                val bNew = 0.5 * (lNew - l) + 0.5 * b
-                val sNew = 0.5 * (x - lNew) + 0.5 * s(slot)
-                l = lNew; b = bNew; s(slot) = sNew; k += 1
-                out += ((key, o, l, b, l + b + s((k % 7L).toInt)))
+    // state: (lastOrd, initBuf, l, b, s, k); initBuf fills to 14 first,
+    // then s (7 slots) takes over and the buffer stays empty.
+    keyedFold(keyed.groupByKey(_._1)) {
+      (key, prev: Option[(Long, Seq[Double], Double, Double, Seq[Double], Long)], rows, _) =>
+        val st = prev.getOrElse(
+          (Long.MinValue, Seq.empty[Double], 0.0, 0.0, Seq.empty[Double], 0L))
+        var lastOrd = st._1
+        val buf = st._2.toBuffer
+        var l = st._3
+        var b = st._4
+        var s = st._5.toArray
+        var k = st._6
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(String, Long, Double, Double, Double)]
+        rows.toSeq.sortBy(_._2).foreach { case (_, o, x) =>
+          if (o > lastOrd) {
+            lastOrd = o
+            if (s.isEmpty) {
+              buf += x
+              if (buf.length == 14) {
+                // two-week init: sequential left-fold sums — the
+                // batch aggregate(slice(...)) order exactly
+                val m1 = buf.take(7).sum / 7.0
+                val m2 = buf.slice(7, 14).sum / 7.0
+                l = m2; b = (m2 - m1) / 7.0
+                s = Array.tabulate(7)(i => buf(i) - m1)
+                buf.clear()
+                out += ((key, o, l, b, l + b + s(0)))
               }
-            } // else: late/duplicate ord — drop, batch repairs
-          }
-          state.update((lastOrd, buf.toSeq, l, b, s.toSeq, k))
-          out.iterator
-      }
+            } else {
+              val slot = (k % 7L).toInt
+              val lNew = 0.5 * (x - s(slot)) + 0.5 * (l + b)
+              val bNew = 0.5 * (lNew - l) + 0.5 * b
+              val sNew = 0.5 * (x - lNew) + 0.5 * s(slot)
+              l = lNew; b = bNew; s(slot) = sNew; k += 1
+              out += ((key, o, l, b, l + b + s((k % 7L).toInt)))
+            }
+          } // else: late/duplicate ord — drop, batch repairs
+        }
+        (Some((lastOrd, buf.toSeq, l, b, s.toSeq, k)), out)
+    }
   }
 
   /** Streaming MATERIALIZED-VIEW maintenance — the unbounded twin of
@@ -1918,25 +1668,17 @@ object GraftStream {
     * domain — the MV's own cardinality. */
   def mvUpdates(df: DataFrame, keyCol: String, valCol: String)
       : Dataset[(String, Long, Long, Long, Long)] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = df.sparkSession
-    import spark.implicits._
     val keyed = df.select(col(keyCol).cast("string").as("k"),
       col(valCol).cast("long").as("v")).as[(String, Long)]
-    keyed.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (n, s, mn, mx) =
-            state.getOption.getOrElse((0L, 0L, Long.MaxValue, Long.MinValue))
-          rows.foreach { r =>
-            n += 1; s += r._2
-            if (r._2 < mn) mn = r._2
-            if (r._2 > mx) mx = r._2
-          }
-          state.update((n, s, mn, mx))
-          Iterator.single((key, n, s, mn, mx))
+    keyedFold(keyed.groupByKey(_._1)) { (key, prev: Option[(Long, Long, Long, Long)], rows, _) =>
+      var (n, s, mn, mx) = prev.getOrElse((0L, 0L, Long.MaxValue, Long.MinValue))
+      rows.foreach { r =>
+        n += 1; s += r._2
+        if (r._2 < mn) mn = r._2
+        if (r._2 > mx) mx = r._2
       }
+      (Some((n, s, mn, mx)), Iterator.single((key, n, s, mn, mx)))
+    }
   }
 
   /** Watermarked stream-stream interval join — the streaming form of

@@ -138,6 +138,25 @@ class QueryCachesSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"use QueryCaches.checkpoint/iterate instead:\n${hits.mkString("\n")}")
   }
 
+  test("source audit: keyed streaming state is written only by GraftStream's keyed fold") {
+    import scala.jdk.CollectionConverters._
+    val home = java.nio.file.Paths.get("src/main/scala/graft/streaming/GraftStream.scala")
+    val lines = java.nio.file.Files.readAllLines(home).asScala
+    val start = lines.indexWhere(_.contains("def keyedFold[")) + 1
+    val end = lines.indexWhere(_ == "  }", start) + 1 // the fold's closing brace
+    assert(start > 0 && end > start)
+    val api = Seq("flatMapGroupsWithState", "GroupStateTimeout")
+    val hits = sourceHits("src/main/scala")(_ => api)
+    val outside = hits.filterNot { h =>
+      h.startsWith(s"$home:") && {
+        val n = h.stripPrefix(s"$home:").takeWhile(_ != ':').toInt
+        n >= start && n <= end
+      }
+    }
+    assert(outside.isEmpty, s"write keyed state through GraftStream.keyedFold:\n${outside.mkString("\n")}")
+    assert(hits.count(_.contains(api.head)) == 1, hits.mkString("\n"))
+  }
+
   test("source audit: one session builder, one extension install, no session conf in queries, removed knobs gone") {
     // spelled in pieces so this file does not match itself
     val builder = "SparkSession" + ".builder"

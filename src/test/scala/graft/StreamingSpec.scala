@@ -572,24 +572,30 @@ class StreamingSpec extends AnyFunSuite {
     // past any deadline under load; the semantics themselves are
     // deterministic and live here.
     assert(GraftStream.bucketStep(Some(Seq(1L, 5L)), timedOut = true,
-      Seq.empty, 64) == (None, Seq.empty))
+      Seq.empty, 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b)))) == (None, Seq.empty))
     // timeout on an already-absent bucket is a clean no-op eviction
     assert(GraftStream.bucketStep(None, timedOut = true,
-      Seq.empty, 64) == (None, Seq.empty))
+      Seq.empty, 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b)))) == (None, Seq.empty))
   }
 
   test("bucketStep (pure): late duplicate re-seeds an evicted bucket without pairing; successors pair") {
     // The recall trade, end to end on the pure function: seed → evict →
     // late duplicate re-seeds (no pair with the evicted original) →
     // subsequent duplicate pairs against the re-seeded state.
-    val (s1, out1) = GraftStream.bucketStep(None, timedOut = false, Seq(1L), 64)
+    val (s1, out1) = GraftStream.bucketStep(None, timedOut = false, Seq(1L), 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b))))
     assert(s1 == Some(Seq(1L)) && out1.isEmpty)
-    val (s2, out2) = GraftStream.bucketStep(s1, timedOut = true, Seq.empty, 64)
+    val (s2, out2) = GraftStream.bucketStep(s1, timedOut = true, Seq.empty, 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b))))
     assert(s2 == None && out2.isEmpty, "TTL fires: doc 1 forgotten")
-    val (s3, out3) = GraftStream.bucketStep(s2, timedOut = false, Seq(2L), 64)
+    val (s3, out3) = GraftStream.bucketStep(s2, timedOut = false, Seq(2L), 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b))))
     assert(s3 == Some(Seq(2L)) && out3.isEmpty,
       "late duplicate re-seeds, does NOT pair with the evicted original")
-    val (s4, out4) = GraftStream.bucketStep(s3, timedOut = false, Seq(3L), 64)
+    val (s4, out4) = GraftStream.bucketStep(s3, timedOut = false, Seq(3L), 64)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b))))
     assert(s4 == Some(Seq(2L, 3L)) && out4 == Seq((2L, 3L)),
       "successor pairs against the re-seeded state")
   }
@@ -597,7 +603,8 @@ class StreamingSpec extends AnyFunSuite {
   test("bucketStep (pure): cap admits prefix; over-cap ids cross-pair but are not remembered") {
     // maxBucket = 3, 2 stored, 4 fresh in one batch: 1 slot remains.
     val (st, out) = GraftStream.bucketStep(Some(Seq(10L, 20L)), timedOut = false,
-      Seq(30L, 40L, 50L, 60L, 30L /* dup in-batch */, 10L /* already stored */), 3)
+      Seq(30L, 40L, 50L, 60L, 30L /* dup in-batch */, 10L /* already stored */), 3)(
+      (a: Long, b: Long) => Some((math.min(a, b), math.max(a, b))))
     assert(st == Some(Seq(10L, 20L, 30L)), "only the admitted prefix enters state")
     val cross = for { n <- Seq(30L, 40L, 50L, 60L); p <- Seq(10L, 20L) } yield (p, n)
     assert(out == cross, // every fresh id crosses the FULL stored prefix; no intra (1 admitted)
@@ -1491,6 +1498,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(viaSessionWindow == viaLag)
   }
 
+  test("streaming sessionCounts: an event exactly `gap` after the previous one joins its session") {
+    // Hand-built feed, gap = 10 minutes: a@00:00, 00:10 and 00:20 are
+    // each exactly one gap apart, a@00:31 is 11 minutes after 00:20,
+    // b@00:05 is alone. A later z@05:00 moves the watermark past every
+    // session above, so append mode emits them all.
+    implicit val sq = spark.sqlContext
+    val in = MemoryStream[(String, Timestamp)]
+    val df = in.toDF().toDF("k", "ts")
+    val rows = new ConcurrentLinkedQueue[(String, Timestamp, Long)]()
+    val q = GraftStream.sessionCounts(df, "ts", "k", watermark = "0 seconds", gap = "10 minutes")
+      .writeStream.outputMode("append")
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => {
+        b.collect().foreach(r => rows.add((r.getString(0), r.getTimestamp(1), r.getLong(2)))); ()
+      })
+      .start()
+    def at(hhmm: String) = Timestamp.valueOf(s"2024-01-01 $hhmm:00")
+    in.addData(("a", at("00:00")), ("a", at("00:10")), ("a", at("00:20")),
+      ("a", at("00:31")), ("b", at("00:05")))
+    q.processAllAvailable()
+    in.addData(("z", at("05:00")))
+    q.processAllAvailable()
+    q.stop()
+    val got = rows.toArray.map(_.asInstanceOf[(String, Timestamp, Long)]).toSet
+    assert(got == Set(("a", at("00:00"), 3L), ("a", at("00:31"), 1L), ("b", at("00:05"), 1L)),
+      s"sessions: $got")
+  }
+
   test("streaming drift fold: final per-band counters equal the batch conditional-sum histogram") {
     // q_drift's band relation (orders 1995 vs 1996, price div 25000)
     // fed through driftUpdates in three seed-shuffled chunks: counters
@@ -2269,6 +2303,18 @@ class StreamingSpec extends AnyFunSuite {
         .foreach { case ((_, k), n) =>
           assert(tab.contains(k), s"heavy key $k (n=$n) missing from bucket $b table")
         }
+    }
+  }
+
+  test("streaming Space-Saving heavy hitters: buckets or cap below 1 fails when the operator is built") {
+    // cap = 0 would call minBy on an empty table at the first miss and
+    // buckets = 0 is a pmod by zero: both would fail mid-trigger.
+    implicit val sq = spark.sqlContext
+    val df = MemoryStream[String].toDF().toDF("tok")
+    for ((buckets, cap) <- Seq((0, 16), (8, 0), (-1, -1))) {
+      val e = intercept[IllegalArgumentException](
+        GraftStream.topkUpdates(df, "tok", buckets = buckets, cap = cap))
+      assert(e.getMessage.contains(s"buckets=$buckets cap=$cap"), e.getMessage)
     }
   }
 
