@@ -1,8 +1,9 @@
 package graft.ext
 
+import graft.functions.Kernels
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,164 +47,13 @@ object MultimodalOps {
     StructField("content", BinaryType, nullable = false),
     StructField("meta", metaSchema, nullable = false)))
 
-  /** Byte-level stats over a blob — one native pass, no boxing.
-    * n_bytes / sum / min / max are real features (and oracle-checkable:
-    * for ASCII text payloads they equal the codepoint stats DuckDB
-    * computes from the string). */
-  case class ByteStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_bytes", LongType, nullable = false),
-      StructField("sum_bytes", LongType, nullable = false),
-      StructField("min_byte", IntegerType, nullable = false),
-      StructField("max_byte", IntegerType, nullable = false)))
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteStats($c)")
-    override protected def withNewChildInternal(c: Expression): ByteStatsExpr = copy(child = c)
-    override def prettyName: String = "graft_byte_stats"
-  }
-
-  /** Normalized byte histogram (`bins` buckets) as float features —
-    * the real, codec-free feature vector for any modality; feeds
-    * straight into [[SimOps]] cosine / SRP-LSH. */
-  case class ByteHistExpr(child: Expression, bins: Int) extends UnaryExpression {
-    require(bins > 0 && 256 % bins == 0)
-    override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteHist(input.asInstanceOf[Array[Byte]], bins)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteHist($c, $bins)")
-    override protected def withNewChildInternal(c: Expression): ByteHistExpr = copy(child = c)
-    override def prettyName: String = "graft_byte_hist"
-  }
-
-  /** Integer twin of [[ByteHistExpr]]: raw bucket counts — the
-    * all-integer histogram for exact arithmetic downstream (frame L1
-    * distances in [[graft.queries.MultimodalQueries.mmSceneCuts]]
-    * never touch a float, so the scene verdict can't flip on ulp). */
-  case class ByteHistCountsExpr(child: Expression, bins: Int) extends UnaryExpression {
-    require(bins > 0 && 256 % bins == 0)
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteHistCounts(input.asInstanceOf[Array[Byte]], bins)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteHistCounts($c, $bins)")
-    override protected def withNewChildInternal(c: Expression): ByteHistCountsExpr = copy(child = c)
-    override def prettyName: String = "graft_byte_hist_counts"
-  }
-
-  /** Perceptual hash over raw bytes — dHash's structure (gradients
-    * between downscaled regions) applied codec-free: `segs` equal
-    * byte segments, one MEAN-gradient bit per adjacent pair
-    * ([[graft.functions.HashKernels.byteSegGradHash]], all-integer).
-    * Stable under tail-local edits (an edit inside one segment can
-    * flip at most its two adjacent gradient bits), discriminative
-    * across blobs (positional structure, unlike a global histogram —
-    * on the test corpus a 32-bin histogram hash collapses 500 docs
-    * to 4 values while this spreads them to 500). Pairs via
-    * [[DedupOps.hammingPairs]] banding — never all-pairs. */
-  case class ByteSegGradHashExpr(child: Expression, segs: Int) extends UnaryExpression {
-    require(segs >= 2 && segs <= 63, s"segs must be in [2, 63], got $segs")
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteSegGradHash(input.asInstanceOf[Array[Byte]], segs)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteSegGradHash($c, $segs)")
-    override protected def withNewChildInternal(c: Expression): ByteSegGradHashExpr = copy(child = c)
-    override def prettyName: String = "graft_byte_seg_grad_hash"
-  }
-
-  /** Run-length profile — the silence/stuck-frame/padding screen
-    * ([[graft.functions.HashKernels.byteRunStats]]): long constant
-    * runs are dead air in audio, frozen frames in video, padding in
-    * containers — content that costs storage and feature compute but
-    * trains nothing. Codegen struct expression like
-    * [[ByteStatsExpr]]. */
-  case class ByteRunStatsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("n_runs", LongType, nullable = false),
-      StructField("max_run", LongType, nullable = false),
-      StructField("run8_bytes", LongType, nullable = false)))
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteRunStats(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteRunStats($c)")
-    override protected def withNewChildInternal(c: Expression): ByteRunStatsExpr =
-      copy(child = c)
-    override def prettyName: String = "graft_byte_runs"
-  }
-
-  /** Sharpness/blur screen over raw bytes — discrete-Laplacian energy
-    * ([[graft.functions.HashKernels.byteLaplacianEnergy]], all-integer
-    * one-pass): the quality gate a media-curation pipeline runs before
-    * admitting an asset (blur ≈ low second-difference energy). Codegen
-    * UnaryExpression like the other byte kernels — stays inside
-    * whole-stage, the blob never leaves its scan partition. */
-  case class ByteLaplacianExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteLaplacianEnergy(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.byteLaplacianEnergy($c)")
-    override protected def withNewChildInternal(c: Expression): ByteLaplacianExpr =
-      copy(child = c)
-    override def prettyName: String = "graft_byte_laplacian"
-  }
-
-  /** Audio-fingerprint analog over raw bytes: Haitsma–Kalker band-energy
-    * bits ([[graft.functions.HashKernels.byteBandEnergyHash]] — `frames`
-    * time windows × `bands` byte-value energy bands, one
-    * second-order-difference sign bit per adjacent (frame, band) pair).
-    * This is the generic acoustic-fingerprint SHAPE with the FFT swapped
-    * for byte-value banding (no codecs in this container); a real
-    * spectral frontend drops in at the kernel with the same
-    * (bytes → Long) signature. Pairs via [[DedupOps.hammingPairs]] —
-    * bucket equi-join, never all-pairs. */
-  case class ByteBandEnergyHashExpr(child: Expression, frames: Int, bands: Int)
-      extends UnaryExpression {
-    require(frames >= 2 && bands >= 2 && 256 % bands == 0 &&
-      (frames - 1) * (bands - 1) <= 62,
-      s"need 2<=frames, 2<=bands|256, (frames-1)*(bands-1)<=62; got $frames, $bands")
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.HashKernels.byteBandEnergyHash(
-        input.asInstanceOf[Array[Byte]], frames, bands)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev,
-        c => s"graft.functions.HashKernels.byteBandEnergyHash($c, $frames, $bands)")
-    override protected def withNewChildInternal(c: Expression): ByteBandEnergyHashExpr =
-      copy(child = c)
-    override def prettyName: String = "graft_byte_bandhash"
-  }
-
   /** Native resize over an already-decoded pixel column: area-average
     * box filter ([[graft.functions.HashKernels.resizeArea]] — exact
     * integer block bounds, deterministic float accumulation), source
     * dims per ROW (`w`/`h` are expressions — media tables mix sizes),
     * target dims plan-time. Codegen'd; stays inside whole-stage like
-    * the byte kernels. */
+    * the byte kernels. Hand-written: three inputs, two of them per-row
+    * dimensions, which the kernel table does not declare. */
   case class ResizePixelsExpr(pixels: Expression, w: Expression, h: Expression,
       ow: Int, oh: Int)
       extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
@@ -231,16 +81,15 @@ object MultimodalOps {
   def resizePixels(px: Column, w: Column, h: Column, ow: Int, oh: Int): Column =
     toColumn(ResizePixelsExpr(toExpression(px), toExpression(w), toExpression(h), ow, oh))
 
-  def byteStats(c: Column): Column = toColumn(ByteStatsExpr(toExpression(c)))
-  def byteHist(c: Column, bins: Int): Column = toColumn(ByteHistExpr(toExpression(c), bins))
-  def byteHistCounts(c: Column, bins: Int): Column =
-    toColumn(ByteHistCountsExpr(toExpression(c), bins))
-  def byteSegGradHash(c: Column, segs: Int): Column =
-    toColumn(ByteSegGradHashExpr(toExpression(c), segs))
-  def byteLaplacian(c: Column): Column = toColumn(ByteLaplacianExpr(toExpression(c)))
-  def byteRunStats(c: Column): Column = toColumn(ByteRunStatsExpr(toExpression(c)))
+  /** The byte kernels, declared in [[graft.functions.Kernels]]. */
+  def byteStats(c: Column): Column = Kernels.ByteStats(c)()
+  def byteHist(c: Column, bins: Int): Column = Kernels.ByteHist(c)(bins)
+  def byteHistCounts(c: Column, bins: Int): Column = Kernels.ByteHistCounts(c)(bins)
+  def byteSegGradHash(c: Column, segs: Int): Column = Kernels.BytePhash(c)(segs)
+  def byteLaplacian(c: Column): Column = Kernels.ByteLaplacian(c)()
+  def byteRunStats(c: Column): Column = Kernels.ByteRuns(c)()
   def byteBandEnergyHash(c: Column, frames: Int, bands: Int): Column =
-    toColumn(ByteBandEnergyHashExpr(toExpression(c), frames, bands))
+    Kernels.ByteBandHash(c)(frames, bands)
 
   /** DETERMINISTIC FAKE decoder — stands in for libjpeg/ffmpeg (absent
     * in this container). Produces `w*h` floats in [0,1) from a

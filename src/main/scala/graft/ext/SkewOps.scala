@@ -66,25 +66,6 @@ object SkewOps {
     if (cur * 2 <= target) df.repartition(target) else df
   }
 
-  /** EXACT global row_number WITHOUT the single-partition window —
-    * the two-job distributed rank: `repartitionByRange` on the sort
-    * key gives ordered, disjoint partitions; `sortWithinPartitions`
-    * orders inside each; `zipWithIndex` (one count job + one map job,
-    * no extra shuffle) assigns the contiguous global index. Appended
-    * as `outCol` (1-based, LongType).
-    *
-    * Exactness caveat, same shape as every rank: rows TIED on the full
-    * sort key receive an arbitrary-but-valid permutation of their rank
-    * range (range partitioning may split a tie group across partition
-    * boundaries). Any aggregate invariant under tie permutation —
-    * equal-size bucket cuts over fully-determined rows (q_zorder),
-    * counts, min/max — is exact; a consumer that needs a DETERMINISTIC
-    * winner inside tie groups must put a total key in `sortCols`.
-    *
-    * Cost: the RDD detour deserializes rows once (the
-    * [[graft.core.GraftStage.concatRoundRobin]] precedent — eager,
-    * documented); at any scale this is 2 jobs + the one range
-    * exchange, vs the window form's everything-through-one-task. */
   /** EXACT global running total (rank + cumulative sum of `valCol` in
     * `sortCols` order) with NO single-partition window — the classic
     * distributed prefix-sum: range-partition + local sort, then ONE
@@ -178,6 +159,25 @@ object SkewOps {
     sorted.sparkSession.createDataFrame(withMax, schema)
   }
 
+  /** EXACT global row_number WITHOUT the single-partition window —
+    * the two-job distributed rank: `repartitionByRange` on the sort
+    * key gives ordered, disjoint partitions; `sortWithinPartitions`
+    * orders inside each; `zipWithIndex` (one count job + one map job,
+    * no extra shuffle) assigns the contiguous global index. Appended
+    * as `outCol` (1-based, LongType).
+    *
+    * Exactness caveat, same shape as every rank: rows TIED on the full
+    * sort key receive an arbitrary-but-valid permutation of their rank
+    * range (range partitioning may split a tie group across partition
+    * boundaries). Any aggregate invariant under tie permutation —
+    * equal-size bucket cuts over fully-determined rows (q_zorder),
+    * counts, min/max — is exact; a consumer that needs a DETERMINISTIC
+    * winner inside tie groups must put a total key in `sortCols`.
+    *
+    * Cost: the RDD detour deserializes rows once (the
+    * [[graft.core.GraftStage.concatRoundRobin]] precedent — eager,
+    * documented); at any scale this is 2 jobs + the one range
+    * exchange, vs the window form's everything-through-one-task. */
   def globalRank(df: DataFrame, sortCols: Seq[String],
       outCol: String = "_rk", partitions: Int = 0): DataFrame = {
     import org.apache.spark.sql.Row

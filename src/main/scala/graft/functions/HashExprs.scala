@@ -1,167 +1,24 @@
 package graft.functions
 
+import graft.functions.Kernels._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the dedup / similarity hash kernels.
-  *
-  * Why native and not `functions._` composition: the sketch math
-  * (shingle fingerprints → n minhashes → banded keys) nests three
-  * higher-order functions. Spark HOFs are interpreted (never codegen'd)
-  * AND re-evaluate their array argument on every lambda invocation once
-  * CollapseProject inlines the producing expression — so the composed
-  * column form recomputes the full shingle+fingerprint pipeline
-  * `bands × hashes` times per row (measured: a 1000-doc corpus wedged
-  * for >15 min). Each expression below evaluates its child exactly once
-  * per row and runs ONE imperative pass ([[HashKernels]]) — the
-  * preference order mandated by the build rules: native Expression >
-  * UDF > HOF nest, for anything on a 100 TB hot path.
-  *
-  * Codegen: each expression emits a single static kernel call via
-  * `defineCodeGen`, so it participates in WholeStageCodegen like any
-  * built-in (no CodegenFallback row detour); the interpreted path
-  * (`nullSafeEval`) calls the same kernel.
-  *
-  * Every kernel's arithmetic is spelled identically in the DuckDB
-  * oracle SQL (see graft.queries.DedupQueries / SimQueries): 64-bit
-  * modular arithmetic and IEEE double left-folds are engine-portable,
-  * so results hash-match bit-exactly.
+/** The Column functions of the native kernels: the declared kernels
+  * of [[Kernels]] (one-line calls into the table) and the two
+  * hand-written vector scores, [[CosineExpr]] and [[DotExpr]], whose
+  * element widths are read from the child types at plan time (and
+  * whose cosine predicate graft.plans.LshJoinRewrite matches).
   */
 object HashExprs {
   /** Shared prime modulus (products stay inside 64 bits). */
   val P = HashKernels.P
 
-  private val LongArray = ArrayType(LongType, containsNull = false)
   private val K = "graft.functions.HashKernels"
-
-  /** fingerprint(text): whole-string polynomial content hash
-    * h = (h*31 + codepoint) mod P, matching DuckDB's
-    * list_reduce over string_split(s,'') + unicode(). */
-  case class FingerprintExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.fingerprint(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.fingerprint($c)")
-    override protected def withNewChildInternal(c: Expression): FingerprintExpr = copy(child = c)
-    override def prettyName: String = "graft_fingerprint"
-  }
-
-  /** token_fps(tokens): per-token polynomial fingerprints. */
-  case class TokenFpsExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.tokenFps(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.tokenFps($c)")
-    override protected def withNewChildInternal(c: Expression): TokenFpsExpr = copy(child = c)
-    override def prettyName: String = "graft_token_fps"
-  }
-
-  /** shingle_fps(tokens, k): fingerprint of each k-gram of tokens
-    * joined by single spaces — one pass, no k-gram strings allocated
-    * (the space separator is folded in as codepoint 32). Fewer than k
-    * tokens → empty array (matches the guarded DuckDB spelling). */
-  case class ShingleFpsExpr(child: Expression, k: Int) extends UnaryExpression {
-    require(k >= 1)
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.shingleFps(input.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.shingleFps($c, $k)")
-    override protected def withNewChildInternal(c: Expression): ShingleFpsExpr = copy(child = c)
-    override def prettyName: String = "graft_shingle_fps"
-  }
-
-  /** char_shingle_fps(str, k): fingerprints of every k-codepoint
-    * window — the character-level n-gram unit for short-text dedup. */
-  case class CharShingleFpsExpr(child: Expression, k: Int) extends UnaryExpression {
-    require(k >= 1)
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.charShingleFps(input.asInstanceOf[UTF8String], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.charShingleFps($c, $k)")
-    override protected def withNewChildInternal(c: Expression): CharShingleFpsExpr = copy(child = c)
-    override def prettyName: String = "graft_char_shingle_fps"
-  }
-
-  /** minhash_sig(fps, n): Broder sketch — n permutation-hashes
-    * h_i(f) = (f·a_i + 104729·(i+1)) mod P with a_i drawn from
-    * [[HashKernels.MH_A]] (independent splitmix64 constants — a
-    * linear-in-i family correlates the per-position argmins; see the
-    * HashKernels comment), min over the fp set; empty set → sentinel
-    * P. */
-  case class MinHashSigExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.minhashSig(input.asInstanceOf[ArrayData], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.minhashSig($c, $n)")
-    override protected def withNewChildInternal(c: Expression): MinHashSigExpr = copy(child = c)
-    override def prettyName: String = "graft_minhash_sig"
-  }
-
-  /** band_keys(sig, b, r): LSH banding — band j's key is the seeded
-    * fold s = j; s = (s*1000003 + sig[j*r + t]) mod P over the band's
-    * r signature rows. */
-  case class BandKeysExpr(child: Expression, b: Int, r: Int) extends UnaryExpression {
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.bandKeys(input.asInstanceOf[ArrayData], b, r)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.bandKeys($c, $b, $r)")
-    override protected def withNewChildInternal(c: Expression): BandKeysExpr = copy(child = c)
-    override def prettyName: String = "graft_band_keys"
-  }
-
-  /** simhash(fps, bits): bit j of the signature is set iff the sum of
-    * per-fp votes (+1 if bit j of fp set, else −1) is positive. */
-  /** dtw_band(a, b, band): banded Sakoe–Chiba DTW distance between two
-    * equal-length integer series ([[HashKernels.dtwBand]] — O(n·band)
-    * rolling-row DP; the time-series sibling of [[EditWithinExpr]]). */
-  case class DtwBandExpr(left: Expression, right: Expression, band: Int)
-      extends BinaryExpression {
-    require(band >= 0, s"band must be >= 0, got $band")
-    override def dataType: DataType = LongType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      HashKernels.dtwBand(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], band)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$K.dtwBand($a, $b, $band)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): DtwBandExpr = copy(left = l, right = r)
-    override def prettyName: String = "graft_dtw"
-  }
-
-  /** modal_ngram_count(tokens, k): max occurrence count of any k-token
-    * gram — linear hash-map pass ([[HashKernels.modalNgramCount]]); the
-    * Gopher-repetition mode count. */
-  case class ModalNgramCountExpr(child: Expression, k: Int) extends UnaryExpression {
-    require(k >= 1)
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.modalNgramCount(input.asInstanceOf[ArrayData], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.modalNgramCount($c, $k)")
-    override protected def withNewChildInternal(c: Expression): ModalNgramCountExpr = copy(child = c)
-    override def prettyName: String = "graft_modal_ngram_count"
-  }
-
-  case class SimHashExpr(child: Expression, bits: Int) extends UnaryExpression {
-    require(bits >= 1 && bits <= 62)
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.simhash(input.asInstanceOf[ArrayData], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.simhash($c, $bits)")
-    override protected def withNewChildInternal(c: Expression): SimHashExpr = copy(child = c)
-    override def prettyName: String = "graft_simhash"
-  }
 
   /** cosine(a, b) over float/double vectors: the three sums (dot,
     * |a|², |b|²) accumulate left-to-right in double (float→double
@@ -203,192 +60,27 @@ object HashExprs {
     override def prettyName: String = "graft_dot"
   }
 
-  /** srp_bucket(v, bits): sign-random-projection LSH bucket (Charikar).
-    * Hyperplane component for plane p, dim d is a deterministic cubic
-    * residue mapped into [-1, 1): with x = p*4099 + d + 1,
-    * ((x² mod 999999937)·x mod 999999937) / 499999968.5 − 1. The mix
-    * must be NON-linear in (p, d): a linear h(p,d) = (a·p + b·d + c)
-    * mod m makes every plane the same arithmetic progression over dims
-    * shifted by a per-plane constant — measured plane correlations up
-    * to |cos| ≈ 0.99, collapsing 2^bits buckets to a few hot ones (the
-    * skew the cap guards exist for). The cubic keeps all intermediates
-    * < 2^63 (x ≤ 62·4099+dims, so x²·… ≤ ~2.5e14) because the DuckDB
-    * oracle traps on BIGINT overflow rather than wrapping; measured
-    * max |plane cos| ≈ 0.5 at 24 planes / 32 dims, bucket occupancy
-    * ~Poisson. Bucket id folds the projection signs MSB-first:
-    * acc = acc*2 + (proj > 0). Float vectors only. */
-  case class SrpBucketExpr(child: Expression, bits: Int) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.srpBucket(input.asInstanceOf[ArrayData], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.srpBucket($c, $bits)")
-    override protected def withNewChildInternal(c: Expression): SrpBucketExpr = copy(child = c)
-    override def prettyName: String = "graft_srp_bucket"
-  }
-
-  /** zorder(a, b, bits): Morton bit-interleave of two integer keys —
-    * the multi-dimensional clustering key behind layout-driven data
-    * skipping (sort/bucket by z, and a min-max index prunes on BOTH
-    * dimensions instead of just the leading sort column). Codegen'd
-    * single loop; [[HashKernels.zInterleave]]. */
-  case class ZInterleaveExpr(left: Expression, right: Expression, bits: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashKernels.zInterleave(a.asInstanceOf[Long], b.asInstanceOf[Long], bits)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$K.zInterleave($a, $b, $bits)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): ZInterleaveExpr =
-      copy(left = l, right = r)
-    override def prettyName: String = "graft_zorder"
-  }
-
-  /** winnow_mins(fps, w): window-min fingerprint selection
-    * ([[HashKernels.winnowMins]] — the winnowing/MOSS step between
-    * k-gram hashing and cross-document pairing). */
-  case class WinnowMinsExpr(child: Expression, w: Int) extends UnaryExpression {
-    require(w >= 1)
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.winnowMins(input.asInstanceOf[ArrayData], w)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.winnowMins($c, $w)")
-    override protected def withNewChildInternal(c: Expression): WinnowMinsExpr = copy(child = c)
-    override def prettyName: String = "graft_winnow_mins"
-  }
-
-  /** jaro_winkler(a, b): record-linkage similarity, bit-exact to
-    * DuckDB's `jaro_winkler_similarity` ([[HashKernels.jaroWinkler]])
-    * — the fuzzy-compare half of blocked entity resolution (the
-    * blocking equi-join bounds pairs; this scores them). */
-  case class JaroWinklerExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$K.jaroWinkler($a, $b)")
-    override protected def withNewChildrenInternal(
-        l: Expression, r: Expression): JaroWinklerExpr = copy(left = l, right = r)
-    override def prettyName: String = "graft_jaro_winkler"
-  }
-
-  /** edit_within(a, b, k): banded early-exit Levenshtein bound —
-    * [[HashKernels.editWithin]] as a codegen'd boolean predicate. */
-  case class EditWithinExpr(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression {
-    override def dataType: DataType = BooleanType
-    override def nullSafeEval(a: Any, b: Any): Any =
-      HashKernels.editWithin(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], k)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b) => s"$K.editWithin($a, $b, $k)")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): EditWithinExpr =
-      copy(left = l, right = r)
-    override def prettyName: String = "graft_edit_within"
-  }
-
-  /** char_entropy_bound(str): [n_codepoints, distinct_chars, Σ
-    * k·⌊log2(n div k)⌋] — the one-pass integer compression bound used
-    * as a text-quality signal (see [[HashKernels.charEntropyBound]]).
-    * Array return keeps it one kernel invocation; callers project the
-    * three elements out immediately. */
-  case class CharEntropyBoundExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.charEntropyBound(input.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.charEntropyBound($c)")
-    override protected def withNewChildInternal(c: Expression): CharEntropyBoundExpr = copy(child = c)
-    override def prettyName: String = "graft_char_entropy_bound"
-  }
-
-  /** Millibit fast-log — see [[HashKernels.log2Millis]] for semantics,
-    * domain and the `length(bin(q)) − 1` oracle spelling. LONG → LONG,
-    * one static call, codegen'd. */
-  case class Log2MillisExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.log2Millis(input.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.log2Millis($c)")
-    override protected def withNewChildInternal(c: Expression): Log2MillisExpr = copy(child = c)
-    override def prettyName: String = "graft_log2_millis"
-  }
-
-  /** Content-defined chunk fingerprints — see
-    * [[HashKernels.cdcChunkFps]] for semantics and the oracle
-    * spelling. `w`/`mask` are plan-time constants (chunking policy,
-    * not data). */
-  case class CdcChunkFpsExpr(child: Expression, w: Int, mask: Long)
-      extends UnaryExpression {
-    require(w >= 2 && mask >= 2, "cdc chunking needs w >= 2 and mask >= 2")
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.cdcChunkFps(input.asInstanceOf[UTF8String], w, mask)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.cdcChunkFps($c, $w, ${mask}L)")
-    override protected def withNewChildInternal(c: Expression): CdcChunkFpsExpr = copy(child = c)
-    override def prettyName: String = "graft_cdc_chunks"
-  }
-
-  /** [[CdcChunkFpsExpr]] for BinaryType blobs — see
-    * [[HashKernels.cdcChunkFpsBin]]. */
-  case class CdcChunkFpsBinExpr(child: Expression, w: Int, mask: Long)
-      extends UnaryExpression {
-    require(w >= 2 && mask >= 2, "cdc chunking needs w >= 2 and mask >= 2")
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.cdcChunkFpsBin(input.asInstanceOf[Array[Byte]], w, mask)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.cdcChunkFpsBin($c, $w, ${mask}L)")
-    override protected def withNewChildInternal(c: Expression): CdcChunkFpsBinExpr = copy(child = c)
-    override def prettyName: String = "graft_cdc_chunks_bin"
-  }
-
-  /** Delta+zigzag+varint byte cost of a long series — see
-    * [[HashKernels.varintCost]] for semantics and the oracle
-    * spelling (lag-window deltas + CASE zigzag + unpadded-binary
-    * length, Relational.q_encode_cost). */
-  case class VarintCostExpr(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongArray
-    override def nullSafeEval(input: Any): Any =
-      HashKernels.varintCost(input.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c => s"$K.varintCost($c)")
-    override protected def withNewChildInternal(c: Expression): VarintCostExpr = copy(child = c)
-    override def prettyName: String = "graft_varint_cost"
-  }
-
   // ---- Column-facing wrappers --------------------------------------
-  def fingerprint(c: Column): Column = toColumn(FingerprintExpr(toExpression(c)))
-  def charEntropyBound(s: Column): Column = toColumn(CharEntropyBoundExpr(toExpression(s)))
-  def log2Millis(q: Column): Column = toColumn(Log2MillisExpr(toExpression(q)))
+  def fingerprint(c: Column): Column = Fingerprint(c)()
+  def charEntropyBound(s: Column): Column = CharEntropyBound(s)()
+  def log2Millis(q: Column): Column = Log2Millis(q)()
   def explodeBigrams(s: Column): Column = toColumn(ExplodeBigramsExpr(toExpression(s)))
-  def cdcChunkFps(s: Column, w: Int, mask: Long): Column =
-    toColumn(CdcChunkFpsExpr(toExpression(s), w, mask))
-  def cdcChunkFpsBin(b: Column, w: Int, mask: Long): Column =
-    toColumn(CdcChunkFpsBinExpr(toExpression(b), w, mask))
-  def varintCost(series: Column): Column = toColumn(VarintCostExpr(toExpression(series)))
-  def tokenFps(toks: Column): Column = toColumn(TokenFpsExpr(toExpression(toks)))
-  def shingleFps(toks: Column, k: Int): Column = toColumn(ShingleFpsExpr(toExpression(toks), k))
-  def charShingleFps(s: Column, k: Int): Column = toColumn(CharShingleFpsExpr(toExpression(s), k))
-  def modalNgramCount(toks: Column, k: Int): Column =
-    toColumn(ModalNgramCountExpr(toExpression(toks), k))
-  def dtwBand(a: Column, b: Column, band: Int): Column =
-    toColumn(DtwBandExpr(toExpression(a), toExpression(b), band))
-  def minhashSig(fps: Column, n: Int): Column = toColumn(MinHashSigExpr(toExpression(fps), n))
-  def bandKeys(sig: Column, b: Int, r: Int): Column = toColumn(BandKeysExpr(toExpression(sig), b, r))
-  def simhash(fps: Column, bits: Int): Column = toColumn(SimHashExpr(toExpression(fps), bits))
-  def editWithin(a: Column, b: Column, k: Int): Column =
-    toColumn(EditWithinExpr(toExpression(a), toExpression(b), k))
-  def jaroWinkler(a: Column, b: Column): Column =
-    toColumn(JaroWinklerExpr(toExpression(a), toExpression(b)))
-  def winnowMins(fps: Column, w: Int): Column =
-    toColumn(WinnowMinsExpr(toExpression(fps), w))
+  def cdcChunkFps(s: Column, w: Int, mask: Long): Column = CdcChunkFps(s)(w, mask)
+  def cdcChunkFpsBin(b: Column, w: Int, mask: Long): Column = CdcChunkFpsBin(b)(w, mask)
+  def varintCost(series: Column): Column = VarintCost(series)()
+  def tokenFps(toks: Column): Column = TokenFps(toks)()
+  def shingleFps(toks: Column, k: Int): Column = ShingleFps(toks)(k)
+  def charShingleFps(s: Column, k: Int): Column = CharShingleFps(s)(k)
+  def modalNgramCount(toks: Column, k: Int): Column = ModalNgramCount(toks)(k)
+  def dtwBand(a: Column, b: Column, band: Int): Column = DtwBand(a, b)(band)
+  def minhashSig(fps: Column, n: Int): Column = MinHashSig(fps)(n)
+  def bandKeys(sig: Column, b: Int, r: Int): Column = BandKeys(sig)(b, r)
+  def simhash(fps: Column, bits: Int): Column = SimHash(fps)(bits)
+  def editWithin(a: Column, b: Column, k: Int): Column = EditWithin(a, b)(k)
+  def jaroWinkler(a: Column, b: Column): Column = JaroWinkler(a, b)()
+  def winnowMins(fps: Column, w: Int): Column = WinnowMins(fps)(w)
   def cosineSim(a: Column, b: Column): Column = toColumn(CosineExpr(toExpression(a), toExpression(b)))
   def dotProduct(a: Column, b: Column): Column = toColumn(DotExpr(toExpression(a), toExpression(b)))
-  def srpBucket(v: Column, bits: Int): Column = toColumn(SrpBucketExpr(toExpression(v), bits))
-  def zorder(a: Column, b: Column, bits: Int): Column =
-    toColumn(ZInterleaveExpr(toExpression(a), toExpression(b), bits))
+  def srpBucket(v: Column, bits: Int): Column = SrpBucket(v)(bits)
+  def zorder(a: Column, b: Column, bits: Int): Column = ZOrder(a, b)(bits)
 }

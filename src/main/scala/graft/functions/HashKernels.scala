@@ -4,7 +4,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Imperative kernels behind [[HashExprs]]. Top-level object → Scala
+/** Imperative kernels behind [[Kernels]], each declared there once
+  * with its types and parameter ranges; the ranges are checked at plan
+  * time, so a kernel does not re-check them per row. Top-level object → Scala
   * emits static forwarders, so generated (Janino) code calls
   * `graft.functions.HashKernels.xxx(...)` directly — one static call
   * per row inside WholeStageCodegen, no boxing, no InternalRow
@@ -146,7 +148,6 @@ object HashKernels {
   }
 
   def minhashSig(fps: ArrayData, n: Int): ArrayData = {
-    require(n <= MH_A.length, s"minhash supports at most ${MH_A.length} hashes, got $n")
     val m = fps.numElements()
     val out = Array.fill(n)(P)
     var j = 0

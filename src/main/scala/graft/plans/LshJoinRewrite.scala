@@ -1,6 +1,8 @@
 package graft.plans
 
-import graft.functions.HashExprs.{CosineExpr, SrpBucketExpr}
+import graft.functions.HashExprs.CosineExpr
+import graft.functions.Kernels.SrpBucket
+import graft.functions.UnaryKernel
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
@@ -42,7 +44,7 @@ case class LshJoinRewrite() extends Rule[LogicalPlan] {
 object LshJoinRewrite {
 
   private def hasSrp(e: Expression): Boolean =
-    e.exists(_.isInstanceOf[SrpBucketExpr])
+    e.exists { case UnaryKernel(SrpBucket, _, _) => true; case _ => false }
 
   // Both spellings of "cosine at least θ": cosine-on-the-left
   // (cos >= θ / cos > θ) AND literal-on-the-left (θ <= cos / θ < cos) —
@@ -69,8 +71,8 @@ object LshJoinRewrite {
               (a.references.subsetOf(l.outputSet) && b.references.subsetOf(r.outputSet)) ||
                 (a.references.subsetOf(r.outputSet) && b.references.subsetOf(l.outputSet))
             if (sidesOk)
-              j.copy(condition = Some(And(
-                EqualTo(SrpBucketExpr(a, bits), SrpBucketExpr(b, bits)), cond)))
+              j.copy(condition = Some(And(EqualTo(
+                SrpBucket.expr(Seq(a), Seq(bits)), SrpBucket.expr(Seq(b), Seq(bits))), cond)))
             else j
           case None => j
         }

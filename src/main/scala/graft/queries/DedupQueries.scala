@@ -282,7 +282,7 @@ object DedupQueries {
 
   /** The BANDED edit-distance bound under the oracle gate: the same
     * ASCII slices as [[dedupEditDistance]], but the predicate is the
-    * native early-exit kernel ([[graft.functions.HashExprs.EditWithinExpr]],
+    * native early-exit kernel ([[graft.functions.Kernels.EditWithin]],
     * O((2k+1)·n) per row) while the ORACLE computes the full O(n·m)
     * levenshtein and compares <= k — so the green row proves the band
     * optimization is exact, not just fast. k = 12 keeps both planted
@@ -799,7 +799,7 @@ object DedupQueries {
   /** Blocked fuzzy entity resolution (record linkage): treat each
     * document's leading 24 chars as an entity mention, block on the
     * mention's first token, and score candidate pairs with the native
-    * Jaro–Winkler kernel ([[graft.functions.HashExprs.JaroWinklerExpr]]
+    * Jaro–Winkler kernel ([[graft.functions.Kernels.JaroWinkler]]
     * — bit-exact to DuckDB's `jaro_winkler_similarity`, so the double
     * passes the hash gate raw, no rounding). The classic linkage
     * shape: a cheap BLOCKING equi-join bounds the candidate set (never
@@ -836,7 +836,7 @@ object DedupQueries {
   /** Winnowing dedup (Schleimer/Wilkerson/Aiken 2003 — the MOSS
     * plagiarism fingerprint): 12-char-gram fingerprints reduced by the
     * native window-min SELECTION kernel
-    * ([[graft.functions.HashExprs.WinnowMinsExpr]], w = 8 — any shared
+    * ([[graft.functions.Kernels.WinnowMins]], w = 8 — any shared
     * substring ≥ 19 chars is guaranteed a common selected
     * fingerprint), then docs pair on selected fps through a df-capped
     * equi-join: fps with document frequency > 8 drop BEFORE pairing so
@@ -1016,7 +1016,7 @@ object DedupQueries {
        |FROM r LEFT JOIN cf USING (fp)""".stripMargin
 
   /** k-token window strings (the general form of [[shinglesSql]]) —
-    * space-joined so the fold matches ShingleFpsExpr exactly. */
+    * space-joined so the fold matches graft_shingle_fps exactly. */
   private def windowsSql(k: Int): String =
     s"CASE WHEN len(tk) >= $k THEN list_transform(range(1, len(tk) - ${k - 2}), " +
       s"i -> ${(0 until k).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]").mkString(" || ' ' || ")}) " +

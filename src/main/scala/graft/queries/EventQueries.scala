@@ -1842,7 +1842,7 @@ object EventQueries {
     * recurrence as a 31-CTE anti-diagonal wavefront (cells on one
     * anti-diagonal are independent — relational DP), so the green hash
     * proves the banded kernel EXACT against an independent spelling,
-    * the [[graft.functions.HashExprs.EditWithinExpr]] contract for
+    * the [[graft.functions.Kernels.EditWithin]] contract for
     * time series. `dtw_le` checks DTW ≤ squared-Euclidean on-data
     * (the diagonal is always a valid warping path). Plan: one fact
     * scan; the DP runs IN-ROW per pair over the domain-bounded series

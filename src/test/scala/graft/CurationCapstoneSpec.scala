@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The 10M-doc END-TO-END curation capstone — the closest local proxy
+/** The END-TO-END curation capstone (200k docs by default, 10M with
+  * SPARK_GRAFT_SCALE_TESTS=1) — the closest local proxy
   * for the 100 TB pretraining pipeline this engine targets, chaining
   * the pillars' library surfaces over the DSv2 doc generator in ONE
   * run with stage row-counts asserted:
   *
-  *   graft-docs (10M) → cross-document line dedup (rebuild) →
+  *   graft-docs (N) → cross-document line dedup (rebuild) →
   *   Gopher-style quality gate → capped near-dup dedup (MinHash LSH +
   *   connected components, keep-rep) → DSIR importance selection
   *   (sample-estimated distribution — the documented 100 TB posture) →
@@ -36,7 +37,7 @@ class CurationCapstoneSpec extends AnyFunSuite {
   private val scaleTests = sys.env.get("SPARK_GRAFT_SCALE_TESTS").contains("1")
   private val capstoneN = if (scaleTests) 10000000L else 200000L
 
-  test("10M-doc curation pipeline: line dedup → gopher → near-dup → DSIR → pack") {
+  test("200k-doc curation pipeline: line dedup → gopher → near-dup → DSIR → pack") {
     import graft.ext.{DedupOps, TextOps}
     val N = capstoneN
     if (!scaleTests)
@@ -214,9 +215,9 @@ class CurationCapstoneSpec extends AnyFunSuite {
     lap(s"stage 5 pack (${m.getLong(0)} sequences, $totalTok tokens)", t4)
 
     val secs = (System.nanoTime() - t0) / 1e9
-    info(f"capstone: 10M docs -> $nGated gated -> $nSurv deduped -> " +
+    info(f"capstone: $N docs -> $nGated gated -> $nSurv deduped -> " +
       f"$nSel selected -> ${m.getLong(0)} sequences in $secs%.1f s")
     assert(secs < 1500.0,
-      f"10M-doc pipeline took $secs%.1f s (pathology bound 1500 s on local[16])")
+      f"$N-doc pipeline took $secs%.1f s (pathology bound 1500 s on local[16])")
   }
 }

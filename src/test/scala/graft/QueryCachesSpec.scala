@@ -173,4 +173,24 @@ class QueryCachesSpec extends AnyFunSuite {
     assert(hits.isEmpty, "build sessions with Harness.session, install graft with " +
       s"GraftExtensions.setup, and opt queries in on their own plan:\n${hits.mkString("\n")}")
   }
+
+  test("source audit: native kernels are declared in the kernel table, not hand-written") {
+    // spelled in pieces so this file does not match itself
+    val codegen = "defineCode" + "Gen("
+    val pretty = "prettyName: String = \"" + "graft_"
+    val table = java.nio.file.Paths.get("src/main/scala/graft/functions/Kernels.scala")
+    // the expressions the table does not declare, with their SQL names
+    val handWritten = Map("CosineExpr" -> "graft_cosine", "DotExpr" -> "graft_dot",
+      "ResizePixelsExpr" -> "graft_resize", "ExplodeShinglesExpr" -> "graft_explode_shingles",
+      "ExplodeFramesExpr" -> "graft_explode_frames", "ExplodeBigramsExpr" -> "graft_explode_bigrams")
+    val classDecl = """case class (\w+)""".r.unanchored
+    val hits = sourceHits("src/main/scala")(f => if (f == table) Nil else Seq(codegen, pretty))
+    val stray = hits.filterNot { h =>
+      val Array(file, line) = h.split(":").take(2)
+      val src = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(file))
+      val owner = (line.toInt - 1 to 0 by -1).map(src.get).collectFirst { case classDecl(c) => c }
+      owner.flatMap(handWritten.get).exists(name => !h.contains(pretty) || h.contains(s"$name\""))
+    }
+    assert(stray.isEmpty, s"declare native kernels in graft.functions.Kernels:\n${stray.mkString("\n")}")
+  }
 }

@@ -1,8 +1,10 @@
 package graft
 
-import graft.functions.HashKernels
+import graft.functions.{HashExprs, HashKernels, Kernels}
 import graft.sql.GraftFunctions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -224,6 +226,122 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(viaSql == chunks(base.take(500)), "codegen path must equal kernel")
   }
 
+  // ---- the kernel table: one declaration, three derived paths --------
+
+  /** Fixed inputs for every declared input type: a typical row, an
+    * all-null row, an all-empty row and a non-ASCII row. Each array pair
+    * has equal lengths per row (graft_dtw's contract). */
+  private lazy val kernelFixture = {
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("s1", StringType), StructField("s2", StringType),
+      StructField("toks", ArrayType(StringType)),
+      StructField("l1", ArrayType(LongType)), StructField("l2", ArrayType(LongType)),
+      StructField("f1", ArrayType(FloatType)), StructField("b1", BinaryType),
+      StructField("q1", LongType), StructField("q2", LongType)))
+    val rows = Seq(
+      Row(1, "spark native engine", "spark native engin", Seq("a", "b", "a", "b", "c"),
+        Seq(5L, 3L, 9L, 1L), Seq(4L, 4L, 8L, 2L), Seq(0.5f, -0.25f, 1.0f),
+        "abcabcxyzzzzzzzzzq".getBytes("UTF-8"), 1536L, 77L),
+      Row(2, null, null, null, null, null, null, null, null, null),
+      Row(3, "", "", Seq.empty[String], Seq.empty[Long], Seq.empty[Long], Seq.empty[Float],
+        Array.emptyByteArray, 0L, 0L),
+      Row(4, "héllo🎉 wörld", "hello world", Seq("x"), Seq(7L), Seq(1L), Seq(0.1f),
+        Array.tabulate(300)(i => (i * 37 % 256).toByte), 1L << 40, 12345L))
+    // an RDD relation, so projections are generated code, not folded locally
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  }
+  private lazy val fixtureColumns: Map[DataType, Seq[String]] = Map(
+    StringType -> Seq("s1", "s2"), ArrayType(StringType) -> Seq("toks"),
+    ArrayType(LongType) -> Seq("l1", "l2"), ArrayType(FloatType) -> Seq("f1"),
+    BinaryType -> Seq("b1"), LongType -> Seq("q1", "q2"))
+
+  test("every declared kernel: SQL == Column and generated == interpreted, on nulls and empty arrays") {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, GenerateUnsafeProjection}
+    val fx = kernelFixture
+    fx.createOrReplaceTempView("kernel_fixture")
+    val input = fx.queryExecution.toRdd.map(_.copy()).collect()
+    assert(Kernels.all.size == 26)
+    assert(Kernels.all.map(_.name).distinct.size == Kernels.all.size)
+    Kernels.all.foreach { k =>
+      val cols = k.inputs.map(_._2).zipWithIndex.map { case (t, i) =>
+        val have = fixtureColumns.getOrElse(t, fail(s"${k.name}: no fixture column of type $t"))
+        have(i % have.size)
+      }
+      val ps = k.params.map(p => math.min(math.max(4L, p.lo), p.hi))
+      val viaSql = spark.sql(s"SELECT ${k.name}(${(cols ++ ps).mkString(", ")}) AS v " +
+        "FROM kernel_fixture ORDER BY id").collect().toSeq
+      val viaColumn = fx.orderBy("id").select(k(cols.map(col): _*)(ps: _*).as("v"))
+        .collect().toSeq
+      assert(viaSql == viaColumn, k.name)
+      assert(viaSql.count(_.isNullAt(0)) == 1, s"${k.name}: only the null row is null")
+      val e = k.expr(cols.map(c => BoundReference(fx.schema.fieldIndex(c),
+        fx.schema(c).dataType, nullable = true)), ps)
+      val code = e.genCode(new CodegenContext).code.toString
+      assert(code.contains(s"graft.functions.HashKernels.${k.method}("), s"${k.name}:\n$code")
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      val interpreted = InterpretedUnsafeProjection.createProjection(Seq(e))
+      input.foreach(r => assert(generated(r).copy() == interpreted(r).copy(), s"${k.name} on $r"))
+    }
+  }
+
+  test("SQL arity is checked: a wrong argument count names the function and its signature") {
+    def err(q: String) = intercept[IllegalArgumentException](spark.sql(q)).getMessage
+    assert(err("SELECT graft_minhash_sig(array(CAST(1 AS BIGINT)))")
+      .contains("graft_minhash_sig(fps, n) takes 2 arguments, got 1"))
+    assert(err("SELECT graft_fingerprint('a', 'b')")
+      .contains("graft_fingerprint(str) takes 1 argument, got 2"))
+    assert(err("SELECT graft_cosine(array(CAST(1.0 AS FLOAT)))")
+      .contains("graft_cosine(a, b) takes 2 arguments, got 1"))
+  }
+
+  test("kernel parameters are checked at plan time, naming the function, the parameter and the value") {
+    def err(q: String) = intercept[IllegalArgumentException](spark.sql(q)).getMessage
+    val fps = "array(CAST(1 AS BIGINT), 2)"
+    assert(err("SELECT graft_shingle_fps(array('a'), 0)").contains("graft_shingle_fps(tokens, k): k = 0"))
+    assert(err(s"SELECT graft_band_keys($fps, -1, 2)").contains("graft_band_keys(sig, b, r): b = -1"))
+    assert(err(s"SELECT graft_minhash_sig($fps, 65)").contains("graft_minhash_sig(fps, n): n = 65"))
+    val vec = "array(CAST(0.5 AS FLOAT))"
+    assert(err(s"SELECT graft_srp_bucket($vec, 70)").contains("graft_srp_bucket(vec, bits): bits = 70"))
+    assert(err("SELECT graft_byte_hist(encode('a', 'UTF-8'), 3)").contains("bins = 3 breaks"))
+    assert(err("SELECT graft_shingle_fps(array('a'), id) FROM range(1)")
+      .contains("k must be an integer literal"))
+    // the Column functions run the same check when they are called
+    val e = intercept[IllegalArgumentException](HashExprs.srpBucket(col("v"), 70))
+    assert(e.getMessage.contains("bits = 70"))
+    // bits = 63 is the widest bucket id that stays a positive long
+    val top = spark.sql(s"SELECT graft_srp_bucket($vec, 63)").head().getLong(0)
+    assert(top >= 0L)
+  }
+
+  test("kernel input types are declared: a wrong-typed input fails analysis with DATATYPE_MISMATCH") {
+    val ints = spark.range(1, 1031).selectExpr("CAST(id AS INT) AS i")
+    def mismatch(e: String): String = {
+      val ex = intercept[AnalysisException](ints.selectExpr(e))
+      assert(ex.getCondition.startsWith("DATATYPE_MISMATCH"), ex.getMessage)
+      ex.getMessage
+    }
+    assert(mismatch("graft_fingerprint(i)").contains("graft_fingerprint(i)"))
+    assert(mismatch("graft_token_fps(array(i))").contains("graft_token_fps(array(i))"))
+    // narrower integral columns still widen into BIGINT inputs
+    val w = ints.selectExpr("graft_log2_millis(i) AS a", "graft_log2_millis(CAST(i AS BIGINT)) AS b",
+      "graft_zorder(i, i + 7, 16) AS z", "graft_zorder(CAST(i AS BIGINT), CAST(i + 7 AS BIGINT), 16) AS y")
+    assert(w.schema("a").dataType == LongType && w.schema("z").dataType == LongType)
+    assert(w.filter("a <> b OR z <> y").count() == 0L)
+    assert(spark.sql("SELECT graft_log2_millis(1024)").head().getLong(0) == 10000L)
+  }
+
+  test("one name per kernel: graft_byte_phash prints under its name; graft_char_shingle_fps is SQL-callable") {
+    val blobs = spark.range(3).selectExpr("encode(CAST(id * 1234567 AS STRING), 'UTF-8') AS b")
+    val ph = blobs.select(graft.ext.MultimodalOps.byteSegGradHash(col("b"), 4))
+    assert(ph.columns.toSeq == Seq("graft_byte_phash(b)"))
+    assert(ph.queryExecution.executedPlan.toString.contains("graft_byte_phash(b"))
+    val viaSql = spark.sql("SELECT graft_char_shingle_fps('abcde', 2) AS v").head().getSeq[Long](0)
+    val viaColumn = spark.range(1).select(HashExprs.charShingleFps(org.apache.spark.sql.functions
+      .lit("abcde"), 2)).head().getSeq[Long](0)
+    assert(viaSql == viaColumn && viaSql.size == 4)
+  }
+
   test("bloom pair from SQL: scalar-subquery build + probe filters like the exact semi-join") {
     import spark.implicits._
     Seq(1L, 5L, 9L, 400L).toDF("k").createOrReplaceTempView("bloom_small")
@@ -265,8 +383,8 @@ class SqlFunctionsSpec extends AnyFunSuite {
     new graft.sql.GraftExtensions().apply(ext)
     // pinned count catches an accidentally dropped builder; distinct
     // catches a duplicated name
-    assert(GraftFunctions.builders.size == 33)
-    assert(GraftFunctions.builders.map(_._1).distinct.size == 33)
+    assert(GraftFunctions.builders.size == 34)
+    assert(GraftFunctions.builders.map(_._1).distinct.size == 34)
   }
 
   test("the shared session is built with the extension: functions resolve without any registration") {
