@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR.
   * One untimed warmup pass first (JVM/codegen/broadcast warmup — without
@@ -43,7 +45,7 @@ object Bench {
       try exec(name) catch {
         case e: Throwable =>
           ok = false
-          errors.getOrElseUpdate(name, String.valueOf(e.getMessage).replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200))
+          errors.getOrElseUpdate(name, String.valueOf(e.getMessage).take(200))
       }
       ((System.nanoTime() - t0) / 1e9, ok)
     }
@@ -74,27 +76,13 @@ object Bench {
     // the same-tree noise bracket it is, and an automated gate can
     // distinguish it from a cross-round change delta. Additive keys —
     // the driver parses "value"/"queries" only.
-    var prevTs = ""
-    val prev: Map[String, Double] =
-      if (subset) Map.empty
-      else {
-        val prevPath = Paths.get("bench_result.json")
-        val prevText =
-          if (Files.exists(prevPath)) Files.readString(prevPath) else ""
-        val prevSf = raw""""sf":"([^"]*)"""".r.findFirstMatchIn(prevText).map(_.group(1))
-        prevTs = raw""""ts":"([^"]*)"""".r.findFirstMatchIn(prevText).map(_.group(1)).getOrElse("")
-        if (!prevSf.contains(sfDir)) Map.empty
-        else {
-          val s = prevText
-          val qStart = s.indexOf("\"queries\":{")
-          if (qStart < 0) Map.empty
-          else {
-            val qEnd = s.indexOf('}', qStart)
-            val body = s.substring(qStart + 11, if (qEnd < 0) s.length else qEnd)
-            raw""""([A-Za-z0-9_]+)":([-0-9.eE+]+)""".r.findAllMatchIn(body)
-              .map(m => m.group(1) -> m.group(2).toDouble).toMap
-          }
-        }
+    val prevPath = Paths.get("bench_result.json")
+    val prevJson =
+      if (subset || !Files.exists(prevPath)) None else Some(Json.read(Files.readString(prevPath)))
+    val prevTs = prevJson.fold("")(_.path("ts").asText(""))
+    val prev: Map[String, Double] = prevJson.filter(_.path("sf").asText() == sfDir)
+      .fold(Map.empty[String, Double]) {
+        _.path("queries").properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
       }
     // Drift re-run (round-14 postmortem: a co-tenant load spike spread
     // three same-code runs 312.6-350.3s and put 2x drifts on queries
@@ -118,10 +106,7 @@ object Bench {
         n -> best
       } else n -> t
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    val errs = Json.write(errors)
     val total = results.map(_._2).sum
     // Bench trend guard: BEFORE overwriting bench_result.json, diff the
     // fresh per-query times against the previous run's full-precision
@@ -136,6 +121,7 @@ object Bench {
     // when the previous map shares no queries (first run / renamed
     // suite).
     def f3(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def d3(v: Double) = BigDecimal(f3(v))
     if (!subset) {
       val cur = results.toMap
       val shared = (cur.keySet intersect prev.keySet).toSeq.sorted
@@ -146,21 +132,20 @@ object Bench {
           .filter(n => cur(n) >= 0.2 && prev(n) > 0) // noise floor
           .map(n => (n, prev(n), cur(n), cur(n) / prev(n)))
           .sortBy(-_._4).take(10)
-        val dJson = drifts.map { case (n, p, c, r) =>
-          s"""{"query":"$n","prev":${f3(p)},"cur":${f3(c)},"ratio":${f3(r)}}"""
-        }.mkString("[", ",", "]")
-        val added = (cur.keySet -- prev.keySet).toSeq.sorted
-        val removed = (prev.keySet -- cur.keySet).toSeq.sorted
-        def names(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-        Files.writeString(Paths.get("BENCH_delta.json"),
-          s"""{"shared_queries":${shared.size},"mass_prev":${f3(massPrev)},""" +
-            s""""mass_cur":${f3(massCur)},"mass_ratio":${f3(massCur / massPrev)},""" +
-            s""""baseline_ts":"$prevTs","cur_ts":"${java.time.Instant.now()}",""" +
-            s""""top_drifts":$dJson,"added":${names(added)},""" +
-            s""""removed":${names(removed)},"sf":"$sfDir"}""" + "\n")
+        Files.writeString(Paths.get("BENCH_delta.json"), Json.write(ListMap(
+          "shared_queries" -> shared.size, "mass_prev" -> d3(massPrev), "mass_cur" -> d3(massCur),
+          "mass_ratio" -> d3(massCur / massPrev), "baseline_ts" -> prevTs,
+          "cur_ts" -> java.time.Instant.now().toString,
+          "top_drifts" -> drifts.map { case (n, p, c, r) =>
+            ListMap("query" -> n, "prev" -> d3(p), "cur" -> d3(c), "ratio" -> d3(r))
+          },
+          "added" -> (cur.keySet -- prev.keySet).toSeq.sorted,
+          "removed" -> (prev.keySet -- cur.keySet).toSeq.sorted, "sf" -> sfDir)) + "\n")
       }
     }
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","ts":"${java.time.Instant.now()}","queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
+    val full = Json.write(ListMap("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "ts" -> java.time.Instant.now().toString, "queries" -> ListMap(results: _*),
+      "errors" -> errors, "sf" -> sfDir))
     // Subset runs land in a scratch file: bench_result.json is the
     // round-over-round delta BASELINE and must only ever hold a full
     // inventory map (a 2-query local iteration would otherwise wipe it).
@@ -175,8 +160,8 @@ object Bench {
     // full-precision map is always in bench_result.json (committed).
     val budget = 1800
     val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","nq":${results.size},"queries":{"""
-    val tail = s"""},"errors":$errs,"sf":"$sfDir"}"""
-    val entries = results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + f3(v) }
+    val tail = s"""},"errors":$errs,"sf":${Json.write(sfDir)}}"""
+    val entries = results.sortBy(-_._2).map { case (k, v) => Json.write(k) + ":" + f3(v) }
     val body = new StringBuilder
     var kept = 0
     var overflow = false
@@ -193,7 +178,7 @@ object Bench {
     }
     val omitted = results.size - kept
     val json = head + body +
-      (if (omitted > 0) s"""},"omitted_cheapest":$omitted,"full":"bench_result.json","errors":$errs,"sf":"$sfDir"}"""
+      (if (omitted > 0) s"""},"omitted_cheapest":$omitted,"full":"bench_result.json","errors":$errs,"sf":${Json.write(sfDir)}}"""
        else tail)
     println(json)
     spark.stop()

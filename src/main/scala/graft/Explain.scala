@@ -9,14 +9,12 @@ import org.apache.spark.sql.execution.FormattedMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val only = args.drop(1).toSet
+    val names = Harness.select(Some(args.drop(1).toSet).filter(_.nonEmpty), "graft.Explain")
     val spark = Harness.session()
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      if (only.isEmpty || only(name)) {
-        println(s"\n========== $name ==========")
-        try println(Harness.run(spark, name, sfDir)(_.queryExecution.explainString(FormattedMode)))
-        catch { case e: Throwable => println(s"[explain failed] $e") }
-      }
+    names.foreach { name =>
+      println(s"\n========== $name ==========")
+      try println(Harness.run(spark, name, sfDir)(_.queryExecution.explainString(FormattedMode)))
+      catch { case e: Throwable => println(s"[explain failed] $e") }
     }
     spark.stop()
   }

@@ -47,16 +47,19 @@ object Harness {
 
   lazy val knobs: Knobs = Knobs.parse(sys.env)
 
-  /** The declared query names, sorted, restricted by `SPARK_GRAFT_ONLY`
-    * (a name outside the inventory fails rather than running nothing). */
-  def selected: Seq[String] = {
+  /** The declared query names, sorted, restricted by `SPARK_GRAFT_ONLY`. */
+  def selected: Seq[String] = select(knobs.only, "SPARK_GRAFT_ONLY")
+
+  /** The declared query names in `only` (all of them when `None`),
+    * sorted. A name outside the inventory fails rather than running
+    * nothing; the message names it and `source`, where it came from. */
+  def select(only: Option[Set[String]], source: String): Seq[String] = {
     val all = SparkEntry.queries.keySet
-    knobs.only.foreach { only =>
-      val unknown = only -- all
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    only.foreach { o =>
+      val unknown = o -- all
+      require(unknown.isEmpty, s"$source names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
     }
-    all.toSeq.sorted.filter(n => knobs.only.forall(_.contains(n)))
+    all.toSeq.sorted.filter(n => only.forall(_.contains(n)))
   }
 
   def session(cpus: Int = knobs.cpus): SparkSession = {

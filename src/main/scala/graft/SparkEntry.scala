@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * `queries` is the declared operator inventory (SURVEY.md §2 parity
-  * surface + extension suites); `oracleSql` gives the DuckDB-equivalent
-  * for every SQL-expressible entry, with column names aligned.
+/** The declared query inventory (SURVEY.md §2 parity surface plus the
+  * extension suites). Each suite declares its queries once, as a
+  * `Seq[QueryDef]` of name, builder and DuckDB oracle; `all` is their
+  * concatenation, and `queries` and `oracleSql` are views of it. A name
+  * declared twice fails initialisation, naming the name.
   */
 object SparkEntry {
 
@@ -14,13 +15,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1Pricing(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val all: Seq[QueryDef] = unique(
     ParityOps.queries ++ Relational.queries ++ TextQueries.queries ++
       DedupQueries.queries ++ SimQueries.queries ++ EventQueries.queries ++
-      MultimodalQueries.queries ++ GeoQueries.queries
+      MultimodalQueries.queries ++ GeoQueries.queries)
 
-  def oracleSql: Map[String, String] =
-    ParityOps.oracleSql ++ Relational.oracleSql ++ TextQueries.oracleSql ++
-      DedupQueries.oracleSql ++ SimQueries.oracleSql ++ EventQueries.oracleSql ++
-      MultimodalQueries.oracleSql ++ GeoQueries.oracleSql
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(d => d.name -> d.build).toMap
+
+  val oracleSql: Map[String, String] = all.map(d => d.name -> d.oracle).toMap
+
+  /** `defs` unchanged, or an IllegalArgumentException naming every name
+    * declared more than once. */
+  private[graft] def unique(defs: Seq[QueryDef]): Seq[QueryDef] = {
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty, s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    defs
+  }
 }

@@ -296,31 +296,41 @@ object GraftStage {
     * back into unbounded waits. */
   val DefaultAsyncTimeout: Duration = Duration(60, java.util.concurrent.TimeUnit.SECONDS)
 
+  /** The one bounded bridge behind both async iterators: a daemon
+    * thread runs `produce(emit)` and `emit` puts each value, boxed so a
+    * null element passes, into a `maxsize`-bounded queue (a full queue
+    * blocks the producer: the reference's `maxsize` backpressure). The
+    * end, or the user's original exception, follows the last value.
+    * `take()` blocks for the next value: `Some(v)` per element, `None`
+    * at the end and ever after; a failure is thrown once. */
+  private final class Pump[T](maxsize: Int, name: String)(produce: (T => Unit) => Unit) {
+    private val queue =
+      new java.util.concurrent.LinkedBlockingQueue[Either[Throwable, Option[T]]](math.max(1, maxsize))
+    @volatile private var done = false
+    private val thread = new Thread(() => {
+      try { produce(v => queue.put(Right(Some(v)))); queue.put(Right(None)) }
+      catch { case e: Throwable => queue.put(Left(GraftErrors.userCause(e))) }
+    }, name)
+    thread.setDaemon(true)
+    thread.start()
+
+    def take(): Option[T] =
+      if (done) None
+      else queue.take() match {
+        case Right(v) => done = v.isEmpty; v
+        case Left(e) => done = true; throw e
+      }
+  }
+
   /** Async-pull iterator over a stage's values: `next()` completes with
     * `Some(value)` per element and `None` at exhaustion; a failure in
     * the pipeline fails the Future with the user's original exception.
     * Sequential-consumption contract (await each `next()` before the
     * next call), like any async-iterator protocol. */
   final class AsyncValueIterator[T] private[core] (source: Iterator[T], maxsize: Int) {
-    private val END = new AnyRef
-    private val queue = new java.util.concurrent.LinkedBlockingQueue[AnyRef](math.max(1, maxsize))
-    private val producer = new Thread(() => {
-      try { source.foreach(v => queue.put(v.asInstanceOf[AnyRef])); queue.put(END) }
-      catch { case e: Throwable => queue.put(Failed(GraftErrors.userCause(e))) }
-    }, "graft-async-drain")
-    producer.setDaemon(true)
-    producer.start()
-    private case class Failed(e: Throwable)
-    @volatile private var exhausted = false
+    private val pump = new Pump[T](maxsize, "graft-async-drain")(source.foreach(_))
 
-    def next(): Future[Option[T]] = Future {
-      if (exhausted) None
-      else queue.take() match {
-        case END => exhausted = true; None
-        case Failed(e) => exhausted = true; throw e
-        case v => Some(v.asInstanceOf[T])
-      }
-    }(asyncEc)
+    def next(): Future[Option[T]] = Future(pump.take())(asyncEc)
 
     /** Gather the remainder — `await stage` ergonomics on top of the
       * async pull. */
@@ -336,46 +346,24 @@ object GraftStage {
 
   /** Async-pull iterator bridged into a SYNC `Iterator` through a
     * `maxsize`-bounded queue — the pump half of [[fromAsyncIterator]],
-    * exposed for tests. A daemon pump awaits each `nextF()` Future
+    * exposed for tests. The pump awaits each `nextF()` Future
     * SEQUENTIALLY (the async-iterator protocol: never request element
-    * i+1 before i resolves) and `put`s into the bounded queue; when
-    * the queue is full the pump blocks BEFORE requesting the next
-    * element, so the producer is never advanced more than
-    * `maxsize + 1` elements past the consumer — the reference's
-    * `maxsize` backpressure contract. A failed Future surfaces on the
-    * consumer side with the user's ORIGINAL exception. */
+    * i+1 before i resolves) and blocks on a full queue BEFORE
+    * requesting the next element, so the producer is never advanced
+    * more than `maxsize + 1` elements past the consumer. A failed
+    * Future surfaces on the consumer side with the user's ORIGINAL
+    * exception. */
   final class AsyncSourceIterator[T] private[graft] (
       nextF: () => Future[Option[T]], maxsize: Int) extends Iterator[T] {
-    private val END = new AnyRef
-    private case class Failed(e: Throwable)
-    private val queue = new java.util.concurrent.LinkedBlockingQueue[AnyRef](math.max(1, maxsize))
-    private val pump = new Thread(() => {
-      try {
-        var done = false
-        while (!done) {
-          Await.result(nextF(), Duration.Inf) match {
-            case Some(v) => queue.put(v.asInstanceOf[AnyRef])
-            case None => done = true; queue.put(END)
-          }
-        }
-      } catch { case e: Throwable => queue.put(Failed(GraftErrors.userCause(e))) }
-    }, "graft-async-source-pump")
-    pump.setDaemon(true)
-    pump.start()
-    private var head: AnyRef = _
-    private var exhausted = false
-    def hasNext: Boolean = {
-      if (exhausted) return false
-      if (head == null) queue.take() match {
-        case END => exhausted = true
-        case Failed(e) => exhausted = true; throw e
-        case v => head = v
-      }
-      !exhausted
-    }
+    private val pump = new Pump[T](maxsize, "graft-async-source-pump")({ emit =>
+      var v = Await.result(nextF(), Duration.Inf)
+      while (v.isDefined) { emit(v.get); v = Await.result(nextF(), Duration.Inf) }
+    })
+    private var head: Option[T] = None
+    def hasNext: Boolean = head.isDefined || { head = pump.take(); head.isDefined }
     def next(): T = {
       if (!hasNext) throw new NoSuchElementException("async source exhausted")
-      val v = head; head = null; v.asInstanceOf[T]
+      val v = head.get; head = None; v
     }
   }
 

@@ -50,10 +50,6 @@ object DedupOps {
     * DuckDB: list_transform(shingles, s -> <fingerprint fold>). */
   def shingleFps(toks: Column, k: Int): Column = HashExprs.shingleFps(toks, k)
 
-  /** Per-token polynomial fingerprints.
-    * DuckDB: list_transform(tokens, t -> <fingerprint fold>). */
-  def tokenFps(toks: Column): Column = HashExprs.tokenFps(toks)
-
   /** MinHash signature: n permutation-hashes h_i(f) = (f·a_i +
     * 104729·(i+1)) mod P with a_i from [[graft.functions.HashKernels
     * .MH_A]] (64 independent splitmix64 constants), each taking the
@@ -84,14 +80,6 @@ object DedupOps {
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("bigint") /
       size(array_union(a, b)).cast("bigint")
-
-  /** SimHash over token fingerprints, `bits` bits: bit j of the
-    * signature is set iff Σ_tokens (2·bit_j(fp) − 1) > 0. Near-dup docs
-    * differ in O(1) signature bits → dedup by hamming-ball or
-    * band-split on the signature halves. DuckDB spelling uses
-    * (f % 2^(j+1)) >= 2^j bit extraction — pure arithmetic, identical
-    * result for the non-negative fps used here. */
-  def simhash(fps: Column, bits: Int): Column = HashExprs.simhash(fps, bits)
 
   /** The full near-duplicate pipeline as one call: tokens → k-shingle
     * fingerprints → `hashes` minhashes → `bands` LSH bands → bucket
@@ -420,7 +408,7 @@ object DedupOps {
     // single-row-group scan otherwise fuses tokenize+fps+simhash into
     // a 2-task stage (SkewOps.fanOut scaladoc; measured below).
     hammingPairs(graft.ext.SkewOps.fanOut(df).select(col(idCol).as("_id"),
-        simhash(tokenFps(TextOps.tokens(col(textCol))), bits).as("sig")),
+        HashExprs.simhash(HashExprs.tokenFps(TextOps.tokens(col(textCol))), bits).as("sig")),
       "_id", "sig", bits, b0, maxHamming, maxBucket)
   }
 

@@ -28,13 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object SimOps {
 
-  /** Cosine similarity (native single-pass kernel). */
-  def cosine(a: Column, b: Column): Column = HashExprs.cosineSim(a, b)
-
-  /** Sign-random-projection LSH bucket id over `bits` deterministic
-    * hyperplanes (Charikar SimHash for real vectors). */
-  def srpBucket(v: Column, bits: Int): Column = HashExprs.srpBucket(v, bits)
-
   /** Brute-force exact top-k neighbors: every (query, corpus) cosine,
     * ranked per query. `queries` must be small — it is broadcast, so
     * the corpus is scanned once and never shuffled pre-rank.
@@ -44,7 +37,7 @@ object SimOps {
     corpus.crossJoin(broadcast(queries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        cosine(col("embedding"), col("q_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= k)
@@ -60,9 +53,9 @@ object SimOps {
   def topkLshMultiProbe(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bc = corpus.select(col("vec_id"), col("embedding"),
-      srpBucket(col("embedding"), bits).as("bucket"))
+      HashExprs.srpBucket(col("embedding"), bits).as("bucket"))
     val probes = queries.select(col("q_id"), col("q_vec"),
-        srpBucket(col("q_vec"), bits).as("b0"))
+        HashExprs.srpBucket(col("q_vec"), bits).as("b0"))
       .withColumn("flip", explode(sequence(lit(0), lit(bits))))
       // flip == bits probes the home bucket; otherwise XOR plane `flip`
       .select(col("q_id"), col("q_vec"),
@@ -71,7 +64,7 @@ object SimOps {
     bc.join(broadcast(probes), "bucket")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        cosine(col("embedding"), col("q_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"))
       .distinct()
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
@@ -97,7 +90,7 @@ object SimOps {
   def ivfAssign(corpus: DataFrame, centroids: DataFrame): DataFrame =
     corpus.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("embedding"), col("c_id"),
-        cosine(col("embedding"), col("c_vec")).as("cc"))
+        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cc"))
       .groupBy(col("vec_id"))
       .agg(max_by(struct(col("embedding"), col("c_id")),
         struct(col("cc"), (-col("c_id")).as("nc"))).as("best"))
@@ -115,7 +108,7 @@ object SimOps {
     import org.apache.spark.sql.expressions.Window
     val probes = queries.crossJoin(broadcast(centroids))
       .select(col("q_id"), col("q_vec"), col("c_id"),
-        cosine(col("q_vec"), col("c_vec")).as("qc"))
+        HashExprs.cosineSim(col("q_vec"), col("c_vec")).as("qc"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("qc").desc, col("c_id"))))
       .filter(col("rk") <= nprobe)
@@ -123,7 +116,7 @@ object SimOps {
     assigned.join(broadcast(probes), "cent")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        cosine(col("embedding"), col("q_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= k)
@@ -148,7 +141,7 @@ object SimOps {
   def embNearDupPairs(corpus: DataFrame, bits: Int, threshold: Double,
       maxBucket: Int = 0): DataFrame = {
     val b = corpus.select(col("vec_id"), col("embedding"),
-      srpBucket(col("embedding"), bits).as("bucket"))
+      HashExprs.srpBucket(col("embedding"), bits).as("bucket"))
     val scored =
       if (maxBucket > 0) {
         val pairs = b.groupBy(col("bucket"))
@@ -161,12 +154,12 @@ object SimOps {
         pairs
           .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
           .join(e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
-          .select(col("vec_a"), col("vec_b"), cosine(col("emb_a"), col("emb_b")).as("cos"))
+          .select(col("vec_a"), col("vec_b"), HashExprs.cosineSim(col("emb_a"), col("emb_b")).as("cos"))
       } else
         b.as("a").join(b.as("b"),
             col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
           .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-            cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+            HashExprs.cosineSim(col("a.embedding"), col("b.embedding")).as("cos"))
     scored.filter(col("cos") >= threshold)
   }
 
@@ -209,7 +202,7 @@ object SimOps {
       val cdf = cs.toSeq.toDF("c_id", "c_vec")
       e.crossJoin(broadcast(cdf))
         .select(col("vec_id"), col("embedding"), col("c_id"),
-          cosine(col("embedding"), col("c_vec")).as("cc"))
+          HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cc"))
         .groupBy(col("vec_id"))
         .agg(max_by(struct(col("embedding"), col("c_id")),
           struct(col("cc"), (-col("c_id")).as("nc"))).as("best"),
@@ -259,7 +252,7 @@ object SimOps {
     // this kernel is too cheap for the barrier to pay. Left
     // unpersisted; revisit only if `bits` grows an order of magnitude.
     val b0 = corpus.select(col("vec_id"), col("embedding"),
-      srpBucket(col("embedding"), bits).as("bucket"))
+      HashExprs.srpBucket(col("embedding"), bits).as("bucket"))
     val b = if (maxBucket > 0) {
       val kept = b0.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
         .filter(col("n") <= maxBucket).select(col("bucket"))
@@ -268,7 +261,7 @@ object SimOps {
     b.as("a").join(b.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("nbr_id"),
-        cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+        HashExprs.cosineSim(col("a.embedding"), col("b.embedding")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("vec_id")).orderBy(col("cos").desc, col("nbr_id"))).cast("bigint"))
       .filter(col("rk") <= k)
@@ -276,7 +269,7 @@ object SimOps {
   }
 
   /** LSH-bucketed ANN top-k: corpus and queries are both bucketed by
-    * [[srpBucket]]; candidates are corpus rows in the query's bucket
+    * [[HashExprs.srpBucket]]; candidates are corpus rows in the query's bucket
     * (equi-join on the bucket id — shuffle-by-bucket, never all-pairs),
     * then exact cosine + per-query rank within candidates. Recall is
     * tuned by `bits` (fewer bits → bigger buckets → higher recall,
@@ -284,13 +277,13 @@ object SimOps {
   def topkLsh(corpus: DataFrame, queries: DataFrame, k: Int, bits: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bc = corpus.select(col("vec_id"), col("embedding"),
-      srpBucket(col("embedding"), bits).as("bucket"))
+      HashExprs.srpBucket(col("embedding"), bits).as("bucket"))
     val bq = broadcast(queries.select(col("q_id"), col("q_vec"),
-      srpBucket(col("q_vec"), bits).as("bucket")))
+      HashExprs.srpBucket(col("q_vec"), bits).as("bucket")))
     bc.join(bq, "bucket")
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        cosine(col("embedding"), col("q_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= k)
@@ -467,7 +460,7 @@ object SimOps {
       val p = e.filter(!col("vec_id").isin(ids: _*))
         .crossJoin(broadcast(cdf))
         .select(col("vec_id"), col("embedding"),
-          cosine(col("embedding"), col("c_vec")).as("cc"))
+          HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cc"))
         .groupBy(col("vec_id"))
         .agg(max(col("cc")).as("maxcos"), first(col("embedding")).as("emb"))
         .agg(min_by(struct(col("vec_id"), col("maxcos"), col("emb")),
@@ -515,7 +508,7 @@ object SimOps {
     val seed = QueryCaches.checkpoint(
       entry.join(e.select(col("vec_id").as("cur"), col("embedding").as("cvec")), "cur")
         .select(col("q_id"), col("q_vec"), col("cur"),
-          cosine(col("cvec"), col("q_vec")).as("cur_cos"),
+          HashExprs.cosineSim(col("cvec"), col("q_vec")).as("cur_cos"),
           lit(0L).as("steps"), lit(false).as("done")))
     val walked = QueryCaches.iterate(seed, maxSteps) { state =>
       val live = state.filter(!col("done"))
@@ -523,7 +516,7 @@ object SimOps {
         .filter(col("dst") =!= col("q_id"))
         .join(e.select(col("vec_id").as("dst"), col("embedding").as("dvec")), "dst")
         .select(col("q_id"), col("dst"),
-          cosine(col("dvec"), col("q_vec")).as("c"))
+          HashExprs.cosineSim(col("dvec"), col("q_vec")).as("c"))
       val best = cand.groupBy(col("q_id"))
         .agg(max_by(struct(col("dst"), col("c")),
           struct(col("c"), (-col("dst")).as("nd"))).as("b"))
@@ -585,7 +578,7 @@ object SimOps {
     val seed = QueryCaches.checkpoint(
       entry.join(e.select(col("vec_id").as("id"), col("embedding").as("ivec")), "id")
         .join(q, "q_id")
-        .select(col("q_id"), col("id"), cosine(col("ivec"), col("q_vec")).as("cos"),
+        .select(col("q_id"), col("id"), HashExprs.cosineSim(col("ivec"), col("q_vec")).as("cos"),
           lit(true).as("inb")))
     // rank candidates-for-the-beam first (inb-or-new rows), so
     // `rk <= width` selects exactly the rows the two-relation spelling
@@ -604,7 +597,7 @@ object SimOps {
       val scored = cand
         .join(e.select(col("vec_id").as("id"), col("embedding").as("ivec")), "id")
         .join(q, "q_id")
-        .select(col("q_id"), col("id"), cosine(col("ivec"), col("q_vec")).as("cos"),
+        .select(col("q_id"), col("id"), HashExprs.cosineSim(col("ivec"), col("q_vec")).as("cos"),
           lit(true).as("elig"))
       state.select(col("q_id"), col("id"), col("cos"), col("inb").as("elig"))
         .unionAll(scored)

@@ -3,9 +3,11 @@ package graft.queries
 import graft.ext.{DedupOps, TextOps}
 import graft.ext.DedupOps._
 import graft.ext.TextOps.{fingerprint, tokens}
+import graft.functions.HashExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleFragments._
 import Tables._
 
 /** Deduplication suite over `documents` (LLM-pipeline pillar #1).
@@ -396,8 +398,8 @@ object DedupQueries {
     * shape as LSH). Pure arithmetic bit extraction, engine-portable. */
   def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame =
     docs(spark, sfDir)
-      .select(col("doc_id"), DedupOps.tokenFps(tokens(col("text"))).as("fps"))
-      .select(col("doc_id"), simhash(col("fps"), 30).as("simhash"))
+      .select(col("doc_id"), HashExprs.tokenFps(tokens(col("text"))).as("fps"))
+      .select(col("doc_id"), HashExprs.simhash(col("fps"), 30).as("simhash"))
 
   /** n-gram Jaccard as a pairwise operator: 3-gram similarity of each
     * consecutive doc pair — a deterministic non-empty pair set that
@@ -735,7 +737,7 @@ object DedupQueries {
       .join(emb.select(col("vec_id").as("kb"), col("embedding").as("eb")),
         pmod(col("id_b"), lit(SHIFT)) === col("kb"))
       .select(col("id_a"), col("id_b"), col("inter"), col("uni"),
-        graft.ext.SimOps.cosine(col("ea"), col("eb")).as("cos"))
+        HashExprs.cosineSim(col("ea"), col("eb")).as("cos"))
       .filter(col("cos") >= 0.99)
   }
 
@@ -948,50 +950,9 @@ object DedupQueries {
       .select(col("doc_id"), col("maybe_dup"), col("indeed").isNotNull.as("actual_dup"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_bloom_screen" -> (dedupBloomScreen _),
-    "dedup_sorted_neighborhood" -> (dedupSortedNeighborhood _),
-    "dedup_entity_jw" -> (dedupEntityJw _),
-    "dedup_winnow" -> (dedupWinnow _),
-    "dedup_entity_clusters" -> (dedupEntityClusters _),
-    "dedup_prefix_join_capped" -> (dedupPrefixJoinCapped _),
-    "curate_dup_rate_by_source" -> (curateDupRateBySource _),
-    "dedup_hybrid" -> (dedupHybrid _),
-    "dedup_prefix_join" -> (dedupPrefixJoin _),
-    "dedup_source_sketch" -> (dedupSourceSketch _),
-    "dedup_containment" -> (dedupContainment _),
-    "dedup_canonical" -> (dedupCanonical _),
-    "dedup_char_jaccard" -> (dedupCharJaccard _),
-    "dedup_simhash_pairs" -> (dedupSimhashPairs _),
-    "dedup_simhash_pairs_capped" -> (dedupSimhashPairsCapped _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_cluster_histogram" -> (dedupClusterHistogram _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_index_persist" -> (dedupIndexPersist _),
-    "dedup_index_compact" -> (dedupIndexCompact _),
-    "dedup_index_delete" -> (dedupIndexDelete _),
-    "dedup_edit_distance" -> (dedupEditDistance _),
-    "dedup_edit_within" -> (dedupEditWithin _),
-    "curate_decontaminate_near" -> (curateDecontaminateNear _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_substring" -> (dedupSubstring _),
-    "dedup_minhash_est" -> (dedupMinhashEst _),
-    "dedup_band_sweep" -> (dedupBandSweep _),
-    "dedup_near" -> (dedupNear _),
-    "dedup_near_capped" -> (dedupNearCapped _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_jaccard" -> (dedupJaccard _))
-
   // ---- DuckDB oracle spellings -------------------------------------
   // Shared fragments (kept textually identical across queries so the
   // oracle exercises the same arithmetic as the Spark expressions).
-
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
-
-  private def fpFold(v: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split($v, ''), ch -> CAST(unicode(ch) AS BIGINT))), " +
-      s"(a, b) -> (a * 31 + b) % 1000000007)"
 
   private val shinglesSql =
     s"CASE WHEN len(tk) >= 3 THEN list_transform(range(1, len(tk) - 1), " +
@@ -1000,14 +961,14 @@ object DedupQueries {
   /** Shared by dedup_incremental (from-scratch) and dedup_index_persist
     * (from the persisted bucketed index) — one spelling, two plans. */
   private lazy val incrementalOracleSql: String =
-    s"""WITH cf AS (SELECT ${fpFold("text")} AS fp, COUNT(*) AS n_corpus
+    s"""WITH cf AS (SELECT ${foldSql("text")} AS fp, COUNT(*) AS n_corpus
        |           FROM documents GROUP BY 1),
        |batch AS (SELECT doc_id + 1000000 AS doc_id, text FROM documents
        |          UNION ALL SELECT doc_id + 2000000,
        |            substr(text, strpos(text, ' ') + 1) FROM documents
        |          UNION ALL SELECT doc_id + 3000000, text FROM documents
        |          WHERE doc_id % 5 = 0),
-       |bf AS (SELECT doc_id, ${fpFold("text")} AS fp FROM batch),
+       |bf AS (SELECT doc_id, ${foldSql("text")} AS fp FROM batch),
        |r AS (SELECT doc_id, fp, CAST(row_number() OVER (PARTITION BY fp
        |        ORDER BY doc_id) AS BIGINT) AS rk FROM bf)
        |SELECT r.doc_id, r.fp, COALESCE(n_corpus, 0) AS n_corpus,
@@ -1062,9 +1023,9 @@ object DedupQueries {
       |      THEN CAST(power(2, j) AS BIGINT) ELSE CAST(0 AS BIGINT) END)),
       |    (a, b) -> a + b)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "dedup_bloom_screen" ->
-      s"""WITH cfp AS (SELECT ${fpFold("text")} AS fp FROM documents),
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("dedup_bloom_screen", dedupBloomScreen,
+      s"""WITH cfp AS (SELECT ${foldSql("text")} AS fp FROM documents),
          |f AS (SELECT DISTINCT pos FROM (
          |    SELECT unnest([(fp*31+7) % 1000000007 % 4096,
          |                   (fp*37+11) % 1000000007 % 4096,
@@ -1074,31 +1035,31 @@ object DedupQueries {
          |          UNION ALL
          |          SELECT doc_id + 2000000, substr(text, strpos(text, ' ') + 1)
          |            FROM documents),
-         |bfp AS (SELECT doc_id, ${fpFold("text")} AS fp FROM batch)
+         |bfp AS (SELECT doc_id, ${foldSql("text")} AS fp FROM batch)
          |SELECT doc_id,
          |  (fp*31+7) % 1000000007 % 4096 IN (SELECT pos FROM f) AND
          |  (fp*37+11) % 1000000007 % 4096 IN (SELECT pos FROM f) AND
          |  (fp*41+13) % 1000000007 % 4096 IN (SELECT pos FROM f) AS maybe_dup,
          |  fp IN (SELECT fp FROM cfp) AS actual_dup
-         |FROM bfp""".stripMargin,
-    "dedup_sorted_neighborhood" ->
+         |FROM bfp""".stripMargin),
+    QueryDef("dedup_sorted_neighborhood", dedupSortedNeighborhood,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |key_t AS (SELECT doc_id, array_to_string(list_sort(tk), ' ') AS k FROM tk_t),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |r AS (SELECT doc_id, row_number() OVER (ORDER BY k, doc_id) AS rk FROM key_t),
          |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
          |      FROM r a JOIN r b ON b.rk > a.rk AND b.rk <= a.rk + 5)
          |SELECT doc_a, doc_b, $jaccardSql AS jaccard
          |FROM p JOIN (SELECT doc_id AS doc_a, fps AS fps_a FROM fp_t) fa USING (doc_a)
          |       JOIN (SELECT doc_id AS doc_b, fps AS fps_b FROM fp_t) fb USING (doc_b)
-         |WHERE $jaccardSql >= 0.7""".stripMargin,
-    "dedup_canonical" ->
+         |WHERE $jaccardSql >= 0.7""".stripMargin),
+    QueryDef("dedup_canonical", dedupCanonical,
       s"""WITH RECURSIVE corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |bands AS (SELECT doc_id, j AS band, $bandSql AS sig
          |          FROM mh_t, (SELECT unnest(range(0, 16)) AS j)),
@@ -1128,12 +1089,12 @@ object DedupQueries {
          |               ORDER BY q.quality DESC, cl.id) AS rk
          |      FROM cl JOIN q ON q.doc_id = cl.id)
          |SELECT cluster_rep, id AS kept_id, quality AS best_quality, n_members
-         |FROM m WHERE rk = 1""".stripMargin,
-    "dedup_clusters" ->
+         |FROM m WHERE rk = 1""".stripMargin),
+    QueryDef("dedup_clusters", dedupClusters,
       s"""WITH RECURSIVE corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |bands AS (SELECT doc_id, j AS band, $bandSql AS sig
          |          FROM mh_t, (SELECT unnest(range(0, 16)) AS j)),
@@ -1150,12 +1111,12 @@ object DedupQueries {
          |reach AS (SELECT a, b FROM sym
          |          UNION
          |          SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-         |SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep FROM reach GROUP BY a""".stripMargin,
-    "dedup_cluster_histogram" ->
+         |SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep FROM reach GROUP BY a""".stripMargin),
+    QueryDef("dedup_cluster_histogram", dedupClusterHistogram,
       s"""WITH RECURSIVE corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |bands AS (SELECT doc_id, j AS band, $bandSql AS sig
          |          FROM mh_t, (SELECT unnest(range(0, 16)) AS j)),
@@ -1182,12 +1143,12 @@ object DedupQueries {
          |SELECT sz AS cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
          |  sz * CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  (1000 * sz * CAST(COUNT(*) AS BIGINT)) // n_tot AS mass_milli
-         |FROM sizes CROSS JOIN tot GROUP BY sz, n_tot""".stripMargin,
-    "dedup_winnow" ->
+         |FROM sizes CROSS JOIN tot GROUP BY sz, n_tot""".stripMargin),
+    QueryDef("dedup_winnow", dedupWinnow,
       s"""WITH corpus AS ($corpusNearSql),
          |fp_t AS (SELECT doc_id, CASE WHEN len(text) >= 12
          |    THEN list_transform(range(1, len(text) - 10),
-         |           i -> ${fpFold("substr(text, i, 12)")})
+         |           i -> ${foldSql("substr(text, i, 12)")})
          |    ELSE [] END AS fps FROM corpus),
          |mins AS (SELECT doc_id, CASE WHEN len(fps) = 0 THEN []
          |    WHEN len(fps) < 8 THEN [list_min(fps)]
@@ -1198,8 +1159,8 @@ object DedupQueries {
          |pr AS (SELECT sel.doc_id, sel.fp FROM sel JOIN rare USING (fp))
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
          |FROM pr a JOIN pr b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING COUNT(*) >= 3""".stripMargin,
-    "dedup_entity_clusters" ->
+         |GROUP BY 1, 2 HAVING COUNT(*) >= 3""".stripMargin),
+    QueryDef("dedup_entity_clusters", dedupEntityClusters,
       s"""WITH RECURSIVE m AS (SELECT doc_id, substr(text, 1, 24) AS mention,
          |             string_split(substr(text, 1, 24), ' ')[1] AS blk
          |           FROM documents),
@@ -1211,23 +1172,23 @@ object DedupQueries {
          |reach AS (SELECT a, b FROM sym
          |          UNION
          |          SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-         |SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep FROM reach GROUP BY a""".stripMargin,
-    "dedup_entity_jw" ->
+         |SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep FROM reach GROUP BY a""".stripMargin),
+    QueryDef("dedup_entity_jw", dedupEntityJw,
       s"""WITH m AS (SELECT doc_id, substr(text, 1, 24) AS mention,
          |             string_split(substr(text, 1, 24), ' ')[1] AS blk
          |           FROM documents)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |       jaro_winkler_similarity(a.mention, b.mention) AS jw
          |FROM m a JOIN m b ON a.blk = b.blk AND a.doc_id < b.doc_id
-         |WHERE jaro_winkler_similarity(a.mention, b.mention) >= 0.92""".stripMargin,
-    "dedup_edit_within" ->
+         |WHERE jaro_winkler_similarity(a.mention, b.mention) >= 0.92""".stripMargin),
+    QueryDef("dedup_edit_within", dedupEditWithin,
       s"""SELECT doc_id, levenshtein(a, b) <= 12 AS within_12
          |FROM (SELECT doc_id,
          |        substr(regexp_replace(text, '[^ -~]', '', 'g'), 1, 80) AS a,
          |        substr(regexp_replace(substr(text, strpos(text, ' ') + 1),
          |          '[^ -~]', '', 'g'), 1, 80) AS b
-         |      FROM documents)""".stripMargin,
-    "dedup_edit_distance" ->
+         |      FROM documents)""".stripMargin),
+    QueryDef("dedup_edit_distance", dedupEditDistance,
       s"""SELECT doc_id,
          |  CAST(levenshtein(a, b) AS BIGINT) AS edit_dist,
          |  CAST(length(a) AS BIGINT) AS len_a,
@@ -1236,19 +1197,19 @@ object DedupQueries {
          |        substr(regexp_replace(text, '[^ -~]', '', 'g'), 1, 80) AS a,
          |        substr(regexp_replace(substr(text, strpos(text, ' ') + 1),
          |          '[^ -~]', '', 'g'), 1, 80) AS b
-         |      FROM documents)""".stripMargin,
-    "curate_decontaminate_near" ->
+         |      FROM documents)""".stripMargin),
+    QueryDef("curate_decontaminate_near", curateDecontaminateNear,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents),
          |bench0 AS (SELECT doc_id + 1000000 AS doc_id,
          |             substr(text, strpos(text, ' ') + 1) AS text
          |           FROM documents WHERE doc_id % 97 = 0),
          |ctk AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |csh AS (SELECT doc_id, $shinglesSql AS sh FROM ctk),
-         |cfp AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM csh),
+         |cfp AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM csh),
          |cmh AS (SELECT doc_id, fps, $minhashSql AS mh FROM cfp),
          |btk AS (SELECT doc_id, $toksSql AS tk FROM bench0),
          |bsh AS (SELECT doc_id, $shinglesSql AS sh FROM btk),
-         |bfp AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM bsh),
+         |bfp AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM bsh),
          |bmh AS (SELECT doc_id, fps, $minhashSql AS mh FROM bfp),
          |cb AS (SELECT doc_id, j AS band, $bandSql AS sig
          |       FROM cmh, (SELECT unnest(range(0, 16)) AS j)),
@@ -1261,12 +1222,12 @@ object DedupQueries {
          |        JOIN (SELECT doc_id, fps AS fps_a FROM cfp) USING (doc_id)
          |        JOIN (SELECT doc_id AS bench_id, fps AS fps_b FROM bfp) USING (bench_id))
          |SELECT doc_id, COUNT(*) AS n_bench_near, MAX(jaccard) AS max_jaccard
-         |FROM ver WHERE jaccard >= 0.5 GROUP BY doc_id""".stripMargin,
-    "dedup_incremental" -> incrementalOracleSql,
+         |FROM ver WHERE jaccard >= 0.5 GROUP BY doc_id""".stripMargin),
+    QueryDef("dedup_incremental", dedupIncremental, incrementalOracleSql),
     // dedup_index_persist: Spark admits against the reopened bucketed
     // fingerprint table; the oracle is the identical from-scratch
     // spelling — the green hash proves index == scratch.
-    "dedup_index_persist" -> incrementalOracleSql,
+    QueryDef("dedup_index_persist", dedupIndexPersist, incrementalOracleSql),
     // dedup_index_compact: Spark folds batch-1 counts into a
     // generation-2 bucketed index and screens batch 2 against ONLY the
     // reopened merged table; the oracle recomputes the merged counts
@@ -1275,24 +1236,24 @@ object DedupQueries {
     // the tombstoned docs' fp counts (0-count fps dropped) and screens
     // a copy-of-everything batch against the reopened gen-3 table; the
     // oracle rebuilds the counts from scratch over corpus∖deleted.
-    "dedup_index_delete" ->
+    QueryDef("dedup_index_delete", dedupIndexDelete,
       s"""WITH kept AS (SELECT text FROM documents WHERE doc_id % 9 <> 2),
-         |cf AS (SELECT ${fpFold("text")} AS fp, COUNT(*) AS n_index
+         |cf AS (SELECT ${foldSql("text")} AS fp, COUNT(*) AS n_index
          |       FROM kept GROUP BY 1),
          |batch AS (SELECT doc_id + 1000000 AS doc_id, text FROM documents),
-         |bf AS (SELECT doc_id, ${fpFold("text")} AS fp FROM batch),
+         |bf AS (SELECT doc_id, ${foldSql("text")} AS fp FROM batch),
          |r AS (SELECT doc_id, fp, CAST(row_number() OVER (PARTITION BY fp
          |        ORDER BY doc_id) AS BIGINT) AS rk FROM bf)
          |SELECT r.doc_id, r.fp, COALESCE(n_index, 0) AS n_index,
          |       rk > 1 AS dup_in_batch,
          |       COALESCE(n_index, 0) > 0 OR rk > 1 AS is_dup
-         |FROM r LEFT JOIN cf USING (fp)""".stripMargin,
-    "dedup_index_compact" ->
+         |FROM r LEFT JOIN cf USING (fp)""".stripMargin),
+    QueryDef("dedup_index_compact", dedupIndexCompact,
       s"""WITH all_t AS (SELECT text FROM documents
          |  UNION ALL SELECT text FROM documents
          |  UNION ALL SELECT substr(text, strpos(text, ' ') + 1) FROM documents
          |  UNION ALL SELECT text FROM documents WHERE doc_id % 5 = 0),
-         |cf AS (SELECT ${fpFold("text")} AS fp, COUNT(*) AS n_index
+         |cf AS (SELECT ${foldSql("text")} AS fp, COUNT(*) AS n_index
          |       FROM all_t GROUP BY 1),
          |batch2 AS (SELECT doc_id + 4000000 AS doc_id, text FROM documents
          |             WHERE doc_id % 3 = 0
@@ -1301,18 +1262,18 @@ object DedupQueries {
          |             WHERE doc_id % 11 = 0
          |           UNION ALL SELECT doc_id + 6000000, text || ' qz'
          |             FROM documents WHERE doc_id % 13 = 0),
-         |bf AS (SELECT doc_id, ${fpFold("text")} AS fp FROM batch2),
+         |bf AS (SELECT doc_id, ${foldSql("text")} AS fp FROM batch2),
          |r AS (SELECT doc_id, fp, CAST(row_number() OVER (PARTITION BY fp
          |        ORDER BY doc_id) AS BIGINT) AS rk FROM bf)
          |SELECT r.doc_id, r.fp, COALESCE(n_index, 0) AS n_index,
          |       rk > 1 AS dup_in_batch,
          |       COALESCE(n_index, 0) > 0 OR rk > 1 AS is_dup
-         |FROM r LEFT JOIN cf USING (fp)""".stripMargin,
-    "dedup_substring" ->
+         |FROM r LEFT JOIN cf USING (fp)""".stripMargin),
+    QueryDef("dedup_substring", dedupSubstring,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, ${windowsSql(10)} AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |w AS (SELECT doc_id, unnest(range(0, len(fps))) AS pos, unnest(fps) AS fp FROM fp_t),
          |d_t AS (SELECT fp, COUNT(DISTINCT doc_id) AS df FROM w GROUP BY fp),
          |s_t AS (SELECT doc_id, pos FROM w JOIN d_t USING (fp) WHERE df >= 2),
@@ -1327,12 +1288,12 @@ object DedupQueries {
          |nw AS (SELECT doc_id, COUNT(*) AS n_windows FROM w GROUP BY doc_id)
          |SELECT doc_id, n_windows, n_shared, n_islands, longest_run,
          |  CAST(longest_run + 9 AS BIGINT) AS span_tokens
-         |FROM nw JOIN agg USING (doc_id)""".stripMargin,
-    "dedup_exact" ->
-      s"""SELECT ${fpFold("text")} AS fp, MIN(doc_id) AS rep_id, COUNT(*) AS n_copies
+         |FROM nw JOIN agg USING (doc_id)""".stripMargin),
+    QueryDef("dedup_exact", dedupExact,
+      s"""SELECT ${foldSql("text")} AS fp, MIN(doc_id) AS rep_id, COUNT(*) AS n_copies
          |FROM ($corpusExactSql)
-         |GROUP BY fp""".stripMargin,
-    "dedup_band_sweep" -> {
+         |GROUP BY fp""".stripMargin),
+    QueryDef("dedup_band_sweep", dedupBandSweep, {
       def cfg(b: Int): String = {
         val r = 64 / b
         s"""bands_$b AS (SELECT doc_id, j AS band, ${bandSqlR(r)} AS sig
@@ -1348,7 +1309,7 @@ object DedupQueries {
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |${cfg(32)},
          |${cfg(16)},
@@ -1367,12 +1328,12 @@ object DedupQueries {
          |  CASE WHEN n_ref = 0 THEN NULL
          |       ELSE (1000 * n_ref_hit) // n_ref END AS recall_vs_widest_milli
          |FROM st JOIN hits USING (bands), ref_n""".stripMargin
-    },
-    "dedup_near" ->
+    }),
+    QueryDef("dedup_near", dedupNear,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |bands AS (SELECT doc_id, j AS band, $bandSql AS sig
          |          FROM mh_t, (SELECT unnest(range(0, 16)) AS j)),
@@ -1383,12 +1344,12 @@ object DedupQueries {
          |FROM pairs
          |JOIN (SELECT doc_id AS doc_a, fps AS fps_a FROM fp_t) USING (doc_a)
          |JOIN (SELECT doc_id AS doc_b, fps AS fps_b FROM fp_t) USING (doc_b)
-         |WHERE $jaccardSql >= 0.7""".stripMargin,
-    "dedup_near_capped" ->
+         |WHERE $jaccardSql >= 0.7""".stripMargin),
+    QueryDef("dedup_near_capped", dedupNearCapped,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t),
          |bands AS (SELECT doc_id, j AS band, $bandSql AS sig
          |          FROM mh_t, (SELECT unnest(range(0, 16)) AS j)),
@@ -1401,15 +1362,15 @@ object DedupQueries {
          |FROM pairs
          |JOIN (SELECT doc_id AS doc_a, fps AS fps_a FROM fp_t) USING (doc_a)
          |JOIN (SELECT doc_id AS doc_b, fps AS fps_b FROM fp_t) USING (doc_b)
-         |WHERE $jaccardSql >= 0.7""".stripMargin,
-    "dedup_simhash" ->
+         |WHERE $jaccardSql >= 0.7""".stripMargin),
+    QueryDef("dedup_simhash", dedupSimhash,
       s"""WITH fp_t AS (SELECT doc_id,
-         |    list_transform($toksSql, t -> ${fpFold("t")}) AS fps FROM documents)
+         |    list_transform($toksSql, t -> ${foldSql("t")}) AS fps FROM documents)
          |SELECT doc_id, $simhash30Sql AS simhash
-         |FROM fp_t""".stripMargin,
-    "dedup_simhash_pairs" ->
+         |FROM fp_t""".stripMargin),
+    QueryDef("dedup_simhash_pairs", dedupSimhashPairs,
       s"""WITH corpus AS ($corpusExactSql),
-         |fp_t AS (SELECT doc_id, list_transform($toksSql, t -> ${fpFold("t")}) AS fps FROM corpus),
+         |fp_t AS (SELECT doc_id, list_transform($toksSql, t -> ${foldSql("t")}) AS fps FROM corpus),
          |s_t AS (SELECT doc_id, $simhash30Sql AS sig FROM fp_t),
          |h_t AS (SELECT doc_id, sig, sig % 32768 AS lo, sig // 32768 AS hi FROM s_t),
          |cand AS (SELECT a.doc_id AS da, b.doc_id AS db, a.sig AS sa, b.sig AS sb
@@ -1419,10 +1380,10 @@ object DedupQueries {
          |         FROM h_t a JOIN h_t b ON a.hi = b.hi AND a.doc_id < b.doc_id)
          |SELECT DISTINCT da AS doc_a, db AS doc_b,
          |       CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(sa, sb)) <= 2""".stripMargin,
-    "dedup_simhash_pairs_capped" ->
+         |FROM cand WHERE bit_count(xor(sa, sb)) <= 2""".stripMargin),
+    QueryDef("dedup_simhash_pairs_capped", dedupSimhashPairsCapped,
       s"""WITH corpus AS ($corpusExactSql),
-         |fp_t AS (SELECT doc_id, list_transform($toksSql, t -> ${fpFold("t")}) AS fps FROM corpus),
+         |fp_t AS (SELECT doc_id, list_transform($toksSql, t -> ${foldSql("t")}) AS fps FROM corpus),
          |s_t AS (SELECT doc_id, $simhash30Sql AS sig FROM fp_t),
          |b_t AS (SELECT doc_id, sig, j AS band,
          |        (sig // CAST(power(2, j*10) AS BIGINT)) % 1024 AS bkey
@@ -1433,11 +1394,11 @@ object DedupQueries {
          |         FROM cb a JOIN cb b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
          |SELECT DISTINCT da AS doc_a, db AS doc_b,
          |       CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-         |FROM cand WHERE bit_count(xor(sa, sb)) <= 2""".stripMargin,
-    "dedup_minhash_est" ->
+         |FROM cand WHERE bit_count(xor(sa, sb)) <= 2""".stripMargin),
+    QueryDef("dedup_minhash_est", dedupMinhashEst,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, fps, $minhashSql AS mh FROM fp_t)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |  CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, 65),
@@ -1445,19 +1406,19 @@ object DedupQueries {
          |    (acc, v) -> acc + v) AS DOUBLE) / 64.0 AS est_jaccard,
          |  $jaccardSql AS jaccard
          |FROM (SELECT doc_id, fps AS fps_a, mh AS mh_a FROM mh_t) a
-         |JOIN (SELECT doc_id, fps AS fps_b, mh AS mh_b FROM mh_t) b ON b.doc_id = a.doc_id + 1""".stripMargin,
-    "dedup_char_jaccard" ->
+         |JOIN (SELECT doc_id, fps AS fps_b, mh AS mh_b FROM mh_t) b ON b.doc_id = a.doc_id + 1""".stripMargin),
+    QueryDef("dedup_char_jaccard", dedupCharJaccard,
       s"""WITH fp_t AS (SELECT doc_id,
          |    CASE WHEN len(text) >= 5
-         |         THEN list_transform(range(1, len(text) - 3), i -> ${fpFold("substr(text, i, 5)")})
+         |         THEN list_transform(range(1, len(text) - 3), i -> ${foldSql("substr(text, i, 5)")})
          |         ELSE [] END AS fps FROM documents)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $jaccardSql AS jaccard
          |FROM (SELECT doc_id, fps AS fps_a FROM fp_t) a
-         |JOIN (SELECT doc_id, fps AS fps_b FROM fp_t) b ON b.doc_id = a.doc_id + 1""".stripMargin,
-    "dedup_source_sketch" ->
+         |JOIN (SELECT doc_id, fps AS fps_b FROM fp_t) b ON b.doc_id = a.doc_id + 1""".stripMargin),
+    QueryDef("dedup_source_sketch", dedupSourceSketch,
       s"""WITH tk_t AS (SELECT doc_id, source, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, source, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, source, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, source, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t),
          |mh_t AS (SELECT doc_id, source, $minhashSql AS mh FROM fp_t),
          |e AS (SELECT source, generate_subscripts(mh, 1) AS pos, unnest(mh) AS v FROM mh_t),
          |m AS (SELECT source, pos, MIN(v) AS mv, COUNT(*) AS nd
@@ -1465,14 +1426,14 @@ object DedupQueries {
          |SELECT source, CAST(MAX(nd) AS BIGINT) AS n_docs,
          |       CAST(SUM(mv) AS BIGINT) AS sig_sum,
          |       MIN(mv) AS sig_min, MAX(mv) AS sig_max
-         |FROM m GROUP BY source""".stripMargin,
-    "dedup_containment" ->
+         |FROM m GROUP BY source""".stripMargin),
+    QueryDef("dedup_containment", dedupContainment,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |f_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |full_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM f_t),
+         |full_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM f_t),
          |sn_tk AS (SELECT doc_id, tk[1:(len(tk)+1)//2] AS tk FROM tk_t),
          |s_t AS (SELECT doc_id, $shinglesSql AS sh FROM sn_tk),
-         |snip_t AS (SELECT doc_id + 1000000 AS doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM s_t)
+         |snip_t AS (SELECT doc_id + 1000000 AS doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM s_t)
          |SELECT doc_a, doc_b, $jaccardSql AS jaccard,
          |  len(list_filter(list_distinct(fps_a), x -> list_contains(fps_b, x)))
          |    / len(list_distinct(fps_b)) AS containment_snip,
@@ -1481,12 +1442,12 @@ object DedupQueries {
          |FROM (SELECT doc_id AS doc_a, fps AS fps_a FROM full_t) a
          |JOIN (SELECT doc_id AS doc_b, fps AS fps_b FROM snip_t) b
          |  ON doc_b = doc_a + 1000000
-         |WHERE len(fps_a) > 0 AND len(fps_b) > 0""".stripMargin,
-    "dedup_prefix_join_capped" ->
+         |WHERE len(fps_a) > 0 AND len(fps_b) > 0""".stripMargin),
+    QueryDef("dedup_prefix_join_capped", dedupPrefixJoinCapped,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${fpFold("s")})) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${foldSql("s")})) AS fps FROM sh_t),
          |tok AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t WHERE len(fps) > 0),
          |d_t AS (SELECT fp, count(*) AS df FROM tok GROUP BY fp),
          |rk AS (SELECT t.doc_id, t.fp, d.df,
@@ -1504,14 +1465,14 @@ object DedupQueries {
          |       GROUP BY 1, 2)
          |SELECT id_a, id_b, inter, sa.s + sb.s - inter AS uni
          |FROM iv JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-         |WHERE 9 * inter >= 4 * (sa.s + sb.s)""".stripMargin,
-    "curate_dup_rate_by_source" ->
+         |WHERE 9 * inter >= 4 * (sa.s + sb.s)""".stripMargin),
+    QueryDef("curate_dup_rate_by_source", curateDupRateBySource,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents UNION ALL
          |  SELECT doc_id + 1000000, substr(text, strpos(text, ' ') + 1)
          |  FROM documents WHERE doc_id % 7 = 0),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${fpFold("s")})) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${foldSql("s")})) AS fps FROM sh_t),
          |tok AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t WHERE len(fps) > 0),
          |sz AS (SELECT doc_id, len(fps) AS s FROM fp_t WHERE len(fps) > 0),
          |d_t AS (SELECT fp, count(*) AS df FROM tok GROUP BY fp),
@@ -1537,8 +1498,8 @@ object DedupQueries {
          |        FROM mem JOIN documents USING (doc_id) GROUP BY 1)
          |SELECT source, n_docs, coalesce(n_dup_docs, 0) AS n_dup_docs,
          |  CAST(coalesce(n_dup_docs, 0) * 1000000 // n_docs AS BIGINT) AS ppm
-         |FROM tot LEFT JOIN dup USING (source)""".stripMargin,
-    "dedup_hybrid" -> {
+         |FROM tot LEFT JOIN dup USING (source)""".stripMargin),
+    QueryDef("dedup_hybrid", dedupHybrid, {
       val dot = (a: String, b: String) =>
         s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, len($a)+1), " +
           s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE))), (s,x) -> s + x)"
@@ -1546,7 +1507,7 @@ object DedupQueries {
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${fpFold("s")})) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${foldSql("s")})) AS fps FROM sh_t),
          |tok AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t WHERE len(fps) > 0),
          |sz AS (SELECT doc_id, len(fps) AS s FROM fp_t WHERE len(fps) > 0),
          |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
@@ -1560,12 +1521,12 @@ object DedupQueries {
          |                JOIN embeddings vb ON id_b % 1000000 = vb.vec_id)
          |SELECT id_a, id_b, inter, uni, $cos AS cos
          |FROM wv WHERE $cos >= 0.99""".stripMargin
-    },
-    "dedup_prefix_join" ->
+    }),
+    QueryDef("dedup_prefix_join", dedupPrefixJoin,
       s"""WITH corpus AS ($corpusNearSql),
          |tk_t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${fpFold("s")})) AS fps FROM sh_t),
+         |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s -> ${foldSql("s")})) AS fps FROM sh_t),
          |tok AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t WHERE len(fps) > 0),
          |sz AS (SELECT doc_id, len(fps) AS s FROM fp_t WHERE len(fps) > 0),
          |pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
@@ -1573,12 +1534,12 @@ object DedupQueries {
          |          GROUP BY 1, 2)
          |SELECT id_a, id_b, inter, sa.s + sb.s - inter AS uni
          |FROM pairs JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b
-         |WHERE 9 * inter >= 4 * (sa.s + sb.s)""".stripMargin,
-    "dedup_jaccard" ->
+         |WHERE 9 * inter >= 4 * (sa.s + sb.s)""".stripMargin),
+    QueryDef("dedup_jaccard", dedupJaccard,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, $shinglesSql AS sh FROM tk_t),
-         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${fpFold("s")}) AS fps FROM sh_t)
+         |fp_t AS (SELECT doc_id, list_transform(sh, s -> ${foldSql("s")}) AS fps FROM sh_t)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, $jaccardSql AS jaccard
          |FROM (SELECT doc_id, fps AS fps_a FROM fp_t) a
-         |JOIN (SELECT doc_id, fps AS fps_b FROM fp_t) b ON b.doc_id = a.doc_id + 1""".stripMargin)
+         |JOIN (SELECT doc_id, fps AS fps_b FROM fp_t) b ON b.doc_id = a.doc_id + 1""".stripMargin))
 }

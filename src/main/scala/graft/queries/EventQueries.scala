@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleFragments.log2MillisSql
 import Tables._
 
 /** Event-time suite over `events` (the streaming-shaped table: ns
@@ -3148,90 +3149,6 @@ object EventQueries {
       .select(col("t"), col("start_a"), col("start_b"), col("sse"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_motif" -> (eventsMotif _),
-    "events_retention_halflife" -> (eventsRetentionHalflife _),
-    "events_qte" -> (eventsQte _),
-    "events_pacf" -> (eventsPacf _),
-    "events_markov_entropy" -> (eventsMarkovEntropy _),
-    "events_causal_impact" -> (eventsCausalImpact _),
-    "events_hte" -> (eventsHte _),
-    "events_did" -> (eventsDid _),
-    "events_bootstrap" -> (eventsBootstrap _),
-    "events_mannwhitney" -> (eventsMannWhitney _),
-    "events_ltv" -> (eventsLtv _),
-    "events_welch" -> (eventsWelch _),
-    "events_dbscan" -> (eventsDbscan _),
-    "events_power_users" -> (eventsPowerUsers _),
-    "events_funnel3" -> (eventsFunnel3 _),
-    "events_seasonal_naive" -> (eventsSeasonalNaive _),
-    "events_ses_forecast" -> (eventsSesForecast _),
-    "events_time_travel" -> (eventsTimeTravel _),
-    "events_multi_touch" -> (eventsMultiTouch _),
-    "events_dtw" -> (eventsDtw _),
-    "events_series_sim" -> (eventsSeriesSim _),
-    "events_funnel_latency" -> (eventsFunnelLatency _),
-    "events_rolling_median" -> (eventsRollingMedian _),
-    "events_gapfill" -> (eventsGapfill _),
-    "events_scd" -> (eventsScd _),
-    "events_cdc_merge" -> (eventsCdcMerge _),
-    "events_cdc_idempotent" -> (eventsCdcIdempotent _),
-    "events_rolling_wau" -> (eventsRollingWau _),
-    "events_changepoint" -> (eventsChangepoint _),
-    "events_kmv_overlap" -> (eventsKmvOverlap _),
-    "events_cooccur" -> (eventsCooccur _),
-    "events_lift" -> (eventsLift _),
-    "events_pareto" -> (eventsPareto _),
-    "events_markov" -> (eventsMarkov _),
-    "events_gap_hist" -> (eventsGapHist _),
-    "events_quantiles" -> (eventsQuantiles _),
-    "events_quantile_sketch" -> (eventsQuantileSketch _),
-    "events_cohorts" -> (eventsCohorts _),
-    "events_spikes" -> (eventsSpikes _),
-    "events_trend" -> (eventsTrend _),
-    "events_acf" -> (eventsAcf _),
-    "events_periodicity" -> (eventsPeriodicity _),
-    "events_cusum" -> (eventsCusum _),
-    "events_seasonal" -> (eventsSeasonal _),
-    "events_seasonal_anomaly" -> (eventsSeasonalAnomaly _),
-    "events_funnel_sweep" -> (eventsFunnelSweep _),
-    "events_growth_accounting" -> (eventsGrowthAccounting _),
-    "events_velocity" -> (eventsVelocity _),
-    "events_decay_counts" -> (eventsDecayCounts _),
-    "events_abtest" -> (eventsAbtest _),
-    "events_cuped" -> (eventsCuped _),
-    "events_srm" -> (eventsSrm _),
-    "events_ips" -> (eventsIps _),
-    "events_calendar_grid" -> (eventsCalendarGrid _),
-    "events_survival" -> (eventsSurvival _),
-    "events_forecast_eval" -> (eventsForecastEval _),
-    "events_asof_directions" -> (eventsAsofDirections _),
-    "events_asof_ties" -> (eventsAsofTies _),
-    "events_rfm" -> (eventsRfm _),
-    "events_stickiness" -> (eventsStickiness _),
-    "events_anomaly" -> (eventsAnomaly _),
-    "events_kmv_distinct" -> (eventsKmvDistinct _),
-    "events_hll_distinct" -> (eventsHllDistinct _),
-    "events_hll_incremental" -> (eventsHllIncremental _),
-    "events_interval_join" -> (eventsIntervalJoin _),
-    "events_feature_pit" -> (eventsFeaturePit _),
-    "events_cm_freq" -> (eventsCmFreq _),
-    "events_pattern_match" -> (eventsPatternMatch _),
-    "events_holt_forecast" -> (eventsHoltForecast _),
-    "events_holt_winters" -> (eventsHoltWinters _),
-    "events_asof_native" -> (eventsAsofNative _),
-    "events_paths" -> (eventsPaths _),
-    "events_seq3" -> (eventsSeq3 _),
-    "events_user_entropy" -> (eventsUserEntropy _),
-    "events_attribution" -> (eventsAttribution _),
-    "events_retention" -> (eventsRetention _),
-    "events_funnel" -> (eventsFunnel _),
-    "events_window" -> (eventsWindow _),
-    "events_sessions" -> (eventsSessions _),
-    "events_gap_sweep" -> (eventsGapSweep _),
-    "events_daily_active" -> (eventsDailyActive _),
-    "events_props" -> (eventsProps _))
-
   /** Shared CTE chain for the seasonal-decomposition oracles: ends at
     * `resid(t, d, dow, cnt, trend7, det, seasonal_milli, resid_milli)`
     * — the DuckDB spelling of [[eventsSeasonal]]'s output. */
@@ -3263,8 +3180,8 @@ object EventQueries {
       |       ELSE (1000 * det) // 7 END - seasonal_milli AS resid_milli
       |FROM i JOIN seas ON i.t = seas.t AND i.dow = seas.dow)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "events_motif" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("events_motif", eventsMotif,
       """WITH daily AS MATERIALIZED (SELECT event_type AS t,
         |    epoch_us(ts) // 86400000000 AS day,
         |    CAST(COUNT(*) AS BIGINT) AS c
@@ -3289,12 +3206,8 @@ object EventQueries {
         |SELECT t, start_a, start_b, sse FROM (
         |  SELECT t, start_a, start_b, sse, row_number() OVER (
         |    PARTITION BY t ORDER BY sse, start_a, start_b) AS rk
-        |  FROM ss) WHERE rk = 1""".stripMargin,
-    "events_retention_halflife" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+        |  FROM ss) WHERE rk = 1""".stripMargin),
+    QueryDef("events_retention_halflife", eventsRetentionHalflife,
       s"""WITH uw AS (SELECT DISTINCT user_id,
          |    epoch_us(ts) // 86400000000 AS week FROM events),
          |h AS (SELECT MAX(week) AS hi FROM uw),
@@ -3304,7 +3217,7 @@ object EventQueries {
          |ak AS (SELECT week - cw AS k, CAST(COUNT(*) AS BIGINT) AS a_k
          |  FROM uw JOIN el USING (user_id)
          |  WHERE week - cw BETWEEN 1 AND 8 GROUP BY 1),
-         |pts AS (SELECT k, a_k, n, ${mbSql("a_k")} - ${mbSql("n")} AS y
+         |pts AS (SELECT k, a_k, n, ${log2MillisSql("a_k")} - ${log2MillisSql("n")} AS y
          |  FROM ak CROSS JOIN nn),
          |f AS (SELECT CAST(COUNT(*) AS BIGINT) AS np,
          |    CAST(SUM(k) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -3319,11 +3232,10 @@ object EventQueries {
          |  CASE WHEN np * sxy - sx * sy >= 0 THEN NULL ELSE
          |    (1000000 * (np * sxx - sx * sx)) // abs(np * sxy - sx * sy)
          |  END AS half_life_millidays
-         |FROM f""".stripMargin
-    },
+         |FROM f""".stripMargin),
     // per-arm row_number window ON PURPOSE — the single-partition plan
     // the engine's arm-major globalRank spelling exists to avoid
-    "events_qte" ->
+    QueryDef("events_qte", eventsQte,
       """WITH u AS (SELECT user_id % 2 AS arm,
         |    CAST(SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(floor(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m,
@@ -3348,8 +3260,8 @@ object EventQueries {
         |  FROM p)
         |SELECT n_c, n_t, p50_c, p50_t, p90_c, p90_t,
         |  p50_t - p50_c AS qte50_cents, p90_t - p90_c AS qte90_cents
-        |FROM f""".stripMargin,
-    "events_pacf" ->
+        |FROM f""".stripMargin),
+    QueryDef("events_pacf", eventsPacf,
       """WITH daily AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d,
         |    CAST(COUNT(*) AS BIGINT) AS n
         |  FROM events GROUP BY 1, 2),
@@ -3385,12 +3297,8 @@ object EventQueries {
         |    AS BIGINT) AS phi22_milli
         |FROM a0 JOIN a1 ON a0.event_type = a1.event_type
         |JOIN a2 ON a0.event_type = a2.event_type
-        |JOIN st ON a0.event_type = st.s_t""".stripMargin,
-    "events_markov_entropy" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+        |JOIN st ON a0.event_type = st.s_t""".stripMargin),
+    QueryDef("events_markov_entropy", eventsMarkovEntropy,
       s"""WITH g AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
          |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
          |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -3410,14 +3318,13 @@ object EventQueries {
          |      WHERE dst IS NOT NULL AND next_s = session_no GROUP BY src, dst),
          |tot AS (SELECT src AS t_src, CAST(SUM(cnt) AS BIGINT) AS tt
          |        FROM t GROUP BY src),
-         |terms AS (SELECT src, tt, cnt * (${mbSql("tt")} - ${mbSql("cnt")}) AS term
+         |terms AS (SELECT src, tt, cnt * (${log2MillisSql("tt")} - ${log2MillisSql("cnt")}) AS term
          |          FROM t JOIN tot ON t.src = tot.t_src)
          |SELECT src, CAST(MIN(tt) AS BIGINT) AS t_total,
          |  CAST(COUNT(*) AS BIGINT) AS n_dst,
          |  CAST(SUM(term) AS BIGINT) // CAST(MIN(tt) AS BIGINT) AS h_milli
-         |FROM terms GROUP BY src""".stripMargin
-    },
-    "events_causal_impact" ->
+         |FROM terms GROUP BY src""".stripMargin),
+    QueryDef("events_causal_impact", eventsCausalImpact,
       """WITH d AS (SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |    CAST(COUNT(*) AS BIGINT) AS c
         |  FROM events GROUP BY 1, 2),
@@ -3435,8 +3342,8 @@ object EventQueries {
         |SELECT t, n_post, actual, cf_milli,
         |  1000 * actual - cf_milli AS effect_milli,
         |  (1000 * (1000 * actual - cf_milli)) // cf_milli AS rel_milli
-        |FROM g""".stripMargin,
-    "events_hte" ->
+        |FROM g""".stripMargin),
+    QueryDef("events_hte", eventsHte,
       """WITH e AS (SELECT user_id, event_type, value,
         |             epoch_us(ts) // 86400000000 AS d FROM events),
         |mth AS (SELECT (MIN(d) + MAX(d)) // 2 AS mid FROM e),
@@ -3470,8 +3377,8 @@ object EventQueries {
         |  (1000 * conv_t) // n_t - (1000 * conv_c) // n_c
         |    AS uplift_conv_milli,
         |  (1000 * rev_t) // n_t - (1000 * rev_c) // n_c AS uplift_rev_milli
-        |FROM g""".stripMargin,
-    "events_did" ->
+        |FROM g""".stripMargin),
+    QueryDef("events_did", eventsDid,
       """WITH e AS (SELECT user_id, event_type, value,
         |             epoch_us(ts) // 86400000000 AS d FROM events),
         |mth AS (SELECT (MIN(d) + MAX(d)) // 2 AS mid FROM e),
@@ -3522,8 +3429,8 @@ object EventQueries {
         |  (did_mean * did_mean) /
         |    (var_d_t / CAST(n_t AS DOUBLE) + var_d_c / CAST(n_c AS DOUBLE))
         |    AS t2_stat
-        |FROM v""".stripMargin,
-    "events_bootstrap" ->
+        |FROM v""".stripMargin),
+    QueryDef("events_bootstrap", eventsBootstrap,
       """WITH u AS (SELECT user_id,
         |    CAST(SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(floor(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m
@@ -3553,8 +3460,8 @@ object EventQueries {
         |  CAST(a[2] AS BIGINT) AS boot_lo_milli,
         |  CAST((a[16] + a[17]) // 2 AS BIGINT) AS boot_med_milli,
         |  CAST(a[31] AS BIGINT) AS boot_hi_milli
-        |FROM pt CROSS JOIN band""".stripMargin,
-    "events_mannwhitney" ->
+        |FROM pt CROSS JOIN band""".stripMargin),
+    QueryDef("events_mannwhitney", eventsMannWhitney,
       """WITH u AS (SELECT user_id % 2 AS arm,
         |    CAST(SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(floor(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT) AS m
@@ -3584,8 +3491,8 @@ object EventQueries {
         |    // (CAST(n_a AS HUGEINT) * n_b
         |      * ((n + 1) * CAST(n AS HUGEINT) * (n - 1) - tie_t))
         |    AS BIGINT) AS z2_micro
-        |FROM s""".stripMargin,
-    "events_ltv" ->
+        |FROM s""".stripMargin),
+    QueryDef("events_ltv", eventsLtv,
       """WITH e AS (SELECT user_id,
         |    epoch_us(ts) // 604800000000 AS week, event_type, value
         |  FROM events),
@@ -3603,8 +3510,8 @@ object EventQueries {
         |  FROM grid JOIN sz ON grid.cw = sz.cw)
         |SELECT cw AS cohort_week, off AS offset_weeks, n_users, cum_cents,
         |  (1000 * cum_cents) // n_users AS ltv_milli
-        |FROM c""".stripMargin,
-    "events_cuped" ->
+        |FROM c""".stripMargin),
+    QueryDef("events_cuped", eventsCuped,
       """WITH e AS (SELECT user_id, event_type, value,
         |             epoch_us(ts) // 86400000000 AS d FROM events),
         |mth AS (SELECT (MIN(d) + MAX(d)) // 2 AS mid FROM e),
@@ -3649,8 +3556,8 @@ object EventQueries {
         |SELECT arm, n_arm, theta, mean_y, mean_y_adj, var_y,
         |  (syy_tilde - sy_tilde * sy_tilde / CAST(n_arm AS DOUBLE)) /
         |    CAST(n_arm - 1 AS DOUBLE) AS var_y_adj
-        |FROM r""".stripMargin,
-    "events_calendar_grid" ->
+        |FROM r""".stripMargin),
+    QueryDef("events_calendar_grid", eventsCalendarGrid,
       """WITH c AS (SELECT (epoch_us(ts) // 86400000000) % 7 AS weekday,
         |             (epoch_us(ts) // 3600000000) % 24 AS hour,
         |             CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_p
@@ -3662,8 +3569,8 @@ object EventQueries {
         |SELECT weekday, hour, n, n_purchase,
         |  (1000 * n) // t AS share_milli,
         |  (1000 * n_purchase) // n AS purchase_milli
-        |FROM g, t""".stripMargin,
-    "events_ips" ->
+        |FROM g, t""".stripMargin),
+    QueryDef("events_ips", eventsIps,
       """WITH e AS (SELECT user_id, event_type, value,
         |             epoch_us(ts) // 86400000000 AS d FROM events),
         |mth AS (SELECT (MIN(d) + MAX(d)) // 2 AS mid FROM e),
@@ -3689,8 +3596,8 @@ object EventQueries {
         |    AS v_snips_millicents,
         |  CAST((CAST(1000 AS HUGEINT) * r_total) // n AS BIGINT)
         |    AS v_logged_millicents
-        |FROM s""".stripMargin,
-    "events_srm" ->
+        |FROM s""".stripMargin),
+    QueryDef("events_srm", eventsSrm,
       """WITH u AS (SELECT DISTINCT user_id FROM events),
         |c AS (SELECT
         |    CAST(SUM(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
@@ -3701,8 +3608,8 @@ object EventQueries {
         |    // (n_a + n_b) AS BIGINT) AS chi2_micro,
         |  CAST((CAST(1000000 AS HUGEINT) * (n_a - n_b) * (n_a - n_b))
         |    // (n_a + n_b) AS BIGINT) > 3841459 AS srm_flag
-        |FROM c""".stripMargin,
-    "events_welch" ->
+        |FROM c""".stripMargin),
+    QueryDef("events_welch", eventsWelch,
       """WITH u AS (SELECT user_id % 2 AS arm,
         |    CAST(CAST(SUM(CASE WHEN event_type = 'purchase'
         |      THEN CAST(floor(value * 100) AS BIGINT) ELSE 0 END) AS BIGINT)
@@ -3734,10 +3641,10 @@ object EventQueries {
         |  ((se_a + se_b) * (se_a + se_b)) /
         |    (se_a * se_a / CAST(na - 1 AS DOUBLE)
         |     + se_b * se_b / CAST(nb - 1 AS DOUBLE)) AS df
-        |FROM s""".stripMargin,
+        |FROM s""".stripMargin),
     // naive quadratic neighbor search ON PURPOSE — proves the grid-cell
     // candidate join lossless for the L2 ball
-    "events_dbscan" ->
+    QueryDef("events_dbscan", eventsDbscan,
       """WITH RECURSIVE feats AS (
         |  SELECT user_id,
         |    CAST(COUNT(*) * 2500 AS BIGINT) AS x,
@@ -3769,8 +3676,8 @@ object EventQueries {
         |UNION ALL SELECT f.user_id, 'noise', CAST(-1 AS BIGINT)
         |  FROM feats f
         |  WHERE f.user_id NOT IN (SELECT id FROM rep)
-        |    AND f.user_id NOT IN (SELECT id FROM border)""".stripMargin,
-    "events_gap_sweep" ->
+        |    AND f.user_id NOT IN (SELECT id FROM border)""".stripMargin),
+    QueryDef("events_gap_sweep", eventsGapSweep,
       """WITH g AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
         |             lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |               ORDER BY epoch_us(ts), event_id) AS prev
@@ -3784,8 +3691,8 @@ object EventQueries {
         |  (1000 * CAST(COUNT(*) AS BIGINT)) //
         |    CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > CAST(gap_s AS BIGINT) * 1000000
         |      THEN 1 ELSE 0 END) AS BIGINT) AS events_per_session_milli
-        |FROM gaps CROSS JOIN thr GROUP BY gap_s""".stripMargin,
-    "events_survival" ->
+        |FROM gaps CROSS JOIN thr GROUP BY gap_s""".stripMargin),
+    QueryDef("events_survival", eventsSurvival,
       """WITH RECURSIVE g0 AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS tus,
         |         lead(epoch_us(ts)) OVER (PARTITION BY user_id
@@ -3809,8 +3716,8 @@ object EventQueries {
         |  SELECT series.rn, (km.s * (series.n_risk - series.n_churn)) // series.n_risk
         |  FROM km JOIN series ON series.rn = km.rn + 1)
         |SELECT series.t, series.n_risk, series.n_churn, km.s AS s_micro
-        |FROM series JOIN km ON km.rn = series.rn""".stripMargin,
-    "events_stickiness" ->
+        |FROM series JOIN km ON km.rn = series.rn""".stripMargin),
+    QueryDef("events_stickiness", eventsStickiness,
       """WITH du AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |b AS (SELECT MIN(day) AS mn, MAX(day) AS mx FROM du),
         |dau AS (SELECT day, CAST(COUNT(*) AS BIGINT) AS dau FROM du GROUP BY 1),
@@ -3823,8 +3730,8 @@ object EventQueries {
         |SELECT dau.day, dau.dau, wau.wau,
         |       (1000 * dau.dau) // wau.wau AS stickiness_milli
         |FROM dau JOIN wau USING (day), b
-        |WHERE dau.day >= mn + 6 AND dau.day <= mx""".stripMargin,
-    "events_rfm" ->
+        |WHERE dau.day >= mn + 6 AND dau.day <= mx""".stripMargin),
+    QueryDef("events_rfm", eventsRfm,
       """WITH e AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
         |             event_type, value FROM events),
         |edge AS (SELECT MAX(day) AS d1 FROM e),
@@ -3859,8 +3766,8 @@ object EventQueries {
         |SELECT r_band, f_band, m_band, CAST(COUNT(*) AS BIGINT) AS n_users,
         |       CAST(SUM(f) AS BIGINT) AS sum_f, CAST(SUM(m) AS BIGINT) AS sum_m_cents
         |FROM seg JOIN rfm USING (user_id)
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "events_forecast_eval" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    QueryDef("events_forecast_eval", eventsForecastEval,
       """WITH d AS (SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |             CAST(COUNT(*) AS BIGINT) AS c
         |           FROM events GROUP BY 1, 2),
@@ -3892,12 +3799,12 @@ object EventQueries {
         |        AND mae_persist_milli <= mae_global_milli THEN 'persistence'
         |       WHEN mae_seasonal_milli <= mae_global_milli THEN 'seasonal'
         |       ELSE 'global_mean' END AS winner
-        |FROM m""".stripMargin,
-    "events_seasonal" ->
+        |FROM m""".stripMargin),
+    QueryDef("events_seasonal", eventsSeasonal,
       s"""WITH $seasonalCteSql
          |SELECT t, d, dow, cnt, trend7, det, seasonal_milli, resid_milli
-         |FROM resid""".stripMargin,
-    "events_seasonal_anomaly" ->
+         |FROM resid""".stripMargin),
+    QueryDef("events_seasonal_anomaly", eventsSeasonalAnomaly,
       s"""WITH $seasonalCteSql,
          |nt AS (SELECT t, CAST(COUNT(*) AS BIGINT) AS n FROM resid GROUP BY 1),
          |m AS (SELECT t, abs(resid_milli) AS a,
@@ -3908,8 +3815,8 @@ object EventQueries {
          |        FROM m JOIN nt ON m.t = nt.t AND m.rk = (nt.n + 1) // 2)
          |SELECT r.t, d, cnt, resid_milli, mad_milli,
          |  abs(resid_milli) > GREATEST(3 * mad_milli, 1) AS anomaly
-         |FROM resid r JOIN mad ON r.t = mad.t""".stripMargin,
-    "events_cusum" ->
+         |FROM resid r JOIN mad ON r.t = mad.t""".stripMargin),
+    QueryDef("events_cusum", eventsCusum,
       """WITH daily AS (SELECT event_type AS t,
         |        CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
         |        COUNT(*) AS n
@@ -3931,8 +3838,8 @@ object EventQueries {
         |      FROM c)
         |SELECT t, d, cnt, cum - mn AS cusum_pos, mx - cum AS cusum_neg,
         |  cum - mn > total * 4 AS up_shift, mx - cum > total * 4 AS down_shift
-        |FROM m""".stripMargin,
-    "events_acf" ->
+        |FROM m""".stripMargin),
+    QueryDef("events_acf", eventsAcf,
       """WITH daily AS (SELECT CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
         |                      CAST(COUNT(*) AS BIGINT) AS n
         |               FROM events GROUP BY 1),
@@ -3962,8 +3869,8 @@ object EventQueries {
         |         CAST(CAST(1000 AS HUGEINT) * CAST(num AS HUGEINT) * CAST(num AS HUGEINT) //
         |           (CAST(denx AS HUGEINT) * CAST(deny AS HUGEINT)) AS BIGINT)
         |  END AS r2_milli_signed
-        |FROM ing""".stripMargin,
-    "events_periodicity" ->
+        |FROM ing""".stripMargin),
+    QueryDef("events_periodicity", eventsPeriodicity,
       """WITH daily AS (SELECT event_type,
         |                      CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
         |                      CAST(COUNT(*) AS BIGINT) AS n
@@ -4004,8 +3911,8 @@ object EventQueries {
         |FROM (SELECT *, row_number() OVER (PARTITION BY event_type
         |        ORDER BY r2_milli_signed DESC NULLS LAST, lag) AS rk
         |      FROM sc)
-        |WHERE rk = 1""".stripMargin,
-    "events_abtest" ->
+        |WHERE rk = 1""".stripMargin),
+    QueryDef("events_abtest", eventsAbtest,
       """WITH np AS (SELECT user_id,
         |              SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS np
         |            FROM events GROUP BY user_id),
@@ -4026,8 +3933,8 @@ object EventQueries {
         |      (CAST(a AS HUGEINT) * d - CAST(b AS HUGEINT) * c) //
         |      (CAST(a + b AS HUGEINT) * (c + d) * (a + c) * (b + d)) AS BIGINT)
         |  END AS chi2_micro
-        |FROM cells""".stripMargin,
-    "events_power_users" ->
+        |FROM cells""".stripMargin),
+    QueryDef("events_power_users", eventsPowerUsers,
       """WITH u AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
         |           FROM events GROUP BY 1),
         |t AS (SELECT CAST(SUM(c) AS BIGINT) AS total_events,
@@ -4037,8 +3944,8 @@ object EventQueries {
         |SELECT t.total_events, t.n_users,
         |  CAST(MIN(CASE WHEN 5 * cc >= 4 * t.total_events THEN rk END) AS BIGINT)
         |    AS users_for_80pct
-        |FROM cum, t GROUP BY 1, 2""".stripMargin,
-    "events_growth_accounting" ->
+        |FROM cum, t GROUP BY 1, 2""".stripMargin),
+    QueryDef("events_growth_accounting", eventsGrowthAccounting,
       """WITH um AS (SELECT DISTINCT user_id,
         |        CAST((year(ts) - 1970) * 12 + month(ts) - 1 AS BIGINT) AS m
         |      FROM events),
@@ -4063,15 +3970,15 @@ object EventQueries {
         |    + SUM(CASE WHEN is_active AND was_active IS NULL AND j.m > f.m0
         |          THEN 1 ELSE 0 END) AS BIGINT) AS mau
         |FROM j JOIN f ON j.user_id = f.user_id
-        |GROUP BY 1""".stripMargin,
-    "events_decay_counts" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("events_decay_counts", eventsDecayCounts,
       """WITH d AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
         |h AS (SELECT MAX(day) AS ref_day FROM d)
         |SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
         |  CAST(SUM(1000000 // (CAST(1 AS BIGINT) <<
         |    CAST(LEAST(ref_day - day, 62) AS INT))) AS BIGINT) AS decayed_ppm
-        |FROM d CROSS JOIN h GROUP BY 1""".stripMargin,
-    "events_velocity" ->
+        |FROM d CROSS JOIN h GROUP BY 1""".stripMargin),
+    QueryDef("events_velocity", eventsVelocity,
       """WITH pm AS (SELECT user_id, epoch_us(ts) // 60000000 AS minute,
         |        CAST(COUNT(*) AS BIGINT) AS c
         |      FROM events GROUP BY 1, 2),
@@ -4082,8 +3989,8 @@ object EventQueries {
         |t AS (SELECT CAST(SUM(n_users) AS BIGINT) AS total_users FROM h)
         |SELECT bucket, n_users, max_burst, total_users,
         |  (1000 * n_users) // total_users AS share_milli
-        |FROM h CROSS JOIN t""".stripMargin,
-    "events_funnel_sweep" ->
+        |FROM h CROSS JOIN t""".stripMargin),
+    QueryDef("events_funnel_sweep", eventsFunnelSweep,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
         |v AS (SELECT user_id, MIN(tus) AS t1 FROM e
         |      WHERE event_type = 'view' GROUP BY 1),
@@ -4109,8 +4016,8 @@ object EventQueries {
         |      FROM st CROSS JOIN wd GROUP BY 1)
         |SELECT w_s, step1_users, step2_users, step3_users,
         |  (1000000 * step3_users) // step1_users AS conv_ppm
-        |FROM g""".stripMargin,
-    "events_funnel3" ->
+        |FROM g""".stripMargin),
+    QueryDef("events_funnel3", eventsFunnel3,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tus FROM events),
         |v AS (SELECT user_id, MIN(tus) AS t1 FROM e
         |      WHERE event_type = 'view' GROUP BY 1),
@@ -4124,8 +4031,8 @@ object EventQueries {
         |        AND e.tus <= c.t2 + 86400000000 GROUP BY 1)
         |SELECT CAST((SELECT COUNT(*) FROM v) AS BIGINT) AS step1_users,
         |       CAST((SELECT COUNT(*) FROM c) AS BIGINT) AS step2_users,
-        |       CAST((SELECT COUNT(*) FROM p) AS BIGINT) AS step3_users""".stripMargin,
-    "events_asof_directions" ->
+        |       CAST((SELECT COUNT(*) FROM p) AS BIGINT) AS step3_users""".stripMargin),
+    QueryDef("events_asof_directions", eventsAsofDirections,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus
         |           FROM events),
         |p AS (SELECT user_id, event_id AS p_event, tus AS p_tus FROM e
@@ -4146,8 +4053,8 @@ object EventQueries {
         |       WHEN next_click_tus IS NULL THEN back_tus
         |       WHEN next_click_tus - p_tus < p_tus - back_tus THEN next_click_tus
         |       ELSE back_tus END - p_tus AS nearest_gap_us
-        |FROM m""".stripMargin,
-    "events_asof_ties" ->
+        |FROM m""".stripMargin),
+    QueryDef("events_asof_ties", eventsAsofTies,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus
         |           FROM events),
         |p AS (SELECT user_id, event_id AS p_event, tus AS p_tus FROM e
@@ -4166,8 +4073,8 @@ object EventQueries {
         |   WHERE r.user_id = p.user_id AND r.c_tus =
         |     (SELECT MIN(c_tus) FROM r
         |      WHERE r.user_id = p.user_id AND c_tus >= p.p_tus)) AS fwd_pay
-        |FROM p""".stripMargin,
-    "events_asof_native" ->
+        |FROM p""".stripMargin),
+    QueryDef("events_asof_native", eventsAsofNative,
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus
         |           FROM events),
         |p AS (SELECT user_id, event_id AS p_event, tus AS p_tus FROM e
@@ -4179,8 +4086,8 @@ object EventQueries {
         |      FROM p)
         |SELECT user_id, p_event, p_tus, click_tus,
         |       p_tus - click_tus AS gap_us
-        |FROM m""".stripMargin,
-    "events_holt_winters" ->
+        |FROM m""".stripMargin),
+    QueryDef("events_holt_winters", eventsHoltWinters,
       """WITH RECURSIVE d AS (
         |  SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |         CAST(COUNT(*) AS BIGINT) AS c
@@ -4221,8 +4128,8 @@ object EventQueries {
         |       r.s[CAST(r.k % 7 + 1 AS INTEGER)] AS season_next,
         |       r.l + r.b + r.s[CAST(r.k % 7 + 1 AS INTEGER)] AS forecast_next,
         |       r.err / CAST(n.n_days - 14 AS DOUBLE) AS mae
-        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin,
-    "events_holt_forecast" ->
+        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin),
+    QueryDef("events_holt_forecast", eventsHoltForecast,
       """WITH RECURSIVE d AS (
         |  SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |         CAST(COUNT(*) AS BIGINT) AS c
@@ -4245,8 +4152,8 @@ object EventQueries {
         |SELECT r.t, n.n_days, r.level, r.trend,
         |       r.level + r.trend AS forecast_next,
         |       r.err / CAST(n.n_days - 2 AS DOUBLE) AS mae
-        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin,
-    "events_ses_forecast" ->
+        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin),
+    QueryDef("events_ses_forecast", eventsSesForecast,
       """WITH RECURSIVE d AS (
         |  SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |         CAST(COUNT(*) AS BIGINT) AS c
@@ -4264,8 +4171,8 @@ object EventQueries {
         |  FROM rec r JOIN ser s ON s.t = r.t AND s.i = r.i + 1)
         |SELECT r.t, n.n_days, r.level,
         |       r.err / CAST(n.n_days - 1 AS DOUBLE) AS mae
-        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin,
-    "events_seasonal_naive" ->
+        |FROM rec r JOIN n ON r.t = n.t AND r.i = n.n_days""".stripMargin),
+    QueryDef("events_seasonal_naive", eventsSeasonalNaive,
       """WITH d AS (SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |             CAST(COUNT(*) AS BIGINT) AS c
         |           FROM events GROUP BY 1, 2),
@@ -4278,8 +4185,8 @@ object EventQueries {
         |  CAST(SUM(abs(te.c * tr.k - tr.s)) AS BIGINT) AS mae_num,
         |  CAST(SUM(tr.k) AS BIGINT) AS mae_den
         |FROM test te JOIN train tr ON tr.t = te.t AND tr.wd = te.wd
-        |GROUP BY 1""".stripMargin,
-    "events_time_travel" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("events_time_travel", eventsTimeTravel,
       """WITH b AS (SELECT epoch_us(MIN(ts)) + 15 * 86400000000 AS cut FROM events),
         |f AS (SELECT user_id, event_type, epoch_us(ts) AS tus, event_id,
         |        CAST(floor(value * 10.0) AS BIGINT) AS band
@@ -4293,8 +4200,8 @@ object EventQueries {
         |SELECT user_id, event_type, band AS band_at_cut,
         |  CAST(last_tus AS BIGINT) AS last_tus,
         |  CAST(n_before AS BIGINT) AS n_before
-        |FROM r WHERE rk = 1""".stripMargin,
-    "events_multi_touch" ->
+        |FROM r WHERE rk = 1""".stripMargin),
+    QueryDef("events_multi_touch", eventsMultiTouch,
       """WITH p AS (SELECT event_id AS p_id, user_id, epoch_us(ts) AS pts
         |           FROM events WHERE event_type = 'purchase'),
         |v AS (SELECT event_id AS v_id, user_id, epoch_us(ts) AS vts
@@ -4308,9 +4215,9 @@ object EventQueries {
         |SELECT p_id, user_id, v_id, CAST(n_touch AS BIGINT) AS n_touch,
         |  CAST(1000000 // n_touch +
         |    CASE WHEN rk = 1 THEN 1000000 % n_touch ELSE 0 END AS BIGINT) AS credit_ppm
-        |FROM j""".stripMargin,
-    "events_dtw" -> dtwOracle,
-    "events_series_sim" ->
+        |FROM j""".stripMargin),
+    QueryDef("events_dtw", eventsDtw, dtwOracle),
+    QueryDef("events_series_sim", eventsSeriesSim,
       """WITH daily AS (SELECT event_type AS t, epoch_us(ts) // 86400000000 AS day,
         |                 CAST(COUNT(*) AS BIGINT) AS c
         |               FROM events GROUP BY 1, 2),
@@ -4335,8 +4242,8 @@ object EventQueries {
         |        FROM pgrid GROUP BY 1, 2)
         |SELECT e.ta, e.tb, p.paa_dist, e.dist_exact,
         |       p.paa_dist <= b.lmax * e.dist_exact AS bound_ok
-        |FROM exact e JOIN paa p ON p.ta = e.ta AND p.tb = e.tb CROSS JOIN b""".stripMargin,
-    "events_funnel_latency" ->
+        |FROM exact e JOIN paa p ON p.ta = e.ta AND p.tb = e.tb CROSS JOIN b""".stripMargin),
+    QueryDef("events_funnel_latency", eventsFunnelLatency,
       """WITH f AS (SELECT user_id,
         |    min(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS fv,
         |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS fp
@@ -4351,8 +4258,8 @@ object EventQueries {
         |       WHEN rk = (n + 1) // 2 THEN 'p50'
         |       ELSE 'p75' END AS q, lat_s
         |FROM r, n_t
-        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3 * n + 3) // 4""".stripMargin,
-    "events_rolling_median" ->
+        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3 * n + 3) // 4""".stripMargin),
+    QueryDef("events_rolling_median", eventsRollingMedian,
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
         |           FROM events GROUP BY 1, 2),
         |f AS (SELECT event_type, day, n,
@@ -4360,8 +4267,8 @@ object EventQueries {
         |          ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS frame
         |      FROM d)
         |SELECT event_type, day, n, list_sort(frame)[4] AS med7
-        |FROM f WHERE len(frame) = 7""".stripMargin,
-    "events_gapfill" ->
+        |FROM f WHERE len(frame) = 7""".stripMargin),
+    QueryDef("events_gapfill", eventsGapfill,
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
         |           FROM events WHERE value > 200.0 GROUP BY 1, 2),
         |b AS (SELECT min(CAST(ts AS DATE)) AS mn, max(CAST(ts AS DATE)) AS mx FROM events),
@@ -4369,8 +4276,8 @@ object EventQueries {
         |t AS (SELECT DISTINCT event_type FROM events)
         |SELECT t.event_type, cal.day, coalesce(d.n, 0) AS n
         |FROM t CROSS JOIN cal
-        |LEFT JOIN d ON d.event_type = t.event_type AND d.day = cal.day""".stripMargin,
-    "events_scd" ->
+        |LEFT JOIN d ON d.event_type = t.event_type AND d.day = cal.day""".stripMargin),
+    QueryDef("events_scd", eventsScd,
       """WITH s AS (SELECT event_type,
         |    CAST(floor(value / 50) AS BIGINT) AS state,
         |    lag(CAST(floor(value / 50) AS BIGINT)) OVER (
@@ -4382,8 +4289,8 @@ object EventQueries {
         |  FROM s GROUP BY 1)
         |SELECT event_type, n_events, n_intervals,
         |  CAST(100 * (n_events - n_intervals) // n_events AS BIGINT) AS compression_pct
-        |FROM g""".stripMargin,
-    "events_changepoint" ->
+        |FROM g""".stripMargin),
+    QueryDef("events_changepoint", eventsChangepoint,
       """WITH daily AS (SELECT event_type, epoch_us(ts) // 86400000000 AS day,
         |    count(*) AS c FROM events GROUP BY 1, 2),
         |cum AS (SELECT event_type, day,
@@ -4402,8 +4309,8 @@ object EventQueries {
         |r AS (SELECT *, row_number() OVER (PARTITION BY event_type
         |    ORDER BY stat DESC, day ASC) AS rn FROM st)
         |SELECT event_type, day AS cp_day, stat, s_total, t_days
-        |FROM r WHERE rn = 1""".stripMargin,
-    "events_rolling_wau" ->
+        |FROM r WHERE rn = 1""".stripMargin),
+    QueryDef("events_rolling_wau", eventsRollingWau,
       """WITH du AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |b AS (SELECT min(day) AS mn, max(day) AS mx FROM du),
         |cov AS (SELECT DISTINCT user_id,
@@ -4411,8 +4318,8 @@ object EventQueries {
         |        FROM du),
         |w AS (SELECT wday, COUNT(*) AS wau FROM cov GROUP BY 1)
         |SELECT wday AS day, wau FROM w, b
-        |WHERE wday >= mn + INTERVAL 6 DAY AND wday <= mx""".stripMargin,
-    "events_cdc_idempotent" ->
+        |WHERE wday >= mn + INTERVAL 6 DAY AND wday <= mx""".stripMargin),
+    QueryDef("events_cdc_idempotent", eventsCdcIdempotent,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id,
         |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
         |    CAST(floor(value * 1000000) AS BIGINT) AS val
@@ -4436,8 +4343,8 @@ object EventQueries {
         |       WHERE c.user_id IS NULL OR c.op <> 'D')
         |SELECT coalesce(a.user_id, b.user_id) AS user_id,
         |  a.val AS val_once, b.val AS val_twice
-        |FROM s1 a FULL JOIN s2 b ON a.user_id = b.user_id""".stripMargin,
-    "events_cdc_merge" ->
+        |FROM s1 a FULL JOIN s2 b ON a.user_id = b.user_id""".stripMargin),
+    QueryDef("events_cdc_merge", eventsCdcMerge,
       """WITH e AS (SELECT user_id, epoch_us(ts) AS tus, event_id,
         |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
         |    CAST(floor(value * 1000000) AS BIGINT) AS val
@@ -4460,8 +4367,8 @@ object EventQueries {
         |  CAST(CASE WHEN c.user_id IS NULL THEN 0 ELSE n_changes END
         |    AS BIGINT) AS n_changes
         |FROM base b FULL JOIN chg c ON b.user_id = c.user_id
-        |WHERE c.user_id IS NULL OR c.op <> 'D'""".stripMargin,
-    "events_kmv_overlap" ->
+        |WHERE c.user_id IS NULL OR c.op <> 'D'""".stripMargin),
+    QueryDef("events_kmv_overlap", eventsKmvOverlap,
       """WITH p AS (SELECT DISTINCT event_type,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
         |      list_transform(string_split('kmv|' || CAST(user_id AS VARCHAR) || '|' ||
@@ -4483,8 +4390,8 @@ object EventQueries {
         |b AS (SELECT est_d AS est_b FROM t WHERE event_type = 'purchase')
         |SELECT 'click' AS type_a, 'purchase' AS type_b, est_a, est_b, est_union,
         |  est_a + est_b - est_union AS est_inter, exact_inter
-        |FROM a, b, u, x""".stripMargin,
-    "events_markov" ->
+        |FROM a, b, u, x""".stripMargin),
+    QueryDef("events_markov", eventsMarkov,
       """WITH g AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
         |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -4506,15 +4413,15 @@ object EventQueries {
         |        CAST(SUM(cnt) OVER (PARTITION BY src) AS BIGINT) AS total FROM t)
         |SELECT src, dst, cnt, total,
         |       CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE) AS p
-        |FROM w""".stripMargin,
-    "events_cooccur" ->
+        |FROM w""".stripMargin),
+    QueryDef("events_cooccur", eventsCooccur,
       """WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us FROM events)
         |SELECT a.event_type AS type_a, b.event_type AS type_b, COUNT(*) AS n_pairs
         |FROM e a JOIN e b ON a.user_id = b.user_id
         |  AND b.us - a.us BETWEEN 0 AND 60000000
         |  AND (a.us < b.us OR (a.us = b.us AND a.event_id < b.event_id))
-        |GROUP BY 1, 2""".stripMargin,
-    "events_lift" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("events_lift", eventsLift,
       """WITH b AS (SELECT DISTINCT user_id,
         |        CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
         |        event_type
@@ -4535,8 +4442,8 @@ object EventQueries {
         |FROM p
         |JOIN nt na ON p.type_a = na.event_type
         |JOIN nt nbt ON p.type_b = nbt.event_type
-        |CROSS JOIN nb""".stripMargin,
-    "events_pareto" ->
+        |CROSS JOIN nb""".stripMargin),
+    QueryDef("events_pareto", eventsPareto,
       """WITH c AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x
         |           FROM events GROUP BY 1),
         |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nu, CAST(SUM(x) AS BIGINT) AS te
@@ -4548,18 +4455,18 @@ object EventQueries {
         |  CAST((1000 * SUM(CASE WHEN rk > nu - nu // 10 THEN x ELSE 0 END))
         |    // te AS BIGINT) AS top10_share_milli
         |FROM r CROSS JOIN t
-        |GROUP BY nu, te""".stripMargin,
-    "events_gap_hist" ->
+        |GROUP BY nu, te""".stripMargin),
+    QueryDef("events_gap_hist", eventsGapHist,
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
         |g AS (SELECT us - lag(us) OVER (PARTITION BY user_id
         |        ORDER BY us, event_id) AS dus FROM e),
         |s AS (SELECT dus // 1000000 AS gap_s FROM g WHERE dus IS NOT NULL)
         |SELECT CAST(length(bin(gap_s)) - 1 AS BIGINT) AS bucket,
         |       COUNT(*) AS n_gaps, MIN(gap_s) AS min_gap, MAX(gap_s) AS max_gap
-        |FROM s GROUP BY 1""".stripMargin,
+        |FROM s GROUP BY 1""".stripMargin),
     // sketch respelled: same log-bucket arithmetic, naive global
     // row_number for the exact side (what globalRank replaces)
-    "events_quantile_sketch" ->
+    QueryDef("events_quantile_sketch", eventsQuantileSketch,
       """WITH g AS (SELECT epoch_us(ts) AS tus,
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |      ORDER BY epoch_us(ts), event_id) AS prev
@@ -4589,8 +4496,8 @@ object EventQueries {
         |       lo_v - 1 AS lo_gap, lo_v + width - 1 AS hi_gap_excl,
         |       lo_v + width // 2 - 1 AS est_gap, exact_gap,
         |       lo_v <= exact_gap + 1 AND exact_gap + 1 < lo_v + width AS bound_ok
-        |FROM ex JOIN pv USING (q)""".stripMargin,
-    "events_quantiles" ->
+        |FROM ex JOIN pv USING (q)""".stripMargin),
+    QueryDef("events_quantiles", eventsQuantiles,
       """WITH n_t AS (SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1),
         |r AS (SELECT event_type, value,
         |        CAST(row_number() OVER (PARTITION BY event_type ORDER BY value) AS BIGINT) AS rk
@@ -4601,8 +4508,8 @@ object EventQueries {
         |            ELSE 'p75' END AS q,
         |       value
         |FROM r JOIN n_t USING (event_type)
-        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3*n + 3) // 4""".stripMargin,
-    "events_cohorts" ->
+        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3*n + 3) // 4""".stripMargin),
+    QueryDef("events_cohorts", eventsCohorts,
       """WITH du AS (SELECT DISTINCT user_id,
         |              CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) // 7 AS week
         |            FROM events),
@@ -4610,8 +4517,8 @@ object EventQueries {
         |SELECT cohort, week - cohort AS week_offset,
         |       COUNT(DISTINCT du.user_id) AS n_active
         |FROM du JOIN f USING (user_id)
-        |GROUP BY cohort, week - cohort""".stripMargin,
-    "events_spikes" ->
+        |GROUP BY cohort, week - cohort""".stripMargin),
+    QueryDef("events_spikes", eventsSpikes,
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
         |           FROM events GROUP BY 1, 2),
         |w AS (SELECT event_type, day, n,
@@ -4620,8 +4527,8 @@ object EventQueries {
         |      FROM d WINDOW tw AS (PARTITION BY event_type ORDER BY day
         |        ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING))
         |SELECT event_type, day, n, trail, n * 7 > trail * 2 AS spike
-        |FROM w WHERE n_prev = 7""".stripMargin,
-    "events_kmv_distinct" ->
+        |FROM w WHERE n_prev = 7""".stripMargin),
+    QueryDef("events_kmv_distinct", eventsKmvDistinct,
       """WITH h_t AS (SELECT DISTINCT event_type,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
         |      list_transform(string_split('kmv|' || CAST(user_id AS VARCHAR) || '|graft', ''),
@@ -4634,8 +4541,8 @@ object EventQueries {
         |e_t AS (SELECT event_type, COUNT(*) AS n_hashes FROM h_t GROUP BY 1)
         |SELECT event_type, n_hashes, h_k,
         |  CAST(15000000105 // h_k AS BIGINT) AS est_distinct
-        |FROM e_t LEFT JOIN k_t USING (event_type)""".stripMargin,
-    "events_pattern_match" ->
+        |FROM e_t LEFT JOIN k_t USING (event_type)""".stripMargin),
+    QueryDef("events_pattern_match", eventsPatternMatch,
       """WITH s AS (SELECT user_id,
         |    string_agg(substr(event_type, 1, 1), ''
         |      ORDER BY epoch_us(ts), event_id) AS seq
@@ -4643,8 +4550,8 @@ object EventQueries {
         |SELECT user_id, CAST(length(seq) AS BIGINT) AS n_events,
         |  CAST(len(regexp_extract_all(seq, 'vc*p')) AS BIGINT) AS n_funnel_runs,
         |  CAST(len(regexp_extract_all(seq, 'ee+')) AS BIGINT) AS n_error_bursts
-        |FROM s""".stripMargin,
-    "events_cm_freq" ->
+        |FROM s""".stripMargin),
+    QueryDef("events_cm_freq", eventsCmFreq,
       """WITH fp AS (SELECT user_id, j,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
         |      list_transform(string_split('cm' || CAST(j AS VARCHAR) || '|' ||
@@ -4661,8 +4568,8 @@ object EventQueries {
         |        FROM probe p JOIN counters c ON c.j = p.j AND c.pos = p.pos
         |        GROUP BY 1)
         |SELECT user_id, exact_n, est_n, est_n - exact_n AS overcount
-        |FROM exact JOIN est USING (user_id)""".stripMargin,
-    "events_feature_pit" ->
+        |FROM exact JOIN est USING (user_id)""".stripMargin),
+    QueryDef("events_feature_pit", eventsFeaturePit,
       """WITH ev AS (SELECT user_id, event_id, event_type, value,
         |              epoch_us(ts) AS tus FROM events),
         |labels AS (SELECT user_id, event_id AS label_event, tus AS lts
@@ -4686,8 +4593,8 @@ object EventQueries {
         |  COALESCE(c, 0) AS n_click_7d,
         |  COALESCE(p, 0) AS n_prior_purchase_7d,
         |  COALESCE(s, 0) AS spend_7d_cents
-        |FROM labels LEFT JOIN f USING (user_id, label_event, lts)""".stripMargin,
-    "events_interval_join" ->
+        |FROM labels LEFT JOIN f USING (user_id, label_event, lts)""".stripMargin),
+    QueryDef("events_interval_join", eventsIntervalJoin,
       """WITH g AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
         |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -4710,8 +4617,8 @@ object EventQueries {
         |SELECT sess.user_id, sess.session_no, s_start, s_end,
         |       COALESCE(n_ev, CAST(0 AS BIGINT)) AS n_concurrent_events,
         |       COALESCE(n_us, CAST(0 AS BIGINT)) AS n_concurrent_users
-        |FROM sess LEFT JOIN j USING (user_id, session_no)""".stripMargin,
-    "events_hll_distinct" ->
+        |FROM sess LEFT JOIN j USING (user_id, session_no)""".stripMargin),
+    QueryDef("events_hll_distinct", eventsHllDistinct,
       """WITH h_t AS (SELECT DISTINCT event_type, user_id FROM events),
         |hh AS (SELECT event_type,
         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -4733,11 +4640,11 @@ object EventQueries {
         |  CAST(64 - used_buckets AS BIGINT) AS empty_buckets, z_scaled,
         |  CAST(97444218012 // z_scaled AS BIGINT) AS est_distinct,
         |  97444218012 // z_scaled <= 160 AS small_range
-        |FROM e JOIN z USING (event_type)""".stripMargin,
+        |FROM e JOIN z USING (event_type)""".stripMargin),
     // merged-vs-full register equality: the DuckDB side rebuilds the
     // same three aggregation trees; rf folds hh directly (a user in
     // both periods carries the same h, MAX is idempotent)
-    "events_hll_incremental" ->
+    QueryDef("events_hll_incremental", eventsHllIncremental,
       """WITH ev AS (SELECT DISTINCT user_id,
         |              ts >= TIMESTAMP '2024-01-24' AS is_new FROM events),
         |hh AS (SELECT user_id, is_new,
@@ -4776,8 +4683,8 @@ object EventQueries {
         |       z_full, CAST(97444218012 // z_full AS BIGINT) AS est_full,
         |       exact_hist + exact_batch - exact_full AS overlap_users,
         |       n_mismatch = 0 AND z_merged = z_full AS merge_exact
-        |FROM ex, mm, zm, zf""".stripMargin,
-    "events_anomaly" ->
+        |FROM ex, mm, zm, zf""".stripMargin),
+    QueryDef("events_anomaly", eventsAnomaly,
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
         |               FROM events GROUP BY 1, 2),
         |d_t AS (SELECT event_type, COUNT(*) AS d FROM daily GROUP BY 1),
@@ -4792,8 +4699,8 @@ object EventQueries {
         |mad AS (SELECT event_type, dev AS mad FROM r2 JOIN d_t USING (event_type)
         |        WHERE rk = (d + 1) // 2)
         |SELECT dev.event_type, day, n, med, mad, abs(n - med) > mad * 2 AS outlier
-        |FROM dev JOIN mad USING (event_type)""".stripMargin,
-    "events_trend" ->
+        |FROM dev JOIN mad USING (event_type)""".stripMargin),
+    QueryDef("events_trend", eventsTrend,
       """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS day, COUNT(*) AS n
         |           FROM events GROUP BY 1, 2),
         |x_t AS (SELECT event_type,
@@ -4806,8 +4713,8 @@ object EventQueries {
         |  CAST(n_days * sxy - sx * sum_count AS BIGINT) AS slope_num,
         |  CAST(n_days * sxx - sx * sx AS BIGINT) AS slope_den,
         |  n_days * sxy - sx * sum_count > 0 AS rising
-        |FROM a""".stripMargin,
-    "events_seq3" ->
+        |FROM a""".stripMargin),
+    QueryDef("events_seq3", eventsSeq3,
       """WITH g AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
         |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -4830,23 +4737,18 @@ object EventQueries {
         |  SELECT t1, t2, t3, cnt,
         |         CAST(row_number() OVER (ORDER BY cnt DESC, t1, t2, t3) AS BIGINT) AS rk
         |  FROM t)
-        |WHERE rk <= 10""".stripMargin,
-    "events_user_entropy" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+        |WHERE rk <= 10""".stripMargin),
+    QueryDef("events_user_entropy", eventsUserEntropy,
       s"""WITH c AS (SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS c
          |           FROM events GROUP BY 1, 2),
          |u AS (SELECT user_id, CAST(SUM(c) AS BIGINT) AS n,
-         |        CAST(SUM(c * ${mbSql("c")}) AS BIGINT) AS sc
+         |        CAST(SUM(c * ${log2MillisSql("c")}) AS BIGINT) AS sc
          |      FROM c GROUP BY 1),
-         |h AS (SELECT user_id, (n * ${mbSql("n")} - sc) // n AS h_mb FROM u)
+         |h AS (SELECT user_id, (n * ${log2MillisSql("n")} - sc) // n AS h_mb FROM u)
          |SELECT h_mb // 250 AS band, CAST(COUNT(*) AS BIGINT) AS n_users,
          |  MIN(h_mb) AS min_mb, MAX(h_mb) AS max_mb
-         |FROM h GROUP BY 1""".stripMargin
-    },
-    "events_paths" ->
+         |FROM h GROUP BY 1""".stripMargin),
+    QueryDef("events_paths", eventsPaths,
       """WITH g AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus,
         |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -4868,8 +4770,8 @@ object EventQueries {
         |  SELECT src, dst, cnt,
         |         CAST(row_number() OVER (ORDER BY cnt DESC, src, dst) AS BIGINT) AS rk
         |  FROM t)
-        |WHERE rk <= 20""".stripMargin,
-    "events_attribution" ->
+        |WHERE rk <= 20""".stripMargin),
+    QueryDef("events_attribution", eventsAttribution,
       """WITH ev AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS tus FROM events),
         |u AS (SELECT user_id, event_id, tus, 1 AS side, event_id AS seq,
         |             CAST(NULL AS BIGINT) AS view_event_id, CAST(NULL AS BIGINT) AS view_tus
@@ -4884,8 +4786,8 @@ object EventQueries {
         |                          ROWS UNBOUNDED PRECEDING))
         |SELECT user_id, event_id, tus AS click_tus, view_event_id, view_tus,
         |       tus - view_tus AS gap_us
-        |FROM c WHERE side = 1""".stripMargin,
-    "events_retention" ->
+        |FROM c WHERE side = 1""".stripMargin),
+    QueryDef("events_retention", eventsRetention,
       """WITH du AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
         |act AS (SELECT day, COUNT(*) AS active_users FROM du GROUP BY day),
         |ret AS (SELECT a.day AS day, COUNT(*) AS retained_d1
@@ -4893,8 +4795,8 @@ object EventQueries {
         |          AND b.day = a.day + INTERVAL 1 DAY
         |        GROUP BY a.day)
         |SELECT act.day, act.active_users, COALESCE(ret.retained_d1, 0) AS retained_d1
-        |FROM act LEFT JOIN ret USING (day)""".stripMargin,
-    "events_funnel" ->
+        |FROM act LEFT JOIN ret USING (day)""".stripMargin),
+    QueryDef("events_funnel", eventsFunnel,
       """WITH m AS (SELECT user_id,
         |    MIN(CASE WHEN event_type = 'view' THEN epoch_us(ts) END) AS t_view,
         |    MIN(CASE WHEN event_type = 'click' THEN epoch_us(ts) END) AS t_click,
@@ -4904,12 +4806,12 @@ object EventQueries {
         |       COUNT(CASE WHEN t_view < t_click THEN 1 END) AS n_view_click,
         |       COUNT(CASE WHEN t_view < t_click AND t_click < t_purchase THEN 1 END)
         |         AS n_view_click_purchase
-        |FROM m""".stripMargin,
-    "events_window" ->
+        |FROM m""".stripMargin),
+    QueryDef("events_window", eventsWindow,
       """SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type, COUNT(*) AS n,
         |       CAST(SUM(CAST(value AS DECIMAL(38,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "events_sessions" ->
+        |FROM events GROUP BY 1, 2""".stripMargin),
+    QueryDef("events_sessions", eventsSessions,
       """WITH g AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
         |                  lag(epoch_us(ts)) OVER (PARTITION BY user_id
         |                    ORDER BY epoch_us(ts), event_id) AS prev
@@ -4922,15 +4824,15 @@ object EventQueries {
         |               ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_no FROM s)
         |SELECT user_id, session_no, MIN(tus) AS session_start_us,
         |       COUNT(*) AS n_events, MAX(tus) - MIN(tus) AS dur_us
-        |FROM c GROUP BY user_id, session_no""".stripMargin,
-    "events_daily_active" ->
+        |FROM c GROUP BY user_id, session_no""".stripMargin),
+    QueryDef("events_daily_active", eventsDailyActive,
       """SELECT CAST(ts AS DATE) AS day, COUNT(DISTINCT user_id) AS active_users,
         |       COUNT(*) AS n_events
-        |FROM events GROUP BY 1""".stripMargin,
-    "events_props" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    QueryDef("events_props", eventsProps,
       """SELECT event_type, COUNT(*) AS n,
         |       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |       MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         |       MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1""".stripMargin)
+        |FROM events GROUP BY 1""".stripMargin))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleFragments.log2MillisSql
 import Tables._
 
 /** Spatial analytics over gridded 2-D points — the geo suite every
@@ -1073,34 +1074,6 @@ object GeoQueries {
        |  FROM p WHERE vec_id NOT IN (SELECT vec_id FROM m))
        |SELECT * FROM per_r UNION ALL SELECT * FROM outs""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "geo_radius_join" -> (geoRadiusJoin _),
-    "geo_radius_join_capped" -> (geoRadiusJoinCapped _),
-    "geo_rknn" -> (geoRknn _),
-    "geo_choropleth" -> (geoChoropleth _),
-    "geo_knn" -> (geoKnn _),
-    "geo_hotspot" -> (geoHotspot _),
-    "geo_pyramid" -> (geoPyramid _),
-    "geo_region_join" -> (geoRegionJoin _),
-    "geo_region_join_large" -> (geoRegionJoinLarge _),
-    "geo_convex_hull" -> (geoConvexHull _),
-    "geo_voronoi" -> (geoVoronoi _),
-    "geo_closest_pair" -> (geoClosestPair _),
-    "geo_kde" -> (geoKde _),
-    "geo_zonal_stats" -> (geoZonalStats _),
-    "geo_lof" -> (geoLof _),
-    "geo_stay_points" -> (geoStayPoints _),
-    "geo_od_matrix" -> (geoOdMatrix _),
-    "geo_cotravel" -> (geoCotravel _),
-    "geo_gyration" -> (geoGyration _),
-    "geo_loc_entropy" -> (geoLocEntropy _),
-    "geo_zone_transitions" -> (geoZoneTransitions _),
-    "geo_jump_lengths" -> (geoJumpLengths _),
-    "geo_cotravel_lift" -> (geoCotravelLift _),
-    "geo_map_match" -> (geoMapMatch _),
-    "geo_encounters" -> (geoEncounters _),
-    "geo_home_work" -> (geoHomeWork _))
-
   /** The walk CTE shared by the trajectory oracles — byte-for-byte the
     * algebra [[traj]] computes (Knuth mix, [-10,10]² steps, per-user
     * running sum in (tus, event_id) order, all positive BIGINT). */
@@ -1117,15 +1090,8 @@ object GeoQueries {
       |      ORDER BY tus, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS y
       |  FROM st)""".stripMargin
 
-  /** DuckDB spelling of the millibit fast-log (binade + linear
-    * fraction) — the standard oracle idiom, see TextQueries. */
-  private def mbSql(q: String): String =
-    s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-      s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-      s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
-
-  val oracleSql: Map[String, String] = Map(
-    "geo_encounters" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("geo_encounters", geoEncounters,
       s"""WITH $trajSql,
          |uk AS MATERIALIZED (SELECT DISTINCT user_id, tus // 3600000000 AS hb,
          |    x // 25 AS cx, y // 25 AS cy FROM traj),
@@ -1147,8 +1113,8 @@ object GeoQueries {
          |  CAST(MAX(n_hours) AS BIGINT) AS max_hours,
          |  CAST(SUM(n_hours) AS BIGINT) AS tot_hours,
          |  MIN(start_hb) AS first_hb
-         |FROM e GROUP BY 1, 2 HAVING SUM(n_hours) >= 2""".stripMargin,
-    "geo_home_work" ->
+         |FROM e GROUP BY 1, 2 HAVING SUM(n_hours) >= 2""".stripMargin),
+    QueryDef("geo_home_work", geoHomeWork,
       s"""WITH $trajSql,
          |v AS (SELECT user_id,
          |    CASE WHEN (tus // 3600000000) % 24 BETWEEN 8 AND 17
@@ -1163,8 +1129,8 @@ object GeoQueries {
          |  FROM v)
          |SELECT user_id, period, n_visits, cx AS cell_x, cy AS cell_y,
          |  c AS top_visits, (1000 * c) // n_visits AS focus_milli
-         |FROM t WHERE rk = 1""".stripMargin,
-    "geo_map_match" -> {
+         |FROM t WHERE rk = 1""".stripMargin),
+    QueryDef("geo_map_match", geoMapMatch, {
       val anchorValues = anchors.map { case (aid, ax, ay) =>
         s"($aid, $ax, $ay)" }.mkString(", ")
       s"""WITH $trajSql,
@@ -1194,8 +1160,8 @@ object GeoQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_points,
          |  MIN(tus) AS enter_us, MAX(tus) - MIN(tus) AS dur_us
          |FROM r WHERE aid >= 0 GROUP BY 1, 2""".stripMargin
-    },
-    "geo_gyration" ->
+    }),
+    QueryDef("geo_gyration", geoGyration,
       s"""WITH $trajSql,
          |a AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_points,
          |    CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -1203,20 +1169,20 @@ object GeoQueries {
          |  FROM traj GROUP BY 1)
          |SELECT user_id, n_points,
          |  (n_points * sq - sx * sx - sy * sy) // (n_points * n_points) AS rg2
-         |FROM a""".stripMargin,
-    "geo_loc_entropy" ->
+         |FROM a""".stripMargin),
+    QueryDef("geo_loc_entropy", geoLocEntropy,
       s"""WITH $trajSql,
          |v AS (SELECT user_id, x // 25 AS cx, y // 25 AS cy,
          |    CAST(COUNT(*) AS BIGINT) AS c
          |  FROM traj GROUP BY 1, 2, 3),
          |a AS (SELECT user_id, CAST(SUM(c) AS BIGINT) AS n_points,
          |    CAST(COUNT(*) AS BIGINT) AS n_cells,
-         |    CAST(SUM(c * ${mbSql("c")}) AS BIGINT) AS swl
+         |    CAST(SUM(c * ${log2MillisSql("c")}) AS BIGINT) AS swl
          |  FROM v GROUP BY 1)
          |SELECT user_id, n_points, n_cells,
-         |  ${mbSql("n_points")} - swl // n_points AS h_milli
-         |FROM a""".stripMargin,
-    "geo_zone_transitions" ->
+         |  ${log2MillisSql("n_points")} - swl // n_points AS h_milli
+         |FROM a""".stripMargin),
+    QueryDef("geo_zone_transitions", geoZoneTransitions,
       s"""WITH $trajSql,
          |z AS (SELECT user_id, tus, event_id, x // 50 AS zx, y // 50 AS zy,
          |    lag(x // 50) OVER (PARTITION BY user_id
@@ -1232,8 +1198,8 @@ object GeoQueries {
          |SELECT rk, from_zx, from_zy, to_zx, to_zy, n_trans, n_users FROM (
          |  SELECT *, CAST(row_number() OVER (ORDER BY n_trans DESC,
          |    from_zx, from_zy, to_zx, to_zy) AS BIGINT) AS rk
-         |  FROM tr) WHERE rk <= 20""".stripMargin,
-    "geo_jump_lengths" ->
+         |  FROM tr) WHERE rk <= 20""".stripMargin),
+    QueryDef("geo_jump_lengths", geoJumpLengths,
       s"""WITH $trajSql,
          |d AS (SELECT dx * dx + dy * dy AS d2 FROM traj),
          |b AS (SELECT CASE WHEN d2 = 0 THEN CAST(-1 AS BIGINT)
@@ -1242,8 +1208,8 @@ object GeoQueries {
          |  FROM d GROUP BY 1),
          |t AS (SELECT CAST(SUM(n_steps) AS BIGINT) AS n_total FROM b)
          |SELECT bucket, n_steps, (1000000 * n_steps) // n_total AS share_ppm
-         |FROM b CROSS JOIN t""".stripMargin,
-    "geo_cotravel_lift" ->
+         |FROM b CROSS JOIN t""".stripMargin),
+    QueryDef("geo_cotravel_lift", geoCotravelLift,
       s"""WITH $trajSql,
          |uk AS MATERIALIZED (SELECT DISTINCT user_id, tus // 3600000000 AS hb,
          |    x // 25 AS cx, y // 25 AS cy FROM traj),
@@ -1266,8 +1232,8 @@ object GeoQueries {
          |FROM pairs p
          |JOIN per pa ON p.user_a = pa.user_id
          |JOIN per pb ON p.user_b = pb.user_id
-         |CROSS JOIN u""".stripMargin,
-    "geo_stay_points" ->
+         |CROSS JOIN u""".stripMargin),
+    QueryDef("geo_stay_points", geoStayPoints,
       s"""WITH $trajSql,
          |f AS (SELECT user_id, event_id, tus, x, y,
          |    CASE WHEN abs(dx) <= 3 AND abs(dy) <= 3 THEN 0 ELSE 1 END AS brk,
@@ -1283,8 +1249,8 @@ object GeoQueries {
          |  MIN(tus) AS start_us, MAX(tus) - MIN(tus) AS dur_us,
          |  (1000 * CAST(SUM(x) AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS cx_milli,
          |  (1000 * CAST(SUM(y) AS BIGINT)) // CAST(COUNT(*) AS BIGINT) AS cy_milli
-         |FROM r GROUP BY 1, 2 HAVING COUNT(*) >= 3""".stripMargin,
-    "geo_od_matrix" ->
+         |FROM r GROUP BY 1, 2 HAVING COUNT(*) >= 3""".stripMargin),
+    QueryDef("geo_od_matrix", geoOdMatrix,
       s"""WITH $trajSql,
          |rk AS (SELECT user_id, tus // 86400000000 AS day, x, y,
          |    row_number() OVER (PARTITION BY user_id, tus // 86400000000
@@ -1300,8 +1266,8 @@ object GeoQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_trips,
          |  CAST(COUNT(DISTINCT o.user_id) AS BIGINT) AS n_users
          |FROM o JOIN d ON o.user_id = d.user_id AND o.day = d.day
-         |GROUP BY 1, 2, 3, 4""".stripMargin,
-    "geo_cotravel" ->
+         |GROUP BY 1, 2, 3, 4""".stripMargin),
+    QueryDef("geo_cotravel", geoCotravel,
       s"""WITH $trajSql,
          |uk AS MATERIALIZED (SELECT DISTINCT user_id, tus // 3600000000 AS hb,
          |    x // 25 AS cx, y // 25 AS cy FROM traj),
@@ -1313,8 +1279,8 @@ object GeoQueries {
          |FROM cool a JOIN cool b
          |  ON a.hb = b.hb AND a.cx = b.cx AND a.cy = b.cy
          | AND a.user_id < b.user_id
-         |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
-    "geo_closest_pair" ->
+         |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin),
+    QueryDef("geo_closest_pair", geoClosestPair,
       s"""WITH $pSql,
          |cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
@@ -1324,8 +1290,8 @@ object GeoQueries {
          |SELECT rk, id_a, id_b, d2 FROM (
          |  SELECT id_a, id_b, d2, CAST(row_number() OVER (
          |    ORDER BY d2, id_a, id_b) AS BIGINT) AS rk
-         |  FROM cand) WHERE rk <= 5""".stripMargin,
-    "geo_kde" ->
+         |  FROM cand) WHERE rk <= 5""".stripMargin),
+    QueryDef("geo_kde", geoKde,
       s"""WITH $pSql,
          |cells AS (SELECT px // 100 AS cx, py // 100 AS cy,
          |    CAST(COUNT(*) AS BIGINT) AS n
@@ -1338,8 +1304,8 @@ object GeoQueries {
          |SELECT rk, cell_x, cell_y, density FROM (
          |  SELECT cell_x, cell_y, density, CAST(row_number() OVER (
          |    ORDER BY density DESC, cell_x, cell_y) AS BIGINT) AS rk
-         |  FROM d) WHERE rk <= 20""".stripMargin,
-    "geo_zonal_stats" ->
+         |  FROM d) WHERE rk <= 20""".stripMargin),
+    QueryDef("geo_zonal_stats", geoZonalStats,
       s"""WITH $pSql,
          |e(region_id, x1, y1, x2, y2) AS (VALUES $regionEdgeValues),
          |s AS (SELECT p.vec_id, e.region_id,
@@ -1359,8 +1325,8 @@ object GeoQueries {
          |  FROM v)
          |SELECT region_id, n, label AS top_label, votes AS top_votes,
          |  (1000 * votes) // n AS purity_milli
-         |FROM t WHERE rk = 1""".stripMargin,
-    "geo_lof" ->
+         |FROM t WHERE rk = 1""".stripMargin),
+    QueryDef("geo_lof", geoLof,
       s"""WITH $pSql,
          |cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
@@ -1388,15 +1354,15 @@ object GeoQueries {
          |SELECT rk, vec_id, n_nbrs, lrd_micro, lof_milli FROM (
          |  SELECT vec_id, n_nbrs, lrd_micro, lof_milli, CAST(row_number() OVER (
          |    ORDER BY lof_milli DESC, vec_id) AS BIGINT) AS rk
-         |  FROM lof) WHERE rk <= 20""".stripMargin,
-    "geo_radius_join" ->
+         |  FROM lof) WHERE rk <= 20""".stripMargin),
+    QueryDef("geo_radius_join", geoRadiusJoin,
       s"""WITH $pSql
          |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |  (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
          |FROM p a JOIN p b ON a.vec_id < b.vec_id
          |WHERE (a.px - b.px) * (a.px - b.px) +
-         |      (a.py - b.py) * (a.py - b.py) <= 400""".stripMargin,
-    "geo_radius_join_capped" ->
+         |      (a.py - b.py) * (a.py - b.py) <= 400""".stripMargin),
+    QueryDef("geo_radius_join_capped", geoRadiusJoinCapped,
       s"""WITH $pSql,
          |h AS MATERIALIZED (SELECT vec_id, px, py,
          |    px // 20 AS gx, py // 20 AS gy FROM p),
@@ -1406,8 +1372,8 @@ object GeoQueries {
          |  (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
          |FROM p a JOIN cool b ON a.vec_id < b.vec_id
          |WHERE (a.px - b.px) * (a.px - b.px) +
-         |      (a.py - b.py) * (a.py - b.py) <= 400""".stripMargin,
-    "geo_knn" ->
+         |      (a.py - b.py) * (a.py - b.py) <= 400""".stripMargin),
+    QueryDef("geo_knn", geoKnn,
       s"""WITH $pSql,
          |cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
@@ -1417,8 +1383,8 @@ object GeoQueries {
          |SELECT id_a, rk, id_b, d2 FROM (
          |  SELECT id_a, id_b, d2, CAST(row_number() OVER (
          |    PARTITION BY id_a ORDER BY d2, id_b) AS BIGINT) AS rk
-         |  FROM cand) WHERE rk <= 3""".stripMargin,
-    "geo_rknn" ->
+         |  FROM cand) WHERE rk <= 3""".stripMargin),
+    QueryDef("geo_rknn", geoRknn,
       s"""WITH $pSql,
          |cand AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |    (a.px - b.px) * (a.px - b.px) + (a.py - b.py) * (a.py - b.py) AS d2
@@ -1435,8 +1401,8 @@ object GeoQueries {
          |SELECT rk, vec_id, rknn, closest_d2 FROM (
          |  SELECT vec_id, rknn, closest_d2, CAST(row_number() OVER (
          |    ORDER BY rknn DESC, vec_id) AS BIGINT) AS rk
-         |  FROM r) WHERE rk <= 10""".stripMargin,
-    "geo_choropleth" ->
+         |  FROM r) WHERE rk <= 10""".stripMargin),
+    QueryDef("geo_choropleth", geoChoropleth,
       """WITH pl AS (SELECT
         |    CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000.0) AS BIGINT) + 2000 AS px,
         |    CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000.0) AS BIGINT) + 2000 AS py,
@@ -1452,8 +1418,8 @@ object GeoQueries {
         |  FROM v)
         |SELECT cell_x, cell_y, n, label AS top_label, votes AS top_votes,
         |  (1000 * votes) // n AS purity_milli
-        |FROM t WHERE rk = 1""".stripMargin,
-    "geo_hotspot" ->
+        |FROM t WHERE rk = 1""".stripMargin),
+    QueryDef("geo_hotspot", geoHotspot,
       s"""WITH $pSql,
          |cells AS MATERIALIZED (SELECT px // 100 AS cx, py // 100 AS cy,
          |    CAST(COUNT(*) AS BIGINT) AS n
@@ -1468,21 +1434,21 @@ object GeoQueries {
          |  GROUP BY 1, 2, 3)
          |SELECT cell_x, cell_y, n, n_nbhd,
          |  n_cells * n_nbhd > 27 * n_total AS hot
-         |FROM nb CROSS JOIN tot""".stripMargin,
-    "geo_pyramid" ->
+         |FROM nb CROSS JOIN tot""".stripMargin),
+    QueryDef("geo_pyramid", geoPyramid,
       s"""WITH $pSql,
          |z AS (SELECT unnest([CAST(0 AS BIGINT), 1, 2, 3]) AS z)
          |SELECT z.z,
          |  px // (2000 // (CAST(1 AS BIGINT) << z.z)) AS tx,
          |  py // (2000 // (CAST(1 AS BIGINT) << z.z)) AS ty,
          |  CAST(COUNT(*) AS BIGINT) AS n_points
-         |FROM p CROSS JOIN z GROUP BY 1, 2, 3""".stripMargin,
-    "geo_region_join" -> regionJoinOracleSql,
+         |FROM p CROSS JOIN z GROUP BY 1, 2, 3""".stripMargin),
+    QueryDef("geo_region_join", geoRegionJoin, regionJoinOracleSql),
     // geo_region_join_large: identical semantics and readout — the
     // Spark side differs only in PLAN (shuffle-side cover join, no
     // broadcast); one oracle spelling pins both.
-    "geo_region_join_large" -> regionJoinOracleSql,
-    "geo_convex_hull" ->
+    QueryDef("geo_region_join_large", geoRegionJoinLarge, regionJoinOracleSql),
+    QueryDef("geo_convex_hull", geoConvexHull,
       s"""WITH $pSql,
          |ext AS (SELECT
          |    min(px * 4194304 + py) AS kw, max(px * 4194304 + py) AS ke,
@@ -1505,8 +1471,8 @@ object GeoQueries {
          |      AND (b.px - a.px) * (r.py - a.py) -
          |          (b.py - a.py) * (r.px - a.px) < 0))
          |SELECT s.vec_id, s.px, s.py
-         |FROM surv s JOIN good g ON s.vec_id = g.vec_id""".stripMargin,
-    "geo_voronoi" -> {
+         |FROM surv s JOIN good g ON s.vec_id = g.vec_id""".stripMargin),
+    QueryDef("geo_voronoi", geoVoronoi, {
       val facValues = facilities.map { case (fid, fx, fy) =>
         s"($fid, $fx, $fy)" }.mkString(", ")
       s"""WITH $pSql,
@@ -1526,5 +1492,5 @@ object GeoQueries {
          |  (1000 * CAST(SUM(py) AS BIGINT)) // CAST(COUNT(*) AS BIGINT)
          |    AS cy_milli
          |FROM a WHERE rk = 1 GROUP BY 1""".stripMargin
-    })
+    }))
 }

@@ -1,9 +1,11 @@
 package graft.queries
 
-import graft.ext.{MultimodalOps, SimOps}
+import graft.ext.MultimodalOps
+import graft.functions.HashExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleFragments.log2MillisSql
 import Tables._
 
 /** Multimodal-column suite: the oracle-checkable slice of
@@ -114,7 +116,7 @@ object MultimodalQueries {
     val b = h.select(col("doc_id").as("doc_b"), col("hist").as("hist_b"))
     a.join(b, col("doc_b") === col("doc_a") + 1)
       .select(col("doc_a"), col("doc_b"),
-        SimOps.cosine(col("hist_a"), col("hist_b")).as("cos"))
+        HashExprs.cosineSim(col("hist_a"), col("hist_b")).as("cos"))
   }
 
   /** Frame sampling under the oracle gate: each blob is treated as a
@@ -1050,45 +1052,6 @@ object MultimodalQueries {
         (col("l1") * lit(2L) > col("frame_len")).as("is_cut"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_bin_scene_cuts" -> (mmBinSceneCuts _),
-    "mm_bin_sharpness" -> (mmBinSharpness _),
-    "mm_bin_runs" -> (mmBinRuns _),
-    "mm_bin_audio_dupes" -> (mmBinAudioDupes _),
-    "mm_bin_audio_dupes_capped" -> (mmBinAudioDupesCapped _),
-    "mm_bin_cdc_chunks" -> (mmBinCdcChunks _),
-    "mm_bin_chunk_overlap" -> (mmBinChunkOverlap _),
-    "mm_byte_entropy" -> (mmByteEntropy _),
-    "mm_bin_sniff" -> (mmBinSniff _),
-    "mm_bin_tiles" -> (mmBinTiles _),
-    "mm_bin_dup_groups" -> (mmBinDupGroups _),
-    "mm_bin_frames" -> (mmBinFrames _),
-    "mm_bin_entropy" -> (mmBinEntropy _),
-    "mm_bin_phash" -> (mmBinPhash _),
-    "mm_phash_sweep" -> (mmPhashSweep _),
-    "mm_byte_runs" -> (mmByteRuns _),
-    "mm_sharpness" -> (mmSharpness _),
-    "mm_tile_hash" -> (mmTileHash _),
-    "mm_container_sniff" -> (mmContainerSniff _),
-    "mm_meta_conflict" -> (mmMetaConflict _),
-    "mm_modal_mix" -> (mmModalMix _),
-    "mm_dominant_bin" -> (mmDominantBin _),
-    "mm_batch_pack" -> (mmBatchPack _),
-    "mm_cdc_chunks" -> (mmCdcChunks _),
-    "mm_chunk_overlap" -> (mmChunkOverlap _),
-    "mm_audio_segments" -> (mmAudioSegments _),
-    "mm_frames_sql" -> (mmFramesSql _),
-    "mm_scene_cuts" -> (mmSceneCuts _),
-    "mm_audio_dupes" -> (mmAudioDupes _),
-    "mm_audio_dupes_capped" -> (mmAudioDupesCapped _),
-    "mm_phash" -> (mmPhash _),
-    "mm_phash_clusters" -> (mmPhashClusters _),
-    "mm_dedup" -> (mmDedup _),
-    "mm_frames" -> (mmFrames _),
-    "mm_meta" -> (mmMeta _),
-    "mm_bytes" -> (mmBytes _),
-    "mm_hist_sim" -> (mmHistSim _))
-
   // ASCII corpus ⇒ byte view == codepoint view; DuckDB works from text.
   private val cpsSql = "list_transform(string_split(text, ''), ch -> unicode(ch))"
 
@@ -1200,8 +1163,8 @@ object MultimodalQueries {
       |        (a, x) -> (a * 31 + x) % 1000000007)) AS chunk_fps
       |  FROM cut)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "mm_bin_scene_cuts" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("mm_bin_scene_cuts", mmBinSceneCuts,
       """WITH c AS (SELECT doc_id, list_concat(
         |    list_transform(range(0, 64), i -> (doc_id * 7) % 256),
         |    list_transform(range(0, 64), i ->
@@ -1222,8 +1185,8 @@ object MultimodalQueries {
         |      (s, v) -> s + v) AS l1
         |  FROM f a JOIN f x ON x.doc_id = a.doc_id AND x.b = a.b + 1)
         |SELECT doc_id, boundary, frame_len, l1, 2 * l1 > frame_len AS is_cut
-        |FROM p""".stripMargin,
-    "mm_bin_sharpness" ->
+        |FROM p""".stripMargin),
+    QueryDef("mm_bin_sharpness", mmBinSharpness,
       s"""WITH c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents),
          |s AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes,
          |    CAST(COALESCE(list_sum(list_transform(range(2, len(cps)),
@@ -1243,8 +1206,8 @@ object MultimodalQueries {
          |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_tot FROM bands)
          |SELECT CAST(band AS BIGINT) AS band, n_docs, sum_energy, min_milli,
          |  max_milli, (1000 * n_docs) // n_tot AS share_milli
-         |FROM bands CROSS JOIN tot""".stripMargin,
-    "mm_bin_runs" ->
+         |FROM bands CROSS JOIN tot""".stripMargin),
+    QueryDef("mm_bin_runs", mmBinRuns,
       s"""WITH cp AS (SELECT doc_id, $synthCpsSql AS cps FROM documents),
          |r AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS nb, cps,
          |    list_concat([CAST(1 AS BIGINT)],
@@ -1269,15 +1232,15 @@ object MultimodalQueries {
          |  CASE WHEN n_bytes = 0 THEN 0
          |       ELSE (1000 * run8_bytes) // n_bytes END AS dead_air_milli,
          |  max_run >= 16 AS padded
-         |FROM m""".stripMargin,
-    "mm_bin_audio_dupes" ->
+         |FROM m""".stripMargin),
+    QueryDef("mm_bin_audio_dupes", mmBinAudioDupes,
       s"""$binAudioBandSql
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
          |FROM b_t a JOIN b_t b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin,
-    "mm_bin_audio_dupes_capped" ->
+         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
+    QueryDef("mm_bin_audio_dupes_capped", mmBinAudioDupesCapped,
       s"""$binAudioBandSql,
          |kept AS (SELECT band, key FROM b_t GROUP BY band, key HAVING COUNT(*) <= 8),
          |cb AS (SELECT doc_id, ah, band, key FROM b_t JOIN kept USING (band, key))
@@ -1285,16 +1248,16 @@ object MultimodalQueries {
          |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
          |FROM cb a JOIN cb b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin,
-    "mm_bin_cdc_chunks" ->
+         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
+    QueryDef("mm_bin_cdc_chunks", mmBinCdcChunks,
       s"""WITH $binCdcFpsSql
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_chunks,
          |  CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_distinct,
          |  CAST((1000 * (COUNT(*) - COUNT(DISTINCT fp))) // COUNT(*) AS BIGINT)
          |    AS dup_milli
          |FROM (SELECT source, unnest(chunk_fps) AS fp FROM fps)
-         |GROUP BY 1""".stripMargin,
-    "mm_bin_chunk_overlap" ->
+         |GROUP BY 1""".stripMargin),
+    QueryDef("mm_bin_chunk_overlap", mmBinChunkOverlap,
       s"""WITH $binCdcFpsSql,
          |sf AS MATERIALIZED (SELECT DISTINCT source, fp FROM
          |       (SELECT source, unnest(chunk_fps) AS fp FROM fps)),
@@ -1309,26 +1272,21 @@ object MultimodalQueries {
          |FROM pairs
          |JOIN n na ON na.source = src_a
          |JOIN n nb ON nb.source = src_b
-         |WHERE shared >= 2""".stripMargin,
-    "mm_byte_entropy" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+         |WHERE shared >= 2""".stripMargin),
+    QueryDef("mm_byte_entropy", mmByteEntropy,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
          |n AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes FROM c),
          |e AS (SELECT doc_id, unnest(cps) AS cp FROM c),
          |h AS (SELECT doc_id, cp // 16 AS b, CAST(COUNT(*) AS BIGINT) AS cc
          |  FROM e GROUP BY 1, 2),
          |t AS (SELECT h.doc_id, n_bytes, cc,
-         |    cc * (${mbSql("n_bytes")} - ${mbSql("cc")}) AS term
+         |    cc * (${log2MillisSql("n_bytes")} - ${log2MillisSql("cc")}) AS term
          |  FROM h JOIN n ON h.doc_id = n.doc_id)
          |SELECT doc_id, n_bytes, CAST(COUNT(*) AS BIGINT) AS n_bins,
          |  CASE WHEN n_bytes = 0 THEN 0
          |       ELSE CAST(SUM(term) AS BIGINT) // n_bytes END AS entropy_milli
-         |FROM t GROUP BY doc_id, n_bytes""".stripMargin
-    },
-    "mm_phash_sweep" ->
+         |FROM t GROUP BY doc_id, n_bytes""".stripMargin),
+    QueryDef("mm_phash_sweep", mmPhashSweep,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT doc_id + 1000000, substr(text, 1, len(text) - 1) || '~'
          |  FROM documents),
@@ -1375,8 +1333,8 @@ object MultimodalQueries {
          |  (1000 * n_planted) // n_docs AS recall_milli,
          |  CASE WHEN n_pairs = 0 THEN 0
          |       ELSE (1000 * n_planted) // n_pairs END AS precision_milli
-         |FROM o CROSS JOIN nd""".stripMargin,
-    "mm_byte_runs" ->
+         |FROM o CROSS JOIN nd""".stripMargin),
+    QueryDef("mm_byte_runs", mmByteRuns,
       s"""WITH c AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT doc_id + 3000000, text || repeat('~', 32)
          |    FROM documents WHERE doc_id % 25 = 0),
@@ -1405,8 +1363,8 @@ object MultimodalQueries {
          |  CASE WHEN n_bytes = 0 THEN 0
          |       ELSE (1000 * run8_bytes) // n_bytes END AS dead_air_milli,
          |  max_run >= 16 AS padded
-         |FROM m""".stripMargin,
-    "mm_sharpness" ->
+         |FROM m""".stripMargin),
+    QueryDef("mm_sharpness", mmSharpness,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
          |s AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes,
          |    CAST(COALESCE(list_sum(list_transform(range(2, len(cps)),
@@ -1426,8 +1384,8 @@ object MultimodalQueries {
          |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_tot FROM bands)
          |SELECT CAST(band AS BIGINT) AS band, n_docs, sum_energy, min_milli,
          |  max_milli, (1000 * n_docs) // n_tot AS share_milli
-         |FROM bands CROSS JOIN tot""".stripMargin,
-    "mm_tile_hash" ->
+         |FROM bands CROSS JOIN tot""".stripMargin),
+    QueryDef("mm_tile_hash", mmTileHash,
       """WITH base AS (SELECT doc_id, text FROM documents),
         |spliced AS (SELECT doc_id + 2000000 AS doc_id,
         |    substring(text, 1, 8 * (length(text) // 16))
@@ -1449,8 +1407,8 @@ object MultimodalQueries {
         |FROM keep x JOIN keep y ON x.tile_md5 = y.tile_md5
         |  AND x.doc_id < y.doc_id
         |GROUP BY 1, 2
-        |HAVING COUNT(*) >= 4""".stripMargin,
-    "mm_batch_pack" ->
+        |HAVING COUNT(*) >= 4""".stripMargin),
+    QueryDef("mm_batch_pack", mmBatchPack,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
          |m AS (SELECT doc_id,
          |        16 + CAST(len(cps) AS BIGINT) % 17 AS w,
@@ -1463,16 +1421,16 @@ object MultimodalQueries {
          |SELECT bucket, shard, (seq - 1) // 8 AS batch,
          |  COUNT(*) AS n_imgs, CAST(SUM(w * h) AS BIGINT) AS sum_pixels,
          |  MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc
-         |FROM r GROUP BY 1, 2, 3""".stripMargin,
-    "mm_cdc_chunks" ->
+         |FROM r GROUP BY 1, 2, 3""".stripMargin),
+    QueryDef("mm_cdc_chunks", mmCdcChunks,
       s"""WITH $cdcFpsSql
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_chunks,
          |  CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_distinct,
          |  CAST((1000 * (COUNT(*) - COUNT(DISTINCT fp))) // COUNT(*) AS BIGINT)
          |    AS dup_milli
          |FROM (SELECT source, unnest(chunk_fps) AS fp FROM fps)
-         |GROUP BY 1""".stripMargin,
-    "mm_chunk_overlap" ->
+         |GROUP BY 1""".stripMargin),
+    QueryDef("mm_chunk_overlap", mmChunkOverlap,
       s"""WITH $cdcFpsSql,
          |sf AS MATERIALIZED (SELECT DISTINCT source, fp FROM
          |       (SELECT source, unnest(chunk_fps) AS fp FROM fps)),
@@ -1487,8 +1445,8 @@ object MultimodalQueries {
          |FROM pairs
          |JOIN n na ON na.source = src_a
          |JOIN n nb ON nb.source = src_b
-         |WHERE shared >= 2""".stripMargin,
-    "mm_audio_segments" ->
+         |WHERE shared >= 2""".stripMargin),
+    QueryDef("mm_audio_segments", mmAudioSegments,
       """WITH f0 AS (SELECT doc_id, text,
         |             greatest(1, CAST(length(text) // 16 AS BIGINT)) AS nf
         |           FROM documents),
@@ -1506,8 +1464,8 @@ object MultimodalQueries {
         |SELECT doc_id, CAST(MIN(fi) AS BIGINT) AS seg_start,
         |       CAST(COUNT(*) AS BIGINT) AS n_frames,
         |       CAST(SUM(letters) AS BIGINT) AS n_letters
-        |FROM r GROUP BY doc_id, g""".stripMargin,
-    "mm_frames_sql" ->
+        |FROM r GROUP BY doc_id, g""".stripMargin),
+    QueryDef("mm_frames_sql", mmFramesSql,
       """WITH c AS (SELECT doc_id, text, greatest(1, len(text) // 8) AS sz
         |           FROM documents)
         |SELECT doc_id, CAST(b - 1 AS BIGINT) AS frame_idx,
@@ -1515,8 +1473,8 @@ object MultimodalQueries {
         |    CAST(sz AS BIGINT))) AS BIGINT) AS n_frame_bytes,
         |  md5(substr(text, CAST((b-1)*sz + 1 AS BIGINT),
         |    CAST(sz AS BIGINT))) AS frame_md5
-        |FROM c, (SELECT unnest(range(1, 9)) AS b)""".stripMargin,
-    "mm_scene_cuts" ->
+        |FROM c, (SELECT unnest(range(1, 9)) AS b)""".stripMargin),
+    QueryDef("mm_scene_cuts", mmSceneCuts,
       """WITH m AS (SELECT doc_id, lower(text) || upper(text) AS mt FROM documents),
         |c AS (SELECT doc_id, mt, greatest(1, len(mt) // 8) AS sz FROM m),
         |f AS (SELECT doc_id, sz, b,
@@ -1533,15 +1491,15 @@ object MultimodalQueries {
         |          (s, v) -> s + v) AS l1
         |      FROM f a JOIN f x ON x.doc_id = a.doc_id AND x.b = a.b + 1)
         |SELECT doc_id, boundary, frame_len, l1, 2 * l1 > frame_len AS is_cut
-        |FROM p""".stripMargin,
-    "mm_audio_dupes" ->
+        |FROM p""".stripMargin),
+    QueryDef("mm_audio_dupes", mmAudioDupes,
       s"""$audioBandSql
          |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
          |FROM b_t a JOIN b_t b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin,
-    "mm_audio_dupes_capped" ->
+         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
+    QueryDef("mm_audio_dupes_capped", mmAudioDupesCapped,
       s"""$audioBandSql,
          |kept AS (SELECT band, key FROM b_t GROUP BY band, key HAVING COUNT(*) <= 8),
          |cb AS (SELECT doc_id, ah, band, key FROM b_t JOIN kept USING (band, key))
@@ -1549,11 +1507,11 @@ object MultimodalQueries {
          |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
          |FROM cb a JOIN cb b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin,
+         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
     // 32 equal byte segments (1-based inclusive slices), cross-multiplied
     // mean-gradient bits, then the 3-band (10/10/11-bit) pigeonhole join —
     // the exact arithmetic of byteSegGradHash + hammingPairs(31, 3, 2).
-    "mm_bin_frames" ->
+    QueryDef("mm_bin_frames", mmBinFrames,
       s"""WITH c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents),
          |f AS (SELECT doc_id, fi, cps[fi * 8 + 1 : fi * 8 + 8] AS fb
          |  FROM c, (SELECT unnest([0, 3, 6, 7]) AS fi))
@@ -1562,8 +1520,8 @@ object MultimodalQueries {
          |  CAST(list_aggregate(fb, 'sum') AS BIGINT) AS sum_bytes,
          |  CAST(list_aggregate(fb, 'min') AS INTEGER) AS min_byte,
          |  CAST(list_aggregate(fb, 'max') AS INTEGER) AS max_byte
-         |FROM f""".stripMargin,
-    "mm_bin_tiles" ->
+         |FROM f""".stripMargin),
+    QueryDef("mm_bin_tiles", mmBinTiles,
       s"""WITH c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents
          |  WHERE doc_id % 5 <> 0),
          |t0 AS (SELECT DISTINCT doc_id,
@@ -1574,8 +1532,8 @@ object MultimodalQueries {
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |  CAST(COUNT(*) AS BIGINT) AS n_shared_tiles
          |FROM t a JOIN t b ON a.tile = b.tile AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin,
-    "mm_bin_dup_groups" ->
+         |GROUP BY 1, 2 HAVING COUNT(*) >= 2""".stripMargin),
+    QueryDef("mm_bin_dup_groups", mmBinDupGroups,
       s"""WITH RECURSIVE c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents
          |  WHERE doc_id % 5 <> 0),
          |t0 AS (SELECT DISTINCT doc_id,
@@ -1594,8 +1552,8 @@ object MultimodalQueries {
          |lab AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep
          |        FROM reach GROUP BY a)
          |SELECT cluster_rep, CAST(COUNT(*) AS BIGINT) AS sz
-         |FROM lab GROUP BY 1""".stripMargin,
-    "mm_bin_sniff" ->
+         |FROM lab GROUP BY 1""".stripMargin),
+    QueryDef("mm_bin_sniff", mmBinSniff,
       """WITH s AS (SELECT
         |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |      ELSE 'video' END AS annotated,
@@ -1606,26 +1564,21 @@ object MultimodalQueries {
         |  FROM documents)
         |SELECT annotated, sniffed, CAST(COUNT(*) AS BIGINT) AS n,
         |  annotated = sniffed AS is_diagonal
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "mm_bin_entropy" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+        |FROM s GROUP BY 1, 2""".stripMargin),
+    QueryDef("mm_bin_entropy", mmBinEntropy,
       s"""WITH c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents),
          |n AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes FROM c),
          |e AS (SELECT doc_id, unnest(cps) AS cp FROM c),
          |h AS (SELECT doc_id, cp // 16 AS b, CAST(COUNT(*) AS BIGINT) AS cc
          |  FROM e GROUP BY 1, 2),
          |t AS (SELECT h.doc_id, n_bytes, cc,
-         |    cc * (${mbSql("n_bytes")} - ${mbSql("cc")}) AS term
+         |    cc * (${log2MillisSql("n_bytes")} - ${log2MillisSql("cc")}) AS term
          |  FROM h JOIN n ON h.doc_id = n.doc_id)
          |SELECT doc_id, n_bytes, CAST(COUNT(*) AS BIGINT) AS n_bins,
          |  CASE WHEN n_bytes = 0 THEN 0
          |       ELSE CAST(SUM(term) AS BIGINT) // n_bytes END AS entropy_milli
-         |FROM t GROUP BY doc_id, n_bytes""".stripMargin
-    },
-    "mm_bin_phash" ->
+         |FROM t GROUP BY doc_id, n_bytes""".stripMargin),
+    QueryDef("mm_bin_phash", mmBinPhash,
       s"""WITH c0 AS (SELECT doc_id, $synthCpsSql AS cps FROM documents
          |  WHERE doc_id % 5 <> 0),
          |c AS (SELECT doc_id, cps FROM c0
@@ -1651,8 +1604,8 @@ object MultimodalQueries {
          |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
          |FROM b_t a JOIN b_t b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph, b.ph)) <= 2""".stripMargin,
-    "mm_phash" ->
+         |WHERE bit_count(xor(a.ph, b.ph)) <= 2""".stripMargin),
+    QueryDef("mm_phash", mmPhash,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT doc_id + 1000000, substr(text, 1, len(text) - 1) || '~'
          |  FROM documents),
@@ -1677,8 +1630,8 @@ object MultimodalQueries {
          |  CAST(bit_count(xor(a.ph, b.ph)) AS BIGINT) AS hamming
          |FROM b_t a JOIN b_t b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph, b.ph)) <= 2""".stripMargin,
-    "mm_phash_clusters" ->
+         |WHERE bit_count(xor(a.ph, b.ph)) <= 2""".stripMargin),
+    QueryDef("mm_phash_clusters", mmPhashClusters,
       s"""WITH RECURSIVE corpus AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT doc_id + 1000000, substr(text, 1, len(text) - 1) || '~'
          |  FROM documents),
@@ -1711,8 +1664,8 @@ object MultimodalQueries {
          |lab AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep
          |        FROM reach GROUP BY a)
          |SELECT cluster_rep, CAST(COUNT(*) AS BIGINT) AS sz
-         |FROM lab GROUP BY 1""".stripMargin,
-    "mm_container_sniff" ->
+         |FROM lab GROUP BY 1""".stripMargin),
+    QueryDef("mm_container_sniff", mmContainerSniff,
       """WITH d AS (SELECT doc_id,
         |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |      ELSE 'video' END AS annotated,
@@ -1727,8 +1680,8 @@ object MultimodalQueries {
         |  FROM d)
         |SELECT annotated, sniffed, CAST(COUNT(*) AS BIGINT) AS n,
         |  annotated = sniffed AS is_diagonal
-        |FROM s GROUP BY 1, 2""".stripMargin,
-    "mm_meta_conflict" ->
+        |FROM s GROUP BY 1, 2""".stripMargin),
+    QueryDef("mm_meta_conflict", mmMetaConflict,
       """WITH corpus AS (SELECT doc_id, source, text FROM documents
         |                UNION ALL
         |                SELECT doc_id + 1000000, 'mirror', text
@@ -1738,8 +1691,8 @@ object MultimodalQueries {
         |  CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
         |  CAST(MIN(doc_id) AS BIGINT) AS keep_id,
         |  MIN(source) AS src_min, MAX(source) AS src_max
-        |FROM corpus GROUP BY 1 HAVING COUNT(DISTINCT source) > 1""".stripMargin,
-    "mm_modal_mix" ->
+        |FROM corpus GROUP BY 1 HAVING COUNT(DISTINCT source) > 1""".stripMargin),
+    QueryDef("mm_modal_mix", mmModalMix,
       """WITH t AS (SELECT CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
         |             ELSE 'video' END AS modality,
         |             CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -1758,8 +1711,8 @@ object MultimodalQueries {
         |  (1000 * (n_blobs - n_distinct)) // n_blobs AS dup_milli,
         |  total_bytes, max_bytes,
         |  (1000 * total_bytes) // t AS byte_share_milli
-        |FROM mix, tot""".stripMargin,
-    "mm_dominant_bin" ->
+        |FROM mix, tot""".stripMargin),
+    QueryDef("mm_dominant_bin", mmDominantBin,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
          |h AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes,
          |        list_transform(range(0, 16),
@@ -1774,16 +1727,16 @@ object MultimodalQueries {
          |  CAST(MIN(doc_id) AS BIGINT) AS first_doc,
          |  CAST(SUM((c_max * 1000) // greatest(n_bytes, 1)) AS BIGINT)
          |    // CAST(COUNT(*) AS BIGINT) AS avg_share_milli
-         |FROM d GROUP BY dominant_bin""".stripMargin,
-    "mm_dedup" ->
+         |FROM d GROUP BY dominant_bin""".stripMargin),
+    QueryDef("mm_dedup", mmDedup,
       """WITH corpus AS (SELECT doc_id, text FROM documents
         |                UNION ALL SELECT doc_id + 1000000, text FROM documents)
         |SELECT md5(text) AS content_md5, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM corpus GROUP BY md5(text) HAVING COUNT(*) >= 2""".stripMargin,
+        |FROM corpus GROUP BY md5(text) HAVING COUNT(*) >= 2""".stripMargin),
     // nf=8, every=3 ⇒ sampled indices distinct([0,3,6] ++ [7]) = [0,3,6,7];
     // frame size = max(1, n_bytes // 8); substring clamps at the end on
     // both engines (empty slice ⇒ md5 of the empty string, equal).
-    "mm_frames" ->
+    QueryDef("mm_frames", mmFrames,
       """WITH f AS (SELECT doc_id, text, octet_length(encode(text)) AS nb FROM documents),
         |i AS (SELECT doc_id, text, greatest(1, nb // 8) AS sz,
         |             unnest([0, 3, 6, 7]) AS frame_idx FROM f)
@@ -1791,22 +1744,22 @@ object MultimodalQueries {
         |       CAST(octet_length(encode(substring(text, frame_idx*sz + 1, sz))) AS BIGINT)
         |         AS n_frame_bytes,
         |       md5(substring(text, frame_idx*sz + 1, sz)) AS frame_md5
-        |FROM i""".stripMargin,
-    "mm_meta" ->
+        |FROM i""".stripMargin),
+    QueryDef("mm_meta", mmMeta,
       """SELECT doc_id, octet_length(encode(text)) AS n_bytes,
         |       md5(text) AS content_md5
-        |FROM documents""".stripMargin,
-    "mm_bytes" ->
+        |FROM documents""".stripMargin),
+    QueryDef("mm_bytes", mmBytes,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents)
          |SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes,
          |       CAST(list_aggregate(cps, 'sum') AS BIGINT) AS sum_bytes,
          |       CAST(CASE WHEN len(cps) = 0 THEN 0 ELSE list_aggregate(cps, 'min') END AS INTEGER) AS min_byte,
          |       CAST(CASE WHEN len(cps) = 0 THEN 0 ELSE list_aggregate(cps, 'max') END AS INTEGER) AS max_byte
-         |FROM c""".stripMargin,
-    "mm_hist_sim" ->
+         |FROM c""".stripMargin),
+    QueryDef("mm_hist_sim", mmHistSim,
       s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
          |h AS (SELECT doc_id, $histSql AS hist FROM c)
          |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          |       ${cosDSql("a.hist", "b.hist")} AS cos
-         |FROM h a JOIN h b ON b.doc_id = a.doc_id + 1""".stripMargin)
+         |FROM h a JOIN h b ON b.doc_id = a.doc_id + 1""".stripMargin))
 }

@@ -168,55 +168,43 @@ object ParityOps {
     spark.createDataset(consumed).toDF("idx", "n_nationkey", "n_name_lower")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "op_to_iterable" -> (opToIterable _),
-    "op_map" -> (opMap _),
-    "op_filter" -> (opFilter _),
-    "op_flat_map" -> (opFlatMap _),
-    "op_flat_map_sql" -> (opFlatMapSql _),
-    "op_concat" -> (opConcat _),
-    "op_concat_rr" -> (opConcatRr _),
-    "op_ordered" -> (opOrdered _),
-    "op_pipeline" -> (opPipeline _),
-    "op_each_run" -> (opEachRun _))
-
-  val oracleSql: Map[String, String] = Map(
-    "op_to_iterable" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("op_to_iterable", opToIterable,
       """SELECT ROW_NUMBER() OVER (ORDER BY n_nationkey) - 1 AS idx,
-        |       n_nationkey, lower(n_name) AS n_name_lower FROM nation""".stripMargin,
-    "op_map" ->
+        |       n_nationkey, lower(n_name) AS n_name_lower FROM nation""".stripMargin),
+    QueryDef("op_map", opMap,
       """SELECT l_orderkey, l_linenumber, l_extendedprice * (1 - l_discount) AS revenue
-        |FROM lineitem""".stripMargin,
-    "op_filter" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity > 45.0""",
-    "op_flat_map" ->
+        |FROM lineitem""".stripMargin),
+    QueryDef("op_filter", opFilter,
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity > 45.0"""),
+    QueryDef("op_flat_map", opFlatMap,
       """SELECT doc_id, unnest(generate_series(1, len(toks))) - 1 AS pos,
         |       unnest(toks) AS token
-        |FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)""".stripMargin,
-    "op_flat_map_sql" ->
+        |FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)""".stripMargin),
+    QueryDef("op_flat_map_sql", opFlatMapSql,
       """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |p AS (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS i
         |      FROM t WHERE len(toks) >= 3)
         |SELECT doc_id, CAST(i - 1 AS INT) AS pos,
         |       array_to_string(list_slice(toks, i, i + 2), ' ') AS shingle
-        |FROM p""".stripMargin,
-    "op_concat" ->
+        |FROM p""".stripMargin),
+    QueryDef("op_concat", opConcat,
       """SELECT l_orderkey, l_linenumber, 'r' AS tag FROM lineitem WHERE l_returnflag = 'R'
         |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'a' AS tag FROM lineitem WHERE l_returnflag = 'A'""".stripMargin,
-    "op_concat_rr" ->
+        |SELECT l_orderkey, l_linenumber, 'a' AS tag FROM lineitem WHERE l_returnflag = 'A'""".stripMargin),
+    QueryDef("op_concat_rr", opConcatRr,
       """WITH e AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS r, 0 AS s
         |           FROM documents WHERE doc_id % 2 = 0),
         |o AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS r, 1 AS s
         |      FROM documents WHERE doc_id % 2 = 1),
         |u AS (SELECT doc_id, r, s FROM e UNION ALL SELECT doc_id, r, s FROM o)
         |SELECT CAST(row_number() OVER (ORDER BY r, s) - 1 AS BIGINT) AS pos, doc_id
-        |FROM u""".stripMargin,
-    "op_ordered" ->
-      """SELECT ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS ord, doc_id FROM documents""",
-    "op_pipeline" ->
+        |FROM u""".stripMargin),
+    QueryDef("op_ordered", opOrdered,
+      """SELECT ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS ord, doc_id FROM documents"""),
+    QueryDef("op_pipeline", opPipeline,
       """SELECT i AS idx, i * 2 + 1 AS value FROM generate_series(0, 999) AS g(i)
-        |WHERE (i * 2 + 1) % 7 <> 0""".stripMargin,
-    "op_each_run" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity >= 49.0""")
+        |WHERE (i * 2 + 1) % 7 <> 0""".stripMargin),
+    QueryDef("op_each_run", opEachRun,
+      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_quantity >= 49.0"""))
 }

@@ -2638,96 +2638,8 @@ object Relational {
         col("sum_d").cast("bigint").as("sum_v"),
         expr("CAST((1000 * sum_d) div n AS BIGINT)").as("mean_milli"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_column_profile" -> (qColumnProfile _),
-    "q_range_sel_audit" -> (qRangeSelAudit _),
-    "q_fk_card_audit" -> (qFkCardAudit _),
-    "q_item_cf" -> (qItemCf _),
-    "q_regression" -> (qRegression _),
-    "q_filter_reorder_advisor" -> (qFilterReorderAdvisor _),
-    "q_ndv_estimate" -> (qNdvEstimate _),
-    "q_partition_advisor" -> (qPartitionAdvisor _),
-    "q_aqp_sample" -> (qAqpSample _),
-    "q_t_closeness" -> (qTCloseness _),
-    "q_winsorized" -> (qWinsorized _),
-    "q2_min_cost_supp" -> (q2MinCostSupp _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q12_ship_delay" -> (q12ShipDelay _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q20_promo_suppliers" -> (q20PromoSuppliers _),
-    "q21_waiting_supp" -> (q21WaitingSupp _),
-    "q_exists_rewrite" -> (qExistsRewrite _),
-    "q19_disjunctive" -> (q19Disjunctive _),
-    "q_eager_agg" -> (qEagerAgg _),
-    "q_semijoin_reduce" -> (qSemijoinReduce _),
-    "q_join_card_est" -> (qJoinCardEst _),
-    "q_f2_selfjoin_est" -> (qF2SelfjoinEst _),
-    "q_join_order_advisor" -> (qJoinOrderAdvisor _),
-    "q_mcv_stats" -> (qMcvStats _),
-    "q_partition_skew" -> (qPartitionSkew _),
-    "q_erasure_manifest" -> (qErasureManifest _),
-    "q_bitmap_index" -> (qBitmapIndex _),
-    "q_table_checksum" -> (qTableChecksum _),
-    "q_analyze_stats" -> (qAnalyzeStats _),
-    "q_k_generalize" -> (qKGeneralize _),
-    "q_k_anonymity" -> (qKAnonymity _),
-    "q_binpack" -> (qBinpack _),
-    "q_zorder" -> (qZorder _),
-    "q_colocated_join" -> (qColocatedJoin _),
-    "q_dq_report" -> (qDqReport _),
-    "q_drift" -> (qDrift _),
-    "q_incremental_mv" -> (qIncrementalMv _),
-    "q_mv_rewrite" -> (qMvRewrite _),
-    "q_mv_rewrite_join" -> (qMvRewriteJoin _),
-    "q_mv_advisor" -> (qMvAdvisor _),
-    "q_incremental_join_mv" -> (qIncrementalJoinMv _),
-    "q_bloom_prune" -> (qBloomPrune _),
-    "q_dpp_prune" -> (qDppPrune _),
-    "q_encode_cost" -> (qEncodeCost _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_trailing_30d" -> (qTrailing30d _),
-    "q_ntile" -> (qNtile _),
-    "q_cube" -> (qCube _),
-    "q_monthly_growth" -> (qMonthlyGrowth _),
-    "q_price_percentiles" -> (qPricePercentiles _),
-    "q_pivot" -> (qPivot _),
-    "q_set_ops" -> (qSetOps _),
-    "q13_order_dist" -> (q13OrderDist _),
-    "q14_promo" -> (q14Promo _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q17_small_qty" -> (q17SmallQty _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q22_rich_idle" -> (q22RichIdle _),
-    "q7_volume" -> (q7Volume _),
-    "q8_mkt_share" -> (q8MktShare _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q_benford" -> (qBenford _),
-    "q_corr_stats" -> (qCorrStats _),
-    "q_selectivity_audit" -> (qSelectivityAudit _),
-    "q_ingest_lateness" -> (qIngestLateness _),
-    "q_pseudonymize" -> (qPseudonymize _),
-    "q_value_bands" -> (qValueBands _),
-    "q_skyline" -> (qSkyline _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q10_returns" -> (q10Returns _),
-    "q6_forecast" -> (q6Forecast _),
-    "q4_priority" -> (q4Priority _),
-    "q_salted_orders" -> (qSaltedOrders _),
-    "q_rollup" -> (qRollup _),
-    "q1_pricing" -> (q1Pricing _),
-    "q3_top_revenue" -> (q3TopRevenue _),
-    "q5_nation_revenue" -> (q5NationRevenue _),
-    "q_brand_volume" -> (qBrandVolume _),
-    "q_top_orders_per_customer" -> (qTopOrdersPerCustomer _),
-    "q_customers_no_orders" -> (qCustomersNoOrders _),
-    "q_active_suppliers" -> (qActiveSuppliers _),
-    "q_status_stats" -> (qStatusStats _),
-    "q_running_revenue" -> (qRunningRevenue _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_column_profile" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("q_column_profile", qColumnProfile,
       """WITH g AS (SELECT c, v FROM lineitem, LATERAL (VALUES
         |    ('quantity', CAST(round(l_quantity) AS BIGINT)),
         |    ('discount_pts', CAST(round(l_discount * 100) AS BIGINT)),
@@ -2738,8 +2650,8 @@ object Relational {
         |  MIN(v) AS min_v, MAX(v) AS max_v,
         |  CAST(SUM(CAST(v AS HUGEINT)) AS BIGINT) AS sum_v,
         |  CAST((1000 * SUM(CAST(v AS HUGEINT))) // COUNT(*) AS BIGINT) AS mean_milli
-        |FROM g GROUP BY 1""".stripMargin,
-    "q_range_sel_audit" ->
+        |FROM g GROUP BY 1""".stripMargin),
+    QueryDef("q_range_sel_audit", qRangeSelAudit,
       """WITH v AS MATERIALIZED (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS x
         |  FROM lineitem),
         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS cnt, MIN(x) AS x0, MAX(x) AS x8 FROM v),
@@ -2771,8 +2683,8 @@ object Relational {
         |  FROM v CROSS JOIN preds p GROUP BY 1)
         |SELECT e.pid, e.lo, e.hi, e.est_micro, a.actual_micro,
         |  abs(e.est_micro - a.actual_micro) AS err_micro
-        |FROM est e JOIN act a USING (pid)""".stripMargin,
-    "q_fk_card_audit" -> {
+        |FROM est e JOIN act a USING (pid)""".stripMargin),
+    QueryDef("q_fk_card_audit", qFkCardAudit, {
       def edgeSql(name: String, child: String, ck: String,
                   parent: String, pk: String): String =
         s"""SELECT '$name' AS edge, p.n_parent, f.n_child, f.n_keys,
@@ -2794,8 +2706,8 @@ object Relational {
         edgeSql("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
         edgeSql("supplier->nation", "supplier", "s_nationkey", "nation", "n_nationkey"))
         .mkString("", "\nUNION ALL\n", "")
-    },
-    "q_item_cf" ->
+    }),
+    QueryDef("q_item_cf", qItemCf,
       """WITH b AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |ni AS (SELECT l_partkey, CAST(COUNT(*) AS BIGINT) AS n_i FROM b GROUP BY 1),
         |p AS MATERIALIZED (SELECT a.l_partkey AS part_a, c.l_partkey AS part_b,
@@ -2814,8 +2726,8 @@ object Relational {
         |SELECT part_a, rk, part_b, n_ab, n_a, n_b, cos2_micro FROM (
         |  SELECT *, CAST(row_number() OVER (PARTITION BY part_a
         |    ORDER BY cos2_micro DESC, n_ab DESC, part_b) AS BIGINT) AS rk
-        |  FROM sc) WHERE rk <= 3""".stripMargin,
-    "q_regression" ->
+        |  FROM sc) WHERE rk <= 3""".stripMargin),
+    QueryDef("q_regression", qRegression,
       """WITH g AS (SELECT l_returnflag AS grp,
         |    CAST(round(l_quantity) AS BIGINT) AS x1,
         |    CAST(round(l_discount * 100) AS BIGINT) AS x2,
@@ -2844,8 +2756,8 @@ object Relational {
         |SELECT grp, CAST(n AS BIGINT) AS n_rows,
         |  (sy - b1 * sx1 - b2 * sx2) / n AS b0, b1, b2,
         |  (b1 * s1y + b2 * s2y) / syy_c AS r2
-        |FROM s""".stripMargin,
-    "q_filter_reorder_advisor" ->
+        |FROM s""".stripMargin),
+    QueryDef("q_filter_reorder_advisor", qFilterReorderAdvisor,
       """WITH f AS (SELECT
         |    CASE WHEN l_quantity < 10.0 THEN 1 ELSE 0 END AS a,
         |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS b,
@@ -2869,8 +2781,8 @@ object Relational {
         |  FROM o),
         |best AS (SELECT MIN(evals_milli) AS best_milli FROM e)
         |SELECT ord, n1, n12, evals_milli, evals_milli = best_milli AS chosen
-        |FROM e CROSS JOIN best""".stripMargin,
-    "q_ndv_estimate" ->
+        |FROM e CROSS JOIN best""".stripMargin),
+    QueryDef("q_ndv_estimate", qNdvEstimate,
       """WITH o AS (SELECT o_custkey,
         |    ((((o_orderkey * 2654435761 + 12345) % 1048576)
         |      * ((o_orderkey * 2654435761 + 12345) % 1048576))
@@ -2891,8 +2803,8 @@ object Relational {
         |SELECT n_sample, d_sample, f1, f2, ndv_exact, chao1_est,
         |  CAST(sign(chao1_est - ndv_exact) AS BIGINT)
         |    * ((1000 * abs(chao1_est - ndv_exact)) // ndv_exact) AS err_milli
-        |FROM m""".stripMargin,
-    "q_partition_advisor" ->
+        |FROM m""".stripMargin),
+    QueryDef("q_partition_advisor", qPartitionAdvisor,
       """WITH tall AS (
         |  SELECT 'month' AS cand,
         |    CAST(year(o_orderdate) * 100 + month(o_orderdate) AS VARCHAR) AS val
@@ -2910,8 +2822,8 @@ object Relational {
         |    AS lambda_micro,
         |  (1000 * CAST(MAX(c) AS BIGINT)) // CAST(SUM(c) AS BIGINT)
         |    AS max_share_milli
-        |FROM counts GROUP BY cand""".stripMargin,
-    "q_aqp_sample" ->
+        |FROM counts GROUP BY cand""".stripMargin),
+    QueryDef("q_aqp_sample", qAqpSample,
       """WITH l AS (SELECT l_returnflag,
         |    CAST(floor(l_extendedprice * 100) AS BIGINT) AS cents,
         |    ((((l_orderkey * 2654435761 + 12345) % 1048576)
@@ -2935,8 +2847,8 @@ object Relational {
         |  CAST(sign(16 * rev_sampled - rev_exact) AS BIGINT)
         |    * ((1000 * abs(16 * rev_sampled - rev_exact)) // rev_exact)
         |    AS rev_err_milli
-        |FROM g""".stripMargin,
-    "q_t_closeness" ->
+        |FROM g""".stripMargin),
+    QueryDef("q_t_closeness", qTCloseness,
       """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nation,
         |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS band,
         |    c_mktsegment AS seg
@@ -2960,10 +2872,10 @@ object Relational {
         |SELECT nation, band, n_g, tvd_num,
         |  (1000 * tvd_num) // (2 * n_g * n_tot) AS tvd_milli,
         |  2 * tvd_num > n_g * n_tot AS t_violated
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     // per-segment row_number window ON PURPOSE — the plan the engine's
     // globalRank + offset spelling exists to avoid at scale
-    "q_winsorized" ->
+    QueryDef("q_winsorized", qWinsorized,
       """WITH rows_ AS (SELECT c_mktsegment AS seg, o_orderkey, o_totalprice
         |  FROM orders JOIN customer ON o_custkey = c_custkey),
         |r AS (SELECT seg, o_totalprice,
@@ -2980,8 +2892,8 @@ object Relational {
         |  CAST(SUM(CAST(GREATEST(LEAST(o_totalprice, hi), lo)
         |    AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS wins_mean
         |FROM rows_ r2 JOIN b ON r2.seg = b.seg
-        |GROUP BY r2.seg, lo, hi""".stripMargin,
-    "q2_min_cost_supp" ->
+        |GROUP BY r2.seg, lo, hi""".stripMargin),
+    QueryDef("q2_min_cost_supp", q2MinCostSupp,
       """WITH supply AS (
         |  SELECT l_partkey, l_suppkey,
         |    MIN(l_extendedprice / l_quantity) AS unit_cost
@@ -3001,8 +2913,8 @@ object Relational {
         |    AND r2.r_name = 'EUROPE'
         |  WHERE s2.l_partkey = p_partkey)
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "q11_important_parts" ->
+        |LIMIT 100""".stripMargin),
+    QueryDef("q11_important_parts", q11ImportantParts,
       """WITH vals AS (
         |  SELECT l_partkey,
         |    SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
@@ -3016,8 +2928,8 @@ object Relational {
         |FROM vals
         |WHERE CAST(val_dec AS DOUBLE) * 1000.0 >
         |  (SELECT CAST(SUM(val_dec) AS DOUBLE) FROM vals)
-        |ORDER BY part_value DESC, l_partkey""".stripMargin,
-    "q12_ship_delay" ->
+        |ORDER BY part_value DESC, l_partkey""".stripMargin),
+    QueryDef("q12_ship_delay", q12ShipDelay,
       """SELECT
         |  CASE WHEN date_diff('day', o_orderdate, l_shipdate) <= 30
         |         THEN 'FAST'
@@ -3031,8 +2943,8 @@ object Relational {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q16_supplier_cnt" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    QueryDef("q16_supplier_cnt", q16SupplierCnt,
       """SELECT p_brand, p_type, p_size,
         |  COUNT(DISTINCT l_suppkey) AS supplier_cnt
         |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps
@@ -3042,8 +2954,8 @@ object Relational {
         |  AND l_suppkey NOT IN
         |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q20_promo_suppliers" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin),
+    QueryDef("q20_promo_suppliers", q20PromoSuppliers,
       """SELECT s_name, s_acctbal
         |FROM supplier
         |JOIN nation ON s_nationkey = n_nationkey
@@ -3066,8 +2978,8 @@ object Relational {
         |       AND l_shipdate < TIMESTAMP '1998-01-01'
         |     GROUP BY 1) t ON b.l_partkey = t.tp_partkey
         |  WHERE CAST(qty_dec AS DOUBLE) * 5.0 > CAST(total_dec AS DOUBLE))
-        |ORDER BY s_name""".stripMargin,
-    "q21_waiting_supp" ->
+        |ORDER BY s_name""".stripMargin),
+    QueryDef("q21_waiting_supp", q21WaitingSupp,
       """SELECT s_name, COUNT(*) AS numwait
         |FROM lineitem l1
         |JOIN orders ON l1.l_orderkey = o_orderkey AND o_orderstatus = 'F'
@@ -3081,8 +2993,8 @@ object Relational {
         |        WHERE l3.l_orderkey = l1.l_orderkey
         |          AND l3.l_suppkey <> l1.l_suppkey
         |          AND l3.l_shipdate > l1.l_shipdate)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 25""".stripMargin,
-    "q19_disjunctive" ->
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 25""".stripMargin),
+    QueryDef("q19_disjunctive", q19Disjunctive,
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_items,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
         |    AS DOUBLE) AS revenue
@@ -3092,20 +3004,20 @@ object Relational {
         |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
         |        AND l_quantity BETWEEN 10 AND 20)
         |  OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |        AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
+        |        AND l_quantity BETWEEN 20 AND 30))""".stripMargin),
     // the LAZY spelling on purpose: proves the eager (pushed-below-
     // join) aggregation equivalent, decimal fold included
-    "q_eager_agg" ->
+    QueryDef("q_eager_agg", qEagerAgg,
       """SELECT o_orderpriority,
         |  CAST(COUNT(DISTINCT o_orderkey) AS BIGINT) AS n_orders,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
         |    AS DOUBLE) AS revenue,
         |  CAST(COUNT(*) AS BIGINT) AS n_items
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the UNREDUCED 3-way join on purpose: proves the Yannakakis
     // semi-join reduction lossless
-    "q_semijoin_reduce" ->
+    QueryDef("q_semijoin_reduce", qSemijoinReduce,
       """SELECT CAST(c_nationkey AS BIGINT) AS nation,
         |  CAST(COUNT(*) AS BIGINT) AS n_items,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
@@ -3114,8 +3026,8 @@ object Relational {
         |JOIN orders ON o_custkey = c_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY 1""".stripMargin,
-    "q_exists_rewrite" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_exists_rewrite", qExistsRewrite,
       """SELECT c_custkey, c_mktsegment
         |FROM customer c
         |WHERE EXISTS (
@@ -3125,8 +3037,8 @@ object Relational {
         |      AND l.l_returnflag = 'R' AND l.l_extendedprice > 50000)
         |  AND NOT EXISTS (
         |    SELECT 1 FROM orders o2
-        |    WHERE o2.o_custkey = c.c_custkey AND o2.o_totalprice > 400000)""".stripMargin,
-    "q_partition_skew" ->
+        |    WHERE o2.o_custkey = c.c_custkey AND o2.o_totalprice > 400000)""".stripMargin),
+    QueryDef("q_partition_skew", qPartitionSkew,
       """WITH a1 AS (SELECT o_custkey % 32 AS bucket, CAST(COUNT(*) AS BIGINT) AS n
         |            FROM orders GROUP BY 1),
         |a2 AS (SELECT o_orderkey % 32 AS bucket, CAST(COUNT(*) AS BIGINT) AS n
@@ -3147,8 +3059,8 @@ object Relational {
         |SELECT strategy, n_buckets, min_rows, max_rows,
         |  total_rows // n_buckets AS avg_rows,
         |  (1000 * max_rows * n_buckets) // total_rows AS skew_milli
-        |FROM s""".stripMargin,
-    "q_join_card_est" ->
+        |FROM s""".stripMargin),
+    QueryDef("q_join_card_est", qJoinCardEst,
       """WITH f_o AS (SELECT o_orderkey AS key, CAST(COUNT(*) AS BIGINT) AS f_o
         |             FROM orders GROUP BY 1),
         |f_l AS (SELECT l_orderkey AS key, CAST(COUNT(*) AS BIGINT) AS f_l
@@ -3174,8 +3086,8 @@ object Relational {
         |  CAST(CAST(sum_ff AS HUGEINT) * 1000000007 // CAST(theta AS HUGEINT) AS BIGINT)
         |    AS est_join_rows,
         |  actual_join_rows
-        |FROM s, th, act, nu""".stripMargin,
-    "q_mcv_stats" -> {
+        |FROM s, th, act, nu""".stripMargin),
+    QueryDef("q_mcv_stats", qMcvStats, {
       def mcv(table: String, cname: String): String =
         s"""SELECT '$table.$cname' AS col_name, value, n, rank,
            |  (1000 * n) // tot AS freq_milli
@@ -3187,8 +3099,8 @@ object Relational {
            |  (SELECT CAST(COUNT(*) AS BIGINT) AS tot FROM $table)""".stripMargin
       Seq(mcv("orders", "o_orderpriority"), mcv("customer", "c_mktsegment"),
         mcv("orders", "o_orderstatus")).mkString("\nUNION ALL\n")
-    },
-    "q_join_order_advisor" -> {
+    }),
+    QueryDef("q_join_order_advisor", qJoinOrderAdvisor, {
       def fp(salt: String): String =
         s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
            |          list_transform(string_split('$salt|' || CAST(key AS VARCHAR) || '|graft', ''),
@@ -3225,8 +3137,8 @@ object Relational {
         |UNION ALL
         |SELECT 'orders_lineitem_first', est_ol, est_three_way, est_ol = min_int
         |FROM base""".stripMargin
-    },
-    "q_f2_selfjoin_est" -> {
+    }),
+    QueryDef("q_f2_selfjoin_est", qF2SelfjoinEst, {
       val zDefs = (0 until 24).map { j =>
         val a = 104729L + 7919L * j; val b = 7L + 13L * j
         val h = s"(((key * $a) + $b) % 1000000007)"
@@ -3256,8 +3168,8 @@ object Relational {
         |    CAST((abs(CAST(est_f2 AS HUGEINT) - exact_f2) * 1000)
         |      // CAST(exact_f2 AS HUGEINT) AS BIGINT) AS err_permille
         |FROM m""".stripMargin
-    },
-    "q_erasure_manifest" ->
+    }),
+    QueryDef("q_erasure_manifest", qErasureManifest,
       """WITH del AS (SELECT c_custkey FROM customer WHERE c_custkey % 50 = 0),
         |o AS (SELECT c_custkey, o_orderkey
         |      FROM orders JOIN del ON o_custkey = c_custkey),
@@ -3271,8 +3183,8 @@ object Relational {
         |  1 + COALESCE(n_orders, CAST(0 AS BIGINT)) +
         |    COALESCE(n_lineitems, CAST(0 AS BIGINT)) AS n_rows_total
         |FROM del LEFT JOIN no_t USING (c_custkey)
-        |         LEFT JOIN nl_t USING (c_custkey)""".stripMargin,
-    "q_bitmap_index" ->
+        |         LEFT JOIN nl_t USING (c_custkey)""".stripMargin),
+    QueryDef("q_bitmap_index", qBitmapIndex,
       """WITH o AS (SELECT o_orderkey // 63 AS bucket,
         |    CAST(1 AS BIGINT) << CAST(o_orderkey % 63 AS INTEGER) AS bit,
         |    o_orderstatus, o_orderpriority FROM orders),
@@ -3285,16 +3197,16 @@ object Relational {
         |      FROM o GROUP BY 1, 2)
         |SELECT o_orderstatus, o_orderpriority, n_bitmap, n_direct,
         |       n_bitmap = n_direct AS exact
-        |FROM v JOIN d USING (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_table_checksum" ->
+        |FROM v JOIN d USING (o_orderstatus, o_orderpriority)""".stripMargin),
+    QueryDef("q_table_checksum", qTableChecksum,
       """SELECT c_custkey // 1000 AS bucket, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
         |    list_transform(string_split(concat_ws('|', c_custkey, c_name,
         |        c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)), c_mktsegment), ''),
         |      ch -> CAST(unicode(ch) AS BIGINT))),
         |    (a, b) -> (a * 31 + b) % 1000000007) AS DECIMAL(38,0))) AS BIGINT) AS checksum
-        |FROM customer GROUP BY 1""".stripMargin,
-    "q_pseudonymize" ->
+        |FROM customer GROUP BY 1""".stripMargin),
+    QueryDef("q_pseudonymize", qPseudonymize,
       """WITH c AS (SELECT c_custkey, c_mktsegment, c_name,
         |        list_reduce(list_prepend(CAST(0 AS BIGINT),
         |          list_transform(string_split(c_name, ''),
@@ -3313,8 +3225,8 @@ object Relational {
         |      GROUP BY 1)
         |SELECT i.segment, n_customers, n_names, n_pseudonyms,
         |  n_names - n_pseudonyms AS collisions, n_orders, n_active_pseudonyms
-        |FROM i JOIN f ON i.segment = f.segment""".stripMargin,
-    "q_ingest_lateness" ->
+        |FROM i JOIN f ON i.segment = f.segment""".stripMargin),
+    QueryDef("q_ingest_lateness", qIngestLateness,
       """WITH e AS (SELECT o_orderkey, epoch_us(o_orderdate) AS tus FROM orders),
         |t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_rows FROM e),
         |c AS (SELECT o_orderkey, tus,
@@ -3327,8 +3239,8 @@ object Relational {
         |  MAX(late_days) AS max_late_days, n_rows,
         |  (1000000 * CAST(COUNT(*) AS BIGINT)) // n_rows AS late_ppm
         |FROM l CROSS JOIN t
-        |GROUP BY 1, n_rows""".stripMargin,
-    "q_selectivity_audit" ->
+        |GROUP BY 1, n_rows""".stripMargin),
+    QueryDef("q_selectivity_audit", qSelectivityAudit,
       """WITH v AS (SELECT o_totalprice AS x FROM orders),
         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS cnt FROM v),
         |r AS (SELECT x, row_number() OVER (ORDER BY x) AS rk FROM v),
@@ -3343,8 +3255,8 @@ object Relational {
         |  (1000 * bucket) // 8 AS est_milli,
         |  (1000 * n_le) // cnt AS actual_milli,
         |  (1000 * n_le) // cnt - (1000 * bucket) // 8 AS err_milli
-        |FROM a""".stripMargin,
-    "q_analyze_stats" ->
+        |FROM a""".stripMargin),
+    QueryDef("q_analyze_stats", qAnalyzeStats,
       """WITH v AS (SELECT o_totalprice AS x FROM orders),
         |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS cnt,
         |        CAST(COUNT(DISTINCT x) AS BIGINT) AS ndv,
@@ -3354,8 +3266,8 @@ object Relational {
         |      FROM (SELECT unnest(range(1, 8)) AS q) bq
         |      JOIN n ON TRUE
         |      JOIN r ON r.rk = 1 + ((n.cnt - 1) * bq.q) // 8)
-        |SELECT b.bucket, b.boundary, n.cnt, n.ndv, n.mn, n.mx FROM b, n""".stripMargin,
-    "q_k_generalize" ->
+        |SELECT b.bucket, b.boundary, n.cnt, n.ndv, n.mn, n.mx FROM b, n""".stripMargin),
+    QueryDef("q_k_generalize", qKGeneralize,
       """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nation,
         |             CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS b0,
         |             CAST(floor(c_acctbal / 5000.0) AS BIGINT) AS b1
@@ -3371,16 +3283,16 @@ object Relational {
         |g1 AS (SELECT nation, CAST(1 AS BIGINT) AS level, b1 AS band,
         |         CAST(COUNT(*) AS BIGINT) AS n, COUNT(*) >= 5 AS k_ok
         |       FROM f1 GROUP BY 1, 3)
-        |SELECT * FROM pass0 UNION ALL SELECT * FROM g1""".stripMargin,
-    "q_k_anonymity" ->
+        |SELECT * FROM pass0 UNION ALL SELECT * FROM g1""".stripMargin),
+    QueryDef("q_k_anonymity", qKAnonymity,
       """SELECT CAST(c_nationkey AS BIGINT) AS nation,
         |       CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS bal_band,
         |       CAST(COUNT(*) AS BIGINT) AS group_n,
         |       CAST(COUNT(DISTINCT c_mktsegment) AS BIGINT) AS l_div,
         |       COUNT(*) >= 5 AS k_ok,
         |       COUNT(DISTINCT c_mktsegment) >= 2 AS l_ok
-        |FROM customer GROUP BY 1, 2""".stripMargin,
-    "q_binpack" ->
+        |FROM customer GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_binpack", qBinpack,
       """WITH f AS (SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS mth,
         |             COUNT(*) AS n_rows
         |           FROM orders GROUP BY 1),
@@ -3392,18 +3304,18 @@ object Relational {
         |       CAST(COUNT(*) AS BIGINT) AS n_files,
         |       CAST(SUM(n_rows) AS BIGINT) AS bin_rows,
         |       MIN(mth) AS first_mth, MAX(mth) AS last_mth
-        |FROM c GROUP BY 1""".stripMargin,
+        |FROM c GROUP BY 1""".stripMargin),
     // one-level decimal sum == the query's two-level decimal aggregate
     // (exact decimal arithmetic is associative); COUNT(DISTINCT) mirrors
     // the per-order pre-agg row count under the inner join
-    "q_colocated_join" ->
+    QueryDef("q_colocated_join", qColocatedJoin,
       """SELECT o_orderpriority, COUNT(DISTINCT l_orderkey) AS n_orders,
         |       COUNT(*) AS n_items,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE)
         |         AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_drift" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_drift", qDrift,
       """WITH o AS (SELECT CAST(floor(o_totalprice / 25000) AS BIGINT) AS band,
         |    year(o_orderdate) = 1995 AS isa
         |  FROM orders WHERE year(o_orderdate) IN (1995, 1996)),
@@ -3419,8 +3331,8 @@ object Relational {
         |SELECT band, cnt_a, cnt_b, n_a, n_b,
         |  CAST(diff_scaled AS BIGINT) AS diff_scaled, tvd_num,
         |  10 * tvd_num > n_a * n_b AS drifted
-        |FROM wt, tv""".stripMargin,
-    "q_dq_report" ->
+        |FROM wt, tv""".stripMargin),
+    QueryDef("q_dq_report", qDqReport,
       """WITH t AS (SELECT count(*) AS n,
         |    CAST(sum(CASE WHEN o_totalprice IS NULL THEN 1 ELSE 0 END)
         |      AS BIGINT) AS v_comp_price,
@@ -3446,8 +3358,8 @@ object Relational {
         |UNION ALL SELECT 'range:o_totalprice', v_range, n, v_range <= 0 FROM t
         |UNION ALL SELECT 'accepted:o_orderstatus', v_acc, n, v_acc <= 0 FROM t
         |UNION ALL SELECT 'ref:o_custkey->customer.c_custkey', v_ref, n,
-        |  v_ref <= 0 FROM t, r""".stripMargin,
-    "q_incremental_mv" ->
+        |  v_ref <= 0 FROM t, r""".stripMargin),
+    QueryDef("q_incremental_mv", qIncrementalMv,
       """WITH o AS (SELECT o_orderstatus AS st,
         |    CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS month,
         |    o_orderdate AS d, CAST(o_totalprice AS DECIMAL(38,6)) AS p FROM orders),
@@ -3461,21 +3373,21 @@ object Relational {
         |f AS (SELECT st, month, SUM(p) AS fs, COUNT(*) AS n_full FROM o GROUP BY 1, 2)
         |SELECT st, month, n_full, n_merged,
         |  CAST(fs AS DOUBLE) AS sum_full, CAST(ms AS DOUBLE) AS sum_merged
-        |FROM mg JOIN f USING (st, month)""".stripMargin,
-    "q_mv_rewrite" ->
+        |FROM mg JOIN f USING (st, month)""".stripMargin),
+    QueryDef("q_mv_rewrite", qMvRewrite,
       """SELECT o_orderstatus AS status, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
         |  MIN(o_totalprice) AS min_price, MAX(o_totalprice) AS max_price
         |FROM orders WHERE o_orderpriority <> '1-URGENT'
-        |GROUP BY 1""".stripMargin,
-    "q_mv_rewrite_join" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_mv_rewrite_join", qMvRewriteJoin,
       """SELECT c_nationkey AS nation_key, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
         |  MAX(o_totalprice) AS max_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |WHERE o_orderstatus <> 'P'
-        |GROUP BY 1""".stripMargin,
-    "q_mv_advisor" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q_mv_advisor", qMvAdvisor,
       """WITH gs AS (
         |  SELECT o_orderstatus AS st, o_orderpriority AS pr,
         |         CAST(year(o_orderdate) AS BIGINT) AS yr,
@@ -3494,8 +3406,8 @@ object Relational {
         |  CAST(MAX(rows_in_group) AS BIGINT) AS max_group,
         |  CAST(SUM(rows_in_group) AS BIGINT) // COUNT(*) AS ratio,
         |  CAST(SUM(rows_in_group) AS BIGINT) // COUNT(*) >= 64 AS recommend
-        |FROM gs GROUP BY g_s, g_p, g_y""".stripMargin,
-    "q_incremental_join_mv" ->
+        |FROM gs GROUP BY g_s, g_p, g_y""".stripMargin),
+    QueryDef("q_incremental_join_mv", qIncrementalJoinMv,
       """WITH o AS (SELECT o_custkey, o_orderdate AS d,
         |    CAST(o_totalprice AS DECIMAL(38,6)) AS p FROM orders),
         |j AS (SELECT c_nationkey, d, p FROM o
@@ -3510,8 +3422,8 @@ object Relational {
         |f AS (SELECT c_nationkey, SUM(p) AS fs, COUNT(*) AS n_full FROM j GROUP BY 1)
         |SELECT c_nationkey, n_full, n_merged,
         |  CAST(fs AS DOUBLE) AS sum_full, CAST(ms AS DOUBLE) AS sum_merged
-        |FROM mg JOIN f USING (c_nationkey)""".stripMargin,
-    "q_zorder" ->
+        |FROM mg JOIN f USING (c_nationkey)""".stripMargin),
+    QueryDef("q_zorder", qZorder,
       s"""WITH b0 AS (SELECT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
         |m AS (SELECT max(pk) AS pkm, max(sk) AS skm, count(*) AS nr FROM b0),
         |b1 AS (SELECT pk, sk,
@@ -3554,8 +3466,8 @@ object Relational {
         |  CAST(sum(CASE WHEN pk_min <= p_hi AND pk_max >= p_lo
         |    AND sk_min <= s_hi AND sk_max >= s_lo THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned,
         |  CAST(sum(n_match) AS BIGINT) AS rows_matched
-        |FROM s_z""".stripMargin,
-    "q_trailing_30d" ->
+        |FROM s_z""".stripMargin),
+    QueryDef("q_trailing_30d", qTrailing30d,
       """WITH t AS (SELECT l_suppkey, l_orderkey, l_linenumber,
         |  CAST(CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS ship_day,
         |  l_extendedprice * (1 - l_discount) AS rev
@@ -3564,22 +3476,22 @@ object Relational {
         |  CAST(SUM(CAST(rev AS DECIMAL(38,6))) OVER (PARTITION BY l_suppkey
         |    ORDER BY ship_day RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
         |    AS DOUBLE) AS rev_30d
-        |FROM t""".stripMargin,
-    "q_grouping_sets" ->
+        |FROM t""".stripMargin),
+    QueryDef("q_grouping_sets", qGroupingSets,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price,
         |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
         |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority
         |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin,
-    "q_bloom_prune" ->
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin),
+    QueryDef("q_bloom_prune", qBloomPrune,
       """SELECT l_returnflag, COUNT(*) AS n,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
         |FROM lineitem
         |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 400000)
-        |GROUP BY l_returnflag""".stripMargin,
+        |GROUP BY l_returnflag""".stripMargin),
     // same join over the RAW unpartitioned parquet — lossless-pruning proof
-    "q_dpp_prune" ->
+    QueryDef("q_dpp_prune", qDppPrune,
       """WITH dim AS (
         |  SELECT DISTINCT year(o_orderdate) * 12 + month(o_orderdate) - 1 AS m
         |  FROM orders
@@ -3589,12 +3501,12 @@ object Relational {
         |       COUNT(*) AS n_items,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN dim ON year(l_shipdate) * 12 + month(l_shipdate) - 1 = dim.m
-        |GROUP BY 1""".stripMargin,
+        |GROUP BY 1""".stripMargin),
     // the kernel respelled: lag-window deltas in the SAME per-bucket
     // total order, CASE zigzag (== (d<<1)^(d>>63) for |d| < 2^62),
     // varint bytes = (unpadded-binary length + 6) // 7 (bin(0)='0'
     // gives the required 1), all-integer so the engines agree exactly
-    "q_encode_cost" ->
+    QueryDef("q_encode_cost", qEncodeCost,
       """WITH base AS (
         |  SELECT l_orderkey, l_partkey, CAST(l_linenumber AS BIGINT) AS ln
         |  FROM lineitem),
@@ -3627,8 +3539,8 @@ object Relational {
         |  FROM (SELECT CASE WHEN prev IS NULL THEN v ELSE v - prev END AS d FROM c) t)
         |SELECT layout, n_values, raw_bytes, encoded_bytes,
         |       CAST(encoded_bytes * 1000 // raw_bytes AS BIGINT) AS ratio_permille
-        |FROM cost""".stripMargin,
-    "q_ntile" ->
+        |FROM cost""".stripMargin),
+    QueryDef("q_ntile", qNtile,
       """WITH r AS (SELECT c_nationkey, c_acctbal,
         |    CAST(ntile(4) OVER (PARTITION BY c_nationkey
         |      ORDER BY c_acctbal, c_custkey) AS BIGINT) AS quartile
@@ -3637,12 +3549,12 @@ object Relational {
         |  CAST(MIN(c_acctbal) AS DOUBLE) AS min_bal,
         |  CAST(MAX(c_acctbal) AS DOUBLE) AS max_bal,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS sum_bal
-        |FROM r GROUP BY 1, 2""".stripMargin,
-    "q_cube" ->
+        |FROM r GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_cube", qCube,
       """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q_monthly_growth" ->
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin),
+    QueryDef("q_monthly_growth", qMonthlyGrowth,
       """WITH m AS (SELECT CAST(year(o_orderdate)*100 + month(o_orderdate) AS BIGINT) AS month,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS revenue
@@ -3650,8 +3562,8 @@ object Relational {
         |SELECT month, n_orders, revenue,
         |  lag(revenue) OVER (ORDER BY month) AS prev_revenue,
         |  revenue - lag(revenue) OVER (ORDER BY month) AS growth
-        |FROM m""".stripMargin,
-    "q_price_percentiles" ->
+        |FROM m""".stripMargin),
+    QueryDef("q_price_percentiles", qPricePercentiles,
       """WITH n_t AS (SELECT o_orderstatus, COUNT(*) AS n FROM orders GROUP BY 1),
         |r AS (SELECT o_orderstatus, o_totalprice,
         |        CAST(row_number() OVER (PARTITION BY o_orderstatus
@@ -3663,8 +3575,8 @@ object Relational {
         |            ELSE 'p75' END AS q,
         |       CAST(o_totalprice AS DOUBLE) AS price
         |FROM r JOIN n_t USING (o_orderstatus)
-        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3*n + 3) // 4""".stripMargin,
-    "q_pivot" ->
+        |WHERE rk = (n + 3) // 4 OR rk = (n + 1) // 2 OR rk = (3*n + 3) // 4""".stripMargin),
+    QueryDef("q_pivot", qPivot,
       """SELECT c_mktsegment,
         |  COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS F_n,
         |  CAST(SUM(CASE WHEN o_orderstatus = 'F'
@@ -3676,8 +3588,8 @@ object Relational {
         |  CAST(SUM(CASE WHEN o_orderstatus = 'P'
         |           THEN CAST(o_totalprice AS DECIMAL(38,6)) END) AS DOUBLE) AS P_rev
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_set_ops" ->
+        |GROUP BY c_mktsegment""".stripMargin),
+    QueryDef("q_set_ops", qSetOps,
       """SELECT o_custkey AS c_custkey FROM (
         |  SELECT o_custkey FROM orders
         |  WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1996-01-01'
@@ -3686,14 +3598,14 @@ object Relational {
         |  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
         |  EXCEPT
         |  SELECT o_custkey FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01')""".stripMargin,
-    "q13_order_dist" ->
+        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1998-01-01')""".stripMargin),
+    QueryDef("q13_order_dist", q13OrderDist,
       """SELECT c_count, COUNT(*) AS n_custs FROM (
         |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |  GROUP BY c_custkey)
-        |GROUP BY c_count""".stripMargin,
-    "q14_promo" ->
+        |GROUP BY c_count""".stripMargin),
+    QueryDef("q14_promo", q14Promo,
       """SELECT 100.0 * CAST(SUM(CAST(CASE WHEN p_type = 'PROMO'
         |                     THEN l_extendedprice * (1 - l_discount)
         |                     ELSE 0.0 END AS DECIMAL(38,6))) AS DOUBLE)
@@ -3702,8 +3614,8 @@ object Relational {
         |       COUNT(*) AS n_lines
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1996-02-01'""".stripMargin,
-    "q15_top_supplier" ->
+        |  AND l_shipdate < TIMESTAMP '1996-02-01'""".stripMargin),
+    QueryDef("q15_top_supplier", q15TopSupplier,
       """WITH rev AS (
         |  SELECT l_suppkey,
         |    CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS total_rev
@@ -3712,8 +3624,8 @@ object Relational {
         |  GROUP BY l_suppkey)
         |SELECT s_suppkey, s_name, total_rev
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)""".stripMargin,
-    "q17_small_qty" ->
+        |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)""".stripMargin),
+    QueryDef("q17_small_qty", q17SmallQty,
       """WITH b AS (
         |  SELECT l_partkey AS b_partkey,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) * 0.2 AS qty_bound
@@ -3722,8 +3634,8 @@ object Relational {
         |FROM lineitem
         |JOIN part ON l_partkey = p_partkey
         |JOIN b ON l_partkey = b_partkey
-        |WHERE p_brand = 'Brand#4' AND l_quantity < qty_bound""".stripMargin,
-    "q18_large_orders" ->
+        |WHERE p_brand = 'Brand#4' AND l_quantity < qty_bound""".stripMargin),
+    QueryDef("q18_large_orders", q18LargeOrders,
       """WITH big AS (
         |  SELECT l_orderkey,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
@@ -3731,8 +3643,8 @@ object Relational {
         |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
         |FROM big
         |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey""".stripMargin,
-    "q22_rich_idle" ->
+        |JOIN customer ON o_custkey = c_custkey""".stripMargin),
+    QueryDef("q22_rich_idle", q22RichIdle,
       """SELECT c_nationkey, COUNT(*) AS n_cust,
         |  CAST(SUM(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS total_bal
         |FROM customer
@@ -3740,19 +3652,19 @@ object Relational {
         |                   FROM customer WHERE c_acctbal > 0.0)
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
         |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_nationkey""".stripMargin,
-    "q_heavy_hitters" ->
+        |GROUP BY c_nationkey""".stripMargin),
+    QueryDef("q_heavy_hitters", qHeavyHitters,
       """WITH c AS (SELECT o_custkey, COUNT(*) AS n FROM orders GROUP BY 1),
         |t AS (SELECT COUNT(*) AS total FROM orders),
         |r AS (SELECT o_custkey, n,
         |        row_number() OVER (ORDER BY n DESC, o_custkey) AS rk FROM c)
         |SELECT rk, o_custkey, n, CAST(n * 1000000 // total AS BIGINT) AS ppm
-        |FROM r, t WHERE rk <= 10""".stripMargin,
-    "q_unpivot" ->
+        |FROM r, t WHERE rk <= 10""".stripMargin),
+    QueryDef("q_unpivot", qUnpivot,
       """SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS month,
         |       o_orderstatus, COUNT(*) AS n
-        |FROM orders GROUP BY 1, 2""".stripMargin,
-    "q_snapshot_diff" ->
+        |FROM orders GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_snapshot_diff", qSnapshotDiff,
       """WITH a AS (SELECT o_custkey, COUNT(*) AS cnt,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS rev
         |  FROM orders WHERE o_orderdate < TIMESTAMP '1999-01-01' GROUP BY 1),
@@ -3765,21 +3677,21 @@ object Relational {
         |       ELSE 'unchanged' END AS status,
         |  coalesce(a.cnt, 0) AS cnt_old, b.cnt AS cnt_new,
         |  coalesce(a.rev, 0.0) AS rev_old, b.rev AS rev_new
-        |FROM b LEFT JOIN a ON a.o_custkey = b.o_custkey""".stripMargin,
-    "q_skyline" ->
+        |FROM b LEFT JOIN a ON a.o_custkey = b.o_custkey""".stripMargin),
+    QueryDef("q_skyline", qSkyline,
       """SELECT p_partkey, p_size, p_retailprice FROM part p
         |WHERE NOT EXISTS (SELECT 1 FROM part q
         |  WHERE q.p_size >= p.p_size AND q.p_retailprice <= p.p_retailprice
-        |    AND (q.p_size > p.p_size OR q.p_retailprice < p.p_retailprice))""".stripMargin,
-    "q_value_bands" ->
+        |    AND (q.p_size > p.p_size OR q.p_retailprice < p.p_retailprice))""".stripMargin),
+    QueryDef("q_value_bands", qValueBands,
       """SELECT band, COUNT(*) AS n,
         |       CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
         |FROM lineitem
         |JOIN (VALUES ('low', 1.0, 16.0), ('mid', 17.0, 33.0), ('high', 34.0, 50.0))
         |  AS v(band, lo, hi)
         |  ON l_quantity >= lo AND l_quantity <= hi
-        |GROUP BY band""".stripMargin,
-    "q9_product_profit" ->
+        |GROUP BY band""".stripMargin),
+    QueryDef("q9_product_profit", q9ProductProfit,
       """SELECT n_name AS nation,
         |       CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -3791,8 +3703,8 @@ object Relational {
         |JOIN orders ON l_orderkey = o_orderkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%widget'
-        |GROUP BY 1, 2""".stripMargin,
-    "q_corr_stats" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("q_corr_stats", qCorrStats,
       """WITH x AS (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS x
         |           FROM lineitem GROUP BY 1),
         |o AS (SELECT o_orderkey,
@@ -3812,8 +3724,8 @@ object Relational {
         |SELECT n AS n_orders,
         |  CAST(sign(num) AS BIGINT) AS corr_sign,
         |  CAST(((1000000 * abs(num) // denx) * abs(num)) // deny AS BIGINT) AS r2_micro
-        |FROM d""".stripMargin,
-    "q_benford" ->
+        |FROM d""".stripMargin),
+    QueryDef("q_benford", qBenford,
       """WITH d AS (SELECT CAST(substring(CAST(CAST(floor(o_totalprice) AS BIGINT)
         |             AS VARCHAR), 1, 1) AS BIGINT) AS digit
         |           FROM orders),
@@ -3829,8 +3741,8 @@ object Relational {
         |               WHEN 4 THEN 96 WHEN 5 THEN 79 WHEN 6 THEN 66
         |               WHEN 7 THEN 57 WHEN 8 THEN 51 ELSE 45
         |    END) AS dev_milli
-        |FROM h, t""".stripMargin,
-    "q8_mkt_share" ->
+        |FROM h, t""".stripMargin),
+    QueryDef("q8_mkt_share", q8MktShare,
       """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |       CAST(SUM(CAST(CASE WHEN n2.n_name = 'NATION_6'
         |                          THEN l_extendedprice * (1 - l_discount)
@@ -3846,8 +3758,8 @@ object Relational {
         |JOIN region ON n1.n_regionkey = r_regionkey
         |JOIN nation n2 ON s_nationkey = n2.n_nationkey
         |WHERE p_type = 'ECONOMY' AND r_name = 'AMERICA'
-        |GROUP BY 1""".stripMargin,
-    "q7_volume" ->
+        |GROUP BY 1""".stripMargin),
+    QueryDef("q7_volume", q7Volume,
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |       CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
@@ -3858,8 +3770,8 @@ object Relational {
         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |WHERE n1.n_name < n2.n_name
-        |GROUP BY 1, 2, 3""".stripMargin,
-    "q10_returns" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    QueryDef("q10_returns", q10Returns,
       """SELECT c_custkey, c_name,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -3867,30 +3779,30 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |WHERE l_returnflag = 'R'
         |GROUP BY c_custkey, c_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q6_forecast" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
+    QueryDef("q6_forecast", q6Forecast,
       """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(38,6))) AS DOUBLE) AS revenue,
         |       COUNT(*) AS n
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1996-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "q4_priority" ->
+        |  AND l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24""".stripMargin),
+    QueryDef("q4_priority", q4Priority,
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07-01'
         |  AND EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY o_orderpriority""".stripMargin,
-    "q_salted_orders" ->
+        |GROUP BY o_orderpriority""".stripMargin),
+    QueryDef("q_salted_orders", qSaltedOrders,
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_rollup" ->
+        |GROUP BY c_mktsegment""".stripMargin),
+    QueryDef("q_rollup", qRollup,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q1_pricing" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    QueryDef("q1_pricing", q1Pricing,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_base_price,
@@ -3901,8 +3813,8 @@ object Relational {
         |  CAST(SUM(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_disc,
         |  COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_top_revenue" ->
+        |GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    QueryDef("q3_top_revenue", q3TopRevenue,
       """SELECT l_orderkey,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -3910,8 +3822,8 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
         |GROUP BY l_orderkey
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_nation_revenue" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin),
+    QueryDef("q5_nation_revenue", q5NationRevenue,
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -3920,38 +3832,38 @@ object Relational {
         |JOIN customer ON o_custkey = c_custkey AND c_nationkey = s_nationkey
         |JOIN nation ON s_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY n_name""".stripMargin,
-    "q_brand_volume" ->
+        |GROUP BY n_name""".stripMargin),
+    QueryDef("q_brand_volume", qBrandVolume,
       """SELECT p_brand,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS n_lines
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand""".stripMargin,
-    "q_top_orders_per_customer" ->
+        |GROUP BY p_brand""".stripMargin),
+    QueryDef("q_top_orders_per_customer", qTopOrdersPerCustomer,
       """SELECT o_custkey, rank, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey
         |                       ORDER BY o_totalprice DESC, o_orderkey) AS rank
-        |  FROM orders) t WHERE rank <= 3""".stripMargin,
-    "q_customers_no_orders" ->
+        |  FROM orders) t WHERE rank <= 3""".stripMargin),
+    QueryDef("q_customers_no_orders", qCustomersNoOrders,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')""".stripMargin,
-    "q_active_suppliers" ->
+        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')""".stripMargin),
+    QueryDef("q_active_suppliers", qActiveSuppliers,
       """SELECT s_suppkey, s_name FROM supplier
         |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_suppkey = s_suppkey AND l_quantity > 49)""".stripMargin,
-    "q_status_stats" ->
+        |              WHERE l_suppkey = s_suppkey AND l_quantity > 49)""".stripMargin),
+    QueryDef("q_status_stats", qStatusStats,
       """SELECT o_orderstatus,
         |  COUNT(DISTINCT o_custkey) AS n_customers,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-    "q_running_revenue" ->
+        |FROM orders GROUP BY o_orderstatus""".stripMargin),
+    QueryDef("q_running_revenue", qRunningRevenue,
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6)))
         |    OVER (PARTITION BY l_suppkey
         |          ORDER BY l_shipdate, l_orderkey, l_linenumber
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_rev
-        |FROM lineitem WHERE l_suppkey <= 3""".stripMargin)
+        |FROM lineitem WHERE l_suppkey <= 3""".stripMargin))
 }

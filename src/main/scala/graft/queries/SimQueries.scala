@@ -5,6 +5,7 @@ import graft.functions.HashExprs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import OracleFragments.log2MillisSql
 import Tables._
 
 /** Similarity-search suite over `embeddings` (LLM-pipeline pillar #2):
@@ -53,7 +54,7 @@ object SimQueries {
       e.crossJoin(broadcast(anchors))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("q_label"), col("vec_id"), col("label"),
-          SimOps.cosine(col("embedding"), col("q_vec")).as("cos")))
+          HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos")))
     val negs = scored.filter(col("label") =!= col("q_label"))
       .withColumn("rk", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id"))))
@@ -169,7 +170,7 @@ object SimQueries {
     val maxNp = 4
     val probes = querySet(e).crossJoin(broadcast(cents))
       .select(col("q_id"), col("q_vec"), col("c_id"),
-        SimOps.cosine(col("q_vec"), col("c_vec")).as("qc"))
+        HashExprs.cosineSim(col("q_vec"), col("c_vec")).as("qc"))
       .withColumn("cent_rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("qc").desc, col("c_id"))))
       .filter(col("cent_rk") <= maxNp)
@@ -178,7 +179,7 @@ object SimQueries {
       assigned.join(broadcast(probes), "cent")
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"), col("cent_rk"),
-          SimOps.cosine(col("embedding"), col("q_vec")).as("cos")))
+          HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos")))
     def cfg(np: Int): DataFrame = {
       val ann = scored.filter(col("cent_rk") <= np)
         .withColumn("rk", row_number().over(
@@ -244,10 +245,10 @@ object SimQueries {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
     val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
     val naive = corpus.as("a").join(corpus.as("b"),
-        SimOps.cosine(col("a.embedding"), col("b.embedding")) >= 0.999 &&
+        HashExprs.cosineSim(col("a.embedding"), col("b.embedding")) >= 0.999 &&
           col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        SimOps.cosine(col("a.embedding"), col("b.embedding")).as("cos"))
+        HashExprs.cosineSim(col("a.embedding"), col("b.embedding")).as("cos"))
     org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
       graft.plans.LshJoinRewrite.rewrite(naive.queryExecution.analyzed, bits = 16))
   }
@@ -302,7 +303,7 @@ object SimQueries {
     // semantics to a (cos DESC, c_label ASC) rank-1 window
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("label"),
-        col("c_label"), SimOps.cosine(col("embedding"), col("c_vec")).as("cos"))
+        col("c_label"), HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
       .groupBy(col("vec_id"), col("label"))
       .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
       .groupBy(col("label"), col("c_label"))
@@ -423,7 +424,7 @@ object SimQueries {
     val truth = e.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("c"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("c"))
       .groupBy(col("q_id"))
       .agg(max_by(struct(col("vec_id"), col("c")),
         struct(col("c"), (-col("vec_id")).as("nv"))).as("t"))
@@ -455,7 +456,7 @@ object SimQueries {
     val truth = e.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("c"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("c"))
       .groupBy(col("q_id"))
       .agg(max_by(struct(col("vec_id"), col("c")),
         struct(col("c"), (-col("vec_id")).as("nv"))).as("t"))
@@ -519,7 +520,7 @@ object SimQueries {
     corpus.crossJoin(broadcast(expanded))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("x_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("x_vec")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id")))
         .cast("bigint"))
@@ -605,7 +606,7 @@ object SimQueries {
       .select(col("lang").as("c_lang"), col("c_vec"))
     joined.join(broadcast(centsByLang), col("lang") === col("c_lang"))
       .select(col("doc_id"), col("lang"),
-        SimOps.cosine(col("embedding"), col("c_vec")).as("cos_centroid"))
+        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos_centroid"))
       .withColumn("outlier", (col("cos_centroid") < 0.1).cast("boolean"))
   }
 
@@ -629,7 +630,7 @@ object SimQueries {
     val lists = graft.core.QueryCaches.track(
       e.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("c_label"),
-          SimOps.cosine(col("embedding"), col("c_vec")).as("cos"))
+          HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
         .groupBy(col("vec_id"))
         .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
         .groupBy(col("c_label"))
@@ -671,7 +672,7 @@ object SimQueries {
       .select(col("lab").as("c_lab"), col("c_vec"))
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("lab"), col("c_lab"),
-        SimOps.cosine(col("embedding"), col("c_vec")).as("cc"))
+        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cc"))
       .groupBy(col("vec_id"), col("lab"))
       .agg(max(when(col("lab") === col("c_lab"), col("cc"))).as("a"),
         max(when(col("lab") =!= col("c_lab"), col("cc"))).as("b"))
@@ -703,7 +704,7 @@ object SimQueries {
     // deterministic here — every row in the group carries the same array
     val assigned = e.crossJoin(broadcast(seeds))
       .select(col("vec_id"), col("embedding"), col("s_id"),
-        SimOps.cosine(col("embedding"), col("s_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("s_vec")).as("cos"))
       .groupBy(col("vec_id"))
       .agg(max_by(col("s_id"), struct(col("cos"), (-col("s_id")).as("ns"))).as("c_id"),
         first(col("embedding")).as("embedding"))
@@ -741,17 +742,17 @@ object SimQueries {
     val assigned = graft.core.QueryCaches.track(
       corpus.crossJoin(broadcast(seeds))
         .select(col("vec_id"), col("embedding"), col("s_id"),
-          SimOps.cosine(col("embedding"), col("s_vec")).as("cos"))
+          HashExprs.cosineSim(col("embedding"), col("s_vec")).as("cos"))
         .groupBy(col("vec_id"))
         .agg(max_by(struct(col("embedding"), col("s_id")),
           struct(col("cos"), (-col("s_id")).as("ns"))).as("best"))
         .select(col("vec_id"), col("best.embedding").as("embedding"),
           col("best.s_id").as("c_id"))
-        .withColumn("bucket", SimOps.srpBucket(col("embedding"), 8)))
+        .withColumn("bucket", HashExprs.srpBucket(col("embedding"), 8)))
     val pairs = assigned.as("a").join(assigned.as("x"),
         col("a.c_id") === col("x.c_id") && col("a.bucket") === col("x.bucket") &&
           col("a.vec_id") < col("x.vec_id"))
-      .filter(SimOps.cosine(col("a.embedding"), col("x.embedding")) >= 0.999)
+      .filter(HashExprs.cosineSim(col("a.embedding"), col("x.embedding")) >= 0.999)
       .select(col("a.c_id").as("c_id"), col("x.vec_id").as("vec_b"))
     pairs.groupBy(col("c_id"))
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("vec_b")).as("n_dropped"))
@@ -904,7 +905,7 @@ object SimQueries {
       .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
     val best = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("c_label"),
-        SimOps.cosine(col("embedding"), col("c_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
       .groupBy(col("vec_id"))
       .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
     val resid = graft.core.QueryCaches.track(
@@ -956,7 +957,7 @@ object SimQueries {
       "c_label", buckets = 2)
     val best = e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("c_label"),
-        SimOps.cosine(col("embedding"), col("c_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
       .groupBy(col("vec_id"))
       .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
     val resid = graft.core.QueryCaches.track(
@@ -984,7 +985,7 @@ object SimQueries {
       vecCol: String, outId: String, outVec: String): DataFrame = {
     val bestC = vecs.crossJoin(broadcast(centsT))
       .select(col(idCol), col("c_label"),
-        SimOps.cosine(col(vecCol), col("c_vec")).as("cos"))
+        HashExprs.cosineSim(col(vecCol), col("c_vec")).as("cos"))
       .groupBy(col(idCol))
       .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
     vecs.join(bestC, idCol)
@@ -1513,7 +1514,7 @@ object SimQueries {
     * parameters — a heavy tail here is the signal to cap or re-bit. */
   def simBucketHist(spark: SparkSession, sfDir: String): DataFrame =
     emb(spark, sfDir)
-      .select(SimOps.srpBucket(col("embedding"), 8).as("bucket"))
+      .select(HashExprs.srpBucket(col("embedding"), 8).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz")).agg(count(lit(1)).as("n_buckets"))
 
@@ -1630,7 +1631,7 @@ object SimQueries {
     val e = emb(spark, sfDir)
     val scored = e.join(broadcast(querySet(e)), col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("cos"),
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"),
         graft.functions.HashExprs.dotProduct(col("embedding"), col("q_vec")).as("dp"))
     val wc = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     val wd = Window.partitionBy(col("q_id")).orderBy(col("dp").desc, col("vec_id"))
@@ -1676,7 +1677,7 @@ object SimQueries {
     def assign(v: DataFrame, idCol: String, vecCol: String): DataFrame =
       v.crossJoin(broadcast(seeds))
         .select(col(idCol), col(vecCol), col("s_id"),
-          SimOps.cosine(col(vecCol), col("s_vec")).as("cos"))
+          HashExprs.cosineSim(col(vecCol), col("s_vec")).as("cos"))
         .groupBy(col(idCol))
         .agg(max_by(col("s_id"), struct(col("cos"), (-col("s_id")).as("ns"))).as("c_id"),
           first(col(vecCol)).as(vecCol))
@@ -1688,7 +1689,7 @@ object SimQueries {
     val ca = assign(e, "vec_id", "embedding")
     val ba = assign(batch, "batch_id", "b_vec")
     ba.join(ca, "c_id")
-      .withColumn("cos", SimOps.cosine(col("b_vec"), col("embedding")))
+      .withColumn("cos", HashExprs.cosineSim(col("b_vec"), col("embedding")))
       .groupBy(col("batch_id"), col("c_id"))
       .agg(count(lit(1)).as("n_cand"),
         min(when(col("cos") >= 0.99, col("vec_id"))).as("dup_of"))
@@ -1722,7 +1723,7 @@ object SimQueries {
     val cand = e.select(col("vec_id"), slice(col("embedding"), 1, 16).as("e16"))
       .crossJoin(broadcast(q16))
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("e16"), col("q16")).as("cos16"))
+        HashExprs.cosineSim(col("e16"), col("q16")).as("cos16"))
       .withColumn("rk1", row_number().over(w1)).filter(col("rk1") <= 20)
       .select(col("q_id"), col("vec_id"))
     val w2 = Window.partitionBy(col("q_id")).orderBy(col("cos_full").desc, col("vec_id"))
@@ -1730,13 +1731,13 @@ object SimQueries {
       .join(e, "vec_id")
       .join(broadcast(q), "q_id")
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("cos_full"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos_full"))
       .withColumn("rank", row_number().over(w2).cast("bigint"))
       .filter(col("rank") <= 5)
     val wb = Window.partitionBy(col("bq")).orderBy(col("cf").desc, col("bv"))
     val brute = e.crossJoin(broadcast(q))
       .select(col("q_id").as("bq"), col("vec_id").as("bv"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("cf"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cf"))
       .withColumn("rkb", row_number().over(wb)).filter(col("rkb") <= 5)
       .select(col("bq"), col("bv"))
     top5.join(brute, col("q_id") === col("bq") && col("vec_id") === col("bv"), "left")
@@ -2008,7 +2009,7 @@ object SimQueries {
       .join(corpus, "vec_id")
       .join(broadcast(qs), "q_id")
       .select(col("q_id"), col("vec_id"),
-        SimOps.cosine(col("embedding"), col("q_vec")).as("cos"))
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("cos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))))
       .filter(col("rk") <= 5)
@@ -2081,67 +2082,6 @@ object SimQueries {
       .select(col("d").as("feature"), (col("b") * 250 - 2000).as("t_milli"),
         col("n_left"), col("n_right"), col("score_num"), col("score_den"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_split_gain" -> (simSplitGain _),
-    "sim_hits" -> (simHits _),
-    "sim_adamic_adar" -> (simAdamicAdar _),
-    "sim_assortativity" -> (simAssortativity _),
-    "sim_pq_refine" -> (simPqRefine _),
-    "sim_embedding_drift" -> (simEmbeddingDrift _),
-    "sim_threshold_sweep" -> (simThresholdSweep _),
-    "sim_mips_reduction" -> (simMipsReduction _),
-    "sim_matryoshka" -> (simMatryoshka _),
-    "sim_incremental_ivf" -> (simIncrementalIvf _),
-    "sim_rank_fusion" -> (simRankFusion _),
-    "sim_kcore" -> (simKcore _),
-    "sim_gram" -> (simGram _),
-    "sim_pca_power" -> (simPcaPower _),
-    "sim_pq" -> (simPq _),
-    "sim_pq_topk" -> (simPqTopk _),
-    "sim_rrf" -> (simRrf _),
-    "sim_triangles" -> (simTriangles _),
-    "sim_link_predict" -> (simLinkPredict _),
-    "sim_mmr" -> (simMmr _),
-    "sim_mmr_ann" -> (simMmrAnn _),
-    "sim_ann_sweep" -> (simAnnSweep _),
-    "sim_ivf_sweep" -> (simIvfSweep _),
-    "sim_label_prop" -> (simLabelProp _),
-    "sim_modularity" -> (simModularity _),
-    "sim_pagerank" -> (simPagerank _),
-    "sim_ppr" -> (simPpr _),
-    "sim_bucket_hist" -> (simBucketHist _),
-    "sim_components" -> (simComponents _),
-    "sim_semantic_dedup" -> (simSemanticDedup _),
-    "sim_bfs_hops" -> (simBfsHops _),
-    "sim_kcenter" -> (simKcenter _),
-    "sim_clustering_coeff" -> (simClusteringCoeff _),
-    "sim_graph_search" -> (simGraphSearch _),
-    "sim_beam_search" -> (simBeamSearch _),
-    "sim_kmeans" -> (simKmeans _),
-    "sim_silhouette" -> (simSilhouette _),
-    "curate_outliers" -> (curateOutliers _),
-    "sim_lsh_probe" -> (simLshProbe _),
-    "sim_ndcg" -> (simNdcg _),
-    "sim_rocchio" -> (simRocchio _),
-    "sim_ivf_balance" -> (simIvfBalance _),
-    "sim_knn_graph" -> (simKnnGraph _),
-    "sim_hubness" -> (simHubness _),
-    "sim_topk" -> (simTopk _),
-    "sim_hard_negatives" -> (simHardNegatives _),
-    "sim_knn_classify" -> (simKnnClassify _),
-    "sim_recall_report" -> (simRecallReport _),
-    "sim_lsh" -> (simLsh _),
-    "sim_pairs" -> (simPairs _),
-    "sim_pairs_capped" -> (simPairsCapped _),
-    "sim_pairs_rewrite" -> (simPairsRewrite _),
-    "sim_quantize" -> (simQuantize _),
-    "sim_ivf" -> (simIvf _),
-    "sim_ivf_pq" -> (simIvfPq _),
-    "sim_index_persist" -> (simIndexPersist _),
-    "sim_index_delta" -> (simIndexDelta _),
-    "sim_index_compact" -> (simIndexCompact _),
-    "sim_index_delete" -> (simIndexDelete _))
 
   // ---- DuckDB oracle spellings -------------------------------------
   // The cosine/SRP folds are spelled with list_reduce(list_prepend(...))
@@ -2238,8 +2178,8 @@ object SimQueries {
        |      FROM knn f JOIN knn r ON f.vec_id = r.nbr_id AND f.nbr_id = r.vec_id
        |      WHERE f.vec_id < f.nbr_id)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "sim_split_gain" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("sim_split_gain", simSplitGain,
       """WITH h AS MATERIALIZED (SELECT CAST(dd.d AS BIGINT) AS d,
         |    (CAST(floor(CAST(embedding[dd.d] AS DOUBLE) * 1000.0) AS BIGINT)
         |      + 2000) // 250 AS bin,
@@ -2272,8 +2212,8 @@ object SimQueries {
         |  FROM per)
         |SELECT d AS feature, b * 250 - 2000 AS t_milli, n_left, n_right,
         |  score_num, score_den
-        |FROM scored WHERE rk = 1""".stripMargin,
-    "sim_hits" ->
+        |FROM scored WHERE rk = 1""".stripMargin),
+    QueryDef("sim_hits", simHits,
       s"""WITH b AS MATERIALIZED (SELECT vec_id, embedding,
          |       ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS MATERIALIZED (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
@@ -2293,8 +2233,8 @@ object SimQueries {
          |      FROM a2 LEFT JOIN h1 ON a2.v = h1.u)
          |SELECT CAST(row_number() OVER (ORDER BY a2 DESC, vec_id) AS BIGINT)
          |    AS rk, vec_id, a2 AS authority2, hub1
-         |FROM j QUALIFY rk <= 20""".stripMargin,
-    "sim_embedding_drift" ->
+         |FROM j QUALIFY rk <= 20""".stripMargin),
+    QueryDef("sim_embedding_drift", simEmbeddingDrift,
       s"""WITH n AS (SELECT vec_id, ${dotSql("embedding", "embedding")} AS nn
          |           FROM embeddings),
          |s AS (SELECT vec_id,
@@ -2324,8 +2264,8 @@ object SimQueries {
          |SELECT band, cnt_a, cnt_b, cnt_p, n_a, n_b, n_p, tvd_b, tvd_p,
          |  10 * tvd_b > n_a * n_b AS drifted_clean,
          |  10 * tvd_p > n_a * n_p AS drifted_planted
-         |FROM wt, tvd""".stripMargin,
-    "sim_threshold_sweep" ->
+         |FROM wt, tvd""".stripMargin),
+    QueryDef("sim_threshold_sweep", simThresholdSweep,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
          |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
@@ -2340,8 +2280,8 @@ object SimQueries {
          |       WHERE c.cos >= CAST(t.thr AS DOUBLE) / 1000.0)
          |SELECT thr_milli, CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |       CAST(SUM(CASE WHEN planted THEN 1 ELSE 0 END) AS BIGINT) AS n_planted
-         |FROM sw GROUP BY 1""".stripMargin,
-    "sim_mips_reduction" ->
+         |FROM sw GROUP BY 1""".stripMargin),
+    QueryDef("sim_mips_reduction", simMipsReduction,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec
          |           FROM embeddings WHERE vec_id % 100 = 0),
          |n2 AS (SELECT vec_id, embedding,
@@ -2361,8 +2301,8 @@ object SimQueries {
          |SELECT q_id, vec_id, CAST(rank_dot AS BIGINT) AS rank_dot,
          |       CAST(rank_aug AS BIGINT) AS rank_aug,
          |       rank_dot = rank_aug AS agree
-         |FROM r WHERE rank_dot <= 10""".stripMargin,
-    "sim_matryoshka" ->
+         |FROM r WHERE rank_dot <= 10""".stripMargin),
+    QueryDef("sim_matryoshka", simMatryoshka,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec
          |           FROM embeddings WHERE vec_id % 100 = 0),
          |s1 AS (SELECT q_id, vec_id,
@@ -2389,8 +2329,8 @@ object SimQueries {
          |             FROM embeddings e, q)),
          |brute AS (SELECT bq, bv FROM sb WHERE rkb <= 5)
          |SELECT t.q_id, t.vec_id, t.rank, b.bv IS NOT NULL AS in_exact
-         |FROM top5 t LEFT JOIN brute b ON b.bq = t.q_id AND b.bv = t.vec_id""".stripMargin,
-    "sim_incremental_ivf" ->
+         |FROM top5 t LEFT JOIN brute b ON b.bq = t.q_id AND b.bv = t.vec_id""".stripMargin),
+    QueryDef("sim_incremental_ivf", simIncrementalIvf,
       s"""WITH seeds AS (SELECT vec_id AS s_id, embedding AS s_vec
          |               FROM embeddings WHERE vec_id < 8),
          |batch AS (
@@ -2421,8 +2361,8 @@ object SimQueries {
          |SELECT batch_id, c_id, COUNT(*) AS n_cand,
          |       MIN(CASE WHEN cos >= 0.99 THEN vec_id END) AS dup_of,
          |       MIN(CASE WHEN cos >= 0.99 THEN vec_id END) IS NOT NULL AS is_dup
-         |FROM cand GROUP BY batch_id, c_id""".stripMargin,
-    "sim_pca_power" ->
+         |FROM cand GROUP BY batch_id, c_id""".stripMargin),
+    QueryDef("sim_pca_power", simPcaPower,
       """WITH gram AS (SELECT CAST(ii AS BIGINT) AS i, CAST(jj AS BIGINT) AS j,
         |    CAST(SUM(CAST(CAST(embedding[ii + 1] AS DOUBLE) *
         |      CAST(embedding[jj + 1] AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) AS s
@@ -2436,8 +2376,8 @@ object SimQueries {
         |v2 AS (SELECT sym.i AS i,
         |    CAST(SUM(CAST(sym.s * v1.v1 AS DECIMAL(38,6))) AS DOUBLE) AS v2
         |  FROM sym JOIN v1 ON sym.j = v1.i GROUP BY 1)
-        |SELECT v1.i AS i, v1, v2 FROM v1 JOIN v2 ON v1.i = v2.i""".stripMargin,
-    "sim_gram" ->
+        |SELECT v1.i AS i, v1, v2 FROM v1 JOIN v2 ON v1.i = v2.i""".stripMargin),
+    QueryDef("sim_gram", simGram,
       """SELECT CAST(ii AS BIGINT) AS i, CAST(jj AS BIGINT) AS j,
         |  CAST(count(*) AS BIGINT) AS n_vecs,
         |  CAST(SUM(CAST(CAST(embedding[ii + 1] AS DOUBLE) *
@@ -2446,8 +2386,8 @@ object SimQueries {
         |  (SELECT unnest(range(0, 16)) AS ii),
         |  (SELECT unnest(range(0, 16)) AS jj)
         |WHERE jj >= ii
-        |GROUP BY 1, 2""".stripMargin,
-    "sim_pq" ->
+        |GROUP BY 1, 2""".stripMargin),
+    QueryDef("sim_pq", simPq,
       s"""WITH sub AS (SELECT vec_id, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS sv
          |            FROM embeddings, (SELECT unnest(range(0, 8)) AS s)),
          |cb AS (SELECT vec_id AS code, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS cw
@@ -2465,8 +2405,8 @@ object SimQueries {
          |SELECT vec_id,
          |  CAST(SUM(code << (2*s)) AS BIGINT) AS code_key,
          |  CAST(SUM(CAST(dist AS DECIMAL(38,6))) AS DOUBLE) AS recon_err
-         |FROM a WHERE rk = 1 GROUP BY vec_id""".stripMargin,
-    "sim_pq_refine" ->
+         |FROM a WHERE rk = 1 GROUP BY vec_id""".stripMargin),
+    QueryDef("sim_pq_refine", simPqRefine,
       s"""WITH sub AS (SELECT vec_id, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS sv
          |            FROM embeddings, (SELECT unnest(range(0, 8)) AS s)),
          |cb AS (SELECT vec_id AS code, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS cw
@@ -2531,8 +2471,8 @@ object SimQueries {
          |SELECT n_truth, found_adc, found_refined,
          |  (1000 * found_adc) // n_truth AS recall_adc_milli,
          |  (1000 * found_refined) // n_truth AS recall_refined_milli
-         |FROM f""".stripMargin,
-    "sim_pq_topk" ->
+         |FROM f""".stripMargin),
+    QueryDef("sim_pq_topk", simPqTopk,
       s"""WITH sub AS (SELECT vec_id, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS sv
          |            FROM embeddings, (SELECT unnest(range(0, 8)) AS s)),
          |cb AS (SELECT vec_id AS code, s, list_slice(embedding, s*8 + 1, s*8 + 8) AS cw
@@ -2564,8 +2504,8 @@ object SimQueries {
          |SELECT q_id, vec_id, adist FROM (
          |  SELECT q_id, vec_id, adist,
          |    row_number() OVER (PARTITION BY q_id ORDER BY adist, vec_id) AS rk
-         |  FROM ad) WHERE rk <= 5""".stripMargin,
-    "sim_rrf" ->
+         |  FROM ad) WHERE rk <= 5""".stripMargin),
+    QueryDef("sim_rrf", simRrf,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id % 100 = 0),
          |scored AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |           FROM embeddings, q WHERE vec_id <> q_id),
@@ -2612,34 +2552,30 @@ object SimQueries {
          |        COALESCE(rk_d, 0) AS rk_dense, COALESCE(rk_a, 0) AS rk_adc
          |      FROM dn FULL JOIN an ON dn.q_id = an.q_id AND dn.vec_id = an.vec_id)
          |SELECT q_id, vec_id, rrf_micro, rk_dense, rk_adc FROM f
-         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY rrf_micro DESC, vec_id) <= 5""".stripMargin,
+         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY rrf_micro DESC, vec_id) <= 5""".stripMargin),
     // brute-candidate MMR: ground-truth contract
-    "sim_mmr" -> mmrOracleSql(
+    QueryDef("sim_mmr", simMmr, mmrOracleSql(
       s"""q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id % 100 = 0),
          |cand AS (SELECT q_id, vec_id, cos FROM (
          |    SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |    FROM embeddings, q WHERE vec_id <> q_id)
-         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 8)""".stripMargin),
+         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 8)""".stripMargin)),
     // LSH-candidate MMR: same re-rank chain over the sim_lsh bucket
     // candidates — the operating path proved against its own hash
-    "sim_mmr_ann" -> mmrOracleSql(
+    QueryDef("sim_mmr_ann", simMmrAnn, mmrOracleSql(
       s"""bc AS (SELECT vec_id, embedding, ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |bq AS (SELECT vec_id AS q_id, embedding AS q_vec, ${srpSql("embedding", 4)} AS bucket
          |       FROM embeddings WHERE vec_id % 100 = 0),
          |cand AS (SELECT q_id, vec_id, cos FROM (
          |    SELECT q_id, bc.vec_id, ${cosSql("bc.embedding", "q_vec")} AS cos
          |    FROM bc JOIN bq USING (bucket) WHERE bc.vec_id <> q_id)
-         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 8)""".stripMargin),
-    "sim_adamic_adar" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+         |  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 8)""".stripMargin)),
+    QueryDef("sim_adamic_adar", simAdamicAdar,
       s"""WITH $mutualSql,
          |adj AS (SELECT u, v FROM m UNION ALL SELECT v, u FROM m),
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM adj GROUP BY 1),
          |wedge AS (SELECT x.u AS u, x.v AS z,
-         |            1000000000 // ${mbSql("deg.deg")} AS aa_micro
+         |            1000000000 // ${log2MillisSql("deg.deg")} AS aa_micro
          |          FROM adj x JOIN deg ON x.v = deg.u),
          |cand AS (SELECT w.u AS u, y.v AS v, CAST(COUNT(*) AS BIGINT) AS common,
          |           CAST(SUM(aa_micro) AS BIGINT) AS aa_micro
@@ -2651,9 +2587,8 @@ object SimQueries {
          |SELECT rk, u, v, common, aa_micro FROM (
          |  SELECT CAST(row_number() OVER (ORDER BY aa_micro DESC, u, v)
          |    AS BIGINT) AS rk, *
-         |  FROM nonedge) WHERE rk <= 20""".stripMargin
-    },
-    "sim_assortativity" ->
+         |  FROM nonedge) WHERE rk <= 20""".stripMargin),
+    QueryDef("sim_assortativity", simAssortativity,
       s"""WITH $mutualSql,
          |adj AS (SELECT u, v FROM m UNION ALL SELECT v, u FROM m),
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM adj GROUP BY 1),
@@ -2672,8 +2607,8 @@ object SimQueries {
          |  CASE WHEN denx = 0 OR deny = 0 THEN NULL ELSE
          |    CAST(sign(num) AS BIGINT) *
          |      ((((1000 * abs(num)) // denx) * abs(num)) // deny) END AS r2s_milli
-         |FROM d""".stripMargin,
-    "sim_link_predict" ->
+         |FROM d""".stripMargin),
+    QueryDef("sim_link_predict", simLinkPredict,
       s"""WITH $mutualSql,
          |adj AS (SELECT u, v FROM m UNION ALL SELECT v, u FROM m),
          |deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS deg FROM adj GROUP BY 1),
@@ -2689,8 +2624,8 @@ object SimQueries {
          |       JOIN deg du ON du.u = n.u JOIN deg dv ON dv.u = n.v)
          |SELECT rk, u, v, common, deg_u, deg_v, jaccard_milli FROM (
          |  SELECT CAST(row_number() OVER (ORDER BY common DESC, u, v) AS BIGINT) AS rk, *
-         |  FROM lp) WHERE rk <= 20""".stripMargin,
-    "sim_triangles" ->
+         |  FROM lp) WHERE rk <= 20""".stripMargin),
+    QueryDef("sim_triangles", simTriangles,
       s"""WITH $mutualSql,
          |tri AS (SELECT ab.u AS a, ab.v AS b, bc.v AS c
          |        FROM m ab JOIN m bc ON ab.v = bc.u
@@ -2698,8 +2633,8 @@ object SimQueries {
          |corners AS (SELECT a AS vec_id FROM tri
          |            UNION ALL SELECT b FROM tri
          |            UNION ALL SELECT c FROM tri)
-         |SELECT vec_id, COUNT(*) AS n_tri FROM corners GROUP BY vec_id""".stripMargin,
-    "sim_clustering_coeff" ->
+         |SELECT vec_id, COUNT(*) AS n_tri FROM corners GROUP BY vec_id""".stripMargin),
+    QueryDef("sim_clustering_coeff", simClusteringCoeff,
       s"""WITH $mutualSql,
          |tri AS (SELECT ab.u AS a, ab.v AS b, bc.v AS c
          |        FROM m ab JOIN m bc ON ab.v = bc.u
@@ -2717,8 +2652,8 @@ object SimQueries {
          |  deg * (deg - 1) AS cc_den,
          |  CAST(COALESCE(n_tri, 0) * 2 AS DOUBLE) / CAST(deg * (deg - 1) AS DOUBLE) AS coeff
          |FROM deg d LEFT JOIN ntri USING (vec_id)
-         |WHERE deg >= 2""".stripMargin,
-    "sim_rank_fusion" ->
+         |WHERE deg >= 2""".stripMargin),
+    QueryDef("sim_rank_fusion", simRankFusion,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id % 100 = 0),
          |s AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos,
          |             ${dotSql("embedding", "q_vec")} AS dp
@@ -2732,8 +2667,8 @@ object SimQueries {
          |          + CAST(1 AS DOUBLE) / CAST(rank_dot + 60 AS DOUBLE) AS rrf
          |      FROM r)
          |SELECT q_id, vec_id, rank_cos, rank_dot, rrf FROM f
-         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, vec_id) <= 5""".stripMargin,
-    "sim_kcore" -> {
+         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, vec_id) <= 5""".stripMargin),
+    QueryDef("sim_kcore", simKcore, {
       val rounds = (1 to 5).map { i =>
         s"""k$i AS MATERIALIZED (SELECT src FROM (SELECT src, COUNT(*) AS deg
            |        FROM a${i - 1} GROUP BY src) WHERE deg >= 3),
@@ -2744,8 +2679,8 @@ object SimQueries {
          |a0 AS MATERIALIZED (SELECT u AS src, v AS dst FROM m UNION ALL SELECT v, u FROM m),
          |$rounds
          |SELECT src AS vec_id, COUNT(*) AS core_deg FROM a5 GROUP BY src""".stripMargin
-    },
-    "sim_pagerank" -> {
+    }),
+    QueryDef("sim_pagerank", simPagerank, {
       val rounds = (1 to 3).map { i =>
         s"""c$i AS MATERIALIZED (SELECT a.dst AS id, CAST(SUM(p.pr // d.deg) AS BIGINT) AS sc
            |        FROM adj a JOIN dg d ON a.src = d.src
@@ -2763,8 +2698,8 @@ object SimQueries {
          |       FROM embeddings, nn),
          |$rounds
          |SELECT id AS vec_id, pr FROM p3""".stripMargin
-    },
-    "sim_ppr" -> {
+    }),
+    QueryDef("sim_ppr", simPpr, {
       val rounds = (1 to 3).map { i =>
         s"""c$i AS MATERIALIZED (SELECT a.dst AS id, CAST(SUM(p.pr // d.deg) AS BIGINT) AS sc
            |        FROM adj a JOIN dg d ON a.src = d.src
@@ -2784,8 +2719,8 @@ object SimQueries {
          |       FROM embeddings, sd),
          |$rounds
          |SELECT id AS vec_id, pr FROM p3""".stripMargin
-    },
-    "sim_label_prop" ->
+    }),
+    QueryDef("sim_label_prop", simLabelProp,
       s"""WITH $mutualSql,
          |adj AS (SELECT u AS src, v AS dst FROM m
          |        UNION ALL SELECT v, u FROM m
@@ -2795,9 +2730,9 @@ object SimQueries {
          |       FROM adj a JOIN l1 l ON a.dst = l.id GROUP BY a.src),
          |l3 AS (SELECT a.src AS id, MIN(l.label) AS label
          |       FROM adj a JOIN l2 l ON a.dst = l.id GROUP BY a.src)
-         |SELECT id AS vec_id, label FROM l3""".stripMargin,
+         |SELECT id AS vec_id, label FROM l3""".stripMargin),
     // same label chain; Q contributions in int64 (q_num = 4·m·e_c − d_c²)
-    "sim_modularity" ->
+    QueryDef("sim_modularity", simModularity,
       s"""WITH $mutualSql,
          |adj AS (SELECT u AS src, v AS dst FROM m
          |        UNION ALL SELECT v, u FROM m
@@ -2820,12 +2755,12 @@ object SimQueries {
          |SELECT ds.label, n_nodes, d_sum,
          |       CAST(COALESCE(e_in, 0) AS BIGINT) AS e_in, m_edges,
          |       4 * m_edges * CAST(COALESCE(e_in, 0) AS BIGINT) - d_sum * d_sum AS q_num
-         |FROM ds LEFT JOIN ein USING (label), mt""".stripMargin,
-    "sim_bucket_hist" ->
+         |FROM ds LEFT JOIN ein USING (label), mt""".stripMargin),
+    QueryDef("sim_bucket_hist", simBucketHist,
       s"""WITH b AS (SELECT ${srpSql("embedding", 8)} AS bucket FROM embeddings),
          |s AS (SELECT bucket, COUNT(*) AS sz FROM b GROUP BY bucket)
-         |SELECT sz, COUNT(*) AS n_buckets FROM s GROUP BY sz""".stripMargin,
-    "sim_components" ->
+         |SELECT sz, COUNT(*) AS n_buckets FROM s GROUP BY sz""".stripMargin),
+    QueryDef("sim_components", simComponents,
       s"""WITH RECURSIVE corpus AS (
          |  SELECT vec_id, embedding FROM embeddings
          |  UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings
@@ -2840,8 +2775,8 @@ object SimQueries {
          |          UNION
          |          SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a),
          |cl AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster_rep FROM reach GROUP BY a)
-         |SELECT id, cluster_rep FROM cl""".stripMargin,
-    "sim_semantic_dedup" ->
+         |SELECT id, cluster_rep FROM cl""".stripMargin),
+    QueryDef("sim_semantic_dedup", simSemanticDedup,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
          |seeds AS (SELECT vec_id AS s_id, embedding AS s_vec
@@ -2860,8 +2795,8 @@ object SimQueries {
          |        AND a.vec_id < x.vec_id
          |      WHERE ${cosSql("a.embedding", "x.embedding")} >= 0.999)
          |SELECT c_id, COUNT(*) AS n_pairs, COUNT(DISTINCT vec_b) AS n_dropped
-         |FROM p GROUP BY c_id""".stripMargin,
-    "sim_kmeans" ->
+         |FROM p GROUP BY c_id""".stripMargin),
+    QueryDef("sim_kmeans", simKmeans,
       s"""WITH seeds AS (SELECT vec_id AS s_id, embedding AS s_vec
          |               FROM embeddings WHERE vec_id < 8),
          |scored AS (SELECT vec_id, embedding, s_id,
@@ -2880,8 +2815,8 @@ object SimQueries {
          |SELECT c_id, MAX(n) AS n,
          |       list_reduce(list_prepend(CAST(0 AS DOUBLE), list(cv ORDER BY pos)),
          |         (a, b) -> a + b) AS c_sum
-         |FROM cd GROUP BY c_id""".stripMargin,
-    "sim_silhouette" ->
+         |FROM cd GROUP BY c_id""".stripMargin),
+    QueryDef("sim_silhouette", simSilhouette,
       s"""WITH comp AS (SELECT CAST(label AS BIGINT) AS lab,
          |                generate_subscripts(embedding, 1) - 1 AS pos,
          |                unnest(embedding) AS v FROM embeddings),
@@ -2903,8 +2838,8 @@ object SimQueries {
          |  CAST(SUM(CASE WHEN a < b THEN 1 ELSE 0 END) AS BIGINT) AS n_misplaced,
          |  (1000 * CAST(SUM(CASE WHEN a < b THEN 1 ELSE 0 END) AS BIGINT))
          |    // COUNT(*) AS misplaced_milli
-         |FROM m GROUP BY 1""".stripMargin,
-    "curate_outliers" ->
+         |FROM m GROUP BY 1""".stripMargin),
+    QueryDef("curate_outliers", curateOutliers,
       s"""WITH j AS (SELECT doc_id, lang, embedding
          |           FROM documents JOIN embeddings ON doc_id = vec_id),
          |comp AS (SELECT lang, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -2915,8 +2850,8 @@ object SimQueries {
          |cents AS (SELECT lang, list(cv ORDER BY pos) AS c_vec FROM cd GROUP BY lang)
          |SELECT doc_id, lang, ${cosMixedSql("embedding", "c_vec")} AS cos_centroid,
          |       ${cosMixedSql("embedding", "c_vec")} < 0.1 AS outlier
-         |FROM j JOIN cents USING (lang)""".stripMargin,
-    "sim_rocchio" ->
+         |FROM j JOIN cents USING (lang)""".stripMargin),
+    QueryDef("sim_rocchio", simRocchio,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec
          |           FROM embeddings WHERE vec_id % 100 = 0),
          |bs AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
@@ -2947,8 +2882,8 @@ object SimQueries {
          |SELECT rr.q_id, rk, rr.vec_id, cos,
          |  COALESCE(o.orig, FALSE) AS in_orig
          |FROM rr LEFT JOIN (SELECT q_id, vec_id, TRUE AS orig FROM bt WHERE rk <= 5) o
-         |  ON rr.q_id = o.q_id AND rr.vec_id = o.vec_id""".stripMargin,
-    "sim_ndcg" ->
+         |  ON rr.q_id = o.q_id AND rr.vec_id = o.vec_id""".stripMargin),
+    QueryDef("sim_ndcg", simNdcg,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec
          |           FROM embeddings WHERE vec_id % 100 = 0),
          |bs AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
@@ -2978,8 +2913,8 @@ object SimQueries {
          |SELECT q_id, CAST(COUNT(*) AS BIGINT) AS n_returned,
          |  CAST(SUM(rel * disc) AS BIGINT) AS dcg_milli,
          |  (1000 * CAST(SUM(rel * disc) AS BIGINT)) // 29944 AS ndcg_milli
-         |FROM g GROUP BY 1""".stripMargin,
-    "sim_lsh_probe" ->
+         |FROM g GROUP BY 1""".stripMargin),
+    QueryDef("sim_lsh_probe", simLshProbe,
       s"""WITH bc AS (SELECT vec_id, embedding, ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |bq AS (SELECT vec_id AS q_id, embedding AS q_vec, ${srpSql("embedding", 4)} AS b0
          |       FROM embeddings WHERE vec_id % 100 = 0),
@@ -2990,8 +2925,8 @@ object SimQueries {
          |scored AS (SELECT DISTINCT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |           FROM bc JOIN probes USING (bucket) WHERE vec_id <> q_id)
          |SELECT q_id, vec_id, cos FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin,
-    "sim_knn_graph" ->
+         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin),
+    QueryDef("sim_knn_graph", simKnnGraph,
       s"""WITH b AS (SELECT vec_id, embedding, ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
          |                  ${cosSql("a.embedding", "b.embedding")} AS cos
@@ -2999,8 +2934,8 @@ object SimQueries {
          |SELECT vec_id, CAST(row_number() OVER (PARTITION BY vec_id
          |         ORDER BY cos DESC, nbr_id) AS BIGINT) AS rk, nbr_id, cos
          |FROM scored
-         |QUALIFY rk <= 5""".stripMargin,
-    "sim_hubness" ->
+         |QUALIFY rk <= 5""".stripMargin),
+    QueryDef("sim_hubness", simHubness,
       s"""WITH b AS (SELECT vec_id, embedding, ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
          |                  ${cosSql("a.embedding", "b.embedding")} AS cos
@@ -3011,12 +2946,12 @@ object SimQueries {
          |ind AS (SELECT e.vec_id, CAST(COUNT(k.nbr_id) AS BIGINT) AS indeg
          |  FROM embeddings e LEFT JOIN knn k ON k.nbr_id = e.vec_id GROUP BY 1)
          |SELECT indeg, CAST(COUNT(*) AS BIGINT) AS n_vecs
-         |FROM ind GROUP BY 1""".stripMargin,
+         |FROM ind GROUP BY 1""".stripMargin),
     // NOTE: every CTE below stays PLAIN — the recursive walk reads
     // edges (transitively knn/scored/b) through a LATERAL, and a
     // MATERIALIZED cte on that path silently empties the recursion
     // (the sim_kcenter quirk, which also bites transitively).
-    "sim_graph_search" ->
+    QueryDef("sim_graph_search", simGraphSearch,
       s"""WITH RECURSIVE b AS (SELECT vec_id, embedding,
          |       ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
@@ -3052,8 +2987,8 @@ object SimQueries {
          |        FROM embeddings e, q WHERE e.vec_id <> q.q_id) WHERE rk = 1)
          |SELECT fin.q_id, found_id, found_cos, n_steps, true_id, true_cos,
          |       found_id = true_id AS hit
-         |FROM fin JOIN tr USING (q_id)""".stripMargin,
-    "sim_beam_search" ->
+         |FROM fin JOIN tr USING (q_id)""".stripMargin),
+    QueryDef("sim_beam_search", simBeamSearch,
       s"""WITH RECURSIVE b AS (SELECT vec_id, embedding,
          |       ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
@@ -3102,8 +3037,8 @@ object SimQueries {
          |SELECT t.q_id, found_id, found_cos, true_id, true_cos,
          |       found_id = true_id AS hit,
          |       list_contains(f.beam, true_id) AS beam_hit
-         |FROM top1 t JOIN tr USING (q_id) JOIN fin f USING (q_id)""".stripMargin,
-    "sim_kcenter" ->
+         |FROM top1 t JOIN tr USING (q_id) JOIN fin f USING (q_id)""".stripMargin),
+    QueryDef("sim_kcenter", simKcenter,
       s"""WITH RECURSIVE cm AS (
          |  SELECT a.vec_id AS i, b.vec_id AS j,
          |         ${cosSql("a.embedding", "b.embedding")} AS c
@@ -3122,8 +3057,8 @@ object SimQueries {
          |    ORDER BY mx ASC, j ASC LIMIT 1) pick
          |  WHERE sel.r < 8)
          |SELECT CAST(r AS BIGINT) AS sel_rank, vid AS vec_id, mc AS maxcos
-         |FROM sel""".stripMargin,
-    "sim_bfs_hops" ->
+         |FROM sel""".stripMargin),
+    QueryDef("sim_bfs_hops", simBfsHops,
       s"""WITH RECURSIVE b AS MATERIALIZED (SELECT vec_id, embedding,
          |       ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
@@ -3138,8 +3073,8 @@ object SimQueries {
          |         UNION ALL
          |         SELECT e.dst, w.hop + 1 FROM walk w JOIN edges e ON e.src = w.id
          |         WHERE w.hop < 4)
-         |SELECT id AS vec_id, CAST(MIN(hop) AS BIGINT) AS hops FROM walk GROUP BY 1""".stripMargin,
-    "sim_knn_classify" ->
+         |SELECT id AS vec_id, CAST(MIN(hop) AS BIGINT) AS hops FROM walk GROUP BY 1""".stripMargin),
+    QueryDef("sim_knn_classify", simKnnClassify,
       s"""WITH b AS MATERIALIZED (SELECT vec_id, embedding,
          |       ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |scored AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
@@ -3159,8 +3094,8 @@ object SimQueries {
          |       CAST(CAST(SUM(CASE WHEN pred_label = label THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
          |         / CAST(COUNT(*) AS DOUBLE) AS accuracy
          |FROM pred JOIN embeddings USING (vec_id)
-         |GROUP BY label""".stripMargin,
-    "sim_hard_negatives" ->
+         |GROUP BY label""".stripMargin),
+    QueryDef("sim_hard_negatives", simHardNegatives,
       s"""WITH a AS (SELECT vec_id AS q_id, embedding AS q_vec, label AS q_label
          |           FROM embeddings WHERE vec_id % 100 = 0),
          |scored AS MATERIALIZED (
@@ -3177,14 +3112,14 @@ object SimQueries {
          |            ORDER BY cos ASC, vec_id) AS BIGINT) AS rk,
          |          vec_id, label, cos
          |        FROM scored WHERE label = q_label QUALIFY rk <= 1)
-         |SELECT * FROM negs UNION ALL SELECT * FROM pos""".stripMargin,
-    "sim_topk" ->
+         |SELECT * FROM negs UNION ALL SELECT * FROM pos""".stripMargin),
+    QueryDef("sim_topk", simTopk,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id % 100 = 0),
          |scored AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |           FROM embeddings, q WHERE vec_id <> q_id)
          |SELECT q_id, vec_id, cos FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin,
-    "sim_recall_report" ->
+         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin),
+    QueryDef("sim_recall_report", simRecallReport,
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id % 100 = 0),
          |bscored AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |            FROM embeddings, q WHERE vec_id <> q_id),
@@ -3201,8 +3136,8 @@ object SimQueries {
          |  CAST(SUM(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_found,
          |  CAST(SUM(CASE WHEN l.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS recall
          |FROM t LEFT JOIN l ON t.q_id = l.q_id AND t.vec_id = l.vec_id
-         |GROUP BY t.q_id""".stripMargin,
-    "sim_ann_sweep" -> {
+         |GROUP BY t.q_id""".stripMargin),
+    QueryDef("sim_ann_sweep", simAnnSweep, {
       def cfg(bits: Int): String =
         s"""bc_$bits AS (SELECT vec_id, embedding, ${srpSql("embedding", bits)} AS bucket
            |          FROM embeddings),
@@ -3232,8 +3167,8 @@ object SimQueries {
          |  (1000 * n_found) // n_truth AS recall_milli,
          |  n_corpus // CAST(2 ** bits AS BIGINT) AS exp_candidates_per_q
          |FROM allr, nc""".stripMargin
-    },
-    "sim_ivf_sweep" -> {
+    }),
+    QueryDef("sim_ivf_sweep", simIvfSweep, {
       def cfg(np: Int): String =
         s"""p_$np AS (SELECT q_id, q_vec, c_label AS cent FROM qp
            |       QUALIFY row_number() OVER (PARTITION BY q_id
@@ -3280,24 +3215,24 @@ object SimQueries {
          |  (1000 * n_found) // n_truth AS recall_milli,
          |  (1000 * nprobe) // n_cents AS scanned_permille
          |FROM allr, nc""".stripMargin
-    },
-    "sim_lsh" ->
+    }),
+    QueryDef("sim_lsh", simLsh,
       s"""WITH bc AS (SELECT vec_id, embedding, ${srpSql("embedding", 4)} AS bucket FROM embeddings),
          |bq AS (SELECT vec_id AS q_id, embedding AS q_vec, ${srpSql("embedding", 4)} AS bucket
          |       FROM embeddings WHERE vec_id % 100 = 0),
          |scored AS (SELECT q_id, vec_id, ${cosSql("embedding", "q_vec")} AS cos
          |           FROM bc JOIN bq USING (bucket) WHERE vec_id <> q_id)
          |SELECT q_id, vec_id, cos FROM scored
-         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin,
-    "sim_pairs" ->
+         |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin),
+    QueryDef("sim_pairs", simPairs,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
          |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
          |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          |                 ${cosSql("a.embedding", "b.embedding")} AS cos
          |          FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin,
-    "sim_pairs_capped" ->
+         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
+    QueryDef("sim_pairs_capped", simPairsCapped,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
          |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 8)} AS bucket FROM corpus),
@@ -3306,19 +3241,19 @@ object SimQueries {
          |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          |                 ${cosSql("a.embedding", "b.embedding")} AS cos
          |          FROM cb a JOIN cb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin,
+         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
     // The rewrite rule's contract: the Spark side declares ONLY the
     // cosine predicate; the oracle spells the srp-bucket conjunction the
     // rule adds (16-bit buckets).
-    "sim_pairs_rewrite" ->
+    QueryDef("sim_pairs_rewrite", simPairsRewrite,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
          |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
          |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          |                 ${cosSql("a.embedding", "b.embedding")} AS cos
          |          FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin,
-    "sim_quantize" ->
+         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
+    QueryDef("sim_quantize", simQuantize,
       s"""WITH m_t AS (SELECT vec_id, label, embedding,
          |  list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS m
          |  FROM embeddings),
@@ -3333,8 +3268,8 @@ object SimQueries {
          |    (acc, v) -> acc + v) AS q_l1,
          |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(q, v -> v * v)),
          |    (acc, v) -> acc + v) AS q_dot
-         |FROM q_t""".stripMargin,
-    "sim_ivf_balance" ->
+         |FROM q_t""".stripMargin),
+    QueryDef("sim_ivf_balance", simIvfBalance,
       s"""WITH comp AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
          |                     unnest(embedding) AS v FROM embeddings),
          |cd AS (SELECT label, pos, CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS cv
@@ -3351,8 +3286,8 @@ object SimQueries {
          |t AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM l)
          |SELECT c_label, n, (1000 * n) // total AS share_milli,
          |  10 * 1000 * n > 2000 * total AS oversized
-         |FROM l CROSS JOIN t""".stripMargin,
-    "sim_ivf" ->
+         |FROM l CROSS JOIN t""".stripMargin),
+    QueryDef("sim_ivf", simIvf,
       s"""WITH comp AS (SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
          |                     unnest(embedding) AS v FROM embeddings),
          |cd AS (SELECT label, pos, CAST(SUM(CAST(v AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS cv
@@ -3364,23 +3299,23 @@ object SimQueries {
          |best AS (SELECT vec_id, label, c_label,
          |                row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, c_label) AS rk
          |         FROM scored)
-         |SELECT label, c_label, COUNT(*) AS n FROM best WHERE rk = 1 GROUP BY label, c_label""".stripMargin,
-    "sim_ivf_pq" -> ivfPqOracleSql,
+         |SELECT label, c_label, COUNT(*) AS n FROM best WHERE rk = 1 GROUP BY label, c_label""".stripMargin),
+    QueryDef("sim_ivf_pq", simIvfPq, ivfPqOracleSql),
     // sim_index_persist: search runs from the persisted index tables on
     // the Spark side; the oracle is DELIBERATELY the identical
     // from-scratch spelling as sim_ivf_pq — the green hash is the
     // index-equals-scratch proof.
-    "sim_index_persist" -> ivfPqOracleSql,
+    QueryDef("sim_index_persist", simIndexPersist, ivfPqOracleSql),
     // sim_index_delta: Spark searches persisted index ∪ on-the-fly delta
     // codes; the oracle recomputes from scratch over corpus ∪ delta with
     // centroids/codebook from the ORIGINAL corpus only.
-    "sim_index_delta" -> ivfPqDeltaOracleSql,
+    QueryDef("sim_index_delta", simIndexDelta, ivfPqDeltaOracleSql),
     // sim_index_compact: Spark folds the delta into a generation-2
     // index table and searches ONLY the reopened merged table; the
     // oracle is the same corpus ∪ delta from-scratch spelling — the
     // green hash is the compaction-preserves-search proof.
-    "sim_index_compact" -> ivfPqDeltaOracleSql,
-    "sim_index_delete" -> ivfPqDeleteOracleSql)
+    QueryDef("sim_index_compact", simIndexCompact, ivfPqDeltaOracleSql),
+    QueryDef("sim_index_delete", simIndexDelete, ivfPqDeleteOracleSql))
 
   /** The from-scratch IVF-PQ search spelling, parameterized for the
     * DELETE act: `codesFilter` drops tombstoned rows from the code

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import OracleFragments._
 import Tables._
 
 /** Text-analysis suite over the `documents` table: quality stats,
@@ -1961,71 +1962,6 @@ object TextQueries {
         sum(col("ce") - col("cs")).as("n_seq_tokens"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_ppmi_sim" -> (textPpmiSim _),
-    "curate_pack_boundaries" -> (curatePackBoundaries _),
-    "curate_budget_fill" -> (curateBudgetFill _),
-    "text_nb_langid" -> (textNbLangid _),
-    "text_langid_margin" -> (textLangidMargin _),
-    "text_stopword_disco" -> (textStopwordDisco _),
-    "curate_source_overlap" -> (curateSourceOverlap _),
-    "curate_blocklist" -> (curateBlocklist _),
-    "text_ttr_curve" -> (textTtrCurve _),
-    "curate_dedup_mass" -> (curateDedupMass _),
-    "curate_temperature_mix" -> (curateTemperatureMix _),
-    "text_jsd" -> (textJsd _),
-    "text_kn_lm" -> (textKnLm _),
-    "text_perplexity" -> (textPerplexity _),
-    "curate_ppl_sweep" -> (curatePplSweep _),
-    "text_chunk" -> (textChunk _),
-    "curate_chunk_dedup" -> (curateChunkDedup _),
-    "text_heaps" -> (textHeaps _),
-    "text_zipf" -> (textZipf _),
-    "curate_fertility" -> (curateFertility _),
-    "text_rake" -> (textRake _),
-    "text_langid_confusion" -> (textLangidConfusion _),
-    "curate_data_card" -> (curateDataCard _),
-    "text_bpe_merge_step" -> (textBpeMergeStep _),
-    "text_bpe_train" -> (textBpeTrain _),
-    "text_bpe_apply" -> (textBpeApply _),
-    "text_bpe_heldout" -> (textBpeHeldout _),
-    "curate_gopher" -> (curateGopher _),
-    "curate_domain_cap" -> (curateDomainCap _),
-    "curate_mix" -> (curateMix _),
-    "curate_line_dedup" -> (curateLineDedup _),
-    "curate_split" -> (curateSplit _),
-    "curate_dsir" -> (curateDsir _),
-    "curate_e2e" -> (curateE2e _),
-    "curate_boilerplate" -> (curateBoilerplate _),
-    "curate_novelty" -> (curateNovelty _),
-    "curate_pack" -> (curatePack _),
-    "curate_sources" -> (curateSources _),
-    "text_tfidf" -> (textTfidf _),
-    "text_bm25" -> (textBm25 _),
-    "text_ngram_lm" -> (textNgramLm _),
-    "curate_curriculum" -> (curateCurriculum _),
-    "curate_decontaminate" -> (curateDecontaminate _),
-    "text_repetition" -> (textRepetition _),
-    "curate_pipeline" -> (curatePipeline _),
-    "curate_sample" -> (curateSample _),
-    "curate_pps_sample" -> (curatePpsSample _),
-    "curate_neyman_sample" -> (curateNeymanSample _),
-    "text_inverted_index" -> (textInvertedIndex _),
-    "text_collocations" -> (textCollocations _),
-    "text_redact" -> (textRedact _),
-    "text_stats" -> (textStats _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_lang_id" -> (textLangId _),
-    "text_token_freq" -> (textTokenFreq _),
-    "text_quality" -> (textQuality _),
-    "text_entropy" -> (textEntropy _),
-    "text_feature_hash" -> (textFeatureHash _),
-    "curate_source_drift" -> (curateSourceDrift _),
-    "text_bpe_tokens" -> (textBpeTokens _),
-    "text_readability" -> (textReadability _))
-
-  private val toksSql = "list_filter(string_split(text, ' '), t -> t <> '')"
-
   /** The text_bpe_train oracle: the training loop UNROLLED to `steps`
     * chained CTE rounds — pair count over round k−1's vocab, 1-row
     * argmax, rewrite, fertility fold. MATERIALIZED on each round's
@@ -2145,20 +2081,10 @@ object TextQueries {
       |    list_transform(string_split(text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
       |    (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
 
-  /** The parametric form of [[fpSql]] — fold any string expression. */
-  private def foldSql(v: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(string_split($v, ''), ch -> CAST(unicode(ch) AS BIGINT))), " +
-      s"(a, b) -> (a * 31 + b) % 1000000007)"
-
   /** Shared CTE chain ending at `grid(doc_id, lang, lang_c, score)` —
     * the DuckDB spelling of [[nbScoreGrid]], with the integer fast-log
     * spelled as length(bin(q))−1 + the piecewise-linear fraction. */
-  private def nbGridSql: String = {
-    def mbSql(q: String): String =
-      s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-        s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-        s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+  private def nbGridSql: String =
     s"""tok AS MATERIALIZED (SELECT doc_id, unnest($toksSql) AS tok
        |       FROM documents),
        |model AS MATERIALIZED (SELECT lang_c, tok, CAST(COUNT(*) AS BIGINT) AS c
@@ -2170,11 +2096,11 @@ object TextQueries {
        |pri AS (SELECT lang AS lang_c, CAST(COUNT(*) AS BIGINT) AS nd
        |        FROM documents GROUP BY 1),
        |langs AS (SELECT lt.lang_c,
-       |            ${mbSql("(lt.ctot + vocab.v)")} AS dmlog,
-       |            ${mbSql("pri.nd")} AS pmlog
+       |            ${log2MillisSql("(lt.ctot + vocab.v)")} AS dmlog,
+       |            ${log2MillisSql("pri.nd")} AS pmlog
        |          FROM lt CROSS JOIN vocab JOIN pri USING (lang_c)),
        |matched AS (SELECT t.doc_id, m.lang_c,
-       |              CAST(SUM(${mbSql("(m.c + 1)")}) AS BIGINT) AS s
+       |              CAST(SUM(${log2MillisSql("(m.c + 1)")}) AS BIGINT) AS s
        |            FROM tok t JOIN model m USING (tok) GROUP BY 1, 2),
        |docs AS (SELECT doc_id, lang, CAST(len($toksSql) AS BIGINT) AS n_tok
        |         FROM documents),
@@ -2183,10 +2109,9 @@ object TextQueries {
        |        FROM docs d CROSS JOIN langs l
        |        LEFT JOIN matched ms
        |          ON ms.doc_id = d.doc_id AND ms.lang_c = l.lang_c)""".stripMargin
-  }
 
-  val oracleSql: Map[String, String] = Map(
-    "curate_pack_boundaries" ->
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("curate_pack_boundaries", curatePackBoundaries,
       s"""WITH d AS (SELECT doc_id, $fpSql % 1000000 AS h,
          |    CAST(len($toksSql) AS BIGINT) AS n_tokens
          |  FROM documents),
@@ -2202,8 +2127,8 @@ object TextQueries {
          |    AS n_partial_docs,
          |  CAST(SUM(LEAST(e, (seq_id + 1) * 512) - GREATEST(s, seq_id * 512))
          |    AS BIGINT) AS n_seq_tokens
-         |FROM sp GROUP BY seq_id""".stripMargin,
-    "curate_budget_fill" ->
+         |FROM sp GROUP BY seq_id""".stripMargin),
+    QueryDef("curate_budget_fill", curateBudgetFill,
       s"""WITH d AS (SELECT doc_id, source,
          |    CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |    CAST(len(list_distinct($toksSql)) AS BIGINT) AS n_types
@@ -2217,12 +2142,8 @@ object TextQueries {
          |  FROM s)
          |SELECT source, CAST(COUNT(*) AS BIGINT) AS n_sel,
          |  CAST(SUM(n_tokens) AS BIGINT) AS tok_sel, MIN(score) AS cut_milli
-         |FROM c WHERE cum <= 50000 GROUP BY source""".stripMargin,
-    "text_ppmi_sim" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+         |FROM c WHERE cum <= 50000 GROUP BY source""".stripMargin),
+    QueryDef("text_ppmi_sim", textPpmiSim,
       s"""WITH tok AS MATERIALIZED (SELECT DISTINCT doc_id,
          |    unnest($toksSql) AS w FROM documents),
          |df AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS dfw FROM tok GROUP BY 1),
@@ -2238,7 +2159,7 @@ object TextQueries {
          |  GROUP BY 1, 2, 3, 4),
          |pp AS MATERIALIZED (SELECT w1, w2, pmi FROM (
          |  SELECT w1, w2,
-         |    ${mbSql("(cwc * n)")} - ${mbSql("(df1 * df2)")} AS pmi
+         |    ${log2MillisSql("(cwc * n)")} - ${log2MillisSql("(df1 * df2)")} AS pmi
          |  FROM co, nd) WHERE pmi > 0),
          |sim AS (SELECT x.w1 AS w, y.w1 AS other,
          |    CAST(SUM(x.pmi * y.pmi) AS BIGINT) AS dot
@@ -2247,9 +2168,8 @@ object TextQueries {
          |SELECT w, rk, other, dot FROM (
          |  SELECT w, other, dot, CAST(row_number() OVER (
          |    PARTITION BY w ORDER BY dot DESC, other) AS BIGINT) AS rk
-         |  FROM sim) WHERE rk <= 3""".stripMargin
-    },
-    "curate_source_overlap" ->
+         |  FROM sim) WHERE rk <= 3""".stripMargin),
+    QueryDef("curate_source_overlap", curateSourceOverlap,
       s"""WITH tk_t AS (SELECT source, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT source, CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
@@ -2267,8 +2187,8 @@ object TextQueries {
          |       WHERE a.source <> b.source GROUP BY 1, 2)
          |SELECT sh.src_a, sh.src_b, sh.n_shared, t.n_a,
          |  (1000 * sh.n_shared) // t.n_a AS containment_milli
-         |FROM sh JOIN tot t ON sh.src_a = t.src_a""".stripMargin,
-    "curate_blocklist" ->
+         |FROM sh JOIN tot t ON sh.src_a = t.src_a""".stripMargin),
+    QueryDef("curate_blocklist", curateBlocklist,
       s"""WITH h AS (SELECT source,
          |    CAST(len(list_filter($toksSql,
          |      t -> t IN ('data', 'casino', 'spam'))) AS BIGINT) AS hits
@@ -2278,8 +2198,8 @@ object TextQueries {
          |  CAST(SUM(hits) AS BIGINT) AS n_hits,
          |  (1000 * CAST(SUM(CASE WHEN hits > 0 THEN 1 ELSE 0 END) AS BIGINT))
          |    // CAST(COUNT(*) AS BIGINT) AS flag_rate_milli
-         |FROM h GROUP BY 1""".stripMargin,
-    "text_stopword_disco" ->
+         |FROM h GROUP BY 1""".stripMargin),
+    QueryDef("text_stopword_disco", textStopwordDisco,
       s"""WITH tok AS MATERIALIZED (SELECT doc_id, unnest($toksSql) AS tok
          |       FROM documents),
          |nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
@@ -2292,8 +2212,8 @@ object TextQueries {
          |  (1000 * c.cf) // tt.total AS coverage_milli
          |FROM dfq d JOIN cfq c USING (tok)
          |CROSS JOIN nd CROSS JOIN tt
-         |WHERE 2 * d.df > nd.n_docs""".stripMargin,
-    "text_nb_langid" ->
+         |WHERE 2 * d.df > nd.n_docs""".stripMargin),
+    QueryDef("text_nb_langid", textNbLangid,
       s"""WITH $nbGridSql,
          |best AS (SELECT doc_id, MAX(score) AS mx FROM grid GROUP BY 1),
          |pred AS (SELECT g.doc_id, g.lang, MIN(g.lang_c) AS pred_lang
@@ -2301,8 +2221,8 @@ object TextQueries {
          |           ON g.doc_id = b.doc_id AND g.score = b.mx
          |         GROUP BY 1, 2)
          |SELECT lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
-         |FROM pred GROUP BY 1, 2""".stripMargin,
-    "text_langid_margin" ->
+         |FROM pred GROUP BY 1, 2""".stripMargin),
+    QueryDef("text_langid_margin", textLangidMargin,
       s"""WITH $nbGridSql,
          |best AS (SELECT doc_id, MAX(score) AS mx FROM grid GROUP BY 1),
          |g2 AS MATERIALIZED (SELECT g.doc_id, g.lang, g.lang_c, g.score, b.mx
@@ -2317,8 +2237,8 @@ object TextQueries {
          |SELECT margin // 1000 AS margin_bits, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(SUM(CASE WHEN lang = pred_lang THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_correct
-         |FROM mrg GROUP BY 1""".stripMargin,
-    "text_ttr_curve" ->
+         |FROM mrg GROUP BY 1""".stripMargin),
+    QueryDef("text_ttr_curve", textTtrCurve,
       s"""WITH d AS (SELECT CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |    CAST(len(list_distinct($toksSql)) AS BIGINT) AS n_types
          |  FROM documents),
@@ -2330,8 +2250,8 @@ object TextQueries {
          |SELECT CAST(band AS BIGINT) AS band, n_docs, tok_total, type_total,
          |  CASE WHEN tok_total = 0 THEN 0
          |       ELSE (1000 * type_total) // tok_total END AS ttr_milli
-         |FROM g""".stripMargin,
-    "curate_dedup_mass" ->
+         |FROM g""".stripMargin),
+    QueryDef("curate_dedup_mass", curateDedupMass,
       s"""WITH c AS (SELECT doc_id, source, text FROM documents
          |  UNION ALL SELECT doc_id + 5000000, 'mirror', text
          |    FROM documents WHERE doc_id % 10 = 0),
@@ -2350,8 +2270,8 @@ object TextQueries {
          |SELECT source, n_docs, n_removed, tok_total, tok_removed,
          |  CASE WHEN tok_total = 0 THEN 0
          |       ELSE (1000 * tok_removed) // tok_total END AS removed_milli
-         |FROM g""".stripMargin,
-    "curate_temperature_mix" ->
+         |FROM g""".stripMargin),
+    QueryDef("curate_temperature_mix", curateTemperatureMix,
       s"""WITH stats AS (SELECT lang,
          |    CAST(SUM(CAST(len($toksSql) AS BIGINT)) AS BIGINT) AS c_tokens
          |  FROM documents GROUP BY lang),
@@ -2366,12 +2286,8 @@ object TextQueries {
          |  CAST(floor(1000.0 * (sqrt(CAST(c_tokens AS DOUBLE)) / s_w)
          |    * CAST(t_tokens AS DOUBLE) / CAST(c_tokens AS DOUBLE)) AS BIGINT)
          |    AS boost_milli
-         |FROM stats CROSS JOIN tot""".stripMargin,
-    "text_jsd" -> {
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+         |FROM stats CROSS JOIN tot""".stripMargin),
+    QueryDef("text_jsd", textJsd,
       s"""WITH cnt AS MATERIALIZED (SELECT source, token,
          |    CAST(COUNT(*) AS BIGINT) AS c
          |  FROM (SELECT source, unnest($toksSql) AS token FROM documents)
@@ -2385,8 +2301,8 @@ object TextQueries {
          |  JOIN tot tb ON tb.source = y.source),
          |t AS (SELECT sa, sb, a, b, na, nb, a * nb AS u, b * na AS v FROM m),
          |t2 AS (SELECT sa, sb, a, b, na, nb,
-         |    u * (${mbSql("(2 * u)")} - ${mbSql("(u + v)")})
-         |    + v * (${mbSql("(2 * v)")} - ${mbSql("(u + v)")}) AS term
+         |    u * (${log2MillisSql("(2 * u)")} - ${log2MillisSql("(u + v)")})
+         |    + v * (${log2MillisSql("(2 * v)")} - ${log2MillisSql("(u + v)")}) AS term
          |  FROM t),
          |g AS (SELECT sa, sb, CAST(COUNT(*) AS BIGINT) AS n_common,
          |    SUM(CAST(term AS HUGEINT)) AS term_sum,
@@ -2400,15 +2316,8 @@ object TextQueries {
          |SELECT sa AS source_a, sb AS source_b, n_common,
          |  CAST((1000 * d) // (CAST(2 AS HUGEINT) * na * nb) AS BIGINT)
          |    AS jsd_micro
-         |FROM d""".stripMargin
-    },
-    "text_kn_lm" -> {
-      // NB the enclosing parens: this macro is subtracted inline, and
-      // an unparenthesized `a + b - c + d` flips the second fraction.
-      def mbSql(q: String): String =
-        s"(CAST((length(bin($q)) - 1) * 1000 AS BIGINT) + " +
-          s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
-          s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1)))"
+         |FROM d""".stripMargin),
+    QueryDef("text_kn_lm", textKnLm,
       s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |bi AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2
          |       FROM (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
@@ -2424,13 +2333,12 @@ object TextQueries {
          |         (2 * c12 - 1) * btot + n1fw * n1pw AS num
          |       FROM bi JOIN c2 USING (w1, w2) JOIN w1s USING (w1)
          |         JOIN w2s USING (w2), b),
-         |m AS (SELECT doc_id, ${mbSql("den")} - ${mbSql("num")} AS mb FROM sc)
+         |m AS (SELECT doc_id, ${log2MillisSql("den")} - ${log2MillisSql("num")} AS mb FROM sc)
          |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
          |       CAST(SUM(mb) AS BIGINT) AS sum_millibits_kn,
          |       CAST(SUM(mb) AS BIGINT) // COUNT(*) AS avg_millibits_kn
-         |FROM m GROUP BY doc_id""".stripMargin
-    },
-    "curate_ppl_sweep" ->
+         |FROM m GROUP BY doc_id""".stripMargin),
+    QueryDef("curate_ppl_sweep", curatePplSweep,
       s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |uni AS (SELECT w, COUNT(*) AS c1
          |        FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY w),
@@ -2468,8 +2376,8 @@ object TextQueries {
          |SELECT threshold_millibits, n_kept, tok_kept,
          |  (1000 * n_kept) // n_docs AS keep_milli,
          |  (1000 * tok_kept) // tok_total AS tok_milli
-         |FROM k CROSS JOIN t0""".stripMargin,
-    "text_perplexity" ->
+         |FROM k CROSS JOIN t0""".stripMargin),
+    QueryDef("text_perplexity", textPerplexity,
       s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |uni AS (SELECT w, COUNT(*) AS c1
          |        FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY w),
@@ -2491,8 +2399,8 @@ object TextQueries {
          |SELECT doc_id, COUNT(*) AS n_bigrams,
          |       CAST(SUM(mb) AS BIGINT) AS sum_millibits,
          |       CAST(SUM(mb) AS BIGINT) // COUNT(*) AS avg_millibits
-         |FROM s3 GROUP BY doc_id""".stripMargin,
-    "text_chunk" ->
+         |FROM s3 GROUP BY doc_id""".stripMargin),
+    QueryDef("text_chunk", textChunk,
       s"""WITH t AS (SELECT doc_id, $toksSql AS toks FROM documents),
          |n AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n,
          |        1 + CASE WHEN len(toks) > 32
@@ -2507,8 +2415,8 @@ object TextQueries {
          |SELECT doc_id, chunk_idx, start_tok,
          |  CAST(len(chunk) AS BIGINT) AS n_tok,
          |  ${foldSql("array_to_string(chunk, ' ')")} AS fp
-         |FROM s""".stripMargin,
-    "curate_chunk_dedup" ->
+         |FROM s""".stripMargin),
+    QueryDef("curate_chunk_dedup", curateChunkDedup,
       s"""WITH t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
          |n AS (SELECT doc_id, source, toks, CAST(len(toks) AS BIGINT) AS n,
          |        1 + CASE WHEN len(toks) > 32
@@ -2524,8 +2432,8 @@ object TextQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_distinct,
          |  CAST(SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS BIGINT) AS n_in_dup_groups,
          |  (1000 * (CAST(SUM(c) AS BIGINT) - COUNT(*))) // CAST(SUM(c) AS BIGINT) AS dup_milli
-         |FROM g GROUP BY 1""".stripMargin,
-    "text_heaps" ->
+         |FROM g GROUP BY 1""".stripMargin),
+    QueryDef("text_heaps", textHeaps,
       s"""WITH f AS (SELECT tok, MIN(doc_id) AS first_doc
          |           FROM (SELECT doc_id, unnest($toksSql) AS tok FROM documents)
          |           GROUP BY 1),
@@ -2535,8 +2443,8 @@ object TextQueries {
          |SELECT a.b AS log2_docs, MAX(a.n_new) AS n_new,
          |  CAST(SUM(c.n_new) AS BIGINT) AS vocab_cum
          |FROM b a JOIN b c ON c.b <= a.b
-         |GROUP BY 1""".stripMargin,
-    "curate_source_drift" ->
+         |GROUP BY 1""".stripMargin),
+    QueryDef("curate_source_drift", curateSourceDrift,
       s"""WITH t AS (SELECT source, unnest($toksSql) AS tok FROM documents),
          |by_src AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS c_s
          |           FROM t GROUP BY 1, 2),
@@ -2555,8 +2463,8 @@ object TextQueries {
          |SELECT source, MAX(n_s) AS n_tokens, MAX(n_distinct_s) AS n_distinct,
          |  CAST(CAST(1000 AS HUGEINT) * SUM(term) //
          |    (2 * CAST(MAX(n_s) AS HUGEINT) * MAX(n)) AS BIGINT) AS tvd_vs_corpus_milli
-         |FROM terms GROUP BY source""".stripMargin,
-    "text_feature_hash" ->
+         |FROM terms GROUP BY source""".stripMargin),
+    QueryDef("text_feature_hash", textFeatureHash,
       s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS tok FROM documents),
          |hb AS (SELECT doc_id, ${foldSql("tok")} % 64 AS bucket,
          |         CAST(COUNT(*) AS BIGINT) AS c
@@ -2573,7 +2481,7 @@ object TextQueries {
          |SELECT doc_id, n_tokens, n_distinct_tokens, used_buckets,
          |       exact_norm_sq, hashed_norm_sq,
          |       (1000 * hashed_norm_sq) // exact_norm_sq AS distortion_milli
-         |FROM e JOIN h USING (doc_id)""".stripMargin,
+         |FROM e JOIN h USING (doc_id)""".stripMargin),
     // ASCII-corpus assumption (round-11 advice): the Spark kernel
     // counts Unicode CODE POINTS (codePointAt/charCount — pinned with
     // supplementary characters in SqlFunctionsSpec), while DuckDB's
@@ -2582,7 +2490,7 @@ object TextQueries {
     // generated ASCII corpus, which is what this oracle compares. A
     // non-ASCII corpus would need the oracle respelled over DuckDB
     // code-point semantics before trusting the hash gate.
-    "text_entropy" ->
+    QueryDef("text_entropy", textEntropy,
       """WITH ch AS (SELECT doc_id, lang, unnest(string_split(text, '')) AS c
         |            FROM documents),
         |cnt AS (SELECT doc_id, lang, c, CAST(COUNT(*) AS BIGINT) AS k
@@ -2596,8 +2504,8 @@ object TextQueries {
         |      FROM cnt JOIN n_t USING (doc_id, lang) GROUP BY 1, 2, 3, 4)
         |SELECT doc_id, lang, n_cp, distinct_chars, entropy_bound_bits,
         |       (1000 * entropy_bound_bits) // n_cp AS milli_bits_per_char
-        |FROM e""".stripMargin,
-    "text_rake" ->
+        |FROM e""".stripMargin),
+    QueryDef("text_rake", textRake,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |t AS (SELECT doc_id, unnest(tk) AS tok,
          |             unnest(range(1, len(tk)+1)) AS pos FROM tk_t),
@@ -2621,8 +2529,8 @@ object TextQueries {
          |    AS DECIMAL(38,6))) AS DOUBLE) AS score
          |FROM pdw JOIN ws USING (wd)
          |GROUP BY 1, 2, 3
-         |HAVING n_words >= 2 AND n_occur >= 3""".stripMargin,
-    "curate_data_card" ->
+         |HAVING n_words >= 2 AND n_occur >= 3""".stripMargin),
+    QueryDef("curate_data_card", curateDataCard,
       s"""WITH g AS (SELECT lang, source, CAST(COUNT(*) AS BIGINT) AS docs,
          |             CAST(SUM(len($toksSql)) AS BIGINT) AS toks
          |           FROM documents GROUP BY 1, 2),
@@ -2631,11 +2539,11 @@ object TextQueries {
          |  CAST(g.toks * 1000000 // t.total AS BIGINT) AS share_ppm,
          |  CAST(row_number() OVER (ORDER BY g.toks DESC, g.lang, g.source)
          |    AS BIGINT) AS rnk
-         |FROM g, t""".stripMargin,
-    "text_bpe_train" -> bpeTrainOracleSql(6),
-    "text_bpe_apply" -> bpeApplyOracleSql(6),
-    "text_bpe_heldout" -> bpeHeldoutOracleSql(6),
-    "text_bpe_merge_step" ->
+         |FROM g, t""".stripMargin),
+    QueryDef("text_bpe_train", textBpeTrain, bpeTrainOracleSql(6)),
+    QueryDef("text_bpe_apply", textBpeApply, bpeApplyOracleSql(6)),
+    QueryDef("text_bpe_heldout", textBpeHeldout, bpeHeldoutOracleSql(6)),
+    QueryDef("text_bpe_merge_step", textBpeMergeStep,
       s"""WITH words AS (SELECT token AS w, CAST(COUNT(*) AS BIGINT) AS cnt
          |               FROM (SELECT unnest($toksSql) AS token FROM documents)
          |               GROUP BY 1),
@@ -2652,8 +2560,8 @@ object TextQueries {
          |top AS (SELECT pair, pcount FROM pcnt ORDER BY pcount DESC, pair LIMIT 1)
          |SELECT s.w, s.cnt, t.pair AS merged_pair, t.pcount,
          |       replace(s.rep, t.pair, replace(t.pair, ' ', '')) AS new_rep
-         |FROM spaced s CROSS JOIN top t""".stripMargin,
-    "curate_gopher" ->
+         |FROM spaced s CROSS JOIN top t""".stripMargin),
+    QueryDef("curate_gopher", curateGopher,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |base AS (SELECT doc_id,
          |    CAST(len(tk) AS BIGINT) AS n_words,
@@ -2683,8 +2591,8 @@ object TextQueries {
          |  (n_words >= 50 AND n_words <= 100000 AND 3*n_words <= sum_word_chars
          |   AND sum_word_chars <= 10*n_words AND stop_hits >= 2
          |   AND 10*dup_lines <= 3*n_lines AND 10*max_bigram <= n_words) AS pass
-         |FROM sig""".stripMargin,
-    "curate_domain_cap" ->
+         |FROM sig""".stripMargin),
+    QueryDef("curate_domain_cap", curateDomainCap,
       """WITH r AS (SELECT doc_id, source,
         |    CAST(row_number() OVER (PARTITION BY source
         |      ORDER BY n_chars DESC, doc_id) AS BIGINT) AS rk
@@ -2692,8 +2600,8 @@ object TextQueries {
         |t AS (SELECT source, count(*) AS n_source FROM documents GROUP BY 1)
         |SELECT doc_id, r.source AS source, rk, n_source
         |FROM r JOIN t ON r.source = t.source
-        |WHERE rk <= 10""".stripMargin,
-    "curate_mix" ->
+        |WHERE rk <= 10""".stripMargin),
+    QueryDef("curate_mix", curateMix,
       s"""WITH d AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |  $fpSql % 100 AS h
@@ -2707,8 +2615,8 @@ object TextQueries {
          |SELECT lang, CAST(MIN(rate_pct) AS BIGINT) AS rate_pct,
          |       CAST(MIN(a_tokens) AS BIGINT) AS a_tokens,
          |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS kept_tokens
-         |FROM d JOIN r ON lang = r_lang WHERE h < rate_pct GROUP BY lang""".stripMargin,
-    "curate_split" ->
+         |FROM d JOIN r ON lang = r_lang WHERE h < rate_pct GROUP BY lang""".stripMargin),
+    QueryDef("curate_split", curateSplit,
       s"""WITH h_t AS (SELECT lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |  $fpSql % 100 AS h
@@ -2718,8 +2626,8 @@ object TextQueries {
          |  FROM h_t)
          |SELECT split, lang, COUNT(*) AS n_docs,
          |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM s_t GROUP BY split, lang""".stripMargin,
-    "curate_dsir" ->
+         |FROM s_t GROUP BY split, lang""".stripMargin),
+    QueryDef("curate_dsir", curateDsir,
       s"""WITH tk_t AS (SELECT doc_id, lang, $toksSql AS tk FROM documents),
          |bg AS (SELECT doc_id, lang,
          |  unnest(CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
@@ -2740,8 +2648,8 @@ object TextQueries {
          |SELECT doc_id, lang, n_bigrams, score,
          |  CAST(CASE WHEN score > n_bigrams * mean_w THEN 1 ELSE 0 END AS BIGINT)
          |    AS selected
-         |FROM sc, m""".stripMargin,
-    "curate_e2e" ->
+         |FROM sc, m""".stripMargin),
+    QueryDef("curate_e2e", curateE2e,
       s"""WITH tk_t AS (SELECT doc_id,
          |  list_concat(['nav','home',source,'menu','login'], $toksSql) AS tk
          |  FROM documents),
@@ -2780,8 +2688,8 @@ object TextQueries {
          |         ELSE 'test' END AS split, lang,
          |  COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
          |FROM (SELECT lang, n_tokens, ${foldSql("kept_text")} % 100 AS h FROM sel)
-         |GROUP BY 1, 2""".stripMargin,
-    "curate_line_dedup" ->
+         |GROUP BY 1, 2""".stripMargin),
+    QueryDef("curate_line_dedup", curateLineDedup,
       s"""WITH tk_t AS (SELECT doc_id,
          |  list_concat(['nav','home',source,'menu','login'], $toksSql) AS tk
          |  FROM documents),
@@ -2804,8 +2712,8 @@ object TextQueries {
          |    list_reduce(list_prepend(CAST(0 AS BIGINT),
          |      list_transform(string_split(kept_text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
          |      (a, b) -> (a * 31 + b) % 1000000007) END AS new_fp
-         |FROM r""".stripMargin,
-    "curate_novelty" ->
+         |FROM r""".stripMargin),
+    QueryDef("curate_novelty", curateNovelty,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
@@ -2820,8 +2728,8 @@ object TextQueries {
          |  CAST(SUM(CASE WHEN first_doc = g.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
          |  CAST((1000 * SUM(CASE WHEN first_doc = g.doc_id THEN 1 ELSE 0 END)) // COUNT(*) AS BIGINT)
          |    AS novelty_milli
-         |FROM g JOIN f_t USING (fp) GROUP BY g.doc_id""".stripMargin,
-    "curate_boilerplate" ->
+         |FROM g JOIN f_t USING (fp) GROUP BY g.doc_id""".stripMargin),
+    QueryDef("curate_boilerplate", curateBoilerplate,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
@@ -2836,8 +2744,8 @@ object TextQueries {
          |       CAST(n_shared AS DOUBLE) / n_grams AS shared_ratio
          |FROM (SELECT g.doc_id, COUNT(*) AS n_grams,
          |        CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared
-         |      FROM g JOIN d_t USING (fp) GROUP BY g.doc_id)""".stripMargin,
-    "curate_pack" ->
+         |      FROM g JOIN d_t USING (fp) GROUP BY g.doc_id)""".stripMargin),
+    QueryDef("curate_pack", curatePack,
       s"""WITH t AS (SELECT doc_id, lang, doc_id // 2000 AS shard,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
          |c AS (SELECT doc_id, lang, shard, n_tokens,
@@ -2848,8 +2756,8 @@ object TextQueries {
          |        n_tokens, doc_id FROM c)
          |SELECT lang, shard, bin, COUNT(*) AS n_docs,
          |       CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens, MIN(doc_id) AS first_doc
-         |FROM b GROUP BY lang, shard, bin""".stripMargin,
-    "curate_sources" ->
+         |FROM b GROUP BY lang, shard, bin""".stripMargin),
+    QueryDef("curate_sources", curateSources,
       s"""WITH s1 AS (SELECT source,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |  $qualitySql AS quality,
@@ -2859,8 +2767,8 @@ object TextQueries {
          |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
          |  CAST(SUM(CAST(quality AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS mean_quality,
          |  1.0 - CAST(COUNT(DISTINCT fp) AS DOUBLE) / COUNT(*) AS dup_ratio
-         |FROM s1 GROUP BY source""".stripMargin,
-    "curate_curriculum" ->
+         |FROM s1 GROUP BY source""".stripMargin),
+    QueryDef("curate_curriculum", curateCurriculum,
       s"""WITH b AS (SELECT doc_id,
          |  LEAST(${markerSql(Seq("the", "a", "data", "table"))}, 3) AS band,
          |  $fpSql % 1000000 AS h,
@@ -2868,8 +2776,8 @@ object TextQueries {
          |FROM documents)
          |SELECT CAST(row_number() OVER (ORDER BY 3 - band, h, doc_id) AS BIGINT) AS pos,
          |       doc_id, band, n_tokens
-         |FROM b""".stripMargin,
-    "text_ngram_lm" ->
+         |FROM b""".stripMargin),
+    QueryDef("text_ngram_lm", textNgramLm,
       s"""WITH tk AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |uni AS (SELECT w, COUNT(*) AS c1
          |        FROM (SELECT unnest(tk) AS w FROM tk) GROUP BY w),
@@ -2885,8 +2793,8 @@ object TextQueries {
          |       CAST(SUM(CAST(p AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*) AS avg_p,
          |       CAST(SUM(CAST(p AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)
          |         < CAST(0.0315 AS DOUBLE) AS flagged
-         |FROM sc GROUP BY doc_id""".stripMargin,
-    "text_bm25" ->
+         |FROM sc GROUP BY doc_id""".stripMargin),
+    QueryDef("text_bm25", textBm25,
       s"""WITH q(query_id, token) AS (
          |  SELECT CAST(query_id AS BIGINT), token FROM (VALUES
          |    (1,'spark'),(1,'join'),(2,'hash'),(2,'table'),
@@ -2913,8 +2821,8 @@ object TextQueries {
          |        FROM sc GROUP BY query_id, doc_id)
          |SELECT query_id, CAST(row_number() OVER (PARTITION BY query_id
          |         ORDER BY score DESC, doc_id) AS BIGINT) AS rk, doc_id, score
-         |FROM agg QUALIFY rk <= 5""".stripMargin,
-    "text_tfidf" ->
+         |FROM agg QUALIFY rk <= 5""".stripMargin),
+    QueryDef("text_tfidf", textTfidf,
       s"""WITH tf_t AS (SELECT doc_id, token, COUNT(*) AS tf
          |  FROM (SELECT doc_id, unnest($toksSql) AS token FROM documents)
          |  GROUP BY doc_id, token),
@@ -2926,8 +2834,8 @@ object TextQueries {
          |FROM (SELECT doc_id, token, tf, df,
          |        CAST(tf AS DOUBLE) * n_docs / df AS tfidf
          |      FROM tf_t JOIN df_t USING (token), n_t)
-         |QUALIFY rk <= 3""".stripMargin,
-    "curate_decontaminate" ->
+         |QUALIFY rk <= 3""".stripMargin),
+    QueryDef("curate_decontaminate", curateDecontaminate,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, CASE WHEN len(tk) >= 5 THEN list_transform(range(1, len(tk) - 3),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
@@ -2939,8 +2847,8 @@ object TextQueries {
          |g AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t),
          |bench AS (SELECT DISTINCT fp FROM g WHERE doc_id % 97 = 0)
          |SELECT g.doc_id, COUNT(*) AS n_hits
-         |FROM g JOIN bench USING (fp) GROUP BY g.doc_id""".stripMargin,
-    "text_repetition" ->
+         |FROM g JOIN bench USING (fp) GROUP BY g.doc_id""".stripMargin),
+    QueryDef("text_repetition", textRepetition,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
          |sh_t AS (SELECT doc_id, CASE WHEN len(tk) >= 3 THEN list_transform(range(1, len(tk) - 1),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) ELSE [] END AS sh FROM tk_t),
@@ -2951,16 +2859,16 @@ object TextQueries {
          |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_grams,
          |  CAST(len(list_distinct(fps)) AS BIGINT) AS n_distinct,
          |  1.0 - CAST(len(list_distinct(fps)) AS BIGINT) / CAST(len(fps) AS BIGINT) AS rep_ratio
-         |FROM fp_t WHERE len(fps) > 0""".stripMargin,
-    "curate_sample" ->
+         |FROM fp_t WHERE len(fps) > 0""".stripMargin),
+    QueryDef("curate_sample", curateSample,
       s"""WITH h_t AS (SELECT doc_id, lang,
          |  CASE WHEN lang = 'en' THEN 40 ELSE 15 END AS rate,
          |  $fpSql % 100 AS h
          |  FROM documents)
          |SELECT lang, CAST(rate AS BIGINT) AS rate, COUNT(*) AS n_sampled,
          |       MIN(doc_id) AS first_doc
-         |FROM h_t WHERE h < rate GROUP BY lang, rate""".stripMargin,
-    "curate_neyman_sample" ->
+         |FROM h_t WHERE h < rate GROUP BY lang, rate""".stripMargin),
+    QueryDef("curate_neyman_sample", curateNeymanSample,
       s"""WITH d AS MATERIALIZED (SELECT doc_id, lang, n_chars,
          |    $fpSql % 1000000 AS h
          |  FROM documents),
@@ -2985,16 +2893,16 @@ object TextQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_picked,
          |  CAST(SUM(rk.n_chars) AS BIGINT) AS picked_chars
          |FROM rk JOIN al ON rk.lang = al.lang AND rk.rk <= al.alloc
-         |GROUP BY 1, 2, 3, 4""".stripMargin,
-    "curate_pps_sample" ->
+         |GROUP BY 1, 2, 3, 4""".stripMargin),
+    QueryDef("curate_pps_sample", curatePpsSample,
       s"""WITH h_t AS (SELECT doc_id, n_chars,
          |  CAST(len($toksSql) AS BIGINT) AS tok_n,
          |  $fpSql % 2000 AS h
          |  FROM documents)
          |SELECT doc_id, n_chars, tok_n,
          |       CAST(tok_n * 2000 AS DOUBLE) / CAST(n_chars AS DOUBLE) AS ht_contrib
-         |FROM h_t WHERE h < n_chars""".stripMargin,
-    "text_collocations" ->
+         |FROM h_t WHERE h < n_chars""".stripMargin),
+    QueryDef("text_collocations", textCollocations,
       s"""WITH tk_t AS (SELECT $toksSql AS tk FROM documents),
          |uni AS (SELECT w, COUNT(*) AS c1 FROM (SELECT unnest(tk) AS w FROM tk_t) GROUP BY 1),
          |n_t AS (SELECT COUNT(*) AS n FROM (SELECT unnest(tk) AS w FROM tk_t)),
@@ -3008,15 +2916,15 @@ object TextQueries {
          |       FROM bi JOIN uni ux ON bi.w1 = ux.w JOIN uni uy ON bi.w2 = uy.w, n_t)
          |SELECT w1, w2, cxy, cx, cy, lift,
          |       row_number() OVER (ORDER BY lift DESC, w1, w2) AS rank
-         |FROM sc QUALIFY rank <= 10""".stripMargin,
-    "text_inverted_index" ->
+         |FROM sc QUALIFY rank <= 10""".stripMargin),
+    QueryDef("text_inverted_index", textInvertedIndex,
       s"""WITH tok AS (SELECT doc_id, unnest($toksSql) AS term FROM documents)
          |SELECT term, COUNT(DISTINCT doc_id) AS df, COUNT(*) AS cf,
          |  array_to_string(list_transform(
          |    list_sort(list_distinct(list(doc_id)))[1:10],
          |    v -> CAST(v AS VARCHAR)), ',') AS postings
-         |FROM tok GROUP BY term""".stripMargin,
-    "text_redact" ->
+         |FROM tok GROUP BY term""".stripMargin),
+    QueryDef("text_redact", textRedact,
       s"""WITH pii AS (SELECT doc_id,
          |  text || ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now' AS text
          |  FROM documents)
@@ -3026,8 +2934,8 @@ object TextQueries {
          |    list_transform(string_split(regexp_replace(text, '[a-z0-9]+@[a-z0-9]+\\.[a-z]+', '[EMAIL]', 'g'), ''),
          |      ch -> CAST(unicode(ch) AS BIGINT))),
          |    (a, b) -> (a * 31 + b) % 1000000007) AS redacted_fp
-         |FROM pii""".stripMargin,
-    "curate_pipeline" ->
+         |FROM pii""".stripMargin),
+    QueryDef("curate_pipeline", curatePipeline,
       s"""WITH corpus AS (SELECT doc_id, text, n_chars FROM documents
          |                UNION ALL SELECT doc_id + 1000000, text, n_chars FROM documents),
          |s1 AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens,
@@ -3043,8 +2951,8 @@ object TextQueries {
          |k AS (SELECT fp, pred_lang, MIN(doc_id) AS doc_id, MIN(n_tokens) AS n_tokens
          |      FROM f GROUP BY fp, pred_lang)
          |SELECT pred_lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM k GROUP BY pred_lang""".stripMargin,
-    "text_stats" ->
+         |FROM k GROUP BY pred_lang""".stripMargin),
+    QueryDef("text_stats", textStats,
       s"""SELECT doc_id, n_chars,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |  CAST(list_sum(list_transform($toksSql, t -> CAST(length(t) AS BIGINT))) AS BIGINT)
@@ -3053,14 +2961,14 @@ object TextQueries {
          |    / CAST(len($toksSql) AS BIGINT) AS stop_ratio,
          |  CAST(len(list_distinct($toksSql)) AS BIGINT)
          |    / CAST(len($toksSql) AS BIGINT) AS distinct_ratio
-         |FROM documents""".stripMargin,
-    "text_fingerprint" ->
+         |FROM documents""".stripMargin),
+    QueryDef("text_fingerprint", textFingerprint,
       """SELECT doc_id,
         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
         |    list_transform(string_split(text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
         |    (a, b) -> (a * 31 + b) % 1000000007) AS fp
-        |FROM documents""".stripMargin,
-    "text_langid_confusion" ->
+        |FROM documents""".stripMargin),
+    QueryDef("text_langid_confusion", textLangidConfusion,
       s"""WITH p AS (
          |  SELECT lang, $langCase AS pred_lang
          |  FROM (SELECT *,
@@ -3073,15 +2981,15 @@ object TextQueries {
          |tot AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS lang_total
          |        FROM cm GROUP BY 1)
          |SELECT lang, pred_lang, n, lang_total, lang = pred_lang AS is_diagonal
-         |FROM cm JOIN tot USING (lang)""".stripMargin,
-    "text_lang_id" ->
+         |FROM cm JOIN tot USING (lang)""".stripMargin),
+    QueryDef("text_lang_id", textLangId,
       s"""SELECT doc_id, lang, $langCase AS pred_lang
          |FROM (SELECT *,
          |        GREATEST(${TextOps.langMarkers.map { case (l, _) => s"score_$l" }.mkString(", ")}) AS best
          |      FROM (SELECT doc_id, lang,
          |              ${TextOps.langMarkers.map { case (l, ws) => s"${markerSql(ws)} AS score_$l" }.mkString(", ")}
-         |            FROM documents))""".stripMargin,
-    "text_quality" ->
+         |            FROM documents))""".stripMargin),
+    QueryDef("text_quality", textQuality,
       s"""SELECT doc_id,
          |  CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS BIGINT) AS n_punct,
          |  CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS n_digits,
@@ -3094,14 +3002,14 @@ object TextQueries {
          |            / CAST(len($toksSql) AS BIGINT)
          |        - CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS BIGINT) / n_chars * 2
          |        - CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) / n_chars)) AS quality
-         |FROM documents""".stripMargin,
-    "text_bpe_tokens" ->
+         |FROM documents""".stripMargin),
+    QueryDef("text_bpe_tokens", textBpeTokens,
       s"""SELECT doc_id,
          |  CAST(len($toksSql) AS BIGINT) AS n_ws,
          |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_bpe,
          |  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha
-         |FROM documents""".stripMargin,
-    "text_readability" ->
+         |FROM documents""".stripMargin),
+    QueryDef("text_readability", textReadability,
       s"""WITH r AS (SELECT doc_id,
          |    CAST(len($toksSql) AS BIGINT) AS n_words,
          |    GREATEST(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT),
@@ -3116,9 +3024,9 @@ object TextQueries {
          |  CASE WHEN wps_milli > 25000 OR spw_milli > 1600 THEN 'hard'
          |       WHEN wps_milli < 12000 AND spw_milli < 1300 THEN 'easy'
          |       ELSE 'mid' END AS band
-         |FROM m""".stripMargin,
-    "text_zipf" -> {
-      def mbSql(q: String): String =
+         |FROM m""".stripMargin),
+    QueryDef("text_zipf", textZipf, {
+      def mbLess20Sql(q: String): String =
         s"CAST((length(bin($q)) - 1 - 20) * 1000 AS BIGINT) + " +
           s"(($q - (CAST(1 AS BIGINT) << (length(bin($q)) - 1))) * 1000) // " +
           s"(CAST(1 AS BIGINT) << (length(bin($q)) - 1))"
@@ -3128,8 +3036,8 @@ object TextQueries {
          |top AS (SELECT CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT)
          |          AS rank, cnt
          |        FROM freq QUALIFY rank <= 64),
-         |m AS (SELECT ${mbSql("(rank * 1048576)")} AS x,
-         |             ${mbSql("(cnt * 1048576)")} AS y
+         |m AS (SELECT ${mbLess20Sql("(rank * 1048576)")} AS x,
+         |             ${mbLess20Sql("(cnt * 1048576)")} AS y
          |      FROM top),
          |s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tokens,
          |        CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
@@ -3150,8 +3058,8 @@ object TextQueries {
          |      * abs(CAST(num AS HUGEINT))) // CAST(deny AS HUGEINT) AS BIGINT) END
          |    AS r2_milli
          |FROM d""".stripMargin
-    },
-    "curate_fertility" ->
+    }),
+    QueryDef("curate_fertility", curateFertility,
       s"""WITH t AS (SELECT lang,
          |    CAST(len($toksSql) AS BIGINT) AS n_ws,
          |    CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]'))
@@ -3166,8 +3074,8 @@ object TextQueries {
          |    // greatest(CAST(SUM(n_ws) AS BIGINT), 1) AS fertility_milli,
          |  (1000 * CAST(SUM(n_chars) AS BIGINT))
          |    // greatest(CAST(SUM(n_bpe) AS BIGINT), 1) AS chars_per_subword_milli
-         |FROM t GROUP BY lang""".stripMargin,
-    "text_token_freq" ->
+         |FROM t GROUP BY lang""".stripMargin),
+    QueryDef("text_token_freq", textTokenFreq,
       """SELECT rank, token, cnt FROM (
         |  SELECT token, cnt,
         |    CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS rank
@@ -3175,5 +3083,5 @@ object TextQueries {
         |        FROM (SELECT unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS token
         |              FROM documents)
         |        GROUP BY token)
-        |) WHERE rank <= 20""".stripMargin)
+        |) WHERE rank <= 20""".stripMargin))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.DedupOps
+import graft.functions.HashExprs
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,7 +44,7 @@ class DedupOpsSpec extends AnyFunSuite {
     val maxH = 3
     // Ground truth: all-pairs hamming over the same signatures.
     val sigs = corpus.select(col("doc_id"),
-      DedupOps.simhash(DedupOps.tokenFps(graft.ext.TextOps.tokens(col("text"))), 30).as("sig"))
+      HashExprs.simhash(HashExprs.tokenFps(graft.ext.TextOps.tokens(col("text"))), 30).as("sig"))
     val truth = sigs.as("a").join(sigs.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id"),
         expr("bit_count(a.sig ^ b.sig)").as("h"))

@@ -443,4 +443,12 @@ class GraftStageSpec extends AnyFunSuite {
     }
     assert(e.getMessage == "source-boom")
   }
+
+  test("async bridges pass null elements: fromAsyncIterator and toAsyncIterator round-trip \"a\", null, \"c\"") {
+    val xs = Seq("a", null, "c")
+    val it = xs.iterator
+    val src = () => Future.successful(if (it.hasNext) Some(it.next()) else None)
+    val back = GraftStage.fromAsyncIterator(src, maxsize = 2).toAsyncIterator(maxsize = 2)
+    assert(Await.result(back.toSeq, 60.seconds) == xs)
+  }
 }

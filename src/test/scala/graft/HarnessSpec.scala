@@ -26,4 +26,12 @@ class HarnessSpec extends AnyFunSuite {
       assert(e.getMessage.contains(name) && e.getMessage.contains(s"'$bad'"), e.getMessage)
     }
   }
+
+  test("Explain and Profile fail on an unknown query name, naming it, before a session starts") {
+    // Explain last: a run past its name check stops the shared session.
+    for (main <- Seq[Array[String] => Unit](Profile.main, Explain.main)) {
+      val e = intercept[IllegalArgumentException](main(Array("sf-dir-unread", "q_typo")))
+      assert(e.getMessage.contains("q_typo"), e.getMessage)
+    }
+  }
 }

@@ -2,21 +2,25 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The declared-inventory contract, pinned: every `SparkEntry.queries`
-  * entry has a DuckDB oracle under the SAME name (the driver's compare
-  * joins on the name — an orphan on either side silently weakens the
-  * gate), and the total equals the ledgered count asserted below (the
-  * single source of truth — SURVEY §2.2.1 and README mirror it). A
-  * count drift without a matching ledger update fails the suite on
-  * purpose.
+/** The declared-inventory contract, pinned: each suite declares every
+  * query once, as a `QueryDef` that carries its builder and its DuckDB
+  * oracle together, so no query can lack an oracle. A name declared
+  * twice fails `SparkEntry`'s initialisation instead of one declaration
+  * silently shadowing the other. The total equals the ledgered count
+  * asserted below (the single source of truth — SURVEY §2.2.1 and README
+  * mirror it). A count drift without a matching ledger update fails the
+  * suite on purpose.
   */
 class InventorySpec extends AnyFunSuite {
-  test("393 declared queries, each with an oracle, keysets identical") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q.size == 393, s"ledger says 393, found ${q.size}")
-    assert(q == o,
-      s"queries without oracle: ${(q -- o).toSeq.sorted.mkString(",")}; " +
-        s"oracles without query: ${(o -- q).toSeq.sorted.mkString(",")}")
+  test("393 declared queries") {
+    assert(SparkEntry.all.size == 393, s"ledger says 393, found ${SparkEntry.all.size}")
+    assert(SparkEntry.queries.size == 393 && SparkEntry.oracleSql.size == 393)
+  }
+
+  test("a query name declared twice fails, naming the name") {
+    val opMap = SparkEntry.all.find(_.name == "op_map").get
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.unique(SparkEntry.all :+ opMap.copy(oracle = "SELECT 1")))
+    assert(e.getMessage.contains("op_map"), e.getMessage)
   }
 }

@@ -193,4 +193,12 @@ class QueryCachesSpec extends AnyFunSuite {
     }
     assert(stray.isEmpty, s"declare native kernels in graft.functions.Kernels:\n${stray.mkString("\n")}")
   }
+
+  test("source audit: each query is declared once, with its oracle, and the log2-millis oracle fragment once") {
+    // spelled in pieces so this file does not match itself
+    val banned = Seq("val oracleSql" + ": Map", "def mbSql" + "(")
+    val hits = sourceHits("src/main/scala/graft/queries")(_ => banned)
+    assert(hits.isEmpty,
+      s"declare queries as QueryDef entries, shared fragments in OracleFragments:\n${hits.mkString("\n")}")
+  }
 }
