@@ -1,9 +1,16 @@
 package graft.core
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{FutureAction, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.{col, element_at, struct, udf}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.util.LongAccumulator
 
 import java.util.concurrent.{Callable, TimeUnit, TimeoutException => JTimeoutException}
 import scala.concurrent.duration.Duration
@@ -24,7 +31,8 @@ final case class WorkerInfo(index: Int, numWorkers: Int, stageId: Int, attempt: 
   * `Stage` DAG node (reference: pypeln/process/stage.py:13-24). Nothing
   * executes until a terminal action (`toIterable` / `run` / `collect`),
   * exactly like the reference's iterate-to-run contract
-  * (reference: docs/advanced.md:35).
+  * (reference: docs/advanced.md:35). Each user function runs once per
+  * element per action, as in the reference's workers.
   *
   * Two parallel plans are maintained, both pure lineage (no execution):
   *
@@ -34,10 +42,20 @@ final case class WorkerInfo(index: Int, numWorkers: Int, stageId: Int, attempt: 
   *     job ever runs.
   *   - `indexed: Dataset[Element[T]]` — the creation-order path,
   *     materialized ON DEMAND (first use of `ordered` /
-  *     `toIterableWithIndex` / `indexedDF`). Source indices come from
-  *     `zipWithIndex` (an extra job — the price of the reference's
-  *     enumeration contract, pypeln/process/api/from_iterable.py:15-22),
-  *     paid only when something downstream actually consumes indices.
+  *     `toIterableWithIndex` / `indexedDF`). Source indices come from a
+  *     two-pass enumeration like `zipWithIndex` (one counting job — the
+  *     price of the reference's enumeration contract,
+  *     pypeln/process/api/from_iterable.py:15-22), paid only when
+  *     something downstream actually consumes indices.
+  *
+  * The in-order rule: the indexed plan of a source is in creation order
+  * (partition i holds one contiguous run of source indices, ascending,
+  * and partition i's run precedes partition i+1's). Narrow operators
+  * (`map`, `flatMap`, `filter`, `filterCol`, `each`, `cached`,
+  * `mapAsync`, `mapEx` without `workers`) keep it; `mapEx(workers = n)`
+  * and `concat` lose it. [[ordered]] on an in-order stage is free; on
+  * any other stage it is one exchange on known bounds plus a sort
+  * within partitions.
   *
   * Concurrency mapping:
   *   - `workers = n`  → `repartition(n)` (reference: process/stage.py:51-64)
@@ -49,21 +67,26 @@ final case class WorkerInfo(index: Int, numWorkers: Int, stageId: Int, attempt: 
   *     (reference: process/supervisor.py:19-32, worker.py:152-161)
   *   - `on_start` / `on_done` → partition open/close hooks
   *     (reference: process/worker.py:68-127)
+  *   - `to_iterable(maxsize)` → [[toIterable]]: up to
+  *     `defaultParallelism` partition jobs run ahead of the consumer
+  *     (reference: process/api/to_iterable.py, bounded output queue)
   */
-final class GraftStage[T](
+final class GraftStage[T] private (
     val plain: Dataset[T],
-    mkIndexed: () => Dataset[Element[T]]) {
+    mkIndexed: () => GraftStage.Indexed[T]) {
+
+  private lazy val ix: GraftStage.Indexed[T] = mkIndexed()
 
   /** Creation-order plan; forcing this builds (and memoizes) the indexed
-    * lineage, including the source `zipWithIndex` job when first acted on. */
-  lazy val indexed: Dataset[Element[T]] = mkIndexed()
+    * lineage, including the source indexing job when first acted on. */
+  lazy val indexed: Dataset[Element[T]] = ix.plan
 
   private def spark: SparkSession = plain.sparkSession
 
   /** 1→1 transform; index passes through untouched
     * (reference: pypeln/process/api/map.py:19-27). */
   def map[B](f: T => B)(implicit eb: Encoder[B], ee: Encoder[Element[B]]): GraftStage[B] =
-    new GraftStage(plain.map(f), () => indexed.map(el => Element(el.index, f(el.value))))
+    new GraftStage(plain.map(f), () => ix.narrow(_.map(el => Element(el.index, f(el.value)))))
 
   /** `map` with the full reference option surface: `workers` (partition
     * fan-out), per-element `timeout` (drop on expiry), `onStart`/`onDone`
@@ -95,9 +118,11 @@ final class GraftStage[T](
         }
       }
     }
+    val step = (p: Dataset[Element[T]]) =>
+      run[Element[T], Element[B]](p, (el, s) => Some(Element(el.index, f(el.value, s))))
     new GraftStage(
       run[T, B](plain, (a, s) => Some(f(a, s))),
-      () => run[Element[T], Element[B]](indexed, (el, s) => Some(Element(el.index, f(el.value, s)))))
+      () => if (workers > 0) ix.shuffled(step) else ix.narrow(step))
   }
 
   /** 1→N transform; each child element i gets index `parent :+ i`
@@ -105,14 +130,14 @@ final class GraftStage[T](
   def flatMap[B](f: T => IterableOnce[B])(implicit eb: Encoder[B], ee: Encoder[Element[B]]): GraftStage[B] =
     new GraftStage(
       plain.flatMap(f),
-      () => indexed.flatMap { el =>
+      () => ix.narrow(_.flatMap { el =>
         f(el.value).iterator.zipWithIndex.map { case (v, i) => Element(el.push(i.toLong), v) }
-      })
+      }))
 
   /** Keep elements where the predicate holds; surviving elements keep
     * their original index (reference: pypeln/process/api/filter.py:19-27). */
   def filter(p: T => Boolean): GraftStage[T] =
-    new GraftStage(plain.filter(p), () => indexed.filter((el: Element[T]) => p(el.value)))
+    new GraftStage(plain.filter(p), () => ix.narrow(_.filter((el: Element[T]) => p(el.value))))
 
   /** Column-expression filter: the Catalyst path. On the plain plan the
     * predicate reaches the parquet scan (PushedFilters) — this is the
@@ -120,7 +145,7 @@ final class GraftStage[T](
     * pruned at 100 TB. Indices of survivors are unchanged, same contract
     * as [[filter]]. */
   def filterCol(c: Column): GraftStage[T] =
-    new GraftStage(plain.filter(c), () => GraftStage.filterIndexed(indexed, c))
+    new GraftStage(plain.filter(c), () => ix.narrow(GraftStage.filterIndexed(_, c)))
 
   /** Async-IO map: the task-backend analog. Keeps up to `workers`
     * Futures in flight per partition (bounded window ≈ the reference's
@@ -131,20 +156,22 @@ final class GraftStage[T](
     * the window; on expiry the element is DROPPED (reference task
     * backend: asyncio.wait_for + swallowed TimeoutError,
     * task/worker.py:246-255) — a hung Future can no longer wedge the
-    * task forever.
+    * task forever. Drops are counted on the driver
+    * ([[GraftStage.asyncDroppedCount]]).
     */
   def mapAsync[B](f: T => Future[B], workers: Int = 8,
       timeout: Duration = GraftStage.DefaultAsyncTimeout)(
       implicit eb: Encoder[B], ee: Encoder[Element[B]]): GraftStage[B] = {
     val n = math.max(1, workers)
     val t = timeout
+    val dropped = GraftStage.droppedAccumulator(spark.sparkContext)
     def run[A, C](d: Dataset[A], value: A => T, mk: (A, B) => C)(
         implicit e: Encoder[C]): Dataset[C] =
       d.mapPartitions(iter =>
-        GraftStage.asyncWindowIterator(iter, n, t, (a: A) => f(value(a)), mk))
+        GraftStage.asyncWindowIterator(iter, n, t, (a: A) => f(value(a)), mk, dropped))
     new GraftStage(
       run[T, B](plain, identity, (_, b) => b),
-      () => run[Element[T], Element[B]](indexed, _.value, (a, b) => Element(a.index, b)))
+      () => ix.narrow(run[Element[T], Element[B]](_, _.value, (a, b) => Element(a.index, b))))
   }
 
   /** Side-effect call per element, passing elements through unchanged
@@ -156,8 +183,10 @@ final class GraftStage[T](
     implicit val ep: Encoder[T] = plain.encoder
     new GraftStage(
       plain.map { v => f(v); v },
-      () => { implicit val ei: Encoder[Element[T]] = indexed.encoder
-              indexed.map { el => f(el.value); el } })
+      () => ix.narrow { p =>
+        implicit val ei: Encoder[Element[T]] = p.encoder
+        p.map { el => f(el.value); el }
+      })
   }
 
   /** Terminal each: deliver every element to `f` exactly once via a
@@ -178,7 +207,11 @@ final class GraftStage[T](
   def concat(others: GraftStage[T]*): GraftStage[T] =
     new GraftStage(
       others.foldLeft(plain)((a, b) => a.union(b.plain)),
-      () => others.foldLeft(indexed)((a, b) => a.union(b.indexed)))
+      () => {
+        val all = ix +: others.map(_.ix)
+        GraftStage.Indexed(all.map(_.plan).reduce(_ union _),
+          all.flatMap(_.splits).distinct.sorted, inOrder = false)
+      })
 
   /** Deterministic round-robin concat — the reference SYNC backend's
     * concat contract (pypeln/sync/stage.py:36-47 `iter_dependencies`,
@@ -188,44 +221,46 @@ final class GraftStage[T](
     * contract: union-all, arrival order.)
     *
     * Spark-first shape: the interleave IS a distributed sort. Each
-    * stage's creation order comes from its indexed plan; the per-stage
-    * ordinal rank from `zipWithIndex` (distributed two-pass count —
-    * same idiom as [[GraftStage.fromDataset]], never a one-partition
-    * window); then elements sort lexicographically by (rank, stage#) —
-    * Spark's range-partitioned Sort, no driver accumulation (the
-    * reference holds every iterator on one thread). Forces the indexed
-    * plans and pays one rank job per input AT CALL TIME (zipWithIndex
-    * computes partition offsets eagerly — same behavior as [[ordered]],
-    * a documented exception to the nothing-runs-before-the-terminal
-    * contract): order-defining by nature — use [[concat]] when arrival
-    * order is acceptable. */
+    * stage is put in creation order (free when it is in order, see
+    * [[ordered]]) and ranked by the same two-pass enumeration as
+    * [[GraftStage.fromDataset]] (never a one-partition window); then
+    * elements sort lexicographically by (rank, stage#) — one exchange
+    * on the rank bounds the enumeration counted, no driver
+    * accumulation (the reference holds every iterator on one thread).
+    * Forces the indexed plans and pays one rank job per input AT CALL
+    * TIME (a documented exception to the nothing-runs-before-the-
+    * terminal contract): order-defining by nature — use [[concat]]
+    * when arrival order is acceptable. */
   def concatRoundRobin(others: GraftStage[T]*)(
       implicit et: Encoder[T], ee: Encoder[Element[T]]): GraftStage[T] = {
     val sess = spark
     val ranked = (this +: others).zipWithIndex.map { case (s, sNo) =>
       val n = sNo.toLong
-      sess.createDataset(
-        s.indexed.orderBy(col("index")).rdd.zipWithIndex.map {
-          case (el, rank) => Element(Seq(rank, n), el.value) })(ee)
+      GraftStage.enumerate(sess, s.ix.sorted.plan.rdd)(
+        (el: Element[T], rank: Long) => Element(Seq(rank, n), el.value))
     }
-    val merged = ranked.reduce(_ union _).orderBy(col("index"))
+    val merged = GraftStage.Indexed(ranked.map(_.plan).reduce(_ union _),
+      ranked.flatMap(_.splits).distinct.sorted, inOrder = false).sorted.plan
     new GraftStage(
       merged.map(_.value),
       // dense re-enumeration of the interleaved order, so downstream
       // ordered/flatMap indexing sees a normal source index space
-      () => sess.createDataset(
-        merged.rdd.zipWithIndex.map { case (el, j) => Element(Seq(j), el.value) })(ee))
+      () => GraftStage.enumerate(sess, merged.rdd)((el: Element[T], j: Long) => Element(Seq(j), el.value)))
   }
 
-  /** Restore source-creation order by sorting on the index path — a
-    * plain Spark `Sort` over `array<bigint>` (range-partitioned, fully
-    * distributed), vs. the reference's accumulate-everything
-    * single-worker insertion sort (pypeln/process/api/ordered.py:12-20,66).
-    * Forces the indexed plan (and the one-time source indexing job).
-    */
+  /** Restore source-creation order (reference:
+    * pypeln/process/api/ordered.py:12-20, an accumulate-everything
+    * single-worker insertion sort). Forces the indexed plan (and the
+    * one-time source indexing job). By the in-order rule (class
+    * header) an in-order stage is returned as its indexed plan: no
+    * exchange, no sort, no job. Any other stage is range-partitioned on
+    * the index head by the source's own partition bounds — known from
+    * the indexing job, so no sampling job runs and every upstream
+    * function still runs once per element — and sorted within
+    * partitions on the full index path. */
   def ordered(implicit et: Encoder[T]): GraftStage[T] = {
-    val sorted = indexed.orderBy(col("index"))
-    new GraftStage(sorted.map(_.value), () => sorted)
+    val sorted = ix.sorted
+    new GraftStage(sorted.plan.map(_.value), () => sorted)
   }
 
   /** Fan-out support: persist so N downstream consumers share one
@@ -235,15 +270,21 @@ final class GraftStage[T](
     * [[QueryCaches]] so a long-lived session can release them after
     * the pipeline's terminal action. */
   def cached: GraftStage[T] =
-    new GraftStage(QueryCaches.track(plain), () => QueryCaches.track(indexed))
+    new GraftStage(QueryCaches.track(plain), () => ix.narrow(QueryCaches.track(_)))
 
-  /** Materialize as a local iterator of values; the `WithIndex` variant
-    * yields full Elements (`return_index=True`,
-    * reference: pypeln/process/api/to_iterable.py:26-53). */
-  def toIterable: Iterator[T] =
-    GraftErrors.unwrapIterator(plain.toLocalIterator().asScala)
-  def toIterableWithIndex: Iterator[Element[T]] =
-    GraftErrors.unwrapIterator(indexed.toLocalIterator().asScala)
+  /** Materialize as a local iterator of values, in partition order;
+    * the `WithIndex` variant yields full Elements (`return_index=True`,
+    * reference: pypeln/process/api/to_iterable.py:26-53). Like the
+    * reference's bounded `maxsize` queue, the drain keeps up to
+    * `sparkContext.defaultParallelism` single-partition jobs running
+    * ahead of the partition being read, so at most that many
+    * undelivered partitions (as serialized rows) are held on the
+    * driver; rows are decoded as the caller pulls them. A failed
+    * partition fails the drain: the user's original exception reaches
+    * the caller no later than that partition's turn, and no job of the
+    * drain is left running. */
+  def toIterable: Iterator[T] = GraftStage.drain(plain)
+  def toIterableWithIndex: Iterator[Element[T]] = GraftStage.drain(indexed)
 
   def collectValues(): Seq[T] = GraftErrors.unwrap(plain.collect().toSeq)
 
@@ -259,10 +300,10 @@ final class GraftStage[T](
     * (reference: pypeln/task/api/to_iterable.py:62-101: the sync
     * source is pumped from an executor thread into a bounded queue and
     * consumed without blocking the event loop; same bridge here). A
-    * daemon producer drains `toLocalIterator` into a `maxsize`-bounded
-    * queue (backpressure: the producer blocks, Spark stops pulling
-    * partitions), and each `next()` returns a Future — the consumer
-    * thread never blocks per element. */
+    * daemon producer drains [[toIterable]] into a `maxsize`-bounded
+    * queue (backpressure: the producer blocks, and the drain submits no
+    * job past its prefetch window), and each `next()` returns a Future
+    * — the consumer thread never blocks per element. */
   def toAsyncIterator(maxsize: Int = 256): GraftStage.AsyncValueIterator[T] =
     new GraftStage.AsyncValueIterator[T](toIterable, maxsize)
 
@@ -275,13 +316,6 @@ final class GraftStage[T](
   /** Pipe composition: `stage |> (_.map(f)) |> (_.filter(p))`
     * (reference: pypeln/utils.py:74-75,87-98 `__or__`/Partial). */
   def |>[B](f: GraftStage[T] => GraftStage[B]): GraftStage[B] = f(this)
-
-  private implicit class RichJIterator[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
 }
 
 object GraftStage {
@@ -384,24 +418,170 @@ object GraftStage {
   /** Source from a local iterable; index `(i)` assigned by enumeration,
     * the creation-order contract of the reference
     * (pypeln/process/api/from_iterable.py:15-22). Indices here are free
-    * (assigned driver-side), so the indexed plan costs no extra job. */
+    * (assigned driver-side), so the indexed plan costs no extra job; a
+    * local relation is scanned in contiguous slices, so it is in order. */
   def fromIterable[T](xs: Iterable[T])(
       implicit spark: SparkSession, et: Encoder[T], ee: Encoder[Element[T]]): GraftStage[T] = {
     val elems = xs.iterator.zipWithIndex.map { case (v, i) => Element(Seq(i.toLong), v) }.toSeq
     val ind = spark.createDataset(elems)
-    new GraftStage(spark.createDataset(xs.toSeq), () => ind)
+    val n = elems.size.toLong
+    val parts = math.max(1L, math.min(n, spark.sparkContext.defaultParallelism.toLong))
+    val splits = (1L until parts).map(j => j * n / parts)
+    new GraftStage(spark.createDataset(xs.toSeq), () => Indexed(ind, splits, inOrder = true))
   }
 
   /** Source from an existing Dataset. The plain plan IS the dataset —
     * scans stay pruned/pushed-down. Creation-order indices are derived
-    * lazily via `zipWithIndex` (one extra job, faithful enumeration —
+    * lazily by [[enumerate]] (one extra job, faithful enumeration —
     * `monotonically_increasing_id` would NOT be: not dense, not
     * creation-ordered across partitions), and only if the pipeline
     * actually demands order (`ordered` / `toIterableWithIndex`). */
   def fromDataset[T](d: Dataset[T])(implicit ee: Encoder[Element[T]]): GraftStage[T] =
-    new GraftStage(d, () =>
-      d.sparkSession.createDataset(
-        d.rdd.zipWithIndex.map { case (v, i) => Element(Seq(i), v) })(ee))
+    new GraftStage(d, () => enumerate(d.sparkSession, d.rdd)((v: T, i: Long) => Element(Seq(i), v)))
+
+  /** A stage's indexed plan and what [[GraftStage.ordered]] needs to
+    * know about it. `splits` are the first source indices of the
+    * source's partitions after the first, ascending and distinct:
+    * range bounds on the index head that need no sampling. `inOrder`
+    * says the plan is still in creation order (the class header's
+    * in-order rule), so sorting it would change nothing. */
+  private[core] final case class Indexed[T](plan: Dataset[Element[T]], splits: Seq[Long], inOrder: Boolean) {
+    /** A partition-preserving step: order survives. */
+    def narrow[B](step: Dataset[Element[T]] => Dataset[Element[B]]): Indexed[B] =
+      Indexed(step(plan), splits, inOrder)
+    /** A step that moves rows between partitions: order is lost. */
+    def shuffled[B](step: Dataset[Element[T]] => Dataset[Element[B]]): Indexed[B] =
+      Indexed(step(plan), splits, inOrder = false)
+    /** This plan in creation order: itself when in order, otherwise one
+      * exchange that sends head `h` to the number of splits `<= h`,
+      * then a sort within each partition on the full index path. */
+    def sorted: Indexed[T] =
+      if (inOrder) this
+      else {
+        val bounds = splits.toArray
+        val part = udf { (head: Long) =>
+          val i = java.util.Arrays.binarySearch(bounds, head)
+          if (i >= 0) i + 1 else -i - 1
+        }
+        Indexed(plan.repartitionById(bounds.length + 1, part(element_at(col("index"), 1)))
+          .sortWithinPartitions(col("index")), splits, inOrder = true)
+      }
+  }
+
+  /** The two-pass enumeration of `zipWithIndex`, keeping its partition
+    * bounds: one job counts the rows of every partition but the last,
+    * then partition p numbers its rows from the sum of the counts before
+    * it. The result is in creation order by construction. */
+  private def enumerate[A, T](spark: SparkSession, rdd: RDD[A])(mk: (A, Long) => Element[T])(
+      implicit ee: Encoder[Element[T]]): Indexed[T] = {
+    val n = rdd.getNumPartitions
+    val counts =
+      if (n <= 1) Array.empty[Long]
+      else rdd.sparkContext.runJob(rdd, (it: Iterator[A]) => it.foldLeft(0L)((c, _) => c + 1), 0 until n - 1)
+    val starts = counts.scanLeft(0L)(_ + _)
+    val numbered = rdd.mapPartitionsWithIndex((p, it) => {
+      var i = starts(p) - 1
+      it.map { a => i += 1; mk(a, i) }
+    }, preservesPartitioning = true)
+    Indexed(spark.createDataset(numbered), starts.toSeq.drop(1).distinct, inOrder = true)
+  }
+
+  /** The drain behind [[GraftStage.toIterable]]: the query is planned and
+    * prepared once inside a SQL execution (as `toLocalIterator` does,
+    * so query-execution listeners see it), then [[Prefetch]] runs one
+    * job per partition, in partition order, each shipping its rows as
+    * serialized `UnsafeRow` bytes that are decoded through the
+    * Dataset's encoder as the caller pulls them. */
+  private def drain[A](ds: Dataset[A]): Iterator[A] = GraftErrors.unwrap {
+    val qe = ds.queryExecution
+    val sc = ds.sparkSession.sparkContext
+    val fromRow = encoderFor(ds.encoder).resolveAndBind(qe.analyzed.output).createDeserializer()
+    val numFields = qe.analyzed.output.length
+    val (rdd, tags) = SQLExecution.withNewExecutionId(qe, Some("toIterable")) {
+      qe.executedPlan.resetMetrics()
+      (qe.executedPlan.execute().mapPartitions(rowBytes), sc.getJobTags())
+    }
+    new Prefetch(rdd, tags, math.max(1, sc.defaultParallelism))
+      .flatMap(bytes => decodeRows(bytes, numFields).map(fromRow(_)))
+  }
+
+  /** One partition's rows as `size, bytes` records ending in size -1. */
+  private def rowBytes(rows: Iterator[InternalRow]): Iterator[Array[Byte]] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.DataOutputStream(bytes)
+    val buf = new Array[Byte](4096)
+    rows.foreach { r =>
+      val row = r.asInstanceOf[UnsafeRow]
+      out.writeInt(row.getSizeInBytes)
+      row.writeToStream(out, buf)
+    }
+    out.writeInt(-1)
+    out.close()
+    Iterator.single(bytes.toByteArray)
+  }
+
+  /** Reads [[rowBytes]] back, one row over the shared array at a time. */
+  private def decodeRows(bytes: Array[Byte], numFields: Int): Iterator[InternalRow] = new Iterator[InternalRow] {
+    private val in = java.nio.ByteBuffer.wrap(bytes)
+    private val row = new UnsafeRow(numFields)
+    private var rowSize = in.getInt()
+    def hasNext: Boolean = rowSize >= 0
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("end of partition")
+      row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + in.position(), rowSize)
+      in.position(in.position() + rowSize)
+      rowSize = in.getInt()
+      row
+    }
+  }
+
+  private val firstResult: Iterator[Array[Byte]] => Array[Byte] = _.next()
+
+  /** The results of `rdd`'s one-element partitions in partition order,
+    * with up to `window` partition jobs submitted ahead of the one
+    * being read: pypeln's bounded `maxsize` queue. Jobs are submitted
+    * from the reading thread, so they carry its job group, description
+    * and job tags, plus `tags` (the session's tags, which Spark applies
+    * only inside a SQL execution). A task failure fails every job in
+    * flight over `rdd` (the scheduler aborts all active jobs that
+    * depend on the failed stage's RDD); whatever else fails the wait
+    * cancels the jobs still in flight before the user exception is
+    * rethrown. */
+  private final class Prefetch(rdd: RDD[Array[Byte]], tags: Set[String], window: Int)
+      extends Iterator[Array[Byte]] {
+    private val sc = rdd.sparkContext
+    private val inFlight = scala.collection.mutable.Queue.empty[FutureAction[Array[Byte]]]
+    private var submitted = 0
+
+    private def fill(): Unit =
+      while (inFlight.size < window && submitted < rdd.getNumPartitions) {
+        val extra = tags -- sc.getJobTags()
+        sc.addJobTags(extra)
+        val slot = new java.util.concurrent.atomic.AtomicReference[Array[Byte]]()
+        try inFlight.enqueue(sc.submitJob(rdd, firstResult, Seq(submitted),
+          (_: Int, b: Array[Byte]) => slot.set(b), slot.get()))
+        finally sc.removeJobTags(extra)
+        submitted += 1
+      }
+
+    def hasNext: Boolean = { fill(); inFlight.nonEmpty }
+
+    def next(): Array[Byte] = {
+      if (!hasNext) throw new NoSuchElementException("drain exhausted")
+      val bytes =
+        try Await.result(inFlight.dequeue(), Duration.Inf)
+        catch {
+          case e: Throwable =>
+            inFlight.foreach(_.cancel())
+            inFlight.foreach(f => scala.util.Try(Await.ready(f, Duration.Inf)))
+            inFlight.clear()
+            submitted = rdd.getNumPartitions
+            throw GraftErrors.userCause(e)
+        }
+      fill()
+      bytes
+    }
+  }
 
   /** Column filter on an indexed plan: flatten value-struct fields so the
     * caller's Column resolves by payload field name, filter, re-nest.
@@ -420,25 +600,40 @@ object GraftStage {
     }
   }
 
-  /** Elements dropped by [[GraftStage.mapAsync]] timeout expiry in THIS
-    * JVM — drop-on-timeout must never be silent data loss (round-4
-    * advice: the finite default timeout + silent drop could lose
-    * elements invisibly). Each drop is also logged at WARN. On a
-    * cluster every executor counts its own drops (the counter does not
-    * flow back to the driver — watch executor logs/metrics there). */
-  private val asyncDropped = new java.util.concurrent.atomic.LongAdder
-  def asyncDroppedCount: Long = asyncDropped.sum()
+  /** Elements dropped by [[GraftStage.mapAsync]] timeout expiry —
+    * drop-on-timeout must never be silent data loss (the finite default
+    * timeout + silent drop could lose elements invisibly). Each drop is
+    * logged at WARN on its executor and counted in a `LongAccumulator`
+    * registered on the driver, one per SparkContext, so the driver
+    * reads every executor's drops once their tasks finish. */
+  private var dropped: Option[(SparkContext, LongAccumulator)] = None
+  private var droppedEarlier = 0L // counted under SparkContexts since replaced
+
+  private[graft] def droppedAccumulator(sc: SparkContext): LongAccumulator = synchronized {
+    dropped match {
+      case Some((c, acc)) if c eq sc => acc
+      case old =>
+        droppedEarlier += old.fold(0L)(_._2.sum)
+        val acc = sc.longAccumulator("graft.mapAsync.dropped")
+        dropped = Some((sc, acc))
+        acc
+    }
+  }
+
+  /** Driver-side total of [[GraftStage.mapAsync]] timeout drops. */
+  def asyncDroppedCount: Long = synchronized(droppedEarlier + dropped.fold(0L)(_._2.sum))
   private lazy val asyncLog = org.slf4j.LoggerFactory.getLogger("graft.core.GraftStage")
 
   /** Bounded in-flight async window over a partition iterator — the
     * shared engine of batch [[GraftStage.mapAsync]] and streaming
     * `GraftStream.mapAsync`. Keeps ≤ n Futures outstanding, drains in
-    * submission order, drops elements whose Future exceeds `t`
+    * submission order, drops elements whose Future exceeds `t` (counted
+    * in `dropped`)
     * (reference task-backend semantics: semaphore-bounded TaskPool +
     * asyncio.wait_for, task/worker.py:225-255). */
   private[graft] def asyncWindowIterator[A, B, C](
       iter: Iterator[A], n: Int, t: Duration,
-      submit: A => Future[B], mk: (A, B) => C): Iterator[C] = {
+      submit: A => Future[B], mk: (A, B) => C, dropped: LongAccumulator): Iterator[C] = {
     val window = new scala.collection.mutable.Queue[(A, Future[B])]()
     new Iterator[C] {
       private var pending: Option[C] = None
@@ -453,8 +648,8 @@ object GraftStage {
           try pending = Some(mk(a, Await.result(fut, t)))
           catch {
             case _: TimeoutException => // drop on timeout — counted, never silent
-              asyncDropped.increment()
-              asyncLog.warn(s"mapAsync dropped an element after $t (total dropped in this JVM: ${asyncDropped.sum()})")
+              dropped.add(1)
+              asyncLog.warn(s"mapAsync dropped an element after $t")
           }
         }
       }
@@ -584,11 +779,6 @@ object GraftErrors {
 
   def unwrap[A](body: => A): A =
     try body catch { case e: Throwable if isEngine(e) => throw userCause(e) }
-
-  def unwrapIterator[A](it: Iterator[A]): Iterator[A] = new Iterator[A] {
-    def hasNext: Boolean = unwrap(it.hasNext)
-    def next(): A = unwrap(it.next())
-  }
 }
 
 /** `to_stage`-style implicit coercions (reference:

@@ -150,8 +150,8 @@ object ParityOps {
   }
 
   /** to_iterable with return_index=True: the stage is materialized
-    * through `toIterableWithIndex` (a real `toLocalIterator` pull — the
-    * reference's sink-to-iterator, to_iterable.py:26-53), consumed on
+    * through `toIterableWithIndex` (a real partition-by-partition drain
+    * — the reference's sink-to-iterator, to_iterable.py:26-53), consumed on
     * the driver, and the consumed Elements re-parallelized so the
     * oracle can check both values AND indices. Driver-bounded by
     * construction (25-row nation) — to_iterable is the one pypeln

@@ -61,10 +61,12 @@ final class GraftStream[T](val ds: Dataset[T]) {
     * `GraftStage.asyncEc` inside the lambda. */
   def mapAsync[B](f: T => scala.concurrent.Future[B], workers: Int = 8,
       timeout: scala.concurrent.duration.Duration = graft.core.GraftStage.DefaultAsyncTimeout)(
-      implicit eb: Encoder[B]): GraftStream[B] =
+      implicit eb: Encoder[B]): GraftStream[B] = {
+    val dropped = graft.core.GraftStage.droppedAccumulator(ds.sparkSession.sparkContext)
     new GraftStream(ds.mapPartitions(it =>
       graft.core.GraftStage.asyncWindowIterator(
-        it, math.max(1, workers), timeout, f, (_: T, b: B) => b)))
+        it, math.max(1, workers), timeout, f, (_: T, b: B) => b, dropped)))
+  }
 
   /** Union-all of streams; micro-batches interleave as they arrive,
     * order not preserved — the concurrent-backend concat contract

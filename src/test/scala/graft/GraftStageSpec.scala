@@ -2,8 +2,15 @@ package graft
 
 import graft.core.{Element, GraftStage, WorkerInfo}
 import graft.core.GraftImplicits._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd, StageInfo}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.util.concurrent.atomic.AtomicInteger
@@ -24,6 +31,64 @@ object Counters {
 final class GraftUserError(msg: String) extends RuntimeException(msg)
 
 final case class KV(k: Long, s: String)
+
+/** One call counter per user function of [[GraftStageSpec]]'s
+  * exactly-once chain. */
+final case class Calls(each: LongAccumulator, map: LongAccumulator, async: LongAccumulator,
+    filter: LongAccumulator, flatMap: LongAccumulator) {
+  def all: Seq[Long] = Seq(each, map, async, filter, flatMap).map(_.sum)
+}
+
+/** The jobs a SparkContext ran, as its listener bus reports them: each
+  * job's local properties and stages, and which stages ran result
+  * tasks. A RangePartitioner's bounds come from a sampling job: a result
+  * stage that computes an Exchange's input (an Exchange-scoped
+  * MapPartitionsRDD), which no other job has. */
+final class JobLog extends SparkListener {
+  private val started = scala.collection.mutable.Map.empty[Int, (java.util.Properties, Seq[StageInfo])]
+  private val ended = scala.collection.mutable.Set.empty[Int]
+  private val resultStages = scala.collection.mutable.Set.empty[Int]
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    synchronized(started(e.jobId) = (e.properties, e.stageInfos))
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized(ended += e.jobId)
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    synchronized(if (e.taskType == "ResultTask") resultStages += e.stageId)
+
+  /** Waits until every started job has ended and no new job came for
+    * a few polls (listener events arrive asynchronously). */
+  def settle(): Unit = {
+    val deadline = System.nanoTime() + 30000000000L
+    var quiet = 0
+    var last = -1
+    while (quiet < 3 && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      val (n, done) = synchronized((started.size, started.keySet.subsetOf(ended)))
+      if (done && n == last) quiet += 1 else quiet = 0
+      last = n
+    }
+  }
+
+  /** Local properties of the jobs run under job group `group`. */
+  def inGroup(group: String): Seq[java.util.Properties] = synchronized {
+    started.values.map(_._1).filter(p => p != null && p.getProperty("spark.jobGroup.id") == group).toSeq
+  }
+
+  def samplingJobs(group: String): Int = synchronized {
+    started.values.count { case (p, stages) =>
+      p != null && p.getProperty("spark.jobGroup.id") == group && stages.exists(s =>
+        resultStages(s.stageId) &&
+          s.rddInfos.exists(r => r.name == "MapPartitionsRDD" && r.scope.exists(_.name == "Exchange")))
+    }
+  }
+}
+
+object PlanShape extends AdaptiveSparkPlanHelper {
+  /** (shuffle exchanges, sorts) in `ds`'s physical plan. */
+  def apply(ds: Dataset[_]): (Int, Int) = {
+    val p = ds.queryExecution.executedPlan
+    (collect(p) { case e: ShuffleExchangeExec => e }.size, collect(p) { case s: SortExec => s }.size)
+  }
+}
 
 /** Operator tests vs Scala-collection oracles, mirroring the reference's
   * property tests (pypeln/process/api/map_process_test.py:14-42) and
@@ -450,5 +515,162 @@ class GraftStageSpec extends AnyFunSuite {
     val src = () => Future.successful(if (it.hasNext) Some(it.next()) else None)
     val back = GraftStage.fromAsyncIterator(src, maxsize = 2).toAsyncIterator(maxsize = 2)
     assert(Await.result(back.toSeq, 60.seconds) == xs)
+  }
+
+  /** Runs `body` with `log` registered and the thread's job group set
+    * to `group`. */
+  private def logged[A](group: String, log: JobLog)(body: => A): A = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(log)
+    sc.setJobGroup(group, group)
+    try body
+    finally { sc.clearJobGroup(); log.settle(); sc.removeSparkListener(log) }
+  }
+
+  private def calls(): Calls = {
+    val sc = spark.sparkContext
+    Calls(sc.longAccumulator, sc.longAccumulator, sc.longAccumulator, sc.longAccumulator, sc.longAccumulator)
+  }
+
+  /** Every user-function kind once per element; doubles the values. */
+  private def chain(s: GraftStage[Long], c: Calls): GraftStage[Long] =
+    s.each(_ => c.each.add(1))
+      .map { x => c.map.add(1); x * 2 }
+      .mapAsync(x => { c.async.add(1); Future.successful(x) }, workers = 4)
+      .filter { _ => c.filter.add(1); true }
+      .flatMap { x => c.flatMap.add(1); Seq(x) }
+
+  private def range(from: Long, until: Long, parts: Int): GraftStage[Long] =
+    GraftStage.fromDataset(spark.range(from, until, 1, parts).as[Long])
+
+  test("ordered: each user function runs once per element under ordered.toIterable and ordered.collectValues") {
+    val ids = (0L until 200L) ++ (1000L until 1100L)
+    val shapes: Seq[(String, () => GraftStage[Long], Option[Seq[Long]])] = Seq(
+      ("fromDataset, 4 partitions", () => range(0, 200, 4), Some((0L until 200L).map(_ * 2))),
+      ("mapEx(workers = 3)", () => range(0, 200, 4).mapEx[Null, Long]((x, _) => x, workers = 3),
+        Some((0L until 200L).map(_ * 2))),
+      ("concat", () => range(0, 200, 4).concat(range(1000, 1100, 2)), None))
+    for ((name, source, want) <- shapes; terminal <- Seq("toIterable", "collectValues")) {
+      val c = calls()
+      val ordered = chain(source(), c).ordered
+      val got = if (terminal == "toIterable") ordered.toIterable.toSeq else ordered.collectValues()
+      val rows = if (name == "concat") ids.size else 200
+      assert(c.all == Seq.fill(5)(rows.toLong), s"$name, $terminal: calls per function (each, map, mapAsync, filter, flatMap)")
+      want match {
+        case Some(w) => assert(got == w, s"$name, $terminal: order")
+        case None => assert(got.sorted == ids.map(_ * 2).sorted, s"$name, $terminal: values")
+      }
+    }
+  }
+
+  test("ordered: free on an in-order stage; one exchange after mapEx(workers); no sampling job") {
+    val inOrder = chain(range(0, 400, 4), calls())
+    assert(PlanShape(inOrder.indexed) == ((0, 0)))
+    assert(PlanShape(inOrder.ordered.indexed) == ((0, 0)), "ordered on an in-order stage adds no exchange or sort")
+    assert(PlanShape(inOrder.ordered.plain) == ((0, 0)))
+    val shuffled = chain(range(0, 400, 4).mapEx[Null, Long]((x, _) => x, workers = 3), calls())
+    val (exchanges, _) = PlanShape(shuffled.indexed)
+    assert(PlanShape(shuffled.ordered.indexed)._1 == exchanges + 1, "ordered after mapEx(workers) adds one exchange")
+    for ((name, s) <- Seq("in-order" -> inOrder, "shuffled" -> shuffled)) {
+      val log = new JobLog
+      val got = logged(s"ordered-$name", log)(chain(s, calls()).ordered.toIterable.toSeq)
+      assert(got == (0L until 400L).map(_ * 4), name)
+      assert(log.inGroup(s"ordered-$name").nonEmpty)
+      assert(log.samplingJobs(s"ordered-$name") == 0, s"$name: a sampling job ran")
+    }
+  }
+
+  test("toIterable: taking one element submits at most defaultParallelism + 1 partition jobs") {
+    val dp = spark.sparkContext.defaultParallelism
+    val parts = 3 * dp + 2
+    val log = new JobLog
+    val it = logged("prefetch-window", log) {
+      val it = range(0, parts * 10L, parts).map(_ + 1).toIterable
+      assert(it.next() == 1L)
+      it
+    }
+    val jobs = log.inGroup("prefetch-window").size
+    assert(jobs >= 1 && jobs <= dp + 1, s"$jobs jobs submitted for one element, window $dp")
+    assert((1L +: it.toSeq) == (1L to parts * 10L))
+  }
+
+  test("toIterable: a failing partition surfaces the user exception and cancels the jobs in flight") {
+    val tracker = spark.sparkContext.statusTracker
+    // partitions after 3 run until cancelled (a killed task's context
+    // reads interrupted) or for 30 s
+    val st = range(0, 80, 8).map { x =>
+      val tc = TaskContext.get()
+      if (tc.partitionId() == 3) throw new GraftUserError("partition 3")
+      val end = System.nanoTime() + 30000000000L
+      while (tc.partitionId() > 3 && !tc.isInterrupted() && System.nanoTime() < end) Thread.sleep(20)
+      x
+    }
+    val t0 = System.nanoTime()
+    val got = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // the failure fails every job in flight over the same plan, so it may
+    // reach the caller before partitions 0-2 are read, never after
+    val e = intercept[GraftUserError](st.toIterable.foreach(got += _))
+    assert(e.getMessage == "partition 3")
+    assert(got == (0L until got.size.toLong) && got.size <= 30, got)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 20.0, f"the caller waited $secs%.1f s for the running partitions")
+    val deadline = System.nanoTime() + 10000000000L
+    while (tracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(tracker.getActiveJobIds.isEmpty,
+      s"jobs ${tracker.getActiveJobIds.mkString(",")} still active after the failure")
+  }
+
+  test("toIterable: drain jobs carry the caller's job group and tags; one query-execution success per drain") {
+    val sc = spark.sparkContext
+    val successes = new AtomicInteger(0)
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = successes.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    sc.addJobTag("graft-drain-tag")
+    spark.addTag("graft-session-tag")
+    val log = new JobLog
+    try {
+      val st = range(0, 60, 6).map(_ * 3)
+      val got = logged("drain-attribution", log)(Seq(st.toIterable.toSeq, st.toIterable.toSeq))
+      assert(got == Seq.fill(2)((0L until 60L).map(_ * 3)))
+      val deadline = System.nanoTime() + 10000000000L
+      while (successes.get() < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(300)
+      assert(successes.get() == 2, "one onSuccess per drain")
+    } finally {
+      spark.listenerManager.unregister(qel)
+      sc.removeJobTag("graft-drain-tag")
+      spark.removeTag("graft-session-tag")
+    }
+    val jobs = log.inGroup("drain-attribution")
+    assert(jobs.size == 12, "one job per partition per drain")
+    jobs.foreach { p =>
+      val tags = Option(p.getProperty("spark.job.tags")).toSeq.flatMap(_.split(","))
+      assert(tags.contains("graft-drain-tag"), tags)
+      assert(tags.exists(_.endsWith("graft-session-tag")), tags)
+    }
+  }
+
+  test("mapAsync: timeout drops reach the driver through an accumulator, one per injected hang") {
+    val hangs = Set(0, 5, 10, 15)
+    val fromTasks = new java.util.concurrent.atomic.AtomicLong(0)
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        e.taskInfo.accumulables.filter(_.name.contains("graft.mapAsync.dropped"))
+          .foreach(a => fromTasks.addAndGet(a.update.fold(0L)(_.asInstanceOf[Long])))
+    }
+    val log = new JobLog
+    val before = GraftStage.asyncDroppedCount
+    spark.sparkContext.addSparkListener(l)
+    val got = try logged("async-drops", log)((0 until 20).toStage
+      .mapAsync(x => if (hangs(x)) Promise[Int]().future else Future.successful(x),
+        workers = 4, timeout = 200.millis)
+      .collectValues())
+    finally spark.sparkContext.removeSparkListener(l)
+    assert(got.sorted == (0 until 20).filterNot(hangs))
+    assert(GraftStage.asyncDroppedCount - before == hangs.size)
+    assert(fromTasks.get() == hangs.size, "drops are shipped to the driver in task results")
   }
 }
