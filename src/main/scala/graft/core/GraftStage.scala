@@ -43,7 +43,7 @@ final case class WorkerInfo(index: Int, numWorkers: Int, stageId: Int, attempt: 
   *   - `indexed: Dataset[Element[T]]` — the creation-order path,
   *     materialized ON DEMAND (first use of `ordered` /
   *     `toIterableWithIndex` / `indexedDF`). Source indices come from a
-  *     two-pass enumeration like `zipWithIndex` (one counting job — the
+  *     counting [[PrefixScan]] over the source (one counting job — the
   *     price of the reference's enumeration contract,
   *     pypeln/process/api/from_iterable.py:15-22), paid only when
   *     something downstream actually consumes indices.
@@ -89,7 +89,8 @@ final class GraftStage[T] private (
     new GraftStage(plain.map(f), () => ix.narrow(_.map(el => Element(el.index, f(el.value)))))
 
   /** `map` with the full reference option surface: `workers` (partition
-    * fan-out), per-element `timeout` (drop on expiry), `onStart`/`onDone`
+    * fan-out), per-element `timeout` (drop on expiry, counted on the
+    * driver in [[GraftStage.asyncDroppedCount]]), `onStart`/`onDone`
     * per-worker lifecycle with resource injection
     * (reference: pypeln/process/api/map.py:115-126, docs/advanced.md:87-124).
     */
@@ -99,6 +100,7 @@ final class GraftStage[T] private (
       timeout: Duration = Duration.Zero,
       onStart: WorkerInfo => S = (_: WorkerInfo) => null.asInstanceOf[S],
       onDone: S => Unit = (_: S) => ())(implicit eb: Encoder[B], ee: Encoder[Element[B]]): GraftStage[B] = {
+    val dropped = GraftStage.droppedAccumulator(spark.sparkContext)
     def run[A, C](d: Dataset[A], g: (A, S) => Option[C])(implicit e: Encoder[C]): Dataset[C] = {
       val in = if (workers > 0) d.repartition(workers) else d
       val t = timeout
@@ -114,7 +116,9 @@ final class GraftStage[T] private (
           // The attempt is cancelled with interrupt — cooperative user
           // code stops; non-interruptible code is abandoned on its
           // (daemon) scratch thread so it can't wedge the task.
-          GraftStage.withTimeout(t)(g(a, state)).flatten
+          val r = GraftStage.withTimeout(t)(g(a, state))
+          if (r.isEmpty) GraftStage.countDrop(dropped, "mapEx", t)
+          r.flatten
         }
       }
     }
@@ -222,21 +226,24 @@ final class GraftStage[T] private (
     *
     * Spark-first shape: the interleave IS a distributed sort. Each
     * stage is put in creation order (free when it is in order, see
-    * [[ordered]]) and ranked by the same two-pass enumeration as
+    * [[ordered]]), persisted through [[QueryCaches.track]] (so its user
+    * functions run once per element although the rank scan reads it
+    * twice) and ranked by the same counting [[PrefixScan]] as
     * [[GraftStage.fromDataset]] (never a one-partition window); then
     * elements sort lexicographically by (rank, stage#) — one exchange
-    * on the rank bounds the enumeration counted, no driver
-    * accumulation (the reference holds every iterator on one thread).
-    * Forces the indexed plans and pays one rank job per input AT CALL
-    * TIME (a documented exception to the nothing-runs-before-the-
-    * terminal contract): order-defining by nature — use [[concat]]
-    * when arrival order is acceptable. */
+    * on the rank bounds the scan counted, no driver accumulation (the
+    * reference holds every iterator on one thread). Forces the indexed
+    * plans and pays one rank job per input AT CALL TIME (a documented
+    * exception to the nothing-runs-before-the-terminal contract):
+    * order-defining by nature — use [[concat]] when arrival order is
+    * acceptable. The persisted inputs are freed by
+    * [[QueryCaches.release]], like [[cached]] stages. */
   def concatRoundRobin(others: GraftStage[T]*)(
       implicit et: Encoder[T], ee: Encoder[Element[T]]): GraftStage[T] = {
     val sess = spark
     val ranked = (this +: others).zipWithIndex.map { case (s, sNo) =>
       val n = sNo.toLong
-      GraftStage.enumerate(sess, s.ix.sorted.plan.rdd)(
+      GraftStage.enumerate(sess, QueryCaches.track(s.ix.sorted.plan).rdd)(
         (el: Element[T], rank: Long) => Element(Seq(rank, n), el.value))
     }
     val merged = GraftStage.Indexed(ranked.map(_.plan).reduce(_ union _),
@@ -432,7 +439,8 @@ object GraftStage {
 
   /** Source from an existing Dataset. The plain plan IS the dataset —
     * scans stay pruned/pushed-down. Creation-order indices are derived
-    * lazily by [[enumerate]] (one extra job, faithful enumeration —
+    * lazily by a counting [[PrefixScan]] (one extra job over the
+    * source, faithful enumeration —
     * `monotonically_increasing_id` would NOT be: not dense, not
     * creation-ordered across partitions), and only if the pipeline
     * actually demands order (`ordered` / `toIterableWithIndex`). */
@@ -468,21 +476,13 @@ object GraftStage {
       }
   }
 
-  /** The two-pass enumeration of `zipWithIndex`, keeping its partition
-    * bounds: one job counts the rows of every partition but the last,
-    * then partition p numbers its rows from the sum of the counts before
-    * it. The result is in creation order by construction. */
+  /** `rdd` numbered from 0 in partition order by a counting
+    * [[PrefixScan]] (so `rdd` must be a source or persisted), keeping
+    * the partition bounds as `splits`. The result is in creation order
+    * by construction. */
   private def enumerate[A, T](spark: SparkSession, rdd: RDD[A])(mk: (A, Long) => Element[T])(
       implicit ee: Encoder[Element[T]]): Indexed[T] = {
-    val n = rdd.getNumPartitions
-    val counts =
-      if (n <= 1) Array.empty[Long]
-      else rdd.sparkContext.runJob(rdd, (it: Iterator[A]) => it.foldLeft(0L)((c, _) => c + 1), 0 until n - 1)
-    val starts = counts.scanLeft(0L)(_ + _)
-    val numbered = rdd.mapPartitionsWithIndex((p, it) => {
-      var i = starts(p) - 1
-      it.map { a => i += 1; mk(a, i) }
-    }, preservesPartitioning = true)
+    val (numbered, starts) = PrefixScan(rdd, 0L)((n, _) => n + 1, _ + _)((a, n) => mk(a, n - 1))
     Indexed(spark.createDataset(numbered), starts.toSeq.drop(1).distinct, inOrder = true)
   }
 
@@ -600,7 +600,8 @@ object GraftStage {
     }
   }
 
-  /** Elements dropped by [[GraftStage.mapAsync]] timeout expiry —
+  /** Elements dropped by [[GraftStage.mapAsync]] and
+    * [[GraftStage.mapEx]] timeout expiry —
     * drop-on-timeout must never be silent data loss (the finite default
     * timeout + silent drop could lose elements invisibly). Each drop is
     * logged at WARN on its executor and counted in a `LongAccumulator`
@@ -620,9 +621,18 @@ object GraftStage {
     }
   }
 
-  /** Driver-side total of [[GraftStage.mapAsync]] timeout drops. */
+  /** Driver-side total of timeout drops, [[GraftStage.mapAsync]] and
+    * [[GraftStage.mapEx]] together (one accumulator, named
+    * `graft.mapAsync.dropped`, for both). */
   def asyncDroppedCount: Long = synchronized(droppedEarlier + dropped.fold(0L)(_._2.sum))
   private lazy val asyncLog = org.slf4j.LoggerFactory.getLogger("graft.core.GraftStage")
+
+  /** Counts one timed-out element of operator `op` in `dropped` and logs
+    * it at WARN on the executor. */
+  private def countDrop(dropped: LongAccumulator, op: String, t: Duration): Unit = {
+    dropped.add(1)
+    asyncLog.warn(s"$op dropped an element after $t")
+  }
 
   /** Bounded in-flight async window over a partition iterator — the
     * shared engine of batch [[GraftStage.mapAsync]] and streaming
@@ -647,9 +657,7 @@ object GraftStage {
           val (a, fut) = window.dequeue()
           try pending = Some(mk(a, Await.result(fut, t)))
           catch {
-            case _: TimeoutException => // drop on timeout — counted, never silent
-              dropped.add(1)
-              asyncLog.warn(s"mapAsync dropped an element after $t")
+            case _: TimeoutException => countDrop(dropped, "mapAsync", t) // counted, never silent
           }
         }
       }

@@ -1,10 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.{PrefixScan, QueryCaches}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructField, StructType}
+
+import scala.reflect.ClassTag
 
 /** Skew-mitigation helpers for the joins AQE can't fix on its own.
   *
@@ -68,103 +72,39 @@ object SkewOps {
 
   /** EXACT global running total (rank + cumulative sum of `valCol` in
     * `sortCols` order) with NO single-partition window — the classic
-    * distributed prefix-sum: range-partition + local sort, then ONE
-    * bounded collect of per-partition totals (numShufflePartitions
-    * longs — the kmeans-centroid scalar-sync shape), prefix them on
-    * the driver, broadcast the offsets back, and each partition adds
-    * its offset to a local running sum. Two passes over the sorted
-    * relation (persisted between them, released by the caller's query
-    * scope). `ntile OVER (ORDER BY …)`'s cumulative cousin: powers
+    * distributed prefix-sum, a [[scanSorted]] under (count, sum): one
+    * bounded job of per-partition totals, prefixed on the driver, and
+    * each partition adds its offset to a local running sum. Appends
+    * `rankCol` (1-based) and the inclusive `cumCol`.
+    * `ntile OVER (ORDER BY …)`'s cumulative cousin: powers
     * Pareto/coverage queries (`events_power_users`) at any row count.
     * `valCol` must be LongType. */
   def globalCumSum(df: DataFrame, sortCols: Seq[String], valCol: String,
       rankCol: String = "_rk", cumCol: String = "_cum",
       partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val np = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val cols = sortCols.map(col)
-    val sorted = graft.core.QueryCaches.track(
-      df.repartitionByRange(np, cols: _*).sortWithinPartitions(cols: _*))
-    val vIdx = sorted.schema.fieldIndex(valCol)
-    // pass 1: per-partition (count, sum) — np rows to the driver
-    val partAgg = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var n = 0L; var s = 0L
-      it.foreach { r => n += 1; s += r.getLong(vIdx) }
-      Iterator((pid, n, s))
-    }.collect().sortBy(_._1)
-    val nParts = partAgg.length
-    val rankOff = new Array[Long](nParts + 1)
-    val cumOff = new Array[Long](nParts + 1)
-    partAgg.foreach { case (pid, n, s) =>
-      rankOff(pid + 1) = n; cumOff(pid + 1) = s
-    }
-    for (i <- 1 to nParts) { rankOff(i) += rankOff(i - 1); cumOff(i) += cumOff(i - 1) }
-    val schema = StructType(sorted.schema.fields ++ Seq(
-      StructField(rankCol, LongType, nullable = false),
-      StructField(cumCol, LongType, nullable = false)))
-    // pass 2: local prefix + broadcast offsets
-    val withCum = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var rk = rankOff(pid); var cum = cumOff(pid)
-      it.map { r =>
-        rk += 1; cum += r.getLong(vIdx)
-        Row.fromSeq(r.toSeq ++ Seq(rk, cum))
-      }
-    }
-    sorted.sparkSession.createDataFrame(withCum, schema)
+    val v = df.schema.fieldIndex(valCol)
+    scanSorted(df, sortCols, partitions, Seq(rankCol, cumCol), (0L, 0L))(
+      (s, r) => (s._1 + 1, s._2 + r.getLong(v)), (a, b) => (a._1 + b._1, a._2 + b._2))(s => Seq(s._1, s._2))
   }
 
   /** Distributed running MAX over a global sort order — the prefix
-    * cousin of [[globalCumSum]] with the same two-pass shape: range
-    * partition on `sortCols`, per-partition maxima to the driver
-    * (numPartitions longs — a bounded scalar sync), prefix-max the
-    * offsets, broadcast back, local running max per partition. MAX is
-    * associative and idempotent, so the composition equals the
-    * sequential `MAX(v) OVER (ORDER BY …)` exactly — the window this
-    * helper exists to avoid serializing onto one task. Powers
-    * out-of-orderness audits (`events_lateness`): "has any EARLIER row
-    * a larger v" is a prefix-max compare. `valCol` must be LongType. */
+    * cousin of [[globalCumSum]], a [[scanSorted]] under max seeded with
+    * `Long.MinValue`. MAX is associative and idempotent, so the
+    * composition equals the sequential `MAX(v) OVER (ORDER BY …)`
+    * exactly — the window this helper exists to avoid serializing onto
+    * one task. Powers out-of-orderness audits (`events_lateness`): "has
+    * any EARLIER row a larger v" is a prefix-max compare. Appends the
+    * inclusive `cumCol`. `valCol` must be LongType. */
   def globalCumMax(df: DataFrame, sortCols: Seq[String], valCol: String,
       cumCol: String = "_cmax", partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val np = if (partitions > 0) partitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    val cols = sortCols.map(col)
-    val sorted = graft.core.QueryCaches.track(
-      df.repartitionByRange(np, cols: _*).sortWithinPartitions(cols: _*))
-    val vIdx = sorted.schema.fieldIndex(valCol)
-    val partMax = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var m = Long.MinValue
-      it.foreach { r => val v = r.getLong(vIdx); if (v > m) m = v }
-      Iterator((pid, m))
-    }.collect().sortBy(_._1)
-    val nParts = partMax.length
-    // offset(p) = max over all partitions strictly before p
-    val maxOff = new Array[Long](nParts + 1)
-    maxOff(0) = Long.MinValue
-    partMax.foreach { case (pid, m) => maxOff(pid + 1) = m }
-    for (i <- 1 to nParts)
-      if (maxOff(i - 1) > maxOff(i)) maxOff(i) = maxOff(i - 1)
-    val schema = StructType(sorted.schema.fields :+
-      StructField(cumCol, LongType, nullable = false))
-    val withMax = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var m = maxOff(pid)
-      it.map { r =>
-        val v = r.getLong(vIdx); if (v > m) m = v
-        Row.fromSeq(r.toSeq :+ m)
-      }
-    }
-    sorted.sparkSession.createDataFrame(withMax, schema)
+    val v = df.schema.fieldIndex(valCol)
+    scanSorted(df, sortCols, partitions, Seq(cumCol), Long.MinValue)(
+      (m, r) => math.max(m, r.getLong(v)), (a, b) => math.max(a, b))(Seq(_))
   }
 
-  /** EXACT global row_number WITHOUT the single-partition window —
-    * the two-job distributed rank: `repartitionByRange` on the sort
-    * key gives ordered, disjoint partitions; `sortWithinPartitions`
-    * orders inside each; `zipWithIndex` (one count job + one map job,
-    * no extra shuffle) assigns the contiguous global index. Appended
-    * as `outCol` (1-based, LongType).
+  /** EXACT global row_number WITHOUT the single-partition window — a
+    * [[scanSorted]] under count, appended as `outCol` (1-based,
+    * LongType).
     *
     * Exactness caveat, same shape as every rank: rows TIED on the full
     * sort key receive an arbitrary-but-valid permutation of their rank
@@ -172,39 +112,39 @@ object SkewOps {
     * boundaries). Any aggregate invariant under tie permutation —
     * equal-size bucket cuts over fully-determined rows (q_zorder),
     * counts, min/max — is exact; a consumer that needs a DETERMINISTIC
-    * winner inside tie groups must put a total key in `sortCols`.
-    *
-    * Cost: the RDD detour deserializes rows once (the
-    * [[graft.core.GraftStage.concatRoundRobin]] precedent — eager,
-    * documented); at any scale this is 2 jobs + the one range
-    * exchange, vs the window form's everything-through-one-task. */
+    * winner inside tie groups must put a total key in `sortCols`. */
   def globalRank(df: DataFrame, sortCols: Seq[String],
-      outCol: String = "_rk", partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      outCol: String = "_rk", partitions: Int = 0): DataFrame =
+    scanSorted(df, sortCols, partitions, Seq(outCol), 0L)((n, _) => n + 1, _ + _)(Seq(_))
+
+  /** The shape behind the global rank, running sum and running max:
+    * `repartitionByRange` on `sortCols` into `partitions` (default the
+    * session's shuffle partitions) gives ordered, disjoint partitions,
+    * `sortWithinPartitions` orders inside each, and a [[PrefixScan]]
+    * under (`zero`, `step`, `plus`) appends `out(state)` after each row
+    * as the LongType columns `outCols`: 2 jobs plus the one range
+    * exchange, vs the window form's everything-through-one-task. The
+    * RDD detour deserializes rows once.
+    *
+    * The sorted relation is persisted ([[graft.core.QueryCaches.track]],
+    * released by the caller's query scope) because the scan reads it
+    * twice: unpersisted, the range-partition + sort AND everything
+    * upstream of it ran THREE times per rank (range sampling, count,
+    * map). Measured sf0.1 (bench methodology, quiet): q_winsorized
+    * 2.59 → 2.17 s (its rank input is an unpersisted join — the whole
+    * lineage ran 3×); q_zorder/events_qte unchanged within noise (their
+    * rank inputs were already query-cached, so only the sort was
+    * repeated and the cache write costs about what the re-sorts did). */
+  private def scanSorted[S: ClassTag](df: DataFrame, sortCols: Seq[String], partitions: Int,
+      outCols: Seq[String], zero: S)(step: (S, Row) => S, plus: (S, S) => S)(
+      out: S => Seq[Long]): DataFrame = {
     val np = if (partitions > 0) partitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val cols = sortCols.map(col)
-    // r17: persist the sorted relation like the [[globalCumSum]] /
-    // [[globalCumMax]] siblings already do — zipWithIndex runs a count
-    // job and the final map is a separate pass, so the UNPERSISTED
-    // range-partition + sort AND everything upstream of it executed
-    // THREE times per rank (range sampling, count, map). Measured
-    // sf0.1 (bench methodology, quiet): q_winsorized 2.59 → 2.17 s
-    // (its rank input is an unpersisted join — the whole lineage ran
-    // 3×); q_zorder/events_qte unchanged within noise (their rank
-    // inputs were already query-cached, so only the sort was repeated
-    // and the cache write costs about what the re-sorts did). Kept for
-    // the unpersisted-input callers and sibling consistency: strictly
-    // fewer plan evaluations at any scale.
-    val sorted = graft.core.QueryCaches.track(
-      df.repartitionByRange(np, cols: _*).sortWithinPartitions(cols: _*))
-    val schema = StructType(sorted.schema.fields :+
-      StructField(outCol, LongType, nullable = false))
-    val ranked = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    sorted.sparkSession.createDataFrame(ranked, schema)
+    val sorted = QueryCaches.track(df.repartitionByRange(np, cols: _*).sortWithinPartitions(cols: _*))
+    val schema = StructType(sorted.schema.fields ++ outCols.map(StructField(_, LongType, nullable = false)))
+    val (rows, _) = PrefixScan(sorted.rdd, zero)(step, plus)((r, s) => Row.fromSeq(r.toSeq ++ out(s)))
+    sorted.sparkSession.createDataFrame(rows, schema)
   }
 
   /** Global n-tile WITHOUT the single-partition window: `ntile(n)
@@ -273,7 +213,6 @@ object SkewOps {
   def bloomPrunedSemiJoin(big: DataFrame, small: DataFrame,
       bigKey: String, smallKey: String,
       expectedItems: Long, numBits: Long): DataFrame = {
-    import org.apache.spark.sql.types._
     // xxhash64 is TYPE-sensitive: the same numeric value hashes
     // differently as IntegerType vs LongType, and a mismatch here
     // would turn bloom false-positives into false NEGATIVES —

@@ -880,7 +880,7 @@ object DedupQueries {
     * are verified with shingle-fps Jaccard ≥ 0.7, same kernel as
     * [[dedupJaccard]]. Scale shape: the global sort rides
     * [[graft.ext.SkewOps.globalRank]] (range-repartition + per-
-    * partition zipWithIndex — NO single-partition window), and the
+    * partition count scan — NO single-partition window), and the
     * window pairing is an EQUI-join: each row explodes its rank into
     * the W successor ranks and joins rank-to-rank, so the plan is two
     * bounded-fanout shuffles — never a rank-range nested loop. At

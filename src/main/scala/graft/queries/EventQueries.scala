@@ -1393,7 +1393,7 @@ object EventQueries {
     * milli units via the rank identity G = Σ(2i−n−1)x_(i) / (n·Σx)
     * over counts ranked ascending, and the top-decile share. The
     * global rank comes from [[graft.ext.SkewOps.globalRank]]
-    * (repartitionByRange + zipWithIndex, two jobs, NO single-partition
+    * (repartitionByRange + count scan, two jobs, NO single-partition
     * window — the [[qAnalyzeStats]] posture) while the oracle spells
     * the row_number window this plan exists to avoid. The rank-sum is
     * DECIMAL(38,0)-exact (i·x reaches n·Σx ≈ 1e21 at warehouse scale)
@@ -1744,7 +1744,7 @@ object EventQueries {
     * event types (no self-join of the fact table); the converters
     * relation is USERS-scale, so the global rank runs through
     * [[graft.ext.SkewOps.globalRank]] (repartitionByRange +
-    * zipWithIndex — the q_analyze_stats shape), NOT a
+    * count scan — the q_analyze_stats shape), NOT a
     * single-partition window: the rank filter compares against
     * broadcast-derived expressions, so no WindowGroupLimit could ever
     * pre-trim it, and at 100× a window form would sort every

@@ -834,7 +834,7 @@ object Relational {
     * rows cross each exchange); the final rollup folds 256 rows. The
     * equal-size cut ranks come from [[graft.ext.SkewOps.globalRank]] —
     * the two-job distributed rank (repartitionByRange +
-    * sortWithinPartitions + zipWithIndex), so NOTHING serializes
+    * sortWithinPartitions + count scan), so NOTHING serializes
     * through one task at any scale; the write-side twin of the same
     * layout is [[graft.ext.LayoutOps.zorderRepartition]]. The oracle
     * spells the interleave as explicit shift-mask-multiply arithmetic
@@ -859,7 +859,7 @@ object Relational {
     // indistinguishable (z is a function of (pk, sk)), and every
     // per-bucket aggregate is a per-key constant or a count — so the
     // two full-data globalRank passes (each: range sampling +
-    // zipWithIndex count + RDD-row map over ALL lineitem rows, ×2
+    // count job + RDD-row map over ALL lineitem rows, ×2
     // serially) collapse to ONE map-side-combined groupBy to the
     // distinct-(pk, sk) grain (~7.5× fewer rows at any TPC-H SF: the
     // partsupp cardinality) followed by two distributed prefix-sums
@@ -1345,7 +1345,7 @@ object Relational {
     * equi-depth histogram boundaries (rank-indexed values,
     * percentile_disc semantics) for `o_totalprice`, all in one
     * result. The boundaries come from [[graft.ext.SkewOps.globalRank]]
-    * — repartitionByRange + zipWithIndex, two jobs, NO
+    * — repartitionByRange + count scan, two jobs, NO
     * single-partition window — while the oracle spells the global
     * `row_number() OVER (ORDER BY x)` this engine plan exists to
     * avoid; the 7 target ranks derive from the count scalar and

@@ -885,7 +885,7 @@ object TextQueries {
     * WITHIN each band (deterministic, seedless, reshuffle = change
     * one literal), doc_id as the total-order tiebreak. The global
     * position comes from [[graft.ext.SkewOps.globalRank]]
-    * (repartitionByRange + zipWithIndex, two jobs) — the oracle
+    * (repartitionByRange + count scan, two jobs) — the oracle
     * spells the single global row_number window the plan exists to
     * avoid: at 100 TB a `row_number() OVER (ORDER BY …)` serializes
     * the corpus through one task; range-partitioned rank scales with

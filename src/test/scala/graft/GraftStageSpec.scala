@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Element, GraftStage, WorkerInfo}
+import graft.core.{Element, GraftStage, PrefixScan, QueryCaches, WorkerInfo}
 import graft.core.GraftImplicits._
 import org.apache.spark.TaskContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd, StageInfo}
@@ -222,10 +222,12 @@ class GraftStageSpec extends AnyFunSuite {
 
   test("mapEx: timeout drops the hung element, keeps the rest (map_process_test.py:63-76)") {
     val xs = (0 until 10).toSeq
+    val before = GraftStage.asyncDroppedCount
     val got = xs.toStage
       .mapEx[Null, Int]((x, _) => { if (x == 3) Thread.sleep(60000); x }, timeout = 500.millis)
       .collectValues()
     assert(got.sorted == xs.filterNot(_ == 3))
+    assert(GraftStage.asyncDroppedCount - before == 1, "the drop is counted on the driver")
   }
 
   test("timeout thread hygiene: interrupted elements return their threads; abandoned count drains to zero") {
@@ -560,6 +562,38 @@ class GraftStageSpec extends AnyFunSuite {
         case Some(w) => assert(got == w, s"$name, $terminal: order")
         case None => assert(got.sorted == ids.map(_ * 2).sorted, s"$name, $terminal: values")
       }
+    }
+  }
+
+  test("concatRoundRobin: each upstream user function runs once per element under toIterable and toIterableWithIndex") {
+    val want = rrOracle((0L until 200L).map(_ * 2), (1000L until 1100L).map(_ * 2))
+    for (terminal <- Seq("toIterable", "toIterableWithIndex")) {
+      val (a, b) = (calls(), calls())
+      val merged = chain(range(0, 200, 4), a).concatRoundRobin(chain(range(1000, 1100, 2), b))
+      val got = if (terminal == "toIterable") merged.toIterable.toSeq else merged.toIterableWithIndex.map(_.value).toSeq
+      assert(got == want, terminal)
+      assert(a.all == Seq.fill(5)(200L), s"$terminal: calls per function of the first input")
+      assert(b.all == Seq.fill(5)(100L), s"$terminal: calls per function of the second input")
+      QueryCaches.release()
+    }
+  }
+
+  test("PrefixScan: emits each row with its inclusive running value and returns one offset per partition") {
+    val sc = spark.sparkContext
+    val inputs = Seq(
+      "1 partition" -> sc.parallelize(1L to 20L, 1),
+      "3 partitions, the middle one emptied" -> sc.parallelize(1L to 30L, 3).filter(x => x <= 10 || x > 20),
+      "7 partitions, some emptied" -> sc.parallelize(1L to 70L, 7).filter(x => (x - 1) / 10 % 3 != 1),
+      "0 partitions" -> sc.emptyRDD[Long])
+    for ((name, rdd) <- inputs) {
+      val parts = rdd.glom().collect().map(_.toSeq).toSeq
+      val values = parts.flatten
+      val (rows, offsets) = PrefixScan(rdd, 0L)(_ + _, _ + _)((x, s) => (x, s))
+      assert(rows.collect().toSeq == values.zip(values.scanLeft(0L)(_ + _).tail), name)
+      assert(offsets.length == rdd.getNumPartitions, s"$name: one offset per partition")
+      assert(offsets.toSeq == parts.map(_.sum).scanLeft(0L)(_ + _).take(parts.size), s"$name: offsets")
+      val (maxima, _) = PrefixScan(rdd, Long.MinValue)((m, x) => math.max(m, -x % 7), math.max)((_, m) => m)
+      assert(maxima.collect().toSeq == values.map(-_ % 7).scanLeft(Long.MinValue)(math.max).tail, s"$name: max")
     }
   }
 

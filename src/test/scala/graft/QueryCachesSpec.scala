@@ -194,6 +194,14 @@ class QueryCachesSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"declare native kernels in graft.functions.Kernels:\n${stray.mkString("\n")}")
   }
 
+  test("source audit: partitions are numbered and prefix-scanned only in PrefixScan") {
+    // spelled in pieces so this file does not match itself
+    val banned = Seq("runJob" + "(", "mapPartitions" + "WithIndex", "zipWithIndex" + "()")
+    val home = java.nio.file.Paths.get("src/main/scala/graft/core/PrefixScan.scala")
+    val hits = sourceHits("src/main/scala")(f => if (f == home) Nil else banned)
+    assert(hits.isEmpty, s"number rows or carry running values with graft.core.PrefixScan:\n${hits.mkString("\n")}")
+  }
+
   test("source audit: each query is declared once, with its oracle, and the log2-millis oracle fragment once") {
     // spelled in pieces so this file does not match itself
     val banned = Seq("val oracleSql" + ": Map", "def mbSql" + "(")
