@@ -30,14 +30,19 @@ def norm(v):
         return tuple(norm(x) for x in v)
     return v
 
-def main():
-    sf, out = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+def connect(sf):
+    """A DuckDB connection with one view per scale-factor table in `sf`."""
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+def main():
+    sf, out = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    con = connect(sf)
     with open(os.path.join(out, "oracle_sql.json")) as f:
         oracle = json.load(f)
     n_pass = n_fail = 0

@@ -12,8 +12,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
     require(args.length >= 2, "usage: graft.Profile <sfDir> <query> [query ...]")
+    val sfDir = args(0)
     val names = Harness.select(Some(args.drop(1).toSet), "graft.Profile")
     val spark = Harness.session()
     case class St(name: String, tasks: Int, ms: Long, inMB: Double,

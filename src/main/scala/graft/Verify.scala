@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: graft.Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     Harness.knobs.benchScale.foreach { n =>
       throw new IllegalArgumentException(s"SPARK_GRAFT_BENCH_SCALE=$n replicates " +

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.LongAccumulator
 
 import java.util.concurrent.{Callable, TimeUnit, TimeoutException => JTimeoutException}
-import scala.concurrent.duration.Duration
+import scala.concurrent.duration.{Duration, FiniteDuration}
 import scala.concurrent.{Await, Future, TimeoutException}
 
 /** Per-worker identity handed to lifecycle hooks and user functions,
@@ -90,7 +90,8 @@ final class GraftStage[T] private (
 
   /** `map` with the full reference option surface: `workers` (partition
     * fan-out), per-element `timeout` (drop on expiry, counted on the
-    * driver in [[GraftStage.asyncDroppedCount]]), `onStart`/`onDone`
+    * driver in [[GraftStage.asyncDroppedCount]]; zero, negative or
+    * infinite means no bound — [[GraftStage.bound]]), `onStart`/`onDone`
     * per-worker lifecycle with resource injection
     * (reference: pypeln/process/api/map.py:115-126, docs/advanced.md:87-124).
     */
@@ -103,22 +104,24 @@ final class GraftStage[T] private (
     val dropped = GraftStage.droppedAccumulator(spark.sparkContext)
     def run[A, C](d: Dataset[A], g: (A, S) => Option[C])(implicit e: Encoder[C]): Dataset[C] = {
       val in = if (workers > 0) d.repartition(workers) else d
-      val t = timeout
+      val bound = GraftStage.bound(timeout)
       in.mapPartitions { iter =>
         val tc = TaskContext.get()
         val wi = WorkerInfo(tc.partitionId(), tc.numPartitions(), tc.stageId(), tc.taskAttemptId())
         val state = onStart(wi)
         tc.addTaskCompletionListener[Unit](_ => onDone(state))
-        if (t <= Duration.Zero) iter.flatMap(a => g(a, state))
-        else iter.flatMap { a =>
-          // Timeout semantics per the reference: the element is DROPPED,
-          // the pipeline continues (process/api/map_process_test.py:63-76).
-          // The attempt is cancelled with interrupt — cooperative user
-          // code stops; non-interruptible code is abandoned on its
-          // (daemon) scratch thread so it can't wedge the task.
-          val r = GraftStage.withTimeout(t)(g(a, state))
-          if (r.isEmpty) GraftStage.countDrop(dropped, "mapEx", t)
-          r.flatten
+        bound match {
+          case None => iter.flatMap(a => g(a, state))
+          case Some(t) => iter.flatMap { a =>
+            // Timeout semantics per the reference: the element is DROPPED,
+            // the pipeline continues (process/api/map_process_test.py:63-76).
+            // The attempt is cancelled with interrupt — cooperative user
+            // code stops; non-interruptible code is abandoned on its
+            // (daemon) scratch thread so it can't wedge the task.
+            val r = GraftStage.withTimeout(t)(g(a, state))
+            if (r.isEmpty) GraftStage.countDrop(dropped, "mapEx", t)
+            r.flatten
+          }
         }
       }
     }
@@ -161,7 +164,8 @@ final class GraftStage[T] private (
     * backend: asyncio.wait_for + swallowed TimeoutError,
     * task/worker.py:246-255) — a hung Future can no longer wedge the
     * task forever. Drops are counted on the driver
-    * ([[GraftStage.asyncDroppedCount]]).
+    * ([[GraftStage.asyncDroppedCount]]). A zero, negative or infinite
+    * `timeout` waits without bound ([[GraftStage.bound]]).
     */
   def mapAsync[B](f: T => Future[B], workers: Int = 8,
       timeout: Duration = GraftStage.DefaultAsyncTimeout)(
@@ -336,6 +340,15 @@ object GraftStage {
     * always have one). Pass `timeout = Duration.Inf` explicitly to opt
     * back into unbounded waits. */
   val DefaultAsyncTimeout: Duration = Duration(60, java.util.concurrent.TimeUnit.SECONDS)
+
+  /** The one timeout rule of [[GraftStage.mapEx]], [[GraftStage.mapAsync]]
+    * and `GraftStream.mapAsync`: a positive finite `t` bounds each
+    * element's wait; zero, negative or infinite means no bound
+    * (pypeln's `timeout=0`). */
+  private def bound(t: Duration): Option[FiniteDuration] = t match {
+    case f: FiniteDuration if f > Duration.Zero => Some(f)
+    case _ => None
+  }
 
   /** The one bounded bridge behind both async iterators: a daemon
     * thread runs `produce(emit)` and `emit` puts each value, boxed so a
@@ -638,12 +651,13 @@ object GraftStage {
     * shared engine of batch [[GraftStage.mapAsync]] and streaming
     * `GraftStream.mapAsync`. Keeps ≤ n Futures outstanding, drains in
     * submission order, drops elements whose Future exceeds `t` (counted
-    * in `dropped`)
+    * in `dropped`; see [[bound]] for which `t` waits without bound)
     * (reference task-backend semantics: semaphore-bounded TaskPool +
     * asyncio.wait_for, task/worker.py:225-255). */
   private[graft] def asyncWindowIterator[A, B, C](
       iter: Iterator[A], n: Int, t: Duration,
       submit: A => Future[B], mk: (A, B) => C, dropped: LongAccumulator): Iterator[C] = {
+    val limit = bound(t).getOrElse(Duration.Inf)
     val window = new scala.collection.mutable.Queue[(A, Future[B])]()
     new Iterator[C] {
       private var pending: Option[C] = None
@@ -655,7 +669,7 @@ object GraftStage {
       private def advance(): Unit = {
         while (pending.isEmpty && { fill(); window.nonEmpty }) {
           val (a, fut) = window.dequeue()
-          try pending = Some(mk(a, Await.result(fut, t)))
+          try pending = Some(mk(a, Await.result(fut, limit)))
           catch {
             case _: TimeoutException => countDrop(dropped, "mapAsync", t) // counted, never silent
           }
@@ -731,7 +745,7 @@ object GraftStage {
     * (reference semantics: kill worker, drop element, keep going —
     * process/supervisor.py:26-31). Non-interruptible attempts count
     * against the abandoned-thread bound until they eventually exit. */
-  private[graft] def withTimeout[A](t: Duration)(body: => A): Option[A] = {
+  private[graft] def withTimeout[A](t: FiniteDuration)(body: => A): Option[A] = {
     if (abandonedCount.get() >= maxAbandoned)
       throw new IllegalStateException(
         s"graft timeout: ${abandonedCount.get()} abandoned worker threads " +

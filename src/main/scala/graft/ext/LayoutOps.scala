@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.functions.HashExprs
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators — the write-side half of scan pruning at
@@ -81,21 +81,8 @@ object LayoutOps {
     * session's catalog (the production shape: lay out once, query
     * many); size `buckets` to the cluster — executor-count multiples —
     * not to these test defaults. */
-  def bucketedTable(df: DataFrame, name: String, key: String, buckets: Int): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(name)) {
-      // The in-memory catalog forgets tables across JVMs but the
-      // warehouse directory persists — clear a stale location so the
-      // managed-table create doesn't refuse (LOCATION_ALREADY_EXISTS).
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      df.write.mode("overwrite").format("parquet")
-        .bucketBy(buckets, key).sortBy(key).saveAsTable(name)
-    }
-    spark.table(name)
-  }
+  def bucketedTable(df: DataFrame, name: String, key: String, buckets: Int): DataFrame =
+    layOutOnce(df, name)(_.write.bucketBy(buckets, key).sortBy(key))
 
   /** ANN-index layout: directory-PARTITIONED by the coarse list id
     * AND bucketed by the vector id — the persisted IVF-PQ shape.
@@ -108,21 +95,9 @@ object LayoutOps {
     * key — so `groupBy(q_id, vec_id)` runs directly on scan output.
     * Same skip-if-exists contract as [[bucketedTable]]. */
   def indexTable(df: DataFrame, name: String, partCol: String,
-      bucketKey: String, buckets: Int): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.catalog.tableExists(name)) {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      df.repartition(col(partCol))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy(partCol)
-        .bucketBy(buckets, bucketKey).sortBy(bucketKey)
-        .saveAsTable(name)
-    }
-    spark.table(name)
-  }
+      bucketKey: String, buckets: Int): DataFrame =
+    layOutOnce(df, name)(_.repartition(col(partCol)).write
+      .partitionBy(partCol).bucketBy(buckets, bucketKey).sortBy(bucketKey))
 
   /** Partition-pruning layout: write `df` as a directory-PARTITIONED
     * parquet table (`partitionBy(partCol)`) and return the
@@ -136,16 +111,25 @@ object LayoutOps {
     * holds one file instead of one-per-task small files. Skipped when
     * the table already exists in this session (lay out once, query
     * many) — same contract as [[bucketedTable]]. */
-  def partitionedTable(df: DataFrame, name: String, partCol: String): DataFrame = {
+  def partitionedTable(df: DataFrame, name: String, partCol: String): DataFrame =
+    layOutOnce(df, name)(_.repartition(col(partCol)).write.partitionBy(partCol))
+
+  /** The create-once write behind the three table layouts above:
+    * unless `name` is already in this session's catalog, `writer(df)`
+    * is saved as a managed parquet table, and the catalog-backed read
+    * is returned either way. */
+  private def layOutOnce(df: DataFrame, name: String)(
+      writer: DataFrame => DataFrameWriter[Row]): DataFrame = {
     val spark = df.sparkSession
     if (!spark.catalog.tableExists(name)) {
+      // The in-memory catalog forgets tables across JVMs but the
+      // warehouse directory persists — clear a stale location so the
+      // managed-table create doesn't refuse (LOCATION_ALREADY_EXISTS).
       val loc = new org.apache.hadoop.fs.Path(
         spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
-      df.repartition(col(partCol))
-        .write.mode("overwrite").format("parquet")
-        .partitionBy(partCol).saveAsTable(name)
+      writer(df).mode("overwrite").format("parquet").saveAsTable(name)
     }
     spark.table(name)
   }

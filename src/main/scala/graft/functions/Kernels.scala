@@ -335,7 +335,7 @@ object Kernels {
 
   /** Integer twin of [[ByteHist]]: raw bucket counts — the all-integer
     * histogram for exact arithmetic downstream (frame L1 distances in
-    * [[graft.queries.MultimodalQueries.mmSceneCuts]] never touch a
+    * [[graft.queries.MultimodalQueries.mmBinSceneCuts]] never touch a
     * float, so the scene verdict can't flip on ulp). */
   val ByteHistCounts = declare(Kernel("graft_byte_hist_counts", "byteHistCounts",
     Seq("bin" -> BinaryType), LongArray,

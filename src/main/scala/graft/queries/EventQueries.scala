@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import OracleFragments.log2MillisSql
+import OracleFragments.{foldSql, log2MillisSql}
 import Tables._
 
 /** Event-time suite over `events` (the streaming-shaped table: ns
@@ -4369,12 +4369,9 @@ object EventQueries {
         |FROM base b FULL JOIN chg c ON b.user_id = c.user_id
         |WHERE c.user_id IS NULL OR c.op <> 'D'""".stripMargin),
     QueryDef("events_kmv_overlap", eventsKmvOverlap,
-      """WITH p AS (SELECT DISTINCT event_type,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split('kmv|' || CAST(user_id AS VARCHAR) || '|' ||
-        |          CAST(epoch_us(ts) // 86400000000 AS VARCHAR) || '|graft', ''),
-        |        ch -> CAST(unicode(ch) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+      s"""WITH p AS (SELECT DISTINCT event_type,
+        |    ${foldSql("'kmv|' || CAST(user_id AS VARCHAR) || '|' || " +
+               "CAST(epoch_us(ts) // 86400000000 AS VARCHAR) || '|graft'")} AS h
         |  FROM events WHERE event_type IN ('click', 'purchase')),
         |r AS (SELECT event_type, h, row_number() OVER (PARTITION BY event_type
         |        ORDER BY h) AS rk FROM p),
@@ -4529,11 +4526,8 @@ object EventQueries {
         |SELECT event_type, day, n, trail, n * 7 > trail * 2 AS spike
         |FROM w WHERE n_prev = 7""".stripMargin),
     QueryDef("events_kmv_distinct", eventsKmvDistinct,
-      """WITH h_t AS (SELECT DISTINCT event_type,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split('kmv|' || CAST(user_id AS VARCHAR) || '|graft', ''),
-        |        ch -> CAST(unicode(ch) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+      s"""WITH h_t AS (SELECT DISTINCT event_type,
+        |    ${foldSql("'kmv|' || CAST(user_id AS VARCHAR) || '|graft'")} AS h
         |  FROM events),
         |r AS (SELECT event_type, h, row_number() OVER (PARTITION BY event_type
         |        ORDER BY h) AS rk FROM h_t),
@@ -4552,12 +4546,9 @@ object EventQueries {
         |  CAST(len(regexp_extract_all(seq, 'ee+')) AS BIGINT) AS n_error_bursts
         |FROM s""".stripMargin),
     QueryDef("events_cm_freq", eventsCmFreq,
-      """WITH fp AS (SELECT user_id, j,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split('cm' || CAST(j AS VARCHAR) || '|' ||
-        |          CAST(user_id AS VARCHAR) || '|graft', ''),
-        |        ch -> CAST(unicode(ch) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 1000000007) % 256 AS pos
+      s"""WITH fp AS (SELECT user_id, j,
+        |    ${foldSql("'cm' || CAST(j AS VARCHAR) || '|' || " +
+               "CAST(user_id AS VARCHAR) || '|graft'")} % 256 AS pos
         |  FROM (SELECT user_id FROM events) e, (SELECT unnest([0,1,2]) AS j)),
         |counters AS (SELECT j, pos, CAST(COUNT(*) AS BIGINT) AS c
         |             FROM fp GROUP BY 1, 2),
@@ -4619,12 +4610,9 @@ object EventQueries {
         |       COALESCE(n_us, CAST(0 AS BIGINT)) AS n_concurrent_users
         |FROM sess LEFT JOIN j USING (user_id, session_no)""".stripMargin),
     QueryDef("events_hll_distinct", eventsHllDistinct,
-      """WITH h_t AS (SELECT DISTINCT event_type, user_id FROM events),
+      s"""WITH h_t AS (SELECT DISTINCT event_type, user_id FROM events),
         |hh AS (SELECT event_type,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split('hll|' || CAST(user_id AS VARCHAR) || '|graft', ''),
-        |        ch -> CAST(unicode(ch) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |    ${foldSql("'hll|' || CAST(user_id AS VARCHAR) || '|graft'")} AS h
         |  FROM h_t),
         |b AS (SELECT event_type, h % 64 AS bucket,
         |        MAX(CASE WHEN h // 64 = 0 THEN 25
@@ -4645,13 +4633,10 @@ object EventQueries {
     // same three aggregation trees; rf folds hh directly (a user in
     // both periods carries the same h, MAX is idempotent)
     QueryDef("events_hll_incremental", eventsHllIncremental,
-      """WITH ev AS (SELECT DISTINCT user_id,
+      s"""WITH ev AS (SELECT DISTINCT user_id,
         |              ts >= TIMESTAMP '2024-01-24' AS is_new FROM events),
         |hh AS (SELECT user_id, is_new,
-        |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |      list_transform(string_split('hll|' || CAST(user_id AS VARCHAR) || '|graft', ''),
-        |        ch -> CAST(unicode(ch) AS BIGINT))),
-        |      (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |    ${foldSql("'hll|' || CAST(user_id AS VARCHAR) || '|graft'")} AS h
         |  FROM ev),
         |rh AS (SELECT h % 64 AS bucket,
         |         MAX(CASE WHEN h // 64 = 0 THEN 25 ELSE 25 - length(bin(h // 64)) END) AS r

@@ -198,94 +198,6 @@ object MultimodalQueries {
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b")))
       .groupBy(col("cluster_rep")).agg(count(lit(1)).as("sz"))
 
-  /** AUDIO-fingerprint near-dup — the generic-fingerprint promise of
-    * [[graft.ext.DedupOps.hammingPairs]] delivered for a second
-    * modality: [[MultimodalOps.byteBandEnergyHash]] (Haitsma–Kalker
-    * band-energy bits: 16 time frames × 4 byte-value energy bands → 45
-    * sign-of-second-difference bits — 8×4's 21 bits paired 6% of all
-    * doc pairs on this corpus; 45 bits discriminates) pairs blobs
-    * within hamming ≤ 3 via the 4-band pigeonhole join. Planted
-    * near-dups: each blob re-enters with its LAST byte replaced — only
-    * the final time frame's band energies move, flipping at most
-    * (bands-1)=3 of the 45 bits, so
-    * every planted pair is within the threshold BY CONSTRUCTION and
-    * ≤3-bit recall is pigeonhole-exact (4 bands > 3 flips). Same scale
-    * shape as every hash family here: only (hash, id) crosses the
-    * shuffle, bucket equi-join, never all-pairs. */
-  def mmAudioDupes(spark: SparkSession, sfDir: String): DataFrame = {
-    val b = load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-    val corpus = b.unionAll(b.select((col("doc_id") + 1000000L).as("doc_id"),
-      concat(expr("substring(text, 1, length(text) - 1)"), lit("~")).as("text")))
-    val hashed = corpus.select(col("doc_id"),
-      MultimodalOps.byteBandEnergyHash(encode(col("text"), "UTF-8"), 16, 4).as("ahash"))
-    graft.ext.DedupOps.hammingPairs(hashed, "doc_id", "ahash",
-        bits = 45, bands = 4, maxHamming = 3)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
-  }
-
-  /** [[mmAudioDupes]] under the hot-bucket guard — the 100 TB posture
-    * for a WEAK fingerprint: the band-energy bits are correlated across
-    * text-like blobs (measured at sf0.1: max bucket 2168 of 10 000 rows,
-    * 16M candidate pairs — the hash, not the join, is the skew source),
-    * so production pairing drops buckets larger than `maxBucket=8`
-    * before the self-join. Recall loss is hash-visible and DECLARED:
-    * a planted pair survives only if at least one of its 4 shared
-    * band keys sits in a cold bucket — the oracle counts exactly which
-    * do (the dedup_near_capped / dedup_simhash_pairs_capped contract). */
-  def mmAudioDupesCapped(spark: SparkSession, sfDir: String): DataFrame = {
-    val b = load(spark, sfDir, "documents").select(col("doc_id"), col("text"))
-    val corpus = b.unionAll(b.select((col("doc_id") + 1000000L).as("doc_id"),
-      concat(expr("substring(text, 1, length(text) - 1)"), lit("~")).as("text")))
-    val hashed = corpus.select(col("doc_id"),
-      MultimodalOps.byteBandEnergyHash(encode(col("text"), "UTF-8"), 16, 4).as("ahash"))
-    graft.ext.DedupOps.hammingPairs(hashed, "doc_id", "ahash",
-        bits = 45, bands = 4, maxHamming = 3, maxBucket = 8)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
-  }
-
-  /** SCENE-CUT detection over a frame container — the video-pipeline
-    * shot-boundary primitive (PySceneDetect's content-detector shape,
-    * codec-free): the blob is cut into 8 equal frames, each frame gets
-    * an all-integer 16-bin byte histogram
-    * ([[MultimodalOps.byteHistCounts]] native kernel), and a cut
-    * fires where the L1 distance between ADJACENT frame histograms
-    * exceeds half the frame length (2·L1 > frame_len — integer compare,
-    * no IEEE anywhere, so the verdict can't flip on ulp). Planted
-    * scenes: each media blob is `lower(text) || upper(text)` — the
-    * case flip moves every letter across a 16-bucket boundary, so the
-    * mid-blob boundary (4) must cut BY CONSTRUCTION while intra-scene
-    * boundaries stay quiet (500/500 recalled, 34 incidental cuts at
-    * sf0.01).
-    *
-    * Scale shape: the ENTIRE operator is a projection — histograms,
-    * adjacent-pair L1s, and the cut flags all compute inside the row
-    * (`transform` over the frame index), so the blob never leaves its
-    * scan partition and the query has ZERO shuffles and ZERO joins
-    * (PlanSpec-pinned). This is the plan a per-frame explode + self-join
-    * would ruin: at 100 TB of video the per-blob work parallelizes
-    * embarrassingly and nothing wide ever materializes. */
-  def mmSceneCuts(spark: SparkSession, sfDir: String): DataFrame = {
-    val nf = 8
-    val d = load(spark, sfDir, "documents")
-    val media = d.select(col("doc_id"),
-      encode(concat(lower(col("text")), upper(col("text"))), "UTF-8").as("content"))
-    val withH = media
-      .withColumn("sz", greatest(lit(1), floor(length(col("content")) / lit(nf)).cast("int")))
-      .withColumn("hists", transform(sequence(lit(0), lit(nf - 1)),
-        i => MultimodalOps.byteHistCounts(
-          col("content").substr(i * col("sz") + lit(1), col("sz")), 16)))
-    val l1s = transform(sequence(lit(1), lit(nf - 1)),
-      b => aggregate(
-        zip_with(element_at(col("hists"), b), element_at(col("hists"), b + lit(1)),
-          (x, y) => abs(x - y)),
-        lit(0L), (s, v) => s + v))
-    withH.select(col("doc_id"), col("sz").cast("bigint").as("frame_len"),
-        posexplode(l1s).as(Seq("p", "l1")))
-      .select(col("doc_id"), (col("p") + lit(1)).cast("bigint").as("boundary"),
-        col("frame_len"), col("l1"),
-        (col("l1") * lit(2L) > col("frame_len")).as("is_cut"))
-  }
-
   /** Activity segmentation over the audio-shaped blob — the
     * silence-detection op of the audio pillar (voice-activity
     * detection's codec-free skeleton): frame the blob at 16 bytes,
@@ -520,43 +432,6 @@ object MultimodalQueries {
       .filter(col("n_sources") > 1)
   }
 
-  /** Container sniffing — the magic-byte format detector every media
-    * ingest runs before trusting a file extension: blobs are minted
-    * with a 4-byte container prefix derived from their ANNOTATED
-    * modality (the [[mmModalMix]] `doc_id % 3` assignment — ASCII
-    * magics so the oracle reproduces them from the text side), except
-    * every 11th blob ships the WRONG prefix (the planted
-    * extension-lies-about-content case). The sniffer reads ONLY the
-    * leading bytes — never the payload — and the readout is the
-    * (annotated × sniffed) confusion matrix with the diagonal flag,
-    * [[graft.queries.TextQueries.textLangidConfusion]]'s shape for
-    * binary containers. Scale: prefix mint + sniff are scan-partition
-    * projections on a 4-byte slice; the rollup is a ≤9-cell
-    * map-side-combined aggregate. */
-  def mmContainerSniff(spark: SparkSession, sfDir: String): DataFrame = {
-    val annotated = expr(
-      "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END")
-    // the prefix is minted from the SHIPPED modality: wrong for every
-    // 11th blob (shifted one modality over), right otherwise
-    val shipped = expr("CASE WHEN doc_id % 11 = 0 THEN (doc_id + 1) % 3 " +
-      "ELSE doc_id % 3 END")
-    val d = load(spark, sfDir, "documents")
-      .select(col("doc_id"), annotated.as("annotated"),
-        concat(
-          element_at(array(lit("PNGX"), lit("RIFF"), lit("FTYP")),
-            (shipped + 1).cast("int")),
-          col("text")).as("payload"))
-      .select(col("doc_id"), col("annotated"),
-        encode(col("payload"), "UTF-8").as("content"))
-    d.select(col("annotated"),
-        expr("CASE decode(substring(content, 1, 4), 'UTF-8') " +
-          "WHEN 'PNGX' THEN 'image' WHEN 'RIFF' THEN 'audio' " +
-          "WHEN 'FTYP' THEN 'video' ELSE 'unknown' END").as("sniffed"))
-      .groupBy(col("annotated"), col("sniffed"))
-      .agg(count(lit(1)).as("n"))
-      .withColumn("is_diagonal", col("annotated") === col("sniffed"))
-  }
-
   /** Tile-hash partial-duplicate detection — the CROP/SPLICE catch
     * that whole-blob hashing ([[mmDedup]]) and global perceptual
     * hashing ([[mmPhash]]) both miss: a media asset that EMBEDS a
@@ -601,63 +476,6 @@ object MultimodalQueries {
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_tiles"))
       .filter(col("n_shared_tiles") >= 4L)
-  }
-
-  /** Blur/sharpness quality screen — discrete-Laplacian energy per
-    * blob through the new codegen byte kernel
-    * ([[MultimodalOps.byteLaplacian]]): second-difference magnitude
-    * sum, normalized per interior byte in exact milli units. The
-    * media-curation gate that drops blurred/degenerate assets before
-    * they cost feature-extraction compute; in the byte domain a
-    * constant run or linear ramp scores 0 while texture scores high —
-    * the corpus's own spread is the readout. One scan, kernel inside
-    * whole-stage codegen, a 16-group rollup by energy band (share per
-    * band in per-mille) — the blob never leaves its scan partition
-    * and the shuffle carries 16 rows. */
-  def mmSharpness(spark: SparkSession, sfDir: String): DataFrame = {
-    val scored = bin(spark, sfDir)
-      .select(col("doc_id"), length(col("content")).cast("bigint").as("n_bytes"),
-        MultimodalOps.byteLaplacian(col("content")).as("lap_energy"))
-      .withColumn("sharp_milli",
-        expr("CASE WHEN n_bytes < 3 THEN 0 ELSE (1000 * lap_energy) div (n_bytes - 2) END"))
-    val bands = scored
-      .groupBy(expr("least(CAST(15 AS BIGINT), sharp_milli div 10000)").as("band"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("lap_energy")).as("sum_energy"),
-        min(col("sharp_milli")).as("min_milli"), max(col("sharp_milli")).as("max_milli"))
-    val tot = bands.agg(sum(col("n_docs")).as("n_tot"))
-    bands.crossJoin(broadcast(tot))
-      .select(col("band"), col("n_docs"), col("sum_energy"),
-        col("min_milli"), col("max_milli"),
-        expr("(1000 * n_docs) div n_tot").as("share_milli"))
-  }
-
-  /** Dead-air screen — run-length profile per blob through the codegen
-    * [[MultimodalOps.byteRunStats]] kernel: maximal constant-byte runs
-    * are silence in audio, frozen frames in video, padding in
-    * containers; run8_bytes (bytes inside runs ≥ 8) over n_bytes is
-    * the per-mille dead-air share a curation gate thresholds before
-    * spending decode/feature compute. Planted positives: every 25th
-    * doc re-enters with a 32-byte constant tail — max_run ≥ 32 by
-    * construction, so the `padded` flag (max_run ≥ 16) catches every
-    * plant while natural ASCII text (runs of 1–2) stays clean. One
-    * scan, kernel inside whole-stage codegen, per-doc rows. */
-  def mmByteRuns(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = load(spark, sfDir, "documents")
-    val planted = d.filter(col("doc_id") % 25 === 0)
-      .select((col("doc_id") + 3000000L).as("doc_id"),
-        concat(col("text"), lit("~" * 32)).as("text"))
-    // n_bytes via octet_length: the kernel runs over UTF-8 BYTES, so the
-    // dead-air ratio's denominator must be bytes too — length(text)
-    // (characters) would silently mix units on non-ASCII input (it
-    // matched only because this corpus is ASCII).
-    d.select(col("doc_id"), col("text")).unionAll(planted)
-      .select(col("doc_id"), expr("octet_length(text)").cast("bigint").as("n_bytes"),
-        MultimodalOps.byteRunStats(encode(col("text"), "UTF-8")).as("r"))
-      .select(col("doc_id"), col("n_bytes"), col("r.n_runs"), col("r.max_run"),
-        col("r.run8_bytes"),
-        expr("CASE WHEN n_bytes = 0 THEN 0 " +
-          "ELSE (1000 * r.run8_bytes) div n_bytes END").as("dead_air_milli"),
-        (col("r.max_run") >= 16L).as("padded"))
   }
 
   /** Perceptual-hash RADIUS operating curve — the media twin of
@@ -731,12 +549,20 @@ object MultimodalQueries {
           .as("entropy_milli"))
   }
 
-  /** [[mmContainerSniff]] re-gated over the GENUINE binary fixture:
-    * the sniffer reads 4 leading bytes that include values ≥ 0x80 and
-    * embedded NULs (real PNG/ADTS/MPEG-PS magics — bytes no UTF-8
-    * text stand-in can carry), so the prefix-slice path is exercised
-    * on content that is not text. Same planted wrong-prefix every
-    * 11th blob, same (annotated × sniffed) confusion readout. */
+  /** Container sniffing — the magic-byte format detector every media
+    * ingest runs before trusting a file extension. [[synthBin]] mints
+    * each blob with the 4-byte container prefix of its ANNOTATED
+    * modality (the [[mmModalMix]] `doc_id % 3` assignment), except
+    * every 11th blob ships the WRONG prefix (the planted
+    * extension-lies-about-content case). The prefixes are real
+    * PNG/ADTS/MPEG-PS magics, with values ≥ 0x80 and embedded NULs
+    * that no UTF-8 text stand-in can carry. The sniffer reads ONLY the
+    * leading bytes, never the payload, and the readout is the
+    * (annotated × sniffed) confusion matrix with the diagonal flag,
+    * [[graft.queries.TextQueries.textLangidConfusion]]'s shape for
+    * binary containers. Scale: the sniff is a scan-partition
+    * projection on a 4-byte slice; the rollup is a ≤9-cell
+    * map-side-combined aggregate. */
   def mmBinSniff(spark: SparkSession, sfDir: String): DataFrame = {
     val annotated = expr(
       "CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END")
@@ -893,11 +719,17 @@ object MultimodalQueries {
       MultimodalOps.byteBandEnergyHash(col("content"), 16, 4).as("ahash"))
   }
 
-  /** [[mmAudioDupes]] re-gated over the binary fixture — the
-    * Haitsma–Kalker band-energy kernel finally run on full-range bytes
-    * (values ≥ 0x80 land in bands 2–3, which ASCII stand-ins never
-    * populate; NULs pin band 0). Same banded hamming join, same
-    * pigeonhole-exact ≤3-bit recall. */
+  /** AUDIO-fingerprint near-dup — the generic-fingerprint promise of
+    * [[graft.ext.DedupOps.hammingPairs]] delivered for a second
+    * modality: [[MultimodalOps.byteBandEnergyHash]] (Haitsma–Kalker
+    * band-energy bits: 16 time frames × 4 byte-value energy bands → 45
+    * sign-of-second-difference bits) over full-range bytes (values
+    * ≥ 0x80 land in bands 2–3, which ASCII text never populates; NULs
+    * pin band 0) pairs blobs within hamming ≤ 3 via the 4-band
+    * pigeonhole join — recall of the planted mutants is exact (see
+    * [[binAudioHashed]]). Same scale shape as every hash family here:
+    * only (hash, id) crosses the shuffle, bucket equi-join, never
+    * all-pairs. */
   def mmBinAudioDupes(spark: SparkSession, sfDir: String): DataFrame =
     graft.ext.DedupOps.hammingPairs(binAudioHashed(spark, sfDir), "doc_id", "ahash",
         bits = 45, bands = 4, maxHamming = 3)
@@ -963,13 +795,19 @@ object MultimodalQueries {
         expr("(1000 * shared) div least(n_a, n_b)").as("containment_milli"))
   }
 
-  /** [[mmSharpness]] re-gated over the binary fixture — and the
-    * Laplacian finally measures something: the mid-square bodies are
+  /** Blur/sharpness quality screen — discrete-Laplacian energy per
+    * blob through the codegen byte kernel
+    * ([[MultimodalOps.byteLaplacian]]): second-difference magnitude
+    * sum, normalized per interior byte in exact milli units. The
+    * media-curation gate that drops blurred/degenerate assets before
+    * they cost feature-extraction compute: the mid-square bodies are
     * full-range texture (high second-difference energy) while the
     * constant-byte degenerates score ≈0 beyond the magic→body
     * boundary, so the band histogram splits the corpus the way a
-    * blur/padding screen must. Same one-scan plan: codegen kernel in
-    * the projection, ≤16-group rollup. */
+    * blur/padding screen must. One scan, kernel inside whole-stage
+    * codegen, a ≤16-group rollup by energy band (share per band in
+    * per-mille) — the blob never leaves its scan partition and the
+    * shuffle carries 16 rows. */
   def mmBinSharpness(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = synthBin(spark, sfDir)
       .select(col("doc_id"), length(col("content")).cast("bigint").as("n_bytes"),
@@ -987,9 +825,13 @@ object MultimodalQueries {
         expr("(1000 * n_docs) div n_tot").as("share_milli"))
   }
 
-  /** [[mmByteRuns]] re-gated over the binary fixture — the dead-air
-    * screen on content where the positives are STRUCTURAL, not
-    * appended: every 5th blob's constant 64-byte body is a maximal run
+  /** Dead-air screen — run-length profile per blob through the codegen
+    * [[MultimodalOps.byteRunStats]] kernel: maximal constant-byte runs
+    * are silence in audio, frozen frames in video, padding in
+    * containers; run8_bytes (bytes inside runs ≥ 8) over n_bytes is
+    * the per-mille dead-air share a curation gate thresholds before
+    * spending decode/feature compute. The positives are STRUCTURAL:
+    * every 5th blob's constant 64-byte body is a maximal run
     * by construction (max_run ≥ 64 ⇒ `padded`), while mid-square
     * bodies keep runs of 1–2, so the flag partitions the corpus
     * exactly along the [[mmBinEntropy]] routing split. One scan,
@@ -1004,8 +846,15 @@ object MultimodalQueries {
           "ELSE (1000 * r.run8_bytes) div n_bytes END").as("dead_air_milli"),
         (col("r.max_run") >= 16L).as("padded"))
 
-  /** [[mmSceneCuts]] re-gated over genuine binary content — and the
-    * planted boundary is STRUCTURAL: each media blob is a splice of a
+  /** SCENE-CUT detection over a frame container — the video-pipeline
+    * shot-boundary primitive (PySceneDetect's content-detector shape,
+    * codec-free): the blob is cut into 8 equal frames, each frame gets
+    * an all-integer 16-bin byte histogram
+    * ([[MultimodalOps.byteHistCounts]] native kernel), and a cut fires
+    * where the L1 distance between ADJACENT frame histograms exceeds
+    * half the frame length (2·L1 > frame_len — integer compare, no
+    * IEEE anywhere, so the verdict can't flip on ulp). The planted
+    * boundary is STRUCTURAL: each media blob is a splice of a
     * 64-byte CONSTANT half (the padding/silence scene, byte
     * (7·doc_id) mod 256) and a 64-byte mid-square TEXTURED half (the
     * [[synthBin]] body formula), so with 8 16-byte frames the
@@ -1017,9 +866,15 @@ object MultimodalQueries {
     * too short for a stable 16-bin histogram, so high-entropy content
     * reads as constant scene churn at this threshold: exactly the
     * frame-length-vs-bin-count trade a detector deployment must size
-    * first, surfaced on content where it is real. Same
-    * zero-shuffle plan as the text row: histograms, L1s, and flags all
-    * compute in-row; the blob never leaves its scan partition. */
+    * first, surfaced on content where it is real.
+    *
+    * Scale shape: the ENTIRE operator is a projection — histograms,
+    * adjacent-pair L1s, and the cut flags all compute inside the row
+    * (`transform` over the frame index), so the blob never leaves its
+    * scan partition and the query has ZERO shuffles and ZERO joins
+    * (PlanSpec-pinned). This is the plan a per-frame explode + self-join
+    * would ruin: at 100 TB of video the per-blob work parallelizes
+    * embarrassingly and nothing wide ever materializes. */
   def mmBinSceneCuts(spark: SparkSession, sfDir: String): DataFrame = {
     val nf = 8
     val constHex = transform(sequence(lit(0L), lit(63L)), _ =>
@@ -1066,36 +921,13 @@ object MultimodalQueries {
     s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
   }
 
-  // 16 time frames × 4 byte-value energy bands (64-wide), Haitsma–Kalker
-  // second-difference sign bits, then the 4-band (11/11/11/12-bit) key
-  // table — the exact arithmetic of byteBandEnergyHash + hammingPairs'
-  // band split. Shared by the capped and uncapped pairings.
-  private val audioBandSql =
-    s"""WITH corpus AS (SELECT doc_id, text FROM documents
-       |  UNION ALL SELECT doc_id + 1000000, substr(text, 1, len(text) - 1) || '~'
-       |  FROM documents),
-       |c AS (SELECT doc_id, $cpsSql AS cps FROM corpus),
-       |e AS (SELECT doc_id, list_transform(range(0, 16), t ->
-       |    list_transform(range(0, 4), bb ->
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_filter(cps[(t * len(cps)) // 16 + 1 : ((t + 1) * len(cps)) // 16],
-       |                    v -> v // 64 = bb)),
-       |        (x, y) -> x + y))) AS eng FROM c),
-       |p AS (SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |    flatten(list_transform(range(1, 16), t -> list_transform(range(0, 3), bb ->
-       |      CASE WHEN (eng[t+1][bb+1] - eng[t+1][bb+2]) - (eng[t][bb+1] - eng[t][bb+2]) > 0
-       |      THEN CAST(power(2, (t - 1) * 3 + bb) AS BIGINT)
-       |      ELSE CAST(0 AS BIGINT) END)))),
-       |    (a, b) -> a + b) AS ah FROM e),
-       |b_t AS (SELECT doc_id, ah, band, CASE band
-       |    WHEN 0 THEN ah % 2048 WHEN 1 THEN (ah // 2048) % 2048
-       |    WHEN 2 THEN (ah // 4194304) % 2048 ELSE ah // 8589934592 END AS key
-       |  FROM p, (SELECT unnest([0, 1, 2, 3]) AS band))""".stripMargin
-
-  // audioBandSql's arithmetic over the BINARY fixture: synthBin byte
-  // lists (constant-byte degenerates gated out), last-byte-overwritten
-  // mutants (0x5a = 90), then the identical 16×4 energy / 45-bit sign
-  // / 4-band key pipeline. Shared by the capped and uncapped pairings.
+  // binAudioHashed's corpus as synthBin byte lists (constant-byte
+  // degenerates gated out, last-byte-overwritten mutants 0x5a = 90),
+  // then 16 time frames × 4 byte-value energy bands (64-wide),
+  // Haitsma–Kalker second-difference sign bits, and the 4-band
+  // (11/11/11/12-bit) key table — the exact arithmetic of
+  // byteBandEnergyHash + hammingPairs' band split. Shared by the capped
+  // and uncapped pairings.
   private val binAudioBandSql =
     s"""WITH base AS (SELECT doc_id, $synthCpsSql AS cps FROM documents
        |  WHERE doc_id % 5 <> 0),
@@ -1334,57 +1166,6 @@ object MultimodalQueries {
          |  CASE WHEN n_pairs = 0 THEN 0
          |       ELSE (1000 * n_planted) // n_pairs END AS precision_milli
          |FROM o CROSS JOIN nd""".stripMargin),
-    QueryDef("mm_byte_runs", mmByteRuns,
-      s"""WITH c AS (SELECT doc_id, text FROM documents
-         |  UNION ALL SELECT doc_id + 3000000, text || repeat('~', 32)
-         |    FROM documents WHERE doc_id % 25 = 0),
-         |cp AS (SELECT doc_id, CAST(strlen(text) AS BIGINT) AS nb,
-         |    $cpsSql AS cps FROM c),
-         |r AS (SELECT doc_id, nb, cps,
-         |    list_concat([CAST(1 AS BIGINT)],
-         |      list_filter(range(2, len(cps) + 1), i -> cps[i] <> cps[i - 1]))
-         |      AS starts
-         |  FROM cp),
-         |runs AS (SELECT doc_id, nb AS n_bytes,
-         |    list_transform(range(1, len(starts) + 1),
-         |      j -> CASE WHEN j = len(starts) THEN len(cps) + 1 - starts[j]
-         |           ELSE starts[j + 1] - starts[j] END) AS rl
-         |  FROM r),
-         |m AS (SELECT doc_id, n_bytes,
-         |    CASE WHEN n_bytes = 0 THEN 0 ELSE CAST(len(rl) AS BIGINT) END
-         |      AS n_runs,
-         |    CASE WHEN n_bytes = 0 THEN 0
-         |         ELSE CAST(list_max(rl) AS BIGINT) END AS max_run,
-         |    CASE WHEN n_bytes = 0 THEN 0
-         |         ELSE CAST(COALESCE(list_sum(list_filter(rl, x -> x >= 8)), 0)
-         |           AS BIGINT) END AS run8_bytes
-         |  FROM runs)
-         |SELECT doc_id, n_bytes, n_runs, max_run, run8_bytes,
-         |  CASE WHEN n_bytes = 0 THEN 0
-         |       ELSE (1000 * run8_bytes) // n_bytes END AS dead_air_milli,
-         |  max_run >= 16 AS padded
-         |FROM m""".stripMargin),
-    QueryDef("mm_sharpness", mmSharpness,
-      s"""WITH c AS (SELECT doc_id, $cpsSql AS cps FROM documents),
-         |s AS (SELECT doc_id, CAST(len(cps) AS BIGINT) AS n_bytes,
-         |    CAST(COALESCE(list_sum(list_transform(range(2, len(cps)),
-         |      i -> abs(cps[i + 1] - 2 * cps[i] + cps[i - 1]))), 0) AS BIGINT)
-         |      AS lap_energy
-         |  FROM c),
-         |m AS (SELECT doc_id, n_bytes, lap_energy,
-         |    CASE WHEN n_bytes < 3 THEN 0
-         |         ELSE (1000 * lap_energy) // (n_bytes - 2) END AS sharp_milli
-         |  FROM s),
-         |bands AS (SELECT least(15, sharp_milli // 10000) AS band,
-         |    CAST(COUNT(*) AS BIGINT) AS n_docs,
-         |    CAST(SUM(lap_energy) AS BIGINT) AS sum_energy,
-         |    CAST(MIN(sharp_milli) AS BIGINT) AS min_milli,
-         |    CAST(MAX(sharp_milli) AS BIGINT) AS max_milli
-         |  FROM m GROUP BY 1),
-         |tot AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_tot FROM bands)
-         |SELECT CAST(band AS BIGINT) AS band, n_docs, sum_energy, min_milli,
-         |  max_milli, (1000 * n_docs) // n_tot AS share_milli
-         |FROM bands CROSS JOIN tot""".stripMargin),
     QueryDef("mm_tile_hash", mmTileHash,
       """WITH base AS (SELECT doc_id, text FROM documents),
         |spliced AS (SELECT doc_id + 2000000 AS doc_id,
@@ -1474,43 +1255,6 @@ object MultimodalQueries {
         |  md5(substr(text, CAST((b-1)*sz + 1 AS BIGINT),
         |    CAST(sz AS BIGINT))) AS frame_md5
         |FROM c, (SELECT unnest(range(1, 9)) AS b)""".stripMargin),
-    QueryDef("mm_scene_cuts", mmSceneCuts,
-      """WITH m AS (SELECT doc_id, lower(text) || upper(text) AS mt FROM documents),
-        |c AS (SELECT doc_id, mt, greatest(1, len(mt) // 8) AS sz FROM m),
-        |f AS (SELECT doc_id, sz, b,
-        |        list_transform(range(0, 16), bb -> CAST(len(list_filter(
-        |          list_transform(string_split(
-        |            substr(mt, CAST((b-1)*sz + 1 AS BIGINT), CAST(sz AS BIGINT)), ''),
-        |            ch -> unicode(ch)),
-        |          v -> v // 16 = bb)) AS BIGINT)) AS hist
-        |      FROM c, (SELECT unnest(range(1, 9)) AS b)),
-        |p AS (SELECT a.doc_id, CAST(a.b AS BIGINT) AS boundary,
-        |        CAST(a.sz AS BIGINT) AS frame_len,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(range(1, 17), i -> abs(a.hist[i] - x.hist[i]))),
-        |          (s, v) -> s + v) AS l1
-        |      FROM f a JOIN f x ON x.doc_id = a.doc_id AND x.b = a.b + 1)
-        |SELECT doc_id, boundary, frame_len, l1, 2 * l1 > frame_len AS is_cut
-        |FROM p""".stripMargin),
-    QueryDef("mm_audio_dupes", mmAudioDupes,
-      s"""$audioBandSql
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
-         |FROM b_t a JOIN b_t b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
-    QueryDef("mm_audio_dupes_capped", mmAudioDupesCapped,
-      s"""$audioBandSql,
-         |kept AS (SELECT band, key FROM b_t GROUP BY band, key HAVING COUNT(*) <= 8),
-         |cb AS (SELECT doc_id, ah, band, key FROM b_t JOIN kept USING (band, key))
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ah, b.ah)) AS BIGINT) AS hamming
-         |FROM cb a JOIN cb b
-         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ah, b.ah)) <= 3""".stripMargin),
-    // 32 equal byte segments (1-based inclusive slices), cross-multiplied
-    // mean-gradient bits, then the 3-band (10/10/11-bit) pigeonhole join —
-    // the exact arithmetic of byteSegGradHash + hammingPairs(31, 3, 2).
     QueryDef("mm_bin_frames", mmBinFrames,
       s"""WITH c AS (SELECT doc_id, $synthCpsSql AS cps FROM documents),
          |f AS (SELECT doc_id, fi, cps[fi * 8 + 1 : fi * 8 + 8] AS fb
@@ -1605,6 +1349,9 @@ object MultimodalQueries {
          |FROM b_t a JOIN b_t b
          |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.ph, b.ph)) <= 2""".stripMargin),
+    // 32 equal byte segments (1-based inclusive slices), cross-multiplied
+    // mean-gradient bits, then the 3-band (10/10/11-bit) pigeonhole join —
+    // the exact arithmetic of byteSegGradHash + hammingPairs(31, 3, 2).
     QueryDef("mm_phash", mmPhash,
       s"""WITH corpus AS (SELECT doc_id, text FROM documents
          |  UNION ALL SELECT doc_id + 1000000, substr(text, 1, len(text) - 1) || '~'
@@ -1665,22 +1412,6 @@ object MultimodalQueries {
          |        FROM reach GROUP BY a)
          |SELECT cluster_rep, CAST(COUNT(*) AS BIGINT) AS sz
          |FROM lab GROUP BY 1""".stripMargin),
-    QueryDef("mm_container_sniff", mmContainerSniff,
-      """WITH d AS (SELECT doc_id,
-        |    CASE doc_id % 3 WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-        |      ELSE 'video' END AS annotated,
-        |    ['PNGX', 'RIFF', 'FTYP'][CAST(
-        |      (CASE WHEN doc_id % 11 = 0 THEN (doc_id + 1) % 3
-        |       ELSE doc_id % 3 END) + 1 AS INTEGER)] || text AS payload
-        |  FROM documents),
-        |s AS (SELECT annotated,
-        |    CASE substring(payload, 1, 4)
-        |      WHEN 'PNGX' THEN 'image' WHEN 'RIFF' THEN 'audio'
-        |      WHEN 'FTYP' THEN 'video' ELSE 'unknown' END AS sniffed
-        |  FROM d)
-        |SELECT annotated, sniffed, CAST(COUNT(*) AS BIGINT) AS n,
-        |  annotated = sniffed AS is_diagonal
-        |FROM s GROUP BY 1, 2""".stripMargin),
     QueryDef("mm_meta_conflict", mmMetaConflict,
       """WITH corpus AS (SELECT doc_id, source, text FROM documents
         |                UNION ALL

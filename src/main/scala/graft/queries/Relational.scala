@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import OracleFragments.foldSql
 import Tables._
 
 /** Relational extension suite (absent from the reference — SURVEY.md
@@ -3061,15 +3062,12 @@ object Relational {
         |  (1000 * max_rows * n_buckets) // total_rows AS skew_milli
         |FROM s""".stripMargin),
     QueryDef("q_join_card_est", qJoinCardEst,
-      """WITH f_o AS (SELECT o_orderkey AS key, CAST(COUNT(*) AS BIGINT) AS f_o
+      s"""WITH f_o AS (SELECT o_orderkey AS key, CAST(COUNT(*) AS BIGINT) AS f_o
         |             FROM orders GROUP BY 1),
         |f_l AS (SELECT l_orderkey AS key, CAST(COUNT(*) AS BIGINT) AS f_l
         |        FROM lineitem GROUP BY 1),
         |u AS (SELECT key,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(string_split('jce|' || CAST(key AS VARCHAR) || '|graft', ''),
-        |            ch -> CAST(unicode(ch) AS BIGINT))),
-        |          (a, b) -> (a * 31 + b) % 1000000007) AS h
+        |        ${foldSql("'jce|' || CAST(key AS VARCHAR) || '|graft'")} AS h
         |      FROM (SELECT key FROM f_o UNION SELECT key FROM f_l)),
         |r AS (SELECT key, h, row_number() OVER (ORDER BY h) AS rk FROM u),
         |th AS (SELECT h AS theta FROM r WHERE rk = 64),
@@ -3102,10 +3100,7 @@ object Relational {
     }),
     QueryDef("q_join_order_advisor", qJoinOrderAdvisor, {
       def fp(salt: String): String =
-        s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |          list_transform(string_split('$salt|' || CAST(key AS VARCHAR) || '|graft', ''),
-           |            ch -> CAST(unicode(ch) AS BIGINT))),
-           |          (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
+        foldSql(s"'$salt|' || CAST(key AS VARCHAR) || '|graft'")
       def kmv(i: Int, salt: String, fa: String, fb: String, out: String): String =
         s"""u$i AS (SELECT key, ${fp(salt)} AS h
            |      FROM (SELECT key FROM $fa UNION SELECT key FROM $fb)),
@@ -3198,20 +3193,16 @@ object Relational {
         |SELECT o_orderstatus, o_orderpriority, n_bitmap, n_direct,
         |       n_bitmap = n_direct AS exact
         |FROM v JOIN d USING (o_orderstatus, o_orderpriority)""".stripMargin),
-    QueryDef("q_table_checksum", qTableChecksum,
-      """SELECT c_custkey // 1000 AS bucket, COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(concat_ws('|', c_custkey, c_name,
-        |        c_nationkey, CAST(c_acctbal AS DECIMAL(12,2)), c_mktsegment), ''),
-        |      ch -> CAST(unicode(ch) AS BIGINT))),
-        |    (a, b) -> (a * 31 + b) % 1000000007) AS DECIMAL(38,0))) AS BIGINT) AS checksum
-        |FROM customer GROUP BY 1""".stripMargin),
+    QueryDef("q_table_checksum", qTableChecksum, {
+      val row = "concat_ws('|', c_custkey, c_name, c_nationkey, " +
+        "CAST(c_acctbal AS DECIMAL(12,2)), c_mktsegment)"
+      s"""SELECT c_custkey // 1000 AS bucket, COUNT(*) AS n_rows,
+         |  CAST(SUM(CAST(${foldSql(row)} AS DECIMAL(38,0))) AS BIGINT) AS checksum
+         |FROM customer GROUP BY 1""".stripMargin
+    }),
     QueryDef("q_pseudonymize", qPseudonymize,
-      """WITH c AS (SELECT c_custkey, c_mktsegment, c_name,
-        |        list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |          list_transform(string_split(c_name, ''),
-        |            ch -> CAST(unicode(ch) AS BIGINT))),
-        |          (a, b) -> (a * 31 + b) % 1000000007) AS pseud
+      s"""WITH c AS (SELECT c_custkey, c_mktsegment, c_name,
+        |        ${foldSql("c_name")} AS pseud
         |      FROM customer),
         |i AS (SELECT c_mktsegment AS segment,
         |        CAST(COUNT(*) AS BIGINT) AS n_customers,

@@ -2178,6 +2178,17 @@ object SimQueries {
        |      FROM knn f JOIN knn r ON f.vec_id = r.nbr_id AND f.nbr_id = r.vec_id
        |      WHERE f.vec_id < f.nbr_id)""".stripMargin
 
+  /** The doubled corpus's 16-bit srp-bucketed self-join at cos ≥ 0.999:
+    * the oracle of sim_pairs and sim_pairs_rewrite. */
+  private val pairsSql =
+    s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
+       |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
+       |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
+       |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       |                 ${cosSql("a.embedding", "b.embedding")} AS cos
+       |          FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+       |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin
+
   val queries: Seq[QueryDef] = Seq(
     QueryDef("sim_split_gain", simSplitGain,
       """WITH h AS MATERIALIZED (SELECT CAST(dd.d AS BIGINT) AS d,
@@ -3224,14 +3235,7 @@ object SimQueries {
          |           FROM bc JOIN bq USING (bucket) WHERE vec_id <> q_id)
          |SELECT q_id, vec_id, cos FROM scored
          |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 10""".stripMargin),
-    QueryDef("sim_pairs", simPairs,
-      s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
-         |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
-         |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
-         |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |                 ${cosSql("a.embedding", "b.embedding")} AS cos
-         |          FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
+    QueryDef("sim_pairs", simPairs, pairsSql),
     QueryDef("sim_pairs_capped", simPairsCapped,
       s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
          |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
@@ -3243,16 +3247,9 @@ object SimQueries {
          |          FROM cb a JOIN cb b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
          |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
     // The rewrite rule's contract: the Spark side declares ONLY the
-    // cosine predicate; the oracle spells the srp-bucket conjunction the
-    // rule adds (16-bit buckets).
-    QueryDef("sim_pairs_rewrite", simPairsRewrite,
-      s"""WITH corpus AS (SELECT vec_id, embedding FROM embeddings
-         |                UNION ALL SELECT vec_id + 1000000, embedding FROM embeddings),
-         |b AS (SELECT vec_id, embedding, ${srpSql("embedding", 16)} AS bucket FROM corpus),
-         |pairs AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         |                 ${cosSql("a.embedding", "b.embedding")} AS cos
-         |          FROM b a JOIN b b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-         |SELECT vec_a, vec_b, cos FROM pairs WHERE cos >= 0.999""".stripMargin),
+    // cosine predicate; the rule adds the 16-bit srp-bucket conjunction
+    // that sim_pairs spells by hand, so both answer to one oracle.
+    QueryDef("sim_pairs_rewrite", simPairsRewrite, pairsSql),
     QueryDef("sim_quantize", simQuantize,
       s"""WITH m_t AS (SELECT vec_id, label, embedding,
          |  list_max(list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))) AS m

@@ -2076,11 +2076,6 @@ object TextQueries {
        |        - CAST(len(regexp_extract_all(text, '[.,!?;:]')) AS BIGINT) / n_chars * 2
        |        - CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) / n_chars))""".stripMargin
 
-  private val fpSql =
-    """list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |    list_transform(string_split(text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-      |    (a, b) -> (a * 31 + b) % 1000000007)""".stripMargin
-
   /** Shared CTE chain ending at `grid(doc_id, lang, lang_c, score)` —
     * the DuckDB spelling of [[nbScoreGrid]], with the integer fast-log
     * spelled as length(bin(q))−1 + the piecewise-linear fraction. */
@@ -2112,7 +2107,7 @@ object TextQueries {
 
   val queries: Seq[QueryDef] = Seq(
     QueryDef("curate_pack_boundaries", curatePackBoundaries,
-      s"""WITH d AS (SELECT doc_id, $fpSql % 1000000 AS h,
+      s"""WITH d AS (SELECT doc_id, ${foldSql("text")} % 1000000 AS h,
          |    CAST(len($toksSql) AS BIGINT) AS n_tokens
          |  FROM documents),
          |c AS (SELECT doc_id, n_tokens,
@@ -2175,9 +2170,7 @@ object TextQueries {
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
          |  ELSE [] END AS sh FROM tk_t),
          |fp_t AS (SELECT source, list_distinct(list_transform(sh, s ->
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007))) AS fps FROM sh_t),
+         |  ${foldSql("s")})) AS fps FROM sh_t),
          |g AS MATERIALIZED (SELECT DISTINCT source, unnest(fps) AS fp FROM fp_t),
          |tot AS (SELECT source AS src_a, CAST(COUNT(*) AS BIGINT) AS n_a
          |        FROM g GROUP BY 1),
@@ -2255,7 +2248,7 @@ object TextQueries {
       s"""WITH c AS (SELECT doc_id, source, text FROM documents
          |  UNION ALL SELECT doc_id + 5000000, 'mirror', text
          |    FROM documents WHERE doc_id % 10 = 0),
-         |d AS (SELECT doc_id, source, $fpSql AS fp,
+         |d AS (SELECT doc_id, source, ${foldSql("text")} AS fp,
          |    CAST(len($toksSql) AS BIGINT) AS n_tokens
          |  FROM c),
          |keep AS (SELECT fp, MIN(doc_id) AS keep_id FROM d GROUP BY fp),
@@ -2604,7 +2597,7 @@ object TextQueries {
     QueryDef("curate_mix", curateMix,
       s"""WITH d AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |  $fpSql % 100 AS h
+         |  ${foldSql("text")} % 100 AS h
          |  FROM documents),
          |s AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS a_tokens FROM d GROUP BY lang),
          |t AS (SELECT CAST(SUM(a_tokens) AS BIGINT) AS t_tokens FROM s),
@@ -2619,7 +2612,7 @@ object TextQueries {
     QueryDef("curate_split", curateSplit,
       s"""WITH h_t AS (SELECT lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
-         |  $fpSql % 100 AS h
+         |  ${foldSql("text")} % 100 AS h
          |  FROM documents),
          |s_t AS (SELECT lang, n_tokens,
          |  CASE WHEN h < 90 THEN 'train' WHEN h < 95 THEN 'val' ELSE 'test' END AS split
@@ -2633,9 +2626,7 @@ object TextQueries {
          |  unnest(CASE WHEN len(tk) >= 2 THEN list_transform(range(1, len(tk)),
          |    i -> tk[i] || ' ' || tk[i+1]) ELSE [] END) AS s FROM tk_t),
          |g AS (SELECT doc_id, lang,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007) % 512 AS b FROM bg),
+         |  ${foldSql("s")} % 512 AS b FROM bg),
          |dist AS (SELECT b, COUNT(*) AS r_cnt,
          |  CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS t_cnt
          |  FROM g GROUP BY b),
@@ -2698,9 +2689,7 @@ object TextQueries {
          |ln AS (SELECT doc_id, CAST(line_no AS BIGINT) AS line_no,
          |  array_to_string(tk[line_no*5+1 : line_no*5+5], ' ') AS line FROM ln0),
          |fp AS (SELECT doc_id, line_no, line,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(line, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007) AS lfp FROM ln),
+         |  ${foldSql("line")} AS lfp FROM ln),
          |d_t AS (SELECT lfp, COUNT(DISTINCT doc_id) AS df FROM fp GROUP BY lfp),
          |r AS (SELECT doc_id, COUNT(*) AS n_lines,
          |        CAST(SUM(CASE WHEN df >= 5 THEN 1 ELSE 0 END) AS BIGINT) AS dropped_lines,
@@ -2709,9 +2698,7 @@ object TextQueries {
          |SELECT doc_id, n_lines,
          |  CAST(n_lines - dropped_lines AS BIGINT) AS kept_lines, dropped_lines,
          |  CASE WHEN kept_text = '' THEN CAST(0 AS BIGINT) ELSE
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(string_split(kept_text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |      (a, b) -> (a * 31 + b) % 1000000007) END AS new_fp
+         |    ${foldSql("kept_text")} END AS new_fp
          |FROM r""".stripMargin),
     QueryDef("curate_novelty", curateNovelty,
       s"""WITH tk_t AS (SELECT doc_id, $toksSql AS tk FROM documents),
@@ -2719,9 +2706,7 @@ object TextQueries {
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
          |  ELSE [] END AS sh FROM tk_t),
          |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s ->
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007))) AS fps FROM sh_t),
+         |  ${foldSql("s")})) AS fps FROM sh_t),
          |g AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t),
          |f_t AS (SELECT fp, MIN(doc_id) AS first_doc FROM g GROUP BY fp)
          |SELECT g.doc_id, COUNT(*) AS n_grams,
@@ -2735,9 +2720,7 @@ object TextQueries {
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
          |  ELSE [] END AS sh FROM tk_t),
          |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s ->
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007))) AS fps FROM sh_t),
+         |  ${foldSql("s")})) AS fps FROM sh_t),
          |g AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t),
          |d_t AS (SELECT fp, COUNT(*) AS df FROM g GROUP BY fp)
          |SELECT doc_id, n_grams, n_shared,
@@ -2761,7 +2744,7 @@ object TextQueries {
       s"""WITH s1 AS (SELECT source,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |  $qualitySql AS quality,
-         |  $fpSql AS fp
+         |  ${foldSql("text")} AS fp
          |  FROM documents)
          |SELECT source, COUNT(*) AS n_docs, COUNT(DISTINCT fp) AS n_distinct,
          |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
@@ -2771,7 +2754,7 @@ object TextQueries {
     QueryDef("curate_curriculum", curateCurriculum,
       s"""WITH b AS (SELECT doc_id,
          |  LEAST(${markerSql(Seq("the", "a", "data", "table"))}, 3) AS band,
-         |  $fpSql % 1000000 AS h,
+         |  ${foldSql("text")} % 1000000 AS h,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens
          |FROM documents)
          |SELECT CAST(row_number() OVER (ORDER BY 3 - band, h, doc_id) AS BIGINT) AS pos,
@@ -2841,9 +2824,7 @@ object TextQueries {
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])
          |  ELSE [] END AS sh FROM tk_t),
          |fp_t AS (SELECT doc_id, list_distinct(list_transform(sh, s ->
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007))) AS fps FROM sh_t),
+         |  ${foldSql("s")})) AS fps FROM sh_t),
          |g AS (SELECT doc_id, unnest(fps) AS fp FROM fp_t),
          |bench AS (SELECT DISTINCT fp FROM g WHERE doc_id % 97 = 0)
          |SELECT g.doc_id, COUNT(*) AS n_hits
@@ -2853,9 +2834,7 @@ object TextQueries {
          |sh_t AS (SELECT doc_id, CASE WHEN len(tk) >= 3 THEN list_transform(range(1, len(tk) - 1),
          |  i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) ELSE [] END AS sh FROM tk_t),
          |fp_t AS (SELECT doc_id, list_transform(sh, s ->
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(s, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007)) AS fps FROM sh_t)
+         |  ${foldSql("s")}) AS fps FROM sh_t)
          |SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_grams,
          |  CAST(len(list_distinct(fps)) AS BIGINT) AS n_distinct,
          |  1.0 - CAST(len(list_distinct(fps)) AS BIGINT) / CAST(len(fps) AS BIGINT) AS rep_ratio
@@ -2863,14 +2842,14 @@ object TextQueries {
     QueryDef("curate_sample", curateSample,
       s"""WITH h_t AS (SELECT doc_id, lang,
          |  CASE WHEN lang = 'en' THEN 40 ELSE 15 END AS rate,
-         |  $fpSql % 100 AS h
+         |  ${foldSql("text")} % 100 AS h
          |  FROM documents)
          |SELECT lang, CAST(rate AS BIGINT) AS rate, COUNT(*) AS n_sampled,
          |       MIN(doc_id) AS first_doc
          |FROM h_t WHERE h < rate GROUP BY lang, rate""".stripMargin),
     QueryDef("curate_neyman_sample", curateNeymanSample,
       s"""WITH d AS MATERIALIZED (SELECT doc_id, lang, n_chars,
-         |    $fpSql % 1000000 AS h
+         |    ${foldSql("text")} % 1000000 AS h
          |  FROM documents),
          |a AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |    CAST(SUM(n_chars) AS BIGINT) AS sx,
@@ -2897,7 +2876,7 @@ object TextQueries {
     QueryDef("curate_pps_sample", curatePpsSample,
       s"""WITH h_t AS (SELECT doc_id, n_chars,
          |  CAST(len($toksSql) AS BIGINT) AS tok_n,
-         |  $fpSql % 2000 AS h
+         |  ${foldSql("text")} % 2000 AS h
          |  FROM documents)
          |SELECT doc_id, n_chars, tok_n,
          |       CAST(tok_n * 2000 AS DOUBLE) / CAST(n_chars AS DOUBLE) AS ht_contrib
@@ -2930,10 +2909,7 @@ object TextQueries {
          |  FROM documents)
          |SELECT doc_id,
          |  CAST(len(regexp_extract_all(text, '[a-z0-9]+@[a-z0-9]+\\.[a-z]+')) AS BIGINT) AS n_emails,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(string_split(regexp_replace(text, '[a-z0-9]+@[a-z0-9]+\\.[a-z]+', '[EMAIL]', 'g'), ''),
-         |      ch -> CAST(unicode(ch) AS BIGINT))),
-         |    (a, b) -> (a * 31 + b) % 1000000007) AS redacted_fp
+         |  ${foldSql("regexp_replace(text, '[a-z0-9]+@[a-z0-9]+\\.[a-z]+', '[EMAIL]', 'g')")} AS redacted_fp
          |FROM pii""".stripMargin),
     QueryDef("curate_pipeline", curatePipeline,
       s"""WITH corpus AS (SELECT doc_id, text, n_chars FROM documents
@@ -2941,7 +2917,7 @@ object TextQueries {
          |s1 AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_tokens,
          |         ${TextOps.langMarkers.map { case (l, ws) => s"${markerSql(ws)} AS score_$l" }.mkString(", ")},
          |         $qualitySql AS quality,
-         |         $fpSql AS fp
+         |         ${foldSql("text")} AS fp
          |       FROM corpus),
          |s2 AS (SELECT *,
          |         GREATEST(${TextOps.langMarkers.map { case (l, _) => s"score_$l" }.mkString(", ")}) AS best
@@ -2963,10 +2939,8 @@ object TextQueries {
          |    / CAST(len($toksSql) AS BIGINT) AS distinct_ratio
          |FROM documents""".stripMargin),
     QueryDef("text_fingerprint", textFingerprint,
-      """SELECT doc_id,
-        |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-        |    list_transform(string_split(text, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-        |    (a, b) -> (a * 31 + b) % 1000000007) AS fp
+      s"""SELECT doc_id,
+        |  ${foldSql("text")} AS fp
         |FROM documents""".stripMargin),
     QueryDef("text_langid_confusion", textLangidConfusion,
       s"""WITH p AS (

@@ -57,7 +57,8 @@ final class GraftStream[T](val ds: Dataset[T]) {
     * request latency, benchmarks/100_million_downloads/client-pypeln-io.py).
     * Same bounded in-flight window as the batch
     * [[graft.core.GraftStage.mapAsync]], applied per micro-batch
-    * partition; `timeout` drops stragglers. Build Futures on
+    * partition; `timeout` drops stragglers (zero, negative or infinite:
+    * no bound). Build Futures on
     * `GraftStage.asyncEc` inside the lambda. */
   def mapAsync[B](f: T => scala.concurrent.Future[B], workers: Int = 8,
       timeout: scala.concurrent.duration.Duration = graft.core.GraftStage.DefaultAsyncTimeout)(

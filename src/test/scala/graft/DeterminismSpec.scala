@@ -45,7 +45,7 @@ class DeterminismSpec extends AnyFunSuite {
     "curate_gopher",     // modal-ngram kernel + in-row rules
     "sim_incremental_ivf", // broadcast argmax assignment + cell join
     "q_binpack",         // ordered cumsum bin assignment
-    "mm_scene_cuts",     // per-row frame histograms
+    "mm_bin_scene_cuts", // per-row frame histograms
     // round-11 additions with partitioning-sensitive machinery:
     "events_survival",   // collected-series HOF product fold
     "sim_mmr",           // 4-stage greedy argmax windows with tiebreaks
@@ -94,7 +94,7 @@ class DeterminismSpec extends AnyFunSuite {
     "q_join_order_advisor", // two global K-smallest order statistics
     "q_mcv_stats",       // three partial top-8 ranks with value tiebreaks
     "events_ips",        // data-derived midpoint broadcast + policy fold
-    "mm_container_sniff", // planted-prefix mint + leading-bytes sniff
+    "mm_bin_sniff",      // planted-prefix mint + leading-bytes sniff
     // round-13 additions with partitioning-sensitive machinery:
     "events_bootstrap",  // hash-deterministic Poisson weights + array fold
     "events_mannwhitney", // globalCumSum milli-rank prefix over tie groups
@@ -107,11 +107,11 @@ class DeterminismSpec extends AnyFunSuite {
     "q_t_closeness",     // segment grid left join + integer TVD fold
     "sim_pq_refine",     // ADC stage + bounded exact re-rank + recall folds
     "events_markov_entropy", // session lag pass + millibit entropy fold
-    "mm_sharpness",      // codegen Laplacian kernel + 16-band rollup
+    "mm_bin_sharpness",  // codegen Laplacian kernel + 16-band rollup
     "events_pacf",       // grid self-joins + exact rational Durbin-Levinson
     "q_ndv_estimate",    // hash sample + abundance-profile folds
     "q_partition_advisor", // map-explode unpivot + decimal Simpson fold
-    "mm_byte_runs",      // codegen run-length kernel + planted tails
+    "mm_bin_runs",       // codegen run-length kernel + constant bodies
     "dedup_cluster_histogram", // fixpoint + singleton restore + size rollup
     "curate_dedup_mass", // fp-keyed keeper join + mirror-source plant
     "q_filter_reorder_advisor", // 7 joint counts + literal order explode

@@ -353,6 +353,27 @@ class GraftStageSpec extends AnyFunSuite {
     assert(got.sorted == (0 until 10).filterNot(_ == 4))
   }
 
+  test("mapEx: an infinite timeout is no bound — every element returns") {
+    val xs = (0 until 10).toSeq
+    val before = GraftStage.asyncDroppedCount
+    val got = xs.toStage
+      .mapEx[Null, Int]((x, _) => x, timeout = Duration.Inf)
+      .collectValues()
+    assert(got.sorted == xs)
+    assert(GraftStage.asyncDroppedCount == before)
+  }
+
+  test("mapAsync: a zero timeout is no bound — delayed Futures all return, none dropped") {
+    val xs = (0 until 20).toSeq
+    val before = GraftStage.asyncDroppedCount
+    val got = xs.toStage
+      .mapAsync(x => Future { Thread.sleep(20); x }(GraftStage.asyncEc),
+        workers = 4, timeout = Duration.Zero)
+      .collectValues()
+    assert(got.sorted == xs)
+    assert(GraftStage.asyncDroppedCount == before)
+  }
+
   test("each + run: side effect fires exactly once per element when cached (deliver-once)") {
     Counters.reset()
     val st = (0 until 25).toSeq.toStage.each(_ => Counters.effects.incrementAndGet()).cached

@@ -34,4 +34,14 @@ class HarnessSpec extends AnyFunSuite {
       assert(e.getMessage.contains("q_typo"), e.getMessage)
     }
   }
+
+  test("Profile and Verify fail with their usage line on a wrong argument count, before a session starts") {
+    for ((main, args) <- Seq[(Array[String] => Unit, Array[String])](
+        (Profile.main, Array()), (Profile.main, Array("sf-dir-unread")),
+        (Verify.main, Array()), (Verify.main, Array("sf-dir-unread")),
+        (Verify.main, Array("sf-dir-unread", "out-dir-unwritten", "extra")))) {
+      val e = intercept[IllegalArgumentException](main(args))
+      assert(e.getMessage.contains("usage: graft."), e.getMessage)
+    }
+  }
 }

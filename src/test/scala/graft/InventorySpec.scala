@@ -12,9 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite on purpose.
   */
 class InventorySpec extends AnyFunSuite {
-  test("393 declared queries") {
-    assert(SparkEntry.all.size == 393, s"ledger says 393, found ${SparkEntry.all.size}")
-    assert(SparkEntry.queries.size == 393 && SparkEntry.oracleSql.size == 393)
+  test("387 declared queries") {
+    assert(SparkEntry.all.size == 387, s"ledger says 387, found ${SparkEntry.all.size}")
+    assert(SparkEntry.queries.size == 387 && SparkEntry.oracleSql.size == 387)
   }
 
   test("a query name declared twice fails, naming the name") {

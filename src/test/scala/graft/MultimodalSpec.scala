@@ -177,15 +177,15 @@ class MultimodalSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"), s"decode plan must not shuffle blobs:\n$plan")
   }
 
-  test("mm_scene_cuts: every planted mid-blob scene change is detected at boundary 4") {
-    val got = SparkEntry.queries("mm_scene_cuts")(spark, "/root/testdata/sf0.001").collect()
+  test("mm_bin_scene_cuts: every planted mid-blob scene change is detected at boundary 4") {
+    val got = SparkEntry.queries("mm_bin_scene_cuts")(spark, "/root/testdata/sf0.001").collect()
     val byDoc = got.groupBy(_.getAs[Long]("doc_id"))
     assert(byDoc.nonEmpty)
     byDoc.foreach { case (id, rows) =>
       assert(rows.length == 7, s"doc $id: 8 frames -> 7 boundaries")
       val cut4 = rows.find(_.getAs[Long]("boundary") == 4L).get
       assert(cut4.getAs[Boolean]("is_cut"),
-        s"doc $id: the lower->upper case flip at mid-blob must cut: $cut4")
+        s"doc $id: the constant->textured splice at mid-blob must cut: $cut4")
     }
   }
 }

@@ -781,7 +781,7 @@ class PlanSpec extends AnyFunSuite {
     try {
       Seq("dedup_near", "dedup_simhash", "sim_lsh", "mm_bytes", "mm_hist_sim",
         "text_fingerprint", "dedup_edit_within", "mm_phash",
-        "mm_audio_dupes", "mm_bin_entropy", "mm_bin_frames").foreach { q =>
+        "mm_bin_audio_dupes", "mm_bin_entropy", "mm_bin_frames").foreach { q =>
         assert(SparkEntry.queries(q)(spark, sf).count() >= 0, q)
       }
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
@@ -830,11 +830,11 @@ class PlanSpec extends AnyFunSuite {
       s"lineitem must read from the bucketed table:\n$p")
   }
 
-  test("mm_audio_dupes: banded hamming pairing is a bucket equi-join — no nested loop, no cartesian") {
+  test("mm_bin_audio_dupes: banded hamming pairing is a bucket equi-join — no nested loop, no cartesian") {
     // The audio-fingerprint pairing must ride the same (band, key)
     // equi-join as every hash family; the blob itself never joins.
     try {
-      Seq("mm_audio_dupes", "mm_audio_dupes_capped").foreach { q =>
+      Seq("mm_bin_audio_dupes", "mm_bin_audio_dupes_capped").foreach { q =>
         val p = plan(q)
         assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
           s"$q:\n$p")
@@ -1205,8 +1205,8 @@ class PlanSpec extends AnyFunSuite {
       nOps(p, "BroadcastHashJoin") == 0, s"no joins in a per-row rule bundle:\n$p")
   }
 
-  test("mm_scene_cuts: histograms, L1s and cut flags all inside the row — no shuffle, no join") {
-    val p = plan("mm_scene_cuts")
+  test("mm_bin_scene_cuts: histograms, L1s and cut flags all inside the row — no shuffle, no join") {
+    val p = plan("mm_bin_scene_cuts")
     assert(nOps(p, "Scan parquet") == 1, s"one scan; frames never explode into a self-join:\n$p")
     assert(nOps(p, "Exchange") == 0, s"the blob must not leave its scan partition:\n$p")
     assert(nOps(p, "SortMergeJoin") + nOps(p, "ShuffledHashJoin") +
@@ -1595,8 +1595,8 @@ class PlanSpec extends AnyFunSuite {
       nOps(p, "ShuffledHashJoin") + nOps(p, "CartesianProduct") == 0, p)
   }
 
-  test("mm_byte_runs / mm_sharpness: kernel rows stay in-partition — no join, no window") {
-    for (q <- Seq("mm_byte_runs", "mm_sharpness")) {
+  test("mm_bin_runs / mm_bin_sharpness: kernel rows stay in-partition — no join, no window") {
+    for (q <- Seq("mm_bin_runs", "mm_bin_sharpness")) {
       val p = plan(q)
       assert(nOps(p, "Window") == 0, s"$q:\n$p")
       assert(nOps(p, "SortMergeJoin") + nOps(p, "ShuffledHashJoin") +

@@ -482,9 +482,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming hammingCandidates: in-stream verified pairs equal batch hammingPairs (audio fingerprint)") {
     // The GENERIC hash-family twin: the audio band-energy fingerprints
-    // of the real sf0.001 corpus (+ planted last-byte edits — the
-    // mm_audio_dupes construction) arrive over THREE shuffled
-    // micro-batches, and the stream's verified (id_a, id_b, hamming)
+    // of the real sf0.001 corpus (+ planted last-byte edits) arrive
+    // over THREE shuffled micro-batches, and the stream's verified (id_a, id_b, hamming)
     // set must equal batch hammingPairs exactly — same band split, same
     // bit_count verification, pigeonhole recall intact across batch
     // boundaries (state holds the full hash, so no estimator slack).
