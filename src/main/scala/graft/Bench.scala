@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Harness.knobs.sfDir
     val spark = Harness.session()
     // SPARK_GRAFT_ONLY=a,b: local-iteration subset (unset in the
     // driver's run — the full inventory is the reported surface).

@@ -25,11 +25,15 @@ object Harness {
     *    probe of [[graft.queries.Tables.scaleProbe]];
     *  - `SPARK_GRAFT_REPS` (default 3): Profile's timed repetitions;
     *  - `SPARK_GRAFT_ONLY=a,b`: restrict Bench/Verify to those queries
-    *    (a local-iteration aid; unset, the full inventory runs). */
+    *    (a local-iteration aid; unset, the full inventory runs);
+    *  - `SPARK_GRAFT_SF_DIR` (default: the sf0.1 testdata directory):
+    *    the scale factor Bench runs on. */
   final case class Knobs(cpus: Int, benchScale: Option[Int], reps: Int,
-      only: Option[Set[String]])
+      only: Option[Set[String]], sfDir: String = Knobs.DefaultSfDir)
 
   object Knobs {
+    val DefaultSfDir = "/root/testdata/sf0.1"
+
     def parse(env: Map[String, String]): Knobs = {
       def positive(name: String): Option[Int] = env.get(name).map { v =>
         v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
@@ -41,7 +45,8 @@ object Harness {
         names
       }
       Knobs(positive("SPARK_GRAFT_CPUS").getOrElse(4), positive("SPARK_GRAFT_BENCH_SCALE"),
-        positive("SPARK_GRAFT_REPS").getOrElse(3), only)
+        positive("SPARK_GRAFT_REPS").getOrElse(3), only,
+        env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir))
     }
   }
 

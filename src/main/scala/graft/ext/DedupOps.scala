@@ -39,10 +39,6 @@ object DedupOps {
   // [[graft.core.QueryCaches]] — the harness calls [[releaseCaches]]
   // after each query's terminal action.
 
-  /** Persist `df` and register it for release at end-of-query. */
-  def trackPersist(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    graft.core.QueryCaches.track(df)
-
   /** Unpersist every tracked frame/checkpoint (idempotent). */
   def releaseCaches(): Unit = graft.core.QueryCaches.release()
 
@@ -89,7 +85,7 @@ object DedupOps {
     *
     * `maxBucket` (optional) drops buckets larger than the bound before
     * the self-join — the boilerplate/spam skew guard ([[capBuckets]]).
-    * The signature relation is persisted via [[trackPersist]] — it
+    * The signature relation is persisted via [[QueryCaches.track]] — it
     * feeds 4 consumers and Spark reuses no identical subplans (at
     * warehouse scale, stage it to a work table instead); the harness
     * releases it after the query's terminal action ([[releaseCaches]]).
@@ -101,7 +97,7 @@ object DedupOps {
     // r17: fan the raw text out before the shingle/minhash kernels
     // (SkewOps.fanOut — identity at warehouse scale, 32× kernel
     // parallelism over the local one-row-group scans).
-    val withFps = trackPersist(graft.ext.SkewOps.fanOut(df)
+    val withFps = QueryCaches.track(graft.ext.SkewOps.fanOut(df)
       .select(col(idCol).as("_id"),
         shingleFps(TextOps.tokens(col(textCol)), k).as("fps")))
     val exploded = withFps.select(col("_id"),
@@ -192,13 +188,13 @@ object DedupOps {
     // releases both at end-of-query, the default storage level spills
     // to disk under pressure, and an eager early unpersist would need
     // an extra materialization barrier costing more than the overlap.
-    val base = trackPersist(
+    val base = QueryCaches.track(
       withFps.select(col(idCol).as("_id"), array_distinct(col(fpsCol)).as("_fps")))
     val toks = base.select(col("_id"), explode(col("_fps")).as("fp"))
     val dfreq = toks.groupBy(col("fp")).agg(count(lit(1)).as("df"))
     // (df, fp)-sorted element array + size, computed once for the
     // prefix generation AND both verification probes.
-    val ordered = trackPersist(toks.join(dfreq, "fp")
+    val ordered = QueryCaches.track(toks.join(dfreq, "fp")
       .groupBy(col("_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("fp")))).as("arr"))
       .select(col("_id"), col("arr"), transform(col("arr"), e => e("fp")).as("fps"),
@@ -374,7 +370,7 @@ object DedupOps {
     * candidates are verified at `bit_count(xor) <= maxHamming`.
     *
     * Plan shape (the [[nearDupPairs]] band-join shape): the signature
-    * relation is computed ONCE ([[trackPersist]]) and posexploded to
+    * relation is computed ONCE ([[QueryCaches.track]]) and posexploded to
     * `bands` fixed-width (band, key) rows per doc — a single bucket
     * equi-join, never two half self-joins, never all-pairs. Candidate
     * volume is Σ_buckets n_b² — bounded at any corpus size by
@@ -423,14 +419,14 @@ object DedupOps {
     * with id_a < id_b. `bands >= maxHamming + 1` gives the pigeonhole
     * recall guarantee; `maxBucket` engages the [[capBuckets]] hot-
     * bucket guard. The hash relation is computed once
-    * ([[trackPersist]]) and posexploded to `bands` fixed-width rows —
+    * ([[QueryCaches.track]]) and posexploded to `bands` fixed-width rows —
     * never all-pairs, never two half self-joins. */
   def hammingPairs(df: org.apache.spark.sql.DataFrame, idCol: String, hashCol: String,
       bits: Int, bands: Int, maxHamming: Int = 2,
       maxBucket: Int = 0): org.apache.spark.sql.DataFrame = {
     require(bands >= 1 && bits >= bands && bits <= 62,
       s"hammingPairs requires 1 <= bands <= bits <= 62, got bits=$bits bands=$bands")
-    val sigs = trackPersist(df.select(col(idCol).as("_id"), col(hashCol).as("sig")))
+    val sigs = QueryCaches.track(df.select(col(idCol).as("_id"), col(hashCol).as("sig")))
     val width = bits / bands
     val bandKeys = array((0 until bands).map { j =>
       val lo = j * width

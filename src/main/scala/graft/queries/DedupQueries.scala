@@ -33,13 +33,94 @@ object DedupQueries {
   private def firstTokenDropped: org.apache.spark.sql.Column =
     expr("substring(text, instr(text, ' ') + 1)")
 
+  // The planted corpora and indexes several builders share, each
+  // spelled once. Builders wrap them in `QueryCaches.track` where they
+  // reuse them.
+
+  /** The corpus with a planted EXACT copy of every doc at doc_id + SHIFT. */
+  private def withExactCopies(d: DataFrame): DataFrame =
+    d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"), col("text")))
+
+  /** The corpus with a planted NEAR copy of every doc: doc_id + SHIFT,
+    * first token dropped. */
+  private def withNearCopies(d: DataFrame): DataFrame =
+    d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"), firstTokenDropped.as("text")))
+
+  /** The admission batch planting all three outcomes: exact copies
+    * (+SHIFT, corpus dups), first-token-dropped texts (+2·SHIFT,
+    * novel) and copies of every 5th doc (+3·SHIFT, dup of the corpus
+    * AND of the batch's own +SHIFT row). */
+  private def plantedBatch(d: DataFrame): DataFrame =
+    d.select((col("doc_id") + SHIFT).as("doc_id"), col("text"))
+      .unionAll(d.select((col("doc_id") + 2 * SHIFT).as("doc_id"),
+        firstTokenDropped.as("text")))
+      .unionAll(d.filter(col("doc_id") % 5 === 0)
+        .select((col("doc_id") + 3 * SHIFT).as("doc_id"), col("text")))
+
+  /** The admission screen of `batch` `(doc_id, fp)` against a
+    * reopened fp-bucketed index `idx` `(fp, countCol)`: per batch doc
+    * the index count, whether an earlier-id batch row owns the same
+    * fp, and the verdict. Join FIRST (the batch co-partitions to the
+    * index buckets), window AFTER (it reuses the join's fp
+    * partitioning — no second exchange); `merge` pins SMJ so the
+    * exchange-free index side is visible even at test scale where AQE
+    * would broadcast. */
+  private def screen(batch: DataFrame, idx: DataFrame, countCol: String): DataFrame = {
+    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
+    batch.hint("merge").join(idx, Seq("fp"), "left")
+      .withColumn("rk", row_number().over(w))
+      .select(col("doc_id"), col("fp"),
+        coalesce(col(countCol), lit(0L)).as(countCol),
+        (col("rk") > 1).as("dup_in_batch"),
+        (coalesce(col(countCol), lit(0L)) > 0 || col("rk") > 1).as("is_dup"))
+  }
+
+  /** Each doc's first 80 printable-ASCII chars `a` beside its planted
+    * first-token-dropped mutant's `b` `(doc_id, a, b)`. The ASCII strip
+    * makes the engines' edit distances agree: DuckDB's levenshtein
+    * counts BYTE edits, Spark's CODEPOINT edits. */
+  private def asciiSlicePairs(spark: SparkSession, sfDir: String): DataFrame = {
+    def ascii(c: org.apache.spark.sql.Column) = regexp_replace(c, "[^ -~]", "")
+    docs(spark, sfDir)
+      .select(col("doc_id"),
+        substring(ascii(col("text")), 1, 80).as("a"),
+        substring(ascii(firstTokenDropped), 1, 80).as("b"))
+  }
+
+  /** Exact Jaccard `(doc_a, doc_b, jaccard)` of each consecutive doc
+    * pair over the fingerprint sets `(doc_id, fps)`. */
+  private def consecutiveJaccard(withFps: DataFrame): DataFrame = {
+    val a = withFps.select(col("doc_id").as("doc_a"), col("fps").as("fps_a"))
+    val b = withFps.select(col("doc_id").as("doc_b"), col("fps").as("fps_b"))
+    a.join(b, col("doc_b") === col("doc_a") + 1)
+      .select(col("doc_a"), col("doc_b"),
+        DedupOps.jaccard(col("fps_a"), col("fps_b")).as("jaccard"))
+  }
+
+  /** The corpus fingerprint index `(fp, n_corpus)`. */
+  private def fpCounts(d: DataFrame): DataFrame =
+    d.select(fingerprint(col("text")).as("fp"))
+      .groupBy(col("fp")).agg(count(lit(1)).as("n_corpus"))
+
+  /** [[fpCounts]] written once as the fp-bucketed catalog table the
+    * index lifecycle rows reopen. */
+  private def fpIndex(d: DataFrame, sfDir: String): DataFrame =
+    graft.ext.LayoutOps.bucketedTable(fpCounts(d),
+      s"graft_fp_index_${indexTag(sfDir)}", "fp", buckets = 8)
+
+  /** 3-shingle fingerprints `(doc_id, fps)` over the fanned-out corpus:
+    * fanOut BELOW the shingle kernel, so the kernel's one evaluation
+    * (prefixJoin persists this relation) does not tokenize 2-task. */
+  private def shingled(corpus: DataFrame): DataFrame =
+    graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"), shingleFps(tokens(col("text")), 3).as("fps"))
+
   /** Exact dedup: content-fingerprint hash groupBy over a corpus with
     * planted exact copies. One shuffle of (fp, doc_id) pairs with
     * map-side combine; the representative is min(doc_id) — the standard
     * keep-first rule, deterministic at any parallelism. */
   def dedupExact(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"), col("text")))
+    val corpus = withExactCopies(d)
     corpus.select(fingerprint(col("text")).as("fp"), col("doc_id"))
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("n_copies"))
@@ -61,13 +142,8 @@ object DedupQueries {
     * keys — the corpus text is never rescanned per batch row. */
   def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val corpusFps = d.select(fingerprint(col("text")).as("fp"))
-      .groupBy(col("fp")).agg(count(lit(1)).as("n_corpus"))
-    val batch = d.select((col("doc_id") + SHIFT).as("doc_id"), col("text"))
-      .unionAll(d.select((col("doc_id") + 2 * SHIFT).as("doc_id"),
-        firstTokenDropped.as("text")))
-      .unionAll(d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 3 * SHIFT).as("doc_id"), col("text")))
+    val corpusFps = fpCounts(d)
+    val batch = plantedBatch(d)
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
     val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
     batch.withColumn("rk", row_number().over(w))
@@ -109,30 +185,11 @@ object DedupQueries {
     * corpus-sized index scan is paid at layout time, each batch pays
     * only its own shuffle. */
   def dedupIndexPersist(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
     val d = docs(spark, sfDir)
-    val idx = LayoutOps.bucketedTable(
-      d.select(fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(count(lit(1)).as("n_corpus")),
-      s"graft_fp_index_$tag", "fp", buckets = 8)
-    val batch = d.select((col("doc_id") + SHIFT).as("doc_id"), col("text"))
-      .unionAll(d.select((col("doc_id") + 2 * SHIFT).as("doc_id"),
-        firstTokenDropped.as("text")))
-      .unionAll(d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 3 * SHIFT).as("doc_id"), col("text")))
+    val idx = fpIndex(d, sfDir)
+    val batch = plantedBatch(d)
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-    // join FIRST (batch co-partitions to the index buckets), window
-    // AFTER (it reuses the join's fp partitioning — no second
-    // exchange); `merge` pins SMJ so the exchange-free index side is
-    // visible even at test scale where AQE would broadcast.
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    batch.hint("merge").join(idx, Seq("fp"), "left")
-      .withColumn("rk", row_number().over(w))
-      .select(col("doc_id"), col("fp"),
-        coalesce(col("n_corpus"), lit(0L)).as("n_corpus"),
-        (col("rk") > 1).as("dup_in_batch"),
-        (coalesce(col("n_corpus"), lit(0L)) > 0 || col("rk") > 1).as("is_dup"))
+    screen(batch, idx, "n_corpus")
   }
 
   /** Fingerprint-index COMPACTION — the fold that completes
@@ -152,17 +209,10 @@ object DedupQueries {
     * the green hash is the fold == rebuild proof. */
   def dedupIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val d = docs(spark, sfDir)
-    val idx = LayoutOps.bucketedTable(
-      d.select(fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(count(lit(1)).as("n_corpus")),
-      s"graft_fp_index_$tag", "fp", buckets = 8)
-    val batch1Counts = d.select((col("doc_id") + SHIFT).as("doc_id"), col("text"))
-      .unionAll(d.select((col("doc_id") + 2 * SHIFT).as("doc_id"),
-        firstTokenDropped.as("text")))
-      .unionAll(d.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 3 * SHIFT).as("doc_id"), col("text")))
+    val idx = fpIndex(d, sfDir)
+    val batch1Counts = plantedBatch(d)
       .select(fingerprint(col("text")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("n_batch"))
     val idx2 = LayoutOps.bucketedTable(
@@ -180,13 +230,7 @@ object DedupQueries {
         .select((col("doc_id") + 6 * SHIFT).as("doc_id"),
           concat(col("text"), lit(" qz")).as("text")))
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    batch2.hint("merge").join(idx2, Seq("fp"), "left")
-      .withColumn("rk", row_number().over(w))
-      .select(col("doc_id"), col("fp"),
-        coalesce(col("n_index"), lit(0L)).as("n_index"),
-        (col("rk") > 1).as("dup_in_batch"),
-        (coalesce(col("n_index"), lit(0L)) > 0 || col("rk") > 1).as("is_dup"))
+    screen(batch2, idx2, "n_index")
   }
 
   /** Fingerprint-index DELETES — the fourth act of the exact-dedup
@@ -209,12 +253,9 @@ object DedupQueries {
     * bucketed-side zero-exchange join + one bucketed write. */
   def dedupIndexDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val d = docs(spark, sfDir)
-    val idx = LayoutOps.bucketedTable(
-      d.select(fingerprint(col("text")).as("fp"))
-        .groupBy(col("fp")).agg(count(lit(1)).as("n_corpus")),
-      s"graft_fp_index_$tag", "fp", buckets = 8)
+    val idx = fpIndex(d, sfDir)
     val delCounts = d.filter(pmod(col("doc_id"), lit(9L)) === 2)
       .select(fingerprint(col("text")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("n_del"))
@@ -226,13 +267,7 @@ object DedupQueries {
       s"graft_fp_index_g3_$tag", "fp", buckets = 8)
     val batch = d.select((col("doc_id") + SHIFT).as("doc_id"),
       fingerprint(col("text")).as("fp"))
-    val w = Window.partitionBy(col("fp")).orderBy(col("doc_id"))
-    batch.hint("merge").join(idx3, Seq("fp"), "left")
-      .withColumn("rk", row_number().over(w))
-      .select(col("doc_id"), col("fp"),
-        coalesce(col("n_index"), lit(0L)).as("n_index"),
-        (col("rk") > 1).as("dup_in_batch"),
-        (coalesce(col("n_index"), lit(0L)) > 0 || col("rk") > 1).as("is_dup"))
+    screen(batch, idx3, "n_index")
   }
 
   def curateDecontaminateNear(spark: SparkSession, sfDir: String): DataFrame = {
@@ -240,8 +275,8 @@ object DedupQueries {
     def sigs(df: DataFrame) = df.select(col("doc_id"),
         shingleFps(tokens(col("text")), 3).as("fps"))
       .select(col("doc_id"), col("fps"), minhash(col("fps"), 64).as("mh"))
-    val corpus = trackPersist(sigs(d))
-    val bench = trackPersist(sigs(d.filter(col("doc_id") % 97 === 0)
+    val corpus = graft.core.QueryCaches.track(sigs(d))
+    val bench = graft.core.QueryCaches.track(sigs(d.filter(col("doc_id") % 97 === 0)
       .select((col("doc_id") + SHIFT).as("doc_id"),
         firstTokenDropped.as("text"))))
     def bandsOf(df: DataFrame, id: String) = df.select(col("doc_id").as(id),
@@ -271,11 +306,7 @@ object DedupQueries {
     * — the strip makes that precondition true by construction instead
     * of an accident of the current corpus. */
   def dedupEditDistance(spark: SparkSession, sfDir: String): DataFrame = {
-    def ascii(c: org.apache.spark.sql.Column) = regexp_replace(c, "[^ -~]", "")
-    docs(spark, sfDir)
-      .select(col("doc_id"),
-        substring(ascii(col("text")), 1, 80).as("a"),
-        substring(ascii(firstTokenDropped), 1, 80).as("b"))
+    asciiSlicePairs(spark, sfDir)
       .select(col("doc_id"),
         levenshtein(col("a"), col("b")).cast("bigint").as("edit_dist"),
         length(col("a")).cast("bigint").as("len_a"),
@@ -291,11 +322,7 @@ object DedupQueries {
     * mutants (first token + space, typically <= 11 chars) and genuine
     * rejections in the output. */
   def dedupEditWithin(spark: SparkSession, sfDir: String): DataFrame = {
-    def ascii(c: org.apache.spark.sql.Column) = regexp_replace(c, "[^ -~]", "")
-    docs(spark, sfDir)
-      .select(col("doc_id"),
-        substring(ascii(col("text")), 1, 80).as("a"),
-        substring(ascii(firstTokenDropped), 1, 80).as("b"))
+    asciiSlicePairs(spark, sfDir)
       .select(col("doc_id"),
         graft.functions.HashExprs.editWithin(col("a"), col("b"), 12).as("within_12"))
   }
@@ -308,10 +335,7 @@ object DedupQueries {
     * ≈ 1. Shuffle volume: 16 fixed-width (band, sig, id) rows per doc —
     * at 100 TB this joins within buckets, never across the corpus. */
   def dedupNear(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val mut = d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text"))
-    val corpus = d.unionAll(mut)
+    val corpus = withNearCopies(docs(spark, sfDir))
     DedupOps.nearDupPairs(corpus, "doc_id", "text",
         k = 3, hashes = 64, bands = 16, threshold = 0.7)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
@@ -333,9 +357,7 @@ object DedupQueries {
     * should be chosen: run the sweep on a sampled shard, read the
     * (precision, recall, candidate-volume) row, ship the config. */
   def dedupBandSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
+    val corpus = withNearCopies(docs(spark, sfDir))
     // r17: SkewOps.fanOut below the kernel was measured HERE and
     // rejected (interleaved old/new A/B, sf0.1, min-of-4: 2.64 →
     // 3.08 s): this query's mass is not the one-time signature kernel
@@ -408,11 +430,7 @@ object DedupQueries {
   def dedupJaccard(spark: SparkSession, sfDir: String): DataFrame = {
     val withFps = docs(spark, sfDir)
       .select(col("doc_id"), shingleFps(tokens(col("text")), 3).as("fps"))
-    val a = withFps.select(col("doc_id").as("doc_a"), col("fps").as("fps_a"))
-    val b = withFps.select(col("doc_id").as("doc_b"), col("fps").as("fps_b"))
-    a.join(b, col("doc_b") === col("doc_a") + 1)
-      .select(col("doc_a"), col("doc_b"),
-        DedupOps.jaccard(col("fps_a"), col("fps_b")).as("jaccard"))
+    consecutiveJaccard(withFps)
   }
 
   /** MinHash calibration: the Broder estimator beside the exact value.
@@ -444,9 +462,7 @@ object DedupQueries {
     * an exact transitive closure. */
   def dedupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val mut = d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text"))
-    val pairs = DedupOps.nearDupPairs(d.unionAll(mut), "doc_id", "text",
+    val pairs = DedupOps.nearDupPairs(withNearCopies(d), "doc_id", "text",
       k = 3, hashes = 64, bands = 16, threshold = 0.7)
     DedupOps.dupClusters(pairs)
   }
@@ -462,9 +478,7 @@ object DedupQueries {
     * the histogram is at most |distinct sizes| rows. */
   def dedupClusterHistogram(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val mut = d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text"))
-    val corpus = graft.core.QueryCaches.track(d.unionAll(mut))
+    val corpus = graft.core.QueryCaches.track(withNearCopies(d))
     val pairs = DedupOps.nearDupPairs(corpus, "doc_id", "text",
       k = 3, hashes = 64, bands = 16, threshold = 0.7)
     val reps = DedupOps.dupClusters(pairs)
@@ -489,11 +503,7 @@ object DedupQueries {
     val withFps = docs(spark, sfDir)
       .select(col("doc_id"),
         graft.functions.HashExprs.charShingleFps(col("text"), 5).as("fps"))
-    val a = withFps.select(col("doc_id").as("doc_a"), col("fps").as("fps_a"))
-    val b = withFps.select(col("doc_id").as("doc_b"), col("fps").as("fps_b"))
-    a.join(b, col("doc_b") === col("doc_a") + 1)
-      .select(col("doc_a"), col("doc_b"),
-        DedupOps.jaccard(col("fps_a"), col("fps_b")).as("jaccard"))
+    consecutiveJaccard(withFps)
   }
 
   /** SimHash banded pairing: corpus ∪ planted exact copies through
@@ -506,7 +516,7 @@ object DedupQueries {
     * bucket-bounded instead of N²/2^width. */
   def dedupSimhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"), col("text")))
+    val corpus = withExactCopies(d)
     DedupOps.simhashPairs(corpus, "doc_id", "text",
         bits = 30, bands = 2, maxHamming = 2)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
@@ -524,7 +534,7 @@ object DedupQueries {
     * HAVING-bounded (band, key) CTE. */
   def dedupSimhashPairsCapped(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"), col("text")))
+    val corpus = withExactCopies(d)
     DedupOps.simhashPairs(corpus, "doc_id", "text",
         bits = 30, bands = 3, maxHamming = 2, maxBucket = 4)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("hamming"))
@@ -538,9 +548,7 @@ object DedupQueries {
     * proves the 100 TB guard changes results exactly as specified. */
   def dedupNearCapped(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val mut = d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text"))
-    DedupOps.nearDupPairs(d.unionAll(mut), "doc_id", "text",
+    DedupOps.nearDupPairs(withNearCopies(d), "doc_id", "text",
         k = 3, hashes = 64, bands = 16, threshold = 0.7, maxBucket = 4)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"), col("jaccard"))
   }
@@ -564,14 +572,12 @@ object DedupQueries {
     * (measured ~0.4 s of the query at sf0.1). */
   def dedupCanonical(spark: SparkSession, sfDir: String): DataFrame = {
     val d = docs(spark, sfDir)
-    val mut = d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text"))
     // r17: cache the corpus pre-fanned (SkewOps.fanOut) — both cache
     // consumers (the near-dup kernel pass and the quality-score regexp
     // pass) otherwise run 2-task over the union of two one-row-group
     // scans.
     val corpus = graft.core.QueryCaches.track(
-      graft.ext.SkewOps.fanOut(d.unionAll(mut)))
+      graft.ext.SkewOps.fanOut(withNearCopies(d)))
     val clusters = DedupOps.dupClusters(
       DedupOps.nearDupPairs(corpus, "doc_id", "text",
         k = 3, hashes = 64, bands = 16, threshold = 0.7))
@@ -615,9 +621,7 @@ object DedupQueries {
     * 10-token collisions are ~0, making the report's selectivity
     * visible under the oracle hash. */
   def dedupSubstring(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(
-      d.select((col("doc_id") + SHIFT).as("doc_id"), firstTokenDropped.as("text")))
+    val corpus = withNearCopies(docs(spark, sfDir))
     val wins = graft.core.QueryCaches.track(
       graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
           posexplode(shingleFps(tokens(col("text")), 10)).as(Seq("pos", "fp")))
@@ -699,16 +703,11 @@ object DedupQueries {
     * dedup_simhash_pairs) only approximate. Output is all-integer
     * (intersection / union sizes); J ≥ 4/5 ⟺ 9·inter ≥ 4·(sa+sb). */
   def dedupPrefixJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
-    // r17: fanOut BELOW the shingle kernel — prefixJoin persists the
-    // fingerprint relation (the r17 pushdown-barrier fix reversing the
-    // r16 rejection), so the kernel runs ONCE, from the cache-building
-    // evaluation — which otherwise tokenizes 2-task.
-    val withFps = graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
-      shingleFps(tokens(col("text")), 3).as("fps"))
-    DedupOps.prefixJoin(withFps, "doc_id", "fps", 4, 5)
+    // r17: fanOut BELOW the shingle kernel ([[shingled]]) — prefixJoin
+    // persists the fingerprint relation (the r17 pushdown-barrier fix
+    // reversing the r16 rejection), so the kernel runs ONCE.
+    DedupOps.prefixJoin(shingled(withNearCopies(docs(spark, sfDir))),
+      "doc_id", "fps", 4, 5)
   }
 
   /** Hybrid lexical+semantic near-dup confirmation — the two-signal
@@ -724,12 +723,8 @@ object DedupQueries {
     * kernel ([[graft.functions.HashExprs.cosineSim]]) — per-pair
     * column work, no vector shuffle beyond the pair fetch. */
   def dedupHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
-    val withFps = graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
-      shingleFps(tokens(col("text")), 3).as("fps"))
-    val pairs = DedupOps.prefixJoin(withFps, "doc_id", "fps", 4, 5)
+    val pairs = DedupOps.prefixJoin(shingled(withNearCopies(docs(spark, sfDir))),
+      "doc_id", "fps", 4, 5)
     val emb = load(spark, sfDir, "embeddings")
     pairs
       .join(emb.select(col("vec_id").as("ka"), col("embedding").as("ea")),
@@ -763,9 +758,7 @@ object DedupQueries {
     val corpus = d.unionAll(
       d.filter(pmod(col("doc_id"), lit(7L)) === 0)
         .select((col("doc_id") + SHIFT).as("doc_id"), firstTokenDropped.as("text")))
-    val withFps = graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
-      shingleFps(tokens(col("text")), 3).as("fps"))
-    val pairs = DedupOps.prefixJoin(withFps, "doc_id", "fps", 4, 5, maxDf = 4)
+    val pairs = DedupOps.prefixJoin(shingled(corpus), "doc_id", "fps", 4, 5, maxDf = 4)
     val members = pairs
       .select(explode(array(col("id_a"), col("id_b"))).as("cid"))
       .select(pmod(col("cid"), lit(SHIFT)).as("doc_id")).distinct()
@@ -790,12 +783,8 @@ object DedupQueries {
     * VISIBLE: 591 of the uncapped 600 pairs survive at sf0.01, the 9
     * lost pairs' prefixes overlapped only on capped-out elements. */
   def dedupPrefixJoinCapped(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
-    val withFps = graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
-      shingleFps(tokens(col("text")), 3).as("fps"))
-    DedupOps.prefixJoin(withFps, "doc_id", "fps", 4, 5, maxDf = 4)
+    DedupOps.prefixJoin(shingled(withNearCopies(docs(spark, sfDir))),
+      "doc_id", "fps", 4, 5, maxDf = 4)
   }
 
   /** Blocked fuzzy entity resolution (record linkage): treat each
@@ -850,9 +839,7 @@ object DedupQueries {
     * drop). Dedup at the row level (distinct) rather than in-array so
     * neither engine depends on list-distinct ordering. */
   def dedupWinnow(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
+    val corpus = withNearCopies(docs(spark, sfDir))
     val sel = graft.core.QueryCaches.track(
       graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
           explode(graft.functions.HashExprs.winnowMins(
@@ -889,9 +876,7 @@ object DedupQueries {
     * staple. */
   def dedupSortedNeighborhood(spark: SparkSession, sfDir: String): DataFrame = {
     val W = 5
-    val d = docs(spark, sfDir)
-    val corpus = d.unionAll(d.select((col("doc_id") + SHIFT).as("doc_id"),
-      firstTokenDropped.as("text")))
+    val corpus = withNearCopies(docs(spark, sfDir))
     val keyed = graft.core.QueryCaches.track(
       graft.ext.SkewOps.fanOut(corpus).select(col("doc_id"),
         array_join(array_sort(tokens(col("text"))), " ").as("k"),

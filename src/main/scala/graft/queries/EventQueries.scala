@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import OracleFragments.{foldSql, log2MillisSql}
 import Tables._
@@ -37,6 +37,149 @@ object EventQueries {
 
   private def tsMicros = timestamp_micros(expr("ts div 1000"))
 
+  // The input relations several builders share, each spelled once.
+  // Builders wrap them in `QueryCaches.track` where they reuse them.
+
+  /** The µs stream `(user_id, event_id, tus)` the per-user windows
+    * order by (tie-break on event_id). */
+  private def usStream(spark: SparkSession, sfDir: String): DataFrame =
+    events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"))
+
+  /** [[usStream]] with `event_type`. */
+  private def usTypedStream(spark: SparkSession, sfDir: String): DataFrame =
+    events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), col("event_type"), expr("ts div 1000").as("tus"))
+
+  /** Each user's events in time order, tie-broken on event_id. */
+  private def userTimeOrder: WindowSpec =
+    Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
+
+  /** [[usStream]] with each event's predecessor time `prev` (null on
+    * a user's first event). */
+  private def usWithPrev(spark: SparkSession, sfDir: String): DataFrame =
+    usStream(spark, sfDir).withColumn("prev", lag(col("tus"), 1).over(userTimeOrder))
+
+  /** Gap-based session numbering over rows carrying `tus` and `prev`:
+    * a user's first event or a gap over 30 min starts a session, and
+    * `session_no` is the user's running count of starts. */
+  private def withSessionNo(df: DataFrame): DataFrame =
+    df.withColumn("new_s",
+        when(col("prev").isNull || col("tus") - col("prev") > GAP_NS / 1000, 1L).otherwise(0L))
+      .withColumn("session_no", sum(col("new_s")).over(
+        userTimeOrder.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** Daily event counts per type `(t, day, c)`, day = epoch day. */
+  private def dailyTypeCounts(spark: SparkSession, sfDir: String): DataFrame =
+    events(spark, sfDir)
+      .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
+      .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
+
+  /** Each type's daily counts as one day-ordered array `(t, cs)`. */
+  private def dailySeries(spark: SparkSession, sfDir: String): DataFrame =
+    dailyTypeCounts(spark, sfDir).groupBy(col("t"))
+      .agg(expr("transform(sort_array(collect_list(struct(day, c))), x -> x.c)").as("cs"))
+
+  /** The tracked daily counts and their split at the last week:
+    * `(daily, fit, holdout)`, holdout = the final 7 days, both halves
+    * carrying the last day `d1`. */
+  private def lastWeekSplit(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame, DataFrame) = {
+    val d = graft.core.QueryCaches.track(dailyTypeCounts(spark, sfDir))
+    val withB = d.crossJoin(broadcast(d.agg(max(col("day")).as("d1"))))
+    (d, withB.filter(col("day") <= col("d1") - 7), withB.filter(col("day") > col("d1") - 7))
+  }
+
+  /** The UTC calendar day of `ts` as days since the epoch. */
+  private def calendarDay: Column =
+    expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
+      "DATE '1970-01-01') AS BIGINT)")
+
+  /** Each type's dense calendar-day series `(t, d, cnt)` from its first
+    * to its last active day, days without events at 0. */
+  private def calendarSpine(spark: SparkSession, sfDir: String): DataFrame = {
+    val daily = events(spark, sfDir)
+      .groupBy(col("event_type").as("t"), calendarDay.as("d"))
+      .agg(count(lit(1)).as("n"))
+    daily.groupBy(col("t"))
+      .agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
+      .select(col("t"), explode(expr("sequence(lo, hi)")).as("d"))
+      .join(daily, Seq("t", "d"), "left")
+      .select(col("t"), col("d"), coalesce(col("n"), lit(0L)).as("cnt"))
+  }
+
+  /** The moment sums of lag pairs (x, y) after `n_pairs`. */
+  private def pairMoments: Seq[Column] = Seq(
+    sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+    sum(col("x") * col("y")).as("sxy"),
+    sum(col("x") * col("x")).as("sxx"),
+    sum(col("y") * col("y")).as("syy"))
+
+  /** The integer covariance numerator and variance denominators over
+    * [[pairMoments]]. */
+  private def pairCovariance: Seq[Column] = Seq(
+    (col("n_pairs") * col("sxy") - col("sx") * col("sy")).as("num"),
+    (col("n_pairs") * col("sxx") - col("sx") * col("sx")).as("denx"),
+    (col("n_pairs") * col("syy") - col("sy") * col("sy")).as("deny"))
+
+  /** Purchase value in integer cents (exact at any parallelism). */
+  private def cents: Column = expr("CAST(floor(value * 100) AS BIGINT)")
+
+  /** Per-user purchase cents `(user_id, m)`; users without a purchase
+    * carry m = 0. */
+  private def userPurchaseCents(spark: SparkSession, sfDir: String): DataFrame =
+    events(spark, sfDir)
+      .groupBy(col("user_id"))
+      .agg(sum(when(col("event_type") === "purchase", cents).otherwise(0L)).as("m"))
+
+  /** The pre/post experiment frame: `(user_id, event_type, value, d)`
+    * with the calendar midpoint `mid` (integer, from the data's own day
+    * bounds) broadcast onto every row. */
+  private def midSplitEvents(spark: SparkSession, sfDir: String): DataFrame = {
+    val e = graft.core.QueryCaches.track(
+      events(spark, sfDir).select(col("user_id"), col("event_type"),
+        col("value"), expr("ts div 86400000000000").as("d")))
+    e.crossJoin(broadcast(e.agg(expr("(min(d) + max(d)) div 2").as("mid"))))
+  }
+
+  /** The as-of join sides over the µs stream: purchases
+    * `(user_id, p_event, p_tus)` and the raw click rows. */
+  private def purchasesAndClicks(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
+    val e = graft.core.QueryCaches.track(usTypedStream(spark, sfDir))
+    (e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("p_event"), col("tus").as("p_tus")),
+     e.filter(col("event_type") === "click"))
+  }
+
+  /** The tracked funnel base `(user_id, event_type, tus)` and each
+    * viewer's first view time `(user_id, t1)`, also tracked. */
+  private def firstViews(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val e = graft.core.QueryCaches.track(
+      events(spark, sfDir)
+        .select(col("user_id"), col("event_type"), expr("ts div 1000").as("tus")))
+    (e, graft.core.QueryCaches.track(
+      e.filter(col("event_type") === "view")
+        .groupBy(col("user_id")).agg(min(col("tus")).as("t1"))))
+  }
+
+  /** The CDC feed over the µs stream, split at 2024-01-15T00:00Z: the
+    * latest value per user before the cut `(user_id, tus, event_id,
+    * val)`, and the change rows from the cut on, each with its op
+    * (`D` for an error event, else `U`). */
+  private def cdcFeed(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val cutUs = 1705276800000000L
+    val e = graft.core.QueryCaches.track(
+      events(spark, sfDir).select(col("user_id"),
+        expr("ts div 1000").as("tus"), col("event_id"),
+        when(col("event_type") === "error", "D").otherwise("U").as("op"),
+        floor(col("value") * lit(1000000.0d)).cast("bigint").as("val")))
+    (graft.ext.MergeOps.latestSnapshot(e.filter(col("tus") < cutUs).drop("op"),
+      "user_id", Seq("tus", "event_id"), Seq("val")),
+     e.filter(col("tus") >= cutUs))
+  }
+
+
   /** 1-day tumbling event-time window per event type — Spark's native
     * `window()` (the Structured Streaming window primitive) in batch
     * mode. */
@@ -54,14 +197,7 @@ object EventQueries {
   def eventsSessions(spark: SparkSession, sfDir: String): DataFrame = {
     // µs basis: DuckDB's TIMESTAMP is µs internally, so its TIMESTAMP_NS
     // parquet read truncates sub-µs — match it with `ts div 1000`.
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > GAP_NS / 1000, 1L).otherwise(0L))
-      .withColumn("session_no", sum(col("new_s")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    withSessionNo(usWithPrev(spark, sfDir))
       .groupBy(col("user_id"), col("session_no"))
       .agg(min(col("tus")).as("session_start_us"),
         count(lit(1)).as("n_events"),
@@ -83,11 +219,8 @@ object EventQueries {
     * session counts are sums of indicator longs, density is one
     * integral division. */
   def eventsGapSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
     val gaps = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"))
-        .withColumn("prev", lag(col("tus"), 1).over(w))
+      usWithPrev(spark, sfDir)
         .select((col("tus") - col("prev")).as("gap_us")))
     Seq(900L, 1800L, 3600L).map { g =>
       gaps.agg(count(lit(1)).as("n_events"),
@@ -234,13 +367,10 @@ object EventQueries {
   }
 
   def eventsSurvival(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    val ev = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus")))
+    val ev = graft.core.QueryCaches.track(usStream(spark, sfDir))
     val edge = ev.agg(max(col("tus")).as("corpus_max"))
     val gaps = ev
-      .withColumn("nxt", lead(col("tus"), 1).over(w))
+      .withColumn("nxt", lead(col("tus"), 1).over(userTimeOrder))
       .crossJoin(broadcast(edge))
       .select(
         expr("CAST(coalesce(nxt, corpus_max) - tus AS BIGINT) div 3600000000")
@@ -297,19 +427,11 @@ object EventQueries {
     * the ≤|types|³ aggregate relation and filters the UNCAST
     * row_number so it plans as a partial top-k. */
   def eventsSeq3(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("ts div 1000").as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > GAP_NS / 1000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_s")).over(wRun))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .withColumn("s3", lead(col("session_no"), 2).over(w))
+    val sess = withSessionNo(
+      usTypedStream(spark, sfDir).withColumn("prev", lag(col("tus"), 1).over(userTimeOrder)))
+      .withColumn("t2", lead(col("event_type"), 1).over(userTimeOrder))
+      .withColumn("t3", lead(col("event_type"), 2).over(userTimeOrder))
+      .withColumn("s3", lead(col("session_no"), 2).over(userTimeOrder))
     sess.filter(col("t3").isNotNull && col("s3") === col("session_no"))
       .groupBy(col("event_type").as("t1"), col("t2"), col("t3"))
       .agg(count(lit(1)).as("cnt"))
@@ -351,17 +473,10 @@ object EventQueries {
     * and [[eventsMarkov]] — the single-window machinery documented on
     * eventsPaths. */
   private[graft] def sessionBigrams(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("ts div 1000").as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > GAP_NS / 1000, 1L).otherwise(0L))
-      .withColumn("session_no", sum(col("new_s")).over(wRun))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .withColumn("next_s", lead(col("session_no"), 1).over(w))
+    val sess = withSessionNo(
+      usTypedStream(spark, sfDir).withColumn("prev", lag(col("tus"), 1).over(userTimeOrder)))
+      .withColumn("next_type", lead(col("event_type"), 1).over(userTimeOrder))
+      .withColumn("next_s", lead(col("session_no"), 1).over(userTimeOrder))
     sess.filter(col("next_type").isNotNull && col("next_s") === col("session_no"))
       .groupBy(col("event_type").as("src"), col("next_type").as("dst"))
       .agg(count(lit(1)).as("cnt"))
@@ -388,9 +503,7 @@ object EventQueries {
     * when no prior view) against a DuckDB spelling of the same
     * carry-forward. */
   def eventsAttribution(spark: SparkSession, sfDir: String): DataFrame = {
-    val ev = events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"),
-        expr("ts div 1000").as("tus"))
+    val ev = usTypedStream(spark, sfDir)
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id"), col("tus"))
     val views = ev.filter(col("event_type") === "view")
@@ -640,18 +753,9 @@ object EventQueries {
     * bucket join would silently drop them). */
   def eventsIntervalJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val HUS = 3600L * 1000 * 1000 // 1-hour buckets (µs basis, like tus)
-    val ev = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus")))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    val sess = ev
-      .filter(col("user_id") % 10 === 0)
-      .withColumn("prev", lag(col("tus"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("tus") - col("prev") > GAP_NS / 1000, 1L)
-          .otherwise(0L))
-      .withColumn("session_no", sum(col("new_s")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val ev = graft.core.QueryCaches.track(usStream(spark, sfDir))
+    val sess = withSessionNo(ev.filter(col("user_id") % 10 === 0)
+        .withColumn("prev", lag(col("tus"), 1).over(userTimeOrder)))
       .groupBy(col("user_id"), col("session_no"))
       .agg(min(col("tus")).as("s_start"), max(col("tus")).as("s_end"))
     val sb = sess.withColumn("hb",
@@ -705,8 +809,7 @@ object EventQueries {
         sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
         sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("p"),
-        sum(when(col("event_type") === "purchase",
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("s"))
+        sum(when(col("event_type") === "purchase", cents).otherwise(0L)).as("s"))
     labels.join(feats, Seq("user_id", "label_event", "lts"), "left")
       .select(col("user_id"), col("label_event"), col("lts"),
         coalesce(col("v"), lit(0L)).as("n_view_7d"),
@@ -757,14 +860,8 @@ object EventQueries {
     * (strategy fires), distribution/ordering (EnsureRequirements
     * inserts the exchanges+sorts), and the merge itself. */
   def eventsAsofNative(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts div 1000").as("tus")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("p_event"), col("tus").as("p_tus"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("tus").as("c_tus"))
+    val (purchases, c) = purchasesAndClicks(spark, sfDir)
+    val clicks = c.select(col("user_id").as("c_user"), col("tus").as("c_tus"))
     graft.ext.AsOfJoin.asOfNative(purchases, clicks,
         "user_id", "c_user", "p_tus", "c_tus")
       .select(col("user_id"), col("p_event"), col("p_tus"),
@@ -784,14 +881,8 @@ object EventQueries {
     * plus the tie-to-backward CASE — declarative semantics checked
     * against the imperative merge. */
   def eventsAsofDirections(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts div 1000").as("tus")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("p_event"), col("tus").as("p_tus"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("tus").as("c_tus"))
+    val (purchases, c) = purchasesAndClicks(spark, sfDir)
+    val clicks = c.select(col("user_id").as("c_user"), col("tus").as("c_tus"))
     val fwd = graft.ext.AsOfJoin.asOfNative(purchases, clicks,
         "user_id", "c_user", "p_tus", "c_tus", direction = "forward")
       .select(col("user_id"), col("p_event"), col("p_tus"),
@@ -819,13 +910,7 @@ object EventQueries {
     * semantics end to end. Same merge plan as every as-of row: one
     * hash exchange per side, sorted streaming merge, O(1) state. */
   def eventsAsofTies(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          expr("ts div 1000").as("tus")))
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("p_event"), col("tus").as("p_tus"))
-    val clicks = e.filter(col("event_type") === "click")
+    val (purchases, clicks) = purchasesAndClicks(spark, sfDir)
     val rights = graft.core.QueryCaches.track(
       clicks.select(col("user_id").as("c_user"), col("tus").as("c_tus"),
           (col("event_id") * 2).as("pay"))
@@ -946,16 +1031,7 @@ object EventQueries {
     * domain-bounded at any event volume; the heavy work (daily rollup)
     * is one hash aggregate and the type totals broadcast. */
   def eventsCusum(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = events(spark, sfDir)
-      .groupBy(col("event_type").as("t"),
-        expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
-          "DATE '1970-01-01') AS BIGINT)").as("d"))
-      .agg(count(lit(1)).as("n"))
-    val spine = daily.groupBy(col("t"))
-      .agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-      .select(col("t"), explode(expr("sequence(lo, hi)")).as("d"))
-      .join(daily, Seq("t", "d"), "left")
-      .select(col("t"), col("d"), coalesce(col("n"), lit(0L)).as("cnt"))
+    val spine = calendarSpine(spark, sfDir)
     val sp = graft.core.QueryCaches.track(spine)
     val tot = sp.groupBy(col("t"))
       .agg(sum(col("cnt")).as("total"), count(lit(1)).as("n_days"))
@@ -987,16 +1063,7 @@ object EventQueries {
     * days (domain-bounded); the seasonal relation is |types|×7 rows
     * and broadcasts back. */
   def eventsSeasonal(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = events(spark, sfDir)
-      .groupBy(col("event_type").as("t"),
-        expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
-          "DATE '1970-01-01') AS BIGINT)").as("d"))
-      .agg(count(lit(1)).as("n"))
-    val spine = daily.groupBy(col("t"))
-      .agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
-      .select(col("t"), explode(expr("sequence(lo, hi)")).as("d"))
-      .join(daily, Seq("t", "d"), "left")
-      .select(col("t"), col("d"), coalesce(col("n"), lit(0L)).as("cnt"))
+    val spine = calendarSpine(spark, sfDir)
     val w7 = Window.partitionBy(col("t")).orderBy(col("d")).rowsBetween(-3, 3)
     val interior = graft.core.QueryCaches.track(
       spine.withColumn("n7", count(lit(1)).over(w7))
@@ -1046,8 +1113,7 @@ object EventQueries {
 
   def eventsAcf(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = events(spark, sfDir)
-      .groupBy(expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
-        "DATE '1970-01-01') AS BIGINT)").as("d"))
+      .groupBy(calendarDay.as("d"))
       .agg(count(lit(1)).as("n"))
     val bounds = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val spine = bounds.select(explode(expr("sequence(lo, hi)")).as("d"))
@@ -1059,15 +1125,8 @@ object EventQueries {
       .select(col("lag"), col("d"), col("x"), (col("d") + col("lag")).as("d2"))
       .join(sp.select(col("d").as("d2"), col("x").as("y")), Seq("d2"))
     pairs.groupBy(col("lag"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("lag"), col("n_pairs"),
-        (col("n_pairs") * col("sxy") - col("sx") * col("sy")).as("num"),
-        (col("n_pairs") * col("sxx") - col("sx") * col("sx")).as("denx"),
-        (col("n_pairs") * col("syy") - col("sy") * col("sy")).as("deny"))
+      .agg(count(lit(1)).as("n_pairs"), pairMoments: _*)
+      .select(Seq(col("lag"), col("n_pairs")) ++ pairCovariance: _*)
       .select(col("lag"), col("n_pairs"), col("num"), col("denx"), col("deny"),
         when(col("denx") === 0L || col("deny") === 0L, lit(null).cast("bigint"))
           .otherwise(signum(col("num")).cast("bigint") *
@@ -1089,9 +1148,7 @@ object EventQueries {
     * global sort anywhere). */
   def eventsPeriodicity(spark: SparkSession, sfDir: String): DataFrame = {
     val daily = events(spark, sfDir)
-      .groupBy(col("event_type"),
-        expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
-          "DATE '1970-01-01') AS BIGINT)").as("d"))
+      .groupBy(col("event_type"), calendarDay.as("d"))
       .agg(count(lit(1)).as("n"))
     val bounds = daily.agg(min(col("d")).as("lo"), max(col("d")).as("hi"))
     val days = bounds.select(explode(expr("sequence(lo, hi)")).as("d"))
@@ -1106,15 +1163,8 @@ object EventQueries {
       .join(grid.select(col("event_type"), col("d").as("d2"), col("x").as("y")),
         Seq("event_type", "d2"))
       .groupBy(col("event_type"), col("lag"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(col("x") * col("y")).as("sxy"),
-        sum(col("x") * col("x")).as("sxx"),
-        sum(col("y") * col("y")).as("syy"))
-      .select(col("event_type"), col("lag"), col("n_pairs"),
-        (col("n_pairs") * col("sxy") - col("sx") * col("sy")).as("num"),
-        (col("n_pairs") * col("sxx") - col("sx") * col("sx")).as("denx"),
-        (col("n_pairs") * col("syy") - col("sy") * col("sy")).as("deny"))
+      .agg(count(lit(1)).as("n_pairs"), pairMoments: _*)
+      .select(Seq(col("event_type"), col("lag"), col("n_pairs")) ++ pairCovariance: _*)
       .select(col("event_type"), col("lag"), col("n_pairs"),
         when(col("denx") === 0L || col("deny") === 0L, lit(null).cast("bigint"))
           .otherwise(signum(col("num")).cast("bigint") *
@@ -1231,11 +1281,8 @@ object EventQueries {
     * size itself (WindowAuditSpec-allowlisted), which is the whole
     * point: the full gap multiset never crosses one partition. */
   def eventsQuantileSketch(spark: SparkSession, sfDir: String): DataFrame = {
-    val wu = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
     val gaps = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"))
-        .withColumn("prev", lag(col("tus"), 1).over(wu))
+      usWithPrev(spark, sfDir)
         .filter(col("prev").isNotNull)
         .select(expr("(tus - prev) div 1000000").as("gap_s")))
     val n1 = gaps.agg(count(lit(1)).as("n"))
@@ -1296,8 +1343,7 @@ object EventQueries {
         .groupBy(col("user_id"))
         .agg((max(col("d1")) - max(col("day"))).as("r"),
           count(lit(1)).as("f"),
-          sum(when(col("event_type") === "purchase",
-            expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("m")))
+          sum(when(col("event_type") === "purchase", cents).otherwise(0L)).as("m")))
     val melt = graft.core.QueryCaches.track(
       rfm.selectExpr("user_id", "stack(3, 'R', r, 'F', f, 'M', m) AS (metric, v)"))
     val n = melt.groupBy(col("metric")).agg(count(lit(1)).as("n"))
@@ -1360,10 +1406,8 @@ object EventQueries {
     * back. */
   def eventsLift(spark: SparkSession, sfDir: String): DataFrame = {
     val b = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"),
-        expr("CAST(datediff(CAST(timestamp_micros(ts div 1000) AS DATE), " +
-          "DATE '1970-01-01') AS BIGINT)").as("d"),
-        col("event_type")).distinct())
+      events(spark, sfDir).select(col("user_id"), calendarDay.as("d"), col("event_type"))
+        .distinct())
     val nT = b.groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
     val nBaskets = b.select(col("user_id"), col("d")).distinct()
       .agg(count(lit(1)).as("n_baskets"))
@@ -1442,10 +1486,7 @@ object EventQueries {
     * aggregate; same scale posture (and same skew caveat) as
     * sessionization. */
   def eventsGapHist(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("tus"), col("event_id"))
-    events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), expr("ts div 1000").as("tus"))
-      .withColumn("prev", lag(col("tus"), 1).over(w))
+    usWithPrev(spark, sfDir)
       .filter(col("prev").isNotNull)
       .withColumn("gap_s", expr("(tus - prev) div 1000000"))
       .withColumn("bucket", (length(bin(col("gap_s"))) - 1).cast("bigint"))
@@ -1495,16 +1536,7 @@ object EventQueries {
     * spelling vs aggregate plan) is exactly the 100 TB posture: history
     * is aggregated, never sorted. */
   def eventsCdcMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val cutUs = 1705276800000000L // 2024-01-15T00:00:00Z, micros
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"),
-        expr("ts div 1000").as("tus"), col("event_id"),
-        when(col("event_type") === "error", "D").otherwise("U").as("op"),
-        floor(col("value") * lit(1000000.0d)).cast("bigint").as("val")))
-    val base = graft.ext.MergeOps.latestSnapshot(
-      e.filter(col("tus") < cutUs).drop("op"),
-      "user_id", Seq("tus", "event_id"), Seq("val"))
-    val changes = e.filter(col("tus") >= cutUs)
+    val (base, changes) = cdcFeed(spark, sfDir)
     graft.ext.MergeOps.cdcMerge(base, changes, "user_id",
       Seq("tus", "event_id"), "op", Seq("val"))
   }
@@ -1574,16 +1606,8 @@ object EventQueries {
     * would surface as a null and break the hash), making idempotence
     * an oracle-checked equality, not a code-reading argument. */
   def eventsCdcIdempotent(spark: SparkSession, sfDir: String): DataFrame = {
-    val cutUs = 1705276800000000L
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"),
-        expr("ts div 1000").as("tus"), col("event_id"),
-        when(col("event_type") === "error", "D").otherwise("U").as("op"),
-        floor(col("value") * lit(1000000.0d)).cast("bigint").as("val")))
-    val base = graft.ext.MergeOps.latestSnapshot(
-      e.filter(col("tus") < cutUs).drop("op"),
-      "user_id", Seq("tus", "event_id"), Seq("val"))
-    val changes = graft.core.QueryCaches.track(e.filter(col("tus") >= cutUs))
+    val (base, feed) = cdcFeed(spark, sfDir)
+    val changes = graft.core.QueryCaches.track(feed)
     def apply1(b: DataFrame): DataFrame =
       graft.ext.MergeOps.cdcMerge(b, changes, "user_id",
         Seq("tus", "event_id"), "op", Seq("val"))
@@ -1699,7 +1723,7 @@ object EventQueries {
     * through either the aggregate row or the spine join identically. */
   def eventsGapfill(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = loadEvents(spark, sfDir)
-    val daily = graft.ext.DedupOps.trackPersist(
+    val daily = graft.core.QueryCaches.track(
       ev.groupBy(col("event_type"), to_date(tsMicros).as("day"))
         .agg(count(when(col("value") > 200.0, 1)).as("n")))
     val bounds = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
@@ -1794,10 +1818,7 @@ object EventQueries {
     * bound then prunes; the raw-series verify join touches only
     * surviving pairs. All-integer end to end: no IEEE anywhere. */
   def eventsSeriesSim(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-        .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c")))
+    val daily = graft.core.QueryCaches.track(dailyTypeCounts(spark, sfDir))
     val bounds = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("d0"), (col("d1") - col("d0") + 1).as("tt"),
         expr("CAST((d1 - d0 + 8) DIV 8 AS BIGINT)").as("lmax"))
@@ -1850,10 +1871,7 @@ object EventQueries {
     * relation — at production series counts, pairs are pruned first by
     * the PAA bound [[eventsSeriesSim]] proves. */
   def eventsDtw(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-        .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c")))
+    val daily = graft.core.QueryCaches.track(dailyTypeCounts(spark, sfDir))
     val bounds = daily.agg(min(col("day")).as("d0"),
       (max(col("day")) - min(col("day")) + 1).as("tt"))
     val segVec = daily.crossJoin(broadcast(bounds))
@@ -2013,11 +2031,7 @@ object EventQueries {
     * the identical recurrence as a recursive CTE), so the doubles
     * hash raw. Final level = the next-day forecast. */
   def eventsSesForecast(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = loadEvents(spark, sfDir)
-      .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-      .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
-    d.groupBy(col("t"))
-      .agg(expr("transform(sort_array(collect_list(struct(day, c))), x -> x.c)").as("cs"))
+    dailySeries(spark, sfDir)
       .select(col("t"), size(col("cs")).cast("bigint").as("n_days"),
         expr("aggregate(slice(cs, 2, size(cs) - 1), " +
           "named_struct('level', CAST(cs[0] AS DOUBLE), 'err', CAST(0.0 AS DOUBLE)), " +
@@ -2040,11 +2054,7 @@ object EventQueries {
     * hash-matches the one-step-ahead MAE. Init: l₂ = x₂, b₂ = x₂−x₁,
     * errors accumulated from x₃ (n−2 forecasts). */
   def eventsHoltForecast(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = loadEvents(spark, sfDir)
-      .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-      .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
-    d.groupBy(col("t"))
-      .agg(expr("transform(sort_array(collect_list(struct(day, c))), x -> x.c)").as("cs"))
+    dailySeries(spark, sfDir)
       .select(col("t"), size(col("cs")).cast("bigint").as("n_days"),
         expr("""aggregate(slice(cs, 3, size(cs) - 2),
           named_struct('l', CAST(cs[1] AS DOUBLE),
@@ -2073,11 +2083,7 @@ object EventQueries {
     * series is the (type × active-day) relation — calendar-bounded —
     * collected per type into one in-row fold; no window, one exchange. */
   def eventsHoltWinters(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = loadEvents(spark, sfDir)
-      .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-      .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
-    d.groupBy(col("t"))
-      .agg(expr("transform(sort_array(collect_list(struct(day, c))), x -> x.c)").as("cs"))
+    dailySeries(spark, sfDir)
       .filter(size(col("cs")) >= 21)
       .withColumn("m1", expr(
         "aggregate(slice(cs, 1, 7), CAST(0 AS DOUBLE), (a, x) -> a + x) / CAST(7 AS DOUBLE)"))
@@ -2122,14 +2128,7 @@ object EventQueries {
     * platform actually runs — backtest on yesterday's tail, route
     * today's forecast to whichever model won. */
   def eventsForecastEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-        .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c")))
-    val b = d.agg(max(col("day")).as("d1"))
-    val withB = d.crossJoin(broadcast(b))
-    val train = withB.filter(col("day") <= col("d1") - 7)
-    val test = withB.filter(col("day") > col("d1") - 7)
+    val (d, train, test) = lastWeekSplit(spark, sfDir)
     val wk = train.groupBy(col("t"), pmod(col("day"), lit(7L)).as("wd"))
       .agg(sum(col("c")).as("s"), count(lit(1)).as("k"))
     val gl = train.groupBy(col("t"))
@@ -2159,17 +2158,10 @@ object EventQueries {
   }
 
   def eventsSeasonalNaive(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-        .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c")))
-    val b = d.agg(max(col("day")).as("d1"))
-    val withB = d.crossJoin(broadcast(b))
-    val train = withB.filter(col("day") <= col("d1") - 7)
-      .groupBy(col("t"), pmod(col("day"), lit(7L)).as("wd"))
+    val (_, fit, holdout) = lastWeekSplit(spark, sfDir)
+    val train = fit.groupBy(col("t"), pmod(col("day"), lit(7L)).as("wd"))
       .agg(sum(col("c")).as("s"), count(lit(1)).as("k"))
-    val test = withB.filter(col("day") > col("d1") - 7)
-      .select(col("t"), pmod(col("day"), lit(7L)).as("wd"), col("c"))
+    val test = holdout.select(col("t"), pmod(col("day"), lit(7L)).as("wd"), col("c"))
     test.join(broadcast(train), Seq("t", "wd"))
       .groupBy(col("t"))
       .agg(count(lit(1)).as("n_days"),
@@ -2187,12 +2179,7 @@ object EventQueries {
     * per-user event counts bound every join's fan-out. */
   def eventsFunnel3(spark: SparkSession, sfDir: String): DataFrame = {
     val w = 86400000000L // 24h in micros
-    val e = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("user_id"), col("event_type"), expr("ts div 1000").as("tus")))
-    val v = graft.core.QueryCaches.track(
-      e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("tus")).as("t1")))
+    val (e, v) = firstViews(spark, sfDir)
     val c = graft.core.QueryCaches.track(
       e.join(v, "user_id")
         .filter(col("event_type") === "click" &&
@@ -2279,12 +2266,7 @@ object EventQueries {
     * stage minima are the funnel3 plan (map-side-combined minima,
     * user-keyed joins); the sweep is a 3-row broadcast fan-out. */
   def eventsFunnelSweep(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("user_id"), col("event_type"), expr("ts div 1000").as("tus")))
-    val v = graft.core.QueryCaches.track(
-      e.filter(col("event_type") === "view")
-        .groupBy(col("user_id")).agg(min(col("tus")).as("t1")))
+    val (e, v) = firstViews(spark, sfDir)
     val c = graft.core.QueryCaches.track(
       e.join(v, "user_id")
         .filter(col("event_type") === "click" && col("tus") > col("t1"))
@@ -2367,8 +2349,7 @@ object EventQueries {
     val feats = graft.core.QueryCaches.track(
       e.crossJoin(broadcast(edge)).groupBy(col("user_id")).agg(
         (count(lit(1)) * lit(2500L)).as("x"),
-        sum(when(col("event_type") === "purchase",
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("y"),
+        sum(when(col("event_type") === "purchase", cents).otherwise(0L)).as("y"),
         ((max(col("d1")) - max(col("day"))) * lit(25000L)).as("z")))
     val cell = feats.select(col("user_id"), col("x"), col("y"), col("z"),
       expr(s"x div $EPS").as("cx"), expr(s"y div $EPS").as("cy"),
@@ -2456,10 +2437,7 @@ object EventQueries {
     * Welch–Satterthwaite estimate. Plan at 100 TB: one user-keyed
     * fold, then a 2-row aggregate — nothing else crosses the shuffle. */
   def eventsWelch(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase",
-        expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("m"))
+    val u = userPurchaseCents(spark, sfDir)
       .select((col("user_id") % 2).as("arm"), col("m").cast("double").as("md"))
     val g = u.groupBy(col("arm")).agg(
       count(lit(1)).as("n"),
@@ -2501,18 +2479,14 @@ object EventQueries {
     * aggregate; 1-row broadcasts stitch — no window, no join on
     * anything data-sized. */
   def eventsCuped(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"), col("event_type"),
-        col("value"), expr("ts div 86400000000000").as("d")))
-    val mid = e.agg(expr("(min(d) + max(d)) div 2").as("mid"))
-    val u = e.crossJoin(broadcast(mid))
+    val u = midSplitEvents(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(
-        sum(when(col("event_type") === "purchase" && col("d") < col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L))
+        sum(when(col("event_type") === "purchase" && col("d") < col("mid"), cents)
+          .otherwise(0L))
           .cast("double").as("x"),
-        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L))
+        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"), cents)
+          .otherwise(0L))
           .cast("double").as("y"))
       .select((col("user_id") % 2).as("arm"), col("x"), col("y"))
     val uu = graft.core.QueryCaches.track(u)
@@ -2580,17 +2554,13 @@ object EventQueries {
     * units with DECIMAL(38,0) partials. Scale: one user-keyed fold,
     * one 1-row aggregate. */
   def eventsIps(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"), col("event_type"),
-        col("value"), expr("ts div 86400000000000").as("d")))
-    val mid = e.agg(expr("(min(d) + max(d)) div 2").as("mid"))
-    e.crossJoin(broadcast(mid))
+    midSplitEvents(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(
-        sum(when(col("event_type") === "purchase" && col("d") < col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("r"))
+        sum(when(col("event_type") === "purchase" && col("d") < col("mid"), cents)
+          .otherwise(0L)).as("x"),
+        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"), cents)
+          .otherwise(0L)).as("r"))
       .select((col("user_id") % 2).as("a"),
         when(col("x") > 0L, 1L).otherwise(0L).as("pi"), col("r"))
       .agg(count(lit(1)).as("n"),
@@ -2646,8 +2616,7 @@ object EventQueries {
     val firstW = graft.core.QueryCaches.track(
       e.groupBy(col("user_id")).agg(min(col("week")).as("cw")))
     val grid = e.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("week"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("cents"))
+      .select(col("user_id"), col("week"), cents.as("cents"))
       .join(firstW, "user_id")
       .groupBy(col("cw"), (col("week") - col("cw")).as("off"))
       .agg(sum(col("cents")).as("wk_cents"))
@@ -2677,17 +2646,13 @@ object EventQueries {
     * contract). Scale: one user-keyed fold, one 1-row conditional
     * aggregate — no window, no join on anything data-sized. */
   def eventsDid(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"), col("event_type"),
-        col("value"), expr("ts div 86400000000000").as("d")))
-    val mid = e.agg(expr("(min(d) + max(d)) div 2").as("mid"))
-    val u = e.crossJoin(broadcast(mid))
+    val u = midSplitEvents(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(
-        sum(when(col("event_type") === "purchase" && col("d") < col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("pre"),
-        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("post"))
+        sum(when(col("event_type") === "purchase" && col("d") < col("mid"), cents)
+          .otherwise(0L)).as("pre"),
+        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"), cents)
+          .otherwise(0L)).as("post"))
       .select((col("user_id") % 2).as("arm"), col("pre"), col("post"),
         (col("post") - col("pre")).as("dlt"))
     u.agg(
@@ -2747,10 +2712,7 @@ object EventQueries {
     * one user fold, a ×32 explode into a 32-group map-side-combined
     * aggregate, then a 1-row array fold. */
   def eventsBootstrap(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase",
-        expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("m"))
+    val u = userPurchaseCents(spark, sfDir)
     val reps = u.select(col("user_id"), col("m"),
         explode(expr("sequence(0L, 31L)")).as("r"))
       // affine residue then mid-square: keeps bits [10,30) of t², the
@@ -2800,10 +2762,7 @@ object EventQueries {
     * range-partitioned prefix sum — the global ORDER BY window this
     * suite never serializes onto one task. */
   def eventsMannWhitney(spark: SparkSession, sfDir: String): DataFrame = {
-    val u = events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("event_type") === "purchase",
-        expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("m"))
+    val u = userPurchaseCents(spark, sfDir)
       .select((col("user_id") % 2).as("arm"), col("m"))
     val g = graft.core.QueryCaches.track(
       u.groupBy(col("m")).agg(count(lit(1)).as("t"),
@@ -2847,14 +2806,7 @@ object EventQueries {
     * profiles are |types|×7 broadcast rows; the readout is one
     * |types|-group fold. */
   def eventsCausalImpact(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = graft.core.QueryCaches.track(
-      loadEvents(spark, sfDir)
-        .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-        .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c")))
-    val b = d.agg(max(col("day")).as("d1"))
-    val withB = d.crossJoin(broadcast(b))
-    val pre = withB.filter(col("day") <= col("d1") - 7)
-    val post = withB.filter(col("day") > col("d1") - 7)
+    val (_, pre, post) = lastWeekSplit(spark, sfDir)
     val wk = pre.groupBy(col("t"), pmod(col("day"), lit(7L)).as("wd"))
       .agg(sum(col("c")).as("s"), count(lit(1)).as("k"))
     post
@@ -2883,17 +2835,13 @@ object EventQueries {
     * grain, then a ≤6-row conditional aggregate — band × arm is a
     * domain constant. */
   def eventsHte(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = graft.core.QueryCaches.track(
-      events(spark, sfDir).select(col("user_id"), col("event_type"),
-        col("value"), expr("ts div 86400000000000").as("d")))
-    val mid = e.agg(expr("(min(d) + max(d)) div 2").as("mid"))
-    val u = e.crossJoin(broadcast(mid))
+    val u = midSplitEvents(spark, sfDir)
       .groupBy(col("user_id"))
       .agg(
         sum(when(col("event_type") === "purchase" && col("d") < col("mid"), 1L)
           .otherwise(0L)).as("pre_n"),
-        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"),
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("post_c"))
+        sum(when(col("event_type") === "purchase" && col("d") >= col("mid"), cents)
+          .otherwise(0L)).as("post_c"))
       .select((col("user_id") % 2).as("arm"),
         when(col("pre_n") === 0L, 0L)
           .when(col("pre_n") <= 2L, 1L).otherwise(2L).as("band"),
@@ -3018,10 +2966,7 @@ object EventQueries {
     * treated-minus-control deltas. */
   def eventsQte(spark: SparkSession, sfDir: String): DataFrame = {
     val u = graft.core.QueryCaches.track(
-      events(spark, sfDir)
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("event_type") === "purchase",
-          expr("CAST(floor(value * 100) AS BIGINT)")).otherwise(0L)).as("m"))
+      userPurchaseCents(spark, sfDir)
         .select((col("user_id") % 2).as("arm"), col("m"), col("user_id")))
     val counts = u.agg(
       sum(when(col("arm") === 0L, 1L).otherwise(0L)).as("n0"),
@@ -3111,9 +3056,7 @@ object EventQueries {
     * tie-break; the oracle spells the identical grid join without
     * arrays. */
   def eventsMotif(spark: SparkSession, sfDir: String): DataFrame = {
-    val daily = loadEvents(spark, sfDir)
-      .select(col("event_type").as("t"), expr("ts div 86400000000000").as("day"))
-      .groupBy(col("t"), col("day")).agg(count(lit(1)).as("c"))
+    val daily = dailyTypeCounts(spark, sfDir)
     val bounds = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(col("d0"), (col("d1") - col("d0") + 1).as("tt"))
     val wins = graft.core.QueryCaches.track(

@@ -50,6 +50,38 @@ object GeoQueries {
         col("g.gx").as("gx"), col("g.gy").as("gy"))
   }
 
+  /** Squared distance between a probe-ring point (ax, ay) and a home
+    * point (px, py). */
+  private def ringD2: Column =
+    (col("ax") - col("px")) * (col("ax") - col("px")) +
+      (col("ay") - col("py")) * (col("ay") - col("py"))
+
+  /** Each point of `p` in its home cell `(vec_id, px, py, gx, gy)` at
+    * cell width `cell`. */
+  private def homeCells(p: DataFrame, cell: Long): DataFrame =
+    p.select(col("vec_id"), col("px"), col("py"),
+      expr(s"px div $cell").as("gx"), expr(s"py div $cell").as("gy"))
+
+  /** Point pairs `(id_a, id_b, d2)` within distance `r` that `keep`
+    * admits: A's 3×3 probe ring (cell = r) joins B's home cell in
+    * `homes`, so every qualifying pair meets. */
+  private def ringPairs(p: DataFrame, homes: DataFrame, r: Long, keep: Column): DataFrame =
+    probeRing(p, r, "id_a")
+      .join(homes, Seq("gx", "gy"))
+      .filter(keep && ringD2 <= lit(r * r))
+      .select(col("id_a"), col("vec_id").as("id_b"), ringD2.as("d2"))
+
+  /** (px, py) lies inside (or on) the convex polygon whose
+    * counter-clockwise edges (x1, y1, x2, y2) are in `edges`. */
+  private def insideEdges: Column = forall(col("edges"), e =>
+    (e.getField("_3") - e.getField("_1")) * (col("py") - e.getField("_2")) -
+      (e.getField("_4") - e.getField("_2")) * (col("px") - e.getField("_1")) >= 0)
+
+  /** The integer centroid of the grouped points, in milli-grid units. */
+  private def centroidMilli: Seq[Column] = Seq(
+    expr("(1000 * sum(px)) div count(*)").as("cx_milli"),
+    expr("(1000 * sum(py)) div count(*)").as("cy_milli"))
+
   /** All point pairs within Euclidean distance 20 — the spatial radius
     * self-join done the scale way: cell width = radius, so a
     * qualifying pair ALWAYS has the second point inside the first's
@@ -63,16 +95,7 @@ object GeoQueries {
     * bounded-density corpus. */
   def geoRadiusJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val p = graft.core.QueryCaches.track(points(spark, sfDir))
-    val home = p.select(col("vec_id"), col("px"), col("py"),
-      expr("px div 20").as("gx"), expr("py div 20").as("gy"))
-    probeRing(p, 20L, "id_a")
-      .join(home, Seq("gx", "gy"))
-      .filter(col("id_a") < col("vec_id") &&
-        (col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py")) <= lit(400L))
-      .select(col("id_a"), col("vec_id").as("id_b"),
-        ((col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py"))).as("d2"))
+    ringPairs(p, homeCells(p, 20L), 20L, col("id_a") < col("vec_id"))
   }
 
   /** [[geoRadiusJoin]] with the HOT-CELL guard engaged — the spatial
@@ -87,20 +110,11 @@ object GeoQueries {
     * occupancy histogram's tail knee. */
   def geoRadiusJoinCapped(spark: SparkSession, sfDir: String): DataFrame = {
     val p = graft.core.QueryCaches.track(points(spark, sfDir))
-    val home = graft.core.QueryCaches.track(
-      p.select(col("vec_id"), col("px"), col("py"),
-        expr("px div 20").as("gx"), expr("py div 20").as("gy")))
+    val home = graft.core.QueryCaches.track(homeCells(p, 20L))
     val ok = home.groupBy(col("gx"), col("gy")).agg(count(lit(1)).as("n"))
       .filter(col("n") <= 3L).select(col("gx"), col("gy"))
     val cool = home.join(ok, Seq("gx", "gy"), "left_semi")
-    probeRing(p, 20L, "id_a")
-      .join(cool, Seq("gx", "gy"))
-      .filter(col("id_a") < col("vec_id") &&
-        (col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py")) <= lit(400L))
-      .select(col("id_a"), col("vec_id").as("id_b"),
-        ((col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py"))).as("d2"))
+    ringPairs(p, cool, 20L, col("id_a") < col("vec_id"))
   }
 
   /** Radius-bounded 3-nearest-neighbors — the grid kNN: candidates
@@ -114,16 +128,7 @@ object GeoQueries {
     * [[graft.ext.SimOps.knnGraph]]'s job). */
   def geoKnn(spark: SparkSession, sfDir: String): DataFrame = {
     val p = graft.core.QueryCaches.track(points(spark, sfDir))
-    val home = p.select(col("vec_id"), col("px"), col("py"),
-      expr("px div 50").as("gx"), expr("py div 50").as("gy"))
-    probeRing(p, 50L, "id_a")
-      .join(home, Seq("gx", "gy"))
-      .filter(col("id_a") =!= col("vec_id") &&
-        (col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py")) <= lit(2500L))
-      .select(col("id_a"), col("vec_id").as("id_b"),
-        ((col("ax") - col("px")) * (col("ax") - col("px")) +
-          (col("ay") - col("py")) * (col("ay") - col("py"))).as("d2"))
+    ringPairs(p, homeCells(p, 50L), 50L, col("id_a") =!= col("vec_id"))
       .withColumn("rk0", row_number().over(Window.partitionBy(col("id_a"))
         .orderBy(col("d2"), col("id_b"))))
       .filter(col("rk0") <= 3)
@@ -322,11 +327,9 @@ object GeoQueries {
           lit(fid).as("fid"))
       }: _*).as("m"))
     assigned.groupBy(col("m.fid").as("facility_id"))
-      .agg(count(lit(1)).as("n_points"),
+      .agg(count(lit(1)).as("n_points"), Seq(
         expr("sum(m.d2) div count(*)").as("mean_d2"),
-        max(col("m.d2")).as("max_d2"),
-        expr("(1000 * sum(px)) div count(*)").as("cx_milli"),
-        expr("(1000 * sum(py)) div count(*)").as("cy_milli"))
+        max(col("m.d2")).as("max_d2")) ++ centroidMilli: _*)
   }
 
   /** The region catalog for [[geoRegionJoin]]: four CONVEX CCW
@@ -387,13 +390,10 @@ object GeoQueries {
     val cover = coverRows.toDF("gx", "gy", "region_id")
     val edgeCat = regions.map { case (rid, vs) => (rid, regionEdges(vs)) }
       .toDF("region_id", "edges")
-    pts.select(col("vec_id"), col("px"), col("py"),
-        expr(s"px div $cell").as("gx"), expr(s"py div $cell").as("gy"))
+    homeCells(pts, cell)
       .join(broadcast(cover), Seq("gx", "gy"))
       .join(broadcast(edgeCat), Seq("region_id"))
-      .filter(forall(col("edges"), e =>
-        (e.getField("_3") - e.getField("_1")) * (col("py") - e.getField("_2")) -
-          (e.getField("_4") - e.getField("_2")) * (col("px") - e.getField("_1")) >= 0))
+      .filter(insideEdges)
       .select(col("region_id"), col("vec_id"), col("px"), col("py"))
   }
 
@@ -430,12 +430,9 @@ object GeoQueries {
     val cover = coverRows.toDF("gx", "gy", "region_id", "edges")
     val p = graft.core.QueryCaches.track(points(spark, sfDir))
     val inside = graft.core.QueryCaches.track(
-      p.select(col("vec_id"), col("px"), col("py"),
-          expr(s"px div $cell").as("gx"), expr(s"py div $cell").as("gy"))
+      homeCells(p, cell)
         .join(cover.hint("merge"), Seq("gx", "gy"))
-        .filter(forall(col("edges"), e =>
-          (e.getField("_3") - e.getField("_1")) * (col("py") - e.getField("_2")) -
-            (e.getField("_4") - e.getField("_2")) * (col("px") - e.getField("_1")) >= 0))
+        .filter(insideEdges)
         .select(col("region_id"), col("vec_id"), col("px"), col("py")))
     regionRollup(p, inside)
   }
@@ -444,15 +441,11 @@ object GeoQueries {
     * the two region-join rows, including the region −1 not-in-any row. */
   private def regionRollup(p: DataFrame, inside: DataFrame): DataFrame = {
     val perRegion = inside.groupBy(col("region_id"))
-      .agg(count(lit(1)).as("n_points"),
-        expr("(1000 * sum(px)) div count(*)").as("cx_milli"),
-        expr("(1000 * sum(py)) div count(*)").as("cy_milli"))
+      .agg(count(lit(1)).as("n_points"), centroidMilli: _*)
     val outside = p
       .join(inside.select(col("vec_id").as("i_id")),
         col("vec_id") === col("i_id"), "left_anti")
-      .agg(count(lit(1)).as("n_points"),
-        expr("(1000 * sum(px)) div count(*)").as("cx_milli"),
-        expr("(1000 * sum(py)) div count(*)").as("cy_milli"))
+      .agg(count(lit(1)).as("n_points"), centroidMilli: _*)
       .select(lit(-1L).as("region_id"), col("n_points"),
         col("cx_milli"), col("cy_milli"))
     perRegion.unionAll(outside)

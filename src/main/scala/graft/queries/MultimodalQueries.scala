@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.ext.MultimodalOps
 import graft.functions.HashExprs
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import OracleFragments.log2MillisSql
@@ -23,6 +23,73 @@ object MultimodalQueries {
   private def bin(spark: SparkSession, sfDir: String): DataFrame =
     load(spark, sfDir, "documents")
       .select(col("doc_id"), encode(col("text"), "UTF-8").as("content"))
+
+  /** Byte `i` of doc_id's textured 64-byte body: the mid-square hash
+    * [[synthBin]] describes, seeded by (doc_id / 4, i / 16 % 2), so 4
+    * consecutive docs share a body and 16-byte tiles 0/2 and 1/3
+    * repeat. */
+  private def textureByte(i: Column): Column =
+    pmod(
+      shiftright({
+        val v = pmod(((col("doc_id") / 4).cast("bigint") * 2 +
+          (i / 16).cast("bigint") % 2) * lit(40503L) +
+          (pmod(i, lit(16)) + 1) * lit(104729L), lit(2147483647L))
+        v * v
+      }, 23),
+      lit(256))
+
+  /** Blobs `(doc_id, content)` as raw 8-frame video media
+    * `(media_id, content, meta)` for [[MultimodalOps.sampleFrames]]. */
+  private def asVideo(blobs: DataFrame): DataFrame =
+    blobs.select(col("doc_id").as("media_id"), col("content"),
+      struct(lit("video").as("modality"), lit("raw").as("fmt"),
+        lit(0).as("width"), lit(0).as("height"), lit(0).as("sample_rate"),
+        lit(8).as("n_frames")).as("meta"))
+
+  /** Per-blob byte entropy in millibits `(doc_id, n_bytes, n_bins,
+    * entropy_milli)` over a 16-bin histogram: non-empty bins
+    * posexplode to rows (no HOF over a kernel column), H·n =
+    * Σ c·(L(n) − L(c)), one integral division per blob. */
+  private def entropyMilli(blobs: DataFrame): DataFrame = {
+    import graft.functions.HashExprs.log2Millis
+    blobs
+      .select(col("doc_id"), length(col("content")).cast("bigint").as("n_bytes"),
+        posexplode(MultimodalOps.byteHistCounts(col("content"), 16))
+          .as(Seq("bin", "c")))
+      .filter(col("c") > 0L)
+      .withColumn("term", col("c") * (log2Millis(col("n_bytes")) - log2Millis(col("c"))))
+      .groupBy(col("doc_id"), col("n_bytes"))
+      .agg(count(lit(1)).as("n_bins"), sum(col("term")).as("ts"))
+      .select(col("doc_id"), col("n_bytes"), col("n_bins"),
+        expr("CASE WHEN n_bytes = 0 THEN 0 ELSE ts div n_bytes END")
+          .as("entropy_milli"))
+  }
+
+  /** Per-source chunk duplication `(source, n_chunks, n_distinct,
+    * dup_milli)` over chunk fingerprints `(source, fp)`. */
+  private def chunkDupRate(fps: DataFrame): DataFrame =
+    fps.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_chunks"),
+        countDistinct(col("fp")).as("n_distinct"))
+      .select(col("source"), col("n_chunks"), col("n_distinct"),
+        expr("(1000 * (n_chunks - n_distinct)) div n_chunks").as("dup_milli"))
+
+  /** Cross-source containment over DISTINCT chunk fingerprints
+    * `(source, fp)`: source pairs sharing ≥ 2 fps, with each side's fp
+    * count and shared ÷ the smaller side in milli. Pairs form by fp
+    * equi-join, bounded by the source domain. */
+  private def sourceContainment(sf: DataFrame): DataFrame = {
+    val n = sf.groupBy(col("source")).agg(count(lit(1)).as("n_fp"))
+    sf.as("a").join(sf.as("b"),
+        col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
+      .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
+      .agg(count(lit(1)).as("shared"))
+      .filter(col("shared") >= 2)
+      .join(n.select(col("source").as("src_a"), col("n_fp").as("n_a")), "src_a")
+      .join(n.select(col("source").as("src_b"), col("n_fp").as("n_b")), "src_b")
+      .select(col("src_a"), col("src_b"), col("shared"), col("n_a"), col("n_b"),
+        expr("(1000 * shared) div least(n_a, n_b)").as("containment_milli"))
+  }
 
   /** Deterministic NON-UTF8 binary fixture — bytes the text stand-in
     * can never produce, minted per doc_id from pure integer
@@ -62,14 +129,7 @@ object MultimodalQueries {
       lpad(lower(hex(
         when(pmod(col("doc_id"), lit(5)) === 0,
           pmod(col("doc_id") * 7, lit(256)))
-          .otherwise(pmod(
-            shiftright({
-              val v = pmod(((col("doc_id") / 4).cast("bigint") * 2 +
-                (i / 16).cast("bigint") % 2) * lit(40503L) +
-                (pmod(i, lit(16)) + 1) * lit(104729L), lit(2147483647L))
-              v * v
-            }, 23),
-            lit(256))))), 2, "0"))
+          .otherwise(textureByte(i)))), 2, "0"))
     load(spark, sfDir, "documents").select(col("doc_id") +:
       unhex(concat(magicHex, array_join(body, ""))).as("content") +:
       keep.map(col): _*)
@@ -127,11 +187,7 @@ object MultimodalQueries {
     * DuckDB reproduces the identical slices from the text side (ASCII
     * corpus: character positions == byte positions). */
   def mmFrames(spark: SparkSession, sfDir: String): DataFrame = {
-    val media = bin(spark, sfDir).select(col("doc_id").as("media_id"), col("content"),
-      struct(lit("video").as("modality"), lit("raw").as("fmt"),
-        lit(0).as("width"), lit(0).as("height"), lit(0).as("sample_rate"),
-        lit(8).as("n_frames")).as("meta"))
-    MultimodalOps.sampleFrames(media, every = 3)
+    MultimodalOps.sampleFrames(asVideo(bin(spark, sfDir)), every = 3)
       .select(col("media_id").as("doc_id"),
         col("frame_idx").cast("bigint").as("frame_idx"),
         length(col("frame_bytes")).cast("bigint").as("n_frame_bytes"),
@@ -272,11 +328,7 @@ object MultimodalQueries {
       .select(col("source"),
         explode(graft.functions.HashExprs.cdcChunkFps(col("text"), 8, 64L))
           .as("fp"))
-    fps.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_chunks"),
-        countDistinct(col("fp")).as("n_distinct"))
-      .select(col("source"), col("n_chunks"), col("n_distinct"),
-        expr("(1000 * (n_chunks - n_distinct)) div n_chunks").as("dup_milli"))
+    chunkDupRate(fps)
   }
 
   /** Cross-SOURCE chunk containment — the decontamination/provenance
@@ -295,22 +347,12 @@ object MultimodalQueries {
     * shared ≥ 2 support floor: one coincident 64-byte chunk is noise,
     * a repeat is provenance. */
   def mmChunkOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val sf = graft.core.QueryCaches.track(
+    sourceContainment(graft.core.QueryCaches.track(
       load(spark, sfDir, "documents")
         .select(col("source"),
           explode(graft.functions.HashExprs.cdcChunkFps(col("text"), 8, 64L))
             .as("fp"))
-        .distinct())
-    val n = sf.groupBy(col("source")).agg(count(lit(1)).as("n_fp"))
-    sf.as("a").join(sf.as("b"),
-        col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
-      .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= 2)
-      .join(n.select(col("source").as("src_a"), col("n_fp").as("n_a")), "src_a")
-      .join(n.select(col("source").as("src_b"), col("n_fp").as("n_b")), "src_b")
-      .select(col("src_a"), col("src_b"), col("shared"), col("n_a"), col("n_b"),
-        expr("(1000 * shared) div least(n_a, n_b)").as("containment_milli"))
+        .distinct()))
   }
 
   /** Aspect-bucketed training-batch packing — the NaViT/WebDataset
@@ -534,19 +576,7 @@ object MultimodalQueries {
     * re-evaluation trap), the millibit fold is H·n = Σ c·(L(n) −
     * L(c)), one integral division per blob. */
   def mmByteEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.HashExprs.log2Millis
-    val hist = bin(spark, sfDir)
-      .select(col("doc_id"), length(col("content")).cast("bigint").as("n_bytes"),
-        posexplode(MultimodalOps.byteHistCounts(col("content"), 16))
-          .as(Seq("bin", "c")))
-      .filter(col("c") > 0L)
-    hist
-      .withColumn("term", col("c") * (log2Millis(col("n_bytes")) - log2Millis(col("c"))))
-      .groupBy(col("doc_id"), col("n_bytes"))
-      .agg(count(lit(1)).as("n_bins"), sum(col("term")).as("ts"))
-      .select(col("doc_id"), col("n_bytes"), col("n_bins"),
-        expr("CASE WHEN n_bytes = 0 THEN 0 ELSE ts div n_bytes END")
-          .as("entropy_milli"))
+    entropyMilli(bin(spark, sfDir))
   }
 
   /** Container sniffing — the magic-byte format detector every media
@@ -583,19 +613,7 @@ object MultimodalQueries {
     * the routing split an ingest pipeline acts on (phash and codecs
     * only for the high-entropy side, see [[mmBinPhash]]). */
   def mmBinEntropy(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.functions.HashExprs.log2Millis
-    val hist = synthBin(spark, sfDir)
-      .select(col("doc_id"), length(col("content")).cast("bigint").as("n_bytes"),
-        posexplode(MultimodalOps.byteHistCounts(col("content"), 16))
-          .as(Seq("bin", "c")))
-      .filter(col("c") > 0L)
-    hist
-      .withColumn("term", col("c") * (log2Millis(col("n_bytes")) - log2Millis(col("c"))))
-      .groupBy(col("doc_id"), col("n_bytes"))
-      .agg(count(lit(1)).as("n_bins"), sum(col("term")).as("ts"))
-      .select(col("doc_id"), col("n_bytes"), col("n_bins"),
-        expr("CASE WHEN n_bytes = 0 THEN 0 ELSE ts div n_bytes END")
-          .as("entropy_milli"))
+    entropyMilli(synthBin(spark, sfDir))
   }
 
   /** [[mmPhash]] re-gated over the binary fixture: gradient hashes on
@@ -686,12 +704,7 @@ object MultimodalQueries {
     * blobs never cross a shuffle, the frame explode is 4 fixed rows
     * per blob. */
   def mmBinFrames(spark: SparkSession, sfDir: String): DataFrame = {
-    val media = synthBin(spark, sfDir).select(col("doc_id").as("media_id"),
-      col("content"),
-      struct(lit("video").as("modality"), lit("raw").as("fmt"),
-        lit(0).as("width"), lit(0).as("height"), lit(0).as("sample_rate"),
-        lit(8).as("n_frames")).as("meta"))
-    MultimodalOps.sampleFrames(media, every = 3)
+    MultimodalOps.sampleFrames(asVideo(synthBin(spark, sfDir)), every = 3)
       .select(col("media_id").as("doc_id"),
         col("frame_idx").cast("bigint").as("frame_idx"),
         MultimodalOps.byteStats(col("frame_bytes")).as("s"))
@@ -762,11 +775,7 @@ object MultimodalQueries {
       .select(col("source"),
         explode(graft.functions.HashExprs.cdcChunkFpsBin(col("content"), 8, 16L))
           .as("fp"))
-    fps.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_chunks"),
-        countDistinct(col("fp")).as("n_distinct"))
-      .select(col("source"), col("n_chunks"), col("n_distinct"),
-        expr("(1000 * (n_chunks - n_distinct)) div n_chunks").as("dup_milli"))
+    chunkDupRate(fps)
   }
 
   /** [[mmChunkOverlap]] on the binary fixture — cross-source
@@ -777,22 +786,12 @@ object MultimodalQueries {
     * pairs form by fp equi-join bounded by the source domain, shared ≥
     * 2 support floor. */
   def mmBinChunkOverlap(spark: SparkSession, sfDir: String): DataFrame = {
-    val sf = graft.core.QueryCaches.track(
+    sourceContainment(graft.core.QueryCaches.track(
       synthBin(spark, sfDir, keep = Seq("source"))
         .select(col("source"),
           explode(graft.functions.HashExprs.cdcChunkFpsBin(col("content"), 8, 16L))
             .as("fp"))
-        .distinct())
-    val n = sf.groupBy(col("source")).agg(count(lit(1)).as("n_fp"))
-    sf.as("a").join(sf.as("b"),
-        col("a.fp") === col("b.fp") && col("a.source") < col("b.source"))
-      .groupBy(col("a.source").as("src_a"), col("b.source").as("src_b"))
-      .agg(count(lit(1)).as("shared"))
-      .filter(col("shared") >= 2)
-      .join(n.select(col("source").as("src_a"), col("n_fp").as("n_a")), "src_a")
-      .join(n.select(col("source").as("src_b"), col("n_fp").as("n_b")), "src_b")
-      .select(col("src_a"), col("src_b"), col("shared"), col("n_a"), col("n_b"),
-        expr("(1000 * shared) div least(n_a, n_b)").as("containment_milli"))
+        .distinct()))
   }
 
   /** Blur/sharpness quality screen — discrete-Laplacian energy per
@@ -880,14 +879,7 @@ object MultimodalQueries {
     val constHex = transform(sequence(lit(0L), lit(63L)), _ =>
       lpad(lower(hex(pmod(col("doc_id") * 7, lit(256)))), 2, "0"))
     val texHex = transform(sequence(lit(0L), lit(63L)), i =>
-      lpad(lower(hex(pmod(
-        shiftright({
-          val v = pmod(((col("doc_id") / 4).cast("bigint") * 2 +
-            (i / 16).cast("bigint") % 2) * lit(40503L) +
-            (pmod(i, lit(16)) + 1) * lit(104729L), lit(2147483647L))
-          v * v
-        }, 23),
-        lit(256)))), 2, "0"))
+      lpad(lower(hex(textureByte(i))), 2, "0"))
     val media = load(spark, sfDir, "documents").select(col("doc_id"),
       unhex(concat(array_join(constHex, ""), array_join(texHex, ""))).as("content"))
     val withH = media

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -16,6 +16,15 @@ import Tables._
   */
 object Relational {
 
+  /** Line revenue net of discount. */
+  private def netPrice: Column = col("l_extendedprice") * (lit(1) - col("l_discount"))
+
+  /** The nations of the region `rName`, region columns joined on. */
+  private def regionNations(spark: SparkSession, sfDir: String, rName: String): DataFrame =
+    load(spark, sfDir, "nation")
+      .join(broadcast(load(spark, sfDir, "region").filter(col("r_name") === rName)),
+        col("n_regionkey") === col("r_regionkey"))
+
   /** TPC-H Q1-style pricing summary: full scan + 4-way decimal-exact agg.
     * Scale posture: map-side partial agg on 6 groups → negligible shuffle. */
   def q1Pricing(spark: SparkSession, sfDir: String): DataFrame = {
@@ -30,8 +39,8 @@ object Relational {
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),
         dsum(col("l_extendedprice")).as("sum_base_price"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("sum_disc_price"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")) * (lit(1) + col("l_tax"))).as("sum_charge"),
+        dsum(netPrice).as("sum_disc_price"),
+        dsum(netPrice * (lit(1) + col("l_tax"))).as("sum_charge"),
         davg(col("l_quantity")).as("avg_qty"),
         davg(col("l_extendedprice")).as("avg_price"),
         davg(col("l_discount")).as("avg_disc"),
@@ -52,7 +61,7 @@ object Relational {
       .join(ord, li("l_orderkey") === ord("o_orderkey"))
       .join(cust, ord("o_custkey") === cust("c_custkey"))
       .groupBy(col("l_orderkey"))
-      .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      .agg(dsum(netPrice).as("revenue"))
     joined.orderBy(col("revenue").desc, col("l_orderkey")).limit(10)
   }
 
@@ -75,7 +84,7 @@ object Relational {
       .join(broadcast(nation), supp("s_nationkey") === nation("n_nationkey"))
       .join(broadcast(region), nation("n_regionkey") === region("r_regionkey"))
       .groupBy(col("n_name"))
-      .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      .agg(dsum(netPrice).as("revenue"))
   }
 
   /** Broadcast-join aggregate: part (tiny) ⋈ lineitem by brand. */
@@ -137,7 +146,7 @@ object Relational {
       .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     li.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-      dsumOver(col("l_extendedprice") * (lit(1) - col("l_discount")), w).as("running_rev"))
+      dsumOver(netPrice, w).as("running_rev"))
   }
 
   /** Trailing-30-day revenue per supplier — a RANGE frame (the VALUE-
@@ -153,7 +162,7 @@ object Relational {
       .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
         datediff(col("l_shipdate").cast("date"),
           lit("1970-01-01").cast("date")).cast("bigint").as("ship_day"),
-        (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("rev"))
+        netPrice.as("rev"))
     val w = Window.partitionBy(col("l_suppkey")).orderBy(col("ship_day"))
       .rangeBetween(-30, 0)
     li.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
@@ -232,7 +241,7 @@ object Relational {
       .filter(col("supp_nation") < col("cust_nation"))
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("o_orderdate")).as("o_year"))
-      .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      .agg(dsum(netPrice).as("revenue"))
   }
 
   /** TPC-H Q8-style national market share: within one region's market
@@ -256,7 +265,7 @@ object Relational {
     val n2 = load(spark, sfDir, "nation").select(
       col("n_nationkey").as("sn_key"), col("n_name").as("supp_nation"))
     val region = load(spark, sfDir, "region").filter(col("r_name") === "AMERICA")
-    val vol = col("l_extendedprice") * (lit(1) - col("l_discount"))
+    val vol = netPrice
     li.join(part, li("l_partkey") === part("p_partkey"))
       .join(ord, li("l_orderkey") === ord("o_orderkey"))
       .join(cust, ord("o_custkey") === cust("c_custkey"))
@@ -290,7 +299,7 @@ object Relational {
     val supp = load(spark, sfDir, "supplier")
     val nat = load(spark, sfDir, "nation").select(
       col("n_nationkey").as("sn_key"), col("n_name").as("nation"))
-    val amount = col("l_extendedprice") * (lit(1) - col("l_discount")) -
+    val amount = netPrice -
       (lit(0.5) * col("p_retailprice")) * col("l_quantity")
     li.join(part, li("l_partkey") === part("p_partkey"))
       .join(supp, li("l_suppkey") === supp("s_suppkey"))
@@ -494,7 +503,7 @@ object Relational {
     li.join(ord, li("l_orderkey") === ord("o_orderkey"))
       .join(cust, ord("o_custkey") === cust("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"))
-      .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+      .agg(dsum(netPrice).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(20)
   }
@@ -509,7 +518,7 @@ object Relational {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-02-01").cast("timestamp"))
     val part = load(spark, sfDir, "part")
-    val vol = col("l_extendedprice") * (lit(1) - col("l_discount"))
+    val vol = netPrice
     li.join(part, li("l_partkey") === part("p_partkey"))
       .agg((lit(100.0) * dsum(when(col("p_type") === "PROMO", vol).otherwise(lit(0.0))) /
         dsum(vol)).as("promo_share"),
@@ -530,7 +539,7 @@ object Relational {
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
       .groupBy(col("l_suppkey"))
-      .agg(dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("total_rev")))
+      .agg(dsum(netPrice).as("total_rev")))
     val mx = rev.agg(max(col("total_rev")).as("mr"))
     rev.crossJoin(broadcast(mx)).filter(col("total_rev") === col("mr"))
       .join(load(spark, sfDir, "supplier"), col("l_suppkey") === col("s_suppkey"))
@@ -1196,7 +1205,7 @@ object Relational {
     * factors without stale-layout collisions. */
   def qColocatedJoin(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val li = LayoutOps.bucketedTable(
       load(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
@@ -1207,8 +1216,7 @@ object Relational {
       s"graft_b_orders_$tag", "o_orderkey", buckets = 8)
     val perOrder = li.groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_items"),
-        sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast(DecimalType(38, 6))).as("rev"))
+        sum(netPrice.cast(DecimalType(38, 6))).as("rev"))
     perOrder.hint("merge")
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
@@ -1233,7 +1241,7 @@ object Relational {
     * session/scale (skip-if-exists), the production shape. */
   def qDppPrune(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val fact = LayoutOps.partitionedTable(
       load(spark, sfDir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"),
@@ -1249,7 +1257,7 @@ object Relational {
     fact.join(broadcast(dim), col("ship_month") === col("m"))
       .groupBy(col("ship_month"))
       .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+        dsum(netPrice).as("revenue"))
   }
 
   /** The oracle's spelling of [[graft.functions.HashKernels.zInterleave]]:
@@ -1660,7 +1668,7 @@ object Relational {
         (col("p_brand") === "Brand#34" && col("p_size").between(1, 15) &&
           col("l_quantity").between(20, 30))))
       .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+        dsum(netPrice).as("revenue"))
   }
 
   /** EAGER AGGREGATION (Yan & Larson: push the group-by below the
@@ -1682,8 +1690,7 @@ object Relational {
   def qEagerAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val liRollup = load(spark, sfDir, "lineitem")
       .groupBy(col("l_orderkey"))
-      .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast(DecimalType(38, 6))).as("rev_dec"),
+      .agg(sum(netPrice.cast(DecimalType(38, 6))).as("rev_dec"),
         count(lit(1)).as("items"))
     load(spark, sfDir, "orders")
       .join(liRollup, col("o_orderkey") === col("l_orderkey"))
@@ -1725,7 +1732,7 @@ object Relational {
       .join(c, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_nationkey").cast("bigint").as("nation"))
       .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("revenue"))
+        dsum(netPrice).as("revenue"))
   }
 
   /** Sketch-based join-cardinality estimation — the optimizer-stats
@@ -1965,10 +1972,7 @@ object Relational {
       .agg(min(col("l_extendedprice") / col("l_quantity")).as("unit_cost"))
     val parts = load(spark, sfDir, "part")
       .filter(col("p_type") === "PROMO" && col("p_size") <= 15)
-    val dims = load(spark, sfDir, "nation")
-      .join(broadcast(load(spark, sfDir, "region")
-        .filter(col("r_name") === "EUROPE")),
-        col("n_regionkey") === col("r_regionkey"))
+    val dims = regionNations(spark, sfDir, "EUROPE")
     val regionSupp = load(spark, sfDir, "supplier")
       .join(broadcast(dims), col("s_nationkey") === col("n_nationkey"))
     // `offers` feeds both the per-part min and the final stitch —
@@ -1998,10 +2002,7 @@ object Relational {
     * threshold compare happens on the doubles both engines derive from
     * those exact decimals with one multiply — deterministic. */
   def q11ImportantParts(spark: SparkSession, sfDir: String): DataFrame = {
-    val dims = load(spark, sfDir, "nation")
-      .join(broadcast(load(spark, sfDir, "region")
-        .filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
+    val dims = regionNations(spark, sfDir, "ASIA")
     val regionSupp = load(spark, sfDir, "supplier")
       .join(broadcast(dims), col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"))
@@ -2012,8 +2013,7 @@ object Relational {
       load(spark, sfDir, "lineitem")
         .join(regionSupp, col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-          .cast(DecimalType(38, 6))).as("val_dec")))
+        .agg(sum(netPrice.cast(DecimalType(38, 6))).as("val_dec")))
     val total = vals.agg(sum(col("val_dec")).cast("double").as("total_value"))
     vals.crossJoin(broadcast(total))
       .filter(col("val_dec").cast("double") * lit(1000.0) > col("total_value"))
@@ -2102,10 +2102,7 @@ object Relational {
       .filter(col("qty_dec").cast("double") * lit(5.0) >
         col("total_dec").cast("double"))
       .select(col("l_suppkey"))
-    val dims = load(spark, sfDir, "nation")
-      .join(broadcast(load(spark, sfDir, "region")
-        .filter(col("r_name") === "AMERICA")),
-        col("n_regionkey") === col("r_regionkey"))
+    val dims = regionNations(spark, sfDir, "AMERICA")
     load(spark, sfDir, "supplier")
       .join(broadcast(dims), col("s_nationkey") === col("n_nationkey"))
       .join(qualified, col("s_suppkey") === col("l_suppkey"), "left_semi")
@@ -2123,10 +2120,7 @@ object Relational {
     * order groups are bounded (~7 lines), so the per-group residual
     * comparison is O(lines·group) — no quadratic blowup. */
   def q21WaitingSupp(spark: SparkSession, sfDir: String): DataFrame = {
-    val dims = load(spark, sfDir, "nation")
-      .join(broadcast(load(spark, sfDir, "region")
-        .filter(col("r_name") === "EUROPE")),
-        col("n_regionkey") === col("r_regionkey"))
+    val dims = regionNations(spark, sfDir, "EUROPE")
     val l1 = load(spark, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
       .join(load(spark, sfDir, "supplier")

@@ -28,6 +28,81 @@ object SimQueries {
   private def emb(spark: SparkSession, sfDir: String): DataFrame =
     load(spark, sfDir, "embeddings")
 
+  // The input relations several builders share, each spelled once.
+  // Builders wrap them in `QueryCaches.track` where they reuse them.
+
+  /** The corpus with a planted exact twin of every vector at
+    * vec_id + SHIFT. */
+  private def withTwins(e: DataFrame): DataFrame =
+    e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+
+  /** Decimal-exact per-dimension mean vectors `(key, c_vec)` of
+    * `embedding` per `key`. The float widens to DOUBLE before the
+    * decimal quantization, as in the oracles: engines disagree on
+    * float→decimal directly (shortest decimal representation vs
+    * widened-binary rounding). [[SimOps.labelCentroids]] casts float
+    * straight to decimal, which is exact only where the raw doubles
+    * never reach the hash. */
+  private def meanVecs(df: DataFrame, key: String): DataFrame =
+    df.select(col(key), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy(col(key), col("pos"))
+      .agg((sum(col("v").cast("double").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
+        .cast("double") / count(lit(1))).as("cv"))
+      .groupBy(col(key))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
+        x => x("cv")).as("c_vec"))
+
+  /** The label centroids `(c_label, c_vec)` of the IVF rows. */
+  private def labelCents(e: DataFrame): DataFrame =
+    SimOps.labelCentroids(e, "label")
+      .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
+
+  /** Nearest-centroid assignment `(idCol, c_label)` by cosine through
+    * map-side `max_by` (one row per vector crosses the shuffle; see
+    * SimOps.topkIvf): the semantics of a (cos DESC, c_label ASC)
+    * rank-1 window. */
+  private def nearestCentroid(vecs: DataFrame, cents: DataFrame,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    vecs.crossJoin(broadcast(cents))
+      .select(col(idCol), col("c_label"),
+        HashExprs.cosineSim(col(vecCol), col("c_vec")).as("cos"))
+      .groupBy(col(idCol))
+      .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
+
+  /** A vector's integer residual against its centroid `c_vec`, on a
+    * 1e-3 grid so every downstream distance is exact. */
+  private def residual(vec: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    zip_with(vec, col("c_vec"),
+      (a, b) => floor((a.cast("double") - b) * lit(1000.0)).cast("bigint"))
+
+  /** Each corpus vector's residual `(vec_id, c_label, embedding)`
+    * against its nearest label centroid — the IVF-PQ encode input. */
+  private def ivfResiduals(e: DataFrame, cents: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding")).join(nearestCentroid(e, cents), "vec_id")
+      .join(broadcast(cents), "c_label")
+      .select(col("vec_id"), col("c_label"), residual(col("embedding")).as("embedding"))
+
+  /** The seed PQ codebook (4 codes × 8 subspaces of 8 dims) and the
+    * corpus codes `(vec_id, s, code)` it encodes. */
+  private def pqIndex(e: DataFrame): (DataFrame, DataFrame) = {
+    val cb = SimOps.pqSeedCodebook(e, kCodes = 4, m = 8, sub = 8)
+    (cb, SimOps.pqEncode(e.select(col("vec_id"), col("embedding")), cb, m = 8, sub = 8)
+      .select(col("vec_id"), col("s"), col("code")))
+  }
+
+  /** Brute-force nearest neighbour of each query `(q_id, true_id,
+    * true_cos)`, ties to the lower id — the truth the graph searches
+    * are scored against. */
+  private def bruteTop1(e: DataFrame, q: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"),
+        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("c"))
+      .groupBy(col("q_id"))
+      .agg(max_by(struct(col("vec_id"), col("c")),
+        struct(col("c"), (-col("vec_id")).as("nv"))).as("t"))
+      .select(col("q_id"), col("t.vec_id").as("true_id"), col("t.c").as("true_cos"))
+
   /** Every 100th vector queries the corpus (5 queries at sf0.01). */
   private def querySet(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 100 === 0)
@@ -205,7 +280,7 @@ object SimQueries {
     * unit vectors never reach 0.999). Bucket join, never all-pairs. */
   def simPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val corpus = withTwins(e)
     SimOps.embNearDupPairs(corpus, bits = 16, threshold = 0.999)
   }
 
@@ -223,7 +298,7 @@ object SimQueries {
     * the guard would be verified-but-idle. */
   def simPairsCapped(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val corpus = withTwins(e)
     SimOps.embNearDupPairs(corpus, bits = 8, threshold = 0.999, maxBucket = 4)
   }
 
@@ -243,7 +318,7 @@ object SimQueries {
     * and every other plan in it stay as they were. */
   def simPairsRewrite(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val corpus = withTwins(e)
     val naive = corpus.as("a").join(corpus.as("b"),
         HashExprs.cosineSim(col("a.embedding"), col("b.embedding")) >= 0.999 &&
           col("a.vec_id") < col("b.vec_id"))
@@ -296,8 +371,7 @@ object SimQueries {
     * broadcast; the corpus is scanned once. */
   def simIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val cents = SimOps.labelCentroids(e, "label")
-      .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
+    val cents = labelCents(e)
     // assignment via max_by (map-side-combined argmax — one row per
     // vector crosses the shuffle; see SimOps.topkIvf), identical
     // semantics to a (cos DESC, c_label ASC) rank-1 window
@@ -421,14 +495,7 @@ object SimQueries {
     val q = querySet(e)
     val walked = SimOps.graphSearchGreedy(
       e.select(col("vec_id"), col("embedding")), q, k = 5, bits = 4, maxSteps = 6)
-    val truth = e.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("c"))
-      .groupBy(col("q_id"))
-      .agg(max_by(struct(col("vec_id"), col("c")),
-        struct(col("c"), (-col("vec_id")).as("nv"))).as("t"))
-      .select(col("q_id"), col("t.vec_id").as("true_id"), col("t.c").as("true_cos"))
+    val truth = bruteTop1(e, q)
     walked.join(truth, "q_id")
       .select(col("q_id"), col("found_id"), col("found_cos"), col("n_steps"),
         col("true_id"), col("true_cos"),
@@ -453,14 +520,7 @@ object SimQueries {
       max_by(struct(col("id"), col("cos")),
         struct(col("cos"), (-col("id")).as("ni"))).as("t1"),
       collect_list(col("id")).as("beam_ids"))
-    val truth = e.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        HashExprs.cosineSim(col("embedding"), col("q_vec")).as("c"))
-      .groupBy(col("q_id"))
-      .agg(max_by(struct(col("vec_id"), col("c")),
-        struct(col("c"), (-col("vec_id")).as("nv"))).as("t"))
-      .select(col("q_id"), col("t.vec_id").as("true_id"), col("t.c").as("true_cos"))
+    val truth = bruteTop1(e, q)
     bAgg.join(truth, "q_id")
       .select(col("q_id"), col("t1.id").as("found_id"), col("t1.cos").as("found_cos"),
         col("true_id"), col("true_cos"),
@@ -503,16 +563,9 @@ object SimQueries {
       SimOps.topkBrute(corpus, querySet(e), 10)
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id")))))
-    val fb = corpus
+    val fb = meanVecs(corpus
       .join(broadcast(bt.filter(col("rk") <= 3).select(col("q_id"), col("vec_id"))),
-        Seq("vec_id"))
-      .select(col("q_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("q_id"), col("pos"))
-      .agg((sum(col("v").cast("double").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-        .cast("double") / count(lit(1))).as("cv"))
-      .groupBy(col("q_id"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x("cv")).as("c_vec"))
+        Seq("vec_id")), "q_id")
     val expanded = querySet(e).join(broadcast(fb), Seq("q_id"))
       .select(col("q_id"),
         zip_with(transform(col("q_vec"), _.cast("double")), col("c_vec"),
@@ -589,20 +642,10 @@ object SimQueries {
     val joined = graft.core.QueryCaches.track(
       docs.join(e, col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("lang"), col("embedding")))
-    // same decimal-exact per-dimension means as SimOps.labelCentroids,
-    // keyed by the string lang (labelCentroids casts its key to long).
-    // The float widens to DOUBLE before the decimal quantization on
-    // BOTH sides: engines disagree on float→decimal directly (shortest
-    // decimal representation vs widened-binary rounding), and unlike
-    // sim_ivf's count-only confusion matrix this query EXPOSES the raw
-    // centroid-derived doubles to the hash.
-    val centsByLang = joined.select(col("lang"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("lang"), col("pos"))
-      .agg((sum(col("v").cast("double").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-        .cast("double") / count(lit(1))).as("cv"))
-      .groupBy(col("lang"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x("cv")).as("c_vec"))
+    // per-lang mean vectors, widened to DOUBLE first ([[meanVecs]]):
+    // unlike sim_ivf's count-only confusion matrix this query EXPOSES
+    // the raw centroid-derived doubles to the hash.
+    val centsByLang = meanVecs(joined, "lang")
       .select(col("lang").as("c_lang"), col("c_vec"))
     joined.join(broadcast(centsByLang), col("lang") === col("c_lang"))
       .select(col("doc_id"), col("lang"),
@@ -622,17 +665,12 @@ object SimQueries {
     * All-integer surfaces. */
   def simIvfBalance(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val cents = SimOps.labelCentroids(e, "label")
-      .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
+    val cents = labelCents(e)
     val k = lit(10L) // the label-centroid count — the oracle pins it too
     // persisted: the 1-row total and the report both read the ≤k-row
     // posting-list relation — without it the assignment runs twice
     val lists = graft.core.QueryCaches.track(
-      e.crossJoin(broadcast(cents))
-        .select(col("vec_id"), col("c_label"),
-          HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
+      nearestCentroid(e, cents)
         .groupBy(col("c_label"))
         .agg(count(lit(1)).as("n")))
     val tot = lists.agg(sum(col("n")).as("total"))
@@ -662,13 +700,7 @@ object SimQueries {
     val e = graft.core.QueryCaches.track(
       emb(spark, sfDir).select(col("vec_id"),
         col("label").cast("bigint").as("lab"), col("embedding")))
-    val cents = e.select(col("lab"), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col("lab"), col("pos"))
-      .agg((sum(col("v").cast("double").cast(org.apache.spark.sql.types.DecimalType(38, 6)))
-        .cast("double") / count(lit(1))).as("cv"))
-      .groupBy(col("lab"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-        x => x("cv")).as("c_vec"))
+    val cents = meanVecs(e, "lab")
       .select(col("lab").as("c_lab"), col("c_vec"))
     e.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("lab"), col("c_lab"),
@@ -736,7 +768,7 @@ object SimQueries {
     * equi-join, never all-pairs. */
   def simSemanticDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val corpus = e.unionAll(e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val corpus = withTwins(e)
     val seeds = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("s_id"), col("embedding").as("s_vec"))
     val assigned = graft.core.QueryCaches.track(
@@ -822,10 +854,7 @@ object SimQueries {
     * never shuffles vectors, only (q_id, vec_id, partial sum) rows. */
   def simPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val corpus = e.select(col("vec_id"), col("embedding"))
-    val cb = SimOps.pqSeedCodebook(e, kCodes = 4, m = 8, sub = 8)
-    val codes = SimOps.pqEncode(corpus, cb, m = 8, sub = 8)
-      .select(col("vec_id"), col("s"), col("code"))
+    val (cb, codes) = pqIndex(e)
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     SimOps.pqTopk(codes, queries, cb, k = 5, m = 8, sub = 8)
@@ -856,9 +885,7 @@ object SimQueries {
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id")))
         .cast("bigint"))
       .select(col("q_id"), col("vec_id"), col("rk_d"))
-    val cb = SimOps.pqSeedCodebook(e, kCodes = 4, m = 8, sub = 8)
-    val codes = SimOps.pqEncode(corpus, cb, m = 8, sub = 8)
-      .select(col("vec_id"), col("s"), col("code"))
+    val (cb, codes) = pqIndex(e)
     val adc = SimOps.pqTopk(codes, queries, cb, k = 10, m = 8, sub = 8)
       .withColumn("rk_a", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("adist"), col("vec_id")))
@@ -901,20 +928,8 @@ object SimQueries {
     * (vec_id, cell, s, code) fixed-width rows. */
   def simIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir)
-    val cents = SimOps.labelCentroids(e, "label")
-      .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
-    val best = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("c_label"),
-        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
-    val resid = graft.core.QueryCaches.track(
-      e.select(col("vec_id"), col("embedding")).join(best, "vec_id")
-        .join(broadcast(cents), "c_label")
-        .select(col("vec_id"), col("c_label"),
-          zip_with(col("embedding"), col("c_vec"),
-            (a, b) => floor((a.cast("double") - b) * lit(1000.0)).cast("bigint"))
-            .as("embedding")))
+    val cents = labelCents(e)
+    val resid = graft.core.QueryCaches.track(ivfResiduals(e, cents))
     val cb = SimOps.pqSeedCodebook(resid, kCodes = 4, m = 8, sub = 8)
     val codes = SimOps.pqEncode(resid.select(col("vec_id"), col("embedding")), cb, m = 8, sub = 8)
       .join(resid.select(col("vec_id"), col("c_label")), "vec_id")
@@ -949,24 +964,12 @@ object SimQueries {
   private def ivfPqIndex(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame, DataFrame) = {
     import graft.ext.LayoutOps
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val e = emb(spark, sfDir)
-    val cents = SimOps.labelCentroids(e, "label")
-      .select(col("c_id").cast("int").as("c_label"), col("c_vec"))
+    val cents = labelCents(e)
     val centsT = LayoutOps.bucketedTable(cents, s"graft_ivfpq_cents_$tag",
       "c_label", buckets = 2)
-    val best = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("c_label"),
-        HashExprs.cosineSim(col("embedding"), col("c_vec")).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
-    val resid = graft.core.QueryCaches.track(
-      e.select(col("vec_id"), col("embedding")).join(best, "vec_id")
-        .join(broadcast(cents), "c_label")
-        .select(col("vec_id"), col("c_label"),
-          zip_with(col("embedding"), col("c_vec"),
-            (a, b) => floor((a.cast("double") - b) * lit(1000.0)).cast("bigint"))
-            .as("embedding")))
+    val resid = graft.core.QueryCaches.track(ivfResiduals(e, cents))
     val cb = SimOps.pqSeedCodebook(resid, kCodes = 4, m = 8, sub = 8)
     val cbT = LayoutOps.bucketedTable(cb, s"graft_ivfpq_cb_$tag", "s", buckets = 2)
     val codes = SimOps.pqEncode(resid.select(col("vec_id"), col("embedding")),
@@ -983,25 +986,35 @@ object SimQueries {
     * the index rows (`outId`/`outVec` name the id and residual cols). */
   private def assignResid(vecs: DataFrame, centsT: DataFrame, idCol: String,
       vecCol: String, outId: String, outVec: String): DataFrame = {
-    val bestC = vecs.crossJoin(broadcast(centsT))
-      .select(col(idCol), col("c_label"),
-        HashExprs.cosineSim(col(vecCol), col("c_vec")).as("cos"))
-      .groupBy(col(idCol))
-      .agg(max_by(col("c_label"), struct(col("cos"), (-col("c_label")).as("nc"))).as("c_label"))
-    vecs.join(bestC, idCol)
+    vecs.join(nearestCentroid(vecs, centsT, idCol, vecCol), idCol)
       .join(broadcast(centsT), "c_label")
-      .select(col(idCol).as(outId), col("c_label"),
-        zip_with(col(vecCol), col("c_vec"),
-          (a, b) => floor((a.cast("double") - b) * lit(1000.0)).cast("bigint"))
-          .as(outVec))
+      .select(col(idCol).as(outId), col("c_label"), residual(col(vecCol)).as(outVec))
+  }
+
+  /** Query vectors `(vec_id, embedding)` assigned and residualed
+    * against the persisted centroids: `(q_id, c_label, q_vec)`. */
+  private def queryResid(qs: DataFrame, centsT: DataFrame): DataFrame =
+    assignResid(qs.select(col("vec_id").as("q_id"), col("embedding").as("q_raw")),
+      centsT, "q_id", "q_raw", "q_id", "q_vec")
+
+  /** The unindexed delta batch — every 7th ≡ 3 vector reversed, under
+    * vec_id + SHIFT — encoded against the PERSISTED centroids and
+    * codebook (nothing retrained): code rows `(vec_id, c_label, s, code)`. */
+  private def deltaCodes(e: DataFrame, centsT: DataFrame, cbT: DataFrame): DataFrame = {
+    val delta = e.filter(col("vec_id") % 7 === 3)
+      .select((col("vec_id") + SHIFT).as("vec_id"),
+        reverse(col("embedding")).as("embedding"))
+    val dResid = graft.core.QueryCaches.track(
+      assignResid(delta, centsT, "vec_id", "embedding", "vec_id", "embedding"))
+    SimOps.pqEncode(dResid.select(col("vec_id"), col("embedding")), cbT, m = 8, sub = 8)
+      .join(dResid.select(col("vec_id"), col("c_label")), "vec_id")
+      .select(col("vec_id"), col("c_label"), col("s"), col("code"))
   }
 
   def simIndexPersist(spark: SparkSession, sfDir: String): DataFrame = {
     val (centsT, cbT, codesT) = ivfPqIndex(spark, sfDir)
     // ---- search (reads ONLY the reopened tables + fresh query rows)
-    val q0 = emb(spark, sfDir).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_raw"))
-    val qResid = assignResid(q0, centsT, "q_id", "q_raw", "q_id", "q_vec")
+    val qResid = queryResid(emb(spark, sfDir).filter(col("vec_id") % 100 === 0), centsT)
     SimOps.pqTopkWithin(codesT, qResid, cbT, k = 5, m = 8, sub = 8,
       listCol = "c_label")
   }
@@ -1022,20 +1035,10 @@ object SimQueries {
   def simIndexDelta(spark: SparkSession, sfDir: String): DataFrame = {
     val (centsT, cbT, codesT) = ivfPqIndex(spark, sfDir)
     val e = emb(spark, sfDir)
-    val delta = e.filter(col("vec_id") % 7 === 3)
-      .select((col("vec_id") + SHIFT).as("vec_id"),
-        reverse(col("embedding")).as("embedding"))
-    val dResid = graft.core.QueryCaches.track(
-      assignResid(delta, centsT, "vec_id", "embedding", "vec_id", "embedding"))
-    val dCodes = SimOps.pqEncode(dResid.select(col("vec_id"), col("embedding")),
-        cbT, m = 8, sub = 8)
-      .join(dResid.select(col("vec_id"), col("c_label")), "vec_id")
-      .select(col("vec_id"), col("c_label"), col("s"), col("code"))
+    val dCodes = deltaCodes(e, centsT, cbT)
     val allCodes = codesT.select(col("vec_id"), col("c_label"), col("s"), col("code"))
       .unionAll(dCodes)
-    val q0 = e.filter(col("vec_id") % 100 === 0 && col("vec_id") < SHIFT)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_raw"))
-    val qResid = assignResid(q0, centsT, "q_id", "q_raw", "q_id", "q_vec")
+    val qResid = queryResid(e.filter(col("vec_id") % 100 === 0 && col("vec_id") < SHIFT), centsT)
     SimOps.pqTopkWithin(allCodes, qResid, cbT, k = 5, m = 8, sub = 8,
       listCol = "c_label")
   }
@@ -1062,24 +1065,14 @@ object SimQueries {
   def simIndexCompact(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
     val (centsT, cbT, codesT) = ivfPqIndex(spark, sfDir)
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val e = emb(spark, sfDir)
-    val delta = e.filter(col("vec_id") % 7 === 3)
-      .select((col("vec_id") + SHIFT).as("vec_id"),
-        reverse(col("embedding")).as("embedding"))
-    val dResid = graft.core.QueryCaches.track(
-      assignResid(delta, centsT, "vec_id", "embedding", "vec_id", "embedding"))
-    val dCodes = SimOps.pqEncode(dResid.select(col("vec_id"), col("embedding")),
-        cbT, m = 8, sub = 8)
-      .join(dResid.select(col("vec_id"), col("c_label")), "vec_id")
-      .select(col("vec_id"), col("c_label"), col("s"), col("code"))
+    val dCodes = deltaCodes(e, centsT, cbT)
     val mergedT = LayoutOps.indexTable(
       codesT.select(col("vec_id"), col("c_label"), col("s"), col("code"))
         .unionAll(dCodes),
       s"graft_ivfpq_codes_g2_$tag", "c_label", "vec_id", buckets = 8)
-    val q0 = e.filter(col("vec_id") % 100 === 0 && col("vec_id") < SHIFT)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_raw"))
-    val qResid = assignResid(q0, centsT, "q_id", "q_raw", "q_id", "q_vec")
+    val qResid = queryResid(e.filter(col("vec_id") % 100 === 0 && col("vec_id") < SHIFT), centsT)
     SimOps.pqTopkWithin(mergedT, qResid, cbT, k = 5, m = 8, sub = 8,
       listCol = "c_label")
   }
@@ -1106,7 +1099,7 @@ object SimQueries {
   def simIndexDelete(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.ext.LayoutOps
     val (centsT, cbT, codesT) = ivfPqIndex(spark, sfDir)
-    val tag = java.lang.Integer.toHexString(sfDir.hashCode)
+    val tag = indexTag(sfDir)
     val e = emb(spark, sfDir)
     val tombs = e.filter(col("vec_id") % 11 === 5)
       .select(col("vec_id").as("del_id"))
@@ -1114,9 +1107,8 @@ object SimQueries {
       codesT.select(col("vec_id"), col("c_label"), col("s"), col("code"))
         .join(broadcast(tombs), col("vec_id") === col("del_id"), "left_anti"),
       s"graft_ivfpq_codes_g3_$tag", "c_label", "vec_id", buckets = 8)
-    val q0 = e.filter(col("vec_id") % 100 === 0 && col("vec_id") % 11 =!= 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_raw"))
-    val qResid = assignResid(q0, centsT, "q_id", "q_raw", "q_id", "q_vec")
+    val qResid = queryResid(e.filter(col("vec_id") % 100 === 0 && col("vec_id") % 11 =!= 5),
+      centsT)
     SimOps.pqTopkWithin(g3, qResid, cbT, k = 5, m = 8, sub = 8,
       listCol = "c_label")
   }
@@ -1130,6 +1122,50 @@ object SimQueries {
     * (persisted query-scoped — the mutual join reads it twice), the
     * mutual check is a self equi-join on the reversed key pair, and
     * every downstream consumer sees O(N·k) fixed-width edge rows. */
+  /** The tracked mutual kNN edges `(u, v)` and their tracked symmetric
+    * adjacency (both directions). */
+  private def mutualAdjacency(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
+    val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
+    (m, graft.core.QueryCaches.track(m.union(m.select(col("v").as("u"), col("u").as("v")))))
+  }
+
+  /** The random-walk substrate, both tracked: every vertex `(id)` and
+    * the directed mutual kNN edges `(src, dst, deg)` carrying the
+    * source's out-degree — adj ⋈ deg pre-joined ONCE outside the
+    * iteration loop (deg is per-vertex constant across rounds). */
+  private def walkGraph(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    val m = mutualEdges(spark, sfDir)
+    (graft.core.QueryCaches.track(emb(spark, sfDir).select(col("vec_id").as("id"))),
+     graft.core.QueryCaches.track(
+      m.select(col("u").as("src"), col("v").as("dst"))
+        .unionAll(m.select(col("v").as("src"), col("u").as("dst")))
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy(col("src"))))))
+  }
+
+  /** One damped walk round over [[walkGraph]]: each vertex's new
+    * rank is `base` plus 85% of the rank its in-edges carry from `pr`
+    * (each source's rank split over its out-degree), all integer. */
+  private def walkStep(ids: DataFrame, adjDeg: DataFrame, pr: DataFrame,
+      base: org.apache.spark.sql.Column): DataFrame = {
+    val contrib = adjDeg
+      .join(pr.select(col("id").as("src"), col("pr").as("ppr")), "src")
+      .groupBy(col("dst"))
+      .agg(sum(expr("ppr div deg")).as("sc"))
+      .select(col("dst").as("id"), col("sc"))
+    ids.join(contrib, Seq("id"), "left")
+      .select(col("id"),
+        (base + expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("pr"))
+  }
+
+  /** Each triangle a < b < c of the u < v edge relation `m`, once: two
+    * equi-joins keyed on a shared vertex. */
+  private def triangles(m: DataFrame): DataFrame =
+    m.as("ab").join(m.as("bc"), col("ab.v") === col("bc.u"))
+      .join(m.as("ac"),
+        col("ab.u") === col("ac.u") && col("bc.v") === col("ac.v"))
+      .select(col("ab.u").as("a"), col("ab.v").as("b"), col("bc.v").as("c"))
+
   private def mutualEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val g = graft.core.QueryCaches.track(
       SimOps.knnGraph(
@@ -1263,9 +1299,7 @@ object SimQueries {
     * 100 TB the kNN-graph build dominates (see [[SimOps.knnGraph]]);
     * prediction itself never touches an embedding again. */
   def simLinkPredict(spark: SparkSession, sfDir: String): DataFrame = {
-    val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    val adj = graft.core.QueryCaches.track(
-      m.union(m.select(col("v").as("u"), col("u").as("v"))))
+    val (m, adj) = mutualAdjacency(spark, sfDir)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val cand = adj.as("x").join(adj.as("y"),
         col("x.v") === col("y.u") && col("x.u") < col("y.v"))
@@ -1296,10 +1330,7 @@ object SimQueries {
     * size. Output: per-vertex triangle membership counts. */
   def simTriangles(spark: SparkSession, sfDir: String): DataFrame = {
     val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    val tri = m.as("ab").join(m.as("bc"), col("ab.v") === col("bc.u"))
-      .join(m.as("ac"),
-        col("ab.u") === col("ac.u") && col("bc.v") === col("ac.v"))
-      .select(col("ab.u").as("a"), col("ab.v").as("b"), col("bc.v").as("c"))
+    val tri = triangles(m)
     tri.select(explode(array(col("a"), col("b"), col("c"))).as("vec_id"))
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_tri"))
@@ -1323,10 +1354,7 @@ object SimQueries {
     * routinely computed corpus-wide. */
   def simClusteringCoeff(spark: SparkSession, sfDir: String): DataFrame = {
     val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    val tri = m.as("ab").join(m.as("bc"), col("ab.v") === col("bc.u"))
-      .join(m.as("ac"),
-        col("ab.u") === col("ac.u") && col("bc.v") === col("ac.v"))
-      .select(col("ab.u").as("a"), col("ab.v").as("b"), col("bc.v").as("c"))
+    val tri = triangles(m)
     val ntri = tri.select(explode(array(col("a"), col("b"), col("c"))).as("vec_id"))
       .groupBy(col("vec_id")).agg(count(lit(1)).as("n_tri"))
     val deg = m.select(explode(array(col("u"), col("v"))).as("vec_id"))
@@ -1432,34 +1460,15 @@ object SimQueries {
     * literal. */
   def simPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     val Scale = 1000000000000L
-    val ids = graft.core.QueryCaches.track(
-      emb(spark, sfDir).select(col("vec_id").as("id")))
-    val m = mutualEdges(spark, sfDir)
-    // adj ⋈ deg pre-joined ONCE outside the loop (deg is per-vertex
-    // constant across rounds — joining it per round tripled the join
-    // count); node count collected eagerly like the kmeans centroid
-    // sync (one long — bounded scalar, not a data collect), so the
-    // teleport term folds to a literal instead of re-broadcasting a
-    // 1-row aggregate every round.
-    val adjDeg = graft.core.QueryCaches.track(
-      m.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(m.select(col("v").as("src"), col("u").as("dst")))
-        .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+    val (ids, adjDeg) = walkGraph(spark, sfDir)
+    // node count collected eagerly like the kmeans centroid sync (one
+    // long — bounded scalar, not a data collect), so the teleport term
+    // folds to a literal instead of re-broadcasting a 1-row aggregate
+    // every round.
     val nNodes = ids.count()
     val teleport = (15L * Scale) / (100L * nNodes)
     var pr = ids.select(col("id"), lit(Scale / nNodes).as("pr"))
-    for (_ <- 1 to 3) {
-      val contrib = adjDeg
-        .join(pr.select(col("id").as("src"), col("pr").as("ppr")), "src")
-        .groupBy(col("dst"))
-        .agg(sum(expr("ppr div deg")).as("sc"))
-        .select(col("dst").as("id"), col("sc"))
-      pr = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(teleport) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("pr"))
-    }
+    for (_ <- 1 to 3) pr = walkStep(ids, adjDeg, pr, lit(teleport))
     pr.select(col("id").as("vec_id"), col("pr"))
   }
 
@@ -1479,30 +1488,14 @@ object SimQueries {
     * filter — the green hash proves the filter's equivalence. */
   def simPpr(spark: SparkSession, sfDir: String): DataFrame = {
     val Scale = 1000000000000L
-    val ids = graft.core.QueryCaches.track(
-      emb(spark, sfDir).select(col("vec_id").as("id")))
-    val m = mutualEdges(spark, sfDir)
-    val adjDeg = graft.core.QueryCaches.track(
-      m.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(m.select(col("v").as("src"), col("u").as("dst")))
-        .withColumn("deg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src")))))
+    val (ids, adjDeg) = walkGraph(spark, sfDir)
     val seed = ids.agg(min(col("id"))).head().getLong(0)
     val restart = (15L * Scale) / 100L
     var pr = ids.select(col("id"),
       when(col("id") === seed, lit(Scale)).otherwise(lit(0L)).as("pr"))
-    for (_ <- 1 to 3) {
-      val contrib = adjDeg
-        .join(pr.filter(col("pr") > 0)
-          .select(col("id").as("src"), col("pr").as("ppr")), "src")
-        .groupBy(col("dst"))
-        .agg(sum(expr("ppr div deg")).as("sc"))
-        .select(col("dst").as("id"), col("sc"))
-      pr = ids.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (when(col("id") === seed, lit(restart)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("pr"))
-    }
+    for (_ <- 1 to 3)
+      pr = walkStep(ids, adjDeg, pr.filter(col("pr") > 0),
+        when(col("id") === seed, lit(restart)).otherwise(lit(0L)))
     pr.select(col("id").as("vec_id"), col("pr"))
   }
 
@@ -1795,8 +1788,7 @@ object SimQueries {
     * pairs × 7 rows through a map-side-combined aggregate. */
   def simThresholdSweep(spark: SparkSession, sfDir: String): DataFrame = {
     val e = emb(spark, sfDir).select(col("vec_id"), col("embedding"))
-    val corpus = e.unionAll(
-      e.select((col("vec_id") + SHIFT).as("vec_id"), col("embedding")))
+    val corpus = withTwins(e)
     val pairs = graft.core.QueryCaches.track(
       SimOps.embNearDupPairs(corpus, bits = 16, threshold = 0.95))
     val thresholds = array(Seq(950, 960, 970, 980, 990, 995, 999).map(lit): _*)
@@ -1914,9 +1906,7 @@ object SimQueries {
     * partial-top-20 readout with (score, u, v) total order. */
   def simAdamicAdar(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.HashExprs.log2Millis
-    val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    val adj = graft.core.QueryCaches.track(
-      m.union(m.select(col("v").as("u"), col("u").as("v"))))
+    val (m, adj) = mutualAdjacency(spark, sfDir)
     val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
     val wedge = adj.as("x")
       .join(deg.filter(col("deg") >= 2)
@@ -1952,9 +1942,7 @@ object SimQueries {
     * the edge list, one map-side-combined 1-row fold; edges are
     * corpus×k-bounded. */
   def simAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val m = graft.core.QueryCaches.track(mutualEdges(spark, sfDir))
-    val adj = graft.core.QueryCaches.track(
-      m.union(m.select(col("v").as("u"), col("u").as("v"))))
+    val (_, adj) = mutualAdjacency(spark, sfDir)
     val deg = graft.core.QueryCaches.track(
       adj.groupBy(col("u")).agg(count(lit(1)).as("deg")))
     adj
@@ -1994,9 +1982,7 @@ object SimQueries {
   def simPqRefine(spark: SparkSession, sfDir: String): DataFrame = {
     val e = graft.core.QueryCaches.track(emb(spark, sfDir))
     val corpus = e.select(col("vec_id"), col("embedding"))
-    val cb = SimOps.pqSeedCodebook(e, kCodes = 4, m = 8, sub = 8)
-    val codes = SimOps.pqEncode(corpus, cb, m = 8, sub = 8)
-      .select(col("vec_id"), col("s"), col("code"))
+    val (cb, codes) = pqIndex(e)
     val qs = querySet(e)
     val cand = graft.core.QueryCaches.track(
       SimOps.pqTopk(codes, qs, cb, k = 32, m = 8, sub = 8)

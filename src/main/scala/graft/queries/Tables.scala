@@ -17,6 +17,10 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     scaleProbe(spark.read.parquet(s"$sfDir/$name.parquet"))
 
+  /** The per-scale suffix of persisted catalog tables' names (one JVM
+    * serves several scale factors). */
+  def indexTag(sfDir: String): String = java.lang.Integer.toHexString(sfDir.hashCode)
+
   /** OPT-IN parallelism probe (r17 verdict: at sf0.1 the whole suite is
     * scheduling-overhead-bound — c8 ≈ c32 — so the bench cannot see a
     * change that serializes a hot path). SPARK_GRAFT_BENCH_SCALE=N

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.ext.TextOps
 import graft.ext.TextOps._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -14,6 +14,71 @@ import Tables._
   * frequencies. All pure column expressions (codegen, no UDF).
   */
 object TextQueries {
+
+  // The quality features the quality-scoring builders share, over the
+  // `documents` columns `text` and `n_chars`. The regex char-classes
+  // are the dialect-portable subset (identical in Java regex and RE2).
+  private def nPunct: Column = expr("regexp_count(text, '[.,!?;:]')").cast("bigint")
+  private def nDigits: Column = expr("regexp_count(text, '[0-9]')").cast("bigint")
+  private def nChars: Column = col("n_chars").cast("bigint")
+  private def stopRatio: Column =
+    wordRatio(tokens(col("text")), Seq("the", "a", "data", "table"))
+
+  /** The tracked per-doc token arrays `(doc_id, tk)`. */
+  private def docTokens(d: DataFrame): DataFrame =
+    graft.core.QueryCaches.track(d.select(col("doc_id"), tokens(col("text")).as("tk")))
+
+  /** Corpus unigram counts `(w, c1)` over the token arrays `tk`. */
+  private def unigramCounts(tk: DataFrame): DataFrame =
+    tk.select(explode(col("tk")).as("w")).groupBy(col("w")).agg(count(lit(1)).as("c1"))
+
+  /** The tracked line relation `(doc_id, line_no, line, lfp)` of the
+    * line-dedup rows: each doc's tokens behind a planted per-source
+    * 5-token nav header, cut into consecutive 5-token lines. */
+  private def docLines(d: DataFrame): DataFrame = {
+    val allToks = concat(
+      array(lit("nav"), lit("home"), col("source"), lit("menu"), lit("login")),
+      tokens(col("text")))
+    // line i = tokens[5i..5i+4] (last chunk may be short); the header
+    // is exactly one chunk so content chunk boundaries are unshifted
+    val lineArr = transform(
+      sequence(lit(0), ((size(allToks) - lit(1)) / lit(5)).cast("int")),
+      i => array_join(slice(allToks, i * lit(5) + lit(1), lit(5)), " "))
+    graft.core.QueryCaches.track(
+      graft.ext.SkewOps.fanOut(d)
+        .select(col("doc_id"), posexplode(lineArr).as(Seq("line_no", "line")))
+        .select(col("doc_id"), col("line_no").cast("bigint").as("line_no"),
+          col("line"), fingerprint(col("line")).as("lfp")))
+  }
+
+  /** Each doc's DISTINCT token 5-gram fingerprints `(doc_id, fp)`. */
+  private def docFiveGrams(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "documents").select(col("doc_id"),
+      explode(array_distinct(
+        graft.ext.DedupOps.shingleFps(tokens(col("text")), 5))).as("fp"))
+
+  /** DSIR's hashed bigram features `(doc_id, lang, b)`: token-bigram
+    * fingerprints of `textCol` quantized to 512 buckets. */
+  private def bigramBuckets(df: DataFrame, textCol: String): DataFrame =
+    df.select(col("doc_id"), col("lang"),
+        explode(graft.functions.HashExprs.shingleFps(tokens(col(textCol)), 2)).as("fp"))
+      .select(col("doc_id"), col("lang"), pmod(col("fp"), lit(512L)).as("b"))
+
+  /** DSIR importance weights over [[bigramBuckets]]: per bucket the
+    * add-one target(en)/raw ratio `w` in ppm, and the 1-row mean
+    * weight `mean_w`. */
+  private def dsirWeights(grams: DataFrame): (DataFrame, DataFrame) = {
+    val w = grams.groupBy(col("b"))
+      .agg(count(lit(1)).as("r_cnt"),
+        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"))
+      .select(col("b"), expr("(t_cnt + 1) * 1000000 div (r_cnt + 1)").as("w"))
+    (w, w.agg(expr("sum(w) div count(1)").as("mean_w")))
+  }
+
+  /** The composite [0,1] quality score: stopword presence up-weights,
+    * punct/digit walls down-weight. */
+  private def qualityScore: Column = greatest(lit(0.0), least(lit(1.0),
+    lit(0.5) + stopRatio - (nPunct / nChars) * 2 - (nDigits / nChars)))
 
   /** Per-document quality stats: token count, mean token length,
     * stopword ratio, distinct-token ratio (lexical diversity). */
@@ -170,7 +235,7 @@ object TextQueries {
     val d = load(spark, sfDir, "documents")
     val tok = graft.core.QueryCaches.track(
       d.select(col("doc_id"), explode(tokens(col("text"))).as("tok")))
-    val model = graft.ext.DedupOps.trackPersist(
+    val model = graft.core.QueryCaches.track(
       d.select(col("lang").as("lang_c"), explode(tokens(col("text"))).as("tok"))
         .groupBy(col("lang_c"), col("tok")).agg(count(lit(1)).as("c")))
     val vocab = tok.agg(countDistinct(col("tok")).as("v"))
@@ -359,9 +424,7 @@ object TextQueries {
   def textCollocations(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
     val toks = d.select(tokens(col("text")).as("tk"))
-    val uni = graft.ext.DedupOps.trackPersist(
-      toks.select(explode(col("tk")).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c1")))
+    val uni = graft.core.QueryCaches.track(unigramCounts(toks))
     val n = toks.select(explode(col("tk")).as("w")).agg(count(lit(1)).as("n"))
     val bi = toks
       .select(explode(expr(
@@ -392,23 +455,16 @@ object TextQueries {
     * filters every pretraining pipeline runs first. Pure column
     * arithmetic; the regex char-class is the dialect-portable subset
     * (no shorthand classes, identical in Java regex and RE2). */
-  def textQuality(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = load(spark, sfDir, "documents")
-    val toks = tokens(col("text"))
-    val nch = col("n_chars").cast("bigint")
-    val punct = expr("regexp_count(text, '[.,!?;:]')").cast("bigint")
-    val digits = expr("regexp_count(text, '[0-9]')").cast("bigint")
-    val stop = wordRatio(toks, Seq("the", "a", "data", "table"))
-    docs.select(col("doc_id"),
-        punct.as("n_punct"), digits.as("n_digits"),
-        (punct / nch).as("punct_ratio"),
-        (digits / nch).as("digit_ratio"),
-        stop.as("stop_ratio"))
+  def textQuality(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "documents").select(col("doc_id"),
+        nPunct.as("n_punct"), nDigits.as("n_digits"),
+        (nPunct / nChars).as("punct_ratio"),
+        (nDigits / nChars).as("digit_ratio"),
+        stopRatio.as("stop_ratio"))
       // composite: stopword presence up-weights, punct/digit walls down-weight
       .withColumn("quality",
         greatest(lit(0.0), least(lit(1.0),
           lit(0.5) + col("stop_ratio") - col("punct_ratio") * 2 - col("digit_ratio"))))
-  }
 
   /** Per-source token-distribution drift — `q_drift`'s all-integer TVD
     * verdict lifted to TEXT: each source's token distribution against
@@ -539,16 +595,10 @@ object TextQueries {
     val d = load(spark, sfDir, "documents").select(col("doc_id"), col("text"), col("n_chars"))
     val corpus = d.unionAll(
       d.select((col("doc_id") + 1000000L).as("doc_id"), col("text"), col("n_chars")))
-    val toks = tokens(col("text"))
-    val nch = col("n_chars").cast("bigint")
-    val punct = expr("regexp_count(text, '[.,!?;:]')").cast("bigint")
-    val digits = expr("regexp_count(text, '[0-9]')").cast("bigint")
-    val stop = wordRatio(toks, Seq("the", "a", "data", "table"))
     val scored = corpus.select(col("doc_id"),
       tokenCount(col("text")).as("n_tokens"),
-      langId(toks).as("pred_lang"),
-      greatest(lit(0.0), least(lit(1.0),
-        lit(0.5) + stop - (punct / nch) * 2 - (digits / nch))).as("quality"),
+      langId(tokens(col("text"))).as("pred_lang"),
+      qualityScore.as("quality"),
       fingerprint(col("text")).as("fp"))
     // group by (fp, pred_lang): identical text implies identical
     // pred_lang, so this is the same dedup — and keeping the string
@@ -685,7 +735,7 @@ object TextQueries {
     * Real index builds shard full postings to files per term range;
     * the preview column is what an audit/gate query would keep. */
   def textInvertedIndex(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = graft.ext.DedupOps.trackPersist(
+    val toks = graft.core.QueryCaches.track(
       load(spark, sfDir, "documents")
         .select(col("doc_id"), explode(tokens(col("text"))).as("term")))
     val stats = toks.groupBy(col("term"))
@@ -860,10 +910,8 @@ object TextQueries {
     * training groupBys shuffle, and those shuffle counts, not text. */
   def textNgramLm(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val tk = graft.core.QueryCaches.track(
-      d.select(col("doc_id"), tokens(col("text")).as("tk")))
-    val uni = graft.ext.DedupOps.trackPersist(
-      tk.select(explode(col("tk")).as("w")).groupBy(col("w")).agg(count(lit(1)).as("c1")))
+    val tk = docTokens(d)
+    val uni = graft.core.QueryCaches.track(unigramCounts(tk))
     val vocab = uni.agg(count(lit(1)).as("v"))
     val bi = tk.select(col("doc_id"), explode(expr(
         "CASE WHEN size(tk) >= 2 THEN transform(sequence(0, size(tk) - 2), " +
@@ -932,15 +980,9 @@ object TextQueries {
     * language. */
   def curateSources(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val toks = tokens(col("text"))
-    val nch = col("n_chars").cast("bigint")
-    val punct = expr("regexp_count(text, '[.,!?;:]')").cast("bigint")
-    val digits = expr("regexp_count(text, '[0-9]')").cast("bigint")
-    val stop = wordRatio(toks, Seq("the", "a", "data", "table"))
     val scored = d.select(col("source"),
       tokenCount(col("text")).as("n_tokens"),
-      greatest(lit(0.0), least(lit(1.0),
-        lit(0.5) + stop - (punct / nch) * 2 - (digits / nch))).as("quality"),
+      qualityScore.as("quality"),
       fingerprint(col("text")).as("fp"))
     // single hash aggregate keyed by source; COUNT(DISTINCT fp) is the
     // exact form to match the oracle (the 100 TB variant is the HLL
@@ -995,11 +1037,7 @@ object TextQueries {
     * the output on both engines, so the milli ratio never divides by
     * zero (ANSI-safe). */
   def curateNovelty(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = load(spark, sfDir, "documents")
-    val grams = graft.core.QueryCaches.track(
-      d.select(col("doc_id"),
-        explode(array_distinct(
-          graft.ext.DedupOps.shingleFps(tokens(col("text")), 5))).as("fp")))
+    val grams = graft.core.QueryCaches.track(docFiveGrams(spark, sfDir))
     val first = grams.groupBy(col("fp")).agg(min(col("doc_id")).as("first_doc"))
     grams.join(first, "fp")
       .groupBy(col("doc_id"))
@@ -1022,11 +1060,7 @@ object TextQueries {
     * long) rows, no text. The gram table is computed once and persisted
     * (query-scoped) because both the df branch and the join probe it. */
   def curateBoilerplate(spark: SparkSession, sfDir: String): DataFrame = {
-    val d = load(spark, sfDir, "documents")
-    val grams = graft.core.QueryCaches.track(
-      d.select(col("doc_id"),
-        explode(array_distinct(
-          graft.ext.DedupOps.shingleFps(tokens(col("text")), 5))).as("fp")))
+    val grams = graft.core.QueryCaches.track(docFiveGrams(spark, sfDir))
     val dfreq = grams.groupBy(col("fp")).agg(count(lit(1)).as("df"))
     grams.join(dfreq, "fp")
       .groupBy(col("doc_id"))
@@ -1057,19 +1091,7 @@ object TextQueries {
     * text's fingerprint (proving byte-exact reassembly cross-engine). */
   def curateLineDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val allToks = concat(
-      array(lit("nav"), lit("home"), col("source"), lit("menu"), lit("login")),
-      tokens(col("text")))
-    // line i = tokens[5i..5i+4] (last chunk may be short); the header
-    // is exactly one chunk so content chunk boundaries are unshifted
-    val lineArr = transform(
-      sequence(lit(0), ((size(allToks) - lit(1)) / lit(5)).cast("int")),
-      i => array_join(slice(allToks, i * lit(5) + lit(1), lit(5)), " "))
-    val lines = graft.core.QueryCaches.track(
-      graft.ext.SkewOps.fanOut(d)
-        .select(col("doc_id"), posexplode(lineArr).as(Seq("line_no", "line")))
-        .select(col("doc_id"), col("line_no").cast("bigint").as("line_no"),
-          col("line"), fingerprint(col("line")).as("lfp")))
+    val lines = docLines(d)
     val dfreq = lines.groupBy(col("lfp"))
       .agg(countDistinct(col("doc_id")).as("df"))
     val rebuilt = lines.join(dfreq, "lfp")
@@ -1136,15 +1158,8 @@ object TextQueries {
     * the corpus once. */
   def curateDsir(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val grams = graft.core.QueryCaches.track(
-      d.select(col("doc_id"), col("lang"),
-          explode(graft.functions.HashExprs.shingleFps(tokens(col("text")), 2)).as("fp"))
-        .select(col("doc_id"), col("lang"), pmod(col("fp"), lit(512L)).as("b")))
-    val w = grams.groupBy(col("b"))
-      .agg(count(lit(1)).as("r_cnt"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"))
-      .select(col("b"), expr("(t_cnt + 1) * 1000000 div (r_cnt + 1)").as("w"))
-    val meanW = w.agg(expr("sum(w) div count(1)").as("mean_w"))
+    val grams = graft.core.QueryCaches.track(bigramBuckets(d, "text"))
+    val (w, meanW) = dsirWeights(grams)
     grams.join(broadcast(w), "b")
       .groupBy(col("doc_id"), col("lang"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("w")).as("score"))
@@ -1172,17 +1187,7 @@ object TextQueries {
     * queries don't already carry at scale. */
   def curateE2e(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val allToks = concat(
-      array(lit("nav"), lit("home"), col("source"), lit("menu"), lit("login")),
-      tokens(col("text")))
-    val lineArr = transform(
-      sequence(lit(0), ((size(allToks) - lit(1)) / lit(5)).cast("int")),
-      i => array_join(slice(allToks, i * lit(5) + lit(1), lit(5)), " "))
-    val lines = graft.core.QueryCaches.track(
-      graft.ext.SkewOps.fanOut(d)
-        .select(col("doc_id"), posexplode(lineArr).as(Seq("line_no", "line")))
-        .select(col("doc_id"), col("line_no").cast("bigint").as("line_no"),
-          col("line"), fingerprint(col("line")).as("lfp")))
+    val lines = docLines(d)
     val dfreq = lines.groupBy(col("lfp")).agg(countDistinct(col("doc_id")).as("df"))
     val rebuilt = lines.join(dfreq, "lfp").groupBy(col("doc_id"))
       .agg(array_join(transform(
@@ -1192,15 +1197,8 @@ object TextQueries {
     val gated = graft.core.QueryCaches.track(
       rebuilt.join(d.select(col("doc_id"), col("lang")), "doc_id")
         .filter(tokenCount(col("kept_text")) >= 10))
-    val grams = graft.core.QueryCaches.track(
-      gated.select(col("doc_id"), col("lang"),
-          explode(graft.functions.HashExprs.shingleFps(tokens(col("kept_text")), 2)).as("fp"))
-        .select(col("doc_id"), col("lang"), pmod(col("fp"), lit(512L)).as("b")))
-    val w = grams.groupBy(col("b"))
-      .agg(count(lit(1)).as("r_cnt"),
-        sum(when(col("lang") === "en", 1L).otherwise(0L)).as("t_cnt"))
-      .select(col("b"), expr("(t_cnt + 1) * 1000000 div (r_cnt + 1)").as("w"))
-    val meanW = w.agg(expr("sum(w) div count(1)").as("mean_w"))
+    val grams = graft.core.QueryCaches.track(bigramBuckets(gated, "kept_text"))
+    val (w, meanW) = dsirWeights(grams)
     val sc = grams.join(broadcast(w), "b").groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(col("w")).as("score"))
     val sel = gated.join(sc, "doc_id").crossJoin(broadcast(meanW))
@@ -1441,8 +1439,8 @@ object TextQueries {
     // ONE scan of the train half: the persisted train-side wordcount
     // feeds bpeTrainFromWords AND the fold/OOV stages below (previously
     // bpeTrain re-scanned the even half for its own wordcount).
-    val tw = graft.ext.DedupOps.trackPersist(wordcount(docsAll.filter(col("doc_id") % 2 === 0)))
-    val hw = graft.ext.DedupOps.trackPersist(wordcount(docsAll.filter(col("doc_id") % 2 === 1)))
+    val tw = graft.core.QueryCaches.track(wordcount(docsAll.filter(col("doc_id") % 2 === 0)))
+    val hw = graft.core.QueryCaches.track(wordcount(docsAll.filter(col("doc_id") % 2 === 1)))
     val mergeRows = graft.ext.TextOps.bpeTrainFromWords(tw, 6)
       .orderBy(col("step")).collect()
     val pairs = mergeRows.map(_.getString(1)).toSeq
@@ -1592,10 +1590,8 @@ object TextQueries {
     * corpus; per-doc sums are map-side combined. */
   def textPerplexity(spark: SparkSession, sfDir: String): DataFrame = {
     val d = load(spark, sfDir, "documents")
-    val tk = graft.core.QueryCaches.track(
-      d.select(col("doc_id"), tokens(col("text")).as("tk")))
-    val uni = graft.ext.DedupOps.trackPersist(
-      tk.select(explode(col("tk")).as("w")).groupBy(col("w")).agg(count(lit(1)).as("c1")))
+    val tk = docTokens(d)
+    val uni = graft.core.QueryCaches.track(unigramCounts(tk))
     val vocab = uni.agg(count(lit(1)).as("v"))
     // bigrams stream from the true Generator (no per-doc struct-array
     // materialization — the graft_explode_bigrams allocation contract)
@@ -1667,14 +1663,13 @@ object TextQueries {
   def textKnLm(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.HashExprs.log2Millis
     val d = load(spark, sfDir, "documents")
-    val tk = graft.core.QueryCaches.track(
-      d.select(col("doc_id"), tokens(col("text")).as("tk")))
+    val tk = docTokens(d)
     // bigrams stream from the true Generator (no per-doc struct-array
     // materialization — the graft_explode_bigrams allocation contract)
     val bi = d.select(col("doc_id"),
         graft.functions.HashExprs.explodeBigrams(col("text")))
       .select(col("doc_id"), col("w1"), col("w2"))
-    val c2 = graft.ext.DedupOps.trackPersist(
+    val c2 = graft.core.QueryCaches.track(
       bi.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val w1s = c2.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1ctx"), count(lit(1)).as("n1fw"))

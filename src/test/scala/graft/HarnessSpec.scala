@@ -18,6 +18,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(k == Knobs(8, Some(2), 5, Some(Set("q1_pricing", "op_map"))))
   }
 
+  test("SPARK_GRAFT_SF_DIR: Bench's testdata directory, sf0.1 unless set") {
+    assert(Knobs.parse(Map.empty).sfDir == Knobs.DefaultSfDir)
+    assert(Knobs.DefaultSfDir.endsWith("/testdata/sf0.1"))
+    assert(Knobs.parse(Map("SPARK_GRAFT_SF_DIR" -> "/data/sf1")).sfDir == "/data/sf1")
+  }
+
   test("a malformed value fails naming the variable and the value") {
     for ((name, bad) <- Seq("SPARK_GRAFT_CPUS" -> "eight", "SPARK_GRAFT_CPUS" -> "0",
         "SPARK_GRAFT_BENCH_SCALE" -> "2x", "SPARK_GRAFT_REPS" -> "-1",

@@ -202,6 +202,33 @@ class QueryCachesSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"number rows or carry running values with graft.core.PrefixScan:\n${hits.mkString("\n")}")
   }
 
+  test("source audit: each shared input relation of the query builders is spelled once") {
+    // one defining line per folded relation; a second hit is a builder
+    // re-spelling what a suite's private builder already names
+    val defining = Seq(
+      "select(col(\"event_type\").as(\"t\"), expr(\"ts div 86400000000000\").as(\"day\"))",
+      ".select(col(\"user_id\"), col(\"event_id\"), expr(\"ts div 1000\").as(\"tus\"))",
+      ".agg(sum(when(col(\"event_type\") === \"purchase\", cents).otherwise(0L)).as(\"m\"))",
+      "expr(\"(min(d) + max(d)) div 2\")",
+      "col(\"event_id\").as(\"p_event\"), col(\"tus\").as(\"p_tus\"))",
+      "d.unionAll(d.select((col(\"doc_id\") + SHIFT).as(\"doc_id\"), firstTokenDropped.as(\"text\")))",
+      "d.unionAll(d.select((col(\"doc_id\") + SHIFT).as(\"doc_id\"), col(\"text\")))",
+      ".select((col(\"doc_id\") + 3 * SHIFT).as(\"doc_id\"), col(\"text\")))",
+      ".groupBy(col(\"fp\")).agg(count(lit(1)).as(\"n_corpus\"))",
+      "SkewOps.fanOut(corpus).select(col(\"doc_id\"), shingleFps(tokens(col(\"text\")), 3).as(\"fps\"))",
+      "e.unionAll(e.select((col(\"vec_id\") + SHIFT).as(\"vec_id\"), col(\"embedding\")))",
+      ".agg((sum(col(\"v\").cast(\"double\").cast(org.apache.spark.sql.types.DecimalType(38, 6)))",
+      "HashExprs.cosineSim(col(vecCol), col(\"c_vec\")).as(\"cos\"))",
+      ".select(col(\"c_id\").cast(\"int\").as(\"c_label\"), col(\"c_vec\"))",
+      "wordRatio(tokens(col(\"text\")), Seq(\"the\", \"a\", \"data\", \"table\"))",
+      "(col(\"ax\") - col(\"px\")) * (col(\"ax\") - col(\"px\"))",
+      "expr(\"(1000 * sum(px)) div count(*)\")")
+    for (line <- defining) {
+      val hits = sourceHits("src/main/scala/graft/queries")(_ => Seq(line))
+      assert(hits.size == 1, s"call the suite's builder for `$line`:\n${hits.mkString("\n")}")
+    }
+  }
+
   test("source audit: each query is declared once, with its oracle, and the log2-millis oracle fragment once") {
     // spelled in pieces so this file does not match itself
     val banned = Seq("val oracleSql" + ": Map", "def mbSql" + "(")

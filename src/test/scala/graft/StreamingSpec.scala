@@ -23,6 +23,9 @@ object StreamingSpecState {
   def reset(): Unit = { seen.clear(); opens.set(0); closes.set(0) }
 }
 
+/** A user exception type the streaming tests expect back unwrapped. */
+class StreamingSpecFailure(msg: String) extends RuntimeException(msg)
+
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -226,6 +229,28 @@ class StreamingSpec extends AnyFunSuite {
     in2.addData(31 to 50: _*)
     q.processAllAvailable(); q.stop()
     assert(out.toArray.map(_.asInstanceOf[Int]).sorted.toSeq == (1 to 50))
+  }
+
+  test("runAvailable: drains every available row through a custom writer, stops, rethrows a user exception with its type") {
+    implicit val sq = spark.sqlContext
+    val activeBefore = spark.streams.active.length
+    val in = MemoryStream[Int]
+    in.addData(1 to 40: _*)
+    val sink = s"graft_run_available_${System.nanoTime}"
+    new GraftStream(in.toDS()).map(_ * 3)
+      .runAvailable(_.format("memory").queryName(sink))
+    assert(spark.table(sink).as[Int].collect().sorted.toSeq == (1 to 40).map(_ * 3))
+    assert(spark.streams.active.length == activeBefore, "runAvailable left its query running")
+
+    val bad = MemoryStream[Int]
+    bad.addData(1 to 5: _*)
+    val e = intercept[StreamingSpecFailure] {
+      new GraftStream(bad.toDS())
+        .map(x => if (x == 4) throw new StreamingSpecFailure(s"bad element $x") else x)
+        .runAvailable()
+    }
+    assert(e.getMessage == "bad element 4")
+    assert(spark.streams.active.length == activeBefore, "a failed runAvailable left its query running")
   }
 
   test("streaming mapAsync: async IO on an unbounded source preserves values") {
