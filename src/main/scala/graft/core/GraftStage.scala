@@ -14,7 +14,8 @@ import org.apache.spark.util.LongAccumulator
 
 import java.util.concurrent.{Callable, TimeUnit, TimeoutException => JTimeoutException}
 import scala.concurrent.duration.{Duration, FiniteDuration}
-import scala.concurrent.{Await, Future, TimeoutException}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.{Failure, Success}
 
 /** Per-worker identity handed to lifecycle hooks and user functions,
   * mirroring the reference's `worker_info` dependency injection
@@ -59,9 +60,10 @@ final case class WorkerInfo(index: Int, numWorkers: Int, stageId: Int, attempt: 
   *
   * Concurrency mapping:
   *   - `workers = n`  → `repartition(n)` (reference: process/stage.py:51-64)
-  *   - task-backend async IO with `workers = n` → [[mapAsync]]: a bounded
-  *     in-flight window of Futures inside each partition
-  *     (reference: task/worker.py:217-283 semaphore-bounded TaskPool)
+  *   - task-backend async IO with `workers = n` → [[mapAsync]]: at most
+  *     n calls in flight inside each partition, results emitted in
+  *     submission order (reference: task/worker.py:217-283
+  *     semaphore-bounded TaskPool)
   *   - `timeout` → per-element bounded wait, element dropped on expiry
   *     and the in-flight attempt interrupted
   *     (reference: process/supervisor.py:19-32, worker.py:152-161)
@@ -154,16 +156,19 @@ final class GraftStage[T] private (
   def filterCol(c: Column): GraftStage[T] =
     new GraftStage(plain.filter(c), () => ix.narrow(GraftStage.filterIndexed(_, c)))
 
-  /** Async-IO map: the task-backend analog. Keeps up to `workers`
-    * Futures in flight per partition (bounded window ≈ the reference's
-    * semaphore-bounded TaskPool, task/worker.py:225-238). Completions
-    * are drained in submission order (per-partition order preserved;
-    * global order is not, same as the reference under concurrency).
+  /** Async-IO map: the task-backend analog. `workers` is the number of
+    * calls in flight (issued, Future not yet complete) per partition:
+    * the reference's semaphore-bounded TaskPool, task/worker.py:225-238.
+    * A finished call frees its slot at once, so a slow call does not
+    * hold back the calls behind it. Results are emitted in submission
+    * order (per-partition order preserved; global order is not, same as
+    * the reference under concurrency), so a partition holds up to
+    * `4 × workers` finished results waiting for the head.
     * `timeout` bounds each element's wait once it reaches the head of
-    * the window; on expiry the element is DROPPED (reference task
-    * backend: asyncio.wait_for + swallowed TimeoutError,
-    * task/worker.py:246-255) — a hung Future can no longer wedge the
-    * task forever. Drops are counted on the driver
+    * the window; on expiry the element is DROPPED and its slot returned
+    * (reference task backend: asyncio.wait_for + swallowed
+    * TimeoutError, task/worker.py:246-255) — a hung Future can no
+    * longer wedge the task forever. Drops are counted on the driver
     * ([[GraftStage.asyncDroppedCount]]). A zero, negative or infinite
     * `timeout` waits without bound ([[GraftStage.bound]]).
     */
@@ -647,34 +652,62 @@ object GraftStage {
     asyncLog.warn(s"$op dropped an element after $t")
   }
 
-  /** Bounded in-flight async window over a partition iterator — the
-    * shared engine of batch [[GraftStage.mapAsync]] and streaming
-    * `GraftStream.mapAsync`. Keeps ≤ n Futures outstanding, drains in
-    * submission order, drops elements whose Future exceeds `t` (counted
-    * in `dropped`; see [[bound]] for which `t` waits without bound)
-    * (reference task-backend semantics: semaphore-bounded TaskPool +
-    * asyncio.wait_for, task/worker.py:225-255). */
+  /** Finished results a partition of [[GraftStage.mapAsync]] holds for
+    * in-order emission, as a multiple of `workers`. */
+  private[graft] val AsyncHoldMultiple = 4
+
+  /** Bounded async window over a partition iterator — the shared engine
+    * of batch [[GraftStage.mapAsync]] and streaming
+    * `GraftStream.mapAsync`. `n` bounds the calls in flight (issued, not
+    * yet complete): the reference's `workers`-permit semaphore
+    * (task/worker.py:225-238). A finished call frees its slot at once,
+    * so a slow head does not stall the calls behind it. Emission is in
+    * submission order, so a partition holds up to
+    * `AsyncHoldMultiple × n` finished results (the window of issued,
+    * unemitted elements has that size). `t` bounds each element's wait
+    * once it reaches the head (see [[bound]] for which `t` waits
+    * without bound); on expiry the element is dropped, counted in `dropped`,
+    * and its slot is returned even if its Future never completes. A
+    * failed Future rethrows the user's original exception. */
   private[graft] def asyncWindowIterator[A, B, C](
       iter: Iterator[A], n: Int, t: Duration,
       submit: A => Future[B], mk: (A, B) => C, dropped: LongAccumulator): Iterator[C] = {
-    val limit = bound(t).getOrElse(Duration.Inf)
-    val window = new scala.collection.mutable.Queue[(A, Future[B])]()
+    val limit = bound(t)
+    val hold = if (n > Int.MaxValue / AsyncHoldMultiple) Int.MaxValue else AsyncHoldMultiple * n
+    final class Slot(val a: A, val fut: Future[B]) { var freed = false }
+    val window = new scala.collection.mutable.Queue[Slot]() // issued, not emitted
+    // Completed calls, put by `onComplete`; only the task thread frees slots.
+    val completed = new java.util.concurrent.LinkedBlockingQueue[Slot]()
+    var inFlight = 0
     new Iterator[C] {
       private var pending: Option[C] = None
-      private def fill(): Unit =
-        while (window.size < n && iter.hasNext) {
+      private def free(s: Slot): Unit = if (!s.freed) { s.freed = true; inFlight -= 1 }
+      private def fill(): Unit = {
+        var s = completed.poll()
+        while (s != null) { free(s); s = completed.poll() }
+        while (inFlight < n && window.size < hold && iter.hasNext) {
           val a = iter.next()
-          window.enqueue((a, submit(a)))
-        }
-      private def advance(): Unit = {
-        while (pending.isEmpty && { fill(); window.nonEmpty }) {
-          val (a, fut) = window.dequeue()
-          try pending = Some(mk(a, Await.result(fut, limit)))
-          catch {
-            case _: TimeoutException => countDrop(dropped, "mapAsync", t) // counted, never silent
-          }
+          val slot = new Slot(a, submit(a))
+          window.enqueue(slot)
+          inFlight += 1
+          slot.fut.onComplete(_ => completed.put(slot))(ExecutionContext.parasitic)
         }
       }
+      private def advance(): Unit =
+        while (pending.isEmpty && { fill(); window.nonEmpty }) {
+          val head = window.head
+          val deadline = limit.map(_.fromNow)
+          while (!head.fut.isCompleted && deadline.forall(_.hasTimeLeft())) {
+            val s = deadline.fold(completed.take())(d => completed.poll(d.timeLeft.toNanos, TimeUnit.NANOSECONDS))
+            if (s != null) { free(s); fill() }
+          }
+          window.dequeue()
+          head.fut.value match {
+            case Some(Success(b)) => pending = Some(mk(head.a, b))
+            case Some(Failure(e)) => throw e
+            case None => free(head); countDrop(dropped, "mapAsync", t) // counted, never silent
+          }
+        }
       def hasNext: Boolean = { advance(); pending.nonEmpty }
       def next(): C = {
         advance()

@@ -55,10 +55,11 @@ final class GraftStream[T](val ds: Dataset[T]) {
   /** Async-IO map on the unbounded stream — the reference's flagship
     * workload (100M downloads: task backend, workers=1000 overlapping
     * request latency, benchmarks/100_million_downloads/client-pypeln-io.py).
-    * Same bounded in-flight window as the batch
-    * [[graft.core.GraftStage.mapAsync]], applied per micro-batch
-    * partition; `timeout` drops stragglers (zero, negative or infinite:
-    * no bound). Build Futures on
+    * Same engine as the batch [[graft.core.GraftStage.mapAsync]],
+    * applied per micro-batch partition: `workers` is the number of calls
+    * in flight, and a partition holds up to `4 × workers` finished
+    * results for emission in submission order; `timeout` drops
+    * stragglers (zero, negative or infinite: no bound). Build Futures on
     * `GraftStage.asyncEc` inside the lambda. */
   def mapAsync[B](f: T => scala.concurrent.Future[B], workers: Int = 8,
       timeout: scala.concurrent.duration.Duration = graft.core.GraftStage.DefaultAsyncTimeout)(

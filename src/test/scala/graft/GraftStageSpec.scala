@@ -82,6 +82,29 @@ final class JobLog extends SparkListener {
   }
 }
 
+/** Call census of one `mapAsync` partition: calls issued, calls
+  * outstanding (issued, Future not yet complete) and their peak, and how
+  * many calls had been issued when element 0's slow call completed. */
+object AsyncCensus {
+  val issued = new AtomicInteger(0)
+  val outstanding = new AtomicInteger(0)
+  val peak = new AtomicInteger(0)
+  val issuedAtHeadDone = new AtomicInteger(-1)
+  def reset(): Unit = { issued.set(0); outstanding.set(0); peak.set(0); issuedAtHeadDone.set(-1) }
+
+  /** Element 0 answers after `headMs`, every other element after 1 ms. */
+  def call(x: Long, headMs: Long): Future[Long] = {
+    issued.incrementAndGet()
+    peak.accumulateAndGet(outstanding.incrementAndGet(), math.max)
+    Future {
+      Thread.sleep(if (x == 0) headMs else 1)
+      if (x == 0) issuedAtHeadDone.set(issued.get())
+      outstanding.decrementAndGet()
+      x
+    }(GraftStage.asyncEc)
+  }
+}
+
 object PlanShape extends AdaptiveSparkPlanHelper {
   /** (shuffle exchanges, sorts) in `ds`'s physical plan. */
   def apply(ds: Dataset[_]): (Int, Int) = {
@@ -337,11 +360,42 @@ class GraftStageSpec extends AnyFunSuite {
   test("mapAsync: bounded async window preserves values; per-partition submission order") {
     // The EC is referenced statically inside the lambda: GraftStage.asyncEc
     // resolves executor-side (a captured driver EC is not serializable).
-    val xs = (0 until 200).toSeq
-    val got = xs.toStage
-      .mapAsync(x => Future(x * 3)(GraftStage.asyncEc), workers = 16)
-      .ordered.collectValues()
-    assert(got == xs.map(_ * 3))
+    // Seeded 0-3 ms delays finish calls out of order inside each window.
+    val st = range(0, 400, 4).mapAsync(
+      x => Future { Thread.sleep(new scala.util.Random(x).nextInt(4).toLong); x * 3 }(GraftStage.asyncEc),
+      workers = 16)
+    val want = (0L until 400L).map(_ * 3)
+    assert(st.plain.rdd.glom().collect().map(_.toSeq).toSeq == want.grouped(100).toSeq,
+      "each partition emits in submission order")
+    assert(PlanShape(st.ordered.indexed) == ((0, 0)), "ordered after mapAsync adds no exchange or sort")
+    assert(st.ordered.collectValues() == want)
+  }
+
+  test("mapAsync: a slow head does not stall the window; workers bounds the calls in flight") {
+    AsyncCensus.reset()
+    val got = range(0, 40, 1).mapAsync(x => AsyncCensus.call(x, headMs = 300), workers = 4).collectValues()
+    assert(got == (0L until 40L), "output order is unchanged")
+    assert(AsyncCensus.issuedAtHeadDone.get() - 1 >= 12,
+      s"calls issued behind the slow head before it completed: ${AsyncCensus.issuedAtHeadDone.get() - 1}")
+    assert(AsyncCensus.peak.get() <= 4, s"calls outstanding at once: ${AsyncCensus.peak.get()}")
+  }
+
+  test("mapAsync: a timed-out element gives its slot back; every other element returns") {
+    val before = GraftStage.asyncDroppedCount
+    val got = range(0, 10, 1)
+      .mapAsync(x => if (x == 3) Promise[Long]().future else Future.successful(x),
+        workers = 1, timeout = 200.millis)
+      .collectValues()
+    assert(got == (0L until 10L).filterNot(_ == 3))
+    assert(GraftStage.asyncDroppedCount - before == 1, "the drop is counted once")
+  }
+
+  test("mapAsync: a failed Future's ORIGINAL exception reaches collectValues and ordered.toIterable") {
+    val st = range(0, 40, 2).mapAsync(
+      x => if (x == 17) Future(throw new GraftUserError("async boom"))(GraftStage.asyncEc) else Future.successful(x),
+      workers = 4)
+    assert(intercept[GraftUserError](st.collectValues()).getMessage == "async boom")
+    assert(intercept[GraftUserError](st.ordered.toIterable.foreach(_ => ())).getMessage == "async boom")
   }
 
   test("mapAsync: timeout drops the never-completing element") {

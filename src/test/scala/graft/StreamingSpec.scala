@@ -256,17 +256,23 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming mapAsync: async IO on an unbounded source preserves values") {
     import graft.core.GraftStage
     import scala.concurrent.Future
+    import scala.jdk.CollectionConverters._
     implicit val sq = spark.sqlContext
     val in = MemoryStream[Int]
-    val out = new ConcurrentLinkedQueue[Int]()
-    val st = new GraftStream(in.toDS())
-      .mapAsync(x => Future { Thread.sleep(2); x * 3 }(GraftStage.asyncEc), workers = 8)
-    val q = st.eachBatch((b, _) => { b.collect().foreach(out.add); () })
+    val parts = new ConcurrentLinkedQueue[Seq[Int]]()
+    // Seeded 0-3 ms delays finish calls out of order inside each window.
+    val st = new GraftStream(in.toDS()).mapAsync(
+      x => Future { Thread.sleep(new scala.util.Random(x).nextInt(4).toLong); x * 3 }(GraftStage.asyncEc),
+      workers = 8)
+    val q = st.eachBatch((b, _) => { b.rdd.glom().collect().foreach(p => parts.add(p.toSeq)); () })
     in.addData(1 to 40: _*)
     q.processAllAvailable()
     in.addData(41 to 60: _*)
     q.processAllAvailable(); q.stop()
-    assert(out.toArray.map(_.asInstanceOf[Int]).sorted.toSeq == (1 to 60).map(_ * 3))
+    val got = parts.asScala.toSeq
+    assert(got.flatten.sorted == (1 to 60).map(_ * 3))
+    assert(got.exists(_.size > 8), s"a partition wider than the window: ${got.map(_.size)}")
+    got.foreach(p => assert(p == p.sorted, s"per-partition order inside a micro-batch: $p"))
   }
 
   test("streaming dedup: duplicate keys within the watermark are dropped, state bounded") {
